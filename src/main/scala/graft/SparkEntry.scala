@@ -42,80 +42,69 @@ object SparkEntry {
       |  FROM embeddings
       |)""".stripMargin
 
-  /** Indexed-store cache: the collection with persisted index artifacts
-    * (cid partition dirs, sig, pq — CollectionStore.saveIndexed) built ONCE
-    * per JVM per scale dir under /tmp, then reused by every indexed_* query
-    * — modeling the real lifecycle where the index is materialized at write
-    * time and queries only read it. */
-  private def san(dir: String) = dir.replaceAll("[^A-Za-z0-9]", "_")
+  /** Scale-dir component of every side-table path. */
+  private[graft] def san(dir: String) = dir.replaceAll("[^A-Za-z0-9]", "_")
 
-  /** Side-table path for the KMeans-trained IVF centroids: trained + written
-    * ONCE per JVM per scale dir (index-build lifecycle), read back by BOTH
-    * engines (Spark re-reads it for assignment; the DuckDB oracle scans the
-    * same parquet), so the non-SQL-expressible training step drops out of
-    * the comparison. These are the SERVING centroids: ann_ivf_kmeans, the
-    * indexed store, and (via [[indexMeta]]) the adaptive/policy paths all
-    * share them. */
-  private def kmeansPath(dir: String) = "/tmp/graft_kmeans_" + san(dir)
-  /** Alias of the most recently trained centroid table — the static oracle
-    * SQL reads this (a Verify/bench JVM serves exactly one scale dir, so
-    * alias == that dir's centroids); Spark always reads the dir-keyed
-    * path, which stays correct even in multi-dir JVMs (test suites). */
-  private val kmeansAlias = "/tmp/graft_kmeans_current"
-  private val kmeansBuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  /** The scale dir whose side table each builder served most recently —
-    * tracked PER SIDE-TABLE TYPE, not as one shared var, so a JVM that
-    * serves kmeans on one dir and the quality model on another (test
-    * suites) renders each oracle glob against the dir whose table that
-    * builder actually wrote (see [[sideGlob]]). */
-  @volatile private var kmOracleDir: String = null
-  @volatile private var pqOracleDir: String = null
-  @volatile private var nbqOracleDir: String = null
-  @volatile private var pcaOracleDir: String = null
-  @volatile private var lrOracleDir: String = null
-  @volatile private var lmOracleDir: String = null
-  private def trainedCentroids(s: SparkSession, dir: String): DataFrame = {
-    kmOracleDir = dir
-    val path = kmeansPath(dir)
-    kmeansBuilt.computeIfAbsent(path, _ => {
-      val cents = Ann.kmeansCentroids(Collection.load(s, dir), k = 16, maxIter = 5)
-      cents.coalesce(1).write.mode("overwrite").parquet(path)
-      s.read.parquet(path).coalesce(1)
-        .write.mode("overwrite").parquet(kmeansAlias)
-      path
-    })
-    s.read.parquet(path)
+  /** Build-once memo: `apply(key)(build)` runs `build` at most once per
+    * key per JVM. Concurrent callers on one key wait for the single
+    * build; a build that throws memoizes nothing, so the next call
+    * retries. Keep one instance per table: builders nest (the indexed
+    * store trains the centroids, the graph-indexed store builds the
+    * graph), and a nested `computeIfAbsent` on the SAME map throws
+    * `IllegalStateException: Recursive update`. */
+  private[graft] final class Once[K, V] {
+    private val built = new java.util.concurrent.ConcurrentHashMap[K, V]()
+    def apply(key: K)(build: => V): V = built.computeIfAbsent(key, _ => build)
   }
 
-  /** k-means||-trained centroids (same persisted-side-table lifecycle as
-    * [[trainedCentroids]]): the scalable-init training path —
+  /** A persisted side table — index state materialized at write time
+    * and only read by queries. It lives at `path(dir)`, a fixed function
+    * of the scale dir; `write(s, dir, path)` runs at most once per JVM
+    * per path, and every call returns `read(s, path)`. Both engines read
+    * the same files: Spark through `apply`, the DuckDB oracle through
+    * `glob(path(dir))` in [[oracleSql]] — so a training step that SQL
+    * cannot express drops out of the comparison. Two JVMs serving the
+    * SAME scale dir still overwrite each other's tables. */
+  private[graft] final class SideTable[T](val path: String => String)(
+      write: (SparkSession, String, String) => Unit)(
+      read: (SparkSession, String) => T) {
+    private val built = new Once[String, Unit]
+    def apply(s: SparkSession, dir: String): T = {
+      val p = path(dir)
+      built(p)(write(s, dir, p))
+      read(s, p)
+    }
+  }
+
+  private def tablePath(name: String)(dir: String) = s"/tmp/graft_${name}_" + san(dir)
+
+  /** One trained model as a side table: `train`'s frame written as a
+    * single parquet file, read back as a DataFrame. */
+  private def trained(name: String)(train: (SparkSession, String) => DataFrame) =
+    new SideTable(tablePath(name))((s, dir, p) =>
+      train(s, dir).coalesce(1).write.mode("overwrite").parquet(p))(_.read.parquet(_))
+
+  /** KMeans-trained IVF centroids (Spark re-reads them for assignment;
+    * the oracle scans the same parquet). These are the SERVING
+    * centroids: ann_ivf_kmeans, the indexed store, and (via
+    * [[indexMeta]]) the adaptive/policy paths all share them. */
+  private val trainedCentroids = trained("kmeans")((s, dir) =>
+    Ann.kmeansCentroids(Collection.load(s, dir), k = 16, maxIter = 5))
+
+  /** k-means||-trained centroids: the scalable-init training path —
     * hash-determinized D² oversampling + greedy weighted reduction +
     * decimal-exact Lloyd — whose assignment/search the oracle replays
     * from the persisted table exactly like the MLlib-trained set. */
-  private def kmppPath(dir: String) = "/tmp/graft_kmpp_" + san(dir)
-  private val kmppAlias = "/tmp/graft_kmpp_current"
-  private val kmppBuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  @volatile private var kmppOracleDir: String = null
-  private[graft] def kmppCentroids(s: SparkSession, dir: String): DataFrame = {
-    kmppOracleDir = dir
-    val path = kmppPath(dir)
-    kmppBuilt.computeIfAbsent(path, _ => {
-      // cache only for the training sweeps, then release: a training-time
-      // cache left behind pins executor memory for the JVM lifetime per
-      // scale dir (ADVICE r11). Respect a caller-level cache if one exists
-      // (the LogReg.train pattern): only unpersist what we persisted.
-      val pts = Collection.load(s, dir)
-      val weCached = pts.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-      if (weCached) pts.cache()
-      val cents =
-        try Ann.kmeansParallelCentroids(pts, k = 16, rounds = 3, maxIter = 5)
-        finally { if (weCached) pts.unpersist() }
-      cents.coalesce(1).write.mode("overwrite").parquet(path)
-      s.read.parquet(path).coalesce(1)
-        .write.mode("overwrite").parquet(kmppAlias)
-      path
-    })
-    s.read.parquet(path)
+  private[graft] val kmppCentroids = trained("kmpp") { (s, dir) =>
+    // cache only for the training sweeps, then release: a training-time
+    // cache left behind pins executor memory for the JVM lifetime per
+    // scale dir (ADVICE r11). Respect a caller-level cache if one exists
+    // (the LogReg.train pattern): only unpersist what we persisted.
+    val pts = Collection.load(s, dir)
+    val weCached = pts.storageLevel == org.apache.spark.storage.StorageLevel.NONE
+    if (weCached) pts.cache()
+    try Ann.kmeansParallelCentroids(pts, k = 16, rounds = 3, maxIter = 5)
+    finally { if (weCached) pts.unpersist() }
   }
 
   /** Serving-layer index metadata (trained centroids, calibrated recall
@@ -133,104 +122,56 @@ object SparkEntry {
       IndexMeta.build(points, trainedCentroids(s, dir), hps, k = 10)
     }
 
-  /** PQ codebook side table (same build-once lifecycle as [[kmeansPath]]):
-    * per-subspace KMeans codebooks trained and persisted ONCE per JVM per
-    * scale dir; Spark encodes/scores against the collected literals, the
-    * DuckDB oracle recomputes codes and ADC from the SAME parquet — the
-    * non-SQL-expressible training drops out of the comparison. */
-  private def pqPath(dir: String) = "/tmp/graft_pq_" + san(dir)
-  private val pqAlias = "/tmp/graft_pq_current"
-  private val pqBuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def pqCodebookDf(s: SparkSession, dir: String): DataFrame = {
-    pqOracleDir = dir
-    val path = pqPath(dir)
-    pqBuilt.computeIfAbsent(path, _ => {
-      val cb = Quantization.pqTrain(Collection.load(s, dir),
-        dim = 64, m = 8, ksub = 16, maxIter = 5)
-      cb.coalesce(1).write.mode("overwrite").parquet(path)
-      s.read.parquet(path).coalesce(1)
-        .write.mode("overwrite").parquet(pqAlias)
-      path
-    })
-    s.read.parquet(path)
+  /** PQ codebooks: per-subspace KMeans codebooks; Spark encodes/scores
+    * against the collected literals, the DuckDB oracle recomputes codes
+    * and ADC from the SAME parquet. */
+  private val pqCodebookDf = trained("pq")((s, dir) =>
+    Quantization.pqTrain(Collection.load(s, dir),
+      dim = 64, m = 8, ksub = 16, maxIter = 5))
+  /** RESIDUAL PQ codebooks: trained on x − c(cell) over the indexed
+    * store's trained centroids — the codebook the FAISS-style residual
+    * IVF-PQ scores with ([[graft.operators.Ann.ivfPqResidualSearch]]).
+    * The oracle recomputes residuals, codes and ADC from the SAME
+    * persisted parquet + the engine's own centroid/sidecar tables. */
+  private val pqResCodebookDf = trained("pqres") { (s, dir) =>
+    val (store, cents) = indexedStore(s, dir)
+    Quantization.pqTrainResiduals(store, cents,
+      dim = 64, m = 8, ksub = 16, maxIter = 5)
   }
-  /** RESIDUAL PQ codebook side table (same lifecycle as [[pqCodebookDf]]):
-    * trained on x − c(cell) over the indexed store's trained centroids —
-    * the codebook the FAISS-style residual IVF-PQ scores with
-    * ([[graft.operators.Ann.ivfPqResidualSearch]]). The oracle recomputes
-    * residuals, codes and ADC from the SAME persisted parquet + the
-    * engine's own centroid/sidecar tables. */
-  private def pqResPath(dir: String) = "/tmp/graft_pqres_" + san(dir)
-  private val pqResAlias = "/tmp/graft_pqres_current"
-  private val pqResBuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  @volatile private var pqResOracleDir: String = null
-  private def pqResCodebookDf(s: SparkSession, dir: String): DataFrame = {
-    pqResOracleDir = dir
-    val path = pqResPath(dir)
-    pqResBuilt.computeIfAbsent(path, _ => {
-      val (store, cents) = indexedStore(s, dir)
-      val cb = Quantization.pqTrainResiduals(store, cents,
-        dim = 64, m = 8, ksub = 16, maxIter = 5)
-      cb.coalesce(1).write.mode("overwrite").parquet(path)
-      s.read.parquet(path).coalesce(1)
-        .write.mode("overwrite").parquet(pqResAlias)
-      path
-    })
-    s.read.parquet(path)
-  }
-  private val pqResMetaBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, Quantization.PqCodebook]()
+  private val pqResMetaBuilt = new Once[String, Quantization.PqCodebook]
   private[graft] def pqResMeta(s: SparkSession, dir: String): Quantization.PqCodebook =
-    pqResMetaBuilt.computeIfAbsent(dir,
-      _ => Quantization.pqCodebookOf(pqResCodebookDf(s, dir)))
+    pqResMetaBuilt(dir)(Quantization.pqCodebookOf(pqResCodebookDf(s, dir)))
 
-  /** Calibrated-PQ codebook LADDER side tables (same lifecycle as
-    * [[pqCodebookDf]], one table per budget tier): the recall-targeted
-    * budget calibration ([[Quantization.pqCalibrateBudget]], VERDICT r13
-    * #2) measures each tier's sample recall and serves the smallest
-    * clearing the target. ALL tiers persist (the oracle's CASE references
-    * every tier's recall, so every codebook table must exist) — at the
-    * index-build lifecycle this is the one-time training of the ladder,
-    * like IndexMeta training its recall curve. */
-  private def pqCalPath(dir: String, tier: Int) =
-    s"/tmp/graft_pqcal_t${tier}_" + san(dir)
-  private def pqCalAlias(tier: Int) = s"/tmp/graft_pqcal_t${tier}_current"
-  @volatile private var pqCalOracleDir: String = null
-  private val pqCalBuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def pqCalCodebookDf(s: SparkSession, dir: String, tier: Int): DataFrame = {
-    pqCalOracleDir = dir
-    val path = pqCalPath(dir, tier)
-    pqCalBuilt.computeIfAbsent(path, _ => {
+  /** Calibrated-PQ codebook LADDER, one side table per budget tier: the
+    * recall-targeted budget calibration ([[Quantization.pqCalibrateBudget]],
+    * VERDICT r13 #2) measures each tier's sample recall and serves the
+    * smallest clearing the target. ALL tiers persist (the oracle's CASE
+    * references every tier's recall, so every codebook table must
+    * exist) — at the index-build lifecycle this is the one-time training
+    * of the ladder, like IndexMeta training its recall curve. */
+  private val pqCalCodebookDf = Quantization.PqBudgetLadder.indices.map(tier =>
+    trained(s"pqcal_t$tier") { (s, dir) =>
       val (m, ksub) = Quantization.PqBudgetLadder(tier)
-      val cb = Quantization.pqTrain(Collection.load(s, dir),
+      Quantization.pqTrain(Collection.load(s, dir),
         dim = 64, m = m, ksub = ksub, maxIter = 5)
-      cb.coalesce(1).write.mode("overwrite").parquet(path)
-      s.read.parquet(path).coalesce(1)
-        .write.mode("overwrite").parquet(pqCalAlias(tier))
-      path
     })
-    s.read.parquet(path)
-  }
   /** Calibrated ladder CHOICE per scale dir (graphBeamCal lifecycle) —
     * the full decision (tier + measured sample recall + target_met), so
     * the graded query ships what the walk MEASURED, not just what it
     * picked (VERDICT r14: no silent under-delivery). */
-  private val pqCalTier = new java.util.concurrent.ConcurrentHashMap[
-    String, Quantization.PqCalibration]()
-  private val pqCalMetaBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, Quantization.PqCodebook]()
+  private val pqCalTier = new Once[String, Quantization.PqCalibration]
+  private val pqCalMetaBuilt = new Once[String, Quantization.PqCodebook]
   private[graft] def pqCalMeta(s: SparkSession, dir: String, tier: Int)
       : Quantization.PqCodebook =
-    pqCalMetaBuilt.computeIfAbsent(s"$dir#$tier",
-      _ => Quantization.pqCodebookOf(pqCalCodebookDf(s, dir, tier)))
+    pqCalMetaBuilt(s"$dir#$tier")(
+      Quantization.pqCodebookOf(pqCalCodebookDf(tier)(s, dir)))
 
   /** TIGHT-budget ladder decision (the family-handoff query's topped-out
     * side): rung 0 only, rescore budget k·1 — the fixture-scale
     * compression of the measured 200k-clustered regime where candidate
     * density outruns flat-ADC resolution at the given rescore budget
     * (pqcal probe, SCALING r14). Memoized like [[pqCalTier]]. */
-  private val pqCalTightTier = new java.util.concurrent.ConcurrentHashMap[
-    String, Quantization.PqCalibration]()
+  private val pqCalTightTier = new Once[String, Quantization.PqCalibration]
 
   /** Persisted LCB recall-curve side table (IndexMeta.recallLcb, one row
     * per probe count p = 1..C): the engine-measured calibration state the
@@ -239,159 +180,93 @@ object SparkEntry {
     * [[graft.operators.IndexMeta.nprobeFor]]) from the same table, the
     * trained-centroid pattern (the oracle reads measured index state; it
     * doesn't re-run the measurement). */
-  private def npcPath(dir: String) = "/tmp/graft_npcurve_" + san(dir)
-  private val npcAlias = "/tmp/graft_npcurve_current"
-  private val npcBuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  @volatile private var npcOracleDir: String = null
-  private def nprobeCurveDf(s: SparkSession, dir: String): DataFrame = {
-    npcOracleDir = dir
-    val path = npcPath(dir)
-    npcBuilt.computeIfAbsent(path, _ => {
-      import s.implicits._
-      val m = indexMeta(s, dir)
-      val curve = if (m.recallLcb.nonEmpty) m.recallLcb else m.recallCurve
-      curve.zipWithIndex.map { case (l, i) => (i + 1, l) }
-        .toDF("p", "lcb")
-        .orderBy("p").coalesce(1).write.mode("overwrite").parquet(path)
-      s.read.parquet(path).coalesce(1)
-        .write.mode("overwrite").parquet(npcAlias)
-      path
-    })
-    s.read.parquet(path)
+  private val nprobeCurveDf = trained("npcurve") { (s, dir) =>
+    import s.implicits._
+    val m = indexMeta(s, dir)
+    val curve = if (m.recallLcb.nonEmpty) m.recallLcb else m.recallCurve
+    curve.zipWithIndex.map { case (l, i) => (i + 1, l) }
+      .toDF("p", "lcb").orderBy("p")
   }
 
-  /** Trained scalar-quantization range side table (kmeans/PQ lifecycle):
-    * exact per-dim |x| max from [[Quantization.sqTrainRanges]], persisted
-    * once per JVM per scale dir; Spark encodes against the collected
+  /** Trained scalar-quantization ranges: exact per-dim |x| max from
+    * [[Quantization.sqTrainRanges]]; Spark encodes against the collected
     * literals, the oracle recomputes codes from the SAME parquet. */
-  private def sqPath(dir: String) = "/tmp/graft_sq_" + san(dir)
-  private val sqAlias = "/tmp/graft_sq_current"
-  private val sqBuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  @volatile private var sqOracleDir: String = null
-  private val sqRangesBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[Double]]()
-  private[graft] def sqRanges(s: SparkSession, dir: String): Seq[Double] = {
-    sqOracleDir = dir
-    val path = sqPath(dir)
-    sqBuilt.computeIfAbsent(path, _ => {
-      Quantization.sqTrainRanges(Collection.load(s, dir))
-        .coalesce(1).write.mode("overwrite").parquet(path)
-      s.read.parquet(path).coalesce(1)
-        .write.mode("overwrite").parquet(sqAlias)
-      path
-    })
-    sqRangesBuilt.computeIfAbsent(dir, _ =>
-      s.read.parquet(path).orderBy("dim")
-        .select("hi").collect().map(_.getDouble(0)).toSeq)
-  }
+  private val sqTable = trained("sq")((s, dir) =>
+    Quantization.sqTrainRanges(Collection.load(s, dir)))
+  private val sqRangesBuilt = new Once[String, Seq[Double]]
+  private[graft] def sqRanges(s: SparkSession, dir: String): Seq[Double] =
+    sqRangesBuilt(dir)(sqTable(s, dir).orderBy("dim")
+      .select("hi").collect().map(_.getDouble(0)).toSeq)
 
-  private val pqMetaBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, Quantization.PqCodebook]()
+  private val pqMetaBuilt = new Once[String, Quantization.PqCodebook]
   private[graft] def pqMeta(s: SparkSession, dir: String): Quantization.PqCodebook =
-    pqMetaBuilt.computeIfAbsent(dir,
-      _ => Quantization.pqCodebookOf(pqCodebookDf(s, dir)))
+    pqMetaBuilt(dir)(Quantization.pqCodebookOf(pqCodebookDf(s, dir)))
 
-  /** PCA model side table (kmeans/PQ lifecycle): full-rank model trained
-    * ONCE per JVM per scale dir from exact decimal moments
+  /** PCA model: full-rank model trained from exact decimal moments
     * ([[Pca.train]]), persisted as a ≤64-row (comp, eigval, vec, mu_proj)
     * table; Spark projects against the broadcast table, the DuckDB oracle
     * projects from the SAME parquet — the non-SQL-expressible Jacobi
     * eigendecomposition drops out of the comparison. */
-  private def pcaPath(dir: String) = "/tmp/graft_pca_" + san(dir)
-  private val pcaAlias = "/tmp/graft_pca_current"
-  private val pcaBuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val pcaStreamBuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val pcaModelBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, Pca.PcaModel]()
+  private val pcaModelBuilt = new Once[String, Pca.PcaModel]
   private[graft] def pcaModel(s: SparkSession, dir: String): Pca.PcaModel =
-    pcaModelBuilt.computeIfAbsent(dir,
-      _ => Pca.train(Collection.load(s, dir), 64))
-  private def pcaTableDf(s: SparkSession, dir: String): DataFrame = {
-    pcaOracleDir = dir
-    val path = pcaPath(dir)
-    pcaBuilt.computeIfAbsent(path, _ => {
-      val t = Pca.modelTable(s, pcaModel(s, dir))
-      t.coalesce(1).write.mode("overwrite").parquet(path)
-      s.read.parquet(path).coalesce(1)
-        .write.mode("overwrite").parquet(pcaAlias)
-      path
-    })
-    s.read.parquet(path)
-  }
+    pcaModelBuilt(dir)(Pca.train(Collection.load(s, dir), 64))
+  private val pcaTableDf = trained("pca")((s, dir) =>
+    Pca.modelTable(s, pcaModel(s, dir)))
+  /** Streamed PCA moment state for `streaming_pca_variance`: the fixture
+    * streamed through [[StreamingOps.pcaMomentsStream]] once per JVM. */
+  private val pcaStream = new SideTable(tablePath("pcastream"))((s, dir, path) => {
+    // fresh state per JVM: a stale /tmp state + checkpoint pair from
+    // an earlier process would mask this run's stream entirely
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      s.sparkContext.hadoopConfiguration)
+    Seq(path, path + "_model", path + "_ckpt").foreach(p =>
+      fs.delete(new org.apache.hadoop.fs.Path(p), true))
+    val batchSchema = s.read.parquet(s"$dir/embeddings.parquet").schema
+    val stream = s.readStream.schema(batchSchema)
+      .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
+    val embs = Collection.withNormalized(stream)
+      .select(col("nemb").as("embedding"))
+    StreamingOps.pcaMomentsStream(s, embs, path, 64)
+  })((_, p) => p)
 
-  /** Logistic-regression quality-filter side table (kmeans/PQ lifecycle):
-    * weights trained ONCE per JVM per scale dir by [[LogReg.train]]'s
-    * decimal-exact full-batch GD, persisted as a 5-row (j, w) table;
-    * scoring is a pure linear form both engines evaluate identically —
-    * the transcendental training loop drops out of the comparison. */
-  private def lrPath(dir: String) = "/tmp/graft_lr_" + san(dir)
-  private val lrAlias = "/tmp/graft_lr_current"
-  private val lrBuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def lrWeightsDf(s: SparkSession, dir: String): DataFrame = {
-    lrOracleDir = dir
-    val path = lrPath(dir)
-    lrBuilt.computeIfAbsent(path, _ => {
-      val feats = LogReg.qualityFeatures(docsTable(s, dir))
-      val w = LogReg.train(feats)
-      LogReg.weightsTable(s, w).coalesce(1).write.mode("overwrite").parquet(path)
-      s.read.parquet(path).coalesce(1)
-        .write.mode("overwrite").parquet(lrAlias)
-      path
-    })
-    s.read.parquet(path)
-  }
+  /** Logistic-regression quality-filter weights, trained by
+    * [[LogReg.train]]'s decimal-exact full-batch GD and persisted as a
+    * 5-row (j, w) table; scoring is a pure linear form both engines
+    * evaluate identically — the transcendental training loop drops out
+    * of the comparison. */
+  private val lrWeightsDf = trained("lr")((s, dir) =>
+    LogReg.weightsTable(s, LogReg.train(LogReg.qualityFeatures(docsTable(s, dir)))))
 
-  /** NPY migration fixture: the embeddings table dumped ONCE per JVM per
-    * scale dir as a real float32 `.npy` file — standing in for the foreign
-    * FAISS/NumPy system whose export the S6 bulk-load ingests. The
-    * driver-side collect is fixture construction only; the deliverable
-    * under test is the distributed byte-range READER. */
-  private val npyBuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def npyFixture(s: SparkSession, dir: String): String = {
-    val path = "/tmp/graft_npy_" + dir.replaceAll("[^A-Za-z0-9]", "_") + ".npy"
-    npyBuilt.computeIfAbsent(path, _ => {
-      val rows = s.read.parquet(s"$dir/embeddings.parquet")
-        .orderBy("vec_id").select("embedding")
-        .collect().map(_.getSeq[Float](0).toArray)
-      graft.sources.NpySource.writeFloat32(path, rows)
-      path
-    })
-  }
+  /** The embeddings in vec_id order, collected for the migration
+    * fixtures below — fixture construction only; the deliverable under
+    * test is each distributed byte-range READER. */
+  private def fixtureRows(s: SparkSession, dir: String): Array[Array[Float]] =
+    s.read.parquet(s"$dir/embeddings.parquet")
+      .orderBy("vec_id").select("embedding")
+      .collect().map(_.getSeq[Float](0).toArray)
 
-  /** FAISS IndexFlat migration fixture (same lifecycle as [[npyFixture]]):
-    * the embeddings table written ONCE per JVM per scale dir as a real
+  /** NPY migration fixture: the embeddings as a real float32 `.npy`
+    * file — standing in for the foreign FAISS/NumPy system whose export
+    * the S6 bulk-load ingests. */
+  private val npyFixture = new SideTable(d => tablePath("npy")(d) + ".npy")(
+    (s, dir, p) => graft.sources.NpySource.writeFloat32(p, fixtureRows(s, dir)))((_, p) => p)
+
+  /** FAISS IndexFlat migration fixture: the embeddings as a real
     * IndexFlatIP file — the foreign FAISS export the S6 bulk loader's
-    * second branch ingests. Deliverable under test: the distributed
-    * byte-range reconstruct_n READER. */
-  private val faissBuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def faissFixture(s: SparkSession, dir: String): String = {
-    val path = "/tmp/graft_faiss_" + san(dir) + ".index"
-    faissBuilt.computeIfAbsent(path, _ => {
-      val rows = s.read.parquet(s"$dir/embeddings.parquet")
-        .orderBy("vec_id").select("embedding")
-        .collect().map(_.getSeq[Float](0).toArray)
-      graft.sources.FaissSource.writeIndexFlat(path, rows)
-      path
-    })
-  }
+    * second branch ingests. */
+  private val faissFixture = new SideTable(d => tablePath("faiss")(d) + ".index")(
+    (s, dir, p) => graft.sources.FaissSource.writeIndexFlat(p, fixtureRows(s, dir)))((_, p) => p)
 
-  /** Z-ordered events store (write-once-per-JVM lifecycle like the other
-    * persisted layouts): Morton-sorted on (user_id, floor(value)) so both
-    * predicate families prune row groups. */
-  private val zBuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def zStore(s: SparkSession, dir: String): DataFrame = {
-    val path = "/tmp/graft_zorder_" + san(dir)
-    zBuilt.computeIfAbsent(path, _ => {
-      val ev = Events.load(s, dir)
-        .withColumn("vbin", least(lit(65535L), floor(col("value")).cast("long")))
-      graft.sources.CollectionStore.saveZOrdered(ev, path, "user_id", "vbin")
-      path
-    })
-    s.read.parquet(path)
-  }
+  /** Z-ordered events store: Morton-sorted on (user_id, floor(value)) so
+    * both predicate families prune row groups. */
+  private val zStore = new SideTable(tablePath("zorder"))((s, dir, p) => {
+    val ev = Events.load(s, dir)
+      .withColumn("vbin", least(lit(65535L), floor(col("value")).cast("long")))
+    graft.sources.CollectionStore.saveZOrdered(ev, p, "user_id", "vbin")
+  })(_.read.parquet(_))
 
-  /** Z-ordered COLLECTION layout (same build-once lifecycle as [[zStore]],
-    * but over the collection's own payload dims): Morton-sorted on
+  /** Z-ordered COLLECTION layout (like [[zStore]], but over the
+    * collection's own payload dims): Morton-sorted on
     * (confidence_score scaled into 16 bits, ts) so BOTH the order_by
     * scroll's cursor range on confidence_score and time-range predicates
     * prune row groups — a single-sort store prunes only one of the two.
@@ -400,80 +275,43 @@ object SparkEntry {
     * bits (ts tops out at the row count) would surrender the curve's high
     * bits to the other dim and never localize. Layout is result-invariant;
     * the oracle reads the raw table. */
-  private val zCollBuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def zCollection(s: SparkSession, dir: String): DataFrame = {
-    val path = "/tmp/graft_zcoll_" + san(dir)
-    zCollBuilt.computeIfAbsent(path, _ => {
-      val raw = Collection.loadWithPayload(s, dir)
-      val maxTs = raw.agg(max(col("ts"))).head().getDouble(0)
-      val pts = raw
-        .withColumn("cbin", least(lit(65535L),
-          floor(col("confidence_score") * 65536.0d).cast("long")))
-        .withColumn("tbin", least(lit(65535L),
-          floor(col("ts") / (maxTs + 1.0d) * 65536.0d).cast("long")))
-      graft.sources.CollectionStore.saveZOrdered(pts, path, "cbin", "tbin")
-      path
-    })
-    s.read.parquet(path).drop("cbin", "tbin")
-  }
+  private val zCollection = new SideTable(tablePath("zcoll"))((s, dir, p) => {
+    val raw = Collection.loadWithPayload(s, dir)
+    val maxTs = raw.agg(max(col("ts"))).head().getDouble(0)
+    val pts = raw
+      .withColumn("cbin", least(lit(65535L),
+        floor(col("confidence_score") * 65536.0d).cast("long")))
+      .withColumn("tbin", least(lit(65535L),
+        floor(col("ts") / (maxTs + 1.0d) * 65536.0d).cast("long")))
+    graft.sources.CollectionStore.saveZOrdered(pts, p, "cbin", "tbin")
+  })((s, p) => s.read.parquet(p).drop("cbin", "tbin"))
 
-  /** Quality-classifier side table (same build-once lifecycle as
-    * [[kmeansPath]]): NB log-odds weights trained ONCE per JVM per scale
-    * dir on weak heuristic labels and persisted; Spark scores against the
-    * read-back table and the DuckDB oracle recomputes scores from the
-    * SAME parquet — the training step drops out of the comparison. */
-  private def nbqPath(dir: String) = "/tmp/graft_nbq_" + san(dir)
-  private val nbqAlias = "/tmp/graft_nbq_current"
-  private val nbqBuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def qualityModel(s: SparkSession, dir: String): DataFrame = {
-    nbqOracleDir = dir
-    val path = nbqPath(dir)
-    nbqBuilt.computeIfAbsent(path, _ => {
-      val m = TextAnalysis.trainQualityModel(
-        docsTable(s, dir))
-      m.coalesce(1).write.mode("overwrite").parquet(path)
-      s.read.parquet(path).coalesce(1)
-        .write.mode("overwrite").parquet(nbqAlias)
-      path
-    })
-    s.read.parquet(path)
-  }
+  /** Quality classifier: NB log-odds weights trained on weak heuristic
+    * labels; Spark scores against the read-back table and the DuckDB
+    * oracle recomputes scores from the SAME parquet. */
+  private val qualityModel = trained("nbq")((s, dir) =>
+    TextAnalysis.trainQualityModel(docsTable(s, dir)))
 
-  /** Hashed-bigram LM side table (same lifecycle as [[qualityModel]]):
-    * trained once per JVM per scale dir, persisted, and the oracle scores
-    * from the SAME parquet — cross-engine ln() never meets the compare. */
-  private def lmPath(dir: String) = "/tmp/graft_lm_" + san(dir)
-  private val lmAlias = "/tmp/graft_lm_current"
-  private val lmBuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def lmModel(s: SparkSession, dir: String): DataFrame = {
-    lmOracleDir = dir
-    val path = lmPath(dir)
-    lmBuilt.computeIfAbsent(path, _ => {
-      val m = TextAnalysis.lmTrain(docsTable(s, dir))
-      m.coalesce(1).write.mode("overwrite").parquet(path)
-      s.read.parquet(path).coalesce(1)
-        .write.mode("overwrite").parquet(lmAlias)
-      path
-    })
-    s.read.parquet(path)
-  }
+  /** Hashed-bigram LM (like [[qualityModel]]): the oracle scores from
+    * the SAME parquet — cross-engine ln() never meets the compare. */
+  private val lmModel = trained("lm")((s, dir) =>
+    TextAnalysis.lmTrain(docsTable(s, dir)))
 
   /** Navigable neighbor graph per scale dir (NSW index build lifecycle):
     * built once per JVM from the bulk k-NN join (graphK=12, nprobe=2,
     * C=32 seed centroids — the ann_knn_join configuration, which the
     * oracle replays with the same constants), made undirected,
     * degree-capped at 16. localCheckpointed: ~N·16 edge rows. */
-  private val graphBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  private val graphBuilt = new Once[String, DataFrame]
   private[graft] def graphTable(s: SparkSession, dir: String): DataFrame =
-    graphBuilt.computeIfAbsent(dir, _ => {
+    graphBuilt(dir) {
       val points = Collection.load(s, dir)
       // cell count is oracle-pinned at 32; the env override exists for
       // the C∝N scaling runs only (same knob/convention as ann_knn_join)
       val cells = sys.env.getOrElse("SPARK_GRAFT_KNN_CELLS", "32").toInt
       Ann.graphBuild(points, Ann.seedCentroids(points, cells),
         graphK = 12, maxDegree = 16, nprobe = 2).localCheckpoint()
-    })
+    }
 
   /** NN-Descent-refined graph per scale dir (Dong, Moses & Li WWW '11):
     * the base build is DELIBERATELY fragmented — nprobe=1, so every
@@ -483,11 +321,10 @@ object SparkEntry {
     * cross-cell seams. Grades the link-improvement pass the HNSW family
     * performs at construction time, end to end against an oracle that
     * replays build, bridges, both rounds, and the descent. */
-  private val refinedGraphBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  private val refinedGraphBuilt = new Once[String, DataFrame]
   private[graft] def refinedGraphTable(
       s: SparkSession, dir: String): DataFrame =
-    refinedGraphBuilt.computeIfAbsent(dir, _ => {
+    refinedGraphBuilt(dir) {
       val points = Collection.load(s, dir)
       val cells = sys.env.getOrElse("SPARK_GRAFT_KNN_CELLS", "32").toInt
       val cents = Ann.seedCentroids(points, cells)
@@ -495,45 +332,36 @@ object SparkEntry {
         graphK = 12, maxDegree = 16, nprobe = 1)
       Ann.graphRefine(points, frag, rounds = 2, maxDegree = 16,
         bridges = Some(Ann.graphBridges(points, cents, nbridge = 2)))
-    })
+    }
 
   /** The graph's entry tier: the same 32 seed points the graph was built
     * around, collected once (32 rows of index metadata) — each query
     * enters the descent at its nearest seed (the role HNSW's upper
     * layers play). */
-  private val graphSeedsBuilt = new java.util.concurrent.ConcurrentHashMap[
-    String, (Seq[Long], Seq[Seq[Double]])]()
+  private val graphSeedsBuilt = new Once[String, (Seq[Long], Seq[Seq[Double]])]
   private[graft] def graphEntrySeeds(
       s: SparkSession, dir: String): (Seq[Long], Seq[Seq[Double]]) =
-    graphSeedsBuilt.computeIfAbsent(dir, _ => {
+    graphSeedsBuilt(dir) {
       val rows = Ann.seedCentroids(Collection.load(s, dir), 32)
         .orderBy("cid").collect()
       (rows.map(_.getLong(0)).toSeq,
         rows.map(_.getSeq[Double](1).toSeq).toSeq)
-    })
+    }
 
-  /** Bucketed graph store per scale dir (the serving layout —
-    * [[Ann.saveGraphBucketed]]): written once per JVM from the memoized
-    * graph, read per-hop with partition pruning by graphBeamServe. */
   /** Calibrated beam per scale dir (graphCalibrateBeam is a build-time
     * cost — the IndexMeta lifecycle). */
-  private val graphBeamCal =
-    new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+  private val graphBeamCal = new Once[String, Int]
 
   /** Calibrated LSH table count per scale dir (same build-time lifecycle
     * as [[graphBeamCal]]; OPTIMIZATION r17 — the walk recomputed its
     * exact-truth crossJoin on every timed run). */
-  private val lshCalL =
-    new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+  private val lshCalL = new Once[String, Int]
 
-  private val graphStoreBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def graphStorePath(s: SparkSession, dir: String): String =
-    graphStoreBuilt.computeIfAbsent(dir, _ => {
-      val path = "/tmp/graft_graphstore_" + san(dir)
-      Ann.saveGraphBucketed(graphTable(s, dir), path, nBuckets = 16)
-      path
-    })
+  /** Bucketed graph store per scale dir (the serving layout —
+    * [[Ann.saveGraphBucketed]]): written from the memoized graph, read
+    * per-hop with partition pruning by graphBeamServe. */
+  private val graphStorePath = new SideTable(tablePath("graphstore"))((s, dir, p) =>
+    Ann.saveGraphBucketed(graphTable(s, dir), p, nBuckets = 16))((_, p) => p)
 
   /** Graph-INDEXED store lifecycle per scale dir (VERDICT r9 #5): the
     * bucketed points store + graph sidecar written through
@@ -541,105 +369,75 @@ object SparkEntry {
     * search — tombstone ids 40-42 and insert 3 fresh ids (fixture
     * vectors under new ids) via mergeGraphIndexed (delete edges, beam-
     * descend inserts, per-src degree re-cap, affected-buckets-only
-    * rewrite). Flat copies of the MAINTAINED store/graph go to oracle
-    * side tables: maintenance itself is spec-verified
-    * (IndexedStoreSpec replay-equality); the search over the maintained
-    * sidecar is oracle-replayed from the same parquet both engines
-    * read. */
-  private val gidxBuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  @volatile private var gidxOracleDir: String = null
-  private def gidxPath(dir: String) = "/tmp/graft_gidx_" + san(dir)
-  private val gidxStoreAlias = "/tmp/graft_gidx_store_current"
-  private val gidxGraphAlias = "/tmp/graft_gidx_graph_current"
-  private def gidxState(s: SparkSession, dir: String): String = {
-    gidxOracleDir = dir
-    val path = gidxPath(dir)
-    gidxBuilt.computeIfAbsent(path, _ => {
-      import s.implicits._
-      val points = Collection.load(s, dir)
-        .select(col("id"), col("embedding"), col("user_id"))
-      graft.sources.CollectionStore.saveBucketed(points, path, 16)
-      graft.sources.CollectionStore.saveGraphSidecar(
-        graphTable(s, dir), path, 16)
-      val (ecids, ecents) = graphEntrySeeds(s, dir)
-      val adds = points.filter(col("id").isin(1L, 2L, 3L))
-        .select((col("id") + 1000000L).as("id"), col("embedding"),
-          col("user_id"))
-      val dels = Seq(40L, 41L, 42L).toDF("id")
-      graft.sources.CollectionStore.mergeGraphIndexed(s, path, adds,
-        Some(dels), ecids, ecents, nBuckets = 16,
-        graphK = 12, maxDegree = 16, beam = 24, hops = 8)
-      graft.sources.CollectionStore.loadBucketed(s, path).coalesce(1)
-        .write.mode("overwrite").parquet(path + "_ostore")
-      s.read.parquet(path + "_graph").drop("bucket").coalesce(1)
-        .write.mode("overwrite").parquet(path + "_ograph")
-      s.read.parquet(path + "_ostore").coalesce(1)
-        .write.mode("overwrite").parquet(gidxStoreAlias)
-      s.read.parquet(path + "_ograph").coalesce(1)
-        .write.mode("overwrite").parquet(gidxGraphAlias)
-      path
-    })
-  }
+    * rewrite). Flat copies of the MAINTAINED store/graph (`_ostore`,
+    * `_ograph`) are the oracle's side tables: maintenance itself is
+    * spec-verified (IndexedStoreSpec replay-equality); the search over
+    * the maintained sidecar is oracle-replayed from the same parquet
+    * both engines read. */
+  private val gidxState = new SideTable(tablePath("gidx"))((s, dir, path) => {
+    import s.implicits._
+    val points = Collection.load(s, dir)
+      .select(col("id"), col("embedding"), col("user_id"))
+    graft.sources.CollectionStore.saveBucketed(points, path, 16)
+    graft.sources.CollectionStore.saveGraphSidecar(
+      graphTable(s, dir), path, 16)
+    val (ecids, ecents) = graphEntrySeeds(s, dir)
+    val adds = points.filter(col("id").isin(1L, 2L, 3L))
+      .select((col("id") + 1000000L).as("id"), col("embedding"),
+        col("user_id"))
+    val dels = Seq(40L, 41L, 42L).toDF("id")
+    graft.sources.CollectionStore.mergeGraphIndexed(s, path, adds,
+      Some(dels), ecids, ecents, nBuckets = 16,
+      graphK = 12, maxDegree = 16, beam = 24, hops = 8)
+    graft.sources.CollectionStore.loadBucketed(s, path).coalesce(1)
+      .write.mode("overwrite").parquet(path + "_ostore")
+    s.read.parquet(path + "_graph").drop("bucket").coalesce(1)
+      .write.mode("overwrite").parquet(path + "_ograph")
+  })((_, p) => p)
 
   /** BPE training state per scale dir: trained once per JVM (6 merges);
     * the merge table AND the final vocab frame (localCheckpointed) are
     * shared by bpe_learn and bpe_tokenize. No side table: training is
     * integer-exact with a total tie-break, so the oracle REPLAYS it. */
-  private val bpeBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, (Seq[Bpe.Merge], DataFrame)]()
+  private val bpeBuilt = new Once[String, (Seq[Bpe.Merge], DataFrame)]
   private def bpeState(s: SparkSession, dir: String): (Seq[Bpe.Merge], DataFrame) =
-    bpeBuilt.computeIfAbsent(dir,
-      _ => Bpe.learn(docsTable(s, dir), nMerges = 6))
+    bpeBuilt(dir)(Bpe.learn(docsTable(s, dir), nMerges = 6))
 
   /** Batched BPE training state per scale dir: 2 rounds × up to 3
     * disjoint merges — the scalable-vocab configuration (rounds, not
     * merges, are the driver round-trips). Oracle replays each round's
     * greedy disjoint selection. */
-  private val bpeBatchedBuilt = new java.util.concurrent.ConcurrentHashMap[
-    String, (Seq[Bpe.BatchedMerge], DataFrame)]()
+  private val bpeBatchedBuilt = new Once[String, (Seq[Bpe.BatchedMerge], DataFrame)]
   private def bpeBatchedState(s: SparkSession, dir: String)
       : (Seq[Bpe.BatchedMerge], DataFrame) =
-    bpeBatchedBuilt.computeIfAbsent(dir,
-      _ => Bpe.learnBatched(docsTable(s, dir),
-        nRounds = 2, batch = 3))
+    bpeBatchedBuilt(dir)(Bpe.learnBatched(docsTable(s, dir),
+      nRounds = 2, batch = 3))
 
-  private val indexBuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def indexedStore(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame) = {
-    val path = "/tmp/graft_index_" + san(dir)
-    indexBuilt.computeIfAbsent(path, _ => {
-      val points = Collection.load(s, dir)
-      // cells come from the TRAINED serving centroids (VERDICT r5 #1), so
-      // the persisted partition layout is the quantizer queries probe
-      graft.sources.CollectionStore.saveIndexed(
-        points, path, trainedCentroids(s, dir),
-        pqCodebook = Some(pqMeta(s, dir)))
-      path
-    })
-    graft.sources.CollectionStore.loadIndexed(s, path)
-  }
+  /** The indexed store: the collection with persisted index artifacts
+    * (cid partition dirs, sig, pq — CollectionStore.saveIndexed), reused
+    * by every indexed_* query. Its `_centroids` table is written from
+    * the trained centroids, so the oracle reads [[trainedCentroids]]. */
+  private val indexedStore = new SideTable(tablePath("index"))((s, dir, path) =>
+    // cells come from the TRAINED serving centroids (VERDICT r5 #1), so
+    // the persisted partition layout is the quantizer queries probe
+    graft.sources.CollectionStore.saveIndexed(
+      Collection.load(s, dir), path, trainedCentroids(s, dir),
+      pqCodebook = Some(pqMeta(s, dir))))(graft.sources.CollectionStore.loadIndexed(_, _))
 
   /** Indexed store WITH TOMBSTONES applied — a separate physical copy
     * (the shared [[indexedStore]] serves many queries and must stay
-    * immutable): built once per JVM, then ids 1-4 are deleted through
-    * the O(affected-cells) [[graft.sources.CollectionStore.deleteIndexed]]
-    * path, exercising sidecar resolution + partial rewrite end-to-end. */
-  private val delStoreBuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def indexedStoreAfterDelete(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame) = {
-    val path = "/tmp/graft_index_del_" + san(dir)
-    delStoreBuilt.computeIfAbsent(path, _ => {
+    * immutable): ids 1-4 are deleted through the O(affected-cells)
+    * [[graft.sources.CollectionStore.deleteIndexed]] path, exercising
+    * sidecar resolution + partial rewrite end-to-end. */
+  private val indexedStoreAfterDelete = new SideTable(tablePath("index_del"))(
+    (s, dir, path) => {
       import s.implicits._
-      val points = Collection.load(s, dir)
       graft.sources.CollectionStore.saveIndexed(
-        points, path, trainedCentroids(s, dir),
+        Collection.load(s, dir), path, trainedCentroids(s, dir),
         pqCodebook = Some(pqMeta(s, dir)), idSidecarBuckets = Some(8))
       graft.sources.CollectionStore.deleteIndexed(
         s, path, Seq(1L, 2L, 3L, 4L).toDF("id"), nBuckets = 8)
-      path
-    })
-    graft.sources.CollectionStore.loadIndexed(s, path)
-  }
+    })(graft.sources.CollectionStore.loadIndexed(_, _))
 
   /** Deterministic CDC batch for the slab-refresh planner queries
     * (`slab_refresh_manifest`/`slab_refresh_stats`): upserts = ids ≡ 3
@@ -661,155 +459,76 @@ object SparkEntry {
     (ups, dels)
   }
 
-  /** Post-SPLIT indexed store (the segment-split maintenance op,
-    * [[graft.sources.CollectionStore.splitOversizedCells]]): built once
-    * per JVM per scale dir — saveIndexed on the trained centroids, then
-    * split with maxRows = N/24 so several of the 16 trained cells are
-    * oversized and split. The post-split centroid table and a FLAT copy
-    * of the id→cid sidecar persist for the DuckDB oracle: the oracle
-    * replays probe selection + search from the engine's own persisted
-    * assignment, so a store/sidecar disagreement, a wrong centroid swap,
-    * or a probe over stale centroids all hash-mismatch. (The split's
-    * internal invariants — untouched dirs byte-identical, parent
-    * containment, layout-independent determinism — are spec-pinned:
-    * IndexedStoreSpec.) */
-  private def splitStorePath(dir: String) = "/tmp/graft_splitidx_" + san(dir)
-  private val splitCentsAlias = "/tmp/graft_splitcents_current"
-  private val splitIdsAlias = "/tmp/graft_splitids_current"
-  @volatile private var splitOracleDir: String = null
-  private val splitBuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def splitStore(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame) = {
-    splitOracleDir = dir
-    val path = splitStorePath(dir)
-    splitBuilt.computeIfAbsent(path, _ => {
+  /** A MAINTAINED indexed store: saveIndexed on the trained centroids,
+    * then `maintain(s, points, path)` rewrites the layout in place. The
+    * maintained `_centroids` table and a FLAT copy of the id→cid sidecar
+    * (`_idsflat`) are the oracle's side tables: the oracle replays probe
+    * selection + search from the engine's own persisted assignment, so a
+    * store/sidecar disagreement, a wrong centroid swap, or a probe over
+    * stale centroids all hash-mismatch. (Each op's internal invariants —
+    * untouched dirs byte-identical, parent containment, layout-independent
+    * determinism — are spec-pinned: IndexedStoreSpec.) */
+  private def maintainedStore(name: String)(
+      maintain: (SparkSession, DataFrame, String) => Unit) =
+    new SideTable(tablePath(name))((s, dir, path) => {
       val points = Collection.load(s, dir)
       graft.sources.CollectionStore.saveIndexed(
         points, path, trainedCentroids(s, dir), idSidecarBuckets = Some(8))
-      val maxRows = math.max(1L, points.count() / 24)
-      graft.sources.CollectionStore.splitOversizedCells(
-        s, path, maxRows, nBuckets = 8)
-      s.read.parquet(path + "_centroids").coalesce(1)
-        .write.mode("overwrite").parquet(splitCentsAlias)
-      val flat = s.read.parquet(path + "_ids")
+      maintain(s, points, path)
+      s.read.parquet(path + "_ids")
         .select(col("id"), col("cid").cast("long").as("cid"))
-      flat.coalesce(1).write.mode("overwrite").parquet(path + "_idsflat")
-      s.read.parquet(path + "_idsflat").coalesce(1)
-        .write.mode("overwrite").parquet(splitIdsAlias)
-      path
-    })
-    graft.sources.CollectionStore.loadIndexed(s, path)
+        .coalesce(1).write.mode("overwrite").parquet(path + "_idsflat")
+    })(graft.sources.CollectionStore.loadIndexed(_, _))
+
+  /** Post-SPLIT store (the segment-split maintenance op,
+    * [[graft.sources.CollectionStore.splitOversizedCells]]): maxRows =
+    * N/24, so several of the 16 trained cells are oversized and split. */
+  private val splitStore = maintainedStore("splitidx") { (s, points, path) =>
+    val maxRows = math.max(1L, points.count() / 24)
+    graft.sources.CollectionStore.splitOversizedCells(
+      s, path, maxRows, nBuckets = 8)
   }
 
-  /** Post-MERGE indexed store (the segment-merge maintenance op,
-    * [[graft.sources.CollectionStore.mergeSmallCells]]) — the same
-    * build-once + oracle-side-table lifecycle as [[splitStore]]:
-    * saveIndexed on the trained centroids, then cells below the
+  /** Post-MERGE store (the segment-merge maintenance op,
+    * [[graft.sources.CollectionStore.mergeSmallCells]]): cells below the
     * 25th-percentile size fold into their nearest survivors. */
-  private def mergeStorePath(dir: String) = "/tmp/graft_mergeidx_" + san(dir)
-  private val mergeCentsAlias = "/tmp/graft_mergecents_current"
-  private val mergeIdsAlias = "/tmp/graft_mergeids_current"
-  @volatile private var mergeOracleDir: String = null
-  private val mergeStoreBuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def mergeStore(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame) = {
-    mergeOracleDir = dir
-    val path = mergeStorePath(dir)
-    mergeStoreBuilt.computeIfAbsent(path, _ => {
-      val points = Collection.load(s, dir)
-      graft.sources.CollectionStore.saveIndexed(
-        points, path, trainedCentroids(s, dir), idSidecarBuckets = Some(8))
-      // doom the smallest quartile of cells — a deterministic function
-      // of the store, so every run merges the same cells
-      val sizes = s.read.parquet(path)
-        .groupBy(col("cid").cast("long")).count()
-        .collect().map(_.getLong(1)).sorted
-      val minRows = sizes(sizes.length / 4) + 1
-      graft.sources.CollectionStore.mergeSmallCells(
-        s, path, minRows, nBuckets = 8)
-      s.read.parquet(path + "_centroids").coalesce(1)
-        .write.mode("overwrite").parquet(mergeCentsAlias)
-      val flat = s.read.parquet(path + "_ids")
-        .select(col("id"), col("cid").cast("long").as("cid"))
-      flat.coalesce(1).write.mode("overwrite").parquet(path + "_idsflat")
-      s.read.parquet(path + "_idsflat").coalesce(1)
-        .write.mode("overwrite").parquet(mergeIdsAlias)
-      path
-    })
-    graft.sources.CollectionStore.loadIndexed(s, path)
+  private val mergeStore = maintainedStore("mergeidx") { (s, _, path) =>
+    // doom the smallest quartile of cells — a deterministic function
+    // of the store, so every run merges the same cells
+    val sizes = s.read.parquet(path)
+      .groupBy(col("cid").cast("long")).count()
+      .collect().map(_.getLong(1)).sorted
+    val minRows = sizes(sizes.length / 4) + 1
+    graft.sources.CollectionStore.mergeSmallCells(
+      s, path, minRows, nBuckets = 8)
   }
 
-  /** Post-OPTIMIZE indexed store: the composed segment optimizer
+  /** Post-OPTIMIZE store: the composed segment optimizer
     * ([[graft.sources.CollectionStore.optimizePartitions]] — split +
     * merge alternating to a [minRows, maxRows] band) over the trained
-    * layout; same oracle-side-table lifecycle as [[splitStore]]. */
-  private def optStorePath(dir: String) = "/tmp/graft_optidx_" + san(dir)
-  private val optCentsAlias = "/tmp/graft_optcents_current"
-  private val optIdsAlias = "/tmp/graft_optids_current"
-  @volatile private var optOracleDir: String = null
-  private val optStoreBuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def optStore(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame) = {
-    optOracleDir = dir
-    val path = optStorePath(dir)
-    optStoreBuilt.computeIfAbsent(path, _ => {
-      val points = Collection.load(s, dir)
-      graft.sources.CollectionStore.saveIndexed(
-        points, path, trainedCentroids(s, dir), idSidecarBuckets = Some(8))
-      val n = points.count()
-      graft.sources.CollectionStore.optimizePartitions(
-        s, path, minRows = math.max(1L, n / 48),
-        maxRows = math.max(2L, n / 20), nBuckets = 8)
-      s.read.parquet(path + "_centroids").coalesce(1)
-        .write.mode("overwrite").parquet(optCentsAlias)
-      val flat = s.read.parquet(path + "_ids")
-        .select(col("id"), col("cid").cast("long").as("cid"))
-      flat.coalesce(1).write.mode("overwrite").parquet(path + "_idsflat")
-      s.read.parquet(path + "_idsflat").coalesce(1)
-        .write.mode("overwrite").parquet(optIdsAlias)
-      path
-    })
-    graft.sources.CollectionStore.loadIndexed(s, path)
+    * layout. */
+  private val optStore = maintainedStore("optidx") { (s, points, path) =>
+    val n = points.count()
+    graft.sources.CollectionStore.optimizePartitions(
+      s, path, minRows = math.max(1L, n / 48),
+      maxRows = math.max(2L, n / 20), nBuckets = 8)
   }
 
   /** C∝N indexed store (VERDICT r12 #4): the registered
     * `indexed_ivf_search` pins C=16 trained cells for oracle stability,
     * which diverges from the deployment regime at scale (sf100 exposed
     * the N/C probe-growth term on the fixed-C store). This store is the
-    * optimizer-MAINTAINED layout instead: saveIndexed on the trained
-    * centroids, then [[graft.sources.CollectionStore.optimizePartitions]]
-    * to the [[graft.sources.CollectionStore.cnBand]] cell-size band —
-    * constant ~1250-row cells (C ≈ N/1250) at scale, N-proportional
-    * clamps at fixture scale. Same oracle-replay lifecycle as
-    * [[optStore]]: the oracle searches from the engine's own persisted
+    * optimizer-MAINTAINED layout instead:
+    * [[graft.sources.CollectionStore.optimizePartitions]] to the
+    * [[graft.sources.CollectionStore.cnBand]] cell-size band — constant
+    * ~1250-row cells (C ≈ N/1250) at scale, N-proportional clamps at
+    * fixture scale. The oracle searches from the engine's own persisted
     * sidecar + centroids, so the graded config IS the scale-story
     * config. */
-  private def cnStorePath(dir: String) = "/tmp/graft_cnidx_" + san(dir)
-  private val cnCentsAlias = "/tmp/graft_cncents_current"
-  private val cnIdsAlias = "/tmp/graft_cnids_current"
-  @volatile private var cnOracleDir: String = null
-  private val cnStoreBuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def cnStore(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame) = {
-    cnOracleDir = dir
-    val path = cnStorePath(dir)
-    cnStoreBuilt.computeIfAbsent(path, _ => {
-      val points = Collection.load(s, dir)
-      graft.sources.CollectionStore.saveIndexed(
-        points, path, trainedCentroids(s, dir), idSidecarBuckets = Some(8))
-      val (minR, maxR) = graft.sources.CollectionStore.cnBand(points.count())
-      graft.sources.CollectionStore.optimizePartitions(
-        s, path, minRows = minR, maxRows = maxR, nBuckets = 8)
-      s.read.parquet(path + "_centroids").coalesce(1)
-        .write.mode("overwrite").parquet(cnCentsAlias)
-      val flat = s.read.parquet(path + "_ids")
-        .select(col("id"), col("cid").cast("long").as("cid"))
-      flat.coalesce(1).write.mode("overwrite").parquet(path + "_idsflat")
-      s.read.parquet(path + "_idsflat").coalesce(1)
-        .write.mode("overwrite").parquet(cnIdsAlias)
-      path
-    })
-    graft.sources.CollectionStore.loadIndexed(s, path)
+  private val cnStore = maintainedStore("cnidx") { (s, points, path) =>
+    val (minR, maxR) = graft.sources.CollectionStore.cnBand(points.count())
+    graft.sources.CollectionStore.optimizePartitions(
+      s, path, minRows = minR, maxRows = maxR, nBuckets = 8)
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -1216,7 +935,7 @@ object SparkEntry {
       // calibrations under exactly this rule): the L walk runs once per
       // JVM per dir; the SEARCH serves the chosen L thereafter. The
       // chosen L still rides the output (`l_used`), hash-verified.
-      val l: Int = lshCalL.computeIfAbsent(dir, _ =>
+      val l = lshCalL(dir)(
         Ann.lshCalibrateL(points, planes, kb = 4, k = 10,
           targetRecall = Ann.DefaultLshRecallTarget,
           sampleQueryIds = Ann.DefaultLshCalibrationSample))
@@ -1313,7 +1032,7 @@ object SparkEntry {
       val (ecids, ecents) = graphEntrySeeds(s, dir)
       // calibration is an index-BUILD cost (IndexMeta/kmeans lifecycle):
       // run once per JVM per dir, serve the chosen beam thereafter
-      val b = graphBeamCal.computeIfAbsent(dir, _ =>
+      val b = graphBeamCal(dir)(
         Ann.graphCalibrateBeam(points, graphTable(s, dir),
           sampleQids = Seq(0L, 99L, 250L, 433L), k = 10,
           targetRecall = 0.9, beams = Seq(4, 8, 16, 24), hops = 8,
@@ -1503,22 +1222,7 @@ object SparkEntry {
     // table): a hash match proves streamed-maintained ≡ batch-trained
     // bit for bit, through DuckDB.
     "streaming_pca_variance" -> ((s, dir) => {
-      val path = "/tmp/graft_pcastream_" + san(dir)
-      pcaStreamBuilt.computeIfAbsent(path, _ => {
-        // fresh state per JVM: a stale /tmp state + checkpoint pair from
-        // an earlier process would mask this run's stream entirely
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          s.sparkContext.hadoopConfiguration)
-        Seq(path, path + "_model", path + "_ckpt").foreach(p =>
-          fs.delete(new org.apache.hadoop.fs.Path(p), true))
-        val batchSchema = s.read.parquet(s"$dir/embeddings.parquet").schema
-        val stream = s.readStream.schema(batchSchema)
-          .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
-        val embs = Collection.withNormalized(stream)
-          .select(col("nemb").as("embedding"))
-        StreamingOps.pcaMomentsStream(s, embs, path, 64)
-        path
-      })
+      val path = pcaStream(s, dir)
       pcaTableDf(s, dir) // the BATCH side table the oracle replays from
       Pca.varianceReport(Collection.load(s, dir),
         s.read.parquet(path + "_model"), 64)
@@ -1926,12 +1630,12 @@ object SparkEntry {
     "pq_calibrated" -> ((s, dir) => {
       val points = Collection.load(s, dir)
       // all tiers persist up front (the oracle reads every tier's table)
-      Quantization.PqBudgetLadder.indices.foreach(t => pqCalCodebookDf(s, dir, t))
+      pqCalCodebookDf.foreach(_(s, dir))
       val ladder = Quantization.PqBudgetLadder.indices
         .map(t => () => pqCalMeta(s, dir, t))
       // the calibration is an index-BUILD cost (IndexMeta/graphBeamCal
       // lifecycle): walked once per JVM per dir, served thereafter
-      val cal = pqCalTier.computeIfAbsent(dir, _ =>
+      val cal = pqCalTier(dir)(
         Quantization.pqCalibrateBudgetFull(points, 10,
           Quantization.DefaultPqRecallTarget,
           Quantization.DefaultPqCalibrationSample, ladder))
@@ -1963,7 +1667,7 @@ object SparkEntry {
     // choice on each side.
     "ann_family_calibrated" -> ((s, dir) => {
       val points = Collection.load(s, dir)
-      Quantization.PqBudgetLadder.indices.foreach(t => pqCalCodebookDf(s, dir, t))
+      pqCalCodebookDf.foreach(_(s, dir))
       val ladder = Quantization.PqBudgetLadder.indices
         .map(t => () => pqCalMeta(s, dir, t))
       val (store, cents) = indexedStore(s, dir)
@@ -1973,13 +1677,13 @@ object SparkEntry {
       val target = Quantization.DefaultPqRecallTarget
       val sample = Quantization.DefaultPqCalibrationSample
       val q = points.filter(col("id") === 0).select(col("embedding").as("qemb"))
-      val wideCal = pqCalTier.computeIfAbsent(dir, _ =>
+      val wideCal = pqCalTier(dir)(
         Quantization.pqCalibrateBudgetFull(points, 10, target, sample, ladder))
       val wide = Ann.familyCalibratedSearch(points, store, cents, cbRes,
         meta, ladder, q, k = 10, target, sample, oversample = 32.0,
         precomputed = Some(wideCal))
         .withColumn("regime", lit("wide_budget"))
-      val tightCal = pqCalTightTier.computeIfAbsent(dir, _ =>
+      val tightCal = pqCalTightTier(dir)(
         Quantization.pqCalibrateBudgetFull(points, 10, target, sample,
           Seq(ladder.head), oversample = 1.0))
       val tight = Ann.familyCalibratedSearch(points, store, cents, cbRes,
@@ -2544,54 +2248,17 @@ object SparkEntry {
     s"""list_reduce([0::BIGINT] || list_transform(range(least(len($ne), 64)), j ->
        |    CASE WHEN $ne[j+1] > 0 THEN (CASE WHEN j = 63 THEN (-9223372036854775807 - 1)::BIGINT ELSE 1::BIGINT << j END)
        |         ELSE 0::BIGINT END), (a,b) -> a | b)""".stripMargin
-  /** Oracle-side glob of the persisted trained-centroid side table.
-    * Resolution: the PER-DIR path once THIS builder has served any dir
-    * in this JVM (`kmOracleDir`/`pqOracleDir`/`nbqOracleDir` — per
-    * side-table type, so a kmeans query on one dir followed by a quality
-    * query on another can't repoint the kmeans oracle; `oracleSql` is
-    * rendered after the queries ran, so in a Verify run each var is
-    * exactly the served dir), else the current-build alias (cold dump
-    * with an `only` filter that built nothing). The per-dir path closes
-    * the ADVICE r7 race: a second scale dir (or a concurrent bench JVM)
-    * overwriting `_current` can no longer point the oracle at another
-    * dir's weights. The indexed store's `_centroids` side table is
-    * written from the same trained DataFrame, so one glob serves both
-    * the kmeans and indexed oracles. */
-  private def kmOracleGlob = sideGlob(kmOracleDir, kmeansPath, kmeansAlias)
-  private def idxOracleGlob = kmOracleGlob
-  private def kmppOracleGlob = sideGlob(kmppOracleDir, kmppPath, kmppAlias)
-  private def splitCentsGlob = sideGlob(splitOracleDir,
-    d => splitStorePath(d) + "_centroids", splitCentsAlias)
-  private def splitIdsGlob = sideGlob(splitOracleDir,
-    d => splitStorePath(d) + "_idsflat", splitIdsAlias)
-  private def mergeCentsGlob = sideGlob(mergeOracleDir,
-    d => mergeStorePath(d) + "_centroids", mergeCentsAlias)
-  private def mergeIdsGlob = sideGlob(mergeOracleDir,
-    d => mergeStorePath(d) + "_idsflat", mergeIdsAlias)
-  private def optCentsGlob = sideGlob(optOracleDir,
-    d => optStorePath(d) + "_centroids", optCentsAlias)
-  private def optIdsGlob = sideGlob(optOracleDir,
-    d => optStorePath(d) + "_idsflat", optIdsAlias)
-  private def cnCentsGlob = sideGlob(cnOracleDir,
-    d => cnStorePath(d) + "_centroids", cnCentsAlias)
-  private def cnIdsGlob = sideGlob(cnOracleDir,
-    d => cnStorePath(d) + "_idsflat", cnIdsAlias)
-  private def pqOracleGlob = sideGlob(pqOracleDir, pqPath, pqAlias)
-  private def pqCalOracleGlob(tier: Int) =
-    sideGlob(pqCalOracleDir, d => pqCalPath(d, tier), pqCalAlias(tier))
-  private def pqResOracleGlob = sideGlob(pqResOracleDir, pqResPath, pqResAlias)
-  private def npcOracleGlob = sideGlob(npcOracleDir, npcPath, npcAlias)
-  private def sqOracleGlob = sideGlob(sqOracleDir, sqPath, sqAlias)
-  private def nbqOracleGlob = sideGlob(nbqOracleDir, nbqPath, nbqAlias)
-  private def pcaOracleGlob = sideGlob(pcaOracleDir, pcaPath, pcaAlias)
+  /** DuckDB glob over the parquet files of a side table (its path from
+    * [[SideTable.path]] on the oracle's scale dir). */
+  private def glob(path: String): String = s"'$path/*.parquet'"
 
   /** Variance-report replay from the persisted PCA model side table —
     * shared by `pca_variance` (batch-trained Spark side) and
     * `pca_incremental` (merged-chunk-state Spark side vs the SAME batch
     * table: the hash match proves the merge is exact). */
-  private def pcaVarianceOracle: String =
+  private def pcaVarianceOracle(dir: String): String =
     s"""WITH $C,
-       |m AS (SELECT comp, eigval, vec, mu_proj FROM read_parquet($pcaOracleGlob)),
+       |m AS (SELECT comp, eigval, vec, mu_proj FROM read_parquet(${glob(pcaTableDf.path(dir))})),
        |p AS (SELECT c.id, m.comp,
        |  round((list_dot_product(c.ne, m.vec) - m.mu_proj)::VARCHAR::DECIMAL(38,20), 6)::DOUBLE AS proj
        |  FROM c, m),
@@ -2606,23 +2273,14 @@ object SparkEntry {
        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))::DOUBLE
        |    / t.te::DOUBLE)::VARCHAR::DECIMAL(38,20), 6)::DOUBLE AS cum_energy_ratio
        |FROM v JOIN m USING (comp), t ORDER BY comp""".stripMargin
-  private def lrOracleGlob = sideGlob(lrOracleDir, lrPath, lrAlias)
-  private def lmOracleGlob = sideGlob(lmOracleDir, lmPath, lmAlias)
-  private def gidxStoreGlob =
-    sideGlob(gidxOracleDir, d => gidxPath(d) + "_ostore", gidxStoreAlias)
-  private def gidxGraphGlob =
-    sideGlob(gidxOracleDir, d => gidxPath(d) + "_ograph", gidxGraphAlias)
-  private def sideGlob(lastDir: String, perDir: String => String,
-      alias: String): String =
-    s"'${if (lastDir != null) perDir(lastDir) else alias}/*.parquet'"
 
   /** Shared oracle of the PQ ADC searches (on-the-fly and persisted-codes
     * variants encode identically, so one SQL serves both). */
-  private def pqAdcOracle: String =
+  private def pqAdcOracle(dir: String): String =
     s"""WITH $C,
        |cb AS (SELECT sub, code, cent,
        |  cent || [-list_dot_product(cent, cent) / 2.0] AS caug
-       |  FROM read_parquet($pqOracleGlob)),
+       |  FROM read_parquet(${glob(pqCodebookDf.path(dir))})),
        |q AS (SELECT ne AS qe FROM c WHERE id = 0),
        |sv AS (SELECT c.id, s.range::INT AS sub,
        |  list_slice(c.ne, s.range*8 + 1, s.range*8 + 8) AS xs FROM c, range(8) s),
@@ -2667,11 +2325,11 @@ object SparkEntry {
        |    ORDER BY round(list_dot_product(c.ne, q.qe), 6) DESC, c.id ASC) AS rn
        |  FROM c, qs q) WHERE rn <= $k)""".stripMargin
   }
-  private def pqLadderTierCtes(t: Int, m: Int): String = {
+  private def pqLadderTierCtes(dir: String, t: Int, m: Int): String = {
     val dsub = 64 / m
     s"""cb$t AS (SELECT sub, code, cent,
        |  cent || [-list_dot_product(cent, cent) / 2.0] AS caug
-       |  FROM read_parquet(${pqCalOracleGlob(t)})),
+       |  FROM read_parquet(${glob(pqCalCodebookDf(t).path(dir))})),
        |codes$t AS MATERIALIZED (SELECT id, sub, code FROM (
        |  SELECT sv.id, sv.sub, cb.code,
        |    row_number() OVER (PARTITION BY sv.id, sv.sub
@@ -2702,7 +2360,7 @@ object SparkEntry {
        |  (SELECT count(*) FROM exact) AS r
        |  FROM res$t$sfx h JOIN exact e ON h.qid = e.qid AND h.id = e.id)""".stripMargin
 
-  private def pqCalibratedOracle: String = {
+  private def pqCalibratedOracle(dir: String): String = {
     val k = 10
     val fetchK = (k * 32.0).toInt
     val target = Quantization.DefaultPqRecallTarget
@@ -2710,7 +2368,7 @@ object SparkEntry {
     val b = Seq.newBuilder[String]
     b += pqLadderSampleCtes(k)
     tiers.zipWithIndex.foreach { case ((m, _), t) =>
-      b += pqLadderTierCtes(t, m)
+      b += pqLadderTierCtes(dir, t, m)
       b += pqLadderRescoreCtes(t, fetchK, k)
     }
     val whens = tiers.indices.dropRight(1).map(t =>
@@ -2751,7 +2409,7 @@ object SparkEntry {
     * WHERE on the measured recall picks the same one Spark's walk picks,
     * so the oracle stays green on whichever side of the boundary the
     * data lands. */
-  private def annFamilyOracle: String = {
+  private def annFamilyOracle(dir: String): String = {
     val k = 10
     val wideFetch = (k * 32.0).toInt
     val tightFetch = k // oversample 1.0
@@ -2760,7 +2418,7 @@ object SparkEntry {
     val b = Seq.newBuilder[String]
     b += pqLadderSampleCtes(k)
     tiers.zipWithIndex.foreach { case ((m, _), t) =>
-      b += pqLadderTierCtes(t, m)
+      b += pqLadderTierCtes(dir, t, m)
       b += pqLadderRescoreCtes(t, wideFetch, k)
     }
     b += pqLadderRescoreCtes(0, tightFetch, k, sfx = "t")
@@ -2780,8 +2438,8 @@ object SparkEntry {
        |wrec AS (SELECT (CASE w.tier $recCase END)::DOUBLE AS r FROM wch w)""".stripMargin
     // residual IVF-PQ machinery (the ivf_pq_residual_search replay) at
     // the LCB-curve-inverted nprobe; two rescore budgets share phase 1
-    b += s"""cent AS (SELECT cid, ce FROM read_parquet($kmOracleGlob)),
-       |crv AS (SELECT p, lcb FROM read_parquet($npcOracleGlob)),
+    b += s"""cent AS (SELECT cid, ce FROM read_parquet(${glob(trainedCentroids.path(dir))})),
+       |crv AS (SELECT p, lcb FROM read_parquet(${glob(nprobeCurveDf.path(dir))})),
        |npsel AS (SELECT coalesce((SELECT min(p) FROM crv WHERE lcb >= $target),
        |  (SELECT count(*) FROM cent))::INT AS np),
        |asgn AS (SELECT c.id, c.user_id, c.ne, cent.cid,
@@ -2798,7 +2456,7 @@ object SparkEntry {
        |  WHERE cid IN (SELECT cid FROM probes)),
        |rcb AS (SELECT sub, code, cent,
        |  cent || [-list_dot_product(cent, cent) / 2.0] AS caug
-       |  FROM read_parquet($pqResOracleGlob)),
+       |  FROM read_parquet(${glob(pqResCodebookDf.path(dir))})),
        |rsv AS (SELECT pp.id, s.range::INT AS sub,
        |  list_slice(pp.ne, s.range*8 + 1, s.range*8 + 8) AS xs,
        |  list_slice(pp.ce, s.range*8 + 1, s.range*8 + 8) AS cs
@@ -3361,7 +3019,10 @@ object SparkEntry {
          |  count(*)::BIGINT AS n_docs, sum(n_tokens)::BIGINT AS total_tokens
          |FROM pc GROUP BY shard, pack_no ORDER BY shard, pack_no""".stripMargin
 
-  def oracleSql: Map[String, String] = Map(
+  /** The DuckDB oracle of each query, rendered for scale dir `dir`:
+    * every side-table read is `glob(table.path(dir))`, so the SQL reads
+    * the tables that dir's queries built, whatever else this JVM built. */
+  def oracleSql(dir: String): Map[String, String] = Map(
     // quality_score: Spark's round() rounds the double's SHORTEST DECIMAL
     // REPR (BigDecimal.valueOf) while DuckDB rounds the true binary value;
     // they split when a product's shortest repr lands exactly on a 7-digit
@@ -3727,8 +3388,8 @@ object SparkEntry {
       val hops = 8; val beam = 24; val k = 10
       val b = Seq.newBuilder[String]
       b += s"""cs AS MATERIALIZED (SELECT id, embedding AS ne, user_id
-         |  FROM read_parquet($gidxStoreGlob)),
-         |g AS MATERIALIZED (SELECT src, dst FROM read_parquet($gidxGraphGlob)),
+         |  FROM read_parquet(${glob(gidxState.path(dir) + "_ostore")})),
+         |g AS MATERIALIZED (SELECT src, dst FROM read_parquet(${glob(gidxState.path(dir) + "_ograph")})),
          |cent AS (SELECT id AS cid, ne AS ce FROM cs WHERE id < 32),
          |q AS MATERIALIZED (SELECT ne AS qe FROM cs WHERE id = 0),
          |ent AS (SELECT cid AS id FROM cent, q
@@ -3793,7 +3454,7 @@ object SparkEntry {
     // so assignment/probe/top-k stay hash-checked end to end).
     "ann_ivf_kmeans" ->
       s"""WITH $C,
-         |cent AS (SELECT cid, ce FROM read_parquet($kmOracleGlob)),
+         |cent AS (SELECT cid, ce FROM read_parquet(${glob(trainedCentroids.path(dir))})),
          |asgn AS (SELECT c.id, c.user_id, c.ne, cent.cid,
          |  row_number() OVER (PARTITION BY c.id
          |    ORDER BY round(list_dot_product(c.ne, cent.ce), 6) DESC, cent.cid ASC) AS rn
@@ -3808,7 +3469,7 @@ object SparkEntry {
     // identical replay over the k-means||-trained table
     "ann_ivf_kmpp" ->
       s"""WITH $C,
-         |cent AS (SELECT cid, ce FROM read_parquet($kmppOracleGlob)),
+         |cent AS (SELECT cid, ce FROM read_parquet(${glob(kmppCentroids.path(dir))})),
          |asgn AS (SELECT c.id, c.user_id, c.ne, cent.cid,
          |  row_number() OVER (PARTITION BY c.id
          |    ORDER BY round(list_dot_product(c.ne, cent.ce), 6) DESC, cent.cid ASC) AS rn
@@ -3947,7 +3608,7 @@ object SparkEntry {
     // order (matches Spark's sequential aggregate fold), float rescore
     "quantized_two_phase_trained" ->
       s"""WITH $C, q0 AS (SELECT ne AS qe FROM c WHERE id = 0),
-         |r AS (SELECT dim, hi FROM read_parquet($sqOracleGlob)),
+         |r AS (SELECT dim, hi FROM read_parquet(${glob(sqTable.path(dir))})),
          |enc AS (SELECT c.id, c.user_id, c.ne, r.dim,
          |  CASE WHEN r.hi > 0 THEN greatest(-127, least(127, round(c.ne[r.dim+1] / r.hi * 127)::INT))
          |       ELSE 0 END AS cd
@@ -4133,7 +3794,7 @@ object SparkEntry {
          |FROM s ORDER BY doc_id, chunk_id""".stripMargin,
     "quality_model_score" ->
       s"""WITH $W,
-         |m AS (SELECT fid, w FROM read_parquet($nbqOracleGlob)),
+         |m AS (SELECT fid, w FROM read_parquet(${glob(qualityModel.path(dir))})),
          |f AS (SELECT doc_id, ('0x' || substring(md5(tok), 1, 15))::BIGINT % 1024 AS fid
          |      FROM (SELECT doc_id, unnest(w) AS tok FROM t)),
          |j AS (SELECT f.doc_id, m.w FROM f JOIN m USING (fid))
@@ -4149,7 +3810,7 @@ object SparkEntry {
          |  max(CASE WHEN j = 2 THEN w END) AS w2,
          |  max(CASE WHEN j = 3 THEN w END) AS w3,
          |  max(CASE WHEN j = 4 THEN w END) AS w4
-         |  FROM read_parquet($lrOracleGlob)),
+         |  FROM read_parquet(${glob(lrWeightsDf.path(dir))})),
          |s AS (SELECT doc_id,
          |  least(1.0::DOUBLE, len(w)::DOUBLE / 100.0::DOUBLE) AS f1,
          |  round(len(list_distinct(w))::DOUBLE / len(w), 6) AS f2,
@@ -4173,7 +3834,7 @@ object SparkEntry {
          |        FROM t WHERE len(w) >= 2),
          |bi AS (SELECT doc_id, ${h60("w[i]")} AS w1h, ${h60("w[i+1]")} AS w2h
          |       FROM pos),
-         |m AS (SELECT * FROM read_parquet($lmOracleGlob)),
+         |m AS (SELECT * FROM read_parquet(${glob(lmModel.path(dir))})),
          |mb AS (SELECT w1h, w2h, logp FROM m WHERE w2h IS NOT NULL),
          |mc AS (SELECT w1h, logp AS logp_ctx FROM m
          |       WHERE w2h IS NULL AND w1h IS NOT NULL),
@@ -4240,16 +3901,16 @@ object SparkEntry {
     // PCA: both engines project from the SAME persisted model table; every
     // computed-double rounding uses the ::VARCHAR::DECIMAL shortest-repr
     // trick (the text_quality rule).
-    "pca_variance" -> pcaVarianceOracle,
+    "pca_variance" -> pcaVarianceOracle(dir),
     // same replay, from the BATCH-trained side table: the Spark side
     // trained from merged chunk states (pca_incremental) / the streamed
     // versioned state (streaming_pca_variance), so the hash match
     // certifies incremental ≡ streaming ≡ batch (exact mergeable moments)
-    "pca_incremental" -> pcaVarianceOracle,
-    "streaming_pca_variance" -> pcaVarianceOracle,
+    "pca_incremental" -> pcaVarianceOracle(dir),
+    "streaming_pca_variance" -> pcaVarianceOracle(dir),
     "pca_project" ->
       s"""WITH $C,
-         |m AS (SELECT comp, vec, mu_proj FROM read_parquet($pcaOracleGlob) WHERE comp < 8)
+         |m AS (SELECT comp, vec, mu_proj FROM read_parquet(${glob(pcaTableDf.path(dir))}) WHERE comp < 8)
          |SELECT c.id, m.comp,
          |  round((list_dot_product(c.ne, m.vec) - m.mu_proj)::VARCHAR::DECIMAL(38,20), 6)::DOUBLE AS proj
          |FROM c, m WHERE c.id < 32 ORDER BY id, comp""".stripMargin,
@@ -4610,7 +4271,7 @@ object SparkEntry {
          |ORDER BY pos.qid""".stripMargin,
     "ivf_cell_stats" ->
       s"""WITH $C,
-         |cent AS (SELECT cid, ce FROM read_parquet($kmOracleGlob)),
+         |cent AS (SELECT cid, ce FROM read_parquet(${glob(trainedCentroids.path(dir))})),
          |asgn AS (SELECT c.id, cent.cid,
          |  row_number() OVER (PARTITION BY c.id
          |    ORDER BY round(list_dot_product(c.ne, cent.ce), 6) DESC, cent.cid ASC) AS rn
@@ -4622,7 +4283,7 @@ object SparkEntry {
          |FROM pts GROUP BY cid ORDER BY cid""".stripMargin,
     "cluster_topics" ->
       s"""WITH $C,
-         |cent AS (SELECT cid, ce FROM read_parquet($kmOracleGlob)),
+         |cent AS (SELECT cid, ce FROM read_parquet(${glob(trainedCentroids.path(dir))})),
          |asgn AS (SELECT c.id, cent.cid,
          |  row_number() OVER (PARTITION BY c.id
          |    ORDER BY round(list_dot_product(c.ne, cent.ce), 6) DESC, cent.cid ASC) AS rn
@@ -4747,12 +4408,12 @@ object SparkEntry {
     // (augmented-dot argmax, 6dp rounding, lowest-code tiebreak —
     // mirroring NearestCentroid); ADC = ordered sum of per-subspace
     // query·centroid dots; then exact rescore of the top 320.
-    "pq_adc_search" -> pqAdcOracle,
-    "pq_calibrated" -> pqCalibratedOracle,
-    "ann_family_calibrated" -> annFamilyOracle,
+    "pq_adc_search" -> pqAdcOracle(dir),
+    "pq_calibrated" -> pqCalibratedOracle(dir),
+    "ann_family_calibrated" -> annFamilyOracle(dir),
     // the indexed store's pqc codes are the same deterministic encoding,
     // so the persisted-index read path has the identical oracle
-    "indexed_pq_adc" -> pqAdcOracle,
+    "indexed_pq_adc" -> pqAdcOracle(dir),
     "vector_analogy" ->
       s"""WITH $C,
          |a AS (SELECT ne FROM c WHERE id = 10), b AS (SELECT ne FROM c WHERE id = 11),
@@ -4869,7 +4530,7 @@ object SparkEntry {
         |FROM d ORDER BY d DESC, bin ASC LIMIT 1""".stripMargin,
     "ivf_batch_search" ->
       s"""WITH $C,
-         |cent AS (SELECT cid, ce FROM read_parquet($kmOracleGlob)),
+         |cent AS (SELECT cid, ce FROM read_parquet(${glob(trainedCentroids.path(dir))})),
          |asgn AS (SELECT c.id, c.user_id, c.ne, cent.cid,
          |  row_number() OVER (PARTITION BY c.id
          |    ORDER BY round(list_dot_product(c.ne, cent.ce), 6) DESC, cent.cid ASC) AS rn
@@ -4894,7 +4555,7 @@ object SparkEntry {
     // persisted trained-centroid table, codebook from the PQ side table.
     "ivf_pq_search" ->
       s"""WITH $C,
-         |cent AS (SELECT cid, ce FROM read_parquet($kmOracleGlob)),
+         |cent AS (SELECT cid, ce FROM read_parquet(${glob(trainedCentroids.path(dir))})),
          |asgn AS (SELECT c.id, c.user_id, c.ne, cent.cid,
          |  row_number() OVER (PARTITION BY c.id
          |    ORDER BY round(list_dot_product(c.ne, cent.ce), 6) DESC, cent.cid ASC) AS rn
@@ -4906,7 +4567,7 @@ object SparkEntry {
          |pp AS (SELECT * FROM pts WHERE cid IN (SELECT cid FROM probes)),
          |cb AS (SELECT sub, code, cent,
          |  cent || [-list_dot_product(cent, cent) / 2.0] AS caug
-         |  FROM read_parquet($pqOracleGlob)),
+         |  FROM read_parquet(${glob(pqCodebookDf.path(dir))})),
          |sv AS (SELECT pp.id, s.range::INT AS sub,
          |  list_slice(pp.ne, s.range*8 + 1, s.range*8 + 8) AS xs FROM pp, range(8) s),
          |dist AS (SELECT sv.id, sv.sub, cb.code,
@@ -4931,7 +4592,7 @@ object SparkEntry {
     // kernel's, the outer the operator's (both mirrored from Spark).
     "ivf_pq_residual_search" ->
       s"""WITH $C,
-         |cent AS (SELECT cid, ce FROM read_parquet($kmOracleGlob)),
+         |cent AS (SELECT cid, ce FROM read_parquet(${glob(trainedCentroids.path(dir))})),
          |asgn AS (SELECT c.id, c.user_id, c.ne, cent.cid,
          |  row_number() OVER (PARTITION BY c.id
          |    ORDER BY round(list_dot_product(c.ne, cent.ce), 6) DESC, cent.cid ASC) AS rn
@@ -4944,7 +4605,7 @@ object SparkEntry {
          |  WHERE cid IN (SELECT cid FROM probes)),
          |cb AS (SELECT sub, code, cent,
          |  cent || [-list_dot_product(cent, cent) / 2.0] AS caug
-         |  FROM read_parquet($pqResOracleGlob)),
+         |  FROM read_parquet(${glob(pqResCodebookDf.path(dir))})),
          |sv AS (SELECT pp.id, s.range::INT AS sub,
          |  list_slice(pp.ne, s.range*8 + 1, s.range*8 + 8) AS xs,
          |  list_slice(pp.ce, s.range*8 + 1, s.range*8 + 8) AS cs
@@ -4976,7 +4637,7 @@ object SparkEntry {
     // row count, exactly Spark's one partition-pruned count
     "ivf_pq_residual_adaptive" ->
       s"""WITH $C,
-         |cent AS (SELECT cid, ce FROM read_parquet($kmOracleGlob)),
+         |cent AS (SELECT cid, ce FROM read_parquet(${glob(trainedCentroids.path(dir))})),
          |asgn AS (SELECT c.id, c.user_id, c.ne, cent.cid,
          |  row_number() OVER (PARTITION BY c.id
          |    ORDER BY round(list_dot_product(c.ne, cent.ce), 6) DESC, cent.cid ASC) AS rn
@@ -4990,7 +4651,7 @@ object SparkEntry {
          |cut AS (SELECT greatest(320, count(*) // 16)::BIGINT AS fk FROM pp),
          |cb AS (SELECT sub, code, cent,
          |  cent || [-list_dot_product(cent, cent) / 2.0] AS caug
-         |  FROM read_parquet($pqResOracleGlob)),
+         |  FROM read_parquet(${glob(pqResCodebookDf.path(dir))})),
          |sv AS (SELECT pp.id, s.range::INT AS sub,
          |  list_slice(pp.ne, s.range*8 + 1, s.range*8 + 8) AS xs,
          |  list_slice(pp.ce, s.range*8 + 1, s.range*8 + 8) AS cs
@@ -5024,7 +4685,7 @@ object SparkEntry {
     // fixture scale, and the chosen budget ships as a hash-verified column
     "ivf_pq_residual_adaptive_frac" ->
       s"""WITH $C,
-         |cent AS (SELECT cid, ce FROM read_parquet($kmOracleGlob)),
+         |cent AS (SELECT cid, ce FROM read_parquet(${glob(trainedCentroids.path(dir))})),
          |asgn AS (SELECT c.id, c.user_id, c.ne, cent.cid,
          |  row_number() OVER (PARTITION BY c.id
          |    ORDER BY round(list_dot_product(c.ne, cent.ce), 6) DESC, cent.cid ASC) AS rn
@@ -5038,7 +4699,7 @@ object SparkEntry {
          |cut AS (SELECT greatest(20, count(*) // 4)::BIGINT AS fk FROM pp),
          |cb AS (SELECT sub, code, cent,
          |  cent || [-list_dot_product(cent, cent) / 2.0] AS caug
-         |  FROM read_parquet($pqResOracleGlob)),
+         |  FROM read_parquet(${glob(pqResCodebookDf.path(dir))})),
          |sv AS (SELECT pp.id, s.range::INT AS sub,
          |  list_slice(pp.ne, s.range*8 + 1, s.range*8 + 8) AS xs,
          |  list_slice(pp.ce, s.range*8 + 1, s.range*8 + 8) AS cs
@@ -5154,8 +4815,8 @@ object SparkEntry {
     // argmax — so the sidecar, not re-assignment, is the ground truth).
     "ivf_split_search" ->
       s"""WITH $C,
-         |cent AS (SELECT cid, ce FROM read_parquet($splitCentsGlob)),
-         |asgn AS (SELECT id, cid FROM read_parquet($splitIdsGlob)),
+         |cent AS (SELECT cid, ce FROM read_parquet(${glob(splitStore.path(dir) + "_centroids")})),
+         |asgn AS (SELECT id, cid FROM read_parquet(${glob(splitStore.path(dir) + "_idsflat")})),
          |q AS (SELECT ne AS qe FROM c WHERE id = 0),
          |probes AS (SELECT cent.cid FROM cent, q
          |  ORDER BY round(list_dot_product(cent.ce, q.qe), 6) DESC, cent.cid ASC LIMIT 4),
@@ -5165,12 +4826,12 @@ object SparkEntry {
          |SELECT id, score, user_id FROM s ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
     "ivf_split_stats" ->
       s"""SELECT cid, count(*)::BIGINT AS cell_rows
-         |FROM read_parquet($splitIdsGlob)
+         |FROM read_parquet(${glob(splitStore.path(dir) + "_idsflat")})
          |GROUP BY cid ORDER BY cid""".stripMargin,
     "ivf_merge_search" ->
       s"""WITH $C,
-         |cent AS (SELECT cid, ce FROM read_parquet($mergeCentsGlob)),
-         |asgn AS (SELECT id, cid FROM read_parquet($mergeIdsGlob)),
+         |cent AS (SELECT cid, ce FROM read_parquet(${glob(mergeStore.path(dir) + "_centroids")})),
+         |asgn AS (SELECT id, cid FROM read_parquet(${glob(mergeStore.path(dir) + "_idsflat")})),
          |q AS (SELECT ne AS qe FROM c WHERE id = 0),
          |probes AS (SELECT cent.cid FROM cent, q
          |  ORDER BY round(list_dot_product(cent.ce, q.qe), 6) DESC, cent.cid ASC LIMIT 4),
@@ -5180,12 +4841,12 @@ object SparkEntry {
          |SELECT id, score, user_id FROM s ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
     "ivf_merge_stats" ->
       s"""SELECT cid, count(*)::BIGINT AS cell_rows
-         |FROM read_parquet($mergeIdsGlob)
+         |FROM read_parquet(${glob(mergeStore.path(dir) + "_idsflat")})
          |GROUP BY cid ORDER BY cid""".stripMargin,
     "ivf_optimize_search" ->
       s"""WITH $C,
-         |cent AS (SELECT cid, ce FROM read_parquet($optCentsGlob)),
-         |asgn AS (SELECT id, cid FROM read_parquet($optIdsGlob)),
+         |cent AS (SELECT cid, ce FROM read_parquet(${glob(optStore.path(dir) + "_centroids")})),
+         |asgn AS (SELECT id, cid FROM read_parquet(${glob(optStore.path(dir) + "_idsflat")})),
          |q AS (SELECT ne AS qe FROM c WHERE id = 0),
          |probes AS (SELECT cent.cid FROM cent, q
          |  ORDER BY round(list_dot_product(cent.ce, q.qe), 6) DESC, cent.cid ASC LIMIT 4),
@@ -5195,12 +4856,12 @@ object SparkEntry {
          |SELECT id, score, user_id FROM s ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
     "ivf_optimize_stats" ->
       s"""SELECT cid, count(*)::BIGINT AS cell_rows
-         |FROM read_parquet($optIdsGlob)
+         |FROM read_parquet(${glob(optStore.path(dir) + "_idsflat")})
          |GROUP BY cid ORDER BY cid""".stripMargin,
     "indexed_ivf_search_cn" ->
       s"""WITH $C,
-         |cent AS (SELECT cid, ce FROM read_parquet($cnCentsGlob)),
-         |asgn AS (SELECT id, cid FROM read_parquet($cnIdsGlob)),
+         |cent AS (SELECT cid, ce FROM read_parquet(${glob(cnStore.path(dir) + "_centroids")})),
+         |asgn AS (SELECT id, cid FROM read_parquet(${glob(cnStore.path(dir) + "_idsflat")})),
          |q AS (SELECT ne AS qe FROM c WHERE id = 0),
          |probes AS (SELECT cent.cid FROM cent, q
          |  ORDER BY round(list_dot_product(cent.ce, q.qe), 6) DESC, cent.cid ASC LIMIT 4),
@@ -5210,11 +4871,11 @@ object SparkEntry {
          |SELECT id, score, user_id FROM s ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
     "indexed_ivf_cn_stats" ->
       s"""SELECT cid, count(*)::BIGINT AS cell_rows
-         |FROM read_parquet($cnIdsGlob)
+         |FROM read_parquet(${glob(cnStore.path(dir) + "_idsflat")})
          |GROUP BY cid ORDER BY cid""".stripMargin,
     "indexed_ivf_search" ->
       s"""WITH $C,
-         |cent AS (SELECT cid, ce FROM read_parquet($idxOracleGlob)),
+         |cent AS (SELECT cid, ce FROM read_parquet(${glob(trainedCentroids.path(dir))})),
          |asgn AS (SELECT c.id, c.user_id, c.ne, cent.cid,
          |  row_number() OVER (PARTITION BY c.id
          |    ORDER BY round(list_dot_product(c.ne, cent.ce), 6) DESC, cent.cid ASC) AS rn
@@ -5231,7 +4892,7 @@ object SparkEntry {
     // the manifest is the full outer accounting per centroid-table cell.
     "slab_refresh_manifest" ->
       s"""WITH $C,
-         |cent AS (SELECT cid, ce FROM read_parquet($idxOracleGlob)),
+         |cent AS (SELECT cid, ce FROM read_parquet(${glob(trainedCentroids.path(dir))})),
          |asgn AS (SELECT c.id, cent.cid,
          |  row_number() OVER (PARTITION BY c.id
          |    ORDER BY round(list_dot_product(c.ne, cent.ce), 6) DESC, cent.cid ASC) AS rn
@@ -5263,7 +4924,7 @@ object SparkEntry {
          |ORDER BY cent.cid""".stripMargin,
     "slab_refresh_stats" ->
       s"""WITH $C,
-         |cent AS (SELECT cid, ce FROM read_parquet($idxOracleGlob)),
+         |cent AS (SELECT cid, ce FROM read_parquet(${glob(trainedCentroids.path(dir))})),
          |asgn AS (SELECT c.id, cent.cid,
          |  row_number() OVER (PARTITION BY c.id
          |    ORDER BY round(list_dot_product(c.ne, cent.ce), 6) DESC, cent.cid ASC) AS rn
@@ -5303,7 +4964,7 @@ object SparkEntry {
          |FROM m""".stripMargin,
     "indexed_ivf_filtered" ->
       s"""WITH $C,
-         |cent AS (SELECT cid, ce FROM read_parquet($idxOracleGlob)),
+         |cent AS (SELECT cid, ce FROM read_parquet(${glob(trainedCentroids.path(dir))})),
          |asgn AS (SELECT c.id, c.user_id, c.ne, cent.cid,
          |  row_number() OVER (PARTITION BY c.id
          |    ORDER BY round(list_dot_product(c.ne, cent.ce), 6) DESC, cent.cid ASC) AS rn
@@ -5326,7 +4987,7 @@ object SparkEntry {
          |         p.user_id, 'exact_filtered' AS strategy
          |       FROM c p, q WHERE p.user_id = 3
          |       ORDER BY score DESC, p.id ASC LIMIT 10),
-         |cent AS (SELECT cid, ce FROM read_parquet($idxOracleGlob)),
+         |cent AS (SELECT cid, ce FROM read_parquet(${glob(trainedCentroids.path(dir))})),
          |asgn AS (SELECT c.id, c.user_id, c.ne, cent.cid,
          |  row_number() OVER (PARTITION BY c.id
          |    ORDER BY round(list_dot_product(c.ne, cent.ce), 6) DESC, cent.cid ASC) AS rn
@@ -5349,7 +5010,7 @@ object SparkEntry {
          |         p.user_id, 'exact_filtered' AS strategy
          |       FROM c p, q WHERE p.user_id >= 2
          |       ORDER BY score DESC, p.id ASC LIMIT 10),
-         |cent AS (SELECT cid, ce FROM read_parquet($idxOracleGlob)),
+         |cent AS (SELECT cid, ce FROM read_parquet(${glob(trainedCentroids.path(dir))})),
          |asgn AS (SELECT c.id, c.user_id, c.ne, cent.cid,
          |  row_number() OVER (PARTITION BY c.id
          |    ORDER BY round(list_dot_product(c.ne, cent.ce), 6) DESC, cent.cid ASC) AS rn
@@ -5366,7 +5027,7 @@ object SparkEntry {
          |SELECT * FROM iv WHERE (SELECT mc FROM m) > 100""".stripMargin,
     "indexed_delete" ->
       s"""WITH $C,
-         |cent AS (SELECT cid, ce FROM read_parquet($idxOracleGlob)),
+         |cent AS (SELECT cid, ce FROM read_parquet(${glob(trainedCentroids.path(dir))})),
          |asgn AS (SELECT c.id, c.user_id, c.ne, cent.cid,
          |  row_number() OVER (PARTITION BY c.id
          |    ORDER BY round(list_dot_product(c.ne, cent.ce), 6) DESC, cent.cid ASC) AS rn

@@ -1616,7 +1616,11 @@ object Ann {
           // (eager=false): the eager form spends a dedicated job per hop;
           // lazily the next hop's first consumer (the frontier broadcast
           // build) materializes the same RDD inside its own job — one
-          // driver round-trip per hop saved, identical lineage truncation
+          // driver round-trip per hop saved, identical lineage truncation.
+          // This assumes that first consumer reads the WHOLE frame: were
+          // it partial (take/isEmpty), the checkpoint would materialize in
+          // a catch-up job instead — still correct, but the saved job and
+          // the latency accounting above would no longer hold
           .localCheckpoint(false)
       }
       // re-root the final checkpointed state (a LogicalRDD leaf) back

@@ -662,7 +662,12 @@ object TextAnalysis {
     * broadcastable at any corpus size); scoring is a map-side feature
     * explode + broadcast join + one decimal agg per doc; selection is
     * TakeOrderedAndProject on the Gumbel key. No corpus-sized state
-    * anywhere — the 100 TB shape is three scans and a top-k. */
+    * anywhere — the 100 TB shape is three scans and a top-k.
+    *
+    * `buckets` bounds the model: the joined model frame has at most
+    * `buckets` rows, and its totals run as one unpartitioned window in a
+    * single task. That is fine at the default 4096; a caller passing a
+    * much larger `buckets` funnels that many rows through one task. */
   def dsirResample(raw: DataFrame, target: DataFrame, n: Int,
       buckets: Int = 4096, alpha: Double = 1.0): DataFrame = {
     def feats(d: DataFrame): DataFrame = d
@@ -685,7 +690,11 @@ object TextAnalysis {
     // model totals as unpartitioned windows over the joined model frame
     // (≤ `buckets` rows — single-partition is fine at model scale): every
     // ct/cr row survives the full-outer join exactly once, so the window
-    // sums equal the old pre-join aggregates row for row
+    // sums equal the old pre-join aggregates row for row — except when a
+    // side is EMPTY. An empty target (no ct rows) now gives tt = 0 and a
+    // finite, smoothing-only lam; the old cross-joined pre-join totals
+    // were NULL there, so every lam and log_weight was NULL. With both
+    // sides empty the model has no rows and the result is empty.
     val wAll = Window.partitionBy(lit(1))
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     val lam = ct.join(cr, Seq("fid"), "full_outer")

@@ -75,7 +75,7 @@ class AlgebraPropertySpec extends SparkSpec {
     val pool = points.select($"id", $"embedding")
       .as[(Long, Seq[Double])].collect()
     (0 until 3).foreach { seq =>
-      val dir = java.nio.file.Files.createTempDirectory(s"prop_idx_$seq").toString
+      val dir = tempDir(s"prop_idx_$seq").toString
       val path = s"$dir/store"
       CollectionStore.saveIndexed(points, path, cents, idSidecarBuckets = Some(4))
       // logical twin of the store, evolved batch by batch
@@ -195,7 +195,7 @@ class AlgebraPropertySpec extends SparkSpec {
     val pool = points.select($"id", $"embedding")
       .as[(Long, Seq[Double])].collect()
     (0 until 2).foreach { seq =>
-      val dir = java.nio.file.Files.createTempDirectory(s"prop_opt_$seq").toString
+      val dir = tempDir(s"prop_opt_$seq").toString
       val path = s"$dir/store"
       CollectionStore.saveIndexed(points, path, cents0,
         idSidecarBuckets = Some(4))

@@ -849,7 +849,7 @@ class AnnSpec extends SparkSpec {
 
   test("graphBeamServe equals graphBeamSearch on the bucketed store") {
     val (ecids, ecents) = entrySeeds
-    val dir = java.nio.file.Files.createTempDirectory("graph_store")
+    val dir = tempDir("graph_store")
     val path = dir.resolve("g").toString
     Ann.saveGraphBucketed(graph, path, nBuckets = 8)
     Seq(0L, 99L, 250L, 433L).foreach { qid =>

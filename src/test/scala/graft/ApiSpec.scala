@@ -57,7 +57,7 @@ class ApiSpec extends SparkSpec {
   }
 
   test("migration round-trips the collection and search-back finds itself") {
-    val dest = java.nio.file.Files.createTempDirectory("graft_migrate")
+    val dest = tempDir("graft_migrate")
       .resolve("store").toString
     val n = CollectionStore.migrate(spark, sf001, dest)
     assert(n == points.count())
@@ -69,7 +69,7 @@ class ApiSpec extends SparkSpec {
   }
 
   test("compaction rewrites the store without deleted rows") {
-    val dest = java.nio.file.Files.createTempDirectory("graft_compact")
+    val dest = tempDir("graft_compact")
       .resolve("store").toString
     CollectionStore.save(points, dest)
     val doomed = points.filter($"user_id" === 4).count()
@@ -79,7 +79,7 @@ class ApiSpec extends SparkSpec {
   }
 
   test("saved store is sorted by user_id within files (row-group skipping)") {
-    val dest = java.nio.file.Files.createTempDirectory("graft_sorted")
+    val dest = tempDir("graft_sorted")
       .resolve("store").toString
     CollectionStore.save(points, dest, numFiles = 2)
     // per input-file ordering check: user_id must be non-decreasing
@@ -103,8 +103,8 @@ class ApiSpec extends SparkSpec {
         .select(avg("s")).first().getDouble(0)
       per
     }
-    val zDir = java.nio.file.Files.createTempDirectory("zord").toString + "/z"
-    val sDir = java.nio.file.Files.createTempDirectory("zord").toString + "/s"
+    val zDir = tempDir("zord").toString + "/z"
+    val sDir = tempDir("zord").toString + "/s"
     CollectionStore.saveZOrdered(grid, zDir, "a", "b", numFiles = 16)
     grid.repartitionByRange(16, $"a").sortWithinPartitions("a")
       .write.parquet(sDir)
@@ -128,7 +128,7 @@ class ApiSpec extends SparkSpec {
         floor($"confidence_score" * 65536.0d).cast("long")))
       .withColumn("tbin", least(lit(65535L),
         floor($"ts" / (maxTs + 1.0d) * 65536.0d).cast("long")))
-    val dest = java.nio.file.Files.createTempDirectory("zcoll").toString + "/store"
+    val dest = tempDir("zcoll").toString + "/store"
     CollectionStore.saveZOrdered(pts, dest, "cbin", "tbin", numFiles = 8)
     val stored = spark.read.parquet(dest)
     def avgSpread(dim: String): Double = stored

@@ -2,7 +2,8 @@ package graft
 
 /** Contract checks on the driver surface: entry() returns rows; every query
   * runs at sf0.001 and returns a deterministic non-degenerate result; every
-  * oracle key refers to an existing query. */
+  * oracle key refers to an existing query, and the oracle reads the side
+  * tables of the dir it is rendered for. */
 class EntrySpec extends SparkSpec {
 
   test("entry() returns rows (driver smoke contract)") {
@@ -10,7 +11,7 @@ class EntrySpec extends SparkSpec {
   }
 
   test("oracleSql keys are a subset of queries keys") {
-    val orphan = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
+    val orphan = SparkEntry.oracleSql(sf001).keySet -- SparkEntry.queries.keySet
     assert(orphan.isEmpty, s"oracle without query: $orphan")
   }
 
@@ -23,5 +24,19 @@ class EntrySpec extends SparkSpec {
       } catch { case e: Throwable => Some(s"$name: ${e.getMessage.take(100)}") }
     }
     assert(failures.isEmpty, failures.mkString("\n"))
+  }
+
+  test("oracleSql reads only the scale dir's own side tables") {
+    val dirB = "other/scale-dir" // rendering reads no data: need not exist
+    val (sanA, sanB) = (SparkEntry.san(sf001), SparkEntry.san(dirB))
+    val a = SparkEntry.oracleSql(sf001)
+    val paths = a.values.flatMap("/tmp/graft_[A-Za-z0-9_]+".r.findAllIn(_)).toSet
+    assert(paths.nonEmpty)
+    val stray = paths.filter(p => !p.contains(sanA) || p.contains("_current"))
+    assert(stray.isEmpty, s"side tables not keyed by $sf001: $stray")
+    // runs after the queries above built sf001's tables: the rendering
+    // still depends on the dir argument alone
+    assert(a.map { case (k, v) => k -> v.replace(sanA, sanB) } ==
+      SparkEntry.oracleSql(dirB))
   }
 }

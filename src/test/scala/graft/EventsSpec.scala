@@ -81,7 +81,7 @@ class EventsSpec extends SparkSpec {
     import spark.implicits._
     // 2024-01-01T10:00:00Z
     val epochMs = 1704103200000L
-    val dir = java.nio.file.Files.createTempDirectory("graft_ts_enc").toString
+    val dir = tempDir("graft_ts_enc").toString
     // encoding 1: TIMESTAMP(NANOS) surfaces as LONG nanos under the legacy conf
     Seq((1L, epochMs * 1000000L)).toDF("event_id", "ts")
       .write.mode("overwrite").parquet(s"$dir/nanos")

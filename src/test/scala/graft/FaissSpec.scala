@@ -13,7 +13,7 @@ class FaissSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmp(name: String): String =
-    Files.createTempDirectory("faissspec").resolve(name).toString
+    tempDir("faissspec").resolve(name).toString
 
   test("IndexFlatIP round-trip: write then distributed read returns exact rows") {
     val vectors = (0 until 100).map(i =>

@@ -148,7 +148,7 @@ class IndexedStoreSpec extends SparkSpec {
 
   test("mergeIndexed: O(affected-cells) upsert — moves cells, spares untouched dirs") {
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("merge_idx").toString
+    val dir = tempDir("merge_idx").toString
     val path = s"$dir/store"
     val nBuckets = 8
     val cents = Ann.kmeansCentroids(points, 8, 3)
@@ -216,7 +216,7 @@ class IndexedStoreSpec extends SparkSpec {
 
   test("deleteIndexed: tombstones touch only their cells, spare every other dir") {
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("del_idx").toString
+    val dir = tempDir("del_idx").toString
     val path = s"$dir/store"
     val nBuckets = 8
     val cents = Ann.kmeansCentroids(points, 8, 3)
@@ -278,7 +278,7 @@ class IndexedStoreSpec extends SparkSpec {
   }
 
   test("mergeGraphIndexed: tombstones+inserts rewrite only changed buckets, replay-exact") {
-    val dir = java.nio.file.Files.createTempDirectory("graph_idx").toString
+    val dir = tempDir("graph_idx").toString
     val path = s"$dir/store"
     val nBuckets = 16
     val pts = points.select($"id", $"embedding", $"user_id")
@@ -402,8 +402,8 @@ class IndexedStoreSpec extends SparkSpec {
   }
 
   test("mergeGraphIndexed: pruned path ≡ legacy whole-table path, edge for edge") {
-    val dirP = java.nio.file.Files.createTempDirectory("graph_idx_p").toString
-    val dirL = java.nio.file.Files.createTempDirectory("graph_idx_l").toString
+    val dirP = tempDir("graph_idx_p").toString
+    val dirL = tempDir("graph_idx_l").toString
     val nBuckets = 16
     val pts = points.select($"id", $"embedding", $"user_id")
     val cents = Ann.seedCentroids(pts, 16)
@@ -817,7 +817,7 @@ class IndexedStoreSpec extends SparkSpec {
     val centsDf0 = Ann.seedCentroids(points, 16)
     CollectionStore.saveIndexed(points, path, centsDf0,
       idSidecarBuckets = Some(8))
-    val dir = java.nio.file.Files.createTempDirectory("slab_lc").toString
+    val dir = tempDir("slab_lc").toString
     try {
       // generation 1: the store exported as a cell-ordered serving slab
       val v1 = s"$dir/v1.slab"

@@ -12,7 +12,7 @@ class NpySpec extends SparkSpec {
   import spark.implicits._
 
   private def tmp(name: String): String =
-    Files.createTempDirectory("npyspec").resolve(name).toString
+    tempDir("npyspec").resolve(name).toString
 
   test("float32 round-trip: write then distributed read returns exact rows") {
     val vectors = (0 until 100).map(i =>

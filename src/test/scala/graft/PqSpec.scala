@@ -66,8 +66,7 @@ class PqSpec extends SparkSpec {
   }
 
   test("materialized pqc column is read as-is and gives identical results") {
-    val path = java.nio.file.Files
-      .createTempDirectory("pq_store").toString + "/store"
+    val path = tempDir("pq_store").toString + "/store"
     points.withColumn("pqc", Quantization.pqEncode($"embedding", cb))
       .write.parquet(path)
     val store = spark.read.parquet(path)
@@ -222,7 +221,7 @@ class PqSpec extends SparkSpec {
   test("fingerprint survives the saveIndexed parquet round-trip (pqc and " +
       "pqrc carry it; the residual search checks it)") {
     import graft.operators.Ann
-    val dir = java.nio.file.Files.createTempDirectory("graft_fp").toString
+    val dir = tempDir("graft_fp").toString
     val cents = Ann.kmeansCentroids(points, 4, maxIter = 3)
     val cbRes = Quantization.pqCodebookOf(
       Quantization.pqTrainResiduals(

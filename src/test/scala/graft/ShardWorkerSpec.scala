@@ -5,8 +5,11 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Cross-process serving building blocks: slab file round-trip and the
   * worker's slice-merged top-k vs a brute-force oracle. (The socket
   * layer is exercised end-to-end by CrossProcProbe / the bench's
-  * cross_process_* rows — correctness there is router ≡ Search.knn.) */
-class ShardWorkerSpec extends AnyFunSuite {
+  * cross_process_* rows — correctness there is router ≡ Search.knn.)
+  * The workers run as daemon threads in the test JVM; [[TempDirs]]
+  * deletes their slab dirs in afterAll, after every test's finally block
+  * has closed the routers and pools that send them requests. */
+class ShardWorkerSpec extends AnyFunSuite with TempDirs {
 
   private def mkRows(n: Int, d: Int): Array[(Long, Array[Double], Int)] = {
     val rnd = new scala.util.Random(7)
@@ -200,7 +203,7 @@ class ShardWorkerSpec extends AnyFunSuite {
       "the in-JVM int8 kernel, fingerprint mismatch fails loud") {
     val rows = mkRows(500, 32)
     val k = 10
-    val dir = java.nio.file.Files.createTempDirectory("slab_i8").toString
+    val dir = tempDir("slab_i8").toString
     val floatPath = s"$dir/shard.slab"
     SlabIO.write(floatPath, rows)
     val floatBytes = java.nio.file.Files.size(
@@ -412,7 +415,7 @@ class ShardWorkerSpec extends AnyFunSuite {
     val d = 16
     val (rows, cids, cents, offs) = mkClustered(c = 6, perCell = 40, d = d)
     val c = cids.length
-    val dir = java.nio.file.Files.createTempDirectory("slab_patch").toString
+    val dir = tempDir("slab_patch").toString
     val v1 = s"$dir/v1.slab"
     SlabIO.write(v1, rows)
     SlabIO.writeIvf(s"$v1.ivf", cids, cents, offs, v1)
@@ -492,7 +495,7 @@ class ShardWorkerSpec extends AnyFunSuite {
     val d = 16
     val rows = mkRows(300, d)
     val k = 5
-    val dir = java.nio.file.Files.createTempDirectory("slab_reload").toString
+    val dir = tempDir("slab_reload").toString
     val v1 = s"$dir/v1.slab"
     SlabIO.write(v1, rows)
     // v2 adds a sentinel row that exactly equals the probe query — after
@@ -625,8 +628,10 @@ class ShardWorkerSpec extends AnyFunSuite {
                       hits.foreach { case (id, s, u) =>
                         out.writeLong(id); out.writeDouble(s); out.writeInt(u) }
                     }
-                    out.flush()
+                    // count BEFORE the reply leaves: the caller asserts on
+                    // the count as soon as it has read the reply
                     requestsServed.incrementAndGet()
+                    out.flush()
                   }
                 }
               } catch { case _: java.io.IOException => () }
@@ -705,7 +710,7 @@ class ShardWorkerSpec extends AnyFunSuite {
     val d = 32
     val (rows, cids, cents, offs) = mkClustered(c = 8, perCell = 60, d = d)
     val k = 10
-    val dir = java.nio.file.Files.createTempDirectory("slab_ivf").toString
+    val dir = tempDir("slab_ivf").toString
     val floatPath = s"$dir/shard.slab"
     SlabIO.write(floatPath, rows)
     SlabIO.writeIvf(s"$floatPath.ivf", cids, cents, offs, floatPath)
@@ -834,7 +839,7 @@ class ShardWorkerSpec extends AnyFunSuite {
     val (rows, cids, cents, offs) = mkClustered(c = 8, perCell = 60, d = d)
     val k = 10
     val th = 0.0
-    val dir = java.nio.file.Files.createTempDirectory("slab_filtered").toString
+    val dir = tempDir("slab_filtered").toString
     val floatPath = s"$dir/shard.slab"
     SlabIO.write(floatPath, rows)
     SlabIO.writeIvf(s"$floatPath.ivf", cids, cents, offs, floatPath)
@@ -945,7 +950,7 @@ class ShardWorkerSpec extends AnyFunSuite {
     val d = 32
     val (rows, cids, cents, offs) = mkClustered(c = 8, perCell = 60, d = d)
     val k = 10
-    val dir = java.nio.file.Files.createTempDirectory("slab_knobs").toString
+    val dir = tempDir("slab_knobs").toString
     val floatPath = s"$dir/shard.slab"
     SlabIO.write(floatPath, rows)
     SlabIO.writeIvf(s"$floatPath.ivf", cids, cents, offs, floatPath)
@@ -1023,7 +1028,7 @@ class ShardWorkerSpec extends AnyFunSuite {
       "set (stale id surviving in a clean cell) — ADVICE r16 #1") {
     val d = 16
     val (rows, cids, cents, offs) = mkClustered(c = 6, perCell = 40, d = d)
-    val dir = java.nio.file.Files.createTempDirectory("slab_patchval").toString
+    val dir = tempDir("slab_patchval").toString
     val v1 = s"$dir/v1.slab"
     SlabIO.write(v1, rows)
     SlabIO.writeIvf(s"$v1.ivf", cids, cents, offs, v1)
@@ -1061,7 +1066,7 @@ class ShardWorkerSpec extends AnyFunSuite {
     val (rows, _, cents, offs) = mkClustered(c = 8, perCell = 60, d = d)
     val n = rows.length
     val k = 10
-    val dir = java.nio.file.Files.createTempDirectory("slab_graph").toString
+    val dir = tempDir("slab_graph").toString
     val floatPath = s"$dir/shard.slab"
     SlabIO.write(floatPath, rows)
     // brute-force 8-NN graph made UNDIRECTED (the graphBuild shape:

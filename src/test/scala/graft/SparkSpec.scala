@@ -1,11 +1,14 @@
 package graft
 
+import java.nio.file.{Files, Path}
+
 import org.apache.spark.sql.SparkSession
+import org.scalatest.{BeforeAndAfterAll, Suite}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session base: one lazy SparkSession per suite, UTC, small
   * shuffle-partition count for local runs. */
-trait SparkSpec extends AnyFunSuite {
+trait SparkSpec extends AnyFunSuite with TempDirs {
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
     .appName("graft-test")
@@ -17,4 +20,26 @@ trait SparkSpec extends AnyFunSuite {
   def sf001 = "/root/testdata/sf0.001"
 
   org.apache.log4j.Logger.getRootLogger.setLevel(org.apache.log4j.Level.WARN)
+}
+
+/** Temp dirs a suite creates through [[tempDir]], deleted with their
+  * contents in `afterAll`, once every test of the suite has finished. */
+trait TempDirs extends BeforeAndAfterAll { this: Suite =>
+  private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[Path]()
+
+  def tempDir(prefix: String): Path = {
+    val d = Files.createTempDirectory(prefix)
+    tempDirs.add(d)
+    d
+  }
+
+  override def afterAll(): Unit =
+    try tempDirs.forEach { d =>
+      if (Files.exists(d)) {
+        val tree = Files.walk(d)
+        try tree.sorted(java.util.Comparator.reverseOrder[Path]())
+          .forEach(p => Files.deleteIfExists(p))
+        finally tree.close()
+      }
+    } finally super.afterAll()
 }

@@ -83,7 +83,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming ingest builds the same collection as batch load; rerun is exactly-once") {
-    val dest = java.nio.file.Files.createTempDirectory("ingest")
+    val dest = tempDir("ingest")
       .resolve("store").toString
     val n1 = StreamingOps.ingestStream(spark, sf001, dest)
     val batch = graft.operators.Collection.load(spark, sf001)
@@ -99,7 +99,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming indexed ingest: store lands cell-partitioned, searchable, exactly-once") {
     import org.apache.spark.sql.functions._
     import graft.operators.{Ann, Collection, Search}
-    val dest = java.nio.file.Files.createTempDirectory("ingest_idx")
+    val dest = tempDir("ingest_idx")
       .resolve("store").toString
     val points = Collection.load(spark, sf001)
     val cents = Ann.kmeansCentroids(points, 8, 3)
@@ -128,7 +128,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import graft.operators.{Ann, Collection}
     import graft.sources.CollectionStore
-    val dir = java.nio.file.Files.createTempDirectory("cdc_idx")
+    val dir = tempDir("cdc_idx")
     val dest = dir.resolve("store").toString
     val ckpt = dir.resolve("ckpt").toString
     val points = Collection.load(spark, sf001)
@@ -179,7 +179,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming PCA maintenance: per-batch model ≡ batch retrain, bit for bit") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import graft.operators.{Collection, Pca}
-    val dir = java.nio.file.Files.createTempDirectory("pca_stream")
+    val dir = tempDir("pca_stream")
     val state = dir.resolve("moments").toString
     val ckpt = dir.resolve("ckpt").toString
     val points = Collection.load(spark, sf001)
@@ -225,7 +225,7 @@ class StreamingSpec extends SparkSpec {
   test("bucketed merge rewrites ONLY the buckets containing batch ids") {
     import org.apache.spark.sql.functions._
     import graft.sources.CollectionStore
-    val dest = java.nio.file.Files.createTempDirectory("bucketed")
+    val dest = tempDir("bucketed")
       .resolve("store").toString
     val base = graft.operators.Collection.load(spark, sf001)
     CollectionStore.saveBucketed(base, dest, nBuckets = 8)
@@ -292,8 +292,7 @@ class StreamingSpec extends SparkSpec {
       "slate quartz feldspar mica gypsum talc pumice obsidian shale " +
       "limestone sandstone dolomite chalk flint"
     val evalSet = Seq((100L, evalText, "eval")).toDF("doc_id", "text", "source")
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_curation_stream").toString
+    val root = tempDir("graft_curation_stream").toString
     val dest = s"$root/curated"
     val bloomPath = s"$root/bloom"
     val docs = MemoryStream[(Long, String, String)]
@@ -332,7 +331,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import graft.operators.{Ann, Collection}
-    val dir = java.nio.file.Files.createTempDirectory("cdc_graph")
+    val dir = tempDir("cdc_graph")
     val storePath = dir.resolve("store").toString
     val graphPath = dir.resolve("graph").toString
     val ckpt = dir.resolve("ckpt").toString
@@ -393,7 +392,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import graft.operators.{Ann, Collection}
     import graft.sources.CollectionStore
-    val dir = java.nio.file.Files.createTempDirectory("cdc_graph_bkt")
+    val dir = tempDir("cdc_graph_bkt")
     val path = dir.resolve("store").toString
     val ckpt = dir.resolve("ckpt").toString
     val nBuckets = 16
@@ -424,7 +423,7 @@ class StreamingSpec extends SparkSpec {
     StreamingOps.graphCdcStreamBucketed(spark, df, path, cids, ces,
       nBuckets, checkpoint = ckpt)
     // ≡ one direct mergeGraphIndexed of the same batch on a pristine copy
-    val dir2 = java.nio.file.Files.createTempDirectory("cdc_graph_bkt_ref")
+    val dir2 = tempDir("cdc_graph_bkt_ref")
     val path2 = dir2.resolve("store").toString
     CollectionStore.saveBucketed(base, path2, nBuckets)
     CollectionStore.saveGraphSidecar(graph0, path2, nBuckets)
@@ -460,7 +459,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import graft.operators.{Ann, Collection}
-    val dir = java.nio.file.Files.createTempDirectory("cdc_graph_upsert")
+    val dir = tempDir("cdc_graph_upsert")
     val storePath = dir.resolve("store").toString
     val graphPath = dir.resolve("graph").toString
     val ckpt = dir.resolve("ckpt").toString

@@ -15,7 +15,7 @@ class TextAnalysisSpec extends SparkSpec {
     assert(model.filter($"w2h".isNull && $"w1h".isNotNull).count() > 0)
     assert(model.filter($"w1h".isNull).count() == 1L)
     // persist/read-back scores identically (the driver lifecycle)
-    val dest = java.nio.file.Files.createTempDirectory("lm").toString + "/m"
+    val dest = tempDir("lm").toString + "/m"
     model.write.parquet(dest)
     val persisted = spark.read.parquet(dest)
     // a real fixture doc vs the same words in a hash-scrambled order:
@@ -65,7 +65,7 @@ class TextAnalysisSpec extends SparkSpec {
     val model = TextAnalysis.trainQualityModel(docs).cache()
     assert(model.count() <= 1024 && model.count() > 0)
     // persist/read-back round trip scores identically (what the driver does)
-    val dest = java.nio.file.Files.createTempDirectory("nbq").toString + "/m"
+    val dest = tempDir("nbq").toString + "/m"
     model.write.parquet(dest)
     val persisted = spark.read.parquet(dest)
     val a = TextAnalysis.scoreQualityModel(docs, model).collect()
