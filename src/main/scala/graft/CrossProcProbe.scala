@@ -624,11 +624,9 @@ object CrossProc {
               val rep = BatchedServer.FlatReplica(SlabIO.read(slabPath))
               val codes = BatchedServer.quantizeSlab(rep.embs)
               val qArr = qis.map(qPool(_)).toArray
-              val hits = BatchedServer.int8TwoPhase(rep, codes, qArr,
-                k, th, math.max(k, (k * effOversample).toInt), null, 1)
-              hits.foreach { case (bi, id, s, u) =>
-                wantByQ(qis(bi)) += ((id, s, u))
-              }
+              BatchedServer.int8TwoPhase(rep, codes, qArr, k, th,
+                effOversample, null, 1)
+                .zipWithIndex.foreach { case (hits, bi) => wantByQ(qis(bi)) ++= hits }
             }
             qis.forall { qi =>
               val got = router.search(qPool(qi)).toSeq

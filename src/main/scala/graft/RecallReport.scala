@@ -236,8 +236,7 @@ object RecallReport {
               points.filter(col("id") === qid)
                 .select(col("embedding").as("qemb")), k, -1.0))
             val got = BatchedServer.int8TwoPhase(rep, codes, Array(q), k,
-              -1.0, math.max(k, k * d.oversample), null, 1)
-              .map(_._2).toSet
+              -1.0, d.oversample, null, 1)(0).map(_._1).toSet
             if (exact.isEmpty) 1.0
             else (got & exact).size.toDouble / exact.size
           }

@@ -71,6 +71,29 @@ import org.apache.spark.storage.StorageLevel
   *     the server degrades to the pinned-partition batched job, which is
   *     the 100 TB path (the shard then IS the executor fleet's memory).
   *
+  * ONE kernel set, two hosts: every scan kernel lives in `object
+  * BatchedServer`, and this server and the cross-process
+  * [[ShardWorker]] both call it (int8 rescore and row-list scoring read
+  * floats through [[BatchedServer.FloatRows]]: the heap replica here,
+  * the mmapped float slab there; every sliced scan goes through
+  * [[BatchedServer.sliceTopK]]). "postings" = the rows a user filter
+  * matches; "selective" = matched ≤ the worker's full-scan threshold,
+  * or no ivf/graph sidecar:
+  * {{{
+  * host      family  unfiltered                  filtered
+  * replica   exact   scoreRange                  scoreRows(postings)
+  * replica   int8    int8TwoPhase, heap floats   scoreRows(postings)
+  * job tier  exact   per-partition Spark job     the same job, filtered
+  * worker    exact   scoreRange                  scoreRows(postings)
+  * worker    int8    int8TwoPhase, mmap floats   scoreRows(postings), mmap floats
+  * worker    ivf     scoreRange | int8TwoPhase   selective: scoreRows(postings)
+  *                   over the probed cells       broad: scoreRows(matching probed
+  *                                               rows) | int8TwoPhase(probed
+  *                                               cells, user filter)
+  * worker    graph   graphTopK                   selective: scoreRows(postings)
+  *                                               broad: graphTopK(user filter)
+  * }}}
+  *
   * At scale the pinned template is "the shard this server routes to":
   * one executor-resident partition set serving point queries, exactly
   * how a real vector store pins its index in RAM. The reference hits
@@ -215,11 +238,12 @@ final class BatchedServer(
   /** QUANTIZED serving replica (VERDICT r13 #3 — the reference's
     * "always-RAM INT8" disposition, src/core/qdrant_client.py:129-138,
     * settings.py:48-51): when `int8Replica` is on, phase 1 of every
-    * request scans THIS byte slab (code = clamp(HALF_UP(x·127)) — the
-    * same fixed-range code as [[graft.operators.Quantization.quantize]])
+    * unfiltered request scans THIS byte slab (code = clamp(HALF_UP(x·127))
+    * — the same fixed-range code as [[graft.operators.Quantization.quantize]])
     * instead of the float slab: 8× less memory bandwidth per scan, the
     * exact trade the reference configures. The float slab is retained
-    * but touched only for the k·oversample survivors' exact rescore —
+    * for the k·oversample survivors' exact rescore (and for filtered
+    * requests, which [[submitFiltered]] scores exactly) —
     * at cluster scale that column stays on disk/mmap and only the int8
     * codes are RAM-pinned (the bench reports both slab sizes). Phase-1
     * ranking on the RAW integer dot is EXACTLY the engine's
@@ -385,16 +409,7 @@ final class BatchedServer(
     val rep = if (g == null) null else g.rep
     if (rep != null && rep.cells <= BatchedServer.DirectMaxCells &&
         queue.isEmpty) {
-      val q = qemb.toArray
-      val cands =
-        if (g.codes != null)
-          BatchedServer.int8TwoPhase(rep, g.codes, Array(q), k, threshold,
-            math.max(k, (k * g.oversample).toInt), null, 1)
-        else BatchedServer.scoreRange(rep, 0, rep.n, Array(q), k, threshold)
-      val hits = cands
-        .sortBy { case (_, id, s, _) => (-s, id) }
-        .take(k)
-        .map { case (_, id, s, u) => Row(id, s, u) }
+      val hits = toRows(searchGen(g, Array(qemb.toArray), inline = true)(0))
       metrics.recordRequest(System.nanoTime() - tSubmit, success = true)
       return Future.successful(hits)
     }
@@ -414,19 +429,22 @@ final class BatchedServer(
     * filter, several = the IN-list — the reference's only fused filter
     * shapes). Returns the same rows, in the same order, as
     * `Search.knn(points, q, k, threshold, preFilter = user_id IN (...))`
-    * — spec-pinned row for row.
+    * — spec-pinned row for row on the exact and the int8 family.
     *
-    * Replica tier: the predicate resolves to matching slab rows through
-    * the replica's [[BatchedServer.UserPostings]] payload index (built
-    * lazily on the first filtered request) and scoring touches ONLY those
-    * rows — cost scales with the filter's selectivity, never the slab,
-    * and recall is 1.0 by construction (the batch planner's
-    * exact_filtered branch; a filtered request never rides the
-    * approximate int8 phase-1 ranking over non-matching rows). Large
-    * matched sets slice across the score pool like an unfiltered flush.
-    * Job tier: one single-stage filtered map-only job over the pinned
-    * template (the per-request dispatch floor applies — the replica and
-    * cross-process tiers are the latency path, as for unfiltered). */
+    * Replica tier, either family: the predicate resolves to matching
+    * slab rows through the replica's [[BatchedServer.UserPostings]]
+    * payload index (built lazily on the first filtered request), and
+    * [[BatchedServer.scoreRows]] scores ONLY those rows, exactly, from
+    * the float slab — cost scales with the filter's selectivity, never
+    * the slab. An int8 generation's codes are not read: the quantized
+    * phase-1 ranking never enters a filtered request (the worker's
+    * planner does the same without an IVF or graph sidecar), so recall
+    * is 1.0 on both families. Matched sets over
+    * [[BatchedServer.DirectMaxCells]] of work slice across the score
+    * pool; smaller ones score on the caller thread. Job tier: one
+    * single-stage filtered map-only job over the pinned template (the
+    * per-request dispatch floor applies — the replica and cross-process
+    * tiers are the latency path, as for unfiltered). */
   def submitFiltered(qemb: Seq[Double], userIds: Seq[Int]): Future[Array[Row]] = {
     require(qemb != null && qemb.nonEmpty,
       "empty embedding (min_items=1)")
@@ -440,45 +458,19 @@ final class BatchedServer(
       val kk = k
       val th = threshold
       val q = qemb.toArray
-      val hits: Array[Row] =
+      val hits =
         if (g != null) {
           val rep = g.rep
           val rowIdx = rep.postings.rowsFor(userIds.toArray)
-          val cands: Array[(Int, Long, Double, Int)] =
-            if (g.codes != null)
-              BatchedServer.int8TwoPhaseRows(rep, g.codes, rowIdx,
-                Array(q), kk, th, math.max(kk, (kk * g.oversample).toInt))
-            else {
-              val dim = math.max(rep.uniformDim, 1)
-              val work = rowIdx.length.toLong * dim
-              if (work <= BatchedServer.DirectMaxCells)
-                BatchedServer.scoreRows(rep, rowIdx, 0, rowIdx.length,
-                  Array(q), kk, th)
-              else {
-                // broad predicate on a big replica: slice the matched
-                // rows across the score pool, merge per-slice top-k
-                // (per-slice top-k ⊇ the global top-k, as everywhere)
-                val nSlices = math.min(scoreParallelism, rowIdx.length)
-                val tasks = new java.util.ArrayList[
-                  java.util.concurrent.Callable[Array[(Int, Long, Double, Int)]]](nSlices)
-                var si = 0
-                while (si < nSlices) {
-                  val lo = (rowIdx.length.toLong * si / nSlices).toInt
-                  val hi = (rowIdx.length.toLong * (si + 1) / nSlices).toInt
-                  tasks.add(() =>
-                    BatchedServer.scoreRows(rep, rowIdx, lo, hi, Array(q), kk, th))
-                  si += 1
-                }
-                import scala.jdk.CollectionConverters._
-                scorePool.invokeAll(tasks).asScala.toArray.flatMap(_.get())
-              }
-            }
-          cands.sortBy { case (_, id, s, _) => (-s, id) }.take(kk)
-            .map { case (_, id, s, u) => Row(id, s, u) }
+          val inline = rowIdx.length.toLong * math.max(rep.uniformDim, 1) <=
+            BatchedServer.DirectMaxCells
+          BatchedServer.sliceTopK(1, kk, Array((0, rowIdx.length)),
+            if (inline) null else scorePool, scoreParallelism)(
+            BatchedServer.scoreRows(rep, rowIdx, _, _, Array(q), kk, th))(0)
         } else {
           // job tier: the same filtered exact scan as a one-job request
           val userSet = userIds.toSet
-          template.mapPartitions { rows =>
+          BatchedServer.topKPerQuery(1, kk, template.mapPartitions { rows =>
             val top = new BatchedServer.TopK(kk)
             while (rows.hasNext) {
               val (id, emb, user) = rows.next()
@@ -488,13 +480,11 @@ final class BatchedServer(
                 if (r >= th) top.offer(r, id, user)
               }
             }
-            top.drain().map { case (s, id, u) => (id, s, u) }
-          }.collect()
-            .sortBy { case (id, s, _) => (-s, id) }.take(kk)
-            .map { case (id, s, u) => Row(id, s, u) }
+            top.drain().map { case (s, id, u) => (0, id, s, u) }
+          }.collect())(0)
         }
       metrics.recordRequest(System.nanoTime() - t0, success = true)
-      Future.successful(hits)
+      Future.successful(toRows(hits))
     } catch {
       case e: Throwable =>
         metrics.recordRequest(System.nanoTime() - t0, success = false)
@@ -502,10 +492,29 @@ final class BatchedServer(
     }
   }
 
+  /** Replica-tier search over one generation: the int8 two-phase kernel
+    * when the generation carries codes, else the exact range kernel —
+    * inline on the calling thread or sliced across the score pool. */
+  private def searchGen(g: Gen, queries: Array[Array[Double]],
+      inline: Boolean): Array[Array[(Long, Double, Int)]] = {
+    val pool = if (inline) null else scorePool
+    val rep = g.rep
+    if (g.codes != null)
+      BatchedServer.int8TwoPhase(rep, g.codes, queries, k, threshold,
+        g.oversample, pool, scoreParallelism)
+    else
+      BatchedServer.sliceTopK(queries.length, k, Array((0, rep.n)), pool,
+        scoreParallelism)(BatchedServer.scoreRange(rep, _, _, queries, k, threshold))
+  }
+
+  private def toRows(hits: Array[(Long, Double, Int)]): Array[Row] =
+    hits.map { case (id, s, u) => Row(id, s, u) }
+
   /** One flush over a drained batch. Replica tier: per-slice top-k on
     * the local score pool, no Spark job. Job tier: one single-stage
     * map-only job over the pinned template. Both produce per-slice
-    * top-k candidates merged identically on the driver — per-slice
+    * top-k candidates merged identically on the driver
+    * ([[BatchedServer.topKPerQuery]]) — per-slice
     * top-k is a superset of each query's global top-k, so the merge is
     * exact either way. Query index is the position in THIS flush —
     * indices never leave the flush, so concurrent flushes can't collide. */
@@ -518,48 +527,18 @@ final class BatchedServer(
       ensureReplicaDecision()
       // one generation read per flush — see submit()'s coherence note
       val g = gen
-      val cands: Array[(Int, Long, Double, Int)] =
-        if (g != null && g.codes != null) {
-          // quantized replica tier: int8 phase-1 over the byte slab +
-          // float rescore of the survivors (see the Gen scaladoc);
-          // per-query results are final top-k, so the merge below is a
-          // no-op re-sort — identical downstream handling either way
-          val rep = g.rep
-          val fetchK = math.max(kk, (kk * g.oversample).toInt)
-          val inline = rep.cells * math.max(queries.length, 1) <=
-            BatchedServer.DirectMaxCells
-          BatchedServer.int8TwoPhase(rep, g.codes, queries, kk, th, fetchK,
-            if (inline) null else scorePool,
-            if (inline) 1 else scoreParallelism)
-        } else if (g != null) {
-          // kernel identical to the job path, and slice boundaries can't
-          // change the merged result (per-slice top-k ⊇ per-query global
-          // top-k). Small flushes score INLINE on this flush thread: at
-          // ≤ ~2M slab cells of work the scan costs ~a millisecond and
-          // an 8-way invokeAll is pure handoff overhead + wakeup jitter.
-          val rep = g.rep
-          if (rep.cells * math.max(queries.length, 1) <=
-              BatchedServer.DirectMaxCells) {
-            BatchedServer.scoreRange(rep, 0, rep.n, queries, kk, th)
-          } else {
-            val nSlices = math.min(scoreParallelism, math.max(rep.n, 1))
-            val tasks = new java.util.ArrayList[
-              java.util.concurrent.Callable[Array[(Int, Long, Double, Int)]]](nSlices)
-            var si = 0
-            while (si < nSlices) {
-              val lo = (rep.n.toLong * si / nSlices).toInt
-              val hi = (rep.n.toLong * (si + 1) / nSlices).toInt
-              tasks.add(() => BatchedServer.scoreRange(rep, lo, hi, queries, kk, th))
-              si += 1
-            }
-            import scala.jdk.CollectionConverters._
-            scorePool.invokeAll(tasks).asScala.toArray.flatMap(_.get())
-          }
-        } else {
+      val perQuery: Array[Array[(Long, Double, Int)]] =
+        if (g != null)
+          // small flushes score INLINE on this flush thread: at ≤ ~2M
+          // slab cells of work the scan costs ~a millisecond and an
+          // 8-way invokeAll is pure handoff overhead + wakeup jitter
+          searchGen(g, queries, inline = g.rep.cells *
+            math.max(queries.length, 1) <= BatchedServer.DirectMaxCells)
+        else {
           // the query block rides in the task closure: Spark broadcasts
           // the task binary per stage anyway, so an explicit Broadcast
           // would only add create/unpersist latency to every flush
-          template.mapPartitions { rows =>
+          val cands = template.mapPartitions { rows =>
             val nq = queries.length
             val tops = Array.fill(nq)(new BatchedServer.TopK(kk))
             val scratch = new Array[Double](2)
@@ -589,14 +568,10 @@ final class BatchedServer(
               t.drain().map { case (s, id, u) => (qi, id, s, u) }
             }
           }.collect()
+          BatchedServer.topKPerQuery(queries.length, kk, cands)
         }
-      val byQuery = cands.groupBy(_._1)
       batch.zipWithIndex.foreach { case (pd, qi) =>
-        val hits = byQuery.getOrElse(qi, Array.empty[(Int, Long, Double, Int)])
-          .sortBy { case (_, id, s, _) => (-s, id) }
-          .take(kk)
-          .map { case (_, id, s, u) => Row(id, s, u) }
-        pd.p.success(hits)
+        pd.p.success(toRows(perQuery(qi)))
         metrics.recordRequest(System.nanoTime() - pd.t0, success = true)
       }
       metrics.recordFlush(batch.size)
@@ -889,12 +864,11 @@ object ServingCalibration {
     val codes = BatchedServer.quantizeSlab(rep.embs)
     def lcbAt(os: Int): Double = {
       val got = BatchedServer.int8TwoPhase(rep, codes, queries, k, th,
-        math.max(k, k * os), null, 1)
-        .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
+        os.toDouble, null, 1)
       val per = (0 until nS).map { qi =>
         val want = exact.getOrElse(qi, Set.empty)
         if (want.isEmpty) 1.0
-        else (got.getOrElse(qi, Set.empty[Long]) & want).size.toDouble / want.size
+        else (got(qi).map(_._1).toSet & want).size.toDouble / want.size
       }
       val m = per.sum / nS
       val sd =
@@ -948,6 +922,20 @@ object BatchedServer {
       catch { case _: Throwable => false })
   }
 
+  /** The float rows the exact row-list kernel ([[scoreRows]]) and the
+    * int8 rescore read: parallel id/user arrays, CSR row offsets, and the
+    * exact left-to-right dot of one row against a query over
+    * `min(rowLen, queryLen)` dims (bit-identical to [[dotRaw]]). Two
+    * hosts implement it: the heap [[FlatReplica]] and the shard worker's
+    * mmapped float slab ([[SlabIO.MappedFloats]]). */
+  trait FloatRows {
+    def n: Int
+    def ids: Array[Long]
+    def users: Array[Int]
+    def offs: Array[Int]
+    def dot(row: Int, q: Array[Double]): Double
+  }
+
   /** The replica's in-memory layout: parallel primitive arrays with one
     * contiguous double slab for the vectors (CSR-style offsets tolerate
     * ragged rows without a branch in the hot loop). Zero per-row objects:
@@ -964,7 +952,16 @@ object BatchedServer {
   final class FlatReplica(
       val n: Int, val ids: Array[Long], val users: Array[Int],
       val offs: Array[Int], val embs: Array[Double],
-      val tslab: Array[Double], val tlanes: Int, val uniformDim: Int) {
+      val tslab: Array[Double], val tlanes: Int, val uniformDim: Int)
+      extends FloatRows {
+    def dot(row: Int, q: Array[Double]): Double = {
+      val b0 = offs(row)
+      val nd = math.min(offs(row + 1) - b0, q.length)
+      var s = 0.0d
+      var d = 0
+      while (d < nd) { s += embs(b0 + d) * q(d); d += 1 }
+      s
+    }
     def cells: Long = embs.length.toLong
     /** Rows covered by full SIMD blocks (0 when the kernel is off). */
     def simdRows: Int = if (tslab == null) 0 else (n / tlanes) * tlanes
@@ -1126,41 +1123,6 @@ object BatchedServer {
     s
   }
 
-  /** GATE-ONLY fast dot: four independent accumulators break the
-    * sequential add's 4-cycle dependency chain, ~4× the scan rate of
-    * [[dotRaw]]. Reassociation changes the rounding path, so this value
-    * is NEVER emitted — it only feeds the rounding gate, and any row
-    * that passes recomputes the exact left-to-right [[dotRaw]] before
-    * rounding. Safety: for L2-normalized rows |fast − seq| ≤
-    * (n−1)·ε·Σ|aᵢbᵢ| ≤ 64·1.1e−16 ≈ 7e−15 (Cauchy–Schwarz bounds
-    * Σ|aᵢbᵢ| ≤ 1), eleven orders of magnitude inside the gate's 1e−6
-    * slack — the gate's keep/skip decisions are provably unchanged. */
-  private[graft] def dotFastSlab(
-      embs: Array[Double], base: Int, n: Int, q: Array[Double]): Double = {
-    var s0 = 0.0d; var s1 = 0.0d; var s2 = 0.0d; var s3 = 0.0d
-    var s4 = 0.0d; var s5 = 0.0d; var s6 = 0.0d; var s7 = 0.0d
-    val lim8 = n - (n & 7)
-    var d = 0
-    while (d < lim8) {
-      s0 += embs(base + d) * q(d)
-      s1 += embs(base + d + 1) * q(d + 1)
-      s2 += embs(base + d + 2) * q(d + 2)
-      s3 += embs(base + d + 3) * q(d + 3)
-      s4 += embs(base + d + 4) * q(d + 4)
-      s5 += embs(base + d + 5) * q(d + 5)
-      s6 += embs(base + d + 6) * q(d + 6)
-      s7 += embs(base + d + 7) * q(d + 7)
-      d += 8
-    }
-    while (d < n) { s0 += embs(base + d) * q(d); d += 1 }
-    ((s0 + s1) + (s2 + s3)) + ((s4 + s5) + (s6 + s7))
-  }
-
-  // (removed) dotFast — the old standalone-row entry point with the fixed
-  // 1e-6 slack assumption. The job tier gates through [[dotFastAbs]] +
-  // [[gateSlack]] (magnitude-scaled); keeping the old form invited a call
-  // site that reintroduces the unnormalized-magnitude gating bug (ADVICE r11).
-
   /** Job-tier gate pass: one scan computing BOTH the reassociated fast
     * dot and Σ|aᵢbᵢ| (written to `out(0)`/`out(1)`), so the gate slack
     * can scale with the data's actual magnitude instead of assuming
@@ -1210,17 +1172,13 @@ object BatchedServer {
   private[graft] def gateSlack(n: Int, absSum: Double): Double =
     1e-6 + 4.0 * n * 1.1e-16 * absSum
 
-  /** The full rounded kernel (dot + 6dp round), kept for callers/tests
-    * that want the ungated form; identical output to the gated path. */
-  private[graft] def dotRound6(emb: Array[Double], q: Array[Double]): Double =
-    graft.plans.Num.round6(dotRaw(emb, q))
-
   /** Per-slice top-k over replica rows `[lo, hi)` for every query — the
     * replica tier's unit of parallelism on the score pool (and, inline,
     * the whole-replica kernel of the direct tier). The dot product is
     * the same left-to-right accumulation over `min(rowLen, queryLen)`
-    * dims and the same 6dp HALF_UP round as [[dotRound6]] — bit-for-bit
-    * the job-tier kernel, just reading the flat slab. */
+    * dims as [[dotRaw]] and the same 6dp HALF_UP round
+    * ([[graft.plans.Num.round6]]) — bit-for-bit the job-tier kernel, just
+    * reading the flat slab. */
   private[graft] def scoreRange(
       rep: FlatReplica, lo: Int, hi: Int,
       queries: Array[Array[Double]], k: Int, th: Double)
@@ -1413,13 +1371,7 @@ object BatchedServer {
       }
     }
     if (!simdDone) scalarRange(lo, hi)
-    val out = Array.newBuilder[(Int, Long, Double, Int)]
-    var qi = 0
-    while (qi < nq) {
-      tops(qi).drain().foreach { case (s, id, u) => out += ((qi, id, s, u)) }
-      qi += 1
-    }
-    out.result()
+    drainAll(tops)
   }
 
   /** HALF_UP round-to-int of x·127, clamped to [−127, 127] — the scalar
@@ -1441,29 +1393,38 @@ object BatchedServer {
     out
   }
 
-  /** INT8 two-phase kernel over the quantized replica: phase 1 scans the
-    * BYTE slab ranking every row by the raw integer dot against the
-    * quantized query (exactly the engine's round6(intdot/127²) order —
-    * distinct integer dots can't collide at 6dp, see the int8Replica
-    * scaladoc), keeps the top `fetchK` per query under (dot desc, id
-    * asc); phase 2 rescores only those rows from the float slab with the
-    * exact left-to-right kernel + 6dp round + threshold — the same
-    * two-phase shape as [[graft.operators.Quantization.twoPhaseSearch]],
-    * serving-resident. Returns each query's FINAL top-k (qi, id, score,
-    * user) tuples. Phase 1 slices across `pool` when given (the score
-    * pool), else runs inline (the direct tier). */
+  /** THE int8 two-phase kernel, shared by the in-JVM replica and the
+    * shard worker. Phase 1 scans the BYTE slab `codes` (laid out by
+    * `rows.offs`) over the row intervals `ranges` (null = every row),
+    * skips rows whose user is not in `userFilter` (null = no filter),
+    * and ranks each row by the raw integer dot against the quantized
+    * query — exactly the engine's round6(intdot/127²) order (distinct
+    * integer dots can't collide at 6dp, see the int8Replica scaladoc) —
+    * keeping the top `fetchK = max(k, ⌊k·oversample⌋)` per query under
+    * (dot desc, id asc). Phase 2 rescores only those rows with
+    * [[scoreRows]]: the exact left-to-right dot read from `rows` (heap
+    * replica or mmapped slab) + 6dp round + threshold — the same
+    * two-phase shape as [[graft.operators.Quantization.twoPhaseSearch]].
+    * Phase 1 slices across `pool` ([[sliceTopK]]; null = inline).
+    * Returns each query's final top-k (id, score, user), (score desc,
+    * id asc). */
   private[graft] def int8TwoPhase(
-      rep: FlatReplica, codes: Array[Byte],
-      queries: Array[Array[Double]], k: Int, th: Double, fetchK: Int,
-      pool: java.util.concurrent.ExecutorService, slices: Int)
-      : Array[(Int, Long, Double, Int)] = {
+      rows: FloatRows, codes: Array[Byte],
+      queries: Array[Array[Double]], k: Int, th: Double, oversample: Double,
+      pool: java.util.concurrent.ExecutorService, slices: Int,
+      ranges: Array[(Int, Int)] = null, userFilter: Array[Int] = null)
+      : Array[Array[(Long, Double, Int)]] = {
     val nq = queries.length
+    val fetchK = math.max(k, (k * oversample).toInt)
     val q8: Array[Array[Byte]] = queries.map { q =>
       val a = new Array[Byte](q.length)
       var i = 0
       while (i < q.length) { a(i) = quantizeCode(q(i)); i += 1 }
       a
     }
+    val offs = rows.offs
+    val ids = rows.ids
+    val users = rows.users
     // phase 1: per-slice bounded heaps on (intdot, id); intdot ≤ 127²·d
     // fits a Double exactly (< 2^53), so TopK is reused as-is with the
     // row index riding in the user slot. The byte dot dispatches to the
@@ -1475,85 +1436,54 @@ object BatchedServer {
       val tops = Array.fill(nq)(new TopK(fetchK))
       var i = lo
       while (i < hi) {
-        val b0 = rep.offs(i)
-        val len = rep.offs(i + 1) - b0
-        val id = rep.ids(i)
-        var qi = 0
-        while (qi < nq) {
-          val q = q8(qi)
-          val nd = math.min(len, q.length)
-          val s: Long =
-            if (useSimd) graft.simd.SimdDot.dotBytes(codes, b0, nd, q)
-            else {
-              var t = 0L
-              var d = 0
-              while (d < nd) { t += codes(b0 + d) * q(d); d += 1 }
-              t
-            }
-          tops(qi).offer(s.toDouble, id, i)
-          qi += 1
+        // a row outside the filter is skipped BEFORE ranking, so every
+        // survivor already satisfies the predicate — no fetch widening
+        // needed for predicate losses
+        if (userFilter == null || userMatch(userFilter, users(i))) {
+          val b0 = offs(i)
+          val len = offs(i + 1) - b0
+          val id = ids(i)
+          var qi = 0
+          while (qi < nq) {
+            val q = q8(qi)
+            val nd = math.min(len, q.length)
+            val s: Long =
+              if (useSimd) graft.simd.SimdDot.dotBytes(codes, b0, nd, q)
+              else {
+                var t = 0L
+                var d = 0
+                while (d < nd) { t += codes(b0 + d) * q(d); d += 1 }
+                t
+              }
+            tops(qi).offer(s.toDouble, id, i)
+            qi += 1
+          }
         }
         i += 1
       }
-      val out = Array.newBuilder[(Int, Long, Double, Int)]
-      var qi = 0
-      while (qi < nq) {
-        tops(qi).drain().foreach { case (s, id, row) => out += ((qi, id, s, row)) }
-        qi += 1
-      }
-      out.result()
+      drainAll(tops)
     }
-    val nSlices = math.max(1, math.min(slices, rep.n))
-    val cands: Array[(Int, Long, Double, Int)] =
-      if (nSlices <= 1 || pool == null) phase1(0, rep.n)
-      else {
-        val tasks = new java.util.ArrayList[
-          java.util.concurrent.Callable[Array[(Int, Long, Double, Int)]]](nSlices)
-        var si = 0
-        while (si < nSlices) {
-          val lo = (rep.n.toLong * si / nSlices).toInt
-          val hi = (rep.n.toLong * (si + 1) / nSlices).toInt
-          tasks.add(() => phase1(lo, hi))
-          si += 1
-        }
-        import scala.jdk.CollectionConverters._
-        pool.invokeAll(tasks).asScala.toArray.flatMap(_.get())
-      }
-    // merge slices per query (per-slice top-fetchK ⊇ global top-fetchK),
-    // then phase 2: exact rescore of the survivors from the float slab
-    val out = Array.newBuilder[(Int, Long, Double, Int)]
-    cands.groupBy(_._1).foreach { case (qi, heap) =>
-      val survivors = heap
-        .sortBy { case (_, id, s, _) => (-s, id) }
-        .take(fetchK)
-      val q = queries(qi)
-      val rescored = survivors.flatMap { case (_, id, _, row) =>
-        val b0 = rep.offs(row)
-        val len = rep.offs(row + 1) - b0
-        val nd = math.min(len, q.length)
-        var s = 0.0d
-        var d = 0
-        while (d < nd) { s += rep.embs(b0 + d) * q(d); d += 1 }
-        val r = graft.plans.Num.round6(s)
-        if (r >= th) Some((id, r, rep.users(row))) else None
-      }
-      rescored.sortBy { case (id, s, _) => (-s, id) }.take(k)
-        .foreach { case (id, s, u) => out += ((qi, id, s, u)) }
+    val survivors = sliceTopK(nq, fetchK,
+      if (ranges != null) ranges else Array((0, rows.n)), pool, slices)(phase1)
+    // phase 2: exact rescore of each query's survivors (row in slot 3)
+    Array.tabulate(nq) { qi =>
+      val rowIdx = survivors(qi).map(_._3)
+      topKPerQuery(1, k,
+        scoreRows(rows, rowIdx, 0, rowIdx.length, Array(queries(qi)), k, th))(0)
     }
-    out.result()
   }
 
-  /** Exact top-k over an explicit ROW-INDEX list `rowIdx[from,until)` —
-    * the filtered serving kernel: the caller resolves a payload predicate
-    * to matching slab rows (via [[UserPostings]]) and scoring touches
-    * ONLY those rows with the same exact left-to-right dot + 6dp HALF_UP
-    * round + threshold as [[scoreRange]]'s tail path, so filtered serving
-    * ≡ `Search.knn(preFilter)` row for row by the same kernel-parity
-    * argument as the unfiltered tiers. Recall is 1.0 by construction
-    * (every matching row is scored — the planner's exact_filtered branch,
-    * immune to the filtered-ANN recall hole). */
+  /** THE exact row-list kernel: top-k over the row-index list
+    * `rowIdx[from, until)` of `rows` with the same exact left-to-right
+    * dot, rounding gate, 6dp HALF_UP round and threshold as
+    * [[scoreRange]]'s scalar path. It serves every filtered request that
+    * resolves its predicate to rows (payload postings, or probed cells
+    * filtered by user) and the int8 rescore, on either host — so
+    * filtered serving ≡ `Search.knn(preFilter)` row for row by the same
+    * kernel-parity argument as the unfiltered tiers, with recall 1.0
+    * over the listed rows. */
   private[graft] def scoreRows(
-      rep: FlatReplica, rowIdx: Array[Int], from: Int, until: Int,
+      rows: FloatRows, rowIdx: Array[Int], from: Int, until: Int,
       queries: Array[Array[Double]], k: Int, th: Double)
       : Array[(Int, Long, Double, Int)] = {
     val nq = queries.length
@@ -1561,26 +1491,18 @@ object BatchedServer {
     val floors = new Array[Double](nq)
     var fi = 0
     while (fi < nq) { floors(fi) = tops(fi).floor(th); fi += 1 }
-    val embs = rep.embs
-    val offs = rep.offs
+    val ids = rows.ids
+    val users = rows.users
     var p = from
     while (p < until) {
       val i = rowIdx(p)
-      val b0 = offs(i)
-      val L = offs(i + 1) - b0
-      val id = rep.ids(i)
-      val user = rep.users(i)
       var qi = 0
       while (qi < nq) {
-        val q = queries(qi)
-        val nd = math.min(L, q.length)
-        var s = 0.0d
-        var d = 0
-        while (d < nd) { s += embs(b0 + d) * q(d); d += 1 }
+        val s = rows.dot(i, queries(qi))
         if (s >= floors(qi) - 1e-6) {
           val r = graft.plans.Num.round6(s)
           if (r >= th) {
-            tops(qi).offer(r, id, user)
+            tops(qi).offer(r, ids(i), users(i))
             floors(qi) = tops(qi).floor(th)
           }
         }
@@ -1588,74 +1510,98 @@ object BatchedServer {
       }
       p += 1
     }
-    val out = Array.newBuilder[(Int, Long, Double, Int)]
-    var qi = 0
-    while (qi < nq) {
-      tops(qi).drain().foreach { case (s, id, u) => out += ((qi, id, s, u)) }
-      qi += 1
-    }
-    out.result()
+    drainAll(tops)
   }
 
-  /** INT8 two-phase over a ROW-INDEX list — [[int8TwoPhase]] restricted
-    * to the rows a payload predicate matched: phase 1 ranks only matching
-    * rows by quantized dot (so every survivor already satisfies the
-    * filter — no fetch widening needed for predicate losses), phase 2 is
-    * the same exact float rescore. */
-  private[graft] def int8TwoPhaseRows(
-      rep: FlatReplica, codes: Array[Byte], rowIdx: Array[Int],
-      queries: Array[Array[Double]], k: Int, th: Double, fetchK: Int)
-      : Array[(Int, Long, Double, Int)] = {
-    val nq = queries.length
-    val q8: Array[Array[Byte]] = queries.map { q =>
-      val a = new Array[Byte](q.length)
-      var i = 0
-      while (i < q.length) { a(i) = quantizeCode(q(i)); i += 1 }
-      a
-    }
-    val useSimd = SimdSupport.int8
-    val tops = Array.fill(nq)(new TopK(fetchK))
-    var p = 0
-    while (p < rowIdx.length) {
-      val i = rowIdx(p)
-      val b0 = rep.offs(i)
-      val len = rep.offs(i + 1) - b0
-      val id = rep.ids(i)
-      var qi = 0
-      while (qi < nq) {
-        val q = q8(qi)
-        val nd = math.min(len, q.length)
-        val s: Long =
-          if (useSimd) graft.simd.SimdDot.dotBytes(codes, b0, nd, q)
-          else {
-            var t = 0L
-            var d = 0
-            while (d < nd) { t += codes(b0 + d) * q(d); d += 1 }
-            t
-          }
-        tops(qi).offer(s.toDouble, id, i)
-        qi += 1
+  /** THE slicer: split `ranges` (half-open intervals of whatever `scan`
+    * indexes — slab rows, or positions in a row list) into ≤ `slices`
+    * chunks of near-equal size ([[chunkRanges]]), scan every chunk on
+    * `pool` (inline on the caller when `pool` is null), and merge the
+    * per-slice top-k per query ([[topKPerQuery]]). Per-slice top-k ⊇
+    * each query's global top-k, so slice boundaries never change the
+    * merged result. */
+  private[graft] def sliceTopK(nq: Int, k: Int, ranges: Array[(Int, Int)],
+      pool: java.util.concurrent.ExecutorService, slices: Int)(
+      scan: (Int, Int) => Array[(Int, Long, Double, Int)])
+      : Array[Array[(Long, Double, Int)]] = {
+    def run(chunk: Array[(Int, Int)]): Array[(Int, Long, Double, Int)] =
+      chunk.flatMap { case (lo, hi) =>
+        if (lo < hi) scan(lo, hi) else Array.empty[(Int, Long, Double, Int)]
       }
-      p += 1
+    val cands =
+      if (pool == null) run(ranges)
+      else {
+        import scala.jdk.CollectionConverters._
+        val tasks = chunkRanges(ranges, math.max(1, slices)).toSeq.map { c =>
+          (() => run(c)): java.util.concurrent.Callable[Array[(Int, Long, Double, Int)]]
+        }
+        pool.invokeAll(tasks.asJava).asScala.toArray.flatMap(_.get())
+      }
+    topKPerQuery(nq, k, cands)
+  }
+
+  /** Per-query merge of (qi, id, score, user) candidates: each query's
+    * hits sorted (score desc, id asc), the first k kept — the one merge
+    * rule of every serving tier (int8 phase 1 rides it too, with the
+    * integer dot as score and the row index as user). */
+  private[graft] def topKPerQuery(nq: Int, k: Int,
+      cands: Array[(Int, Long, Double, Int)]): Array[Array[(Long, Double, Int)]] = {
+    val out = Array.fill(nq)(Array.empty[(Long, Double, Int)])
+    cands.groupBy(_._1).foreach { case (qi, hits) =>
+      out(qi) = hits.map(h => (h._2, h._3, h._4))
+        .sortBy { case (id, s, _) => (-s, id) }.take(k)
     }
+    out
+  }
+
+  /** Split `ranges` (half-open row intervals) into ≤`slices` work chunks
+    * of near-equal total row count. Each chunk is a list of
+    * sub-intervals so one oversized interval (an IVF cell, or the whole
+    * slab) still parallelizes. */
+  private[graft] def chunkRanges(ranges: Array[(Int, Int)], slices: Int)
+      : Array[Array[(Int, Int)]] = {
+    val total = ranges.map { case (lo, hi) => math.max(hi - lo, 0) }.sum
+    if (total == 0) return Array.empty
+    val step = math.max(1, (total + slices - 1) / math.max(slices, 1))
+    val chunks = Array.newBuilder[Array[(Int, Int)]]
+    val cur = Array.newBuilder[(Int, Int)]
+    var curRows = 0
+    ranges.foreach { case (lo0, hi) =>
+      var lo = lo0
+      while (lo < hi) {
+        val take = math.min(hi - lo, step - curRows)
+        cur += ((lo, lo + take))
+        lo += take
+        curRows += take
+        if (curRows >= step) {
+          chunks += cur.result(); cur.clear(); curRows = 0
+        }
+      }
+    }
+    val tail = cur.result()
+    if (tail.nonEmpty) chunks += tail
+    chunks.result()
+  }
+
+  /** Membership in a SMALL user IN-list (the reference's only fused
+    * filter shapes are equality and IN — src/core/advanced_indexing.py:
+    * 150-164): linear scan beats any set for the 1-8 element lists the
+    * API shapes produce. */
+  private[graft] def userMatch(filter: Array[Int], user: Int): Boolean = {
+    var j = 0
+    while (j < filter.length) {
+      if (filter(j) == user) return true
+      j += 1
+    }
+    false
+  }
+
+  /** Per-query heaps → (qi, id, score, user) candidates. */
+  private def drainAll(tops: Array[TopK]): Array[(Int, Long, Double, Int)] = {
     val out = Array.newBuilder[(Int, Long, Double, Int)]
     var qi = 0
-    while (qi < nq) {
-      val survivors = tops(qi).drain().toArray
-        .sortBy { case (s, id, _) => (-s, id) }.take(fetchK)
-      val q = queries(qi)
-      val rescored = survivors.flatMap { case (_, id, row) =>
-        val b0 = rep.offs(row.toInt)
-        val len = rep.offs(row.toInt + 1) - b0
-        val nd = math.min(len, q.length)
-        var s = 0.0d
-        var d = 0
-        while (d < nd) { s += rep.embs(b0 + d) * q(d); d += 1 }
-        val r = graft.plans.Num.round6(s)
-        if (r >= th) Some((id, r, rep.users(row.toInt))) else None
-      }
-      rescored.sortBy { case (id, s, _) => (-s, id) }.take(k)
-        .foreach { case (id, s, u) => out += ((qi, id, s, u)) }
+    while (qi < tops.length) {
+      tops(qi).drain().foreach { case (s, id, u) => out += ((qi, id, s, u)) }
       qi += 1
     }
     out.result()

@@ -17,9 +17,10 @@ import java.nio.file.{Paths, StandardOpenOption}
   *   - [[ShardWorker]]: a worker PROCESS (no Spark at runtime — plain
   *     JVM, exactly like an executor-resident scorer) that maps its slab
   *     into the same [[BatchedServer.FlatReplica]] layout and serves
-  *     top-k scoring over TCP with the same bit-exact kernel
-  *     ([[BatchedServer.scoreRange]] — SIMD dispatch included) the
-  *     in-JVM tier uses.
+  *     top-k scoring over TCP with the same bit-exact kernels the
+  *     in-JVM tier uses — one kernel set in `object BatchedServer`,
+  *     called by both hosts (table below; the int8 worker's floats are
+  *     read through [[SlabIO.MappedFloats]]).
   *   - [[RemoteShardedRouter]]: the scatter-gather client; per-shard
   *     pooled connections, top-k merge under the global
   *     (score desc, id asc) order — the same exactness argument as
@@ -29,6 +30,25 @@ import java.nio.file.{Paths, StandardOpenOption}
   * TCP_NODELAY): request = [int nq][int d][nq·d doubles]; nq=0 is a
   * PING (measures the pure IPC round-trip floor). Response = per query
   * [int m][m × (long id, double score, int user)].
+  *
+  * Kernels by host × family × filter ("postings" = the rows a user
+  * filter matches; "selective" = matched ≤ the full-scan threshold, or
+  * no ivf/graph sidecar; every sliced scan goes through
+  * [[BatchedServer.sliceTopK]]):
+  * {{{
+  * host      family  unfiltered                  filtered
+  * replica   exact   scoreRange                  scoreRows(postings)
+  * replica   int8    int8TwoPhase, heap floats   scoreRows(postings)
+  * job tier  exact   per-partition Spark job     the same job, filtered
+  * worker    exact   scoreRange                  scoreRows(postings)
+  * worker    int8    int8TwoPhase, mmap floats   scoreRows(postings), mmap floats
+  * worker    ivf     scoreRange | int8TwoPhase   selective: scoreRows(postings)
+  *                   over the probed cells       broad: scoreRows(matching probed
+  *                                               rows) | int8TwoPhase(probed
+  *                                               cells, user filter)
+  * worker    graph   graphTopK                   selective: scoreRows(postings)
+  *                                               broad: graphTopK(user filter)
+  * }}}
   *
   * Reference anchor: Qdrant's distributed deployment shards collections
   * across nodes and scatter-gathers searches (the reference's
@@ -668,6 +688,30 @@ object SlabIO {
     } finally ch.close() // the mapping outlives the channel by spec
   }
 
+  /** The int8 worker's float rows ([[BatchedServer.FloatRows]]): the code
+    * slab's ids/users/offs, with each row's doubles absolute-read from
+    * the float slab mapped by [[mapFloatForRescore]] — the int8 rescore
+    * and the exact row-list kernel read the page cache, and the float
+    * column never loads to worker heap. */
+  final class MappedFloats(val slab: Int8Slab, buf: ByteBuffer,
+      dataStart: Long) extends BatchedServer.FloatRows {
+    def n: Int = slab.n
+    def ids: Array[Long] = slab.ids
+    def users: Array[Int] = slab.users
+    def offs: Array[Int] = slab.offs
+    def dot(row: Int, q: Array[Double]): Double = {
+      val b0 = slab.offs(row)
+      val nd = math.min(slab.offs(row + 1) - b0, q.length)
+      var s = 0.0d
+      var d = 0
+      while (d < nd) {
+        s += buf.getDouble((dataStart + (b0 + d) * 8L).toInt) * q(d)
+        d += 1
+      }
+      s
+    }
+  }
+
   /** The ids region alone (8 bytes/row, one streaming pass) — the
     * cheapest id→slab-row scan; with the cell directory's row offsets it
     * answers "which cells do these ids live in" without touching the
@@ -797,16 +841,20 @@ object ShardWorker {
     * generation they started with (the arrays are immutable and the old
     * mmap stays valid until GC), new requests see the new one.
     * `postings` is the payload index over the slab's user column —
-    * filtered frames resolve their predicate through it. */
+    * filtered frames resolve their predicate through it. Exactly one of
+    * `rep` (float mode: the heap replica) and `i8` (int8 mode: the code
+    * slab plus the mmapped float slab) is set. */
   final case class ServingState(
       version: Long,
       rep: BatchedServer.FlatReplica,
-      i8: SlabIO.Int8Slab, floatBuf: ByteBuffer, floatDataStart: Long,
+      i8: SlabIO.MappedFloats,
       ivf: SlabIO.IvfSidecar, nprobe: Int, oversample: Double,
       postings: BatchedServer.UserPostings,
       graph: SlabIO.GraphSidecar = null, beam: Int = 0) {
     def int8: Boolean = i8 != null
     def n: Int = if (int8) i8.n else rep.n
+    /** The float rows exact scoring reads, whichever the mode. */
+    def floats: BatchedServer.FloatRows = if (int8) i8 else rep
   }
 
   /** Hop cap of the worker's beam descent — a safety bound, not an
@@ -859,7 +907,7 @@ object ShardWorker {
       g.requirePairedWith(slabPath)
       val rep = BatchedServer.FlatReplica(SlabIO.read(slabPath))
       require(g.n == rep.n, s"graph sidecar covers ${g.n} rows, slab has ${rep.n}")
-      return ServingState(version, rep, null, null, 0L, null, 0, oversample,
+      return ServingState(version, rep, null, null, 0, oversample,
         BatchedServer.UserPostings(rep.users), g, beam)
     }
     // nprobe == −1 is the READ-FROM-KNOBS sentinel (VERDICT r16 #6): the
@@ -883,7 +931,7 @@ object ShardWorker {
       }
     if (int8Path.isEmpty) {
       val rep = BatchedServer.FlatReplica(SlabIO.read(slabPath))
-      ServingState(version, rep, null, null, 0L, ivf, effNprobe,
+      ServingState(version, rep, null, ivf, effNprobe,
         effOversample, BatchedServer.UserPostings(rep.users))
     } else {
       val slab = SlabIO.readInt8(int8Path)
@@ -892,38 +940,9 @@ object ShardWorker {
       // mismatched or regenerated handoffs fail loud
       slab.requirePairedWith(slabPath)
       val (buf, ds) = SlabIO.mapFloatForRescore(slabPath)
-      ServingState(version, null, slab, buf, ds, ivf, effNprobe,
-        effOversample, BatchedServer.UserPostings(slab.users))
+      ServingState(version, null, new SlabIO.MappedFloats(slab, buf, ds), ivf,
+        effNprobe, effOversample, BatchedServer.UserPostings(slab.users))
     }
-  }
-
-  /** Split `ranges` (half-open row intervals) into ≤`slices` work chunks
-    * of near-equal total row count — the pruned-scan analogue of the
-    * full scan's uniform slicing. Each chunk is a list of sub-intervals
-    * so one oversized cell still parallelizes. */
-  private[graft] def chunkRanges(ranges: Array[(Int, Int)], slices: Int)
-      : Array[Array[(Int, Int)]] = {
-    val total = ranges.map { case (lo, hi) => math.max(hi - lo, 0) }.sum
-    if (total == 0) return Array.empty
-    val step = math.max(1, (total + slices - 1) / math.max(slices, 1))
-    val chunks = Array.newBuilder[Array[(Int, Int)]]
-    val cur = Array.newBuilder[(Int, Int)]
-    var curRows = 0
-    ranges.foreach { case (lo0, hi) =>
-      var lo = lo0
-      while (lo < hi) {
-        val take = math.min(hi - lo, step - curRows)
-        cur += ((lo, lo + take))
-        lo += take
-        curRows += take
-        if (curRows >= step) {
-          chunks += cur.result(); cur.clear(); curRows = 0
-        }
-      }
-    }
-    val tail = cur.result()
-    if (tail.nonEmpty) chunks += tail
-    chunks.result()
   }
 
   /** Rank the sidecar's cells by round6(q·centroid) desc, cell id asc —
@@ -950,228 +969,49 @@ object ShardWorker {
       .sortBy(_._1) // scan in slab order: sequential memory walk
   }
 
-  /** Score `queries` over the replica on `threads` slices and merge the
-    * per-slice top-k under (score desc, id asc) — identical merge rule
-    * to the in-JVM flush-slice merge. `ranges` (null = the whole slab)
-    * restricts the scan to the given row intervals — the IVF-pruned
-    * phase 1; scoring within them is the same exact kernel, so pruned
-    * output ≡ full-scan output whenever the intervals cover the
-    * queries' true top-k rows (spec-pinned at full probe). */
+  /** Exact float top-k of the worker: the shared range kernel
+    * ([[BatchedServer.scoreRange]]) over `threads` chunks of `pool`,
+    * merged per query under (score desc, id asc) by the shared slicer
+    * ([[BatchedServer.sliceTopK]]) — the in-JVM flush's path. `ranges`
+    * (null = the whole slab) restricts the scan to the given row
+    * intervals — the IVF-pruned phase 1; scoring within them is the same
+    * exact kernel, so pruned output ≡ full-scan output whenever the
+    * intervals cover the queries' true top-k rows (spec-pinned at full
+    * probe). */
   private[graft] def topK(rep: BatchedServer.FlatReplica,
       pool: java.util.concurrent.ExecutorService, threads: Int,
       queries: Array[Array[Double]], k: Int, th: Double,
       ranges: Array[(Int, Int)] = null)
-      : Array[Array[(Long, Double, Int)]] = {
-    val rs = if (ranges != null) ranges else Array((0, rep.n))
-    val chunks = chunkRanges(rs, math.max(1, threads))
-    val tasks = chunks.map { chunk =>
-      pool.submit(new java.util.concurrent.Callable[Array[(Int, Long, Double, Int)]] {
-        def call(): Array[(Int, Long, Double, Int)] =
-          chunk.flatMap { case (lo, hi) =>
-            if (lo >= hi) Array.empty[(Int, Long, Double, Int)]
-            else BatchedServer.scoreRange(rep, lo, hi, queries, k, th)
-          }
-      })
-    }
-    val all = tasks.flatMap(_.get())
-    val out = Array.fill(queries.length)(Array.empty[(Long, Double, Int)])
-    all.groupBy(_._1).foreach { case (qi, hits) =>
-      out(qi) = hits.map(h => (h._2, h._3, h._4))
-        .sortBy { case (id, s, _) => (-s, id) }.take(k).toArray
-    }
-    out
-  }
+      : Array[Array[(Long, Double, Int)]] =
+    BatchedServer.sliceTopK(queries.length, k,
+      if (ranges != null) ranges else Array((0, rep.n)), pool, threads)(
+      BatchedServer.scoreRange(rep, _, _, queries, k, th))
 
-  /** INT8 two-phase top-k for the worker (VERDICT r14 #6): phase 1 scans
-    * the RAM-pinned byte slab ranking every row by the raw integer dot
-    * against the quantized query (the same deterministic order as the
-    * in-JVM [[BatchedServer.int8TwoPhase]] — see its 6dp argument), keeps
-    * k·oversample per slice under (dot desc, id asc); phase 2 rescores
-    * the merged survivors with the exact float dot ABSOLUTE-READ from the
-    * mmapped float slab — the float column never loads to worker heap.
-    * Same (score desc, id asc) merge contract as [[topK]], so the router
-    * is oblivious to which kernel a shard runs. */
-  private[graft] def topKInt8(slab: SlabIO.Int8Slab,
-      floatBuf: ByteBuffer, dataStart: Long,
-      pool: java.util.concurrent.ExecutorService, threads: Int,
-      queries: Array[Array[Double]], k: Int, th: Double,
-      oversample: Double = 3.0,
-      ranges: Array[(Int, Int)] = null,
-      userFilter: Array[Int] = null): Array[Array[(Long, Double, Int)]] = {
-    val nq = queries.length
-    val n = slab.n
-    val fetchK = math.max(k, (k * oversample).toInt)
-    val q8: Array[Array[Byte]] = queries.map { q =>
-      val a = new Array[Byte](q.length)
-      var i = 0
-      while (i < q.length) {
-        a(i) = BatchedServer.quantizeCode(q(i)); i += 1
-      }
-      a
-    }
-    // same SIMD dispatch as the in-JVM kernel (integer math — scalar
-    // and vector paths bit-identical)
-    val useSimd = BatchedServer.SimdSupport.int8
-    def phase1(lo: Int, hi: Int): Array[(Int, Long, Double, Int)] = {
-      val tops = Array.fill(nq)(new BatchedServer.TopK(fetchK))
-      var i = lo
-      while (i < hi) {
-        // post-filter on probed rows (the broad-predicate branch of the
-        // filtered planner): a non-matching row is skipped BEFORE ranking,
-        // so every phase-1 survivor already satisfies the predicate — no
-        // fetch widening needed for predicate losses
-        if (userFilter != null && !userMatch(userFilter, slab.users(i))) {
-          i += 1
-        } else {
-        val b0 = slab.offs(i)
-        val len = slab.offs(i + 1) - b0
-        val id = slab.ids(i)
-        var qi = 0
-        while (qi < nq) {
-          val q = q8(qi)
-          val nd = math.min(len, q.length)
-          val s: Long =
-            if (useSimd) graft.simd.SimdDot.dotBytes(slab.codes, b0, nd, q)
-            else {
-              var t = 0L
-              var d = 0
-              while (d < nd) { t += slab.codes(b0 + d) * q(d); d += 1 }
-              t
-            }
-          tops(qi).offer(s.toDouble, id, i)
-          qi += 1
-        }
-        i += 1
-        }
-      }
-      val out = Array.newBuilder[(Int, Long, Double, Int)]
-      var qi = 0
-      while (qi < nq) {
-        tops(qi).drain().foreach { case (s, id, row) => out += ((qi, id, s, row)) }
-        qi += 1
-      }
-      out.result()
-    }
-    val rs = if (ranges != null) ranges else Array((0, n))
-    val chunks = chunkRanges(rs, math.max(1, threads))
-    val tasks = chunks.map { chunk =>
-      pool.submit(new java.util.concurrent.Callable[Array[(Int, Long, Double, Int)]] {
-        def call(): Array[(Int, Long, Double, Int)] =
-          chunk.flatMap { case (lo, hi) =>
-            if (lo >= hi) Array.empty[(Int, Long, Double, Int)]
-            else phase1(lo, hi)
-          }
-      })
-    }
-    val cands = tasks.flatMap(_.get())
-    val out = Array.fill(queries.length)(Array.empty[(Long, Double, Int)])
-    cands.groupBy(_._1).foreach { case (qi, heap) =>
-      val survivors = heap
-        .sortBy { case (_, id, s, _) => (-s, id) }.take(fetchK)
-      val q = queries(qi)
-      val rescored = survivors.map { case (_, id, _, row) =>
-        val b0 = slab.offs(row)
-        val len = slab.offs(row + 1) - b0
-        val nd = math.min(len, q.length)
-        var s = 0.0d
-        var d = 0
-        while (d < nd) {
-          s += floatBuf.getDouble((dataStart + (b0 + d) * 8L).toInt) * q(d)
-          d += 1
-        }
-        // Num.round6: the SAME rounding gate as the in-JVM rescore
-        (id, graft.plans.Num.round6(s), slab.users(row))
-      }.filter(_._2 >= th)
-      out(qi) = rescored.sortBy { case (id, s, _) => (-s, id) }.take(k).toArray
-    }
-    out
-  }
-
-  /** Membership in a SMALL user IN-list (the reference's only fused
-    * filter shapes are equality and IN — src/core/advanced_indexing.py:
-    * 150-164): linear scan beats any set for the 1-8 element lists the
-    * API shapes produce. */
-  private[graft] def userMatch(filter: Array[Int], user: Int): Boolean = {
-    var j = 0
-    while (j < filter.length) {
-      if (filter(j) == user) return true
-      j += 1
-    }
-    false
-  }
-
-  /** Exact filtered top-k over row ranges of the FLOAT replica: same
-    * exact sequential dot + 6dp round + (score desc, id asc) heap as
-    * [[BatchedServer.scoreRows]], with non-matching rows skipped before
-    * scoring — the broad-predicate branch composed with the IVF-pruned
-    * ranges. Chunked across the worker pool like [[topK]]. */
-  private[graft] def topKFloatFiltered(rep: BatchedServer.FlatReplica,
-      pool: java.util.concurrent.ExecutorService, threads: Int,
-      q: Array[Double], k: Int, th: Double,
-      ranges: Array[(Int, Int)], userFilter: Array[Int])
-      : Array[(Long, Double, Int)] = {
-    def scan(lo: Int, hi: Int): Array[(Int, Long, Double, Int)] = {
-      val top = new BatchedServer.TopK(k)
-      var floor = top.floor(th)
-      var i = lo
-      while (i < hi) {
-        if (userMatch(userFilter, rep.users(i))) {
-          val b0 = rep.offs(i)
-          val nd = math.min(rep.offs(i + 1) - b0, q.length)
-          var s = 0.0d
-          var d = 0
-          while (d < nd) { s += rep.embs(b0 + d) * q(d); d += 1 }
-          if (s >= floor - 1e-6) {
-            val r = graft.plans.Num.round6(s)
-            if (r >= th) {
-              top.offer(r, rep.ids(i), rep.users(i))
-              floor = top.floor(th)
-            }
-          }
-        }
-        i += 1
-      }
-      top.drain().map { case (s, id, u) => (0, id, s, u) }.toArray
-    }
-    val chunks = chunkRanges(ranges, math.max(1, threads))
-    val tasks = chunks.map { chunk =>
-      pool.submit(new java.util.concurrent.Callable[Array[(Int, Long, Double, Int)]] {
-        def call(): Array[(Int, Long, Double, Int)] =
-          chunk.flatMap { case (lo, hi) =>
-            if (lo >= hi) Array.empty[(Int, Long, Double, Int)] else scan(lo, hi)
-          }
-      })
-    }
-    tasks.flatMap(_.get()).map { case (_, id, s, u) => (id, s, u) }
-      .sortBy { case (id, s, _) => (-s, id) }.take(k)
-  }
-
-  /** Exact top-k over an explicit row list of an INT8 worker's slab,
-    * scoring FLOATS absolute-read from the mmapped float slab — the
-    * selective-predicate branch on an int8 worker: recall 1.0 (the
-    * quantized phase-1 ranking is never in the path), cost = the matched
-    * rows' float bytes faulted from page cache. */
-  private[graft] def topKRowsMmap(slab: SlabIO.Int8Slab,
-      floatBuf: ByteBuffer, dataStart: Long, rowIdx: Array[Int],
-      q: Array[Double], k: Int, th: Double): Array[(Long, Double, Int)] = {
-    val top = new BatchedServer.TopK(k)
-    var p = 0
-    while (p < rowIdx.length) {
-      val i = rowIdx(p)
-      val b0 = slab.offs(i)
-      val nd = math.min(slab.offs(i + 1) - b0, q.length)
-      var s = 0.0d
-      var d = 0
-      while (d < nd) {
-        s += floatBuf.getDouble((dataStart + (b0 + d) * 8L).toInt) * q(d)
-        d += 1
-      }
-      val r = graft.plans.Num.round6(s)
-      if (r >= th) top.offer(r, slab.ids(i), slab.users(i))
-      p += 1
-    }
-    top.drain().map { case (s, id, u) => (id, s, u) }.toArray
-      .sortBy { case (id, s, _) => (-s, id) }.take(k)
+  /** Unfiltered top-k of one generation: beam descent on a graph
+    * generation, else per-query probed cells on an IVF generation, else
+    * the whole slab — on the float kernel ([[topK]]) or the int8 kernel
+    * ([[BatchedServer.int8TwoPhase]], rescoring from the mmapped float
+    * slab). The router is oblivious to which kernel a shard runs: every
+    * path returns the (score desc, id asc) top-k. */
+  private[graft] def search(st: ServingState, queries: Array[Array[Double]],
+      k: Int, th: Double, pool: java.util.concurrent.ExecutorService,
+      threads: Int): Array[Array[(Long, Double, Int)]] = {
+    def scan(qs: Array[Array[Double]], rs: Array[(Int, Int)]) =
+      if (st.int8)
+        BatchedServer.int8TwoPhase(st.i8, st.i8.slab.codes, qs, k, th,
+          st.oversample, pool, threads, rs)
+      else topK(st.rep, pool, threads, qs, k, th, rs)
+    if (st.graph != null)
+      // hop-bounded phase 1: per-query beam descent (single-threaded per
+      // query by design — the whole point is that the work is a few
+      // thousand dots, below slicing overhead)
+      queries.map(q => graphTopK(st.rep, st.graph, q, k, th, st.beam))
+    else if (st.ivf != null)
+      // pruned phase 1: per-query probe ranges (queries in a batch may
+      // probe different cells — usually nq=1 from the router, so the
+      // per-query dispatch costs nothing)
+      queries.map(q => scan(Array(q), probeRanges(st.ivf, q, st.nprobe))(0))
+    else scan(queries, null)
   }
 
   /** Beam descent over the graph sidecar — the worker-resident form of
@@ -1274,7 +1114,8 @@ object ShardWorker {
     *   - broad predicate with IVF: post-filter ON the probed cells — the
     *     pruned phase 1 keeps its sub-linear scan and non-matching rows
     *     are skipped before ranking (int8: before the quantized offer, so
-    *     survivors all satisfy the predicate; float: before scoring).
+    *     survivors all satisfy the predicate; float: the probed rows that
+    *     match go to the same exact row-list kernel).
     *
     * Row-for-row equality with `Search.knn(preFilter)` on the selective
     * branch (and on the broad branch at full probe) is spec-pinned.
@@ -1292,24 +1133,31 @@ object ShardWorker {
       q: Array[Double], k: Int, th: Double, fullScanTh: Int,
       pool: java.util.concurrent.ExecutorService, threads: Int)
       : Array[(Long, Double, Int)] = {
-    val matched = st.postings.matched(users)
-    if ((st.ivf == null && st.graph == null) || matched <= fullScanTh) {
-      val rowIdx = st.postings.rowsFor(users)
-      if (st.int8)
-        topKRowsMmap(st.i8, st.floatBuf, st.floatDataStart, rowIdx, q, k, th)
-      else
-        BatchedServer.scoreRows(st.rep, rowIdx, 0, rowIdx.length,
-          Array(q), k, th)
-          .map { case (_, id, s, u) => (id, s, u) }
-          .sortBy { case (id, s, _) => (-s, id) }.take(k)
-    } else if (st.graph != null) {
+    // exact row-list scan (inline when `p` is null)
+    def exactRows(rowIdx: Array[Int], p: java.util.concurrent.ExecutorService) =
+      BatchedServer.sliceTopK(1, k, Array((0, rowIdx.length)), p, threads)(
+        BatchedServer.scoreRows(st.floats, rowIdx, _, _, Array(q), k, th))(0)
+    if ((st.ivf == null && st.graph == null) ||
+        st.postings.matched(users) <= fullScanTh)
+      exactRows(st.postings.rowsFor(users), null)
+    else if (st.graph != null)
       graphTopK(st.rep, st.graph, q, k, th, st.beam, userFilter = users)
-    } else {
+    else {
       val rs = probeRanges(st.ivf, q, st.nprobe)
       if (st.int8)
-        topKInt8(st.i8, st.floatBuf, st.floatDataStart, pool, threads,
-          Array(q), k, th, st.oversample, ranges = rs, userFilter = users)(0)
-      else topKFloatFiltered(st.rep, pool, threads, q, k, th, rs, users)
+        BatchedServer.int8TwoPhase(st.i8, st.i8.slab.codes, Array(q), k, th,
+          st.oversample, pool, threads, rs, users)(0)
+      else {
+        val hit = Array.newBuilder[Int]
+        rs.foreach { case (lo, hi) =>
+          var i = lo
+          while (i < hi) {
+            if (BatchedServer.userMatch(users, st.rep.users(i))) hit += i
+            i += 1
+          }
+        }
+        exactRows(hit.result(), pool)
+      }
     }
   }
 
@@ -1428,43 +1276,23 @@ object ShardWorker {
             }
             out.flush()
           }
-          else if (nq == FilteredCmd) {
-            val nu = in.readInt()
-            val users = new Array[Int](nu)
-            var ui = 0
-            while (ui < nu) { users(ui) = in.readInt(); ui += 1 }
-            val nqF = in.readInt()
-            val d = in.readInt()
-            val queries = Array.ofDim[Array[Double]](nqF)
-            var qi = 0
-            while (qi < nqF) {
-              val q = new Array[Double](d)
-              var j = 0
-              while (j < d) { q(j) = in.readDouble(); j += 1 }
-              queries(qi) = q
-              qi += 1
-            }
-            if (stallMs > 0 &&
-              reqCounter.incrementAndGet() % stallEvery == 0)
-              Thread.sleep(stallMs)
-            val st = stateRef.get()
-            var i = 0
-            while (i < nqF) {
-              val hits = filteredTopK(st, users, queries(i), k, th,
-                fullScanTh, pool, threads)
-              out.writeInt(hits.length)
-              hits.foreach { case (id, s, u) =>
-                out.writeLong(id); out.writeDouble(s); out.writeInt(u)
-              }
-              i += 1
-            }
-            out.flush()
-          }
           else {
+            // the one search-frame reader: an optional filter prefix
+            // ([[FilteredCmd]], int nu, nu user ids), then
+            // [int nq][int d][nq·d doubles]
+            val users =
+              if (nq != FilteredCmd) null
+              else {
+                val us = new Array[Int](in.readInt())
+                var ui = 0
+                while (ui < us.length) { us(ui) = in.readInt(); ui += 1 }
+                us
+              }
+            val nqs = if (users == null) nq else in.readInt()
             val d = in.readInt()
-            val queries = Array.ofDim[Array[Double]](nq)
+            val queries = Array.ofDim[Array[Double]](nqs)
             var qi = 0
-            while (qi < nq) {
+            while (qi < nqs) {
               val q = new Array[Double](d)
               var j = 0
               while (j < d) { q(j) = in.readDouble(); j += 1 }
@@ -1478,32 +1306,14 @@ object ShardWorker {
             // from a single generation even if a reload lands mid-flight
             val st = stateRef.get()
             val res =
-              if (st.graph != null)
-                // hop-bounded phase 1: per-query beam descent (single-
-                // threaded per query by design — the whole point is that
-                // the work is a few thousand dots, below slicing overhead)
-                queries.map(q => graphTopK(st.rep, st.graph, q, k, th, st.beam))
-              else if (st.ivf != null)
-                // pruned phase 1: per-query probe ranges (queries in a
-                // batch may probe different cells — usually nq=1 from
-                // the router, so the per-query dispatch costs nothing)
-                queries.map { q =>
-                  val rs = probeRanges(st.ivf, q, st.nprobe)
-                  if (st.int8)
-                    topKInt8(st.i8, st.floatBuf, st.floatDataStart, pool,
-                      threads, Array(q), k, th, st.oversample, ranges = rs)(0)
-                  else topK(st.rep, pool, threads, Array(q), k, th, rs)(0)
-                }
-              else if (st.int8) topKInt8(st.i8, st.floatBuf, st.floatDataStart,
-                pool, threads, queries, k, th, st.oversample)
-              else topK(st.rep, pool, threads, queries, k, th)
-            var i = 0
-            while (i < nq) {
-              out.writeInt(res(i).length)
-              res(i).foreach { case (id, s, u) =>
+              if (users == null) search(st, queries, k, th, pool, threads)
+              else queries.map(q =>
+                filteredTopK(st, users, q, k, th, fullScanTh, pool, threads))
+            res.foreach { hits =>
+              out.writeInt(hits.length)
+              hits.foreach { case (id, s, u) =>
                 out.writeLong(id); out.writeDouble(s); out.writeInt(u)
               }
-              i += 1
             }
             out.flush()
           }
@@ -1521,7 +1331,7 @@ object ShardWorker {
          else s" graphEdges=${st0.graph.nbrs.length} beam=${st0.beam}")
     if (st0.int8)
       println(s"READY $port n=${st0.n} int8=1 " +
-        s"codeBytes=${st0.i8.codes.length}$ivfNote")
+        s"codeBytes=${st0.i8.slab.codes.length}$ivfNote")
     else
       println(s"READY $port n=${st0.n} simdRows=${st0.rep.simdRows}$ivfNote")
     while (true) {

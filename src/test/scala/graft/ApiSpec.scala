@@ -445,17 +445,15 @@ class ApiSpec extends SparkSpec {
     } finally srv.close()
   }
 
-  test("calibrated serving decision: the stated recall target picks the " +
-      "served family/oversample, the decision rides the metrics, and " +
-      "the served plan actually changes") {
-    // Fixture with a STRUCTURAL int8 failure mode (VERDICT r15 #2/#3):
-    // 150 rows share one int8 code block (component deltas below the
-    // quantization bin width) while their float scores strictly increase
-    // with id — int8 phase 1 sees identical dots, tie-keeps the LOWEST
-    // ids, and misses the true (highest-id) top-k at EVERY ladder rung
-    // (150 > k·8). 350 normal rows keep the easy regime the int8 family
-    // wins. So a low stated target calibrates to int8; a high one must
-    // degrade to the exact float family.
+  // Fixture with a STRUCTURAL int8 failure mode (VERDICT r15 #2/#3):
+  // 150 rows share one int8 code block (component deltas below the
+  // quantization bin width) while their float scores strictly increase
+  // with id — int8 phase 1 sees identical dots, tie-keeps the LOWEST
+  // ids, and misses the true (highest-id) top-k at EVERY ladder rung
+  // (150 > k·8). 350 normal rows keep the easy regime the int8 family
+  // wins. So a low stated target calibrates to int8; a high one must
+  // degrade to the exact float family.
+  private def int8TieFixture = {
     val d = 8
     val rnd = new scala.util.Random(61)
     val normal = (0 until 350).map { j =>
@@ -468,7 +466,13 @@ class ApiSpec extends SparkSpec {
       v(0) = 0.3 + i * 2e-5 // same int8 code (0.3·127=38.1 .. 38.48)
       ((350 + i).toLong, v.toSeq, i % 10)
     }
-    val fixture = (normal ++ group).toDF("id", "embedding", "user_id")
+    (normal, group, (normal ++ group).toDF("id", "embedding", "user_id"))
+  }
+
+  test("calibrated serving decision: the stated recall target picks the " +
+      "served family/oversample, the decision rides the metrics, and " +
+      "the served plan actually changes") {
+    val (normal, group, fixture) = int8TieFixture
     def exactTopK(q: Seq[Double], k: Int): Seq[(Long, Double)] =
       (normal ++ group).map { case (id, e, _) =>
         val s = e.zip(q).map { case (a, b) => a * b }.sum
@@ -522,6 +526,36 @@ class ApiSpec extends SparkSpec {
       assert(shSrv.nShards > 1)
       assert(shSrv.shardDecisions.forall(_.targetRecall == 0.95))
     } finally shSrv.close()
+  }
+
+  test("submitFiltered on an int8 generation ≡ Search.knn(preFilter) row " +
+      "for row: the matched rows are scored exactly, not int8-ranked") {
+    // on the tie fixture int8 phase 1 at oversample 1 keeps the LOWEST
+    // group ids, so any int8 ranking of the matched rows misses the true
+    // (highest-id) filtered top-k
+    val (_, group, fixture) = int8TieFixture
+    import scala.concurrent.Await
+    import scala.concurrent.duration._
+    val qGroup = group(145)._2
+    val srv = Api.batchedServer(fixture, k = 10,
+      scoreThreshold = Some(0.0), recallTarget = Some(0.4))
+    try {
+      val dec = srv.servingDecision
+      assert(dec.family == "int8" && dec.oversample == 1,
+        s"fixture must serve int8 at oversample 1: $dec")
+      def oracle(pred: org.apache.spark.sql.Column): Seq[(Long, Double, Int)] =
+        graft.operators.Search.knn(fixture, Seq(qGroup).toDF("qemb"), 10, 0.0,
+          preFilter = Some(pred))
+          .collect().map(r => (r.getLong(0), r.getDouble(1), r.getInt(2))).toSeq
+      def served(us: Seq[Int]): Seq[(Long, Double, Int)] =
+        Await.result(srv.submitFiltered(qGroup, us), 2.minutes)
+          .map(r => (r.getLong(0), r.getDouble(1), r.getInt(2))).toSeq
+      assert(served(Seq(5)) == oracle($"user_id" === 5),
+        "user_id = 5 must equal the exact filtered search")
+      val all = 0 until 10
+      assert(served(all) == oracle($"user_id".isin(all.map(Int.box): _*)),
+        "user_id IN (0..9) must equal the exact filtered search")
+    } finally srv.close()
   }
 
   test("serving metrics: request/flush counters, cumulative latency " +

@@ -218,8 +218,11 @@ class ShardWorkerSpec extends AnyFunSuite with TempDirs {
         assert(slab.codes(slab.offs(i) + d) == BatchedServer.quantizeCode(x))
       }
     }
-    // kernel parity: topKInt8 over the mmapped float slab ≡ the in-JVM
-    // int8TwoPhase over the same rows (same phase-1 order, same rescore)
+    // kernel parity: the one int8 kernel, rescoring from the mmapped
+    // float slab AND from the heap replica, ≡ a brute-force two-phase
+    // written here — quantize every cell, integer dot, keep fetchK by
+    // (dot desc, id asc), exact rescore + round6 + threshold, then
+    // (score desc, id asc) top-k
     val (fbuf, ds) = SlabIO.mapFloatForRescore(floatPath)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
     val rep = BatchedServer.FlatReplica(rows)
@@ -230,13 +233,36 @@ class ShardWorkerSpec extends AnyFunSuite with TempDirs {
       val n = math.sqrt(q.map(x => x * x).sum); q.map(_ / n)
     }
     try {
-      val got = ShardWorker.topKInt8(slab, fbuf, ds, pool, 4, queries, k, 0.0)
-      val want = BatchedServer.int8TwoPhase(rep, codes, queries, k, 0.0,
-        math.max(k, k * 3), null, 1)
-      queries.indices.foreach { qi =>
-        val w = want.filter(_._1 == qi).map { case (_, id, s, u) => (id, s, u) }
-          .sortBy { case (id, s, _) => (-s, id) }.toSeq
-        assert(got(qi).toSeq == w, s"query $qi")
+      def oracle(q: Array[Double], th: Double): Seq[(Long, Double, Int)] = {
+        val q8 = q.map(BatchedServer.quantizeCode)
+        rows.map { case (id, e, u) =>
+          var dot = 0L
+          var i = 0
+          while (i < math.min(e.length, q8.length)) {
+            dot += BatchedServer.quantizeCode(e(i)) * q8(i); i += 1
+          }
+          (dot, id, e, u)
+        }.sortBy { case (dot, id, _, _) => (-dot, id) }.take(k * 3)
+          .map { case (_, id, e, u) =>
+            var s = 0.0
+            var i = 0
+            while (i < math.min(e.length, q.length)) { s += e(i) * q(i); i += 1 }
+            (id, graft.plans.Num.round6(s), u)
+          }.filter(_._2 >= th)
+          .sortBy { case (id, s, _) => (-s, id) }.take(k).toSeq
+      }
+      val mapped = new SlabIO.MappedFloats(slab, fbuf, ds)
+      val got = BatchedServer.int8TwoPhase(mapped, slab.codes, queries, k,
+        0.0, 3.0, pool, 4)
+      val sources = Seq[(String, BatchedServer.FloatRows, Array[Byte])](
+        ("mmap", mapped, slab.codes), ("heap", rep, codes))
+      for ((src, floats, cs) <- sources; th <- Seq(0.0, 0.1)) {
+        val res = BatchedServer.int8TwoPhase(floats, cs, queries, k, th, 3.0,
+          pool, 4)
+        queries.indices.foreach { qi =>
+          assert(res(qi).toSeq == oracle(queries(qi), th),
+            s"$src float source, th $th, query $qi")
+        }
       }
       // end-to-end over a socket: an int8 worker serves row-for-row what
       // a float worker serves on this fixture (the ApiSpec parity claim,
@@ -748,11 +774,13 @@ class ShardWorkerSpec extends AnyFunSuite with TempDirs {
       // ...and int8 (pruned byte-slab phase 1 + mmap rescore)
       val slab = SlabIO.readInt8(s"$floatPath.i8")
       val (fbuf, ds) = SlabIO.mapFloatForRescore(floatPath)
-      val i8full = ShardWorker.topKInt8(slab, fbuf, ds, pool, 4, queries, k, 0.0)
+      val i8 = new SlabIO.MappedFloats(slab, fbuf, ds)
+      val i8full = BatchedServer.int8TwoPhase(i8, slab.codes, queries, k, 0.0,
+        3.0, pool, 4)
       queries.zipWithIndex.foreach { case (q, qi) =>
         val rs = ShardWorker.probeRanges(ivf, q, nprobe = ivf.c)
-        val pruned = ShardWorker.topKInt8(slab, fbuf, ds, pool, 4,
-          Array(q), k, 0.0, ranges = rs)
+        val pruned = BatchedServer.int8TwoPhase(i8, slab.codes,
+          Array(q), k, 0.0, 3.0, pool, 4, ranges = rs)
         assert(pruned(0).toSeq == i8full(qi).toSeq, s"int8 full-probe, q$qi")
       }
       // PARTIAL probe (nprobe=2): every returned hit's score must be the
