@@ -21,6 +21,8 @@ object Bench {
   def qpsPhase(spark: SparkSession, sfDir: String,
       threads: Int = 16, queriesPerThread: Int = 25): Map[String, Double] = {
     import org.apache.spark.sql.functions.col
+    import scala.concurrent.Await
+    import scala.concurrent.duration._
     import spark.implicits._
     // single cached partition: a per-query job is then ONE task over an
     // in-memory columnar batch — at serving scale this is "the shard a
@@ -34,38 +36,6 @@ object Bench {
       .select("embedding").collect()
       .map(_.getSeq[Double](0))
     val nQ = qPool.length
-    // One timed per-request storm: `threads` clients, one Spark job per
-    // query, mkQuery builds the per-request frame. Returns (wall s,
-    // sorted latencies ms).
-    def perRequestStormF(
-        doReq: (Int, Int) => Unit): (Double, Array[Double]) = {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
-      val lats = new java.util.concurrent.ConcurrentLinkedQueue[Double]()
-      val t0 = System.nanoTime()
-      val secs =
-        try {
-          val futures = (0 until threads).map { t =>
-            pool.submit(new Runnable {
-              def run(): Unit = {
-                var i = 0
-                while (i < queriesPerThread) {
-                  val s0 = System.nanoTime()
-                  doReq(t, t * queriesPerThread + i)
-                  lats.add((System.nanoTime() - s0) / 1e6) // ms
-                  i += 1
-                }
-              }
-            })
-          }
-          futures.foreach(_.get())
-          (System.nanoTime() - t0) / 1e9
-        } finally pool.shutdownNow() // workers must not outlive a failure
-      import scala.jdk.CollectionConverters._
-      (secs, lats.asScala.toArray.sorted)
-    }
-    def perRequestStorm(
-        mkQuery: Int => org.apache.spark.sql.DataFrame): (Double, Array[Double]) =
-      perRequestStormF((_, i) => mkQuery(i).collect())
     def knnQuery(i: Int) = graft.operators.Search.knn(points,
       Seq(qPool(i % nQ)).toDF("qemb"), k = 10, threshold = 0.1)
     def directQuery(i: Int) =
@@ -81,11 +51,9 @@ object Bench {
     (0 until 100).foreach { i =>
       knnQuery(i).collect(); directQuery(i).collect()
     }
-    val (secs, sortedLat) = perRequestStorm(knnQuery)
-    val done = new java.util.concurrent.atomic.AtomicLong(
-      (threads * queriesPerThread).toLong)
-    def pct(p: Double): Double =
-      math.rint(sortedLat(((sortedLat.length - 1) * p).toInt) * 10) / 10
+    val nReq = threads * queriesPerThread
+    val (secs, sortedLat) =
+      Drive.closed(threads, queriesPerThread)((_, i) => knnQuery(i).collect())
     // the engineered per-request form (Search.knnDirect — query literal
     // inlined, no broadcast exchange, one single-stage job per request;
     // oracle-graded as knn_search_direct): measured at the same storm
@@ -94,9 +62,8 @@ object Bench {
     // path); the GRADED knn_search_direct query additionally times store
     // load + head() vector fetch per run — do not compare the two
     // numbers as one path (VERDICT r12 #7).
-    val (dsecs, dLat) = perRequestStorm(directQuery)
-    def dPctF(p: Double): Double =
-      math.rint(dLat(((dLat.length - 1) * p).toInt) * 10) / 10
+    val (dsecs, dLat) =
+      Drive.closed(threads, queriesPerThread)((_, i) => directQuery(i).collect())
     // PREPARED-STATEMENT form (VERDICT r12 #6): one physical plan per
     // worker thread built ONCE (Search.PreparedKnn — slot rebinding, no
     // per-request Catalyst at all); same storm shape and query pool.
@@ -109,45 +76,18 @@ object Bench {
         new graft.operators.Search.PreparedKnn(points, 10, 0.1))
       (0 until 100).foreach(i =>
         preps(i % threads).search(qPool(i % nQ).toArray)) // JIT warm
-      perRequestStormF((t, i) => preps(t).search(qPool(i % nQ).toArray))
+      Drive.closed(threads, queriesPerThread)((t, i) =>
+        preps(t).search(qPool(i % nQ).toArray))
     }
-    def prPctF(p: Double): Double =
-      math.rint(prepLat(((prepLat.length - 1) * p).toInt) * 10) / 10
     // the JVM-wide one-job-per-query bound: the same storm submitting
     // the cheapest possible 1-task job (pinned 1-partition RDD count).
     // ANY per-request tier is capped by this single-threaded
     // DAGScheduler dispatch ceiling — measured in-artifact so the
     // per_request FAIL rows are self-explaining (VERDICT r11 #2).
-    def jobCeilingWith(closureKiB: Int): Double = {
-      val bare = spark.sparkContext.parallelize(1 to 100, 1).cache()
-      // optional captured blob: the bare ceiling's closure is ~1 KB while
-      // a real plan's task binary is hundreds of KB of codegen source +
-      // plan tree — serialized and torrent-broadcast PER JOB in the
-      // single-threaded DAGScheduler loop. Measuring the ceiling at a
-      // realistic closure size separates "driver dispatch floor" from
-      // "this plan could still be slimmer" (VERDICT r12 #6).
-      val blob: Array[Byte] =
-        if (closureKiB == 0) Array.emptyByteArray
-        else Array.tabulate(closureKiB * 1024)(i => (i % 251).toByte)
-      def onceJob(): Unit =
-        if (closureKiB == 0) bare.count()
-        else { val b = blob; bare.mapPartitions { it =>
-          if (b.length > 1 && b(1) == 127) Iterator.empty else it }.count() }
-      (0 until 50).foreach(_ => onceJob())
-      val pool3 = java.util.concurrent.Executors.newFixedThreadPool(threads)
-      val t3 = System.nanoTime()
-      val fs3 = (0 until threads).map { _ =>
-        pool3.submit(new Runnable { def run(): Unit = {
-          var i = 0; while (i < 50) { onceJob(); i += 1 }
-        }})
-      }
-      try fs3.foreach(_.get()) finally pool3.shutdownNow()
-      val c = threads * 50 / ((System.nanoTime() - t3) / 1e9)
-      bare.unpersist()
-      math.rint(c * 10) / 10
-    }
-    val jobCeiling = jobCeilingWith(0)
-    val jobCeilingReal = jobCeilingWith(512)
+    // The 512 KiB-closure variant separates "driver dispatch floor" from
+    // "this plan could still be slimmer".
+    val jobCeiling = Drive.jobCeiling(spark, threads)
+    val jobCeilingReal = Drive.jobCeiling(spark, threads, closureKiB = 512)
     // batched serving mode — Api.batchedServer, the first-class operator
     // (graft.BatchedServer): per-request jobs pay Spark's driver-side
     // plan+schedule cost (~0.1s) regardless of data size; the serving
@@ -177,8 +117,7 @@ object Bench {
       val srv = mkServer()
       try {
         // warm the batched plan outside the timed section
-        scala.concurrent.Await.result(srv.submit(qPool(0)),
-          scala.concurrent.duration.Duration(120, "s"))
+        Await.result(srv.submit(qPool(0)), 120.seconds)
         driveOn(srv, threads, perThread, closedLoop)
       } finally srv.close()
     }
@@ -190,43 +129,10 @@ object Bench {
     // full GC — the r10 driver rerun's 2.5 s sharded-paced outlier
     // (sharded_paced_p50_ms_r2 = 2456.9) was exactly that (ADVICE r11).
     def driveOn(srv: VectorServer, threads: Int,
-        perThread: Int, closedLoop: Boolean): (Double, Array[Double]) = {
-      {
-        val pool2 = java.util.concurrent.Executors.newFixedThreadPool(threads)
-        val lats2 = new java.util.concurrent.ConcurrentLinkedQueue[Double]()
-        val t0 = System.nanoTime()
-        val fs = (0 until threads).map { t =>
-          pool2.submit(new Runnable {
-            def run(): Unit = {
-              import scala.concurrent.duration._
-              if (closedLoop) {
-                var i = 0
-                while (i < perThread) {
-                  val s0 = System.nanoTime()
-                  scala.concurrent.Await.result(
-                    srv.submit(qPool((t * perThread + i) % nQ)), 10.minutes)
-                  lats2.add((System.nanoTime() - s0) / 1e6)
-                  i += 1
-                }
-              } else {
-                val submitted = (0 until perThread).map { i =>
-                  val s0 = System.nanoTime()
-                  (srv.submit(qPool((t * perThread + i) % nQ)), s0)
-                }
-                submitted.foreach { case (f, s0) =>
-                  scala.concurrent.Await.result(f, 10.minutes)
-                  lats2.add((System.nanoTime() - s0) / 1e6)
-                }
-              }
-            }
-          })
-        }
-        try fs.foreach(_.get()) finally pool2.shutdownNow()
-        val secs = (System.nanoTime() - t0) / 1e9
-        import scala.jdk.CollectionConverters._
-        (secs, lats2.asScala.toArray.sorted)
-      }
-    }
+        perThread: Int, closedLoop: Boolean): (Double, Array[Double]) =
+      if (closedLoop) Drive.closed(threads, perThread)((_, i) =>
+        Await.result(srv.submit(qPool(i % nQ)), Drive.Timeout))
+      else Drive.burst(threads, perThread)(i => srv.submit(qPool(i % nQ)))
     def driveServer(threads: Int, perThread: Int,
         closedLoop: Boolean, replicaTier: Boolean = true): (Double, Array[Double]) =
       driveServerWith(() => Api.batchedServer(pointsPar, k = 10,
@@ -242,8 +148,7 @@ object Bench {
     // number is the MEDIAN run (by that phase's graded stat) and every
     // run's stat is recorded (_r1.._rN keys) so the spread itself is an
     // artifact: noise and regression stop being indistinguishable.
-    def p50Of(lat: Array[Double]): Double =
-      math.rint(lat(((lat.length - 1) * 0.5).toInt) * 10) / 10
+    def p50Of(lat: Array[Double]): Double = Drive.pct(lat, 0.5)
     def med3[T](runs: Seq[T])(key: T => Double): T =
       runs.sortBy(key)(Ordering.Double.TotalOrdering)(runs.length / 2)
     def runKeys(prefix: String, vals: Seq[Double]): Seq[(String, Double)] =
@@ -253,8 +158,6 @@ object Bench {
       .map(_ => driveServer(bThreads, perSubmitter, closedLoop = false))
     val (bsecs, bLatSorted) = med3(bRuns)(_._1)
     val bQpsRuns = runKeys("batch_qps", bRuns.map(r => bQ / r._1))
-    def bPct(p: Double): Double =
-      math.rint(bLatSorted(((bLatSorted.length - 1) * p).toInt) * 10) / 10
     // CLOSED-loop batched serving: 64 concurrent clients, each awaiting
     // its result before sending the next request — the realistic serving
     // latency (open-loop latency above is queue wait by construction:
@@ -266,8 +169,6 @@ object Bench {
       .map(_ => driveServer(cThreads, cPerClient, closedLoop = true))
     val (csecs, cLatSorted) = med3(cRuns)(r => p50Of(r._2))
     val cP50Runs = runKeys("batch_closed_p50_ms", cRuns.map(r => p50Of(r._2)))
-    def cPct(p: Double): Double =
-      math.rint(cLatSorted(((cLatSorted.length - 1) * p).toInt) * 10) / 10
     // PACED arrival at the reference's own rate bar (1000 ops/s): the
     // reference claims >=1000 ops/s AND <=20 ms TOGETHER; the closed/
     // open loops above each demonstrate one side. Here a dispatcher
@@ -278,8 +179,7 @@ object Bench {
         ratePerSec: Double, total: Int): Array[Double] = {
       val srv = mkServer()
       try {
-        scala.concurrent.Await.result(srv.submit(qPool(0)),
-          scala.concurrent.duration.Duration(120, "s")) // warm tier decision
+        Await.result(srv.submit(qPool(0)), 120.seconds) // warm tier decision
         drivePacedOn(srv, ratePerSec, total)
       } finally srv.close()
     }
@@ -288,51 +188,15 @@ object Bench {
     // also recorded BY SCHEDULED INDEX — arrival-ordered, so a tail can
     // be attributed to waves (adjacent slots slow together) vs isolated
     // stalls (VERDICT r11 #7).
-    def drivePacedOn(srv: VectorServer,
-        ratePerSec: Double, total: Int,
-        trace: Array[Double] = null): Array[Double] = {
-      {
-        val lats = new java.util.concurrent.ConcurrentLinkedQueue[Double]()
-        val done = new java.util.concurrent.CountDownLatch(total)
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.global
-        val interval = (1e9 / ratePerSec).toLong
-        val start = System.nanoTime() + 20000000L
-        var i = 0
-        while (i < total) {
-          val sched = start + i.toLong * interval
-          val idx = i
-          var now = System.nanoTime()
-          while (now < sched) {
-            val left = sched - now
-            if (left > 2000000L) Thread.sleep(left / 1000000L - 1)
-            now = System.nanoTime()
-          }
-          srv.submit(qPool(i % nQ)).onComplete { _ =>
-            val lat = (System.nanoTime() - sched) / 1e6
-            lats.add(lat)
-            if (trace != null) trace(idx) = lat
-            done.countDown()
-          }
-          i += 1
-        }
-        // fail loud on timeout: percentiles over a partial latency array
-        // would silently understate tail latency
-        if (!done.await(10, java.util.concurrent.TimeUnit.MINUTES))
-          sys.error(s"drivePaced: ${done.getCount} of $total responses " +
-            "still outstanding after 10 min — server wedged, aborting phase")
-        import scala.jdk.CollectionConverters._
-        lats.asScala.toArray.sorted
-      }
-    }
+    def drivePacedOn(srv: VectorServer, ratePerSec: Double, total: Int,
+        trace: Array[Double] = null): Array[Double] =
+      Drive.paced(ratePerSec, total, trace = trace)(i => srv.submit(qPool(i % nQ)))
     def drivePaced(ratePerSec: Double, total: Int): Array[Double] =
       drivePacedWith(() => Api.batchedServer(pointsPar, k = 10,
         scoreThreshold = Some(0.1)), ratePerSec, total)
     val pRuns = (1 to 3).map(_ => drivePaced(1000.0, 3000))
     val pLatSorted = med3(pRuns)(p50Of)
     val pP50Runs = runKeys("paced_p50_ms", pRuns.map(p50Of))
-    def pPct(p: Double): Double =
-      math.rint(pLatSorted(((pLatSorted.length - 1) * p).toInt) * 10) / 10
     // the same closed loop FORCED onto the Spark-job tier: the
     // replica-too-big regime, measured (VERDICT r8 #2) — a shard past
     // `localReplicaMaxRows` serves per-flush Spark jobs, paying the
@@ -345,8 +209,6 @@ object Bench {
     val (jsecs, jLatSorted) = med3(jRuns)(r => p50Of(r._2))
     val jP50Runs = runKeys("batch_closed_sparkjob_p50_ms",
       jRuns.map(r => p50Of(r._2)))
-    def jPct(p: Double): Double =
-      math.rint(jLatSorted(((jLatSorted.length - 1) * p).toInt) * 10) / 10
     // ---- the replica-too-big SHARDED tier (VERDICT r9 #1) ----
     // A collection genuinely past one replica's budget (>2^18 rows, built
     // by tiling the fixture with disjoint id ranges so every row is a
@@ -412,30 +274,21 @@ object Bench {
         // Each run also records arrival-ordered latencies + the GC time
         // inside its window, so the graded run's p99 is ATTRIBUTED
         // (waves vs isolated stalls vs GC) in the artifact (r11 #7).
-        def gcNow(): Long = {
-          import scala.jdk.CollectionConverters._
-          java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-            .asScala.map(_.getCollectionTime).sum
-        }
         val paced = (1 to 5).map { _ =>
           val trace = new Array[Double](3000)
-          val g0 = gcNow()
+          val g0 = Drive.gcMs()
           val sorted = settled(drivePacedOn(shSrv, 1000.0, 3000, trace))
-          (sorted, trace, (gcNow() - g0).toDouble)
+          (sorted, trace, (Drive.gcMs() - g0).toDouble)
         }
         (closed, s64, l64, paced)
       } finally shSrv.close()
     val (shcSecs, shcLatSorted) = med3(shcRuns)(r => p50Of(r._2))
     val shcP50Runs = runKeys("sharded_closed_p50_ms",
       shcRuns.map(r => p50Of(r._2)))
-    def shcPct(p: Double): Double =
-      math.rint(shcLatSorted(((shcLatSorted.length - 1) * p).toInt) * 10) / 10
     val shpMedianRun = med3(shpRuns)(r => p50Of(r._1))
     val shpLatSorted = shpMedianRun._1
     val shpP50Runs = runKeys("sharded_paced_p50_ms",
       shpRuns.map(r => p50Of(r._1)))
-    def shpPct(p: Double): Double =
-      math.rint(shpLatSorted(((shpLatSorted.length - 1) * p).toInt) * 10) / 10
     // p99 attribution on the GRADED (median-p50) paced run (r11 #7):
     // over-p99 requests that sit within 5 scheduled slots (5 ms) of
     // another over-p99 request are a WAVE (queue/flush alignment);
@@ -443,7 +296,7 @@ object Bench {
     // next to it — if gc_ms ≈ 0 the tail cannot be collector-induced.
     val (shpGcMs, shpTailAdj, shpWorstAtFrac) = {
       val trace = shpMedianRun._2
-      val p99 = shpPct(0.99)
+      val p99 = Drive.pct(shpLatSorted, 0.99)
       val over = trace.indices.filter(i => trace(i) > p99)
       val adj =
         if (over.length <= 1) 0.0
@@ -488,8 +341,6 @@ object Bench {
     val sRuns = (1 to 3)
       .map(_ => driveServer(1, 60, closedLoop = true, replicaTier = false))
     val (ssecs, sLatSorted) = med3(sRuns)(_._1)
-    def sPct(p: Double): Double =
-      math.rint(sLatSorted(((sLatSorted.length - 1) * p).toInt) * 10) / 10
     // the same lone client on the DEFAULT (replica-tier) server: what a
     // single interactive caller actually experiences — no job dispatch.
     // Methodology is IN the artifact (ADVICE r8): one COLD 60-request
@@ -504,8 +355,6 @@ object Bench {
     val rRuns = (1 to rSamples).map(_ => driveServer(1, rReqs, closedLoop = true))
     val (rsecs, rLatSorted) = med3(rRuns)(_._1)
     val rQpsRuns = runKeys("solo_replica_warm_qps", rRuns.map(r => rReqs / r._1))
-    def rPct(p: Double): Double =
-      math.rint(rLatSorted(((rLatSorted.length - 1) * p).toInt) * 10) / 10
     // ---- QUANTIZED (INT8) serving replica (VERDICT r13 #3): the same
     // lone-client protocol on a server whose replica serves phase 1 from
     // the int8 byte slab (8× smaller than the float slab — the
@@ -529,8 +378,6 @@ object Bench {
     val i8Runs = (1 to rSamples).map(_ => driveServerInt8(1, rReqs))
     val (i8secs, i8LatSorted) = med3(i8Runs)(_._1)
     val i8QpsRuns = runKeys("replica_int8_qps", i8Runs.map(r => rReqs / r._1))
-    def i8Pct(p: Double): Double =
-      math.rint(i8LatSorted(((i8LatSorted.length - 1) * p).toInt) * 10) / 10
     val (i8FloatBytes, i8CodeBytes, i8Decision) = {
       val srv = Api.batchedServer(pointsPar, k = 10,
         scoreThreshold = Some(0.1), recallTarget = Some(servingTarget))
@@ -546,58 +393,60 @@ object Bench {
       spark.sparkContext.hadoopConfiguration)
       .delete(new org.apache.hadoop.fs.Path(ingestDest), true)
     val allRows = graft.operators.Collection.load(spark, sfDir)
-    val ti0 = System.nanoTime()
-    graft.sources.CollectionStore.mergeBucketed(spark, ingestDest, allRows, 16)
-    graft.sources.CollectionStore.mergeBucketed(spark, ingestDest,
-      allRows.filter(col("id") % 16 === 3), 16) // incremental single-bucket merge
-    val isecs = (System.nanoTime() - ti0) / 1e9
+    val (_, isecs) = Drive.timed {
+      graft.sources.CollectionStore.mergeBucketed(spark, ingestDest, allRows, 16)
+      graft.sources.CollectionStore.mergeBucketed(spark, ingestDest,
+        allRows.filter(col("id") % 16 === 3), 16) // incremental single-bucket merge
+    }
     val ingested = n + n / 16
     points.unpersist()
     pointsPar.unpersist()
     Map("threads" -> threads.toDouble,
-      "queries" -> done.get().toDouble,
+      "queries" -> nReq.toDouble,
       "seconds" -> math.rint(secs * 1000) / 1000,
-      "qps" -> math.rint(done.get() / secs * 10) / 10,
-      "lat_p50_ms" -> pct(0.50), "lat_p95_ms" -> pct(0.95),
-      "lat_p99_ms" -> pct(0.99),
-      "direct_qps" -> math.rint(done.get() / dsecs * 10) / 10,
-      "direct_p50_ms" -> dPctF(0.50), "direct_p99_ms" -> dPctF(0.99),
-      "prepared_qps" -> math.rint(done.get() / psecs * 10) / 10,
-      "prepared_p50_ms" -> prPctF(0.50), "prepared_p99_ms" -> prPctF(0.99),
+      "qps" -> math.rint(nReq / secs * 10) / 10,
+      "lat_p50_ms" -> Drive.pct(sortedLat, 0.50),
+      "lat_p95_ms" -> Drive.pct(sortedLat, 0.95),
+      "lat_p99_ms" -> Drive.pct(sortedLat, 0.99),
+      "direct_qps" -> math.rint(nReq / dsecs * 10) / 10,
+      "direct_p50_ms" -> Drive.pct(dLat, 0.50),
+      "direct_p99_ms" -> Drive.pct(dLat, 0.99),
+      "prepared_qps" -> math.rint(nReq / psecs * 10) / 10,
+      "prepared_p50_ms" -> Drive.pct(prepLat, 0.50),
+      "prepared_p99_ms" -> Drive.pct(prepLat, 0.99),
       "job_ceiling_jobs_per_sec" -> jobCeiling,
       "job_ceiling_512k_closure_jobs_per_sec" -> jobCeilingReal,
       "batch_queries" -> bQ.toDouble,
       "batch_seconds" -> math.rint(bsecs * 1000) / 1000,
       "batch_qps" -> math.rint(bQ / bsecs * 10) / 10,
-      "batch_lat_p50_ms" -> bPct(0.50), "batch_lat_p99_ms" -> bPct(0.99),
+      "batch_lat_p50_ms" -> Drive.pct(bLatSorted, 0.50), "batch_lat_p99_ms" -> Drive.pct(bLatSorted, 0.99),
       "batch_closed_clients" -> cThreads.toDouble,
       "batch_closed_qps" ->
         math.rint(cThreads * cPerClient / csecs * 10) / 10,
-      "batch_closed_p50_ms" -> cPct(0.50),
-      "batch_closed_p99_ms" -> cPct(0.99),
+      "batch_closed_p50_ms" -> Drive.pct(cLatSorted, 0.50),
+      "batch_closed_p99_ms" -> Drive.pct(cLatSorted, 0.99),
       "batch_closed_sparkjob_qps" ->
         math.rint(cThreads * cPerClient / jsecs * 10) / 10,
       "paced_rate_qps" -> 1000.0,
-      "paced_p50_ms" -> pPct(0.50),
-      "paced_p99_ms" -> pPct(0.99),
-      "batch_closed_sparkjob_p50_ms" -> jPct(0.50),
-      "batch_closed_sparkjob_p99_ms" -> jPct(0.99),
+      "paced_p50_ms" -> Drive.pct(pLatSorted, 0.50),
+      "paced_p99_ms" -> Drive.pct(pLatSorted, 0.99),
+      "batch_closed_sparkjob_p50_ms" -> Drive.pct(jLatSorted, 0.50),
+      "batch_closed_sparkjob_p99_ms" -> Drive.pct(jLatSorted, 0.99),
       "sharded_rows" -> bigN.toDouble,
       "sharded_shards" -> shardCount.toDouble,
       "sharded_shard_max_rows" -> shardMaxRows.toDouble,
       "sharded_closed_clients" -> shClients.toDouble,
       "sharded_closed_qps" ->
         math.rint(shClients * cPerClient / shcSecs * 10) / 10,
-      "sharded_closed_p50_ms" -> shcPct(0.50),
-      "sharded_closed_p99_ms" -> shcPct(0.99),
+      "sharded_closed_p50_ms" -> Drive.pct(shcLatSorted, 0.50),
+      "sharded_closed_p99_ms" -> Drive.pct(shcLatSorted, 0.99),
       "sharded_closed64_clients" -> cThreads.toDouble,
       "sharded_closed64_qps" ->
         math.rint(cThreads * cPerClient / shc64Secs * 10) / 10,
-      "sharded_closed64_p50_ms" ->
-        math.rint(shc64Lat(((shc64Lat.length - 1) * 0.5).toInt) * 10) / 10,
+      "sharded_closed64_p50_ms" -> Drive.pct(shc64Lat, 0.5),
       "sharded_paced_rate_qps" -> 1000.0,
-      "sharded_paced_p50_ms" -> shpPct(0.50),
-      "sharded_paced_p99_ms" -> shpPct(0.99),
+      "sharded_paced_p50_ms" -> Drive.pct(shpLatSorted, 0.50),
+      "sharded_paced_p99_ms" -> Drive.pct(shpLatSorted, 0.99),
       // p99 attribution for the graded paced run (VERDICT r11 #7):
       // gc_ms = collector time inside the 3 s window; tail_adjacency =
       // fraction of over-p99 requests within 5 scheduled slots of
@@ -608,17 +457,17 @@ object Bench {
       "sharded_paced_tail_adjacency" -> shpTailAdj,
       "sharded_paced_worst_at_frac" -> shpWorstAtFrac,
       "solo_template_qps" -> math.rint(60 / ssecs * 10) / 10,
-      "solo_template_p50_ms" -> sPct(0.50),
-      "solo_template_p99_ms" -> sPct(0.99),
+      "solo_template_p50_ms" -> Drive.pct(sLatSorted, 0.50),
+      "solo_template_p99_ms" -> Drive.pct(sLatSorted, 0.99),
       "solo_replica_cold_qps" -> math.rint(60 / coldSecs * 10) / 10,
       "solo_replica_warm_samples" -> rSamples.toDouble,
       "solo_replica_warm_reqs_per_sample" -> rReqs.toDouble,
       "solo_replica_warm_qps" -> math.rint(rReqs / rsecs * 10) / 10,
-      "solo_replica_warm_p50_ms" -> rPct(0.50),
-      "solo_replica_warm_p99_ms" -> rPct(0.99),
+      "solo_replica_warm_p50_ms" -> Drive.pct(rLatSorted, 0.50),
+      "solo_replica_warm_p99_ms" -> Drive.pct(rLatSorted, 0.99),
       "replica_int8_qps" -> math.rint(rReqs / i8secs * 10) / 10,
-      "replica_int8_p50_ms" -> i8Pct(0.50),
-      "replica_int8_p99_ms" -> i8Pct(0.99),
+      "replica_int8_p50_ms" -> Drive.pct(i8LatSorted, 0.50),
+      "replica_int8_p99_ms" -> Drive.pct(i8LatSorted, 0.99),
       "replica_int8_slab_mb" -> math.rint(i8CodeBytes / 1e5) / 10,
       "replica_float_slab_mb" -> math.rint(i8FloatBytes / 1e5) / 10,
       // the calibrated serving decision the rows above were served under
@@ -934,15 +783,8 @@ object Bench {
   }
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Drive.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"),
+      "spark.sql.adaptive.enabled" -> "true")
     // dev knob: SPARK_GRAFT_PHASE=qps runs ONLY the serving phase (local
     // iteration on serving latency without the 127-query sweep)
     if (sys.env.get("SPARK_GRAFT_PHASE").contains("qps")) {
@@ -968,8 +810,7 @@ object Bench {
     // box-state sample across the whole run (r16): hypervisor steal and
     // loadavg ride the artifact so a load-vs-code adjudication is a
     // number in the JSON, not a re-capture protocol (PLANS_r15 §0)
-    val boxJ0 = CrossProc.cpuJiffies()
-    val boxLoad0 = CrossProc.loadAvg()
+    val boxLoad0 = Drive.loadAvg()
     // SERVING PHASES FIRST (r16): the qps/cross-proc drives used to run
     // AFTER the ~13-minute full-width query sweep, grading the serving
     // tiers on a thermally/power-depleted box — in-suite full-scan
@@ -980,55 +821,64 @@ object Bench {
     // serving tiers' claim is steady-state throughput on an otherwise
     // idle node; measure them from the cold box, then run the sweep.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val qpsMap = try {
-      if (only.isDefined) Map.empty[String, Double]
-      else qpsPhase(spark, sfDir)
-    } catch { case _: Throwable => Map.empty[String, Double] }
-    // warmup: run the flagship once at the smallest scale (class loading,
-    // codegen compilation, parquet footer caches)
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
-    // MEDIAN-of-3 per query after one discarded warmup (VERDICT r8 #1):
-    // the warmup run absorbs codegen compilation and relation-cache
-    // fills; the median of the three timed runs is robust to a one-off
-    // GC/scheduler stall in either direction, where best-of-N grades the
-    // luckiest run and a single sample cannot tell noise from
-    // regression. All three timed runs ship in the full artifact
-    // (`queries_runs`) so spread is adjudicable round over round.
-    // `only` (the comma-separated query-name filter for local iteration)
-    // is defined above the qps phase
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (name, fn) =>
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        (System.nanoTime() - t0) / 1e9
+    val ((qpsMap, results, recallMap), steal) = Drive.withSteal {
+      val qpsMap = try {
+        if (only.isDefined) Map.empty[String, Double]
+        else qpsPhase(spark, sfDir)
+      } catch { case _: Throwable => Map.empty[String, Double] }
+      // warmup: run the flagship once at the smallest scale (class loading,
+      // codegen compilation, parquet footer caches)
+      try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
+      // MEDIAN-of-3 per query after one discarded warmup (VERDICT r8 #1):
+      // the warmup run absorbs codegen compilation and relation-cache
+      // fills; the median of the three timed runs is robust to a one-off
+      // GC/scheduler stall in either direction, where best-of-N grades the
+      // luckiest run and a single sample cannot tell noise from
+      // regression. All three timed runs ship in the full artifact
+      // (`queries_runs`) so spread is adjudicable round over round.
+      // `only` (the comma-separated query-name filter for local iteration)
+      // is defined above the qps phase
+      val results = SparkEntry.queries.toSeq.sortBy(_._1)
+        .filter { case (name, _) => only.forall(_.contains(name)) }
+        .map { case (name, fn) =>
+        def once(): Double = Drive.timed {
+          try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+        }._2
+        once() // discarded warmup
+        // SPARK_GRAFT_RUNS: timed-run count override for the sf100 scale
+        // campaign, where a single heavy query runs for tens of minutes
+        // and the exponent claim needs magnitude, not median-of-3
+        // precision (graded per-round runs keep the default 3)
+        val nRuns = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt
+        // even-count medians average the two middle runs (ADVICE r12: the
+        // upper-middle pick graded the SLOWER run at SPARK_GRAFT_RUNS=2)
+        def median(xs: Seq[Double]): Double = {
+          val s = xs.sorted
+          if (s.length % 2 == 1) s(s.length / 2)
+          else (s(s.length / 2 - 1) + s(s.length / 2)) / 2
+        }
+        val times3 = (1 to nRuns).map(_ => once())
+        val med3 = median(times3)
+        // ADAPTIVE N=5 for the volatile tail (VERDICT r9 #4): when the
+        // 3-run spread exceeds 15% of the median on a non-trivial query,
+        // two more timed runs tighten the graded median — the same-code
+        // rerun swing (curate_corpus_incremental & co.) stops flipping
+        // round-over-round comparisons. All runs ship in queries_runs.
+        val times =
+          if (med3 > 0.2 && (times3.max - times3.min) / med3 > 0.15)
+            times3 ++ (1 to 2).map(_ => once())
+          else times3
+        (name, median(times), times)
       }
-      once() // discarded warmup
-      // SPARK_GRAFT_RUNS: timed-run count override for the sf100 scale
-      // campaign, where a single heavy query runs for tens of minutes
-      // and the exponent claim needs magnitude, not median-of-3
-      // precision (graded per-round runs keep the default 3)
-      val nRuns = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt
-      // even-count medians average the two middle runs (ADVICE r12: the
-      // upper-middle pick graded the SLOWER run at SPARK_GRAFT_RUNS=2)
-      def median(xs: Seq[Double]): Double = {
-        val s = xs.sorted
-        if (s.length % 2 == 1) s(s.length / 2)
-        else (s(s.length / 2 - 1) + s(s.length / 2)) / 2
-      }
-      val times3 = (1 to nRuns).map(_ => once())
-      val med3 = median(times3)
-      // ADAPTIVE N=5 for the volatile tail (VERDICT r9 #4): when the
-      // 3-run spread exceeds 15% of the median on a non-trivial query,
-      // two more timed runs tighten the graded median — the same-code
-      // rerun swing (curate_corpus_incremental & co.) stops flipping
-      // round-over-round comparisons. All runs ship in queries_runs.
-      val times =
-        if (med3 > 0.2 && (times3.max - times3.min) / med3 > 0.15)
-          times3 ++ (1 to 2).map(_ => once())
-        else times3
-      (name, median(times), times)
+      // recall@10 of every approximate path vs exact at this scale — guards
+      // against index-parameter changes silently trading recall for speed.
+      // (Skipped under a query-name filter: ONLY runs are local iteration
+      // on specific queries; the phases belong to full measurement runs.)
+      val recall = try {
+        if (only.isDefined) Map.empty[String, Double]
+        else RecallReport.report(spark, sfDir)
+      } catch { case _: Throwable => Map.empty[String, Double] }
+      (qpsMap, results, recall)
     }
     val qs = results.map { case (k, v, _) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
@@ -1036,14 +886,7 @@ object Bench {
       "\"" + k + "\":[" + ts.mkString(",") + "]" }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
-    // recall@10 of every approximate path vs exact at this scale — guards
-    // against index-parameter changes silently trading recall for speed.
-    // (Skipped under a query-name filter: ONLY runs are local iteration
-    // on specific queries; the phases belong to full measurement runs.)
-    val recall = (try {
-      if (only.isDefined) Map.empty[String, Double]
-      else RecallReport.report(spark, sfDir)
-    } catch { case _: Throwable => Map.empty[String, Double] })
+    val recall = recallMap
       .toSeq.sortBy(_._1)
       .map { case (m, r) => "\"" + m + "\":" + math.rint(r * 1000) / 1000 }
       .mkString("{", ",", "}")
@@ -1055,15 +898,10 @@ object Bench {
     // explicit pass/fail vs the reference's self-evaluation targets
     val targets = targetsJson(qpsMap)
     val box = {
-      val j1 = CrossProc.cpuJiffies()
-      val dt = j1._2 - boxJ0._2
-      val steal =
-        if (dt <= 0) -1.0
-        else math.rint(10000.0 * (j1._1 - boxJ0._1) / dt) / 100
       // phase_order marks the r16 ordering change in-artifact: pre-r16
       // captures ran the sweep FIRST, so cross-round sweep comparisons
       // know which thermal regime each artifact's queries ran under
-      s"""{"steal_pct":$steal,"load_start":$boxLoad0,"load_end":${CrossProc.loadAvg()},"phase_order":"qps_first"}"""
+      s"""{"steal_pct":$steal,"load_start":$boxLoad0,"load_end":${Drive.loadAvg()},"phase_order":"qps_first"}"""
     }
     val line =
       s"""{"metric":"total","value":$total,"unit":"sec","box":$box,"queries":$qs,"queries_runs":$qRuns,"recall":$recall,"qps":$qps,"targets":$targets,"sf":"$sfDir"}"""

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import scala.concurrent.duration._
+
 /** Cross-process sharded serving (VERDICT r11 #8): hand each hash-shard
   * of a replica-too-big collection to a WORKER JVM as a slab file and
   * drive the [[RemoteShardedRouter]] scatter-gather over real sockets —
@@ -85,27 +87,6 @@ object CrossProc {
       cents
     } finally pool.shutdownNow()
   }
-
-  /** (steal, total) jiffies from /proc/stat's aggregate cpu line — the
-    * box-state sample that makes load-vs-code adjudication a NUMBER in
-    * the artifact instead of a re-capture protocol: on a shared host,
-    * hypervisor steal during a drive window is the difference between a
-    * 2.3k-QPS and a 600-QPS capture of identical code (measured r16).
-    * (0,0) when /proc/stat is unavailable (non-Linux). */
-  private[graft] def cpuJiffies(): (Long, Long) = try {
-    val src = scala.io.Source.fromFile("/proc/stat")
-    try {
-      val f = src.getLines().next().trim.split("\\s+")
-      val nums = f.drop(1).map(_.toLong)
-      (if (nums.length > 7) nums(7) else 0L, nums.sum)
-    } finally src.close()
-  } catch { case _: Throwable => (0L, 0L) }
-
-  /** 1-minute loadavg, -1 when unavailable. */
-  private[graft] def loadAvg(): Double = try {
-    val src = scala.io.Source.fromFile("/proc/loadavg")
-    try src.getLines().next().split(" ")(0).toDouble finally src.close()
-  } catch { case _: Throwable => -1.0 }
 
   /** Nearest-cell index per row (round6 dot desc, cid asc — the
     * store-side ivfAssign tie rule), parallel over a local pool. */
@@ -520,8 +501,6 @@ object CrossProc {
           case None => (graphLadder.max, 0.0)
         }
       }
-    val javaBin = System.getProperty("java.home") + "/bin/java"
-    val cp = System.getProperty("java.class.path")
     val basePort = 42800 + (System.nanoTime() % 100).toInt
     val workerThreads = math.max(4,
       Runtime.getRuntime.availableProcessors / nShards)
@@ -548,33 +527,17 @@ object CrossProc {
         else if (int8) Seq("20", s"$slab.i8", "", "0",
           effOversample.toString)
         else Seq.empty
-      val args = Seq(javaBin, "--add-modules=jdk.incubator.vector",
-        s"-Xmx$workerXmx", "-cp", cp, "graft.ShardWorker", slab,
+      Drive.spawnWorker(workerXmx, Seq(slab,
         (basePort + i).toString, k.toString, th.toString,
-        workerThreads.toString, stall.toString) ++ tailArgs
-      import scala.jdk.CollectionConverters._
-      new ProcessBuilder(args.asJava)
-        .redirectOutput(new java.io.File(s"$dir/worker_$i.log"))
-        .redirectErrorStream(true)
-        .start()
+        workerThreads.toString, stall.toString) ++ tailArgs,
+        new java.io.File(s"$dir/worker_$i.log"))
     }
     // success flag for the cleanup path: set only when the full
     // measurement completed (worker logs are kept on failure)
     var ok: Option[Map[String, Double]] = None
     try {
-      // wait for readiness: retry the router handshake
       val addrs = (0 until nShards).map(i => ("127.0.0.1", basePort + i))
-      var router: RemoteShardedRouter = null
-      var tries = 0
-      while (router == null) {
-        try router = new RemoteShardedRouter(addrs, k)
-        catch {
-          case e: java.io.IOException =>
-            tries += 1
-            if (tries > 120) throw e
-            Thread.sleep(500)
-        }
-      }
+      val router = Drive.whenUp(new RemoteShardedRouter(addrs, k))
       try {
         router.ping()
         // correctness: float router ≡ solo exact knn on 3 spread queries;
@@ -689,17 +652,12 @@ object CrossProc {
           }
         // IPC floor
         (0 until 200).foreach(_ => router.ping())
-        val pings = (0 until 1000).map { _ =>
-          val t0 = System.nanoTime(); router.ping()
-          (System.nanoTime() - t0) / 1e6
-        }.sorted.toIndexedSeq
+        val (_, pings) = Drive.closed(1, 1000)((_, _) => router.ping())
         // JIT/GC warm for router AND workers before the timed drives
         (0 until 600).foreach(i => router.search(qPool(i % nQ)))
-        def pct(xs: IndexedSeq[Double], p: Double): Double =
-          math.rint(xs(((xs.length - 1) * p).toInt) * 1000) / 1000
+        def pct(xs: Array[Double], p: Double): Double = Drive.pct(xs, p, 1000)
         val closedClients = 32
         val perClient = 100
-        import scala.jdk.CollectionConverters._
         // MEDIAN-OF-3 drives (r16): a single closed/paced capture is
         // hostage to whatever the box does during its 3-8 s window —
         // same-code spreads of 300× were observed on the paced row under
@@ -710,49 +668,20 @@ object CrossProc {
         // searchFn-parameterized drives: the filtered phases grade
         // router.searchFiltered through the SAME closed/paced machinery
         def runClosed(searchFn: Int => Unit): (Double, Double, Double) = {
-          val lats = new java.util.concurrent.ConcurrentLinkedQueue[Double]()
-          val pool = java.util.concurrent.Executors.newFixedThreadPool(closedClients)
-          val t0 = System.nanoTime()
-          val fs = (0 until closedClients).map { c =>
-            pool.submit(new Runnable { def run(): Unit = {
-              var i = 0
-              while (i < perClient) {
-                val s0 = System.nanoTime()
-                searchFn(c * perClient + i)
-                lats.add((System.nanoTime() - s0) / 1e6)
-                i += 1
-              }
-            }})
-          }
-          fs.foreach(_.get()); pool.shutdownNow()
-          val closedSecs = (System.nanoTime() - t0) / 1e9
-          val cl = lats.asScala.toIndexedSeq.sorted
+          val (closedSecs, cl) =
+            Drive.closed(closedClients, perClient)((_, i) => searchFn(i))
           (math.rint(closedClients * perClient / closedSecs * 10) / 10,
             pct(cl, 0.5), pct(cl, 0.99))
         }
-        // paced 1000 QPS, p50/p99 from SCHEDULED arrival
+        // paced 1000 QPS, p50/p99 from SCHEDULED arrival; 64 request
+        // threads, 2 min for the stragglers
         val paceQps = 1000
         val paceN = 5000
+        def paced(searchFn: Int => Unit): Array[Double] =
+          Drive.pacedBlocking(paceQps, paceN, workers = 64,
+            timeout = 2.minutes)(searchFn)
         def runPaced(searchFn: Int => Unit): (Double, Double) = {
-          val pLats = new java.util.concurrent.ConcurrentLinkedQueue[Double]()
-          val ppool = java.util.concurrent.Executors.newFixedThreadPool(64)
-          val start = System.nanoTime()
-          (0 until paceN).foreach { i =>
-            val due = start + i * (1000000000L / paceQps)
-            var now = System.nanoTime()
-            while (now < due) {
-              val ns = due - now
-              if (ns > 2000000) Thread.sleep(ns / 2000000) else Thread.onSpinWait()
-              now = System.nanoTime()
-            }
-            ppool.submit(new Runnable { def run(): Unit = {
-              searchFn(i)
-              pLats.add((System.nanoTime() - due) / 1e6)
-            }})
-          }
-          ppool.shutdown()
-          ppool.awaitTermination(120, java.util.concurrent.TimeUnit.SECONDS)
-          val pl = pLats.asScala.toIndexedSeq.sorted
+          val pl = paced(searchFn)
           (pct(pl, 0.5), pct(pl, 0.99))
         }
         def med(xs: Seq[Double]): Double = xs.sorted.apply(xs.length / 2)
@@ -760,14 +689,9 @@ object CrossProc {
         // window: (qps, closedP50, closedP99, pacedP50, pacedP99, steal)
         def driveSet(searchFn: Int => Unit)
             : (Double, Double, Double, Double, Double, Double) = {
-          val j0 = cpuJiffies()
-          val closedRuns = IndexedSeq.fill(3)(runClosed(searchFn))
-          val pacedRuns = IndexedSeq.fill(3)(runPaced(searchFn))
-          val j1 = cpuJiffies()
-          val dt = j1._2 - j0._2
-          val steal =
-            if (dt <= 0) -1.0
-            else math.rint(10000.0 * (j1._1 - j0._1) / dt) / 100
+          val ((closedRuns, pacedRuns), steal) = Drive.withSteal(
+            (IndexedSeq.fill(3)(runClosed(searchFn)),
+              IndexedSeq.fill(3)(runPaced(searchFn))))
           (med(closedRuns.map(_._1)), med(closedRuns.map(_._2)),
             med(closedRuns.map(_._3)), med(pacedRuns.map(_._1)),
             med(pacedRuns.map(_._2)), steal)
@@ -885,41 +809,24 @@ object CrossProc {
             "crossproc_filtered_broad_paced_p99_ms" -> broadSet._5,
             "crossproc_filtered_broad_drive_steal_pct" -> broadSet._6)
         }
-        // the POLICY arcs (deadline + hedged paced drives below) get
-        // their own steal window so their latency rows keep box-state
-        // evidence too (the drive gate covers only closed+paced)
-        val policyJ0 = cpuJiffies()
-        // deadline + hedged phases: the straggler-policy arcs — run on
+        // deadline + hedged phases: the straggler-policy arcs, in their
+        // own steal window so their latency rows keep box-state evidence
+        // too (the drive gate covers only closed+paced) — run on
         // the float tier only (the int8 probe grades the quantized
         // kernel + slab economics; policy arcs are tier-independent)
-        val tailPhases: Map[String, Double] = if (int8 || ivf || graph) Map.empty else {
+        val (tailPhases, policySteal) = Drive.withSteal[Map[String, Double]](
+            if (int8 || ivf || graph) Map.empty else {
           // DEADLINE path (searchPartial, PLANS_r13 §3): the same paced
           // drive with a 20 ms per-request gather deadline — the tail is
           // bounded by construction at the cost of (1 − complete_rate)
           // degraded-but-exact-subset answers; both shipped so the
           // trade is visible next to the blocking path's p99.
           val deadlineMs = 20L
-          val dLats = new java.util.concurrent.ConcurrentLinkedQueue[Double]()
           val dIncomplete = new java.util.concurrent.atomic.AtomicLong(0)
-          val dpool = java.util.concurrent.Executors.newFixedThreadPool(64)
-          val dstart = System.nanoTime()
-          (0 until paceN).foreach { i =>
-            val due = dstart + i * (1000000000L / paceQps)
-            var now = System.nanoTime()
-            while (now < due) {
-              val ns = due - now
-              if (ns > 2000000) Thread.sleep(ns / 2000000) else Thread.onSpinWait()
-              now = System.nanoTime()
-            }
-            dpool.submit(new Runnable { def run(): Unit = {
-              val r = router.searchPartial(qPool(i % nQ), deadlineMs)
-              if (!r.complete) dIncomplete.incrementAndGet()
-              dLats.add((System.nanoTime() - due) / 1e6)
-            }})
+          val dl = paced { i =>
+            val r = router.searchPartial(qPool(i % nQ), deadlineMs)
+            if (!r.complete) dIncomplete.incrementAndGet()
           }
-          dpool.shutdown()
-          dpool.awaitTermination(120, java.util.concurrent.TimeUnit.SECONDS)
-          val dl = dLats.asScala.toIndexedSeq.sorted
           // HEDGE-THEN-DEGRADE path (searchHedged, VERDICT r13 #4 + r14
           // #8): the same paced drive with a duplicate send to any shard
           // still silent after `hedgeMs` (a p95-ish fraction of the
@@ -937,50 +844,34 @@ object CrossProc {
             "GRAFT_XPROC_HEDGE_DEADLINE_MS", "20").toLong
           val hedgeBudget = sys.env.getOrElse("GRAFT_XPROC_HEDGE_BUDGET",
             RemoteShardedRouter.HedgeBudgetFraction.toString).toDouble
-          val hLats = new java.util.concurrent.ConcurrentLinkedQueue[Double]()
           val hIncomplete = new java.util.concurrent.atomic.AtomicLong(0)
           val hSent = new java.util.concurrent.atomic.AtomicLong(0)
           val hWins = new java.util.concurrent.atomic.AtomicLong(0)
-          val hpool = java.util.concurrent.Executors.newFixedThreadPool(64)
-          val hstart = System.nanoTime()
-          (0 until paceN).foreach { i =>
-            val due = hstart + i * (1000000000L / paceQps)
-            var now = System.nanoTime()
-            while (now < due) {
-              val ns = due - now
-              if (ns > 2000000) Thread.sleep(ns / 2000000) else Thread.onSpinWait()
-              now = System.nanoTime()
-            }
-            hpool.submit(new Runnable { def run(): Unit = {
-              val r = router.searchHedged(qPool(i % nQ), hedgeMs,
-                hedgeDeadlineMs, budgetFraction = hedgeBudget)
-              if (!r.complete) hIncomplete.incrementAndGet()
-              hSent.addAndGet(r.hedgesSent)
-              hWins.addAndGet(r.hedgeWins)
-              hLats.add((System.nanoTime() - due) / 1e6)
-            }})
+          val hl = paced { i =>
+            val r = router.searchHedged(qPool(i % nQ), hedgeMs,
+              hedgeDeadlineMs, budgetFraction = hedgeBudget)
+            if (!r.complete) hIncomplete.incrementAndGet()
+            hSent.addAndGet(r.hedgesSent)
+            hWins.addAndGet(r.hedgeWins)
           }
-          hpool.shutdown()
-          hpool.awaitTermination(120, java.util.concurrent.TimeUnit.SECONDS)
-          val hl = hLats.asScala.toIndexedSeq.sorted
-  Map(
-          "crossproc_deadline_ms" -> deadlineMs.toDouble,
-          "crossproc_deadline_paced_p50_ms" -> pct(dl, 0.5),
-          "crossproc_deadline_paced_p99_ms" -> pct(dl, 0.99),
-          "crossproc_deadline_complete_rate" ->
-            math.rint((1.0 - dIncomplete.get().toDouble / paceN) * 10000) / 10000,
-          "crossproc_hedge_after_ms" -> hedgeMs.toDouble,
-          "crossproc_hedge_deadline_ms" -> hedgeDeadlineMs.toDouble,
-          "crossproc_hedge_budget" -> hedgeBudget,
-          "crossproc_hedged_paced_p50_ms" -> pct(hl, 0.5),
-          "crossproc_hedged_paced_p99_ms" -> pct(hl, 0.99),
-          "crossproc_hedged_complete_rate" ->
-            math.rint((1.0 - hIncomplete.get().toDouble / paceN) * 10000) / 10000,
-          "crossproc_hedge_rate" ->
-            math.rint(hSent.get().toDouble / paceN * 10000) / 10000,
-          "crossproc_hedge_win_rate" -> (if (hSent.get() == 0) 0.0 else
-            math.rint(hWins.get().toDouble / hSent.get() * 10000) / 10000))
-        }
+          Map(
+            "crossproc_deadline_ms" -> deadlineMs.toDouble,
+            "crossproc_deadline_paced_p50_ms" -> pct(dl, 0.5),
+            "crossproc_deadline_paced_p99_ms" -> pct(dl, 0.99),
+            "crossproc_deadline_complete_rate" ->
+              math.rint((1.0 - dIncomplete.get().toDouble / paceN) * 10000) / 10000,
+            "crossproc_hedge_after_ms" -> hedgeMs.toDouble,
+            "crossproc_hedge_deadline_ms" -> hedgeDeadlineMs.toDouble,
+            "crossproc_hedge_budget" -> hedgeBudget,
+            "crossproc_hedged_paced_p50_ms" -> pct(hl, 0.5),
+            "crossproc_hedged_paced_p99_ms" -> pct(hl, 0.99),
+            "crossproc_hedged_complete_rate" ->
+              math.rint((1.0 - hIncomplete.get().toDouble / paceN) * 10000) / 10000,
+            "crossproc_hedge_rate" ->
+              math.rint(hSent.get().toDouble / paceN * 10000) / 10000,
+            "crossproc_hedge_win_rate" -> (if (hSent.get() == 0) 0.0 else
+              math.rint(hWins.get().toDouble / hSent.get() * 10000) / 10000))
+        })
         val int8Extras: Map[String, Double] =
           (if (!int8) Map.empty[String, Double]
           else Map(
@@ -1032,12 +923,7 @@ object CrossProc {
           // (and which window it kept — see the retried encoding above)
           "crossproc_drive_steal_pct" -> driveSteal,
           "crossproc_drive_retried" -> retried,
-          "crossproc_policy_steal_pct" -> {
-            val j1 = cpuJiffies()
-            val dt = j1._2 - policyJ0._2
-            if (dt <= 0) -1.0
-            else math.rint(10000.0 * (j1._1 - policyJ0._1) / dt) / 100
-          },
+          "crossproc_policy_steal_pct" -> policySteal,
           "crossproc_stall_ms" -> stallMs.toDouble)
           ++ tailPhases ++ int8Extras ++ filteredPhases)
           .map { case (key, v) => key.replaceFirst("crossproc", P) -> v }
@@ -1144,19 +1030,12 @@ object CrossProcProbe {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // the slab handoff collects whole shards to the driver (the
-      // deliberate replica-tier shape); the ivf-scale sweep's 8× point
-      // is a 2.1M-row single shard ≈ 1.1 GB of task results — over the
-      // 1 GB default cap
-      .config("spark.driver.maxResultSize", "8g")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the slab handoff collects whole shards to the driver (the
+    // deliberate replica-tier shape); the ivf-scale sweep's 8× point is a
+    // 2.1M-row single shard ≈ 1.1 GB of task results — over the 1 GB
+    // default cap
+    val spark = Drive.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"),
+      "spark.driver.maxResultSize" -> "8g")
     val points = graft.operators.Collection.load(spark, sfDir)
     val n = points.count()
     val shardMaxRows = BatchedServer.DefaultReplicaMaxRows

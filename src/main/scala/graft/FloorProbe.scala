@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** One-off dispatch-floor experiment (VERDICT r9 #7): measure the bare
   * per-job latency of a 1-task and 8-task collect over a pinned
   * in-memory RDD under FIFO vs FAIR scheduling, single client and 4
@@ -7,34 +6,10 @@ import org.apache.spark.sql.SparkSession
 object FloorProbe {
   def main(args: Array[String]): Unit = {
     val mode = sys.env.getOrElse("SCHED", "FIFO")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.scheduler.mode", mode)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val sc = spark.sparkContext
-    for (parts <- Seq(1, 8)) {
-      val rdd = sc.parallelize(1 to 1000, parts).cache()
-      rdd.count()
-      for (_ <- 1 to 50) rdd.count() // warm
-      for (clients <- Seq(1, 4)) {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(clients)
-        val lats = new java.util.concurrent.ConcurrentLinkedQueue[Double]()
-        val fs = (0 until clients).map { _ =>
-          pool.submit(new Runnable { def run(): Unit = {
-            var i = 0
-            while (i < 100) {
-              val t0 = System.nanoTime()
-              rdd.count()
-              lats.add((System.nanoTime() - t0) / 1e6); i += 1
-            }
-          }})
-        }
-        fs.foreach(_.get()); pool.shutdownNow()
-        import scala.jdk.CollectionConverters._
-        val l = lats.asScala.toArray.sorted
-        println(f"[floor] mode=$mode parts=$parts clients=$clients p50=${l(l.length / 2)}%.1f ms p99=${l((l.length * 0.99).toInt)}%.1f ms")
-      }
+    val spark = Drive.session("32", "spark.scheduler.mode" -> mode)
+    for (parts <- Seq(1, 8); clients <- Seq(1, 4)) {
+      val (_, l) = Drive.pinnedJobs(spark, clients, 100, parts = parts)
+      println(f"[floor] mode=$mode parts=$parts clients=$clients p50=${Drive.pct(l, 0.5)}%.1f ms p99=${Drive.pct(l, 0.99)}%.1f ms")
     }
     spark.stop()
   }

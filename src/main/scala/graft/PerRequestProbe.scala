@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 /** One-off per-request-tier breakdown (VERDICT r11 #2): the naive
@@ -23,17 +22,10 @@ import org.apache.spark.sql.functions.col
 object PerRequestProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val warm = sys.env.getOrElse("GRAFT_PRQ_WARM", "1").toInt
     val aqe = sys.env.getOrElse("GRAFT_PRQ_AQE", "true")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", aqe)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Drive.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"),
+      "spark.sql.adaptive.enabled" -> aqe)
     import spark.implicits._
     val points = graft.operators.Collection.load(spark, sfDir)
       .coalesce(1).cache()
@@ -41,11 +33,6 @@ object PerRequestProbe {
     val qPool = points.orderBy("id").limit(400)
       .select("embedding").collect().map(_.getSeq[Double](0))
     val nQ = qPool.length
-    def gcMs(): Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(_.getCollectionTime).sum
-    }
     val form = sys.env.getOrElse("GRAFT_PRQ_FORM", "knn")
     def query(i: Int) = form match {
       case "direct" =>
@@ -66,14 +53,9 @@ object PerRequestProbe {
     (0 until warm).foreach(i => query(i).collect())
 
     // 1. single-threaded latency curve: 200 sequential queries
-    val seqLats = (0 until 200).map { i =>
-      val t0 = System.nanoTime()
-      query(i).collect()
-      (System.nanoTime() - t0) / 1e6
-    }
-    def p50(xs: Seq[Double]): Double = {
-      val s = xs.sorted; math.rint(s(s.length / 2) * 10) / 10
-    }
+    val seqLats =
+      (0 until 200).map(i => Drive.timed(query(i).collect())._2 * 1e3)
+    def p50(xs: Seq[Double]): Double = Drive.pct(xs.sorted.toArray, 0.5)
     println(f"[prq] seq p50 first25=${p50(seqLats.take(25))} mid=${p50(seqLats.slice(88, 112))} last25=${p50(seqLats.takeRight(25))} ms (warm=$warm aqe=$aqe)")
 
     // 2. steady-state phase breakdown (median of 40)
@@ -96,45 +78,16 @@ object PerRequestProbe {
     println("[prq] phase p50 ms: " + names.zip(med).map { case (nm, v) => s"$nm=$v" }.mkString(" "))
 
     // 3. concurrent drive at the graded shape (16 threads x 25), GC share
-    for (threads <- Seq(16)) {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
-      val lats = new java.util.concurrent.ConcurrentLinkedQueue[Double]()
-      val gc0 = gcMs(); val t0 = System.nanoTime()
-      val fs = (0 until threads).map { t =>
-        pool.submit(new Runnable { def run(): Unit = {
-          var i = 0
-          while (i < 25) {
-            val s0 = System.nanoTime()
-            query(t * 25 + i).collect()
-            lats.add((System.nanoTime() - s0) / 1e6)
-            i += 1
-          }
-        }})
-      }
-      fs.foreach(_.get()); pool.shutdownNow()
-      val secs = (System.nanoTime() - t0) / 1e9
-      val gcd = gcMs() - gc0
-      import scala.jdk.CollectionConverters._
-      val l = lats.asScala.toSeq
-      println(f"[prq] conc threads=$threads qps=${400 / secs}%.1f p50=${p50(l)} ms gc=${gcd}ms wall=${secs}%.2fs")
-    }
+    val threads = 16
+    val gc0 = Drive.gcMs()
+    val (secs, l) = Drive.closed(threads, 25)((_, i) => query(i).collect())
+    val gcd = Drive.gcMs() - gc0
+    println(f"[prq] conc threads=$threads qps=${400 / secs}%.1f p50=${Drive.pct(l, 0.5)} ms gc=${gcd}ms wall=${secs}%.2fs")
     // 4. bare-job dispatch ceiling: the same 16-thread storm submitting
     // the cheapest possible 1-task job (count over a pinned 1-partition
     // RDD) — the JVM-wide jobs/s bound the single-threaded DAGScheduler
     // event loop imposes on ANY one-job-per-query tier.
-    val bare = spark.sparkContext.parallelize(1 to 100, 1).cache()
-    bare.count()
-    (0 until 100).foreach(_ => bare.count())
-    val pool3 = java.util.concurrent.Executors.newFixedThreadPool(16)
-    val t3 = System.nanoTime()
-    val fs3 = (0 until 16).map { _ =>
-      pool3.submit(new Runnable { def run(): Unit = {
-        var i = 0; while (i < 50) { bare.count(); i += 1 }
-      }})
-    }
-    fs3.foreach(_.get()); pool3.shutdownNow()
-    val bsecs = (System.nanoTime() - t3) / 1e9
-    println(f"[prq] bare-job ceiling: ${800 / bsecs}%.1f jobs/s (16 threads x 50 pinned-RDD counts)")
+    println(f"[prq] bare-job ceiling: ${Drive.jobCeiling(spark, threads)}%.1f jobs/s (16 threads x 50 pinned-RDD counts)")
     spark.stop()
   }
 }

@@ -3,7 +3,6 @@ package graft
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Measurement tool (guide §1): run registered queries with the bench's
   * session config and report wall seconds plus scheduler-side counters —
@@ -18,15 +17,8 @@ object ProfileRun {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: ProfileRun <sfDir> <query> [query...]")
     val sfDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Drive.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"),
+      "spark.sql.adaptive.enabled" -> "true")
     val jobs = new AtomicInteger(0)
     val stages = new AtomicInteger(0)
     val tasks = new AtomicInteger(0)
@@ -59,7 +51,7 @@ object ProfileRun {
       import scala.jdk.CollectionConverters._
       val jw = jobWall.asScala.toArray.sorted
       val jwSum = jw.sum / 1000
-      val jwP50 = if (jw.isEmpty) 0 else jw(jw.length / 2)
+      val jwP50 = if (jw.isEmpty) 0 else Drive.pct(jw, 0.5)
       val jwMax = if (jw.isEmpty) 0 else jw.last
       println(f"PROFILE $name%-28s rows=$n%-6d secs=$secs%6.3f " +
         f"jobs=${jobs.get}%-4d stages=${stages.get}%-4d tasks=${tasks.get}%-5d " +

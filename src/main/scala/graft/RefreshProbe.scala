@@ -24,6 +24,7 @@ package graft
   * Usage: `RefreshProbe [rows] [mode]`, mode ∈ all|patch|reload|failover.
   * Results land in SCALING.md (r16 addendum). */
 object RefreshProbe {
+  import Drive.timed
 
   private def unit(d: Int, rnd: scala.util.Random): Array[Double] = {
     val v = Array.fill(d)(rnd.nextGaussian())
@@ -45,12 +46,6 @@ object RefreshProbe {
       (i.toLong, e.map(_ / norm), i % 10)
     }
     (rows, cents)
-  }
-
-  private def timed[T](f: => T): (T, Double) = {
-    val t0 = System.nanoTime()
-    val r = f
-    (r, (System.nanoTime() - t0) / 1e9)
   }
 
   /** Cell-order `rows` by (assigned cell, id) and write the full slab
@@ -219,55 +214,9 @@ object RefreshProbe {
       threads)
   }
 
-  private def launchWorker(javaArgs: Seq[String]): Process = {
-    val javaBin = System.getProperty("java.home") + "/bin/java"
-    val cp = System.getProperty("java.class.path")
-    import scala.jdk.CollectionConverters._
-    new ProcessBuilder((Seq(javaBin, "--add-modules=jdk.incubator.vector",
-      "-Xmx4g", "-cp", cp, "graft.ShardWorker") ++ javaArgs).asJava)
-      .redirectOutput(ProcessBuilder.Redirect.DISCARD)
-      .redirectErrorStream(false)
-      .start()
-  }
-
-  private def connectRouter(addrs: Seq[(String, Int)], k: Int,
-      backups: Seq[Seq[(String, Int)]] = Seq.empty): RemoteShardedRouter = {
-    var router: RemoteShardedRouter = null
-    var tries = 0
-    while (router == null) {
-      try router = new RemoteShardedRouter(addrs, k, backups = backups)
-      catch {
-        case e: java.io.IOException =>
-          tries += 1
-          if (tries > 120) throw e
-          Thread.sleep(500)
-      }
-    }
-    router
-  }
-
-  /** Closed-loop storm: `clients` threads hammer `op` until `stop`;
-    * returns (latenciesNanosWithWallClock, errorCount). */
-  private def storm(clients: Int, stop: java.util.concurrent.atomic.AtomicBoolean,
-      errs: java.util.concurrent.atomic.AtomicInteger)(op: () => Unit)
-      : (java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)], Seq[Thread]) = {
-    val lats = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
-    val threads = (0 until clients).map { _ =>
-      val t = new Thread(new Runnable {
-        def run(): Unit = while (!stop.get()) {
-          val t0 = System.nanoTime()
-          try { op(); lats.add((t0, System.nanoTime() - t0)) }
-          catch { case _: Throwable => errs.incrementAndGet() }
-        }
-      })
-      t.setDaemon(true); t.start(); t
-    }
-    (lats, threads)
-  }
-
-  private def p50(xs: Seq[Long]): Double =
-    if (xs.isEmpty) Double.NaN
-    else xs.sorted.apply(xs.length / 2) / 1e6
+  private def p50(ns: Seq[Long]): Double =
+    if (ns.isEmpty) Double.NaN
+    else Drive.pct(ns.map(_ / 1e6).sorted.toArray, 0.5, 100)
 
   /** Scenario 2: RELOAD mid-storm — zero dropped requests, bounded blip. */
   def reloadScenario(n: Int, threads: Int, dir: String): Unit = {
@@ -290,35 +239,31 @@ object RefreshProbe {
     // int8 + ivf mode: the reload swaps the FULL generation (code slab,
     // sidecar, calibration knobs), not just the float file
     val nprobe = math.max(1, c / 16)
-    val proc = launchWorker(Seq(v1, port.toString, k.toString, "0.0", "8",
-      "0", "20", s"$v1.i8", s"$v1.ivf", nprobe.toString, "3.0"))
+    val proc = Drive.spawnWorker("4g", Seq(v1, port.toString, k.toString,
+      "0.0", "8", "0", "20", s"$v1.i8", s"$v1.ivf", nprobe.toString, "3.0"))
     try {
-      val router = connectRouter(Seq(("127.0.0.1", port)), k)
+      val router =
+        Drive.whenUp(new RemoteShardedRouter(Seq(("127.0.0.1", port)), k))
       try {
         router.ping()
         require(router.search(q).head._1 != sentinel._1, "sentinel in v1?")
-        val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
-        val errs = new java.util.concurrent.atomic.AtomicInteger(0)
-        val (lats, ts) = storm(8, stop, errs)(() => { router.search(q); () })
+        val storm = new Drive.Background(8)(() => router.search(q))
         Thread.sleep(3000)
         val tReload0 = System.nanoTime()
         val r = router.reload(0, v2, s"$v2.i8", s"$v2.ivf", nprobe, 3.0)
         val tReload1 = System.nanoTime()
         require(r.isRight, s"reload failed: $r")
         Thread.sleep(3000)
-        stop.set(true)
-        ts.foreach(_.join(2000))
-        import scala.jdk.CollectionConverters._
-        val all = lats.iterator().asScala.toSeq
+        val (all, errs) = storm.stop()
         val before = all.filter(_._1 < tReload0 - 500000000L).map(_._2)
         val during = all.filter(l =>
           l._1 >= tReload0 - 500000000L && l._1 <= tReload1 + 500000000L).map(_._2)
         val after = all.filter(_._1 > tReload1 + 500000000L).map(_._2)
-        println(f"reload.requests=${all.length} errors=${errs.get()} " +
+        println(f"reload.requests=${all.length} errors=$errs " +
           f"p50_before_ms=${p50(before)}%.2f p50_during_ms=${p50(during)}%.2f " +
           f"p50_after_ms=${p50(after)}%.2f " +
           f"reload_rtt_ms=${(tReload1 - tReload0) / 1e6}%.1f")
-        require(errs.get() == 0, s"reload dropped ${errs.get()} requests")
+        require(errs == 0, s"reload dropped $errs requests")
         val post = router.search(q)
         require(post.head._1 == sentinel._1 && post.head._2 == 1.0,
           s"sentinel must lead post-swap, got ${post.head}")
@@ -339,50 +284,37 @@ object RefreshProbe {
     val k = 10
     val pPort = 43500 + (System.nanoTime() % 97).toInt
     val bPort = pPort + 101
-    val primary = launchWorker(Seq(slab, pPort.toString, k.toString, "0.0", "8"))
-    val backup = launchWorker(Seq(slab, bPort.toString, k.toString, "0.0", "8"))
+    def worker(port: Int) =
+      Drive.spawnWorker("4g", Seq(slab, port.toString, k.toString, "0.0", "8"))
+    val primary = worker(pPort)
+    val backup = worker(bPort)
     try {
-      val router = connectRouter(Seq(("127.0.0.1", pPort)), k,
-        backups = Seq(Seq(("127.0.0.1", bPort))))
+      val router = Drive.whenUp(new RemoteShardedRouter(
+        Seq(("127.0.0.1", pPort)), k, backups = Seq(Seq(("127.0.0.1", bPort)))))
       try {
         router.ping()
         // wait for the BACKUP too (the router only handshakes the primary)
-        var tries = 0
-        var up = false
-        while (!up) {
-          try {
-            val s = new java.net.Socket()
-            s.connect(new java.net.InetSocketAddress("127.0.0.1", bPort), 1000)
-            s.close(); up = true
-          } catch {
-            case _: java.io.IOException =>
-              tries += 1; require(tries < 120, "backup never came up")
-              Thread.sleep(500)
-          }
+        Drive.whenUp {
+          val s = new java.net.Socket()
+          s.connect(new java.net.InetSocketAddress("127.0.0.1", bPort), 1000)
+          s.close()
         }
         val healthy = router.search(q).toSeq
-        val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
-        val errs = new java.util.concurrent.atomic.AtomicInteger(0)
         val wrong = new java.util.concurrent.atomic.AtomicInteger(0)
-        val (lats, ts) = storm(8, stop, errs) { () =>
-          if (router.search(q).toSeq != healthy) wrong.incrementAndGet()
-        }
+        val storm = new Drive.Background(8)(() =>
+          if (router.search(q).toSeq != healthy) wrong.incrementAndGet())
         Thread.sleep(3000)
         val tKill = System.nanoTime()
         primary.destroyForcibly()
         Thread.sleep(4000)
-        stop.set(true)
-        ts.foreach(_.join(2000))
-        import scala.jdk.CollectionConverters._
-        val all = lats.iterator().asScala.toSeq
+        val (all, errs) = storm.stop()
         val before = all.filter(_._1 < tKill).map(_._2)
         val afterKill = all.filter(_._1 >= tKill).map(_._2)
         val blip = if (afterKill.isEmpty) 0.0 else afterKill.max / 1e6
-        println(f"failover.requests=${all.length} errors=${errs.get()} " +
+        println(f"failover.requests=${all.length} errors=$errs " +
           f"wrong_answers=${wrong.get()} p50_before_ms=${p50(before)}%.2f " +
           f"p50_after_kill_ms=${p50(afterKill)}%.2f max_blip_ms=$blip%.1f")
-        require(errs.get() == 0,
-          s"failover surfaced ${errs.get()} errors to callers")
+        require(errs == 0, s"failover surfaced $errs errors to callers")
         require(wrong.get() == 0, s"${wrong.get()} non-exact answers")
         require(afterKill.nonEmpty, "no traffic measured after the kill")
       } finally router.close()
@@ -406,12 +338,7 @@ object RefreshProbe {
     * the measurement is decisive (ratio ≥ 1.1×) — append-local churn
     * must choose patch, scattered churn must choose rebuild. */
   def e2eScenario(n: Int, threads: Int, dir: String): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$threads]")
-      .config("spark.sql.shuffle.partitions", threads)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Drive.session(threads.toString)
     import graft.sources.CollectionStore
     import org.apache.spark.sql.functions.col
     val d = 64
@@ -433,15 +360,14 @@ object RefreshProbe {
     val k = 10
     val nprobe = math.max(1, c / 16)
     val port = 43700 + (System.nanoTime() % 97).toInt
-    val proc = launchWorker(Seq(gen1, port.toString, k.toString, "0.0", "8",
-      "0", "20", s"$gen1.i8", s"$gen1.ivf", nprobe.toString, "3.0"))
+    val proc = Drive.spawnWorker("4g", Seq(gen1, port.toString, k.toString,
+      "0.0", "8", "0", "20", s"$gen1.i8", s"$gen1.ivf", nprobe.toString, "3.0"))
     try {
-      val router = connectRouter(Seq(("127.0.0.1", port)), k)
+      val router =
+        Drive.whenUp(new RemoteShardedRouter(Seq(("127.0.0.1", port)), k))
       try {
         router.ping()
-        val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
-        val errs = new java.util.concurrent.atomic.AtomicInteger(0)
-        val (lats, ts) = storm(8, stop, errs)(() => { router.search(q); () })
+        val storm = new Drive.Background(8)(() => router.search(q))
         val rnd = new scala.util.Random(43)
         var curGen = gen1
         var genIdx = 1
@@ -542,13 +468,9 @@ object RefreshProbe {
           genIdx += 1
         }
         Thread.sleep(500)
-        stop.set(true)
-        ts.foreach(_.join(2000))
-        import scala.jdk.CollectionConverters._
-        println(f"e2e.storm requests=${lats.iterator().asScala.size} " +
-          f"errors=${errs.get()}")
-        require(errs.get() == 0,
-          s"composed freshness arc dropped ${errs.get()} requests")
+        val (lats, errs) = storm.stop()
+        println(f"e2e.storm requests=${lats.size} errors=$errs")
+        require(errs == 0, s"composed freshness arc dropped $errs requests")
       } finally router.close()
     } finally {
       proc.destroy()

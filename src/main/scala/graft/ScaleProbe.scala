@@ -1,9 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Ann, Collection}
+import graft.Drive.timed
 
 /** Scaling-probe tool. Modes (third arg, default `graph`):
   *
@@ -32,25 +32,15 @@ object ScaleProbe {
     val sfDir = args(0)
     val nQueries = if (args.length > 1) args(1).toInt else 100
     val mode = if (args.length > 2) args(2) else "graph"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // serving mode collects a 2M-row replica template (~1 GB of rows)
-      // to the driver — the deliberate replica-tier shape; the default
-      // 1 GB maxResultSize caps it mid-collect
-      .config("spark.driver.maxResultSize", "8g")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // serving mode collects a 2M-row replica template (~1 GB of rows) to
+    // the driver — the deliberate replica-tier shape; the default 1 GB
+    // maxResultSize caps it mid-collect
+    val spark = Drive.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"),
+      "spark.driver.maxResultSize" -> "8g")
     val points = Collection.load(spark, sfDir)
       .select(col("id"), col("embedding"), col("user_id")).cache()
     val n = points.count()
     val cells = sys.env.getOrElse("SPARK_GRAFT_KNN_CELLS", "32").toInt
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
     if (mode == "graphchurn") {
       // Graph recall under SUSTAINED churn (VERDICT r15 #6): the one-tick
       // graph_after_cdc row (0.962 at sf0.1) answers "does one
@@ -425,9 +415,6 @@ object ScaleProbe {
         .filter(col("id").isin(qids.map(Long.box): _*))
         .orderBy("id").select("embedding").collect()
         .map(_.getSeq[Double](0).toArray)
-      def pct(xs: Array[Double], p: Double): Double =
-        if (xs.isEmpty) 0.0
-        else math.rint(xs.sorted.apply(((xs.length - 1) * p).toInt) * 100) / 100
       // one server per variant; returns (soloQps, soloP50, stormQps,
       // stormP50, per-query top-k id sets, float/int8 slab bytes)
       def drive(int8: Boolean)
@@ -443,35 +430,18 @@ object ScaleProbe {
             Await.result(srv.submit(q.toSeq), 1200.seconds)
           (0 until 20).foreach(i => one(qPool(i % qPool.length))) // JIT warm
           // solo closed loop over the query pool
-          val lats = qPool.map { q =>
-            val t0 = System.nanoTime(); one(q); (System.nanoTime() - t0) / 1e6
-          }
+          val (_, lats) = Drive.closed(1, qPool.length)((_, i) => one(qPool(i)))
           val soloQps = qPool.length / (lats.sum / 1e3)
           // 8-client closed-loop storm (each thread walks the pool)
           val clients = 8
           val perClient = math.max(25, qPool.length / 2)
-          val stormLats = new java.util.concurrent.ConcurrentLinkedQueue[Double]()
-          val pool = java.util.concurrent.Executors.newFixedThreadPool(clients)
-          val t0 = System.nanoTime()
-          (0 until clients).map { c =>
-            pool.submit(new Runnable { def run(): Unit = {
-              var i = 0
-              while (i < perClient) {
-                val s0 = System.nanoTime()
-                one(qPool((c * perClient + i) % qPool.length))
-                stormLats.add((System.nanoTime() - s0) / 1e6)
-                i += 1
-              }
-            }})
-          }.foreach(_.get())
-          val stormSecs = (System.nanoTime() - t0) / 1e9
-          pool.shutdown()
+          val (stormSecs, stormLats) = Drive.closed(clients, perClient)((_, i) =>
+            one(qPool(i % qPool.length)))
           val stormQps = clients * perClient / stormSecs
-          import scala.jdk.CollectionConverters._
           // per-query result ids (for the int8-vs-exact recall row)
           val hits = qPool.map(q => one(q).map(_.getLong(0)).toSet)
-          (soloQps, pct(lats, 0.5), stormQps,
-            pct(stormLats.asScala.toArray, 0.5), hits, srv.replicaSlabBytes)
+          (soloQps, Drive.pct(lats, 0.5, 100), stormQps,
+            Drive.pct(stormLats, 0.5, 100), hits, srv.replicaSlabBytes)
         } finally srv.close()
       }
       val (fQps, fP50, fsQps, fsP50, fHits, _) = drive(int8 = false)
