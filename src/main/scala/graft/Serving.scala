@@ -1684,14 +1684,27 @@ final class ShardedServer private (
     * per-shard counters live on each shard's own `metrics`). */
   val metrics = new ServingMetrics
 
-  /** Fan out to every shard; merge completes on the thread finishing the
-    * LAST shard future (`parasitic` — the merge is an N×k sort, too
-    * small to justify a pool handoff). */
-  def submit(qemb: Seq[Double]): Future[Array[Row]] = {
+  /** Fan out to every shard and merge their top-k ([[gather]]). */
+  def submit(qemb: Seq[Double]): Future[Array[Row]] = gather(_.submit(qemb))
+
+  /** Filtered scatter-gather: every shard runs its own
+    * [[BatchedServer.submitFiltered]] (the filter resolves through each
+    * shard's payload postings) and the merge is the same exact
+    * (score desc, id asc) top-k — per-shard FILTERED top-k ⊇ that
+    * shard's contribution to the global filtered top-k, the identical
+    * exactness argument as [[submit]]. */
+  def submitFiltered(qemb: Seq[Double], userIds: Seq[Int]): Future[Array[Row]] =
+    gather(_.submitFiltered(qemb, userIds))
+
+  /** The one scatter-gather: ask every shard, merge the answers under
+    * (score desc, id asc), keep k, and record the request in [[metrics]].
+    * The merge completes on the thread finishing the LAST shard future
+    * (`parasitic` — an N×k sort, too small to justify a pool handoff). */
+  private def gather(ask: BatchedServer => Future[Array[Row]]): Future[Array[Row]] = {
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.parasitic
     val t0 = System.nanoTime()
-    val f = Future.sequence(servers.map(_.submit(qemb))).map { perShard =>
+    val f = Future.sequence(servers.map(ask)).map { perShard =>
       val all = perShard.flatten.toArray
       java.util.Arrays.sort(all, new java.util.Comparator[Row] {
         def compare(a: Row, b: Row): Int = {
@@ -1701,42 +1714,7 @@ final class ShardedServer private (
       })
       if (all.length <= k) all else java.util.Arrays.copyOf(all, k)
     }
-    f.onComplete {
-      case scala.util.Success(_) =>
-        metrics.recordRequest(System.nanoTime() - t0, success = true)
-      case scala.util.Failure(_) =>
-        metrics.recordRequest(System.nanoTime() - t0, success = false)
-    }
-    f
-  }
-
-  /** Filtered scatter-gather: every shard runs its own
-    * [[BatchedServer.submitFiltered]] (the filter resolves through each
-    * shard's payload postings) and the merge is the same exact
-    * (score desc, id asc) top-k — per-shard FILTERED top-k ⊇ that
-    * shard's contribution to the global filtered top-k, the identical
-    * exactness argument as [[submit]]. */
-  def submitFiltered(qemb: Seq[Double], userIds: Seq[Int]): Future[Array[Row]] = {
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.parasitic
-    val t0 = System.nanoTime()
-    val f = Future.sequence(servers.map(_.submitFiltered(qemb, userIds)))
-      .map { perShard =>
-        val all = perShard.flatten.toArray
-        java.util.Arrays.sort(all, new java.util.Comparator[Row] {
-          def compare(a: Row, b: Row): Int = {
-            val c = java.lang.Double.compare(b.getDouble(1), a.getDouble(1))
-            if (c != 0) c else java.lang.Long.compare(a.getLong(0), b.getLong(0))
-          }
-        })
-        if (all.length <= k) all else java.util.Arrays.copyOf(all, k)
-      }
-    f.onComplete {
-      case scala.util.Success(_) =>
-        metrics.recordRequest(System.nanoTime() - t0, success = true)
-      case scala.util.Failure(_) =>
-        metrics.recordRequest(System.nanoTime() - t0, success = false)
-    }
+    f.onComplete(r => metrics.recordRequest(System.nanoTime() - t0, success = r.isSuccess))
     f
   }
 

@@ -28,8 +28,15 @@ import java.nio.file.{Paths, StandardOpenOption}
   *
   * Protocol (length-free framing — every field fixed-width,
   * TCP_NODELAY): request = [int nq][int d][nq·d doubles]; nq=0 is a
-  * PING (measures the pure IPC round-trip floor). Response = per query
-  * [int m][m × (long id, double score, int user)].
+  * PING (measures the pure IPC round-trip floor); the negative
+  * commands are RELOAD ([[ShardWorker.ReloadCmd]]) and a filter prefix
+  * ([[ShardWorker.FilteredCmd]], int nu, nu user ids). Response = per
+  * query [int m][m × (long id, double score, int user)]. Frame bounds:
+  * nq, d and nu must be ≥ 0, nq·d ≤ 2^20 (each query counting at least
+  * one cell) and nu ≤ 2^16 ([[ShardWorker.MaxFrameCells]],
+  * [[ShardWorker.MaxFilterUsers]]), all checked before allocation; a
+  * frame that breaks them, or an unknown negative command, closes that
+  * connection only.
   *
   * Kernels by host × family × filter ("postings" = the rows a user
   * filter matches; "selective" = matched ≤ the full-scan threshold, or
@@ -57,33 +64,205 @@ import java.nio.file.{Paths, StandardOpenOption}
   * JVM workers. */
 object SlabIO {
 
-  /** Write (ids, users, offs, embs) as one little-endian binary file. */
-  def write(path: String, rows: Array[(Long, Array[Double], Int)]): Unit = {
-    val n = rows.length
-    var cells = 0L
-    rows.foreach(r => cells += r._2.length)
-    require(cells <= Int.MaxValue / 8, s"slab too large: $cells cells")
-    val bytes = 4L + 4L + 8L * n + 4L * n + 4L * (n + 1) + 8L * cells
-    val ch = FileChannel.open(Paths.get(path), StandardOpenOption.CREATE,
+  private type Row = (Long, Array[Double], Int)
+
+  /** File magics: the float slab ("SLAB"), its int8 code twin ("SLB8"),
+    * the ivf sidecar ("IVFS") and the graph sidecar ("GRFS"). */
+  private val SlabMagic = 0x534C4142
+  private val Int8Magic = 0x534C4238
+  private val IvfMagic = 0x49564653
+  private val GraphMagic = 0x47524653
+
+  /** Region map of a slab file. The float slab and its int8 twin share
+    * one layout: a `head`-byte header (magic, n, then — twin only — the
+    * float slab's pairing stamp), ids (8 B/row), users (4 B/row), offs
+    * (n + 1 cumulative cell counts, 4 B each), then the cells, `width`
+    * bytes each (a double, or one int8 code). All little-endian. */
+  private final case class Layout(name: String, magic: Int, head: Int,
+      width: Int, n: Int) {
+    def rows(m: Int): Layout = copy(n = m)
+    def ids: Long = head
+    def users: Long = ids + 8L * n
+    def offs: Long = users + 4L * n
+    def cells: Long = offs + 4L * (n + 1)
+    def bytes(nCells: Long): Long = cells + width * nCells
+  }
+  private val FloatSlab = Layout("slab", SlabMagic, 8, 8, 0)
+  private val Int8Twin = Layout("int8 slab", Int8Magic, 24, 1, 0)
+
+  /** The one buffered little-endian file writer (1 MiB direct buffer);
+    * [[finish]] is the byte-drift check every file ends with. */
+  private final class Out(path: String) {
+    private val ch = FileChannel.open(Paths.get(path), StandardOpenOption.CREATE,
       StandardOpenOption.WRITE, StandardOpenOption.TRUNCATE_EXISTING)
-    try {
-      val buf = ByteBuffer.allocateDirect(1 << 20).order(ByteOrder.LITTLE_ENDIAN)
-      def flush(): Unit = { buf.flip(); while (buf.hasRemaining) ch.write(buf); buf.clear() }
-      def ensure(k: Int): Unit = if (buf.remaining < k) flush()
-      ensure(8); buf.putInt(0x534C4142); buf.putInt(n) // "SLAB"
-      rows.foreach { r => ensure(8); buf.putLong(r._1) }
-      rows.foreach { r => ensure(4); buf.putInt(r._3) }
-      var off = 0
-      ensure(4); buf.putInt(0)
-      rows.foreach { r => off += r._2.length; ensure(4); buf.putInt(off) }
-      rows.foreach { r =>
-        val e = r._2; var i = 0
-        while (i < e.length) { ensure(8); buf.putDouble(e(i)); i += 1 }
-      }
+    private val buf = ByteBuffer.allocateDirect(1 << 20).order(ByteOrder.LITTLE_ENDIAN)
+    private def flush(): Unit = { buf.flip(); while (buf.hasRemaining) ch.write(buf); buf.clear() }
+    def int(v: Int): Unit = { if (buf.remaining < 4) flush(); buf.putInt(v) }
+    def long(v: Long): Unit = { if (buf.remaining < 8) flush(); buf.putLong(v) }
+    def double(v: Double): Unit = { if (buf.remaining < 8) flush(); buf.putDouble(v) }
+    def byte(v: Byte): Unit = { if (buf.remaining < 1) flush(); buf.put(v) }
+    /** Splice bytes [from, until) of a mapped file straight to the file. */
+    def copy(src: ByteBuffer, from: Long, until: Long): Unit = if (until > from) {
       flush()
-      require(ch.position() == bytes, s"slab write drift: ${ch.position()} != $bytes")
+      val s = src.duplicate()
+      s.position(from.toInt).limit(until.toInt)
+      while (s.hasRemaining) ch.write(s)
+    }
+    def finish(bytes: Long): Unit = {
+      flush()
+      require(ch.position() == bytes, s"$path write drift: ${ch.position()} != $bytes")
+    }
+    def close(): Unit = ch.close()
+  }
+
+  private def writing[A](path: String)(body: Out => A): A = {
+    val out = new Out(path)
+    try body(out) finally out.close()
+  }
+
+  /** The one mapped reader: check the magic, then map the first
+    * `len(count)` bytes of the file (`count` = the header int after the
+    * magic; clamped to the file size) read-only and little-endian,
+    * positioned past the magic. The mapping outlives the channel. */
+  private def mapped(path: String, magic: Int, what: String,
+      len: Int => Long): ByteBuffer = {
+    val ch = FileChannel.open(Paths.get(path), StandardOpenOption.READ)
+    try {
+      val head = ByteBuffer.allocate(8).order(ByteOrder.LITTLE_ENDIAN)
+      ch.read(head, 0)
+      require(head.getInt(0) == magic, s"bad $what magic in $path")
+      val size = math.min(len(head.getInt(4)), ch.size())
+      require(size <= Int.MaxValue,
+        s"$what too large to map in one buffer: $size bytes ($path)")
+      val buf = ch.map(FileChannel.MapMode.READ_ONLY, 0, size)
+        .order(ByteOrder.LITTLE_ENDIAN)
+      buf.position(4)
+      buf
     } finally ch.close()
   }
+  private val WholeFile: Any => Long = _ => Long.MaxValue
+
+  /** A slab file (float or int8 twin) mapped with its region map. */
+  private final class Mapped(val buf: ByteBuffer, val lay: Layout) {
+    def off(row: Int): Int = buf.getInt((lay.offs + 4L * row).toInt)
+    /** The ids, users and offs regions as heap arrays; leaves the buffer
+      * positioned at the cells. */
+    def columns(): (Array[Long], Array[Int], Array[Int]) = {
+      val n = lay.n
+      buf.position(lay.ids.toInt)
+      val ids = new Array[Long](n)
+      var i = 0
+      while (i < n) { ids(i) = buf.getLong(); i += 1 }
+      val users = new Array[Int](n)
+      i = 0
+      while (i < n) { users(i) = buf.getInt(); i += 1 }
+      val offs = new Array[Int](n + 1)
+      i = 0
+      while (i <= n) { offs(i) = buf.getInt(); i += 1 }
+      (ids, users, offs)
+    }
+  }
+
+  private def mapSlab(path: String, kind: Layout, len: Layout => Long): Mapped = {
+    val buf = mapped(path, kind.magic, kind.name, n => len(kind.rows(n)))
+    new Mapped(buf, kind.rows(buf.getInt(4)))
+  }
+
+  /** The pairing stamp a file cut from `floatSlabPath` carries: the float
+    * slab's byte size and content checksum ([[floatSlabChecksum]]). */
+  private def stampOf(floatSlabPath: String): (Long, Long) =
+    (java.nio.file.Files.size(Paths.get(floatSlabPath)),
+      floatSlabChecksum(floatSlabPath))
+
+  /** The one fail-loud pairing gate: a file stamped (`bytes`, `sum`) must
+    * have been cut from the float slab at `floatSlabPath` — same byte size
+    * AND same content checksum (ADVICE r15: size alone accepts a
+    * regenerated same-shape slab and silently degrades recall). */
+  private def requirePaired(what: String, bytes: Long, sum: Long,
+      floatSlabPath: String): Unit = {
+    val size = java.nio.file.Files.size(Paths.get(floatSlabPath))
+    require(bytes == size,
+      s"$what fingerprint mismatch: it was cut from a $bytes-byte float " +
+        s"slab, $floatSlabPath is $size")
+    val actual = floatSlabChecksum(floatSlabPath)
+    require(sum == actual,
+      s"$what content-fingerprint mismatch: it was cut from a float slab " +
+        s"with checksum $sum, $floatSlabPath has $actual (same size, " +
+        "different content — regenerated slab?)")
+  }
+
+  /** The one slab writer, float slab or int8 twin by `kind`. Rows come in
+    * `parts`, in order: a non-null part is written fresh; a null part `j`
+    * is byte-copied from rows `from(j) until from(j + 1)` of `old`, a
+    * mapped file of the same kind. The offs region is recomputed row by
+    * row either way (cumulative cell counts shift whenever an earlier
+    * part changed size — 4 bytes/row of arithmetic). `stamp` is the int8
+    * twin's pairing stamp. Returns (bytes copied, bytes written fresh)
+    * over the ids, users and cells regions. */
+  private def writeSlab(path: String, kind: Layout, stamp: Option[(Long, Long)],
+      parts: Array[Array[Row]], old: Mapped, from: Array[Int]): (Long, Long) = {
+    val w = kind.width
+    var n = 0
+    var nCells = 0L
+    parts.indices.foreach { j =>
+      if (parts(j) != null) {
+        n += parts(j).length
+        parts(j).foreach(r => nCells += r._2.length)
+      } else {
+        n += from(j + 1) - from(j)
+        nCells += old.off(from(j + 1)) - old.off(from(j))
+      }
+    }
+    require(nCells <= Int.MaxValue / w, s"slab too large: $nCells cells")
+    var clean = 0L
+    var fresh = 0L
+    writing(path) { out =>
+      def copyOld(base: Long, row: Int, until: Int, bytesPerRow: Int): Unit = {
+        out.copy(old.buf, base + bytesPerRow.toLong * row,
+          base + bytesPerRow.toLong * until)
+        clean += bytesPerRow.toLong * (until - row)
+      }
+      out.int(kind.magic); out.int(n)
+      stamp.foreach { case (bytes, sum) => out.long(bytes); out.long(sum) }
+      parts.indices.foreach { j =>
+        if (parts(j) != null) parts(j).foreach { r => out.long(r._1); fresh += 8 }
+        else copyOld(old.lay.ids, from(j), from(j + 1), 8)
+      }
+      parts.indices.foreach { j =>
+        if (parts(j) != null) parts(j).foreach { r => out.int(r._3); fresh += 4 }
+        else copyOld(old.lay.users, from(j), from(j + 1), 4)
+      }
+      var off = 0L
+      out.int(0)
+      parts.indices.foreach { j =>
+        if (parts(j) != null) parts(j).foreach { r =>
+          off += r._2.length; out.int(off.toInt)
+        } else {
+          var row = from(j)
+          while (row < from(j + 1)) {
+            off += old.off(row + 1) - old.off(row)
+            out.int(off.toInt)
+            row += 1
+          }
+        }
+      }
+      parts.indices.foreach { j =>
+        if (parts(j) != null) parts(j).foreach { r =>
+          val e = r._2
+          var i = 0
+          if (w == 8) while (i < e.length) { out.double(e(i)); i += 1 }
+          else while (i < e.length) { out.byte(BatchedServer.quantizeCode(e(i))); i += 1 }
+          fresh += w.toLong * e.length
+        } else copyOld(old.lay.cells, old.off(from(j)), old.off(from(j + 1)), w)
+      }
+      out.finish(kind.rows(n).bytes(nCells))
+    }
+    (clean, fresh)
+  }
+
+  /** Write (ids, users, offs, embs) as one float slab file. */
+  def write(path: String, rows: Array[(Long, Array[Double], Int)]): Unit =
+    writeSlab(path, FloatSlab, None, Array(rows), null, null)
 
   /** Content fingerprint of a FLOAT slab file: XOR-fold of the header,
     * the full ids region, and the first and last 4 KiB of the doubles
@@ -95,79 +274,47 @@ object SlabIO {
     * while reading ≤ ids-region + 8 KiB. Writer and loader call THIS
     * function on the same file, so the two sides cannot drift. */
   def floatSlabChecksum(path: String): Long = {
-    val ch = FileChannel.open(Paths.get(path), StandardOpenOption.READ)
-    try {
-      val size = ch.size()
-      val buf = ch.map(FileChannel.MapMode.READ_ONLY, 0, size)
-        .order(ByteOrder.LITTLE_ENDIAN)
-      require(buf.getInt() == 0x534C4142, s"bad slab magic in $path")
-      val n = buf.getInt()
-      var h = 0x9E3779B97F4A7C15L * (n + 1)
-      var i = 0
-      while (i < n) { // ids region: catches row drift / reorder
-        h = java.lang.Long.rotateLeft(h ^ buf.getLong(8 + 8 * i), 7) *
+    val s = mapSlab(path, FloatSlab, WholeFile)
+    val buf = s.buf
+    val n = s.lay.n
+    var h = 0x9E3779B97F4A7C15L * (n + 1)
+    var i = 0
+    while (i < n) { // ids region: catches row drift / reorder
+      h = java.lang.Long.rotateLeft(h ^ buf.getLong((s.lay.ids + 8L * i).toInt), 7) *
+        0x100000001B3L
+      i += 1
+    }
+    def foldRegion(from: Long, until: Long): Unit = {
+      var p = from
+      while (p + 8 <= until) {
+        h = java.lang.Long.rotateLeft(h ^ buf.getLong(p.toInt), 11) *
           0x100000001B3L
-        i += 1
+        p += 8
       }
-      val dataStart = 8L + 8L * n + 4L * n + 4L * (n + 1)
-      def foldRegion(from: Long, until: Long): Unit = {
-        var p = from
-        while (p + 8 <= until) {
-          h = java.lang.Long.rotateLeft(h ^ buf.getLong(p.toInt), 11) *
-            0x100000001B3L
-          p += 8
-        }
-      }
-      // first + last 4 KiB of embedding content: catches same-shape
-      // regenerated values
-      foldRegion(dataStart, math.min(size, dataStart + 4096))
-      foldRegion(math.max(dataStart, size - 4096), size)
-      h
-    } finally ch.close()
+    }
+    // first + last 4 KiB of embedding content: catches same-shape
+    // regenerated values
+    val size = buf.capacity.toLong
+    val dataStart = s.lay.cells
+    foldRegion(dataStart, math.min(size, dataStart + 4096))
+    foldRegion(math.max(dataStart, size - 4096), size)
+    h
   }
 
   /** INT8 code-slab twin of [[write]] (VERDICT r14 #6 — the reference's
     * always-RAM INT8 at the storage layer, src/core/qdrant_client.py:129-138,
     * extended to the sharded tier where the 8× RAM cut decides how many
-    * shards a corpus needs): same ids/users/offs header, then ONE byte
-    * per cell (code = clamp(HALF_UP(x·127)) — [[BatchedServer.quantizeCode]],
+    * shards a corpus needs): the float slab's layout with ONE byte per
+    * cell (code = clamp(HALF_UP(x·127)) — [[BatchedServer.quantizeCode]],
     * the same fixed-range code as the in-JVM int8 replica). No codebook
     * rides with it because the code is a pure function of the float —
-    * but the file still carries the float slab's byte size AND content
-    * checksum ([[floatSlabChecksum]]) as a pairing fingerprint, so a
-    * code slab paired with the wrong float slab (row drift OR a
-    * regenerated same-shape slab — ADVICE r15) fails loud at load. */
+    * but the header carries the float slab's pairing stamp (byte size AND
+    * content checksum), so a code slab paired with the wrong float slab
+    * (row drift OR a regenerated same-shape slab — ADVICE r15) fails loud
+    * at load. */
   def writeInt8(path: String, rows: Array[(Long, Array[Double], Int)],
-      floatSlabPath: String): Unit = {
-    val n = rows.length
-    var cells = 0L
-    rows.foreach(r => cells += r._2.length)
-    require(cells <= Int.MaxValue, s"slab too large: $cells cells")
-    val floatSlabBytes = java.nio.file.Files.size(Paths.get(floatSlabPath))
-    val floatChecksum = floatSlabChecksum(floatSlabPath)
-    val ch = FileChannel.open(Paths.get(path), StandardOpenOption.CREATE,
-      StandardOpenOption.WRITE, StandardOpenOption.TRUNCATE_EXISTING)
-    try {
-      val buf = ByteBuffer.allocateDirect(1 << 20).order(ByteOrder.LITTLE_ENDIAN)
-      def flush(): Unit = { buf.flip(); while (buf.hasRemaining) ch.write(buf); buf.clear() }
-      def ensure(k: Int): Unit = if (buf.remaining < k) flush()
-      ensure(24); buf.putInt(0x534C4238); buf.putInt(n) // "SLB8"
-      buf.putLong(floatSlabBytes)
-      buf.putLong(floatChecksum)
-      rows.foreach { r => ensure(8); buf.putLong(r._1) }
-      rows.foreach { r => ensure(4); buf.putInt(r._3) }
-      var off = 0
-      ensure(4); buf.putInt(0)
-      rows.foreach { r => off += r._2.length; ensure(4); buf.putInt(off) }
-      rows.foreach { r =>
-        val e = r._2; var i = 0
-        while (i < e.length) {
-          ensure(1); buf.put(BatchedServer.quantizeCode(e(i))); i += 1
-        }
-      }
-      flush()
-    } finally ch.close()
-  }
+      floatSlabPath: String): Unit =
+    writeSlab(path, Int8Twin, Some(stampOf(floatSlabPath)), Array(rows), null, null)
 
   /** Parsed int8 code slab: parallel id/user arrays, row offsets into the
     * contiguous code slab — the RAM-pinned phase-1 state of an int8
@@ -176,46 +323,16 @@ object SlabIO {
       offs: Array[Int], codes: Array[Byte], floatSlabBytes: Long,
       floatChecksum: Long) {
     def n: Int = ids.length
-
-    /** Fail-loud pairing gate: THIS code slab must have been cut from
-      * the float slab at `floatSlabPath` — same byte size AND the same
-      * content checksum (ADVICE r15: size alone accepts a regenerated
-      * same-shape slab and silently degrades recall). */
-    def requirePairedWith(floatSlabPath: String): Unit = {
-      val size = java.nio.file.Files.size(Paths.get(floatSlabPath))
-      require(floatSlabBytes == size,
-        s"int8 slab fingerprint mismatch: codes were cut from a " +
-          s"$floatSlabBytes-byte float slab, $floatSlabPath is $size")
-      val sum = floatSlabChecksum(floatSlabPath)
-      require(floatChecksum == sum,
-        s"int8 slab content-fingerprint mismatch: codes were cut from a " +
-          s"float slab with checksum $floatChecksum, $floatSlabPath " +
-          s"has $sum (same size, different content — regenerated slab?)")
-    }
+    def requirePairedWith(floatSlabPath: String): Unit =
+      requirePaired("int8 slab", floatSlabBytes, floatChecksum, floatSlabPath)
   }
 
   def readInt8(path: String): Int8Slab = {
-    val ch = FileChannel.open(Paths.get(path), StandardOpenOption.READ)
-    try {
-      val buf = ch.map(FileChannel.MapMode.READ_ONLY, 0, ch.size())
-        .order(ByteOrder.LITTLE_ENDIAN)
-      require(buf.getInt() == 0x534C4238, s"bad int8 slab magic in $path")
-      val n = buf.getInt()
-      val floatBytes = buf.getLong()
-      val floatSum = buf.getLong()
-      val ids = new Array[Long](n)
-      var i = 0
-      while (i < n) { ids(i) = buf.getLong(); i += 1 }
-      val users = new Array[Int](n)
-      i = 0
-      while (i < n) { users(i) = buf.getInt(); i += 1 }
-      val offs = new Array[Int](n + 1)
-      i = 0
-      while (i <= n) { offs(i) = buf.getInt(); i += 1 }
-      val codes = new Array[Byte](offs(n))
-      buf.get(codes)
-      Int8Slab(ids, users, offs, codes, floatBytes, floatSum)
-    } finally ch.close()
+    val s = mapSlab(path, Int8Twin, WholeFile)
+    val (ids, users, offs) = s.columns()
+    val codes = new Array[Byte](offs(s.lay.n))
+    s.buf.get(codes)
+    Int8Slab(ids, users, offs, codes, s.buf.getLong(8), s.buf.getLong(16))
   }
 
   /** IVF sidecar of a CELL-ORDERED slab (VERDICT r15 #1 — sub-linear
@@ -223,9 +340,9 @@ object SlabIO {
     * written grouped by IVF cell; this file carries the per-shard cell
     * directory — global cell ids, the centroid table, and row offsets
     * `offs(j)..offs(j+1)` delimiting cell j's rows in slab row order —
-    * plus the float slab's (size, content-checksum) pairing fingerprint
-    * so a sidecar from a different or regenerated slab fails loud at
-    * load (same gate as the int8 slab). With it the worker scans only
+    * plus the float slab's pairing stamp, so a sidecar from a different
+    * or regenerated slab fails loud at load (same gate as the int8 slab).
+    * With it the worker scans only
     * the `nprobe` cells nearest the query instead of the whole slab:
     * per-query work stops scaling with shard size — the reference's
     * core premise (sub-linear per-query work via its HNSW index,
@@ -236,21 +353,8 @@ object SlabIO {
   final case class IvfSidecar(cids: Array[Long], cents: Array[Array[Double]],
       offs: Array[Int], floatSlabBytes: Long, floatChecksum: Long) {
     def c: Int = cids.length
-
-    /** Same fail-loud pairing gate as [[Int8Slab.requirePairedWith]]:
-      * the sidecar's cell offsets are meaningful only against the exact
-      * cell-ordered slab they were cut from. */
-    def requirePairedWith(floatSlabPath: String): Unit = {
-      val size = java.nio.file.Files.size(Paths.get(floatSlabPath))
-      require(floatSlabBytes == size,
-        s"ivf sidecar fingerprint mismatch: cell offsets were cut from a " +
-          s"$floatSlabBytes-byte float slab, $floatSlabPath is $size")
-      val sum = floatSlabChecksum(floatSlabPath)
-      require(floatChecksum == sum,
-        s"ivf sidecar content-fingerprint mismatch: cell offsets were " +
-          s"cut from a float slab with checksum $floatChecksum, " +
-          s"$floatSlabPath has $sum")
-    }
+    def requirePairedWith(floatSlabPath: String): Unit =
+      requirePaired("ivf sidecar", floatSlabBytes, floatChecksum, floatSlabPath)
   }
 
   def writeIvf(path: String, cids: Array[Long],
@@ -261,40 +365,29 @@ object SlabIO {
       s"ivf sidecar shape: $c cells, ${cents.length} cents, ${offs.length} offs")
     val d = if (c == 0) 0 else cents(0).length
     require(cents.forall(_.length == d), "ragged centroid table")
-    val floatBytes = java.nio.file.Files.size(Paths.get(floatSlabPath))
-    val floatSum = floatSlabChecksum(floatSlabPath)
-    val ch = FileChannel.open(Paths.get(path), StandardOpenOption.CREATE,
-      StandardOpenOption.WRITE, StandardOpenOption.TRUNCATE_EXISTING)
-    try {
-      val bytes = 4 + 4 + 4 + 8 + 8 + 8L * c + 4L * (c + 1) + 8L * c * d
-      require(bytes <= Int.MaxValue, s"ivf sidecar too large: $bytes")
-      val buf = ByteBuffer.allocateDirect(bytes.toInt)
-        .order(ByteOrder.LITTLE_ENDIAN)
-      buf.putInt(0x49564653).putInt(c).putInt(d) // "IVFS"
-      buf.putLong(floatBytes).putLong(floatSum)
-      cids.foreach(buf.putLong)
-      offs.foreach(buf.putInt)
-      cents.foreach(_.foreach(buf.putDouble))
-      buf.flip()
-      while (buf.hasRemaining) ch.write(buf)
-    } finally ch.close()
+    val (floatBytes, floatSum) = stampOf(floatSlabPath)
+    val bytes = 4 + 4 + 4 + 8 + 8 + 8L * c + 4L * (c + 1) + 8L * c * d
+    require(bytes <= Int.MaxValue, s"ivf sidecar too large: $bytes")
+    writing(path) { out =>
+      out.int(IvfMagic); out.int(c); out.int(d)
+      out.long(floatBytes); out.long(floatSum)
+      cids.foreach(out.long)
+      offs.foreach(out.int)
+      cents.foreach(_.foreach(out.double))
+      out.finish(bytes)
+    }
   }
 
   def readIvf(path: String): IvfSidecar = {
-    val ch = FileChannel.open(Paths.get(path), StandardOpenOption.READ)
-    try {
-      val buf = ch.map(FileChannel.MapMode.READ_ONLY, 0, ch.size())
-        .order(ByteOrder.LITTLE_ENDIAN)
-      require(buf.getInt() == 0x49564653, s"bad ivf sidecar magic in $path")
-      val c = buf.getInt()
-      val d = buf.getInt()
-      val floatBytes = buf.getLong()
-      val floatSum = buf.getLong()
-      val cids = Array.fill(c)(buf.getLong())
-      val offs = Array.fill(c + 1)(buf.getInt())
-      val cents = Array.fill(c)(Array.fill(d)(buf.getDouble()))
-      IvfSidecar(cids, cents, offs, floatBytes, floatSum)
-    } finally ch.close()
+    val buf = mapped(path, IvfMagic, "ivf sidecar", WholeFile)
+    val c = buf.getInt()
+    val d = buf.getInt()
+    val floatBytes = buf.getLong()
+    val floatSum = buf.getLong()
+    val cids = Array.fill(c)(buf.getLong())
+    val offs = Array.fill(c + 1)(buf.getInt())
+    val cents = Array.fill(c)(Array.fill(d)(buf.getDouble()))
+    IvfSidecar(cids, cents, offs, floatBytes, floatSum)
   }
 
   /** Incremental CELL-SPLICE patch of a cell-ordered slab pair (float +
@@ -302,7 +395,10 @@ object SlabIO {
     * contents of each DIRTY cell (`newRowsByCell`, keyed by sidecar cell
     * index; an empty array drains the cell), produce the
     * next-generation slab by byte-copying every CLEAN cell's ranges out
-    * of the old file and writing only the dirty cells' rows fresh.
+    * of the old file and writing only the dirty cells' rows fresh — the
+    * same splice for the float slab and its int8 twin (codes are a pure
+    * per-cell function of the floats, so clean cells' codes are
+    * bit-reusable), through [[writeSlab]].
     *
     * The output is BYTE-IDENTICAL to a from-scratch [[write]] /
     * [[writeIvf]] / [[writeInt8]] over the full new row array
@@ -322,8 +418,8 @@ object SlabIO {
     * cell-ordered builder's (cell, id) convention — or the splice would
     * break the slab's global order invariant (fail-loud require).
     *
-    * Returns (newRowCount, cleanBytesCopied, dirtyBytesWritten) — the
-    * economics the refresh probe reports. */
+    * Returns (newRowCount, cleanBytesCopied, dirtyBytesWritten) of the
+    * float slab — the economics the refresh probe reports. */
   def patchCellOrdered(
       oldSlabPath: String, oldIvfPath: String,
       newRowsByCell: Map[Int, Array[(Long, Array[Double], Int)]],
@@ -343,223 +439,66 @@ object SlabIO {
         i += 1
       }
     }
-    val inCh = FileChannel.open(Paths.get(oldSlabPath), StandardOpenOption.READ)
-    try {
-      require(inCh.size() <= Int.MaxValue,
-        s"patch source slab too large to map: ${inCh.size()} bytes")
-      val old = inCh.map(FileChannel.MapMode.READ_ONLY, 0, inCh.size())
-        .order(ByteOrder.LITTLE_ENDIAN)
-      require(old.getInt(0) == 0x534C4142, s"bad slab magic in $oldSlabPath")
-      val oldN = old.getInt(4)
-      require(ivf.offs(ivf.c) == oldN,
-        s"sidecar covers ${ivf.offs(ivf.c)} rows, slab has $oldN")
-      val oldIdsStart = 8L
-      val oldUsersStart = oldIdsStart + 8L * oldN
-      val oldOffsStart = oldUsersStart + 4L * oldN
-      val oldDataStart = oldOffsStart + 4L * (oldN + 1)
-      def oldEmbOff(row: Int): Long =
-        old.getInt((oldOffsStart + 4L * row).toInt).toLong
-      // new shape: per-cell row counts and embedding-cell counts
-      val newCellRows = Array.tabulate(ivf.c) { j =>
-        newRowsByCell.get(j).map(_.length)
-          .getOrElse(ivf.offs(j + 1) - ivf.offs(j))
-      }
-      val n = newCellRows.sum
-      var cells = 0L
-      (0 until ivf.c).foreach { j =>
-        cells += (newRowsByCell.get(j) match {
-          case Some(rows) => rows.map(_._2.length.toLong).sum
-          case None => oldEmbOff(ivf.offs(j + 1)) - oldEmbOff(ivf.offs(j))
-        })
-      }
-      require(cells <= Int.MaxValue / 8, s"patched slab too large: $cells cells")
-      var cleanBytes = 0L
-      var dirtyBytes = 0L
-      val outCh = FileChannel.open(Paths.get(outSlabPath),
-        StandardOpenOption.CREATE, StandardOpenOption.WRITE,
-        StandardOpenOption.TRUNCATE_EXISTING)
-      try {
-        val buf = ByteBuffer.allocateDirect(1 << 20).order(ByteOrder.LITTLE_ENDIAN)
-        def flush(): Unit = { buf.flip(); while (buf.hasRemaining) outCh.write(buf); buf.clear() }
-        def ensure(k: Int): Unit = if (buf.remaining < k) flush()
-        // bulk-splice a clean byte range straight from the old mapping
-        def copyOld(from: Long, until: Long): Unit = if (until > from) {
-          flush()
-          val s = old.duplicate()
-          s.position(from.toInt).limit(until.toInt)
-          while (s.hasRemaining) outCh.write(s)
-          cleanBytes += until - from
-        }
-        ensure(8); buf.putInt(0x534C4142); buf.putInt(n)
-        // ids region
-        (0 until ivf.c).foreach { j =>
-          newRowsByCell.get(j) match {
-            case Some(rows) =>
-              rows.foreach { r => ensure(8); buf.putLong(r._1); dirtyBytes += 8 }
-            case None => copyOld(oldIdsStart + 8L * ivf.offs(j),
-              oldIdsStart + 8L * ivf.offs(j + 1))
-          }
-        }
-        // users region
-        (0 until ivf.c).foreach { j =>
-          newRowsByCell.get(j) match {
-            case Some(rows) =>
-              rows.foreach { r => ensure(4); buf.putInt(r._3); dirtyBytes += 4 }
-            case None => copyOld(oldUsersStart + 4L * ivf.offs(j),
-              oldUsersStart + 4L * ivf.offs(j + 1))
-          }
-        }
-        // offs region: cumulative embedding cells shift whenever an
-        // earlier cell changed size, so it is recomputed row by row
-        // (4 bytes/row of pure arithmetic — never the bottleneck)
-        var off = 0L
-        ensure(4); buf.putInt(0)
-        (0 until ivf.c).foreach { j =>
-          newRowsByCell.get(j) match {
-            case Some(rows) => rows.foreach { r =>
-              off += r._2.length; ensure(4); buf.putInt(off.toInt)
-            }
-            case None =>
-              var row = ivf.offs(j)
-              while (row < ivf.offs(j + 1)) {
-                off += oldEmbOff(row + 1) - oldEmbOff(row)
-                ensure(4); buf.putInt(off.toInt)
-                row += 1
-              }
-          }
-        }
-        // doubles region
-        (0 until ivf.c).foreach { j =>
-          newRowsByCell.get(j) match {
-            case Some(rows) => rows.foreach { r =>
-              val e = r._2; var i = 0
-              while (i < e.length) { ensure(8); buf.putDouble(e(i)); i += 1 }
-              dirtyBytes += 8L * e.length
-            }
-            case None => copyOld(oldDataStart + 8L * oldEmbOff(ivf.offs(j)),
-              oldDataStart + 8L * oldEmbOff(ivf.offs(j + 1)))
-          }
-        }
-        flush()
-        val want = 8L + 8L * n + 4L * n + 4L * (n + 1) + 8L * cells
-        require(outCh.position() == want,
-          s"patched slab drift: ${outCh.position()} != $want")
-      } finally outCh.close()
-      // next-generation sidecar: same cells/centroids, shifted offsets,
-      // fingerprinted against the PATCHED slab
-      val newOffs = new Array[Int](ivf.c + 1)
-      (0 until ivf.c).foreach(j => newOffs(j + 1) = newOffs(j) + newCellRows(j))
-      writeIvf(outIvfPath, ivf.cids, ivf.cents, newOffs, outSlabPath)
-      // Dirty-set completeness guard (ADVICE r16 #1): the splice TRUSTS
-      // the caller's dirty-cell set — an upsert whose OLD cell is omitted
-      // leaves the stale copy in a clean cell AND writes the fresh copy
-      // into a dirty one, producing a duplicated id that passes every
-      // fingerprint gate and silently diverges from a rebuild. With
-      // `validate` on, one ids-region pass (8 bytes/row) over the patched
-      // slab asserts no dirty-row id survives in any clean cell.
-      if (validate) {
-        val dirtyIds = new java.util.HashSet[java.lang.Long]()
-        newRowsByCell.values.foreach(_.foreach(r => dirtyIds.add(r._1)))
-        if (!dirtyIds.isEmpty) {
-          val newIds = readIds(outSlabPath)
-          (0 until ivf.c).foreach { j =>
-            if (!newRowsByCell.contains(j)) {
-              var row = newOffs(j)
-              while (row < newOffs(j + 1)) {
-                require(!dirtyIds.contains(newIds(row)),
-                  s"patch validation: id ${newIds(row)} written to a dirty " +
-                    s"cell also survives in clean cell $j — the dirty-cell " +
-                    "set is INCOMPLETE (an upsert's old cell was omitted); " +
-                    "the patched slab would silently diverge from a rebuild")
-                row += 1
-              }
-            }
-          }
-        }
-      }
-      // int8 twin: splice the code region the same way (codes are a pure
-      // per-cell function of the floats, so clean cells' codes are
-      // bit-reusable), stamped with the PATCHED float slab's fingerprint
-      if (oldInt8Path.nonEmpty) {
+    val old = mapSlab(oldSlabPath, FloatSlab, WholeFile)
+    require(ivf.offs(ivf.c) == old.lay.n,
+      s"sidecar covers ${ivf.offs(ivf.c)} rows, slab has ${old.lay.n}")
+    // the old twin must pair with the OLD float slab before its
+    // clean-cell codes are splice-reused: without this gate a stale
+    // generation's codes (same row count — any upsert-only churn)
+    // would be copied and RE-STAMPED with a valid fingerprint for
+    // the new generation, laundering exactly the silent-stale-codes
+    // hazard the pairing discipline exists to prevent
+    val oldI8 =
+      if (oldInt8Path.isEmpty) null
+      else {
         require(outInt8Path.nonEmpty, "outInt8Path required with oldInt8Path")
-        val oldI8 = readInt8(oldInt8Path)
-        // the old twin must pair with the OLD float slab before its
-        // clean-cell codes are splice-reused: without this gate a stale
-        // generation's codes (same row count — any upsert-only churn)
-        // would be copied and RE-STAMPED with a valid fingerprint for
-        // the new generation, laundering exactly the silent-stale-codes
-        // hazard the pairing discipline exists to prevent
-        oldI8.requirePairedWith(oldSlabPath)
-        require(oldI8.n == oldN,
-          s"int8 slab rows ${oldI8.n} != float slab rows $oldN")
-        val floatSlabBytes = java.nio.file.Files.size(Paths.get(outSlabPath))
-        val floatChecksum = floatSlabChecksum(outSlabPath)
-        val i8Ch = FileChannel.open(Paths.get(outInt8Path),
-          StandardOpenOption.CREATE, StandardOpenOption.WRITE,
-          StandardOpenOption.TRUNCATE_EXISTING)
-        try {
-          val buf = ByteBuffer.allocateDirect(1 << 20).order(ByteOrder.LITTLE_ENDIAN)
-          def flush(): Unit = { buf.flip(); while (buf.hasRemaining) i8Ch.write(buf); buf.clear() }
-          def ensure(k: Int): Unit = if (buf.remaining < k) flush()
-          ensure(24); buf.putInt(0x534C4238); buf.putInt(n)
-          buf.putLong(floatSlabBytes); buf.putLong(floatChecksum)
-          (0 until ivf.c).foreach { j =>
-            newRowsByCell.get(j) match {
-              case Some(rows) => rows.foreach { r => ensure(8); buf.putLong(r._1) }
-              case None =>
-                var row = ivf.offs(j)
-                while (row < ivf.offs(j + 1)) {
-                  ensure(8); buf.putLong(oldI8.ids(row)); row += 1
-                }
-            }
-          }
-          (0 until ivf.c).foreach { j =>
-            newRowsByCell.get(j) match {
-              case Some(rows) => rows.foreach { r => ensure(4); buf.putInt(r._3) }
-              case None =>
-                var row = ivf.offs(j)
-                while (row < ivf.offs(j + 1)) {
-                  ensure(4); buf.putInt(oldI8.users(row)); row += 1
-                }
-            }
-          }
-          var off = 0L
-          ensure(4); buf.putInt(0)
-          (0 until ivf.c).foreach { j =>
-            newRowsByCell.get(j) match {
-              case Some(rows) => rows.foreach { r =>
-                off += r._2.length; ensure(4); buf.putInt(off.toInt)
-              }
-              case None =>
-                var row = ivf.offs(j)
-                while (row < ivf.offs(j + 1)) {
-                  off += oldI8.offs(row + 1) - oldI8.offs(row)
-                  ensure(4); buf.putInt(off.toInt)
-                  row += 1
-                }
-            }
-          }
-          (0 until ivf.c).foreach { j =>
-            newRowsByCell.get(j) match {
-              case Some(rows) => rows.foreach { r =>
-                val e = r._2; var i = 0
-                while (i < e.length) {
-                  ensure(1); buf.put(BatchedServer.quantizeCode(e(i))); i += 1
-                }
-              }
-              case None =>
-                var b = oldI8.offs(ivf.offs(j))
-                val until = oldI8.offs(ivf.offs(j + 1))
-                while (b < until) {
-                  ensure(1); buf.put(oldI8.codes(b)); b += 1
-                }
-            }
-          }
-          flush()
-        } finally i8Ch.close()
+        val t = mapSlab(oldInt8Path, Int8Twin, WholeFile)
+        requirePaired("int8 slab", t.buf.getLong(8), t.buf.getLong(16), oldSlabPath)
+        require(t.lay.n == old.lay.n,
+          s"int8 slab rows ${t.lay.n} != float slab rows ${old.lay.n}")
+        t
       }
-      (n, cleanBytes, dirtyBytes)
-    } finally inCh.close()
+    val parts = Array.tabulate(ivf.c)(j => newRowsByCell.getOrElse(j, null))
+    val (cleanBytes, dirtyBytes) =
+      writeSlab(outSlabPath, FloatSlab, None, parts, old, ivf.offs)
+    // next-generation sidecar: same cells/centroids, shifted offsets,
+    // fingerprinted against the PATCHED slab
+    val newOffs = new Array[Int](ivf.c + 1)
+    (0 until ivf.c).foreach(j => newOffs(j + 1) = newOffs(j) +
+      (if (parts(j) != null) parts(j).length else ivf.offs(j + 1) - ivf.offs(j)))
+    writeIvf(outIvfPath, ivf.cids, ivf.cents, newOffs, outSlabPath)
+    // Dirty-set completeness guard (ADVICE r16 #1): the splice TRUSTS
+    // the caller's dirty-cell set — an upsert whose OLD cell is omitted
+    // leaves the stale copy in a clean cell AND writes the fresh copy
+    // into a dirty one, producing a duplicated id that passes every
+    // fingerprint gate and silently diverges from a rebuild. With
+    // `validate` on, one ids-region pass (8 bytes/row) over the patched
+    // slab asserts no dirty-row id survives in any clean cell.
+    if (validate) {
+      val dirtyIds = new java.util.HashSet[java.lang.Long]()
+      newRowsByCell.values.foreach(_.foreach(r => dirtyIds.add(r._1)))
+      if (!dirtyIds.isEmpty) {
+        val newIds = readIds(outSlabPath)
+        (0 until ivf.c).foreach { j =>
+          if (!newRowsByCell.contains(j)) {
+            var row = newOffs(j)
+            while (row < newOffs(j + 1)) {
+              require(!dirtyIds.contains(newIds(row)),
+                s"patch validation: id ${newIds(row)} written to a dirty " +
+                  s"cell also survives in clean cell $j — the dirty-cell " +
+                  "set is INCOMPLETE (an upsert's old cell was omitted); " +
+                  "the patched slab would silently diverge from a rebuild")
+              row += 1
+            }
+          }
+        }
+      }
+    }
+    // int8 twin, stamped with the PATCHED float slab's fingerprint
+    if (oldI8 != null)
+      writeSlab(outInt8Path, Int8Twin, Some(stampOf(outSlabPath)), parts,
+        oldI8, ivf.offs)
+    (newOffs(ivf.c), cleanBytes, dirtyBytes)
   }
 
   /** GRAPH sidecar of a slab (VERDICT r16 #4 — the reference's serving
@@ -572,22 +511,13 @@ object SlabIO {
     * per coarse region — the single-layer stand-in for HNSW's upper
     * layers, same role the entry cells play in
     * [[graft.operators.Ann.graphBeamServe]]). Carries the float slab's
-    * (size, content-checksum) pairing fingerprint: row indices against
-    * the wrong or regenerated slab would silently walk garbage. */
+    * pairing stamp: row indices against the wrong or regenerated slab
+    * would silently walk garbage. */
   final case class GraphSidecar(offs: Array[Int], nbrs: Array[Int],
       entries: Array[Int], floatSlabBytes: Long, floatChecksum: Long) {
     def n: Int = offs.length - 1
-    def requirePairedWith(floatSlabPath: String): Unit = {
-      val size = java.nio.file.Files.size(Paths.get(floatSlabPath))
-      require(floatSlabBytes == size,
-        s"graph sidecar fingerprint mismatch: adjacency was cut from a " +
-          s"$floatSlabBytes-byte float slab, $floatSlabPath is $size")
-      val sum = floatSlabChecksum(floatSlabPath)
-      require(floatChecksum == sum,
-        s"graph sidecar content-fingerprint mismatch: adjacency was cut " +
-          s"from a float slab with checksum $floatChecksum, " +
-          s"$floatSlabPath has $sum")
-    }
+    def requirePairedWith(floatSlabPath: String): Unit =
+      requirePaired("graph sidecar", floatSlabBytes, floatChecksum, floatSlabPath)
   }
 
   def writeGraph(path: String, offs: Array[Int], nbrs: Array[Int],
@@ -597,43 +527,32 @@ object SlabIO {
       s"graph sidecar shape: offs end ${offs(n)} != ${nbrs.length} nbrs")
     nbrs.foreach(r => require(r >= 0 && r < n, s"neighbor row $r of $n"))
     entries.foreach(r => require(r >= 0 && r < n, s"entry row $r of $n"))
-    val floatBytes = java.nio.file.Files.size(Paths.get(floatSlabPath))
-    val floatSum = floatSlabChecksum(floatSlabPath)
+    val (floatBytes, floatSum) = stampOf(floatSlabPath)
     val bytes = 4L + 4 + 4 + 4 + 8 + 8 + 4L * (n + 1) + 4L * nbrs.length +
       4L * entries.length
     require(bytes <= Int.MaxValue, s"graph sidecar too large: $bytes")
-    val ch = FileChannel.open(Paths.get(path), StandardOpenOption.CREATE,
-      StandardOpenOption.WRITE, StandardOpenOption.TRUNCATE_EXISTING)
-    try {
-      val buf = ByteBuffer.allocateDirect(bytes.toInt)
-        .order(ByteOrder.LITTLE_ENDIAN)
-      buf.putInt(0x47524653) // "GRFS"
-      buf.putInt(n).putInt(nbrs.length).putInt(entries.length)
-      buf.putLong(floatBytes).putLong(floatSum)
-      offs.foreach(buf.putInt)
-      nbrs.foreach(buf.putInt)
-      entries.foreach(buf.putInt)
-      buf.flip()
-      while (buf.hasRemaining) ch.write(buf)
-    } finally ch.close()
+    writing(path) { out =>
+      out.int(GraphMagic)
+      out.int(n); out.int(nbrs.length); out.int(entries.length)
+      out.long(floatBytes); out.long(floatSum)
+      offs.foreach(out.int)
+      nbrs.foreach(out.int)
+      entries.foreach(out.int)
+      out.finish(bytes)
+    }
   }
 
   def readGraph(path: String): GraphSidecar = {
-    val ch = FileChannel.open(Paths.get(path), StandardOpenOption.READ)
-    try {
-      val buf = ch.map(FileChannel.MapMode.READ_ONLY, 0, ch.size())
-        .order(ByteOrder.LITTLE_ENDIAN)
-      require(buf.getInt() == 0x47524653, s"bad graph sidecar magic in $path")
-      val n = buf.getInt()
-      val ne = buf.getInt()
-      val nEntries = buf.getInt()
-      val floatBytes = buf.getLong()
-      val floatSum = buf.getLong()
-      val offs = Array.fill(n + 1)(buf.getInt())
-      val nbrs = Array.fill(ne)(buf.getInt())
-      val entries = Array.fill(nEntries)(buf.getInt())
-      GraphSidecar(offs, nbrs, entries, floatBytes, floatSum)
-    } finally ch.close()
+    val buf = mapped(path, GraphMagic, "graph sidecar", WholeFile)
+    val n = buf.getInt()
+    val ne = buf.getInt()
+    val nEntries = buf.getInt()
+    val floatBytes = buf.getLong()
+    val floatSum = buf.getLong()
+    val offs = Array.fill(n + 1)(buf.getInt())
+    val nbrs = Array.fill(ne)(buf.getInt())
+    val entries = Array.fill(nEntries)(buf.getInt())
+    GraphSidecar(offs, nbrs, entries, floatBytes, floatSum)
   }
 
   /** PERSISTED serving knobs (VERDICT r16 #6): the store-side LCB
@@ -673,19 +592,10 @@ object SlabIO {
     * absolute-read from the OS page cache (at cluster scale: the disk/
     * mmap tier the reference leaves originals on when INT8 is always-RAM,
     * settings.py:48-51). Returns the mapped buffer and the byte offset
-    * where the doubles region starts (header layout from [[write]]). */
+    * where the doubles region starts. */
   def mapFloatForRescore(path: String): (ByteBuffer, Long) = {
-    val ch = FileChannel.open(Paths.get(path), StandardOpenOption.READ)
-    try {
-      require(ch.size() <= Int.MaxValue,
-        s"float slab too large to map in one buffer: ${ch.size()} bytes")
-      val buf = ch.map(FileChannel.MapMode.READ_ONLY, 0, ch.size())
-        .order(ByteOrder.LITTLE_ENDIAN)
-      require(buf.getInt() == 0x534C4142, s"bad slab magic in $path")
-      val n = buf.getInt()
-      val dataStart = 8L + 8L * n + 4L * n + 4L * (n + 1)
-      (buf, dataStart)
-    } finally ch.close() // the mapping outlives the channel by spec
+    val s = mapSlab(path, FloatSlab, WholeFile)
+    (s.buf, s.lay.cells)
   }
 
   /** The int8 worker's float rows ([[BatchedServer.FloatRows]]): the code
@@ -715,23 +625,13 @@ object SlabIO {
   /** The ids region alone (8 bytes/row, one streaming pass) — the
     * cheapest id→slab-row scan; with the cell directory's row offsets it
     * answers "which cells do these ids live in" without touching the
-    * doubles region. */
+    * doubles region (only header + ids are mapped). */
   def readIds(path: String): Array[Long] = {
-    val ch = FileChannel.open(Paths.get(path), StandardOpenOption.READ)
-    try {
-      // header first (8 bytes), then remap just header+ids — the pass
-      // never faults in the doubles region's pages
-      val head = ch.map(FileChannel.MapMode.READ_ONLY, 0, 8)
-        .order(ByteOrder.LITTLE_ENDIAN)
-      require(head.getInt(0) == 0x534C4142, s"bad slab magic in $path")
-      val n = head.getInt(4)
-      val buf = ch.map(FileChannel.MapMode.READ_ONLY, 0, 8L + 8L * n)
-        .order(ByteOrder.LITTLE_ENDIAN)
-      val ids = new Array[Long](n)
-      var i = 0
-      while (i < n) { ids(i) = buf.getLong(8 + 8 * i); i += 1 }
-      ids
-    } finally ch.close()
+    val s = mapSlab(path, FloatSlab, _.users)
+    val ids = new Array[Long](s.lay.n)
+    var i = 0
+    while (i < ids.length) { ids(i) = s.buf.getLong((s.lay.ids + 8L * i).toInt); i += 1 }
+    ids
   }
 
   /** Row-range read of a slab: rows [lo, hi) only — the incremental
@@ -740,65 +640,38 @@ object SlabIO {
     * would swamp the splice's entire saving). */
   def readRows(path: String, lo: Int, hi: Int)
       : Array[(Long, Array[Double], Int)] = {
-    val ch = FileChannel.open(Paths.get(path), StandardOpenOption.READ)
-    try {
-      val buf = ch.map(FileChannel.MapMode.READ_ONLY, 0, ch.size())
-        .order(ByteOrder.LITTLE_ENDIAN)
-      require(buf.getInt(0) == 0x534C4142, s"bad slab magic in $path")
-      val n = buf.getInt(4)
-      require(lo >= 0 && hi <= n && lo <= hi, s"range [$lo,$hi) of $n rows")
-      val idsStart = 8L
-      val usersStart = idsStart + 8L * n
-      val offsStart = usersStart + 4L * n
-      val dataStart = offsStart + 4L * (n + 1)
-      val rows = new Array[(Long, Array[Double], Int)](hi - lo)
-      var i = lo
-      while (i < hi) {
-        val e0 = buf.getInt((offsStart + 4L * i).toInt)
-        val e1 = buf.getInt((offsStart + 4L * (i + 1)).toInt)
-        val e = new Array[Double](e1 - e0)
-        var j = 0
-        while (j < e.length) {
-          e(j) = buf.getDouble((dataStart + 8L * (e0 + j)).toInt); j += 1
-        }
-        rows(i - lo) = (buf.getLong((idsStart + 8L * i).toInt), e,
-          buf.getInt((usersStart + 4L * i).toInt))
-        i += 1
+    val s = mapSlab(path, FloatSlab, WholeFile)
+    val (buf, lay) = (s.buf, s.lay)
+    require(lo >= 0 && hi <= lay.n && lo <= hi, s"range [$lo,$hi) of ${lay.n} rows")
+    Array.tabulate(hi - lo) { r =>
+      val i = lo + r
+      val e0 = s.off(i)
+      val e = new Array[Double](s.off(i + 1) - e0)
+      var j = 0
+      while (j < e.length) {
+        e(j) = buf.getDouble((lay.cells + 8L * (e0 + j)).toInt); j += 1
       }
-      rows
-    } finally ch.close()
+      (buf.getLong((lay.ids + 8L * i).toInt), e,
+        buf.getInt((lay.users + 4L * i).toInt))
+    }
   }
 
   /** Read a slab file back into the row array [[BatchedServer.FlatReplica]]
     * builds from (layout decisions — SIMD transpose included — are the
     * replica code's, not the file's). */
   def read(path: String): Array[(Long, Array[Double], Int)] = {
-    val ch = FileChannel.open(Paths.get(path), StandardOpenOption.READ)
-    try {
-      val buf = ch.map(FileChannel.MapMode.READ_ONLY, 0, ch.size())
-        .order(ByteOrder.LITTLE_ENDIAN)
-      require(buf.getInt() == 0x534C4142, s"bad slab magic in $path")
-      val n = buf.getInt()
-      val ids = new Array[Long](n)
-      var i = 0
-      while (i < n) { ids(i) = buf.getLong(); i += 1 }
-      val users = new Array[Int](n)
-      i = 0
-      while (i < n) { users(i) = buf.getInt(); i += 1 }
-      val offs = new Array[Int](n + 1)
-      i = 0
-      while (i <= n) { offs(i) = buf.getInt(); i += 1 }
-      val rows = new Array[(Long, Array[Double], Int)](n)
-      i = 0
-      while (i < n) {
-        val e = new Array[Double](offs(i + 1) - offs(i))
-        var j = 0
-        while (j < e.length) { e(j) = buf.getDouble(); j += 1 }
-        rows(i) = (ids(i), e, users(i))
-        i += 1
-      }
-      rows
-    } finally ch.close()
+    val s = mapSlab(path, FloatSlab, WholeFile)
+    val (ids, users, offs) = s.columns()
+    val rows = new Array[(Long, Array[Double], Int)](s.lay.n)
+    var i = 0
+    while (i < rows.length) {
+      val e = new Array[Double](offs(i + 1) - offs(i))
+      var j = 0
+      while (j < e.length) { e(j) = s.buf.getDouble(); j += 1 }
+      rows(i) = (ids(i), e, users(i))
+      i += 1
+    }
+    rows
   }
 }
 
@@ -824,6 +697,25 @@ object ShardWorker {
     * normal [int nq][int d][queries] block; one filter applies to the
     * whole batch. Reply shape is identical to an unfiltered search. */
   val FilteredCmd: Int = -3
+
+  /** Frame bounds, checked before the worker allocates anything a frame
+    * asks for: a search frame carries at most `MaxFrameCells` query cells
+    * (nq·d, each query counting at least one) and a filter at most
+    * `MaxFilterUsers` user ids. Every in-repo sender fits with a wide
+    * margin (the router sends one query of the embedding's dimension and
+    * at most a few hundred users). A frame outside them — or with a
+    * negative count, or an unknown negative command — closes that
+    * connection only; the worker keeps serving every other one. */
+  private[graft] val MaxFrameCells: Int = 1 << 20
+  private[graft] val MaxFilterUsers: Int = 1 << 16
+
+  /** A frame count that must lie in [0, max]; otherwise the frame is bad. */
+  private def bounded(v: Long, max: Long, what: String): Int = {
+    if (v < 0 || v > max)
+      throw new java.io.StreamCorruptedException(
+        s"bad frame: $what = $v outside [0, $max]")
+    v.toInt
+  }
 
   /** The worker-side full-scan switch (the reference's
     * `settings.full_scan_threshold` = 20000, src/config/settings.py:55,
@@ -1276,20 +1168,25 @@ object ShardWorker {
             }
             out.flush()
           }
+          else if (nq < 0 && nq != FilteredCmd)
+            throw new java.io.StreamCorruptedException(s"unknown command $nq")
           else {
             // the one search-frame reader: an optional filter prefix
             // ([[FilteredCmd]], int nu, nu user ids), then
-            // [int nq][int d][nq·d doubles]
+            // [int nq][int d][nq·d doubles]; every count is bounded
+            // before anything is allocated
             val users =
               if (nq != FilteredCmd) null
               else {
-                val us = new Array[Int](in.readInt())
+                val us = new Array[Int](bounded(in.readInt(), MaxFilterUsers, "nu"))
                 var ui = 0
                 while (ui < us.length) { us(ui) = in.readInt(); ui += 1 }
                 us
               }
-            val nqs = if (users == null) nq else in.readInt()
-            val d = in.readInt()
+            val nqs = bounded(if (users == null) nq else in.readInt(),
+              MaxFrameCells, "nq")
+            val d = bounded(in.readInt(), MaxFrameCells, "d")
+            bounded(nqs.toLong * math.max(d, 1), MaxFrameCells, "nq·d")
             val queries = Array.ofDim[Array[Double]](nqs)
             var qi = 0
             while (qi < nqs) {
@@ -1318,7 +1215,7 @@ object ShardWorker {
             out.flush()
           }
         }
-      } catch { case _: java.io.IOException => () } // client gone
+      } catch { case _: java.io.IOException => () } // client gone or bad frame
       finally sock.close()
     }
 
@@ -1489,8 +1386,6 @@ final class RemoteShardedRouter(
   private val lastAckedGen: IndexedSeq[Array[java.util.concurrent.atomic.AtomicLong]] =
     endpoints.map(eps =>
       Array.fill(eps.length)(new java.util.concurrent.atomic.AtomicLong(-1L)))
-  private[graft] def ackedGeneration(shard: Int, endpoint: Int): Long =
-    lastAckedGen(shard)(endpoint).get()
 
   /** (Re)establish `c` against its shard's active endpoint, advancing
     * through the endpoint list on connect failure — the FAILOVER step: a
@@ -1532,70 +1427,73 @@ final class RemoteShardedRouter(
     throw lastErr
   }
 
-  private def roundTrip(shard: Int, qemb: Array[Double])
-      : Array[(Long, Double, Int)] =
-    roundTripOn(pools(shard).take(), qemb)
-
-  /** Round-trip over a conn the CALLER already holds (the hedge path
-    * reserves its conn at decision time — see searchHedged); always
-    * re-pools it, success or error. An IO failure mid-request closes the
-    * socket and RETRIES — once per endpoint plus one for a stale pooled
-    * socket — reconnecting through [[ensureConnected]]'s failover walk;
-    * search is idempotent and side-effect-free on the worker, so the
-    * retry can never double-apply anything. A worker crash therefore
-    * costs the in-flight requests one reconnect each, not an error. */
-  private def roundTripOn(c: Conn, qemb: Array[Double])
-      : Array[(Long, Double, Int)] =
-    roundTripFrameOn(c, out => {
+  /** The search frame: [int 1][int d][d doubles]. */
+  private def searchFrame(qemb: Array[Double]): DataOutputStream => Unit =
+    out => {
       out.writeInt(1); out.writeInt(qemb.length)
       var j = 0
       while (j < qemb.length) { out.writeDouble(qemb(j)); j += 1 }
-    })
+    }
 
-  /** FILTERED round-trip ([[ShardWorker.FilteredCmd]] frame): the same
-    * retry/failover/re-pool discipline as an unfiltered search — the
-    * filter rides the frame, so it is idempotent and side-effect-free on
-    * the worker exactly like a search. */
-  private def roundTripFilteredOn(c: Conn, qemb: Array[Double],
-      users: Array[Int]): Array[(Long, Double, Int)] =
-    roundTripFrameOn(c, out => {
+  /** The FILTERED search frame ([[ShardWorker.FilteredCmd]], int nu, nu
+    * user ids, then the search frame): the filter rides the frame, so it
+    * is idempotent and side-effect-free on the worker exactly like a
+    * search, with the same retry/failover/re-pool discipline. */
+  private def filteredFrame(qemb: Array[Double], users: Array[Int])
+      : DataOutputStream => Unit =
+    out => {
       out.writeInt(ShardWorker.FilteredCmd)
       out.writeInt(users.length)
       var u = 0
       while (u < users.length) { out.writeInt(users(u)); u += 1 }
-      out.writeInt(1); out.writeInt(qemb.length)
-      var j = 0
-      while (j < qemb.length) { out.writeDouble(qemb(j)); j += 1 }
-    })
+      searchFrame(qemb)(out)
+    }
 
-  private def roundTripFrameOn(c: Conn,
-      writeReq: DataOutputStream => Unit): Array[(Long, Double, Int)] = {
+  /** The one retry loop over a conn the CALLER already holds (the hedge
+    * path reserves its conn at decision time — see searchHedged); always
+    * re-pools it, success or error. An IO failure mid-request closes the
+    * socket and RETRIES — once per endpoint plus one for a stale pooled
+    * socket — reconnecting through [[ensureConnected]]'s failover walk.
+    * Every command sent through it is idempotent on the worker, so a
+    * retry can never double-apply anything. Left = the last IO failure
+    * once the attempts are spent. */
+  private def withRetry[A](c: Conn)(exchange: Conn => A)
+      : Either[java.io.IOException, A] = {
     try {
-      val maxAttempts = endpoints(c.shard).length + 1
+      var lastErr: java.io.IOException = null
       var attempt = 0
-      while (true) {
+      while (attempt < maxAttempts(c.shard)) {
         try {
           ensureConnected(c)
-          val in = c.in
-          writeReq(c.out)
-          c.out.flush()
-          val m = in.readInt()
-          val hits = new Array[(Long, Double, Int)](m)
-          var i = 0
-          while (i < m) {
-            hits(i) = (in.readLong(), in.readDouble(), in.readInt()); i += 1
-          }
-          return hits
+          return Right(exchange(c))
         } catch {
           case e: java.io.IOException =>
             c.disconnect() // a mid-frame failure poisons the stream: drop it
+            lastErr = e
             attempt += 1
-            if (attempt >= maxAttempts) throw e
         }
       }
-      throw new IllegalStateException("unreachable")
+      Left(lastErr)
     } finally pools(c.shard).put(c)
   }
+
+  private def maxAttempts(shard: Int): Int = endpoints(shard).length + 1
+
+  /** Search round-trip of one frame: a worker crash costs the in-flight
+    * requests one reconnect each, not an error. */
+  private def roundTripFrameOn(c: Conn, writeReq: DataOutputStream => Unit)
+      : Array[(Long, Double, Int)] =
+    withRetry(c) { c =>
+      writeReq(c.out)
+      c.out.flush()
+      val in = c.in
+      val hits = new Array[(Long, Double, Int)](in.readInt())
+      var i = 0
+      while (i < hits.length) {
+        hits(i) = (in.readLong(), in.readDouble(), in.readInt()); i += 1
+      }
+      hits
+    }.fold(e => throw e, identity)
 
   /** Ask shard `shard`'s worker to swap its served slab generation in
     * place ([[ShardWorker.ReloadCmd]]): empty `int8Path`/`ivfPath` mean
@@ -1623,52 +1521,38 @@ final class RemoteShardedRouter(
   def reload(shard: Int, slabPath: String, int8Path: String = "",
       ivfPath: String = "", nprobe: Int = 0, oversample: Double = 3.0,
       graphPath: String = "", beam: Int = 0)
-      : Either[String, (Long, Int)] = {
-    val c = pools(shard).take()
-    try {
-      val maxAttempts = endpoints(shard).length + 1
-      var attempt = 0
-      var lastErr: java.io.IOException = null
-      while (attempt < maxAttempts) {
-        try {
-          ensureConnected(c)
-          c.out.writeInt(ShardWorker.ReloadCmd)
-          c.out.writeUTF(slabPath)
-          c.out.writeUTF(int8Path)
-          c.out.writeUTF(ivfPath)
-          c.out.writeInt(nprobe)
-          c.out.writeDouble(oversample)
-          c.out.writeUTF(graphPath)
-          c.out.writeInt(beam)
-          c.out.flush()
-          return if (c.in.readInt() == 1) {
-            reloadCount.incrementAndGet()
-            val version = c.in.readLong()
-            val n = c.in.readInt()
-            // per-endpoint generation ack (ADVICE r16 #3): record WHERE
-            // this reload actually landed, so a replica left behind on an
-            // older generation is visible in metricsText
-            if (c.epIdx >= 0) lastAckedGen(shard)(c.epIdx).set(version)
-            Right((version, n))
-          } else Left(s"rejected: ${c.in.readUTF()}")
-        } catch {
-          case e: java.io.IOException =>
-            c.disconnect()
-            lastErr = e
-            attempt += 1
-        }
-      }
-      Left(s"indeterminate: io after $maxAttempts attempts " +
-        s"(${lastErr.getMessage}) — the worker may be on either " +
-        "generation; re-send to settle")
-    } finally pools(c.shard).put(c)
-  }
+      : Either[String, (Long, Int)] =
+    withRetry(pools(shard).take()) { c =>
+      c.out.writeInt(ShardWorker.ReloadCmd)
+      c.out.writeUTF(slabPath)
+      c.out.writeUTF(int8Path)
+      c.out.writeUTF(ivfPath)
+      c.out.writeInt(nprobe)
+      c.out.writeDouble(oversample)
+      c.out.writeUTF(graphPath)
+      c.out.writeInt(beam)
+      c.out.flush()
+      if (c.in.readInt() == 1) {
+        reloadCount.incrementAndGet()
+        val version = c.in.readLong()
+        val n = c.in.readInt()
+        // per-endpoint generation ack (ADVICE r16 #3): record WHERE
+        // this reload actually landed, so a replica left behind on an
+        // older generation is visible in metricsText
+        if (c.epIdx >= 0) lastAckedGen(shard)(c.epIdx).set(version)
+        Right((version, n))
+      } else Left(s"rejected: ${c.in.readUTF()}")
+    }.fold(e => Left(s"indeterminate: io after ${maxAttempts(shard)} " +
+      s"attempts (${e.getMessage}) — the worker may be on either " +
+      "generation; re-send to settle"), identity)
 
-  private def scatter(qemb: Array[Double])
+  /** Send `frame` to every shard, each on its own pooled conn. */
+  private def scatter(frame: DataOutputStream => Unit)
       : IndexedSeq[java.util.concurrent.Future[Array[(Long, Double, Int)]]] =
     addrs.indices.map { s =>
       exec.submit(new java.util.concurrent.Callable[Array[(Long, Double, Int)]] {
-        def call(): Array[(Long, Double, Int)] = roundTrip(s, qemb)
+        def call(): Array[(Long, Double, Int)] =
+          roundTripFrameOn(pools(s).take(), frame)
       })
     }
 
@@ -1687,7 +1571,7 @@ final class RemoteShardedRouter(
     * Blocks until ALL shards answer — exact, no deadline (see class doc
     * for the straggler story). */
   def search(qemb: Array[Double]): Array[(Long, Double, Int)] =
-    mergeTopK(scatter(qemb).flatMap(_.get()).toArray)
+    mergeTopK(scatter(searchFrame(qemb)).flatMap(_.get()).toArray)
 
   /** FILTERED scatter-gather (VERDICT r16 #1): every shard serves the
     * predicate through its worker-side filtered planner
@@ -1698,15 +1582,8 @@ final class RemoteShardedRouter(
     * reference's verify flow (filtered top-k by user_id,
     * api_spec.md:739-762) runs through this entry point. */
   def searchFiltered(qemb: Array[Double], users: Array[Int])
-      : Array[(Long, Double, Int)] = {
-    val futs = addrs.indices.map { s =>
-      exec.submit(new java.util.concurrent.Callable[Array[(Long, Double, Int)]] {
-        def call(): Array[(Long, Double, Int)] =
-          roundTripFilteredOn(pools(s).take(), qemb, users)
-      })
-    }
-    mergeTopK(futs.flatMap(_.get()).toArray)
-  }
+      : Array[(Long, Double, Int)] =
+    mergeTopK(scatter(filteredFrame(qemb, users)).flatMap(_.get()).toArray)
 
   /** Deadline-bounded request: shards that answer within `timeoutMs`
     * (ONE budget across the whole gather, not per shard) are merged;
@@ -1716,7 +1593,7 @@ final class RemoteShardedRouter(
     * caller can see and act on). */
   def searchPartial(qemb: Array[Double], timeoutMs: Long)
       : RemoteShardedRouter.PartialResult = {
-    val futs = scatter(qemb)
+    val futs = scatter(searchFrame(qemb))
     val deadline = System.nanoTime() + timeoutMs * 1000000L
     var answered = 0
     val got = Array.newBuilder[(Long, Double, Int)]
@@ -1817,6 +1694,7 @@ final class RemoteShardedRouter(
       : RemoteShardedRouter.HedgedResult = {
     val nShards = addrs.length
     hedgedRequests.incrementAndGet() // denominator counts in-flight work
+    val frame = searchFrame(qemb)
     // per-request reply channel: each attempt reports (shard, hits,
     // wasHedge) when it completes; late/duplicate replies are simply
     // ignored by the drain below (the channel is request-local garbage)
@@ -1826,7 +1704,7 @@ final class RemoteShardedRouter(
         : java.util.concurrent.Future[_] =
       exec.submit(new Runnable {
         def run(): Unit =
-          try replies.offer((shard, roundTrip(shard, qemb), isHedge))
+          try replies.offer((shard, roundTripFrameOn(pools(shard).take(), frame), isHedge))
           catch { case _: Throwable => () } // socket error: shard silent
       })
     // hedge attempt over a connection reserved at DECISION time: runs to
@@ -1834,7 +1712,7 @@ final class RemoteShardedRouter(
     def hedgeAttempt(shard: Int, c: Conn): Unit =
       exec.submit(new Runnable {
         def run(): Unit =
-          try replies.offer((shard, roundTripOn(c, qemb), true))
+          try replies.offer((shard, roundTripFrameOn(c, frame), true))
           catch { case _: Throwable => () } // socket error: shard silent
       })
     val attempts = scala.collection.mutable.ArrayBuffer[

@@ -45,6 +45,61 @@ class ShardWorkerSpec extends AnyFunSuite with TempDirs {
     java.nio.file.Files.delete(java.nio.file.Paths.get(p))
   }
 
+  test("golden slab format: SLAB, SLB8, IVFS, GRFS, knobs and a patched " +
+      "generation hash to the recorded SHA-256 of every file") {
+    // tiny fixed ragged fixture, cell-ordered: cell 0 = rows 0..2,
+    // cell 1 = rows 3..4, cell 2 = rows 5..6 (ids ascending in each cell)
+    val rows: Array[(Long, Array[Double], Int)] = Array(
+      (2L, Array(0.5, -0.25, 0.125), 1),
+      (5L, Array(1.0, 0.0), 2),
+      (9L, Array[Double](), 3),
+      (1L, Array(-0.75, 0.5, 0.25, 0.1), 4),
+      (4L, Array(0.3, -0.6, 0.9), 0),
+      (3L, Array(0.2, 0.4, -0.8), 7),
+      (8L, Array(-1.0), 9))
+    val cids = Array(10L, 20L, 30L)
+    val cents = Array(Array(0.6, 0.0, 0.8), Array(-0.6, 0.8, 0.0),
+      Array(0.0, -1.0, 0.0))
+    val offs = Array(0, 3, 5, 7)
+    val gOffs = Array(0, 2, 4, 6, 8, 10, 12, 14)
+    val gNbrs = (0 until 7).flatMap(r => Seq((r + 1) % 7, (r + 3) % 7)).toArray
+    val dir = tempDir("slab_golden").toString
+    val v1 = s"$dir/v1.slab"
+    SlabIO.write(v1, rows)
+    SlabIO.writeInt8(s"$v1.i8", rows, v1)
+    SlabIO.writeIvf(s"$v1.ivf", cids, cents, offs, v1)
+    SlabIO.writeGraph(s"$v1.graph", gOffs, gNbrs, Array(0, 4), v1)
+    SlabIO.writeKnobs(s"$v1.ivf.knobs", nprobe = 2, oversample = 2.5)
+    // patched generation: cell 1 re-embeds id 4 (wider) and gains id 6,
+    // cell 2 drains
+    val dirty = Map(
+      1 -> Array((4L, Array(0.6, 0.0, -0.8, 0.0, 0.1), 5), (6L, Array(0.05), 6)),
+      2 -> Array.empty[(Long, Array[Double], Int)])
+    val v2 = s"$dir/v2.slab"
+    val patched = SlabIO.patchCellOrdered(v1, s"$v1.ivf", dirty, v2,
+      s"$v2.ivf", s"$v1.i8", s"$v2.i8")
+    def sha(p: String): String =
+      java.security.MessageDigest.getInstance("SHA-256")
+        .digest(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)))
+        .map(b => f"${b & 0xff}%02x").mkString
+    val got = Seq("v1.slab", "v1.slab.i8", "v1.slab.ivf", "v1.slab.graph",
+      "v1.slab.ivf.knobs", "v2.slab", "v2.slab.ivf", "v2.slab.i8")
+      .map(f => f -> sha(s"$dir/$f")).toMap + ("patch" -> patched.toString)
+    // fixed record of the on-disk bytes: the patch-vs-rebuild test compares
+    // two writers of one version, so only this catches a drift both share;
+    // a deliberate format change must update these hashes
+    assert(got == Map(
+      "patch" -> "(5,76,72)",
+      "v1.slab" -> "0f0fb278a6f58d2e81b3e3225c9fd10f56df5642c9832f131a9502849e7527ed",
+      "v1.slab.i8" -> "e3f298b64cae32044fe887d1ae681d7b52d9b19a4e91fbaca217e8621f2e12b8",
+      "v1.slab.ivf" -> "0a11d1a1fcefb2a5c3f72bb2172f5ea40c095ca4cbe690de02b57023e5042db7",
+      "v1.slab.graph" -> "ebcd9e772b48ff390104f52dc3568fe357b7fa01b4b744ce6fff819f22042c6f",
+      "v1.slab.ivf.knobs" -> "b43229c3959f9f461ff254a185e1a5ff24b1c351d80a47f107b6426df63f9a39",
+      "v2.slab" -> "0d9c785a9a49d9cd64498a66669709895abe1a75133a46d05ab3740cf72efb1b",
+      "v2.slab.ivf" -> "266b5fa9e561ce26cab2244b2e1226c2463f2de41fc118df64fee176c11e5118",
+      "v2.slab.i8" -> "9f3710cfb829181f0a1b36c6b33f04a7c57fe126a6288360bf97a7c48e8eda65"))
+  }
+
   test("searchPartial: a straggler shard is dropped at the deadline and " +
       "its late reply re-pools the socket instead of poisoning it") {
     val rows = mkRows(400, 16)
@@ -1284,6 +1339,96 @@ class ShardWorkerSpec extends AnyFunSuite with TempDirs {
         .foreach(p => try java.nio.file.Files.deleteIfExists(p)
           catch { case _: java.io.IOException => () })
     }
+  }
+
+  test("bad frames (negative, unknown-command, oversize, truncated) close " +
+      "only their connection; the worker then answers bit-identically") {
+    import org.scalacheck.Gen
+    val d = 16
+    val rows = mkRows(300, d)
+    val k = 5
+    val slab = s"${tempDir("slab_frames")}/v1.slab"
+    SlabIO.write(slab, rows)
+    val port = {
+      val s = new java.net.ServerSocket(0)
+      try s.getLocalPort finally s.close()
+    }
+    val t = new Thread(new Runnable {
+      def run(): Unit = ShardWorker.main(
+        Array(slab, port.toString, k.toString, "0.0", "2"))
+    })
+    t.setDaemon(true); t.start()
+    def connect() = Drive.whenUp(new RemoteShardedRouter(
+      Seq(("127.0.0.1", port)), k, connsPerShard = 1))
+    val q = rows(17)._2
+    val users = Array(3, 4)
+    def bits(hits: Array[(Long, Double, Int)]) = hits.toSeq.map {
+      case (id, s, u) => (id, java.lang.Double.doubleToRawLongBits(s), u)
+    }
+    val before = connect()
+    val (plain, filtered) =
+      try (bits(before.search(q)), bits(before.searchFiltered(q, users)))
+      finally before.close()
+    def frame(body: java.io.DataOutputStream => Unit): Array[Byte] = {
+      val bytes = new java.io.ByteArrayOutputStream
+      val out = new java.io.DataOutputStream(bytes)
+      body(out); out.flush(); bytes.toByteArray
+    }
+    def search(out: java.io.DataOutputStream): Unit = {
+      out.writeInt(1); out.writeInt(d); q.foreach(out.writeDouble)
+    }
+    val Filtered = ShardWorker.FilteredCmd
+    val valid = Gen.oneOf(
+      frame(search),
+      frame { o => o.writeInt(Filtered); o.writeInt(2); users.foreach(o.writeInt); search(o) },
+      frame { o =>
+        o.writeInt(ShardWorker.ReloadCmd); o.writeUTF(slab); o.writeUTF("")
+        o.writeUTF(""); o.writeInt(0); o.writeDouble(3.0); o.writeUTF(""); o.writeInt(0)
+      })
+    val neg = Gen.choose(Int.MinValue, -1)
+    def over(max: Int) = Gen.choose(max + 1, max * 4)
+    // whole headers the worker must reject without waiting for more bytes
+    val rejected = Gen.oneOf(
+      neg.suchThat(c => c != ShardWorker.ReloadCmd && c != Filtered)
+        .map(c => frame(_.writeInt(c))),
+      neg.map(nu => frame { o => o.writeInt(Filtered); o.writeInt(nu) }),
+      over(ShardWorker.MaxFilterUsers)
+        .map(nu => frame { o => o.writeInt(Filtered); o.writeInt(nu) }),
+      neg.map(nq => frame { o =>
+        o.writeInt(Filtered); o.writeInt(1); o.writeInt(3); o.writeInt(nq) }),
+      for (nq <- Gen.choose(1, 4); dd <- neg)
+        yield frame { o => o.writeInt(nq); o.writeInt(dd) },
+      over(ShardWorker.MaxFrameCells)
+        .map(dd => frame { o => o.writeInt(1); o.writeInt(dd) }),
+      over(ShardWorker.MaxFrameCells).map(nq => frame(_.writeInt(nq))),
+      for (nq <- Gen.choose(2, 64);
+           dd <- Gen.choose(ShardWorker.MaxFrameCells / nq + 1, ShardWorker.MaxFrameCells))
+        yield frame { o => o.writeInt(nq); o.writeInt(dd) })
+    val truncated = for (f <- valid; cut <- Gen.choose(1, f.length - 1))
+      yield f.take(cut)
+    // the worker's first reply byte, or -1 once it closes the connection
+    def send(bytes: Array[Byte], halfClose: Boolean): Int = {
+      val s = new java.net.Socket("127.0.0.1", port)
+      try {
+        s.setSoTimeout(10000) // a worker waiting on a bad frame times out here
+        s.getOutputStream.write(bytes); s.getOutputStream.flush()
+        if (halfClose) s.shutdownOutput()
+        try s.getInputStream.read() catch { case _: java.net.SocketException => -1 }
+      } finally s.close()
+    }
+    val seed = org.scalacheck.rng.Seed(20261018L)
+    Gen.listOfN(60, rejected).pureApply(Gen.Parameters.default, seed).foreach { f =>
+      assert(send(f, halfClose = false) == -1, s"frame ${f.toSeq} was not rejected")
+    }
+    Gen.listOfN(30, truncated).pureApply(Gen.Parameters.default, seed.next).foreach { f =>
+      assert(send(f, halfClose = true) == -1, s"truncated frame ${f.toSeq} got a reply")
+    }
+    val after = connect()
+    try {
+      after.ping()
+      assert(bits(after.search(q)) == plain)
+      assert(bits(after.searchFiltered(q, users)) == filtered)
+    } finally after.close()
   }
 
   test("reload heap headroom arithmetic (ADVICE r16 #2): float needs " +
