@@ -84,7 +84,8 @@ import org.apache.spark.storage.StorageLevel
   * replica   exact   scoreRange                  scoreRows(postings)
   * replica   int8    int8TwoPhase, heap floats   scoreRows(postings)
   * job tier  exact   per-partition Spark job     the same job, filtered
-  * worker    exact   scoreRange                  scoreRows(postings)
+  * worker    exact   scoreRange via the shared   scoreRows(postings)
+  *                   lap
   * worker    int8    int8TwoPhase, mmap floats   scoreRows(postings), mmap floats
   * worker    ivf     scoreRange | int8TwoPhase   selective: scoreRows(postings)
   *                   over the probed cells       broad: scoreRows(matching probed
@@ -1078,13 +1079,8 @@ object BatchedServer {
         System.arraycopy(r._2, 0, embs, offs(i), r._2.length)
         i += 1
       }
-      val L = if (n == 0) -1 else offs(1) - offs(0)
-      var uniform = n > 0 && L > 0
-      i = 1
-      while (uniform && i < n) {
-        if (offs(i + 1) - offs(i) != L) uniform = false
-        i += 1
-      }
+      val L = uniformDim(offs)
+      val uniform = L > 0
       val lanes = if (useSimd) SimdSupport.lanes else 0
       val tslab =
         if (uniform && lanes > 0 && n >= lanes) {
@@ -1105,9 +1101,21 @@ object BatchedServer {
           ts
         } else null
       new FlatReplica(n, ids, users, offs, embs,
-        tslab, if (tslab == null) 0 else lanes,
-        if (uniform) L else -1)
+        tslab, if (tslab == null) 0 else lanes, L)
     }
+  }
+
+  /** The one row length shared by every row of the CSR offsets `offs`, or
+    * −1 when rows are ragged, empty or absent. */
+  private[graft] def uniformDim(offs: Array[Int]): Int = {
+    val n = offs.length - 1
+    val L = if (n < 1) -1 else offs(1) - offs(0)
+    var i = 1
+    while (L > 0 && i < n) {
+      if (offs(i + 1) - offs(i) != L) return -1
+      i += 1
+    }
+    if (L > 0) L else -1
   }
 
   /** Raw serving dot product: same left-to-right accumulation as the
@@ -1178,10 +1186,16 @@ object BatchedServer {
     * the same left-to-right accumulation over `min(rowLen, queryLen)`
     * dims as [[dotRaw]] and the same 6dp HALF_UP round
     * ([[graft.plans.Num.round6]]) — bit-for-bit the job-tier kernel, just
-    * reading the flat slab. */
+    * reading the flat slab. `seedFloors` (null = none) holds, per query,
+    * the k-th best rounded score already found outside `[lo, hi)` (the
+    * shared lap's earlier pieces): a row scoring below it cannot place,
+    * so the rounding gate starts there instead of at the threshold; a row
+    * equal to it still passes (it can win an id tie in the caller's
+    * merge). */
   private[graft] def scoreRange(
       rep: FlatReplica, lo: Int, hi: Int,
-      queries: Array[Array[Double]], k: Int, th: Double)
+      queries: Array[Array[Double]], k: Int, th: Double,
+      seedFloors: Array[Double] = null)
       : Array[(Int, Long, Double, Int)] = {
     val nq = queries.length
     val tops = Array.fill(nq)(new TopK(k))
@@ -1189,9 +1203,12 @@ object BatchedServer {
     // comparator — per (row × query) that is real overhead at slab scale.
     // The floor only moves when an offer lands (rare post-warmup), so the
     // cache refreshes exactly then; keep/skip decisions are unchanged.
+    def floorOf(qi: Int): Double =
+      if (seedFloors == null) tops(qi).floor(th)
+      else math.max(tops(qi).floor(th), seedFloors(qi))
     val floors = new Array[Double](nq)
     var fi = 0
-    while (fi < nq) { floors(fi) = tops(fi).floor(th); fi += 1 }
+    while (fi < nq) { floors(fi) = floorOf(fi); fi += 1 }
     val embs = rep.embs
     val offs = rep.offs
     // Rounding gate shared by every path below: an EXACT left-to-right
@@ -1205,9 +1222,8 @@ object BatchedServer {
       if (s >= floors(qi) - 1e-6) {
         val r = graft.plans.Num.round6(s)
         if (r >= th) {
-          val top = tops(qi)
-          top.offer(r, id, user)
-          floors(qi) = top.floor(th)
+          tops(qi).offer(r, id, user)
+          floors(qi) = floorOf(qi)
         }
       }
     // Row-blocked scalar kernel (4 rows × 2 queries): every accumulator
@@ -1581,6 +1597,143 @@ object BatchedServer {
     val tail = cur.result()
     if (tail.nonEmpty) chunks += tail
     chunks.result()
+  }
+
+  /** Rows per piece of a [[SharedLap]]: 2^13, a multiple of every SIMD
+    * block width (2, 4 or 8 lanes), so every piece starts on a block
+    * boundary of the transposed slab. At dim 64 a piece is 4 MiB of f64 —
+    * 1 MiB per slice on a 4-thread pool — and a 132k-row slab is 17
+    * pieces, so a new query joins within ~1/17 of a lap. */
+  private[graft] val LapPieceRows: Int = 1 << 13
+
+  /** Pieces in one lap over `n` rows (one empty piece when `n` = 0). */
+  private[graft] def lapPieces(n: Int): Int =
+    math.max(1, ((n.toLong + LapPieceRows - 1) / LapPieceRows).toInt)
+
+  /** Rows `[lo, hi)` the lap scores at `step` (≥ 0) over `n` rows: piece
+    * `step mod lapPieces(n)`. Any `lapPieces(n)` consecutive steps visit
+    * every piece once, so a query that stays that many steps scores every
+    * row exactly once, whichever step it joined at. */
+  private[graft] def lapPiece(n: Int, step: Long): (Int, Int) = {
+    val p = step % lapPieces(n)
+    (math.min(n.toLong, p * LapPieceRows).toInt,
+      math.min(n.toLong, (p + 1) * LapPieceRows).toInt)
+  }
+
+  /** One cyclic shared scan over the exact float rows (Crescando's
+    * ClockScan, VLDB 2009): the one concurrent-scan component of the
+    * serving kernels. Callers ([[search]]) enqueue their queries, each
+    * tagged with the replica (slab generation) it reads, and block. One
+    * daemon lap thread walks the rows in [[LapPieceRows]] pieces: every
+    * query active at a piece boundary is scored against that piece at
+    * once by [[scoreRange]], sliced over `pool` ([[sliceTopK]]), so
+    * concurrent queries share each block read from memory instead of each
+    * reading the whole slab. A query joins at the next piece boundary and
+    * leaves after exactly one lap ([[lapPiece]]); its per-piece top-k
+    * merge by [[topKPerQuery]] into the same (score desc, id asc) top-k
+    * as one sliced scan of the whole slab, bit for bit, and its k-th best
+    * score so far seeds the next piece's gate floor (`seedFloors`), so
+    * later pieces round and offer only rows that can still place. Queries of
+    * different replicas (a reload mid-lap) score the same step's piece of
+    * their own replica, so each finishes on the generation it was
+    * admitted with. The thread blocks while no query is active, so a
+    * lone request starts at once.
+    *
+    * Counters (read by the worker's `LAP` line and the specs): `laps`
+    * (pieces scored that closed a lap), `pieces` (pieces scored),
+    * `admitted` (queries), `activeSum` (Σ queries per scored piece),
+    * `queueWaitNs` (Σ enqueue → admission) and `scanNs` (Σ piece scan
+    * wall time). */
+  private[graft] final class SharedLap(
+      pool: java.util.concurrent.ExecutorService, slices: Int) {
+    private final class Entry(val rep: FlatReplica,
+        val queries: Array[Array[Double]], val k: Int, val th: Double) {
+      val enqueued: Long = System.nanoTime()
+      var left: Int = lapPieces(rep.n)
+      /** Each query's top-k over the pieces scored so far. */
+      val best = Array.fill(queries.length)(Array.empty[(Long, Double, Int)])
+      /** Its k-th best score: the next piece's gate floor. */
+      def seed(j: Int): Double =
+        if (k > 0 && best(j).length >= k) best(j)(k - 1)._2 else Double.NegativeInfinity
+      val done = new java.util.concurrent.CompletableFuture[Array[Array[(Long, Double, Int)]]]
+    }
+    private val queue = new LinkedBlockingQueue[Entry]()
+    private[graft] val laps, pieces, admitted, activeSum, queueWaitNs, scanNs =
+      new java.util.concurrent.atomic.AtomicLong()
+
+    /** Exact top-k of every query over `rep`, from one lap. */
+    def search(rep: FlatReplica, queries: Array[Array[Double]], k: Int,
+        th: Double): Array[Array[(Long, Double, Int)]] = {
+      val e = new Entry(rep, queries, k, th)
+      queue.put(e)
+      try e.done.get()
+      catch { case x: java.util.concurrent.ExecutionException => throw x.getCause }
+    }
+
+    def summary: String = {
+      val p = pieces.get()
+      f"LAP laps=${laps.get()} pieces=$p admitted=${admitted.get()} " +
+        f"active_sum=${activeSum.get()} " +
+        f"mean_active=${activeSum.get().toDouble / math.max(p, 1L)}%.2f " +
+        f"queue_wait_ms=${queueWaitNs.get() / 1e6}%.1f scan_ms=${scanNs.get() / 1e6}%.1f"
+    }
+
+    private def run(): Unit = {
+      val active = scala.collection.mutable.ArrayBuffer[Entry]()
+      val arrived = new java.util.ArrayList[Entry]()
+      var step = 0L
+      while (true) {
+        if (active.isEmpty) arrived.add(queue.take())
+        queue.drainTo(arrived)
+        val now = System.nanoTime()
+        arrived.forEach { e =>
+          admitted.addAndGet(e.queries.length)
+          queueWaitNs.addAndGet(now - e.enqueued)
+          active += e
+        }
+        arrived.clear()
+        // one piece per (replica, k, th) group: the replica is compared
+        // by reference, so every generation scores its own rows
+        active.groupBy(e => (e.rep, e.k, e.th)).foreach { case ((rep, k, th), group) =>
+          val qs = group.flatMap(_.queries).toArray
+          val seeds = group.flatMap(e => e.queries.indices.map(e.seed)).toArray
+          val (lo, hi) = lapPiece(rep.n, step)
+          try {
+            val t0 = System.nanoTime()
+            val tops = sliceTopK(qs.length, k, Array((lo, hi)), pool, slices)(
+              scoreRange(rep, _, _, qs, k, th, seeds))
+            scanNs.addAndGet(System.nanoTime() - t0)
+            var qi = 0
+            group.foreach { e =>
+              var j = 0
+              while (j < e.queries.length) {
+                if (tops(qi).nonEmpty)
+                  e.best(j) = topKPerQuery(1, k,
+                    (e.best(j) ++ tops(qi)).map { case (id, s, u) => (0, id, s, u) })(0)
+                j += 1
+                qi += 1
+              }
+            }
+          } catch {
+            case x: Throwable => group.foreach { e => e.done.completeExceptionally(x); e.left = 0 }
+          }
+          pieces.incrementAndGet()
+          activeSum.addAndGet(qs.length)
+          if (hi == rep.n) laps.incrementAndGet()
+        }
+        step += 1
+        active.filterInPlace { e =>
+          e.left -= 1
+          if (e.left <= 0 && !e.done.isDone) e.done.complete(e.best)
+          e.left > 0
+        }
+      }
+    }
+
+    private val thread = new Thread(new Runnable { def run(): Unit = SharedLap.this.run() },
+      "graft-shared-lap")
+    thread.setDaemon(true)
+    thread.start()
   }
 
   /** Membership in a SMALL user IN-list (the reference's only fused

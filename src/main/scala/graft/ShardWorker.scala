@@ -34,9 +34,19 @@ import java.nio.file.{Paths, StandardOpenOption}
   * query [int m][m × (long id, double score, int user)]. Frame bounds:
   * nq, d and nu must be ≥ 0, nq·d ≤ 2^20 (each query counting at least
   * one cell) and nu ≤ 2^16 ([[ShardWorker.MaxFrameCells]],
-  * [[ShardWorker.MaxFilterUsers]]), all checked before allocation; a
-  * frame that breaks them, or an unknown negative command, closes that
-  * connection only.
+  * [[ShardWorker.MaxFilterUsers]]), all checked before allocation, and
+  * on a uniform-dim slab `d` must equal its dim (a ragged slab scores
+  * min(row, query) dims per row); a frame that breaks them, or an
+  * unknown negative command, closes that connection only.
+  *
+  * Threads: one per connection decodes its frames and serves filtered,
+  * ivf, graph and int8 requests itself, slicing scans over the worker's
+  * pool; an unfiltered full scan of a float generation is enqueued, with
+  * the generation it read, on the worker's one shared lap
+  * ([[BatchedServer.SharedLap]]): one lap thread scores every queued
+  * query against each slab piece it reads, on the same pool, and hands
+  * each request its top-k after one full lap. The lap's counters print
+  * as one `LAP …` line when the worker shuts down.
   *
   * Kernels by host × family × filter ("postings" = the rows a user
   * filter matches; "selective" = matched ≤ the full-scan threshold, or
@@ -47,7 +57,8 @@ import java.nio.file.{Paths, StandardOpenOption}
   * replica   exact   scoreRange                  scoreRows(postings)
   * replica   int8    int8TwoPhase, heap floats   scoreRows(postings)
   * job tier  exact   per-partition Spark job     the same job, filtered
-  * worker    exact   scoreRange                  scoreRows(postings)
+  * worker    exact   scoreRange via the shared   scoreRows(postings)
+  *                   lap
   * worker    int8    int8TwoPhase, mmap floats   scoreRows(postings), mmap floats
   * worker    ivf     scoreRange | int8TwoPhase   selective: scoreRows(postings)
   *                   over the probed cells       broad: scoreRows(matching probed
@@ -747,6 +758,9 @@ object ShardWorker {
     def n: Int = if (int8) i8.n else rep.n
     /** The float rows exact scoring reads, whichever the mode. */
     def floats: BatchedServer.FloatRows = if (int8) i8 else rep
+    /** The slab's one row dim, or −1 for a ragged slab: a search frame of
+      * another `d` is a bad frame on a uniform generation. */
+    val dim: Int = BatchedServer.uniformDim(floats.offs)
   }
 
   /** Hop cap of the worker's beam descent — a safety bound, not an
@@ -881,13 +895,16 @@ object ShardWorker {
 
   /** Unfiltered top-k of one generation: beam descent on a graph
     * generation, else per-query probed cells on an IVF generation, else
-    * the whole slab — on the float kernel ([[topK]]) or the int8 kernel
-    * ([[BatchedServer.int8TwoPhase]], rescoring from the mmapped float
-    * slab). The router is oblivious to which kernel a shard runs: every
-    * path returns the (score desc, id asc) top-k. */
+    * the whole slab — through the worker's shared lap on a float
+    * generation ([[BatchedServer.SharedLap]], the [[topK]] answer bit for
+    * bit) or the int8 kernel ([[BatchedServer.int8TwoPhase]], rescoring
+    * from the mmapped float slab). The router is oblivious to which
+    * kernel a shard runs: every path returns the (score desc, id asc)
+    * top-k. */
   private[graft] def search(st: ServingState, queries: Array[Array[Double]],
       k: Int, th: Double, pool: java.util.concurrent.ExecutorService,
-      threads: Int): Array[Array[(Long, Double, Int)]] = {
+      threads: Int, lap: BatchedServer.SharedLap)
+      : Array[Array[(Long, Double, Int)]] = {
     def scan(qs: Array[Array[Double]], rs: Array[(Int, Int)]) =
       if (st.int8)
         BatchedServer.int8TwoPhase(st.i8, st.i8.slab.codes, qs, k, th,
@@ -903,7 +920,8 @@ object ShardWorker {
       // probe different cells — usually nq=1 from the router, so the
       // per-query dispatch costs nothing)
       queries.map(q => scan(Array(q), probeRanges(st.ivf, q, st.nprobe))(0))
-    else scan(queries, null)
+    else if (st.int8) scan(queries, null)
+    else lap.search(st.rep, queries, k, th)
   }
 
   /** Beam descent over the graph sidecar — the worker-resident form of
@@ -1053,7 +1071,13 @@ object ShardWorker {
     }
   }
 
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit = run(args, _ => ())
+
+  /** [[main]], handing the worker's shared lap to `onLap` before the
+    * worker serves (specs run several workers in one JVM and read each
+    * one's lap counters). */
+  private[graft] def run(args: Array[String],
+      onLap: BatchedServer.SharedLap => Unit): Unit = {
     val slabPath = args(0)
     val port = args(1).toInt
     val k = if (args.length > 2) args(2).toInt else 10
@@ -1108,6 +1132,12 @@ object ShardWorker {
         version = 1L, graphPath = graphPath, beam = beam))
     val reloadLock = new Object
     val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+    // every unfiltered full scan of a float generation rides this one lap
+    val lap = new BatchedServer.SharedLap(pool, threads)
+    onLap(lap)
+    Runtime.getRuntime.addShutdownHook(new Thread(new Runnable {
+      def run(): Unit = println(lap.summary)
+    }))
     val srv = new ServerSocket()
     srv.bind(new InetSocketAddress("127.0.0.1", port))
     def serve(sock: Socket): Unit = {
@@ -1187,6 +1217,14 @@ object ShardWorker {
               MaxFrameCells, "nq")
             val d = bounded(in.readInt(), MaxFrameCells, "d")
             bounded(nqs.toLong * math.max(d, 1), MaxFrameCells, "nq·d")
+            // ONE volatile read per request: the whole request is served
+            // from a single generation even if a reload lands mid-flight.
+            // On a uniform-dim generation every query must have its dim
+            // (a ragged slab keeps min(row, query) dims per row)
+            val st = stateRef.get()
+            if (st.dim >= 0 && d != st.dim)
+              throw new java.io.StreamCorruptedException(
+                s"bad frame: d = $d, the slab dim is ${st.dim}")
             val queries = Array.ofDim[Array[Double]](nqs)
             var qi = 0
             while (qi < nqs) {
@@ -1199,11 +1237,8 @@ object ShardWorker {
             if (stallMs > 0 &&
               reqCounter.incrementAndGet() % stallEvery == 0)
               Thread.sleep(stallMs)
-            // ONE volatile read per request: the whole request is served
-            // from a single generation even if a reload lands mid-flight
-            val st = stateRef.get()
             val res =
-              if (users == null) search(st, queries, k, th, pool, threads)
+              if (users == null) search(st, queries, k, th, pool, threads, lap)
               else queries.map(q =>
                 filteredTopK(st, users, q, k, th, fullScanTh, pool, threads))
             res.foreach { hits =>

@@ -1341,6 +1341,148 @@ class ShardWorkerSpec extends AnyFunSuite with TempDirs {
     }
   }
 
+  test("shared lap: any start piece covers every row once; concurrent " +
+      "clients across mid-lap reloads and a tiny slab get topK of their " +
+      "generation bit for bit; a lone request returns on its own") {
+    import org.scalacheck.{Gen, Prop}
+    val P = BatchedServer.LapPieceRows
+    val tiling = Prop.forAll(
+        Gen.oneOf(Gen.choose(0, 5 * P + 7), Gen.oneOf(0, 1, P - 1, P, P + 1, 3 * P)),
+        Gen.choose(0L, Long.MaxValue / 2)) { (n, start) =>
+      val ps = (0 until BatchedServer.lapPieces(n))
+        .map(j => BatchedServer.lapPiece(n, start + j)).sortBy(_._1)
+      ps.head._1 == 0 && ps.last._2 == n &&
+        ps.zip(ps.tail).forall { case (a, b) => a._2 == b._1 && a._1 < a._2 }
+    }
+    val tiled = org.scalacheck.Test.check(
+      org.scalacheck.Test.Parameters.default.withMinSuccessfulTests(500), tiling)
+    assert(tiled.passed, tiled.status.toString)
+
+    val d = 64
+    val k = 7
+    def unitRows(n: Int, seed: Int): Array[(Long, Array[Double], Int)] = {
+      val r = new scala.util.Random(seed)
+      Array.tabulate(n) { i =>
+        val e = Array.fill(d)(r.nextGaussian())
+        val norm = math.sqrt(e.map(x => x * x).sum)
+        (i.toLong, e.map(_ / norm), i % 10)
+      }
+    }
+    // three generations: 3 pieces, 2 pieces, and 2 rows (fewer rows than
+    // the first slab has pieces, and than one piece holds)
+    val gens = Seq(unitRows(2 * P + 1234, 1), unitRows(P + 777, 2), unitRows(2, 3))
+    val dir = tempDir("slab_lap").toString
+    val paths = gens.indices.map { g =>
+      val p = s"$dir/v$g.slab"; SlabIO.write(p, gens(g)); p
+    }
+    val refPool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    val reps = gens.map(BatchedServer.FlatReplica(_))
+    def bits(hits: Array[(Long, Double, Int)]) = hits.toSeq.map {
+      case (id, s, u) => (id, java.lang.Double.doubleToRawLongBits(s), u)
+    }
+    def expected(g: Int, q: Array[Double]) =
+      bits(ShardWorker.topK(reps(g), refPool, 2, Array(q), k, 0.0)(0))
+    val port = {
+      val s = new java.net.ServerSocket(0)
+      try s.getLocalPort finally s.close()
+    }
+    val lapRef = new java.util.concurrent.atomic.AtomicReference[BatchedServer.SharedLap]()
+    val t = new Thread(new Runnable {
+      def run(): Unit = ShardWorker.run(
+        Array(paths(0), port.toString, k.toString, "0.0", "2"), lapRef.set)
+    })
+    t.setDaemon(true); t.start()
+    val clients = 6
+    val router = Drive.whenUp(new RemoteShardedRouter(
+      Seq(("127.0.0.1", port)), k, connsPerShard = clients))
+    val reloader = Drive.whenUp(new RemoteShardedRouter(
+      Seq(("127.0.0.1", port)), k, connsPerShard = 1))
+    val lap = lapRef.get()
+    // generation sequence: reload s serves gens(schedule(s)); the worker's
+    // generation always lies in [seqLo, seqHi]
+    def schedule(s: Int): Int = s % 3
+    val seqLo = new java.util.concurrent.atomic.AtomicInteger(0)
+    val seqHi = new java.util.concurrent.atomic.AtomicInteger(0)
+    def reloadTo(s: Int): Unit = {
+      seqHi.set(s)
+      val r = reloader.reload(0, paths(schedule(s)))
+      assert(r.isRight, s"reload $s failed: $r")
+      seqLo.set(s)
+    }
+    // each client's answers with the generation window they were served in
+    def drive(perClient: Int, pauseNs: Int, seed: Int)
+        : Seq[(Array[Double], Seq[(Long, Long, Int)], Int, Int)] = {
+      val ex = java.util.concurrent.Executors.newFixedThreadPool(clients)
+      try {
+        (0 until clients).map { c =>
+          ex.submit(new java.util.concurrent.Callable[Seq[(Array[Double], Seq[(Long, Long, Int)], Int, Int)]] {
+            def call() = {
+              val r = new scala.util.Random(seed * 100 + c)
+              (0 until perClient).map { _ =>
+                if (pauseNs > 0)
+                  java.util.concurrent.locks.LockSupport.parkNanos(r.nextInt(pauseNs).toLong)
+                val q = {
+                  val e = Array.fill(d)(r.nextGaussian())
+                  val norm = math.sqrt(e.map(x => x * x).sum); e.map(_ / norm)
+                }
+                val lo = seqLo.get()
+                val hits = bits(router.search(q))
+                (q, hits, lo, seqHi.get())
+              }
+            }
+          })
+        }.flatMap(_.get())
+      } finally ex.shutdownNow()
+    }
+    def servedBy(a: (Array[Double], Seq[(Long, Long, Int)], Int, Int)): Set[Int] =
+      (a._3 to a._4).map(schedule).toSet.filter(g => expected(g, a._1) == a._2)
+    try {
+      // 1. random join offsets (random pauses) while reloads cycle the
+      // three generations under the clients
+      val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+      val reloadError = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+      val reloads = new Thread(new Runnable {
+        def run(): Unit = try {
+          var s = 0
+          while (!stop.get()) {
+            s += 1; reloadTo(s)
+            Thread.sleep(5)
+          }
+        } catch { case e: Throwable => reloadError.set(e) }
+      })
+      reloads.start()
+      val mixed = try drive(perClient = 100, pauseNs = 3000000, seed = 1)
+        finally { stop.set(true); reloads.join() }
+      assert(reloadError.get() == null, s"reload failed: ${reloadError.get()}")
+      val served = mixed.map(servedBy)
+      served.zipWithIndex.foreach { case (gs, i) =>
+        assert(gs.nonEmpty, s"answer $i equals topK on no generation live while it ran")
+      }
+      assert(served.flatten.distinct.size >= 2,
+        s"the reloads did not land under the clients: ${served.flatten.distinct}")
+      // 2. closed loop on the 3-piece slab: every answer exact, and the
+      // concurrent queries share the pieces
+      reloadTo(((seqHi.get() / 3) + 1) * 3)
+      val (pieces0, active0) = (lap.pieces.get(), lap.activeSum.get())
+      val closed = drive(perClient = 30, pauseNs = 0, seed = 2)
+      closed.foreach(a => assert(a._2 == expected(0, a._1)))
+      val meanActive = (lap.activeSum.get() - active0).toDouble /
+        (lap.pieces.get() - pieces0)
+      assert(meanActive > 1.0, s"mean active queries per piece $meanActive")
+      // 3. a lone request is served with no other traffic
+      val q = gens(0)(4321)._2
+      val lone = scala.concurrent.Future(bits(router.search(q)))(
+        scala.concurrent.ExecutionContext.global)
+      assert(scala.concurrent.Await.result(lone,
+        scala.concurrent.duration.Duration(30, "s")) == expected(0, q))
+      assert(lap.summary.startsWith("LAP laps="))
+    } finally {
+      router.close()
+      reloader.close()
+      refPool.shutdownNow()
+    }
+  }
+
   test("bad frames (negative, unknown-command, oversize, truncated) close " +
       "only their connection; the worker then answers bit-identically") {
     import org.scalacheck.Gen
@@ -1403,6 +1545,10 @@ class ShardWorkerSpec extends AnyFunSuite with TempDirs {
       over(ShardWorker.MaxFrameCells).map(nq => frame(_.writeInt(nq))),
       for (nq <- Gen.choose(2, 64);
            dd <- Gen.choose(ShardWorker.MaxFrameCells / nq + 1, ShardWorker.MaxFrameCells))
+        yield frame { o => o.writeInt(nq); o.writeInt(dd) },
+      // a query dim other than the (uniform) slab dim
+      for (nq <- Gen.choose(1, 4);
+           dd <- Gen.oneOf(Gen.choose(0, d - 1), Gen.choose(d + 1, 4 * d)))
         yield frame { o => o.writeInt(nq); o.writeInt(dd) })
     val truncated = for (f <- valid; cut <- Gen.choose(1, f.length - 1))
       yield f.take(cut)
