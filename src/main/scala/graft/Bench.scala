@@ -361,7 +361,9 @@ object Bench {
     // reference's always-RAM INT8 config, qdrant_client.py:129-138) with
     // exact float rescore of the k·3 survivors; output ≡ float replica
     // ON THE FIXTURE (ApiSpec) — in general two-phase-approximate, with
-    // recall at scale measured by ScaleProbe `serving` (ADVICE r14).
+    // recall graded by the perfbench `replica_rw` workload's recall_at_10
+    // and, at the 2M-row slab, by SCALING.md "Round 15: int8 serving
+    // replica at the REAL slab" (reproducible at commit 913220e).
     // Both slab sizes are reported as the memory note.
     // the server now CONSUMES the calibrated decision (VERDICT r15 #2/
     // #3): recallTarget drives ServingCalibration — family (int8 vs

@@ -1,12 +1,16 @@
 package graft
 
+import java.io.IOException
+import java.nio.file.{Files, Path, Paths}
+import java.util.Comparator
 import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, Executors, TimeUnit}
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger, AtomicReference}
 
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
-import scala.util.{Failure, Try}
+import scala.util.{Failure, Try, Using}
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.SparkSession
 
@@ -265,10 +269,19 @@ object Drive {
     def go(retries: Int): T =
       try attempt
       catch {
-        case _: java.io.IOException if retries > 0 =>
+        case _: IOException if retries > 0 =>
           Thread.sleep(500)
           go(retries - 1)
       }
     go(120)
   }
+
+  /** Deletes `dir` and everything under it. Best effort: whatever cannot
+    * be deleted is left behind. */
+  def deleteTree(dir: String): Unit =
+    try Using.resource(Files.walk(Paths.get(dir))) { paths =>
+      paths.sorted(Comparator.reverseOrder[Path]()).iterator().asScala
+        .foreach(p => try Files.deleteIfExists(p)
+          catch { case _: IOException => () })
+    } catch { case NonFatal(_) => () }
 }

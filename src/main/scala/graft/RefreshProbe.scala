@@ -490,13 +490,6 @@ object RefreshProbe {
       if (mode == "all" || mode == "e2e")
         e2eScenario(math.min(n, 262144), threads, dir)
       println("refresh_probe_ok=1")
-    } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-        .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .iterator().asScala
-        .foreach(p => try java.nio.file.Files.deleteIfExists(p)
-          catch { case _: java.io.IOException => () })
-    }
+    } finally Drive.deleteTree(dir)
   }
 }

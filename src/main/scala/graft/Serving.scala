@@ -255,10 +255,12 @@ final class BatchedServer(
     * phase ordering. Like every two-phase path it is APPROXIMATE in
     * general: phase 1 keeps k·oversample survivors by quantized dot, so
     * a true top-k row whose int8 rank falls below that cut is lost.
-    * ApiSpec pins int8 ≡ float output on the test fixture; at scale the
-    * approximation is MEASURED, not assumed — ScaleProbe `serving` mode
-    * reports int8-vs-float recall@k at the 2M-row slab next to the
-    * QPS/latency rows (ADVICE r14). */
+    * ApiSpec pins int8 ≡ float output on the test fixture; beyond it the
+    * approximation is MEASURED, not assumed: the perfbench `replica_rw`
+    * workload grades this int8 oversample-3 replica's `recall_at_10`
+    * against an exact scan of the served generation (~0.98), and
+    * SCALING.md "Round 15: int8 serving replica at the REAL slab" has the
+    * 2M-row rows (reproducible at commit 913220e). */
   /** The served configuration, decided with the replica (VERDICT r15
     * #2/#3): with `recallTarget` set, [[ServingCalibration.decide]]
     * picks the family AND the int8 oversample from the stated target

@@ -412,16 +412,18 @@ object Pca {
     * orthonormal rotation (a row permutation of R), so inner products
     * are preserved identically; only the subspace layout changes.
     *
-    * MEASURED NEGATIVE on this engine's cosine-ADC searches (ScaleProbe
-    * `pqpca`, 20k×64, m=8/ksub=16, oversample-32 + exact-rescore serving
-    * config): on the clustered (anisotropic) fixture, straight PCA order
-    * serves recall@10 = 0.72 vs 0.335 for the sum-balanced permutation
-    * and 0.35 for no PCA at all — balancing SCATTERS the cluster-bearing
+    * MEASURED NEGATIVE on this engine's cosine-ADC searches (SCALING.md
+    * "PCA-before-PQ layout", reproducible at commit 913220e; 20k×64,
+    * m=8/ksub=16, oversample-32 + exact-rescore serving config): on the
+    * clustered (anisotropic) fixture, straight PCA order serves
+    * recall@10 = 0.72 vs 0.335 for the sum-balanced permutation and
+    * 0.35 for no PCA at all — balancing SCATTERS the cluster-bearing
     * head components across subspaces, so no single sub-codebook can
     * separate the clusters, while straight order lets subspace 0 encode
     * cluster identity with its full codebook. On the near-isotropic
     * fixture the three layouts are within noise (0.54-0.64). Kept for
-    * the measured comparison (bench `recall.pq_pca_bal_adc`); the
+    * the measured comparison (bench key `negbase_pq_pca_bal_adc` in
+    * RecallReport's `recall` map, 0.838 in BENCH_r17.json); the
     * serving default is [[rotate]] — straight order. */
   def rotateBalanced(points: DataFrame, m: PcaModel, mSub: Int,
       embCol: String = "embedding", byProduct: Boolean = false): DataFrame = {

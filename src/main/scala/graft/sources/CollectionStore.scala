@@ -1113,7 +1113,8 @@ object CollectionStore {
     * The reference runs this as Qdrant's background optimizer (segment
     * vacuum/merge thresholds, src/core/qdrant_client.py:117-127); here
     * it is an explicit tick so the maintenance cost is measurable
-    * (ScaleProbe `lifecycle` mode) and schedulable per partition. */
+    * (SCALING.md "Round 14: cnBand lifecycle", reproducible at commit
+    * 913220e) and schedulable per partition. */
   def maintainIndexed(
       spark: SparkSession, path: String,
       adds: DataFrame, deletes: Option[DataFrame],
