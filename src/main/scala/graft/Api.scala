@@ -77,8 +77,7 @@ object Api {
     * return. Close the server to drain and stop the flusher. */
   def batchedServer(points: DataFrame, k: Int = 10,
       scoreThreshold: Option[Double] = None,
-      maxBatch: Int = 1024, maxWaitMs: Long = 0L,
-      pipelineDepth: Int = 2,
+      maxBatch: Int = 1024,
       localReplicaMaxRows: Long = BatchedServer.DefaultReplicaMaxRows,
       int8Replica: Boolean = false,
       recallTarget: Option[Double] = None)
@@ -86,9 +85,8 @@ object Api {
     validateK(k)
     val t = scoreThreshold.getOrElse(DefaultThreshold)
     validateThreshold(t)
-    new BatchedServer(points, k, t, maxBatch, maxWaitMs, pipelineDepth,
-      localReplicaMaxRows, int8Replica = int8Replica,
-      recallTarget = recallTarget)
+    new BatchedServer(points, k, t, maxBatch, localReplicaMaxRows,
+      int8Replica = int8Replica, recallTarget = recallTarget)
   }
 
   /** Validated sharded serving router — the replica-TOO-BIG tier (see
@@ -99,14 +97,13 @@ object Api {
   def shardedServer(points: DataFrame, k: Int = 10,
       scoreThreshold: Option[Double] = None,
       shardMaxRows: Long = BatchedServer.DefaultReplicaMaxRows,
-      maxBatch: Int = 1024, maxWaitMs: Long = 0L,
-      pipelineDepth: Int = 2,
+      maxBatch: Int = 1024,
       recallTarget: Option[Double] = None): ShardedServer = {
     validateK(k)
     val t = scoreThreshold.getOrElse(DefaultThreshold)
     validateThreshold(t)
-    ShardedServer(points, k, t, shardMaxRows, maxBatch, maxWaitMs,
-      pipelineDepth, recallTarget = recallTarget)
+    ShardedServer(points, k, t, shardMaxRows, maxBatch,
+      recallTarget = recallTarget)
   }
 
   /** One-call convenience over a whole request queue: push every request
@@ -114,15 +111,14 @@ object Api {
     * request order. Blocks until the queue is served. */
   def serveBatched(points: DataFrame, requests: Seq[Seq[Double]],
       k: Int = 10, scoreThreshold: Option[Double] = None,
-      maxBatch: Int = 1024, maxWaitMs: Long = 0L,
-      pipelineDepth: Int = 2,
+      maxBatch: Int = 1024,
       localReplicaMaxRows: Long = BatchedServer.DefaultReplicaMaxRows,
       int8Replica: Boolean = false)
       : Seq[Array[org.apache.spark.sql.Row]] = {
     import scala.concurrent.Await
     import scala.concurrent.duration._
-    val srv = batchedServer(points, k, scoreThreshold, maxBatch, maxWaitMs,
-      pipelineDepth, localReplicaMaxRows, int8Replica)
+    val srv = batchedServer(points, k, scoreThreshold, maxBatch,
+      localReplicaMaxRows, int8Replica)
     try {
       val futures = requests.map(srv.submit)
       futures.map(Await.result(_, 10.minutes))

@@ -137,8 +137,6 @@ object Bench {
         closedLoop: Boolean, replicaTier: Boolean = true): (Double, Array[Double]) =
       driveServerWith(() => Api.batchedServer(pointsPar, k = 10,
         scoreThreshold = Some(0.1), maxBatch = 1024,
-        maxWaitMs = sys.env.getOrElse("SPARK_GRAFT_SRV_WAIT", "0").toLong,
-        pipelineDepth = sys.env.getOrElse("SPARK_GRAFT_SRV_DEPTH", "2").toInt,
         localReplicaMaxRows =
           if (replicaTier) BatchedServer.DefaultReplicaMaxRows else 0L),
         threads, perThread, closedLoop)

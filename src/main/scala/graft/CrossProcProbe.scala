@@ -179,58 +179,137 @@ object CrossProc {
     }.toDF("id", "embedding", "user_id")
   }
 
+  /** One cross-process serving tier, named as in `GRAFT_XPROC_MODES`:
+    * `float` (exact full scan), `int8` (pinned code slab, mmapped float
+    * rescore), `ivf` / `ivf8` (cell-pruned float / int8) and `graph`
+    * (beam descent over a graph sidecar). */
+  final class Mode private (val name: String, val int8: Boolean,
+      val ivf: Boolean, val graph: Boolean) {
+    /** The key prefix of this tier's results. */
+    def prefix: String = if (name == "float") "crossproc" else s"crossproc_$name"
+    override def toString: String = name
+  }
+
+  object Mode {
+    val All: Seq[Mode] = Seq(
+      new Mode("float", int8 = false, ivf = false, graph = false),
+      new Mode("int8", int8 = true, ivf = false, graph = false),
+      new Mode("ivf", int8 = false, ivf = true, graph = false),
+      new Mode("ivf8", int8 = true, ivf = true, graph = false),
+      new Mode("graph", int8 = false, ivf = false, graph = true))
+
+    /** The modes of a comma list, in order; an empty list or an unknown
+      * name fails with a usage message. */
+    def parseList(list: String): Seq[Mode] = {
+      val names = list.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+      val unknown = names.filterNot(n => All.exists(_.name == n))
+      require(names.nonEmpty && unknown.isEmpty,
+        s"usage: GRAFT_XPROC_MODES=<comma list of ${All.mkString(",")}>, " +
+          s"got '$list'")
+      names.map(n => All.find(_.name == n).get)
+    }
+  }
+
+  /** Target rows per IVF cell: the cell count grows with the corpus
+    * (C ∝ N — the same discipline as the indexed store's band
+    * maintenance), so probed rows per query stay ~nprobe · CellRows as
+    * shards grow. */
+  private val CellRows: Long = 8192L
+
+  /** The straggler policy (Dean & Barroso, *The Tail at Scale*, CACM
+    * 2013): a request gives up on a shard at `DeadlineMs`; the hedged
+    * path first sends one duplicate to a shard still silent after
+    * `HedgeAfterMs` (a p95-ish fraction of the deadline), at most
+    * [[RemoteShardedRouter.HedgeBudgetFraction]] of requests hedging. */
+  private val DeadlineMs: Long = 20L
+  private val HedgeAfterMs: Long = 5L
+
+  /** Beam ladder of the graph tier's calibration (HNSW's ef). */
+  private val BeamLadder: Seq[Int] = Seq(8, 16, 32, 64, 96)
+
+  private def r4(x: Double): Double = math.rint(x * 10000) / 10000
+
+  private def mean(xs: Seq[Double]): Double = xs.sum / xs.length
+
+  /** Centroid indices in probe order for `q`: round6(q·centroid) desc,
+    * index asc — the worker's [[ShardWorker.probeRanges]] rule. */
+  private def probeOrder(cents: Array[Array[Double]],
+      q: Array[Double]): IndexedSeq[Int] =
+    cents.indices
+      .map(j => (graft.plans.Num.round6(BatchedServer.dotRaw(cents(j), q)), j))
+      .sortBy { case (s, j) => (-s, j) }.map(_._2)
+
+  /** (embedding, user) of each id: one bounded collect. */
+  private def rowsOf(points: DataFrame,
+      ids: Seq[Long]): Map[Long, (Array[Double], Int)] =
+    points.filter(col("id").isin(ids.map(Long.box): _*))
+      .select(col("id"), col("embedding"), col("user_id")).collect()
+      .map(r => r.getLong(0) -> (r.getSeq[Double](1).toArray, r.getInt(2)))
+      .toMap
+
+  /** Nearest-cell index of each id: one collect, one batched
+    * [[assignCells]] (per-row calls would each spin up a pool). */
+  private def cellsOf(points: DataFrame, ids: Seq[Long],
+      cents: Array[Array[Double]]): Map[Long, Int] = {
+    val rows = rowsOf(points, ids).toArray
+      .map { case (id, (e, _)) => (id, e, 0) }
+    rows.map(_._1).zip(assignCells(rows, cents,
+      Runtime.getRuntime.availableProcessors)).toMap
+  }
+
+  /** The integrity contract of a pruned answer: every hit carries its
+    * TRUE exact score and user, clears `th`, passes the user filter
+    * (`users` null = none), and the hits come in (score desc, id asc)
+    * order. Pruning may drop candidates (that is the recall row) but
+    * must never corrupt survivors. */
+  private def intact(points: DataFrame, got: Array[(Long, Double, Int)],
+      q: Array[Double], th: Double, users: Array[Int]): Boolean = {
+    val rows = rowsOf(points, got.map(_._1).toSeq)
+    got.forall { case (id, s, u) =>
+      val (e, trueU) = rows(id)
+      u == trueU && (users == null || users.contains(u)) &&
+        s == graft.plans.Num.round6(BatchedServer.dotRaw(e, q)) && s >= th
+    } && got.sortBy { case (id, s, _) => (-s, id) }.toSeq == got.toSeq
+  }
+
+  /** Per-query recall@k of `got` against the truth `want` (1 where the
+    * truth is empty). */
+  private def recalls(qis: Seq[Int])(got: Int => Iterable[Long],
+      want: Int => Iterable[Long]): Seq[Double] =
+    qis.map { qi =>
+      val g = got(qi).toSet
+      val w = want(qi).toSet
+      if (w.isEmpty) 1.0 else (g & w).size.toDouble / w.size
+    }
+
+  /** Serve `bigPoints` from hash-shard worker JVMs in `mode` and measure
+    * it: correctness, recall where the tier prunes, IPC floor, closed and
+    * paced load, and (float) the deadline and hedge policies. Keys carry
+    * the mode's [[Mode.prefix]]. */
   def measure(spark: SparkSession, bigPoints: DataFrame,
-      qPool: Array[Array[Double]], k: Int = 10, th: Double = 0.1,
-      forcedShards: Option[Int] = None,
-      int8: Boolean = false, ivf: Boolean = false,
-      int8Oversample: Double = -1.0,
-      graph: Boolean = false,
-      cellRowsOverride: Long = -1L): Map[String, Double] = {
+      qPool: Array[Array[Double]], mode: Mode, k: Int = 10,
+      th: Double = 0.1): Map[String, Double] = {
     val bigN = bigPoints.count()
     val shardMaxRows = BatchedServer.DefaultReplicaMaxRows
-    // forcedShards: the shard-count SWEEP knob (VERDICT r12 #3) — same
-    // total rows split across 2/4/8 workers to measure how closed-loop
-    // p50 grows with gather width (all-shards-must-answer tail risk)
-    val nShards = forcedShards.getOrElse(
-      math.max(1, ((bigN + shardMaxRows - 1) / shardMaxRows).toInt))
+    val nShards = math.max(1, ((bigN + shardMaxRows - 1) / shardMaxRows).toInt)
+    val target = graft.operators.IndexMeta.DefaultRecallTarget
     // int8 mode (VERDICT r14 #6): each worker pins an INT8 code slab for
     // phase 1 and mmaps the float slab only for survivor rescore — the
     // reference's always-RAM INT8 on the tier where the 8× RAM cut
-    // decides how many shards a corpus needs. Keys get the
-    // `crossproc_int8_` prefix; slab sizes ride in the result.
-    // ivf mode (VERDICT r15 #1): slabs are CELL-ORDERED with an IVF
-    // sidecar, and each worker scans only the LCB-calibrated nprobe
+    // decides how many shards a corpus needs; slab sizes ride in the
+    // result. ivf mode (VERDICT r15 #1): slabs are CELL-ORDERED with an
+    // IVF sidecar, and each worker scans only the LCB-calibrated nprobe
     // cells nearest the query — per-query work stops scaling with shard
     // size (the sub-linear phase 1 the reference gets from its index).
-    require(!(graph && (ivf || int8)),
-      "graph mode is the float kernel's alternative phase-1 family")
-    val P =
-      if (graph) "crossproc_graph"
-      else if (ivf && int8) "crossproc_ivf8"
-      else if (ivf) "crossproc_ivf"
-      else if (int8) "crossproc_int8"
-      else "crossproc"
     val dir = java.nio.file.Files.createTempDirectory("graft_xproc").toString
-    // IVF prep: deterministic sample → local spherical k-means. C keeps
-    // the TARGET CELL SIZE constant (C ∝ N — the same discipline as the
-    // indexed store's band maintenance), so probed rows per query stay
-    // ~nprobe·cellRows as shards grow: the flat-per-query property the
-    // scale probe grades.
-    // cellRowsOverride > 0 forces the target cell size — the graph-vs-ivf
-    // regime comparison dials the ivf tier's PROBED-CELL size up with it
-    // (emulating the skewed/coarse-cell geometry the ×8 scale sweep hit)
-    // while the graph run keeps the default build-time candidate cells
-    val ivfCellRows =
-      if (cellRowsOverride > 0) cellRowsOverride
-      else sys.env.getOrElse("GRAFT_XPROC_CELL_ROWS", "8192").toLong
-    val ivfTarget = sys.env.getOrElse("GRAFT_XPROC_IVF_TARGET", "0.95").toDouble
-    // graph mode needs the centroid table too: cell-ordering feeds the
-    // window-candidate build and the per-cell entry rows
-    val needCells = ivf || graph
+    // IVF prep: deterministic sample → local spherical k-means, C from
+    // CellRows. graph mode needs the centroid table too: cell-ordering
+    // feeds the window-candidate build and the per-cell entry rows
+    val needCells = mode.ivf || mode.graph
     val ivfCents: Array[Array[Double]] =
       if (!needCells) null
       else {
-        val c = math.max(16, ((bigN + ivfCellRows - 1) / ivfCellRows).toInt)
+        val c = math.max(16, ((bigN + CellRows - 1) / CellRows).toInt)
         val sampleTarget = 32768L
         val stride = math.max(1L, bigN / sampleTarget)
         val sample = bigPoints
@@ -286,11 +365,11 @@ object CrossProc {
           cellsRaw.foreach(j => ivfCellCounts(j) += 1)
           offs
         }
-      if (ivf)
+      if (mode.ivf)
         SlabIO.writeIvf(s"$p.ivf",
           (0 until ivfCents.length).map(_.toLong).toArray,
           ivfCents, cellOffs, p)
-      if (graph) {
+      if (mode.graph) {
         // edges from the ENGINE's distributed graph build (VERDICT r16
         // #4 verbatim: "ship graphBuild's edge table as a slab sidecar")
         // — knnJoin candidates probe nprobe=2 cells, so edges are
@@ -312,25 +391,12 @@ object CrossProc {
           pmod(col("id"), lit(nShards.toLong)) === s.toLong)
         val built = graft.operators.Ann.graphBuild(shardDf, centsDf,
           graphK = 8, maxDegree = 16, nprobe = 2)
-        // GRAFT_XPROC_GRAPH_REFINE=<rounds>: NN-Descent link improvement
-        // (Ann.graphRefine + cross-cell bridges) on the sidecar edges —
-        // the construction-quality dial behind the single-shard
-        // calibration miss SCALING r17 reported (beam ladder maxed at
-        // recall 0.906 on build-quality-limited edges)
-        val refineRounds =
-          sys.env.getOrElse("GRAFT_XPROC_GRAPH_REFINE", "0").toInt
         val tEdges0 = System.nanoTime()
-        val refined =
-          if (refineRounds <= 0) built
-          else graft.operators.Ann.graphRefine(shardDf, built,
-            rounds = refineRounds, maxDegree = 16,
-            bridges = Some(
-              graft.operators.Ann.graphBridges(shardDf, centsDf, 2)))
-        val edges = refined
+        val edges = built
           .select(col("src"), col("dst")).collect()
           .map(r => (r.getLong(0), r.getLong(1)))
         println(s"""{"probe":"graph_edges","shard":$s,""" +
-          s""""refine_rounds":$refineRounds,"edges":${edges.length},""" +
+          s""""edges":${edges.length},""" +
           s""""build_ms":${(System.nanoTime() - tEdges0) / 1000000}}""")
         val idxOf = new java.util.HashMap[Long, Integer]()
         rows.indices.foreach(i => idxOf.put(rows(i)._1, i))
@@ -354,7 +420,7 @@ object CrossProc {
         graphEntries += entries.length
       }
       floatSlabBytes += java.nio.file.Files.size(java.nio.file.Paths.get(p))
-      if (int8) {
+      if (mode.int8) {
         SlabIO.writeInt8(s"$p.i8", rows, p)
         codeSlabBytes += java.nio.file.Files.size(
           java.nio.file.Paths.get(s"$p.i8"))
@@ -362,75 +428,54 @@ object CrossProc {
       p
     }
     // int8 oversample: CALIBRATED like every other approximate-serving
-    // knob (VERDICT r15 #3 — it was the only one not derived from a
-    // stated target). int8Oversample <= 0 (the default) walks the
-    // ladder on shard 0's slab via the same LCB machinery the replica
-    // tier uses; an explicit positive value pins it (the A/B knob).
-    // If no rung clears the target the tier STAYS int8 at the ladder
-    // max and says so (cal_target_met=0) — this probe grades the int8
-    // tier, and the end-to-end recall row sits right next to the flag.
-    val (effOversample, calDecision): (Double, Option[ServingDecision]) =
-      if (!int8 || int8Oversample > 0) (int8Oversample, None)
-      else {
-        val rep = BatchedServer.FlatReplica(SlabIO.read(slabs(0)))
-        val d = ServingCalibration.decide(rep, k, th,
-          graft.operators.IndexMeta.DefaultRecallTarget)
-        val os =
-          if (d.family == "int8") d.oversample.toDouble
-          else ServingCalibration.OversampleLadder.max.toDouble
-        (os, Some(d))
-      }
+    // knob (VERDICT r15 #3): the ladder walked on shard 0's slab via the
+    // same LCB machinery the replica tier uses. If no rung clears the
+    // target the tier STAYS int8 at the ladder max and says so
+    // (cal_target_met=0) — this probe grades the int8 tier, and the
+    // end-to-end recall row sits right next to the flag.
+    val calDecision: Option[ServingDecision] =
+      if (!mode.int8) None
+      else Some(ServingCalibration.decide(
+        BatchedServer.FlatReplica(SlabIO.read(slabs(0))), k, th, target))
+    val oversample = calDecision.fold(0.0)(d =>
+      if (d.family == "int8") d.oversample.toDouble
+      else ServingCalibration.OversampleLadder.max.toDouble)
     // exact oracle for calibration/recall/correctness gates (Spark-side;
-    // bounded: one knn job per sampled query, memoized — the held-out
-    // recall row, the nprobe=1 coverage row, and the correctness gate
-    // share sample indices)
-    val exactIdsCache =
-      scala.collection.concurrent.TrieMap.empty[Int, Seq[(Long, Double)]]
-    def exactIds(qi: Int): Seq[(Long, Double)] =
-      exactIdsCache.getOrElseUpdate(qi, {
-        val q = {
-          import spark.implicits._
-          Seq(qPool(qi).toSeq).toDF("qemb")
-        }
-        graft.operators.Search.knn(bigPoints, q, k, th)
-          .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      })
+    // bounded: one knn job per sampled query). The unfiltered answers are
+    // memoized — the held-out recall row, the nprobe=1 coverage row, and
+    // the correctness gate share sample indices
+    def exact(qi: Int, users: Array[Int] = null): Seq[(Long, Double, Int)] = {
+      import spark.implicits._
+      graft.operators.Search.knn(bigPoints, Seq(qPool(qi).toSeq).toDF("qemb"),
+        k, th, preFilter =
+          Option(users).map(us => col("user_id").isin(us.map(Int.box): _*)))
+        .collect().map(r => (r.getLong(0), r.getDouble(1), r.getInt(2))).toSeq
+    }
+    val exactCache =
+      scala.collection.concurrent.TrieMap.empty[Int, Seq[(Long, Double, Int)]]
+    def exactTop(qi: Int): Seq[(Long, Double, Int)] =
+      exactCache.getOrElseUpdate(qi, exact(qi))
+    def exactIds(qi: Int): Seq[Long] = exactTop(qi).map(_._1)
     val nQ = qPool.length
+    // calibration sample: 32 queries at half-stride offsets, DISJOINT
+    // from the graded recall sample (the whole strides)
+    val calStride = math.max(1, nQ / 32)
+    val calQ = (0 until 32).map(i => (i * calStride + calStride / 2) % nQ)
+      .distinct
     // IVF nprobe calibration (LCB, same machinery as IndexMeta — VERDICT
-    // r15 #1 "at a stated nprobe"): 32 calibration queries DISJOINT from
-    // the graded recall sample (offset by a half stride); per query the
-    // cell-coverage curve of its exact top-k over the probe order, then
-    // nprobe = smallest probe count whose one-sided 90% LCB clears the
-    // target. Recall within probed cells is exact, so coverage IS recall.
+    // r15 #1 "at a stated nprobe"): per query the cell-coverage curve of
+    // its exact top-k over the probe order, then nprobe = smallest probe
+    // count whose one-sided 90% LCB clears the target. Recall within
+    // probed cells is exact, so coverage IS recall.
     val (ivfNprobe, ivfScanFrac): (Int, Double) =
-      if (!ivf) (0, 1.0)
+      if (!mode.ivf) (0, 1.0)
       else {
         val c = ivfCents.length
-        val stride = math.max(1, nQ / 32)
-        val calQ = (0 until 32).map(i => (i * stride + stride / 2) % nQ)
-          .distinct
-        val exactByQ = calQ.map(qi => qi -> exactIds(qi).map(_._1)).toMap
-        // ONE bounded collect + ONE batched assignment for every true
-        // neighbor across all calibration queries (per-neighbor
-        // single-row assignCells calls each spun up a thread pool)
-        val allNbs = exactByQ.values.flatten.toSeq.distinct
-        val nbRows = bigPoints
-          .filter(col("id").isin(allNbs.map(Long.box): _*))
-          .select(col("id"), col("embedding")).collect()
-          .map(r => (r.getLong(0), r.getSeq[Double](1).toArray, 0))
-        val cellOfNb = nbRows.map(_._1).zip(
-          assignCells(nbRows, ivfCents,
-            Runtime.getRuntime.availableProcessors)).toMap
+        val cellOfNb = cellsOf(bigPoints,
+          calQ.flatMap(exactIds).distinct, ivfCents)
         val curves = calQ.map { qi =>
-          val q = qPool(qi)
-          val exact = exactByQ(qi)
-          val order = (0 until c).map { j =>
-            var s = 0.0; var x = 0
-            val ce = ivfCents(j)
-            while (x < math.min(ce.length, q.length)) { s += ce(x) * q(x); x += 1 }
-            (graft.plans.Num.round6(s), j)
-          }.sortBy { case (s, j) => (-s, j) }.map(_._2)
-          val rankOf = order.zipWithIndex.toMap
+          val exact = exactIds(qi)
+          val rankOf = probeOrder(ivfCents, qPool(qi)).zipWithIndex.toMap
           val cov = new Array[Double](c)
           exact.foreach { nb =>
             var p = rankOf(cellOfNb(nb))
@@ -438,98 +483,62 @@ object CrossProc {
           }
           cov.map(_ / math.max(exact.length, 1))
         }
-        val nq = curves.length.toDouble
-        val np = (0 until c).indexWhere { p =>
-          val m = curves.map(_(p)).sum / nq
-          val sd =
-            if (nq < 2) 0.0
-            else math.sqrt(
-              curves.map(cv => (cv(p) - m) * (cv(p) - m)).sum / (nq - 1))
-          m - 1.28 * sd / math.sqrt(nq) >= ivfTarget
-        } match {
+        val np = (0 until c).indexWhere(p =>
+          graft.operators.IndexMeta.lowerBound90(curves.map(_(p))) >= target) match {
           case -1 => c
           case i => i + 1
         }
         // mean scanned fraction at the chosen nprobe over the
         // calibration queries (global cell counts)
         val frac = calQ.map { qi =>
-          val q = qPool(qi)
-          val top = (0 until c).map { j =>
-            var s = 0.0; var x = 0
-            val ce = ivfCents(j)
-            while (x < math.min(ce.length, q.length)) { s += ce(x) * q(x); x += 1 }
-            (graft.plans.Num.round6(s), j)
-          }.sortBy { case (s, j) => (-s, j) }.take(np)
-          top.map { case (_, j) => ivfCellCounts(j) }.sum.toDouble / bigN
+          probeOrder(ivfCents, qPool(qi)).take(np)
+            .map(ivfCellCounts(_)).sum.toDouble / bigN
         }.sum / calQ.length
-        (np, math.rint(frac * 10000) / 10000)
+        (np, r4(frac))
       }
     // GRAPH beam calibration (the graph family's LCB dial — HNSW's ef):
     // walk the beam ladder, per rung replaying the ROUTER's exact merge
     // driver-side (per-shard graphTopK over the written slab+sidecar,
     // merged under the global order) against the exact oracle on the
-    // same half-stride calibration sample the ivf calibration uses;
-    // chosen = smallest rung whose one-sided 90% LCB clears the target,
-    // degrade-to-ladder-max (reported, not hidden) when none does.
-    val graphLadder = Seq(8, 16, 32, 64, 96)
+    // calibration sample; chosen = smallest rung whose one-sided 90% LCB
+    // clears the target, degrade-to-ladder-max (reported, not hidden)
+    // when none does.
     val (graphBeam, graphCalMet): (Int, Double) =
-      if (!graph) (0, 1.0)
+      if (!mode.graph) (0, 1.0)
       else {
         val reps = slabs.map(p => BatchedServer.FlatReplica(SlabIO.read(p)))
         val sidecars = slabs.map(p => SlabIO.readGraph(s"$p.graph"))
-        val stride = math.max(1, qPool.length / 32)
-        val calQ = (0 until 32).map(i => (i * stride + stride / 2) % qPool.length)
-          .distinct
-        def lcbAt(b: Int): Double = {
-          val per = calQ.map { qi =>
-            val q = qPool(qi)
-            val got = reps.indices.flatMap(s =>
-              ShardWorker.graphTopK(reps(s), sidecars(s), q, k, th, b))
-              .sortBy { case (id, sc, _) => (-sc, id) }.take(k).map(_._1).toSet
-            val want = exactIds(qi).map(_._1).toSet
-            if (want.isEmpty) 1.0 else (got & want).size.toDouble / want.size
-          }
-          val m = per.sum / per.length
-          val sd =
-            if (per.length < 2) 0.0
-            else math.sqrt(per.map(r => (r - m) * (r - m)).sum / (per.length - 1))
-          m - 1.28 * sd / math.sqrt(per.length)
-        }
-        graphLadder.iterator.map(b => (b, lcbAt(b)))
-          .find(_._2 >= ivfTarget) match {
+        def lcbAt(b: Int): Double =
+          graft.operators.IndexMeta.lowerBound90(recalls(calQ)(
+            qi => reps.indices.flatMap(s =>
+              ShardWorker.graphTopK(reps(s), sidecars(s), qPool(qi), k, th, b))
+              .sortBy { case (id, sc, _) => (-sc, id) }.take(k).map(_._1),
+            exactIds))
+        BeamLadder.iterator.map(b => (b, lcbAt(b)))
+          .find(_._2 >= target) match {
           case Some((b, _)) => (b, 1.0)
-          case None => (graphLadder.max, 0.0)
+          case None => (BeamLadder.max, 0.0)
         }
       }
     val basePort = 42800 + (System.nanoTime() % 100).toInt
     val workerThreads = math.max(4,
       Runtime.getRuntime.availableProcessors / nShards)
-    // straggler injection (measurement only, default off): the LAST
-    // shard sleeps stallMs per request, so the deadline path is graded
-    // under an actual straggler instead of only where it never fires
-    val stallMs = sys.env.getOrElse("GRAFT_XPROC_STALL_MS", "0").toLong
     // worker heap sized from the slab: the float replica needs the slab
     // + its SIMD transpose + the transient row array at load (~3.5× the
-    // file) — a fixed 2g OOM'd silently at the ivf-scale sweep's 8×
-    // point (2.1M rows, 1.08 GB slab)
+    // file)
     val maxSlabBytes = slabs.map(p =>
       java.nio.file.Files.size(java.nio.file.Paths.get(p))).max
     val workerXmx =
       math.max(2L, (maxSlabBytes * 4.0 / (1L << 30)).ceil.toLong) + "g"
     val procs = slabs.zipWithIndex.map { case (slab, i) =>
-      val stall = if (i == slabs.length - 1) stallMs else 0L
-      val tailArgs =
-        if (graph) Seq("20", "", "", "0", "3.0",
-          ShardWorker.DefaultFullScanThreshold.toString,
-          s"$slab.graph", graphBeam.toString)
-        else if (ivf) Seq("20", if (int8) s"$slab.i8" else "",
-          s"$slab.ivf", ivfNprobe.toString, effOversample.toString)
-        else if (int8) Seq("20", s"$slab.i8", "", "0",
-          effOversample.toString)
-        else Seq.empty
-      Drive.spawnWorker(workerXmx, Seq(slab,
-        (basePort + i).toString, k.toString, th.toString,
-        workerThreads.toString, stall.toString) ++ tailArgs,
+      val options =
+        (if (mode.int8) Seq(s"int8=$slab.i8", s"oversample=$oversample")
+         else Nil) ++
+        (if (mode.ivf) Seq(s"ivf=$slab.ivf", s"nprobe=$ivfNprobe") else Nil) ++
+        (if (mode.graph) Seq(s"graph=$slab.graph", s"beam=$graphBeam")
+         else Nil)
+      Drive.spawnWorker(workerXmx, Seq(slab, (basePort + i).toString,
+        k.toString, th.toString, s"threads=$workerThreads") ++ options,
         new java.io.File(s"$dir/worker_$i.log"))
     }
     // success flag for the cleanup path: set only when the full
@@ -540,80 +549,50 @@ object CrossProc {
       val router = Drive.whenUp(new RemoteShardedRouter(addrs, k))
       try {
         router.ping()
-        // correctness: float router ≡ solo exact knn on 3 spread queries;
+        // correctness on 3 spread queries: float router ≡ solo exact knn;
         // int8 router ≡ the in-JVM int8 kernel per shard + top-k merge
         // (the tier's own contract — the approximation vs exact is the
-        // separate recall row below, measured not gated); ivf router:
-        // every returned hit carries its TRUE exact score in descending
-        // (score, id asc) order — pruning may drop candidates (that is
-        // the recall row) but must never corrupt survivors (the
-        // pruned≡full parity at full probe is spec-pinned in
-        // ShardWorkerSpec at fixture scale)
+        // separate recall row below, measured not gated); ivf and graph:
+        // every hit is [[intact]] (the pruned≡full parity at full probe
+        // is spec-pinned in ShardWorkerSpec at fixture scale)
+        val qis = Seq(0, nQ / 2, nQ - 1)
         val okAll =
-          if (ivf || graph)
-            Seq(0, nQ / 2, nQ - 1).forall { qi =>
+          if (mode.ivf || mode.graph)
+            qis.forall { qi =>
               val got = router.search(qPool(qi))
-              val embOf = bigPoints
-                .filter(col("id").isin(got.map(h => Long.box(h._1)): _*))
-                .select(col("id"), col("embedding")).collect()
-                .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toMap
-              val q = qPool(qi)
-              val scoresExact = got.forall { case (id, s, _) =>
-                val e = embOf(id)
-                var acc = 0.0; var x = 0
-                val nd = math.min(e.length, q.length)
-                while (x < nd) { acc += e(x) * q(x); x += 1 }
-                s == graft.plans.Num.round6(acc) && s >= th
-              }
-              val ordered = got.sortBy { case (id, s, _) => (-s, id) }
-                .toSeq == got.toSeq
-              scoresExact && ordered && got.nonEmpty
+              intact(bigPoints, got, qPool(qi), th, null) && got.nonEmpty
             }
-          else if (!int8)
-            Seq(0, nQ / 2, nQ - 1).forall { qi =>
-              router.search(qPool(qi)).map(h => (h._1, h._2)).toSeq == exactIds(qi)
-            }
+          else if (!mode.int8)
+            qis.forall(qi => router.search(qPool(qi)).toSeq == exactTop(qi))
           else {
             // per-shard oracle built ONE SHARD AT A TIME from the slab
             // files (SlabIO.read) and released before the next — all
             // three test queries batch through each shard so the slab
             // is read once (ADVICE r15 driver-memory fix)
-            val qis = Seq(0, nQ / 2, nQ - 1)
-            val wantByQ = scala.collection.mutable.Map[Int,
-              scala.collection.mutable.ArrayBuffer[(Long, Double, Int)]]()
-            qis.foreach(qi => wantByQ(qi) =
-              scala.collection.mutable.ArrayBuffer.empty)
+            val want = qis.map(_ =>
+              scala.collection.mutable.ArrayBuffer.empty[(Long, Double, Int)])
             slabs.foreach { slabPath =>
               val rep = BatchedServer.FlatReplica(SlabIO.read(slabPath))
               val codes = BatchedServer.quantizeSlab(rep.embs)
-              val qArr = qis.map(qPool(_)).toArray
-              BatchedServer.int8TwoPhase(rep, codes, qArr, k, th,
-                effOversample, null, 1)
-                .zipWithIndex.foreach { case (hits, bi) => wantByQ(qis(bi)) ++= hits }
+              BatchedServer.int8TwoPhase(rep, codes, qis.map(qPool(_)).toArray,
+                k, th, oversample, null, 1)
+                .zipWithIndex.foreach { case (hits, bi) => want(bi) ++= hits }
             }
-            qis.forall { qi =>
-              val got = router.search(qPool(qi)).toSeq
-              val want = wantByQ(qi)
-                .sortBy { case (id, s, _) => (-s, id) }.take(k).toSeq
-              got == want
+            qis.indices.forall { bi =>
+              router.search(qPool(qis(bi))).toSeq ==
+                want(bi).sortBy { case (id, s, _) => (-s, id) }.take(k).toSeq
             }
           }
-        // approximate tiers (int8 / ivf): recall@k MEASURED, not assumed
-        // (ADVICE r14) — recall of the router vs exact over 32 spread
-        // queries (HELD OUT from the ivf calibration sample, which sits
-        // at half-stride offsets); the bench gates the tier's bars on
-        // this row next to its stated target
+        // approximate tiers (int8 / ivf / graph): recall@k MEASURED, not
+        // assumed (ADVICE r14) — recall of the router vs exact over 32
+        // spread queries HELD OUT from the calibration sample; the bench
+        // gates the tier's bars on this row next to its stated target
         val heldOutQis = (0 until 32).map(i => i * math.max(1, nQ / 32) % nQ)
+        val approximate = mode.int8 || mode.ivf || mode.graph
         val recallAtK =
-          if (!int8 && !ivf && !graph) 1.0
-          else {
-            val per = heldOutQis.map { qi =>
-              val got = router.search(qPool(qi)).map(_._1).toSet
-              val want = exactIds(qi).map(_._1).toSet
-              if (want.isEmpty) 1.0 else (got & want).size.toDouble / want.size
-            }
-            math.rint(per.sum / per.length * 10000) / 10000
-          }
+          if (!approximate) 1.0
+          else r4(mean(recalls(heldOutQis)(
+            qi => router.search(qPool(qi)).map(_._1), exactIds)))
         // GATE-BINDING evidence (VERDICT r16 #3): recall@k the tier WOULD
         // have at nprobe=1, on the same held-out sample. Within-cell
         // scoring is exact, so coverage IS recall: recall@nprobe1 = the
@@ -624,31 +603,16 @@ object CrossProc {
         // clears it — proving "recall ≥ target" is a real constraint, not
         // a structural identity of the fixture.
         val recallAtNprobe1: Double =
-          if (!ivf) 1.0
+          if (!mode.ivf) 1.0
           else {
-            val exactByQ = heldOutQis.map(qi => qi -> exactIds(qi).map(_._1)).toMap
-            val allNbs = exactByQ.values.flatten.toSeq.distinct
-            val nbRows = bigPoints
-              .filter(col("id").isin(allNbs.map(Long.box): _*))
-              .select(col("id"), col("embedding")).collect()
-              .map(r => (r.getLong(0), r.getSeq[Double](1).toArray, 0))
-            val cellOfNb = nbRows.map(_._1).zip(
-              assignCells(nbRows, ivfCents,
-                Runtime.getRuntime.availableProcessors)).toMap
-            val c = ivfCents.length
-            val per = heldOutQis.map { qi =>
-              val q = qPool(qi)
-              val top1 = (0 until c).map { j =>
-                var s = 0.0; var x = 0
-                val ce = ivfCents(j)
-                while (x < math.min(ce.length, q.length)) { s += ce(x) * q(x); x += 1 }
-                (graft.plans.Num.round6(s), j)
-              }.minBy { case (s, j) => (-s, j) }._2
-              val want = exactByQ(qi)
-              if (want.isEmpty) 1.0
-              else want.count(nb => cellOfNb(nb) == top1).toDouble / want.size
-            }
-            math.rint(per.sum / per.length * 10000) / 10000
+            val cellOfNb = cellsOf(bigPoints,
+              heldOutQis.flatMap(exactIds).distinct, ivfCents)
+            r4(mean(recalls(heldOutQis)(
+              qi => {
+                val top1 = probeOrder(ivfCents, qPool(qi)).head
+                exactIds(qi).filter(nb => cellOfNb(nb) == top1)
+              },
+              exactIds)))
           }
         // IPC floor
         (0 until 200).foreach(_ => router.ping())
@@ -734,7 +698,7 @@ object CrossProc {
         // (filtered-HNSW), so the same checks apply — hits must satisfy
         // the predicate with exact scores, recall is measured.
         val filteredPhases: Map[String, Double] =
-          if (!ivf && !graph) Map.empty else {
+          if (!mode.ivf && !mode.graph) Map.empty else {
           val sampleUsers = bigPoints.orderBy("id").limit(4000)
             .select(col("user_id")).collect().map(_.getInt(0)).distinct
           val selUsers: Int => Array[Int] =
@@ -745,47 +709,18 @@ object CrossProc {
             .filter(col("user_id").isin(us.map(Int.box): _*)).count()
           val matchedSel = matchedOf(selUsers(0))
           val matchedBroad = matchedOf(broadUsers)
-          def exactFiltered(qi: Int, us: Array[Int]): Seq[(Long, Double, Int)] = {
-            import spark.implicits._
-            val q = Seq(qPool(qi).toSeq).toDF("qemb")
-            graft.operators.Search.knn(bigPoints, q, k, th,
-              preFilter = Some(col("user_id").isin(us.map(Int.box): _*)))
-              .collect().map(r => (r.getLong(0), r.getDouble(1), r.getInt(2)))
-              .toSeq
-          }
           // correctness: selective ≡ exact filtered oracle row-for-row
-          val selCorrect = Seq(0, nQ / 2, nQ - 1).forall { qi =>
+          val selCorrect = qis.forall { qi =>
             router.searchFiltered(qPool(qi), selUsers(qi)).toSeq ==
-              exactFiltered(qi, selUsers(qi))
+              exact(qi, selUsers(qi))
           }
-          // broad: every hit satisfies the predicate, carries its true
-          // exact score, in (score desc, id asc) order; recall measured
-          val broadChecks = Seq(0, nQ / 2, nQ - 1).forall { qi =>
-            val got = router.searchFiltered(qPool(qi), broadUsers)
-            val ids = got.map(h => Long.box(h._1)).toSeq
-            val rowsOf = bigPoints.filter(col("id").isin(ids: _*))
-              .select(col("id"), col("embedding"), col("user_id")).collect()
-              .map(r => r.getLong(0) ->
-                (r.getSeq[Double](1).toArray, r.getInt(2))).toMap
-            val q = qPool(qi)
-            got.forall { case (id, s, u) =>
-              val (e, trueU) = rowsOf(id)
-              var acc = 0.0; var x = 0
-              val nd = math.min(e.length, q.length)
-              while (x < nd) { acc += e(x) * q(x); x += 1 }
-              u == trueU && broadUsers.contains(u) &&
-                s == graft.plans.Num.round6(acc) && s >= th
-            } && got.sortBy { case (id, s, _) => (-s, id) }.toSeq == got.toSeq
-          }
-          val broadRecall = {
-            val per = heldOutQis.take(16).map { qi =>
-              val got = router.searchFiltered(qPool(qi), broadUsers)
-                .map(_._1).toSet
-              val want = exactFiltered(qi, broadUsers).map(_._1).toSet
-              if (want.isEmpty) 1.0 else (got & want).size.toDouble / want.size
-            }
-            math.rint(per.sum / per.length * 10000) / 10000
-          }
+          // broad: every hit is intact under the filter; recall measured
+          val broadChecks = qis.forall(qi => intact(bigPoints,
+            router.searchFiltered(qPool(qi), broadUsers), qPool(qi), th,
+            broadUsers))
+          val broadRecall = r4(mean(recalls(heldOutQis.take(16))(
+            qi => router.searchFiltered(qPool(qi), broadUsers).map(_._1),
+            qi => exact(qi, broadUsers).map(_._1))))
           val selSet = driveSet(i =>
             router.searchFiltered(qPool(i % nQ), selUsers(i % nQ)))
           val broadSet = driveSet(i =>
@@ -815,93 +750,81 @@ object CrossProc {
         // the float tier only (the int8 probe grades the quantized
         // kernel + slab economics; policy arcs are tier-independent)
         val (tailPhases, policySteal) = Drive.withSteal[Map[String, Double]](
-            if (int8 || ivf || graph) Map.empty else {
+            if (approximate) Map.empty else {
           // DEADLINE path (searchPartial, PLANS_r13 §3): the same paced
-          // drive with a 20 ms per-request gather deadline — the tail is
-          // bounded by construction at the cost of (1 − complete_rate)
+          // drive with a DeadlineMs per-request gather deadline — the tail
+          // is bounded by construction at the cost of (1 − complete_rate)
           // degraded-but-exact-subset answers; both shipped so the
           // trade is visible next to the blocking path's p99.
-          val deadlineMs = 20L
           val dIncomplete = new java.util.concurrent.atomic.AtomicLong(0)
           val dl = paced { i =>
-            val r = router.searchPartial(qPool(i % nQ), deadlineMs)
+            val r = router.searchPartial(qPool(i % nQ), DeadlineMs)
             if (!r.complete) dIncomplete.incrementAndGet()
           }
           // HEDGE-THEN-DEGRADE path (searchHedged, VERDICT r13 #4 + r14
           // #8): the same paced drive with a duplicate send to any shard
-          // still silent after `hedgeMs` (a p95-ish fraction of the
-          // deadline — Dean–Barroso's "after the 95th-percentile
-          // expected latency" rule), COMPOSED with the drop path's 20 ms
-          // gather deadline as the last resort: the hedge's second
-          // latency draw rescues the common intermittent stall (complete
-          // rate stays ~1), and the ~1% whose stall outruns BOTH
-          // attempts is dropped at the deadline instead of dragging p99
-          // to the old 100 ms hedge budget (r14 measured 103.6 ms p99 as
-          // exactly that budget surfacing). Hedge rate and the deadline
-          // both ship in the artifact.
-          val hedgeMs = sys.env.getOrElse("GRAFT_XPROC_HEDGE_MS", "5").toLong
-          val hedgeDeadlineMs = sys.env.getOrElse(
-            "GRAFT_XPROC_HEDGE_DEADLINE_MS", "20").toLong
-          val hedgeBudget = sys.env.getOrElse("GRAFT_XPROC_HEDGE_BUDGET",
-            RemoteShardedRouter.HedgeBudgetFraction.toString).toDouble
+          // still silent after HedgeAfterMs, COMPOSED with the drop path's
+          // deadline as the last resort: the hedge's second latency draw
+          // rescues the common intermittent stall (complete rate stays
+          // ~1), and the ~1% whose stall outruns BOTH attempts is dropped
+          // at the deadline instead of dragging p99 to the old 100 ms
+          // hedge budget (r14 measured 103.6 ms p99 as exactly that
+          // budget surfacing). Hedge rate and the deadline both ship in
+          // the artifact.
           val hIncomplete = new java.util.concurrent.atomic.AtomicLong(0)
           val hSent = new java.util.concurrent.atomic.AtomicLong(0)
           val hWins = new java.util.concurrent.atomic.AtomicLong(0)
           val hl = paced { i =>
-            val r = router.searchHedged(qPool(i % nQ), hedgeMs,
-              hedgeDeadlineMs, budgetFraction = hedgeBudget)
+            val r = router.searchHedged(qPool(i % nQ), HedgeAfterMs, DeadlineMs)
             if (!r.complete) hIncomplete.incrementAndGet()
             hSent.addAndGet(r.hedgesSent)
             hWins.addAndGet(r.hedgeWins)
           }
           Map(
-            "crossproc_deadline_ms" -> deadlineMs.toDouble,
+            "crossproc_deadline_ms" -> DeadlineMs.toDouble,
             "crossproc_deadline_paced_p50_ms" -> pct(dl, 0.5),
             "crossproc_deadline_paced_p99_ms" -> pct(dl, 0.99),
             "crossproc_deadline_complete_rate" ->
-              math.rint((1.0 - dIncomplete.get().toDouble / paceN) * 10000) / 10000,
-            "crossproc_hedge_after_ms" -> hedgeMs.toDouble,
-            "crossproc_hedge_deadline_ms" -> hedgeDeadlineMs.toDouble,
-            "crossproc_hedge_budget" -> hedgeBudget,
+              r4(1.0 - dIncomplete.get().toDouble / paceN),
+            "crossproc_hedge_after_ms" -> HedgeAfterMs.toDouble,
+            "crossproc_hedge_deadline_ms" -> DeadlineMs.toDouble,
+            "crossproc_hedge_budget" -> RemoteShardedRouter.HedgeBudgetFraction,
             "crossproc_hedged_paced_p50_ms" -> pct(hl, 0.5),
             "crossproc_hedged_paced_p99_ms" -> pct(hl, 0.99),
             "crossproc_hedged_complete_rate" ->
-              math.rint((1.0 - hIncomplete.get().toDouble / paceN) * 10000) / 10000,
-            "crossproc_hedge_rate" ->
-              math.rint(hSent.get().toDouble / paceN * 10000) / 10000,
-            "crossproc_hedge_win_rate" -> (if (hSent.get() == 0) 0.0 else
-              math.rint(hWins.get().toDouble / hSent.get() * 10000) / 10000))
+              r4(1.0 - hIncomplete.get().toDouble / paceN),
+            "crossproc_hedge_rate" -> r4(hSent.get().toDouble / paceN),
+            "crossproc_hedge_win_rate" ->
+              (if (hSent.get() == 0) 0.0
+               else r4(hWins.get().toDouble / hSent.get())))
         })
-        val int8Extras: Map[String, Double] =
-          (if (!int8) Map.empty[String, Double]
-          else Map(
-            "crossproc_oversample" -> effOversample,
+        val modeKeys: Map[String, Double] =
+          calDecision.fold(Map.empty[String, Double])(d => Map(
+            "crossproc_oversample" -> oversample,
             "crossproc_float_slab_mb" ->
               math.rint(floatSlabBytes / 1e6 * 100) / 100,
             "crossproc_code_slab_mb" ->
-              math.rint(codeSlabBytes / 1e6 * 100) / 100) ++
-            calDecision.map(d => Map(
-              "crossproc_oversample_calibrated" -> 1.0,
-              "crossproc_cal_sample_recall" -> d.sampleRecall,
-              "crossproc_cal_target" -> d.targetRecall,
-              "crossproc_cal_target_met" ->
-                (if (d.family == "int8") 1.0 else 0.0))
-            ).getOrElse(Map("crossproc_oversample_calibrated" -> 0.0))) ++
-          (if (!int8 && !ivf && !graph) Map.empty[String, Double]
+              math.rint(codeSlabBytes / 1e6 * 100) / 100,
+            "crossproc_oversample_calibrated" -> 1.0,
+            "crossproc_cal_sample_recall" -> d.sampleRecall,
+            "crossproc_cal_target" -> d.targetRecall,
+            "crossproc_cal_target_met" ->
+              (if (d.family == "int8") 1.0 else 0.0))) ++
+          (if (!approximate) Map.empty[String, Double]
           else Map("crossproc_recall_at_k" -> recallAtK)) ++
-          (if (!ivf) Map.empty[String, Double]
+          (if (!mode.ivf) Map.empty[String, Double]
           else Map(
             "crossproc_nprobe" -> ivfNprobe.toDouble,
             "crossproc_cells" -> ivfCents.length.toDouble,
-            "crossproc_recall_target" -> ivfTarget,
+            "crossproc_recall_target" -> target,
             "crossproc_recall_at_nprobe1" -> recallAtNprobe1,
             "crossproc_scanned_frac" -> ivfScanFrac)) ++
-          (if (!graph) Map.empty[String, Double]
+          (if (!mode.graph) Map.empty[String, Double]
           else Map(
             "crossproc_beam" -> graphBeam.toDouble,
             "crossproc_edges" -> graphEdges.toDouble,
             "crossproc_entries" -> graphEntries.toDouble,
-            "crossproc_recall_target" -> ivfTarget,
+            "crossproc_recall_target" -> target,
             "crossproc_cal_target_met" -> graphCalMet))
         val result = (Map(
           "crossproc_rows" -> bigN.toDouble,
@@ -924,9 +847,10 @@ object CrossProc {
           "crossproc_drive_steal_pct" -> driveSteal,
           "crossproc_drive_retried" -> retried,
           "crossproc_policy_steal_pct" -> policySteal,
-          "crossproc_stall_ms" -> stallMs.toDouble)
-          ++ tailPhases ++ int8Extras ++ filteredPhases)
-          .map { case (key, v) => key.replaceFirst("crossproc", P) -> v }
+          // no worker is ever stalled on purpose: the key keeps its 0
+          "crossproc_stall_ms" -> 0.0)
+          ++ tailPhases ++ modeKeys ++ filteredPhases)
+          .map { case (key, v) => key.replaceFirst("crossproc", mode.prefix) -> v }
         ok = Some(result)
         result
       } finally router.close()
@@ -1008,8 +932,6 @@ object CrossProcProbe {
     pb.environment().put("SPARK_GRAFT_SF_DIR", sfDir)
     pb.environment().put("SPARK_GRAFT_CPUS", cpus.toString)
     pb.environment().put("GRAFT_XPROC_MODES", modes)
-    sys.env.get("GRAFT_XPROC_OVERSAMPLE").foreach(v =>
-      pb.environment().put("GRAFT_XPROC_OVERSAMPLE", v))
     pb.redirectErrorStream(true)
     pb.redirectOutput(logFile)
     val p = pb.start()
@@ -1037,152 +959,40 @@ object CrossProcProbe {
       .toMap
   }
 
+  /** Runs each mode of `GRAFT_XPROC_MODES` (default `float`; see
+    * [[CrossProc.Mode]]) on one clustered replica-too-big fixture built
+    * from `SPARK_GRAFT_SF_DIR`, printing one `"probe":"crossproc"` line
+    * per finished mode. The list is checked before anything is built; a
+    * failed mode prints a `crossproc_mode_error:` line and the probe
+    * exits 1. */
   def main(args: Array[String]): Unit = {
+    val modes = CrossProc.Mode.parseList(
+      sys.env.getOrElse("GRAFT_XPROC_MODES", "float"))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // the slab handoff collects whole shards to the driver (the
-    // deliberate replica-tier shape); the ivf-scale sweep's 8× point is a
-    // 2.1M-row single shard ≈ 1.1 GB of task results — over the 1 GB
-    // default cap
-    val spark = Drive.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"),
-      "spark.driver.maxResultSize" -> "8g")
+    val spark = Drive.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     val points = graft.operators.Collection.load(spark, sfDir)
     val n = points.count()
-    val shardMaxRows = BatchedServer.DefaultReplicaMaxRows
-    val nCopies = (shardMaxRows / math.max(n, 1L)).toInt + 1
-    val idStride = 1L << 32
-    // GRAFT_XPROC_FIXTURE: "clustered" (default — VERDICT r16 #3: earned
-    // recall geometry, straddling Gaussian clusters) or "replicated"
-    // (the pre-r17 copies fixture, kept as the A/B knob; its recall rows
-    // are structural 1.0 at nprobe=1 and say nothing).
-    val fixtureKind = sys.env.getOrElse("GRAFT_XPROC_FIXTURE", "clustered")
-    val bigPoints =
-      if (fixtureKind == "clustered") {
-        val d = points.select(org.apache.spark.sql.functions.size(
-          col("embedding"))).head().getInt(0)
-        CrossProc.clusteredPoints(spark, nCopies * n, d)
-          .repartition(32).cache()
-      } else {
-        val copies = spark.range(nCopies).select(col("id").as("copy"))
-        points.crossJoin(copies)
-          .select((col("id") + col("copy") * idStride).as("id"),
-            col("embedding"), col("user_id"))
-          .repartition(32).cache()
-      }
+    val nCopies = (BatchedServer.DefaultReplicaMaxRows / math.max(n, 1L)).toInt + 1
+    // the clustered fixture (VERDICT r16 #3): earned recall geometry,
+    // straddling Gaussian clusters, at the source points' dimension
+    val d = points.select(org.apache.spark.sql.functions.size(
+      col("embedding"))).head().getInt(0)
+    val bigPoints = CrossProc.clusteredPoints(spark, nCopies * n, d)
+      .repartition(32).cache()
     bigPoints.count()
     // query pool FROM the fixture (its rows are what the exact oracle
     // and the workers serve)
     val qPool = bigPoints.orderBy("id").limit(400)
       .select("embedding").collect()
       .map(_.getSeq[Double](0).toArray)
-    // GRAFT_XPROC_IVF_SCALE=1: the flat-per-query sweep (VERDICT r15 #1
-    // "the number the full-scan tier cannot produce") — ONE worker, shard
-    // rows growing 1×/2×/4×/8×, C ∝ N (fixed ~8k-row cells), nprobe
-    // re-calibrated per size at the same 0.95 target. The full-scan
-    // tier's per-query cost grows with the slab; the IVF tier's probed
-    // rows stay ~nprobe·cellRows, so its closed p50 should stay flat.
-    // Each size prints one JSON line with both tiers' numbers.
-    if (sys.env.get("GRAFT_XPROC_IVF_SCALE").contains("1")) {
-      bigPoints.unpersist() // the sweep builds its own sized fixtures
-      // the sweep keeps its r16 replicated fixtures (it grades how
-      // per-query COST scales with shard rows, where the copies are the
-      // point) — so its query pool comes from the source points, not the
-      // clustered main fixture
-      val sweepQPool = points.orderBy("id").limit(400)
-        .select("embedding").collect()
-        .map(_.getSeq[Double](0).toArray)
-      val mults = sys.env.getOrElse("GRAFT_XPROC_SCALE_MULTS", "1,2,4,8")
-        .split(",").map(_.trim.toInt).toSeq
-      mults.foreach { mult =>
-        val copies = nCopies * mult
-        val big = {
-          val cs = spark.range(copies).select(col("id").as("copy"))
-          points.crossJoin(cs)
-            .select((col("id") + col("copy") * idStride).as("id"),
-              col("embedding"), col("user_id"))
-            .repartition(32).cache()
-        }
-        val rows = big.count()
-        val fl = CrossProc.measure(spark, big, sweepQPool,
-          forcedShards = Some(1))
-        val iv = CrossProc.measure(spark, big, sweepQPool,
-          forcedShards = Some(1), ivf = true)
-        big.unpersist()
-        def g(m: Map[String, Double], key: String): Double =
-          m.getOrElse(key, -1.0)
-        println(s"""{"probe":"ivfscale","rows":$rows,""" +
-          s""""full_closed_p50_ms":${g(fl, "crossproc_closed_p50_ms")},""" +
-          s""""full_closed_qps":${g(fl, "crossproc_closed_qps")},""" +
-          s""""ivf_closed_p50_ms":${g(iv, "crossproc_ivf_closed_p50_ms")},""" +
-          s""""ivf_closed_qps":${g(iv, "crossproc_ivf_closed_qps")},""" +
-          s""""ivf_paced_p50_ms":${g(iv, "crossproc_ivf_paced_p50_ms")},""" +
-          s""""ivf_nprobe":${g(iv, "crossproc_ivf_nprobe")},""" +
-          s""""ivf_cells":${g(iv, "crossproc_ivf_cells")},""" +
-          s""""ivf_scanned_frac":${g(iv, "crossproc_ivf_scanned_frac")},""" +
-          s""""ivf_scanned_rows":${math.rint(
-            g(iv, "crossproc_ivf_scanned_frac") * rows)},""" +
-          s""""ivf_recall_at_k":${g(iv, "crossproc_ivf_recall_at_k")},""" +
-          s""""ivf_correct":${g(iv, "crossproc_ivf_correct")}}""")
-      }
-      spark.stop()
-      return
-    }
-    // GRAFT_XPROC_GRAPH_VS_IVF=1: the cell-growth regime comparison
-    // (VERDICT r16 #4's motivating point) — ONE worker, the ivf tier
-    // forced onto COARSE cells (default 32768 rows/cell, the probed-cell
-    // size the ×8 sweep's skewed cell reached) vs the graph tier on the
-    // same fixture: ivf's per-query work is nprobe · cellRows and grows
-    // with the cell; the descent's beam·degree·hops does not. One JSON
-    // line with both tiers' p50/QPS/recall.
-    if (sys.env.get("GRAFT_XPROC_GRAPH_VS_IVF").contains("1")) {
-      val coarse = sys.env.getOrElse(
-        "GRAFT_XPROC_COARSE_CELL_ROWS", "32768").toLong
-      val iv = CrossProc.measure(spark, bigPoints, qPool,
-        forcedShards = Some(1), ivf = true, cellRowsOverride = coarse)
-      val gr = CrossProc.measure(spark, bigPoints, qPool,
-        forcedShards = Some(1), graph = true)
-      def g(m: Map[String, Double], key: String): Double =
-        m.getOrElse(key, -1.0)
-      println(s"""{"probe":"graphvsivf","rows":${bigPoints.count()},""" +
-        s""""coarse_cell_rows":$coarse,""" +
-        s""""ivf_closed_p50_ms":${g(iv, "crossproc_ivf_closed_p50_ms")},""" +
-        s""""ivf_paced_p50_ms":${g(iv, "crossproc_ivf_paced_p50_ms")},""" +
-        s""""ivf_closed_qps":${g(iv, "crossproc_ivf_closed_qps")},""" +
-        s""""ivf_nprobe":${g(iv, "crossproc_ivf_nprobe")},""" +
-        s""""ivf_scanned_frac":${g(iv, "crossproc_ivf_scanned_frac")},""" +
-        s""""ivf_recall_at_k":${g(iv, "crossproc_ivf_recall_at_k")},""" +
-        s""""graph_closed_p50_ms":${g(gr, "crossproc_graph_closed_p50_ms")},""" +
-        s""""graph_paced_p50_ms":${g(gr, "crossproc_graph_paced_p50_ms")},""" +
-        s""""graph_closed_qps":${g(gr, "crossproc_graph_closed_qps")},""" +
-        s""""graph_beam":${g(gr, "crossproc_graph_beam")},""" +
-        s""""graph_recall_at_k":${g(gr, "crossproc_graph_recall_at_k")}}""")
-      spark.stop()
-      return
-    }
-    val forced = sys.env.get("GRAFT_XPROC_SHARDS").map(_.toInt)
-    // GRAFT_XPROC_MODES: comma list of float,int8,ivf,ivf8 — all modes
-    // share ONE fixture build so the in-suite bench can gather every
-    // cross-proc tier from a single small-heap subprocess (VERDICT r15
-    // #4: no policy number graded from a big-heap JVM).
-    // GRAFT_XPROC_INT8=1 is the legacy spelling of MODES=int8.
-    val modes = sys.env.get("GRAFT_XPROC_MODES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      .getOrElse(
-        if (sys.env.get("GRAFT_XPROC_INT8").contains("1")) Seq("int8")
-        else Seq("float"))
-    // <= 0 (the default): calibrate the int8 oversample from shard 0's
-    // slab at the serving recall target; positive pins it (A/B knob)
-    val oversample =
-      sys.env.getOrElse("GRAFT_XPROC_OVERSAMPLE", "-1").toDouble
-    // one probe line per finished mode: a failing mode costs only its own
-    // keys, and the exit status says that one failed
+    // all modes share ONE fixture build so the in-suite bench can gather
+    // every cross-proc tier from a single small-heap subprocess (VERDICT
+    // r15 #4: no policy number graded from a big-heap JVM); one probe
+    // line per finished mode: a failing mode costs only its own keys,
+    // and the exit status says that one failed
     val failed = modes.count { mode =>
       try {
-        val keys = CrossProc.measure(spark, bigPoints, qPool,
-          forcedShards = forced,
-          int8 = mode == "int8" || mode == "ivf8",
-          ivf = mode == "ivf" || mode == "ivf8",
-          int8Oversample = oversample,
-          graph = mode == "graph")
+        val keys = CrossProc.measure(spark, bigPoints, qPool, mode)
         println((Seq("\"probe\":\"crossproc\"", s""""sf":"$sfDir"""", s""""mode":"$mode"""") ++
           keys.toSeq.sortBy(_._1).map { case (key, v) => "\"" + key + "\":" + v })
           .mkString("{", ",", "}"))

@@ -240,7 +240,7 @@ object RefreshProbe {
     // sidecar, calibration knobs), not just the float file
     val nprobe = math.max(1, c / 16)
     val proc = Drive.spawnWorker("4g", Seq(v1, port.toString, k.toString,
-      "0.0", "8", "0", "20", s"$v1.i8", s"$v1.ivf", nprobe.toString, "3.0"))
+      "0.0", "threads=8", s"int8=$v1.i8", s"ivf=$v1.ivf", s"nprobe=$nprobe"))
     try {
       val router =
         Drive.whenUp(new RemoteShardedRouter(Seq(("127.0.0.1", port)), k))
@@ -285,7 +285,8 @@ object RefreshProbe {
     val pPort = 43500 + (System.nanoTime() % 97).toInt
     val bPort = pPort + 101
     def worker(port: Int) =
-      Drive.spawnWorker("4g", Seq(slab, port.toString, k.toString, "0.0", "8"))
+      Drive.spawnWorker("4g", Seq(slab, port.toString, k.toString, "0.0",
+        "threads=8"))
     val primary = worker(pPort)
     val backup = worker(bPort)
     try {
@@ -361,7 +362,7 @@ object RefreshProbe {
     val nprobe = math.max(1, c / 16)
     val port = 43700 + (System.nanoTime() % 97).toInt
     val proc = Drive.spawnWorker("4g", Seq(gen1, port.toString, k.toString,
-      "0.0", "8", "0", "20", s"$gen1.i8", s"$gen1.ivf", nprobe.toString, "3.0"))
+      "0.0", "threads=8", s"int8=$gen1.i8", s"ivf=$gen1.ivf", s"nprobe=$nprobe"))
     try {
       val router =
         Drive.whenUp(new RemoteShardedRouter(Seq(("127.0.0.1", port)), k))

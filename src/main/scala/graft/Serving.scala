@@ -40,22 +40,22 @@ import org.apache.spark.storage.StorageLevel
   *     in-memory shard is genuinely imperative per-partition logic, and
   *     a serving flush is latency-critical in a way no analytics query
   *     is.
-  *  2. '''Pipelined flushes.''' Up to `pipelineDepth` flush jobs run
-  *     concurrently; the flusher thread keeps DRAINING the queue while
-  *     jobs are in flight, so batch formation overlaps job execution
+  *  2. '''Pipelined flushes.''' Up to [[BatchedServer.PipelineDepth]]
+  *     flush jobs run concurrently; the flusher thread keeps DRAINING
+  *     the queue while jobs are in flight, so batch formation overlaps
+  *     job execution
   *     (the old loop ran drain → job → distribute strictly serially,
   *     so every request arriving mid-job waited that job out plus its
   *     own full flush window).
   *  3. '''Wave-coalescing batching.''' A flush takes everything queued
-  *     (up to `maxBatch`), waits at most `maxWaitMs` for the rest of a
-  *     near-synchronized client wave (the window only ticks while the
-  *     queue is EMPTY — a deep queue never waits), then closes as soon
+  *     (up to `maxBatch`) without waiting for more, then closes as soon
   *     as a pipeline slot is free, absorbing anything that arrived
   *     while slots were busy. Under sustained load the in-flight job
-  *     time extends the batching window for free, so the default window
-  *     is 0: pipeline-slot backpressure coalesces waves by itself, and
-  *     an explicit wait is pure added latency (measured: 3 ms window
-  *     cost ≈ +3 ms p50 at 64 closed-loop clients, no QPS gain).
+  *     time extends the batching window for free: pipeline-slot
+  *     backpressure coalesces a near-synchronized client wave by
+  *     itself, and an explicit straggler wait is pure added latency
+  *     (measured: a 3 ms window cost ≈ +3 ms p50 at 64 closed-loop
+  *     clients, no QPS gain).
   *  4. '''Shard-local replica tier.''' Even a perfectly-formed one-stage
   *     job pays Spark's dispatch floor — measured on the dev box:
   *     ~12 ms p50 for a 1-task collect, 15–18 ms for 8 tasks — so NO
@@ -103,8 +103,8 @@ import org.apache.spark.storage.StorageLevel
   *
   * Thread model: callers [[submit]] from any number of threads; one
   * daemon flusher drains the queue and hands batches to a
-  * `pipelineDepth`-wide executor. A failed flush fails exactly that
-  * flush's futures. submit/close are synchronized so no request can be
+  * [[BatchedServer.PipelineDepth]]-wide executor. A failed flush fails
+  * exactly that flush's futures. submit/close are synchronized so no request can be
   * enqueued after close()'s final drain — a request either throws
   * "closed" or is guaranteed a completed future.
   */
@@ -113,8 +113,6 @@ final class BatchedServer(
     k: Int,
     threshold: Double,
     maxBatch: Int = 1024,
-    maxWaitMs: Long = 0L,
-    pipelineDepth: Int = 2,
     localReplicaMaxRows: Long = BatchedServer.DefaultReplicaMaxRows,
     scoreThreads: Int = 0,
     int8Replica: Boolean = false,
@@ -124,8 +122,6 @@ final class BatchedServer(
 
   require(maxBatch >= 1, s"maxBatch must be >= 1, got $maxBatch")
   require(scoreThreads >= 0, s"scoreThreads must be >= 0, got $scoreThreads")
-  require(maxWaitMs >= 0, s"maxWaitMs must be >= 0, got $maxWaitMs")
-  require(pipelineDepth >= 1, s"pipelineDepth must be >= 1, got $pipelineDepth")
   require(localReplicaMaxRows >= 0,
     s"localReplicaMaxRows must be >= 0, got $localReplicaMaxRows")
 
@@ -204,9 +200,9 @@ final class BatchedServer(
   private val queue = new LinkedBlockingQueue[Pending]()
   private val lock = new Object
   @volatile private var open = true
-  private val slots = new Semaphore(pipelineDepth)
+  private val slots = new Semaphore(BatchedServer.PipelineDepth)
   private val flushPool = Executors.newFixedThreadPool(
-    pipelineDepth,
+    BatchedServer.PipelineDepth,
     (r: Runnable) => {
       val t = new Thread(r, "graft-batched-server-flush")
       t.setDaemon(true)
@@ -573,11 +569,15 @@ final class BatchedServer(
           }.collect()
           BatchedServer.topKPerQuery(queries.length, kk, cands)
         }
-      batch.zipWithIndex.foreach { case (pd, qi) =>
-        pd.p.success(toRows(perQuery(qi)))
-        metrics.recordRequest(System.nanoTime() - pd.t0, success = true)
-      }
+      val answers = batch.indices.map(qi => toRows(perQuery(qi)))
+      // counted BEFORE any future completes: a caller that reads the
+      // metrics as soon as its answer arrives finds its request and its
+      // flush already counted
       metrics.recordFlush(batch.size)
+      batch.zip(answers).foreach { case (pd, rows) =>
+        metrics.recordRequest(System.nanoTime() - pd.t0, success = true)
+        pd.p.success(rows)
+      }
     } catch {
       case e: Throwable =>
         batch.foreach { pd =>
@@ -589,29 +589,10 @@ final class BatchedServer(
 
   private val flusher = new Thread(() => {
     while (open || !queue.isEmpty) {
-      val first = queue.poll(math.max(maxWaitMs, 1L), TimeUnit.MILLISECONDS)
+      val first = queue.poll(1L, TimeUnit.MILLISECONDS)
       if (first != null) {
         val buf = ArrayBuffer(first)
         drainInto(buf)
-        // straggler window: concurrent closed-loop clients fire in
-        // near-synchronized waves — waiting a FEW ms coalesces a whole
-        // wave into one job instead of two half-size staggered ones.
-        // Only ticks while the queue is empty; a deep queue never waits.
-        val deadline = System.nanoTime() + maxWaitMs * 1000000L
-        var waiting = buf.size < maxBatch
-        while (waiting) {
-          val left = deadline - System.nanoTime()
-          if (left <= 0) waiting = false
-          else {
-            val nxt = queue.poll(left, TimeUnit.NANOSECONDS)
-            if (nxt == null) waiting = false
-            else {
-              buf += nxt
-              drainInto(buf)
-              waiting = buf.size < maxBatch
-            }
-          }
-        }
         // wait for a pipeline slot; arrivals keep queuing meanwhile and
         // join this flush below — in-flight job time extends the window
         slots.acquire()
@@ -868,16 +849,11 @@ object ServingCalibration {
     def lcbAt(os: Int): Double = {
       val got = BatchedServer.int8TwoPhase(rep, codes, queries, k, th,
         os.toDouble, null, 1)
-      val per = (0 until nS).map { qi =>
+      graft.operators.IndexMeta.lowerBound90((0 until nS).map { qi =>
         val want = exact.getOrElse(qi, Set.empty)
         if (want.isEmpty) 1.0
         else (got(qi).map(_._1).toSet & want).size.toDouble / want.size
-      }
-      val m = per.sum / nS
-      val sd =
-        if (nS < 2) 0.0
-        else math.sqrt(per.map(r => (r - m) * (r - m)).sum / (nS - 1))
-      m - 1.28 * sd / math.sqrt(nS)
+      })
     }
     OversampleLadder.iterator
       .map(os => (os, lcbAt(os)))
@@ -895,6 +871,9 @@ object BatchedServer {
     * dim 64) replicates into serving memory, mirroring the reference's
     * in-process index. Larger shards serve via the batched job path. */
   val DefaultReplicaMaxRows: Long = 1L << 18
+
+  /** Flush jobs a [[BatchedServer]] keeps in flight at once. */
+  val PipelineDepth: Int = 2
 
   /** Work cap (slab cells = rows × dim) under which scoring runs inline
     * on the requesting/flushing thread instead of fanning out to the
@@ -1928,8 +1907,7 @@ object ShardedServer {
     * the ids at build time — nothing per-request. */
   def apply(points: DataFrame, k: Int, threshold: Double,
       shardMaxRows: Long = BatchedServer.DefaultReplicaMaxRows,
-      maxBatch: Int = 1024, maxWaitMs: Long = 0L,
-      pipelineDepth: Int = 2,
+      maxBatch: Int = 1024,
       recallTarget: Option[Double] = None): ShardedServer = {
     require(shardMaxRows >= 1, s"shardMaxRows must be >= 1, got $shardMaxRows")
     import org.apache.spark.sql.functions.{col, lit, max => smax, pmod, count}
@@ -1947,7 +1925,7 @@ object ShardedServer {
       new BatchedServer(
         if (nShards == 1) points
         else points.filter(pmod(col("id"), lit(nShards.toLong)) === i.toLong),
-        k, threshold, maxBatch, maxWaitMs, pipelineDepth,
+        k, threshold, maxBatch,
         localReplicaMaxRows = shardMaxRows,
         scoreThreads = perShardThreads,
         recallTarget = recallTarget)

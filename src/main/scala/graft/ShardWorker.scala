@@ -735,8 +735,69 @@ object ShardWorker {
     * ≤ this many slab rows is served by an exact scan over just the
     * matching rows (recall 1.0 — immune to the filtered-ANN recall hole);
     * a broader one composes with the IVF-pruned phase 1 as a post-filter
-    * on the probed cells. Overridable per worker (launch arg 12). */
+    * on the probed cells. Overridable per worker (launch option
+    * `full_scan`). */
   val DefaultFullScanThreshold: Int = 20000
+
+  /** A worker's launch configuration. The first four launch args are
+    * positional, `slab port k th`; every other setting is one named
+    * `key=value` token, each key at most once:
+    *   - `threads`: scan pool size (default max(4, cores / 2));
+    *   - `int8`: an int8 code-slab path — the worker pins the byte slab
+    *     for phase 1 and mmaps the float slab only for survivor rescore;
+    *   - `ivf` + `nprobe`: an IVF sidecar of the CELL-ORDERED slab — each
+    *     request scans only the `nprobe` cells nearest each query
+    *     (composes with `int8`); `nprobe=-1` reads nprobe and oversample
+    *     from the persisted `<ivf>.knobs` file on every (re)load;
+    *   - `oversample`: the int8 phase-1 oversample (default 3);
+    *   - `full_scan`: the filtered planner's cardinality switch (default
+    *     [[DefaultFullScanThreshold]]);
+    *   - `graph` + `beam`: a graph sidecar — phase 1 becomes the
+    *     hop-bounded beam descent (excludes `ivf` and `int8`, see
+    *     [[loadState]]).
+    * Paths default to "" (the mode is off). */
+  final case class LaunchConfig(slab: String, port: Int, k: Int, th: Double,
+      threads: Int = math.max(4, Runtime.getRuntime.availableProcessors / 2),
+      int8: String = "", ivf: String = "", nprobe: Int = 0,
+      oversample: Double = 3.0, fullScan: Int = DefaultFullScanThreshold,
+      graph: String = "", beam: Int = 0)
+
+  object LaunchConfig {
+    val Keys: Seq[String] = Seq("threads", "int8", "ivf", "nprobe",
+      "oversample", "full_scan", "graph", "beam")
+    val Usage: String = "usage: ShardWorker <slab> <port> <k> <th> " +
+      s"[key=value ...], keys ${Keys.mkString(", ")}"
+
+    /** Parse the launch args; any malformed token fails with [[Usage]]
+      * before anything is loaded. */
+    def parse(args: Seq[String]): LaunchConfig = {
+      require(args.length >= 4, s"need 4 positional args; $Usage")
+      val named = args.drop(4).map { t =>
+        val i = t.indexOf('=')
+        require(i > 0, s"launch arg '$t' is not key=value; $Usage")
+        t.take(i) -> t.drop(i + 1)
+      }
+      val keys = named.map(_._1)
+      val unknown = keys.filterNot(Keys.contains)
+      require(unknown.isEmpty,
+        s"unknown launch key(s) ${unknown.mkString(", ")}; $Usage")
+      val repeated = keys.diff(keys.distinct)
+      require(repeated.isEmpty,
+        s"repeated launch key(s) ${repeated.mkString(", ")}; $Usage")
+      val m = named.toMap
+      val d = LaunchConfig(args(0), args(1).toInt, args(2).toInt,
+        args(3).toDouble)
+      d.copy(
+        threads = m.get("threads").fold(d.threads)(_.toInt),
+        int8 = m.getOrElse("int8", d.int8),
+        ivf = m.getOrElse("ivf", d.ivf),
+        nprobe = m.get("nprobe").fold(d.nprobe)(_.toInt),
+        oversample = m.get("oversample").fold(d.oversample)(_.toDouble),
+        fullScan = m.get("full_scan").fold(d.fullScan)(_.toInt),
+        graph = m.getOrElse("graph", d.graph),
+        beam = m.get("beam").fold(d.beam)(_.toInt))
+    }
+  }
 
   /** One immutable slab GENERATION — everything a request needs to be
     * served. Requests read a single volatile snapshot at arrival, so a
@@ -970,12 +1031,7 @@ object ShardWorker {
         }
       })
     def visit(row: Int): Unit = if (visited.add(row)) {
-      val b0 = rep.offs(row)
-      val nd = math.min(rep.offs(row + 1) - b0, q.length)
-      var s = 0.0d
-      var d = 0
-      while (d < nd) { s += rep.embs(b0 + d) * q(d); d += 1 }
-      val r = graft.plans.Num.round6(s)
+      val r = graft.plans.Num.round6(rep.dot(row, q))
       val id = rep.ids(row)
       if (r >= th && (uset == null || uset.contains(rep.users(row))))
         top.offer(r, id, rep.users(row))
@@ -1071,6 +1127,8 @@ object ShardWorker {
     }
   }
 
+  /** Serve one slab generation over TCP; launch args as in
+    * [[LaunchConfig]]. */
   def main(args: Array[String]): Unit = run(args, _ => ())
 
   /** [[main]], handing the worker's shared lap to `onLap` before the
@@ -1078,58 +1136,15 @@ object ShardWorker {
     * one's lap counters). */
   private[graft] def run(args: Array[String],
       onLap: BatchedServer.SharedLap => Unit): Unit = {
-    val slabPath = args(0)
-    val port = args(1).toInt
-    val k = if (args.length > 2) args(2).toInt else 10
-    val th = if (args.length > 3) args(3).toDouble else 0.1
-    val threads = if (args.length > 4) args(4).toInt else
-      math.max(4, Runtime.getRuntime.availableProcessors / 2)
-    // fault-injection knobs (measurement only): stall every Nth search
-    // request by stallMs, so the router's straggler semantics can be
-    // measured under an ACTUAL (intermittent, Dean–Barroso-shaped)
-    // straggler rather than only in the regime where deadlines never
-    // fire. Intermittent by design: a PERSISTENT stall under offered
-    // load beyond conns/stall capacity exhausts the connection pool —
-    // that failure needs shedding/failover (the documented cluster-
-    // manager layer), not a deadline.
-    val stallMs = if (args.length > 5) args(5).toLong else 0L
-    val stallEvery = if (args.length > 6) args(6).toInt else 20
-    // optional 8th arg: an INT8 code-slab path — the worker then pins the
-    // byte slab in RAM for phase 1 and mmaps the float slab only for
-    // survivor rescore (VERDICT r14 #6: the 8× RAM cut where it decides
-    // shard count). Empty string = float mode (unchanged).
-    val int8Path = if (args.length > 7) args(7) else ""
-    // optional 9th/10th args: an IVF sidecar path + nprobe (VERDICT r15
-    // #1 — sub-linear phase 1): the slab must be CELL-ORDERED and the
-    // sidecar cut from it (fail-loud fingerprint); each request then
-    // scans only the nprobe cells nearest each query instead of the
-    // whole slab. Composes with int8 (pruned byte-slab phase 1 + mmap
-    // float rescore) and with the float kernel (exact within probed
-    // cells). Empty string = full-scan mode (unchanged).
-    val ivfPath = if (args.length > 8) args(8) else ""
-    val nprobe = if (args.length > 9) args(9).toInt else 0
-    // optional 11th arg: int8 phase-1 oversample — the serving knob the
-    // LCB calibration chooses (VERDICT r15 #3); default keeps the
-    // historical fixed 3. nprobe = -1 (arg 10) reads BOTH knobs from the
-    // persisted `<ivfPath>.knobs` file instead (VERDICT r16 #6).
-    val oversample = if (args.length > 10) args(10).toDouble else 3.0
-    // optional 12th arg: the filtered planner's full-scan cardinality
-    // switch (reference settings.full_scan_threshold = 20000)
-    val fullScanTh = if (args.length > 11) args(11).toInt
-      else DefaultFullScanThreshold
-    // optional 13th/14th args: a GRAPH sidecar path + beam width (VERDICT
-    // r16 #4) — phase 1 becomes the hop-bounded beam descent; mutually
-    // exclusive with the ivf sidecar and the int8 slab (see loadState)
-    val graphPath = if (args.length > 12) args(12) else ""
-    val beam = if (args.length > 13) args(13).toInt else 0
-    val reqCounter = new java.util.concurrent.atomic.AtomicLong(0)
+    val cfg = LaunchConfig.parse(args.toSeq)
+    import cfg.{k, th, threads}
     // the served slab GENERATION: swapped atomically by RELOAD frames;
     // a failed load keeps the old generation serving (fail-loud reply,
     // no state change). reloadLock serializes concurrent reloads so
     // versions are monotone.
     val stateRef = new java.util.concurrent.atomic.AtomicReference(
-      loadState(slabPath, int8Path, ivfPath, nprobe, oversample,
-        version = 1L, graphPath = graphPath, beam = beam))
+      loadState(cfg.slab, cfg.int8, cfg.ivf, cfg.nprobe, cfg.oversample,
+        version = 1L, graphPath = cfg.graph, beam = cfg.beam))
     val reloadLock = new Object
     val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
     // every unfiltered full scan of a float generation rides this one lap
@@ -1139,7 +1154,7 @@ object ShardWorker {
       def run(): Unit = println(lap.summary)
     }))
     val srv = new ServerSocket()
-    srv.bind(new InetSocketAddress("127.0.0.1", port))
+    srv.bind(new InetSocketAddress("127.0.0.1", cfg.port))
     def serve(sock: Socket): Unit = {
       val in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
       val out = new DataOutputStream(new BufferedOutputStream(sock.getOutputStream))
@@ -1234,13 +1249,10 @@ object ShardWorker {
               queries(qi) = q
               qi += 1
             }
-            if (stallMs > 0 &&
-              reqCounter.incrementAndGet() % stallEvery == 0)
-              Thread.sleep(stallMs)
             val res =
               if (users == null) search(st, queries, k, th, pool, threads, lap)
               else queries.map(q =>
-                filteredTopK(st, users, q, k, th, fullScanTh, pool, threads))
+                filteredTopK(st, users, q, k, th, cfg.fullScan, pool, threads))
             res.foreach { hits =>
               out.writeInt(hits.length)
               hits.foreach { case (id, s, u) =>
@@ -1262,10 +1274,10 @@ object ShardWorker {
         (if (st0.graph == null) ""
          else s" graphEdges=${st0.graph.nbrs.length} beam=${st0.beam}")
     if (st0.int8)
-      println(s"READY $port n=${st0.n} int8=1 " +
+      println(s"READY ${cfg.port} n=${st0.n} int8=1 " +
         s"codeBytes=${st0.i8.slab.codes.length}$ivfNote")
     else
-      println(s"READY $port n=${st0.n} simdRows=${st0.rep.simdRows}$ivfNote")
+      println(s"READY ${cfg.port} n=${st0.n} simdRows=${st0.rep.simdRows}$ivfNote")
     while (true) {
       val sock = srv.accept()
       sock.setTcpNoDelay(true)
@@ -1716,7 +1728,7 @@ final class RemoteShardedRouter(
     *
     * Why the duplicate helps against a SLOW WORKER and not just a slow
     * link: the worker serves each connection on its own thread, so an
-    * intermittent per-request stall (GC, CPU spike, the probe's
+    * intermittent per-request stall (GC, CPU spike, a test responder's
     * injected sleep) holds only the connection it arrived on — the
     * duplicate lands on a different pooled socket/thread and returns at
     * normal latency. A shard whose attempts all miss `timeoutMs` is

@@ -58,6 +58,21 @@ object IndexMeta {
     * (ADVICE r7). */
   val DefaultRecallTarget: Double = 0.95
 
+  /** One-sided 90% lower confidence bound of a sample mean,
+    * m − 1.28·sd/√n (sd the sample standard deviation, 0 below two
+    * values): what a calibrated knob's per-query recall sample must
+    * clear the target by — the nprobe here, the replica's int8
+    * oversample and the cross-process probe's nprobe and beam. Sums left
+    * to right in sample order. */
+  def lowerBound90(xs: Seq[Double]): Double = {
+    val n = xs.length.toDouble
+    val m = xs.sum / n
+    val sd =
+      if (n < 2) 0.0
+      else math.sqrt(xs.map(x => (x - m) * (x - m)).sum / (n - 1))
+    m - 1.28 * sd / math.sqrt(n)
+  }
+
   private val cache =
     new java.util.concurrent.ConcurrentHashMap[String, IndexMeta]()
 
@@ -136,13 +151,8 @@ object IndexMeta {
     }
     val nq = perQuery.size.toDouble
     val meanCurve = (0 until nC).map(p => perQuery.map(_(p)).sum / nq)
-    val lcbCurve = (0 until nC).map { p =>
-      val m = meanCurve(p)
-      val sd =
-        if (nq < 2) 0.0
-        else math.sqrt(perQuery.map(c => (c(p) - m) * (c(p) - m)).sum / (nq - 1))
-      math.max(0.0, m - 1.28 * sd / math.sqrt(nq))
-    }
+    val lcbCurve = (0 until nC).map(p =>
+      math.max(0.0, lowerBound90(perQuery.map(_(p)))))
     IndexMeta(n, cids, cents, hyperplanes, meanCurve, lcbCurve)
   }
 

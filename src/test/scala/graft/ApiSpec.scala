@@ -150,7 +150,7 @@ class ApiSpec extends SparkSpec {
       .select("embedding").as[Seq[Double]].collect().toSeq
     // maxBatch=7 forces 4+ flushes over the 24-request queue
     val batched = Api.serveBatched(points, embs, k = 10,
-      scoreThreshold = Some(0.1), maxBatch = 7, maxWaitMs = 5)
+      scoreThreshold = Some(0.1), maxBatch = 7)
     assert(batched.length == embs.length)
     embs.zip(batched).foreach { case (e, hits) =>
       val solo = Api.search(points, Seq(e).toDF("qemb"), k = 10,
@@ -169,7 +169,7 @@ class ApiSpec extends SparkSpec {
     val embs = points.orderBy("id").limit(16)
       .select("embedding").as[Seq[Double]].collect()
     val srv = Api.batchedServer(points, k = 5, scoreThreshold = Some(0.1),
-      maxBatch = 16, maxWaitMs = 10)
+      maxBatch = 16)
     try {
       import scala.concurrent.Await
       import scala.concurrent.duration._
@@ -202,7 +202,7 @@ class ApiSpec extends SparkSpec {
     // the submitted futures (not hang them) and leave the flusher alive
     val poisoned = points.filter(expr("raise_error('graft-test-boom') IS NULL"))
     val bad = Api.batchedServer(poisoned, k = 3, scoreThreshold = Some(0.1),
-      maxBatch = 4, maxWaitMs = 5)
+      maxBatch = 4)
     try {
       val fails = (0 until 3).map(_ => bad.submit(e))
       fails.foreach { f =>
@@ -212,27 +212,27 @@ class ApiSpec extends SparkSpec {
     } finally bad.close() // must return promptly, not hang on a dead flush
     // the session survives; a fresh server over good points serves fine
     val good = Api.batchedServer(points, k = 3, scoreThreshold = Some(0.1),
-      maxBatch = 4, maxWaitMs = 5)
+      maxBatch = 4)
     try assert(Await.result(good.submit(e), 2.minutes).nonEmpty)
     finally good.close()
   }
 
-  test("batchedServer latency bound: a lone request flushes after maxWaitMs, not maxBatch") {
+  test("batchedServer latency bound: a lone request does not wait for maxBatch") {
     import scala.concurrent.Await
     import scala.concurrent.duration._
     val e = points.orderBy("id").limit(1)
       .select("embedding").as[Seq[Double]].head()
     val srv = Api.batchedServer(points, k = 3, scoreThreshold = Some(0.1),
-      maxBatch = 100000, maxWaitMs = 30) // batch can never fill
+      maxBatch = 100000) // batch can never fill
     try {
       Await.result(srv.submit(e), 2.minutes) // warm the plan
       val t0 = System.nanoTime()
       val hits = Await.result(srv.submit(e), 2.minutes)
       val ms = (System.nanoTime() - t0) / 1e6
       assert(hits.nonEmpty)
-      // bound = flush window + one warmed batched job + slack; what it
-      // must NOT be is "forever, waiting for 99,999 more requests"
-      assert(ms < 5000, s"lone request took ${ms}ms — flush window ignored?")
+      // bound = one warmed batched job + slack; what it must NOT be is
+      // "forever, waiting for 99,999 more requests"
+      assert(ms < 5000, s"lone request took ${ms}ms — waiting for maxBatch?")
     } finally srv.close()
   }
 
@@ -246,7 +246,7 @@ class ApiSpec extends SparkSpec {
     // localReplicaMaxRows=0 forces the Spark-job tier — replica flushes
     // are sub-ms, too short to reliably observe an overlap
     val srv = Api.batchedServer(points, k = 3, scoreThreshold = Some(0.1),
-      maxBatch = 2, maxWaitMs = 5, pipelineDepth = 2, localReplicaMaxRows = 0)
+      maxBatch = 2, localReplicaMaxRows = 0)
     try {
       val futures = (0 until 64).map(i => srv.submit(embs(i % embs.length)))
       futures.foreach(f => assert(Await.result(f, 2.minutes).nonEmpty))

@@ -2,7 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The cross-process probe's output merge — no Spark, no workers. */
+/** The cross-process probe's mode list and output merge — no Spark, no
+  * workers. */
 class CrossProcProbeSpec extends AnyFunSuite {
 
   test("mergeProbeLines keeps every finished mode's keys and skips cut, " +
@@ -19,5 +20,23 @@ class CrossProcProbeSpec extends AnyFunSuite {
       "crossproc_ivf_closed_qps" -> 1209.8, "crossproc_ivf_recall_at_k" -> 0.95))
     assert(CrossProcProbe.mergeProbeLines(out.filterNot(_.contains("\"mode\":\"")).iterator)
       .isEmpty)
+  }
+
+  test("parseList takes the five known modes in order and rejects an " +
+      "unknown or empty list") {
+    import CrossProc.Mode
+    val all = Mode.parseList(" float,int8 ,ivf,ivf8,graph")
+    assert(all.map(_.name) == Seq("float", "int8", "ivf", "ivf8", "graph"))
+    assert(all.map(_.prefix) == Seq("crossproc", "crossproc_int8",
+      "crossproc_ivf", "crossproc_ivf8", "crossproc_graph"))
+    assert(all.map(m => (m.int8, m.ivf, m.graph)) == Seq((false, false, false),
+      (true, false, false), (false, true, false), (true, true, false),
+      (false, false, true)))
+    assert(Mode.parseList("ivf8,float").map(_.name) == Seq("ivf8", "float"))
+    Seq("ivf9", "float,ivf9", "Float", "", " , ").foreach { list =>
+      val ex = intercept[IllegalArgumentException](Mode.parseList(list))
+      assert(ex.getMessage.contains("usage: GRAFT_XPROC_MODES=") &&
+        ex.getMessage.contains(s"got '$list'"), ex.getMessage)
+    }
   }
 }

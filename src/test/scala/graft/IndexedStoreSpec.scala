@@ -922,7 +922,7 @@ class IndexedStoreSpec extends SparkSpec {
       val port = freePort()
       val t = new Thread(new Runnable {
         def run(): Unit = graft.ShardWorker.main(Array(v1, port.toString,
-          "5", "0.0", "2", "0", "20", s"$v1.i8", s"$v1.ivf", "16"))
+          "5", "0.0", "threads=2", s"int8=$v1.i8", s"ivf=$v1.ivf", "nprobe=16"))
       })
       t.setDaemon(true); t.start()
       var router: graft.RemoteShardedRouter = null

@@ -114,7 +114,7 @@ class ShardWorkerSpec extends AnyFunSuite with TempDirs {
     SlabIO.write(slabPath, fastRows)
     val workerThread = new Thread(new Runnable {
       def run(): Unit = ShardWorker.main(
-        Array(slabPath, fastPort.toString, k.toString, "0.0", "2"))
+        Array(slabPath, fastPort.toString, k.toString, "0.0", "threads=2"))
     })
     workerThread.setDaemon(true)
     workerThread.start()
@@ -329,8 +329,8 @@ class ShardWorkerSpec extends AnyFunSuite with TempDirs {
       val i8Port = freePort()
       val i8Thread = new Thread(new Runnable {
         def run(): Unit = ShardWorker.main(Array(floatPath,
-          i8Port.toString, k.toString, "0.0", "2", "0", "20",
-          s"$floatPath.i8"))
+          i8Port.toString, k.toString, "0.0", "threads=2",
+          s"int8=$floatPath.i8"))
       })
       i8Thread.setDaemon(true); i8Thread.start()
       var router: RemoteShardedRouter = null
@@ -382,7 +382,7 @@ class ShardWorkerSpec extends AnyFunSuite with TempDirs {
       SlabIO.write(otherPath, mkRows(501, 32))
       val ex = intercept[IllegalArgumentException] {
         ShardWorker.main(Array(otherPath, freePort().toString, k.toString,
-          "0.0", "2", "0", "20", s"$floatPath.i8"))
+          "0.0", "threads=2", s"int8=$floatPath.i8"))
       }
       assert(ex.getMessage.contains("fingerprint mismatch"))
       // content fingerprint (ADVICE r15): a float slab REGENERATED with
@@ -396,7 +396,7 @@ class ShardWorkerSpec extends AnyFunSuite with TempDirs {
         == floatBytes, "regenerated slab must be size-identical")
       val ex2 = intercept[IllegalArgumentException] {
         ShardWorker.main(Array(regenPath, freePort().toString, k.toString,
-          "0.0", "2", "0", "20", s"$floatPath.i8"))
+          "0.0", "threads=2", s"int8=$floatPath.i8"))
       }
       assert(ex2.getMessage.contains("content-fingerprint mismatch"))
     } finally {
@@ -594,7 +594,7 @@ class ShardWorkerSpec extends AnyFunSuite with TempDirs {
     val port = freePort()
     val t = new Thread(new Runnable {
       def run(): Unit = ShardWorker.main(
-        Array(v1, port.toString, k.toString, "0.0", "2"))
+        Array(v1, port.toString, k.toString, "0.0", "threads=2"))
     })
     t.setDaemon(true); t.start()
     var router: RemoteShardedRouter = null
@@ -868,8 +868,8 @@ class ShardWorkerSpec extends AnyFunSuite with TempDirs {
       val port = freePort()
       val t = new Thread(new Runnable {
         def run(): Unit = ShardWorker.main(Array(floatPath, port.toString,
-          k.toString, "0.0", "2", "0", "20", "", s"$floatPath.ivf",
-          ivf.c.toString))
+          k.toString, "0.0", "threads=2", s"ivf=$floatPath.ivf",
+          s"nprobe=${ivf.c}"))
       })
       t.setDaemon(true); t.start()
       var router: RemoteShardedRouter = null
@@ -995,8 +995,8 @@ class ShardWorkerSpec extends AnyFunSuite with TempDirs {
         val port = freePort()
         val t = new Thread(new Runnable {
           def run(): Unit = ShardWorker.main(Array(floatPath, port.toString,
-            k.toString, th.toString, "2", "0", "20", "", s"$floatPath.ivf",
-            cids.length.toString, "3.0", fullScanTh.toString))
+            k.toString, th.toString, "threads=2", s"ivf=$floatPath.ivf",
+            s"nprobe=${cids.length}", s"full_scan=$fullScanTh"))
         })
         t.setDaemon(true); t.start()
         var router: RemoteShardedRouter = null
@@ -1064,7 +1064,7 @@ class ShardWorkerSpec extends AnyFunSuite with TempDirs {
       val port = freePort()
       val t = new Thread(new Runnable {
         def run(): Unit = ShardWorker.main(Array(floatPath, port.toString,
-          k.toString, "0.0", "2", "0", "20", "", s"$floatPath.ivf", "-1"))
+          k.toString, "0.0", "threads=2", s"ivf=$floatPath.ivf", "nprobe=-1"))
       })
       t.setDaemon(true); t.start()
       var router: RemoteShardedRouter = null
@@ -1270,9 +1270,8 @@ class ShardWorkerSpec extends AnyFunSuite with TempDirs {
       val port = freePort()
       val t = new Thread(new Runnable {
         def run(): Unit = ShardWorker.main(Array(floatPath, port.toString,
-          k.toString, "0.0", "2", "0", "20", "", "", "0", "3.0",
-          ShardWorker.DefaultFullScanThreshold.toString,
-          s"$floatPath.graph", n.toString))
+          k.toString, "0.0", "threads=2", s"graph=$floatPath.graph",
+          s"beam=$n"))
       })
       t.setDaemon(true); t.start()
       var router: RemoteShardedRouter = null
@@ -1307,8 +1306,8 @@ class ShardWorkerSpec extends AnyFunSuite with TempDirs {
       val portB = freePort()
       val tB = new Thread(new Runnable {
         def run(): Unit = ShardWorker.main(Array(floatPath, portB.toString,
-          k.toString, "0.0", "2", "0", "20", "", "", "0", "3.0", "0",
-          s"$floatPath.graph", n.toString))
+          k.toString, "0.0", "threads=2", "full_scan=0",
+          s"graph=$floatPath.graph", s"beam=$n"))
       })
       tB.setDaemon(true); tB.start()
       var routerB: RemoteShardedRouter = null
@@ -1389,7 +1388,8 @@ class ShardWorkerSpec extends AnyFunSuite with TempDirs {
     val lapRef = new java.util.concurrent.atomic.AtomicReference[BatchedServer.SharedLap]()
     val t = new Thread(new Runnable {
       def run(): Unit = ShardWorker.run(
-        Array(paths(0), port.toString, k.toString, "0.0", "2"), lapRef.set)
+        Array(paths(0), port.toString, k.toString, "0.0", "threads=2"),
+        lapRef.set)
     })
     t.setDaemon(true); t.start()
     val clients = 6
@@ -1497,7 +1497,7 @@ class ShardWorkerSpec extends AnyFunSuite with TempDirs {
     }
     val t = new Thread(new Runnable {
       def run(): Unit = ShardWorker.main(
-        Array(slab, port.toString, k.toString, "0.0", "2"))
+        Array(slab, port.toString, k.toString, "0.0", "threads=2"))
     })
     t.setDaemon(true); t.start()
     def connect() = Drive.whenUp(new RemoteShardedRouter(
@@ -1586,5 +1586,44 @@ class ShardWorkerSpec extends AnyFunSuite with TempDirs {
     assert(!ShardWorker.reloadHeadroomOk(3499L, 1000L, 0L))
     assert(ShardWorker.reloadHeadroomOk(2000L, 8000L, 1000L))
     assert(!ShardWorker.reloadHeadroomOk(1999L, 8000L, 1000L))
+  }
+
+  test("launch parser: four positional args give the defaults, each named " +
+      "key round-trips, malformed tokens fail before the slab loads") {
+    import ShardWorker.LaunchConfig
+    val base = Seq("/s.slab", "4100", "7", "0.25")
+    val d = LaunchConfig.parse(base)
+    assert(d == LaunchConfig("/s.slab", 4100, 7, 0.25,
+      threads = math.max(4, Runtime.getRuntime.availableProcessors / 2),
+      int8 = "", ivf = "", nprobe = 0, oversample = 3.0, fullScan = 20000,
+      graph = "", beam = 0))
+    val cases = Seq(
+      "threads=3" -> d.copy(threads = 3),
+      "int8=/s.slab.i8" -> d.copy(int8 = "/s.slab.i8"),
+      "ivf=/s.slab.ivf" -> d.copy(ivf = "/s.slab.ivf"),
+      "nprobe=-1" -> d.copy(nprobe = -1),
+      "oversample=2.5" -> d.copy(oversample = 2.5),
+      "full_scan=0" -> d.copy(fullScan = 0),
+      "graph=/s.slab.graph" -> d.copy(graph = "/s.slab.graph"),
+      "beam=32" -> d.copy(beam = 32))
+    assert(cases.map(_._1.takeWhile(_ != '=')) == LaunchConfig.Keys)
+    cases.foreach { case (tok, want) => assert(LaunchConfig.parse(base :+ tok) == want) }
+    assert(LaunchConfig.parse(base ++ cases.map(_._1)) == LaunchConfig("/s.slab",
+      4100, 7, 0.25, 3, "/s.slab.i8", "/s.slab.ivf", -1, 2.5, 0, "/s.slab.graph", 32))
+    // a missing slab would throw NoSuchFileException: each bad launch
+    // fails on its args first
+    val missing = Seq("/no/such.slab", "0", "7", "0.25")
+    Seq(Seq("threads=2", "stall=5") -> "unknown launch key(s) stall",
+      Seq("beam=8", "beam=16") -> "repeated launch key(s) beam",
+      Seq("threads") -> "'threads' is not key=value",
+      Seq("2") -> "'2' is not key=value",
+      Seq("=2") -> "'=2' is not key=value").foreach { case (extra, msg) =>
+      val ex = intercept[IllegalArgumentException](
+        ShardWorker.main((missing ++ extra).toArray))
+      assert(ex.getMessage.contains(msg) && ex.getMessage.contains("usage:"),
+        ex.getMessage)
+    }
+    assert(intercept[IllegalArgumentException](ShardWorker.main(
+      Array("/no/such.slab", "0", "7"))).getMessage.contains("usage:"))
   }
 }
