@@ -1,28 +1,29 @@
 package graft.simd;
 
 import jdk.incubator.vector.ByteVector;
-import jdk.incubator.vector.DoubleVector;
+import jdk.incubator.vector.FloatVector;
 import jdk.incubator.vector.IntVector;
 import jdk.incubator.vector.VectorOperators;
 import jdk.incubator.vector.VectorShape;
 import jdk.incubator.vector.VectorSpecies;
 
 /**
- * SIMD dot-product kernels over the serving replica's TRANSPOSED block
+ * SIMD phase-1 kernels over the serving replica's TRANSPOSED f32 block
  * layout (see {@code BatchedServer.FlatReplica}): rows are grouped into
  * blocks of {@link #LANES}, and within a block element (row lane l,
  * dim d) sits at {@code base + d*LANES + l} — so one vector load reads
  * the d-th component of LANES consecutive rows, and each SIMD lane
- * accumulates ONE row's products strictly in dim order.
+ * accumulates ONE row's f32 products in dim order.
  *
- * <p>Exactness contract: multiplication and addition are SEPARATE
- * vector ops (no fused multiply-add — FMA rounds once where the scalar
- * kernel rounds twice), so every lane's accumulation is BIT-IDENTICAL
- * to the scalar left-to-right {@code s += emb[d] * q[d]} loop the
- * serving tiers are specified against. The kernel only changes WHICH
- * rows advance together, never any row's rounding path — the same
- * argument the scalar 4-row-blocked kernel makes, verified lane-for-
- * lane in ServingKernelSpec.
+ * <p>Contract: a lane's f32 dot is an APPROXIMATION of the row's exact
+ * left-to-right f64 dot, off by at most the certified bound
+ * {@code BatchedServer.f32GateBound} (f32 rounding of cells and query,
+ * f32 and f64 summation, underflow). Callers gate on
+ * {@link #atLeast} against the floor lowered by that bound and rescore
+ * every surviving lane with the exact f64 dot, so the served top-k is
+ * the exact kernel's, bit for bit (the derivation is in
+ * {@code BatchedServer.scoreRange}; bound and gate spec-asserted in
+ * ServingKernelSpec).
  *
  * <p>The incubator module must be present at runtime
  * ({@code --add-modules=jdk.incubator.vector}, wired in build.sbt);
@@ -31,22 +32,22 @@ import jdk.incubator.vector.VectorSpecies;
  */
 public final class SimdDot {
 
-  private static final VectorSpecies<Double> SP = DoubleVector.SPECIES_PREFERRED;
+  private static final VectorSpecies<Float> SP = FloatVector.SPECIES_PREFERRED;
 
-  /** Rows per block = SIMD lanes of the platform's preferred species
-   *  (8 on AVX-512, 4 on AVX2, 2 on SSE2/NEON). */
+  /** Rows per block = f32 SIMD lanes of the platform's preferred species
+   *  (16 on AVX-512, 8 on AVX2, 4 on SSE2/NEON). */
   public static final int LANES = SP.length();
 
   private SimdDot() {}
 
-  /** Dots of one block (LANES rows) against FOUR queries; results at
+  /** f32 dots of one block (LANES rows) against FOUR queries; results at
    *  {@code out[qi*LANES + lane]}. Queries must have length ≥ dim. */
-  public static void block4(double[] t, int base, int dim,
-      double[] q0, double[] q1, double[] q2, double[] q3, double[] out) {
-    DoubleVector s0 = DoubleVector.zero(SP), s1 = DoubleVector.zero(SP);
-    DoubleVector s2 = DoubleVector.zero(SP), s3 = DoubleVector.zero(SP);
+  public static void block4(float[] t, int base, int dim,
+      float[] q0, float[] q1, float[] q2, float[] q3, float[] out) {
+    FloatVector s0 = FloatVector.zero(SP), s1 = FloatVector.zero(SP);
+    FloatVector s2 = FloatVector.zero(SP), s3 = FloatVector.zero(SP);
     for (int d = 0; d < dim; d++) {
-      DoubleVector e = DoubleVector.fromArray(SP, t, base + d * LANES);
+      FloatVector e = FloatVector.fromArray(SP, t, base + d * LANES);
       s0 = s0.add(e.mul(q0[d]));
       s1 = s1.add(e.mul(q1[d]));
       s2 = s2.add(e.mul(q2[d]));
@@ -58,13 +59,13 @@ public final class SimdDot {
     s3.intoArray(out, 3 * LANES);
   }
 
-  /** Dots of one block against TWO queries; results at
+  /** f32 dots of one block against TWO queries; results at
    *  {@code out[qi*LANES + lane]}. */
-  public static void block2(double[] t, int base, int dim,
-      double[] q0, double[] q1, double[] out) {
-    DoubleVector s0 = DoubleVector.zero(SP), s1 = DoubleVector.zero(SP);
+  public static void block2(float[] t, int base, int dim,
+      float[] q0, float[] q1, float[] out) {
+    FloatVector s0 = FloatVector.zero(SP), s1 = FloatVector.zero(SP);
     for (int d = 0; d < dim; d++) {
-      DoubleVector e = DoubleVector.fromArray(SP, t, base + d * LANES);
+      FloatVector e = FloatVector.fromArray(SP, t, base + d * LANES);
       s0 = s0.add(e.mul(q0[d]));
       s1 = s1.add(e.mul(q1[d]));
     }
@@ -72,15 +73,23 @@ public final class SimdDot {
     s1.intoArray(out, LANES);
   }
 
-  /** Dots of one block against ONE query; results at {@code out[lane]}. */
-  public static void block1(double[] t, int base, int dim,
-      double[] q0, double[] out) {
-    DoubleVector s0 = DoubleVector.zero(SP);
+  /** f32 dots of one block against ONE query; results at {@code out[lane]}. */
+  public static void block1(float[] t, int base, int dim,
+      float[] q0, float[] out) {
+    FloatVector s0 = FloatVector.zero(SP);
     for (int d = 0; d < dim; d++) {
-      DoubleVector e = DoubleVector.fromArray(SP, t, base + d * LANES);
+      FloatVector e = FloatVector.fromArray(SP, t, base + d * LANES);
       s0 = s0.add(e.mul(q0[d]));
     }
     s0.intoArray(out, 0);
+  }
+
+  /** The gate: one vector compare of the LANES dots at {@code dots[off..]}
+   *  against {@code gate}; bit l of the result is set when lane l's dot is
+   *  ≥ gate (a NaN lane never is). */
+  public static long atLeast(float[] dots, int off, float gate) {
+    return FloatVector.fromArray(SP, dots, off)
+        .compare(VectorOperators.GE, gate).toLong();
   }
 
   // ------------------------------------------------------------------
@@ -88,8 +97,8 @@ public final class SimdDot {
   // scalar multiply-add loop while the float tier ran the vector kernel
   // — the measured compute-vs-bandwidth crossover penalized int8 in the
   // compute-bound regimes. Integer arithmetic is EXACT, so unlike the
-  // float kernels there is no rounding contract to preserve: any
-  // evaluation order gives the bit-identical sum.
+  // f32 kernels there is no error bound to carry: any evaluation order
+  // gives the bit-identical sum.
   // ------------------------------------------------------------------
 
   private static final VectorSpecies<Integer> SPI =

@@ -2,7 +2,8 @@ package graft
 
 /** Serving-kernel microbench: the nq × nt throughput table over one
   * replica-sized slab (131072 rows × 64 dims), scalar blocked kernel vs
-  * the SIMD transposed-block kernel ([[graft.simd.SimdDot]]) — the
+  * the f32 SIMD transposed-block phase 1 with its certified gate and
+  * exact rescore ([[graft.simd.SimdDot]]) — the
   * measured basis for the serving-capacity claims in PLANS/SCALING.
   * No Spark: this times [[BatchedServer.scoreRange]] exactly as the
   * replica tier drives it (sliced across a thread pool, per-slice

@@ -330,15 +330,17 @@ final class BatchedServer(
     decisionVar
   }
 
-  /** (float slab bytes incl. SIMD transpose, int8 slab bytes) once the
+  /** (float slab bytes: 8 B per f64 cell plus 4 B per cell and block norm
+    * of the f32 SIMD transpose; int8 slab bytes) once the
     * replica decision ran — the memory note the bench records next to
     * the int8 serving row. */
   private[graft] def replicaSlabBytes: (Long, Long) = {
     ensureReplicaDecision()
     val g = gen
     if (g == null) (0L, 0L)
-    else (8L * (g.rep.embs.length +
-        (if (g.rep.tslab == null) 0 else g.rep.tslab.length)),
+    else (8L * g.rep.embs.length +
+        (if (g.rep.tslab == null) 0L
+         else 4L * (g.rep.tslab.length + g.rep.tnorms.length)),
       if (g.codes == null) 0L else g.codes.length.toLong)
   }
 
@@ -882,7 +884,9 @@ object BatchedServer {
   val DirectMaxCells: Long = 1L << 21
 
   /** Runtime availability of the SIMD kernel ([[graft.simd.SimdDot]],
-    * JDK 17 incubator Vector API). The class load is guarded: a JVM
+    * JDK 17 incubator Vector API): the f32 phase 1 whose certified gate
+    * and exact f64 rescore keep every answer bit-identical to the scalar
+    * kernel (see [[scoreRange]]). The class load is guarded: a JVM
     * launched without `--add-modules=jdk.incubator.vector` (wired in
     * build.sbt for every forked run/test) throws at init and serving
     * silently keeps the scalar blocked kernel. Kill switch for A/B:
@@ -923,18 +927,22 @@ object BatchedServer {
     * ragged rows without a branch in the hot loop). Zero per-row objects:
     * no pointer chase per row, nothing for the GC to trace.
     *
-    * When every row shares one dim (the universal serving case) and the
-    * SIMD kernel is available, a SECOND, TRANSPOSED copy of the slab is
-    * built (`tslab`): rows grouped in blocks of `tlanes`, dim-major
-    * within a block, so [[graft.simd.SimdDot]] reads the d-th component
-    * of `tlanes` rows in one vector load. Memory doubles (the replica is
-    * budget-capped at 2^18 rows ≈ 128 MB at dim 64, so the pair stays
-    * ≤ ~256 MB); the scalar slab is kept because the gate/tail/ragged
-    * paths and the job tier still read row-major. */
+    * When every row shares one dim ≤ [[MaxF32Dim]] (the universal
+    * serving case) and the SIMD kernel is available, a SECOND, TRANSPOSED
+    * f32 copy of the slab is built (`tslab`): rows grouped in blocks of
+    * `tlanes`, dim-major within a block, so [[graft.simd.SimdDot]] reads
+    * the d-th component of `tlanes` rows in one vector load. `tnorms`
+    * holds one float per block: its largest row norm, rounded up, or +∞
+    * when a cell or norm of the block is not finite in f32 — the input
+    * of [[scoreRange]]'s certified gate. Memory grows ×1.5 (the replica
+    * is budget-capped at 2^18 rows ≈ 128 MB at dim 64, so the pair stays
+    * ≤ ~192 MB); the f64 slab is kept because the exact rescore, the
+    * tail/ragged paths and the job tier read row-major. */
   final class FlatReplica(
       val n: Int, val ids: Array[Long], val users: Array[Int],
       val offs: Array[Int], val embs: Array[Double],
-      val tslab: Array[Double], val tlanes: Int, val uniformDim: Int)
+      val tslab: Array[Float], val tnorms: Array[Float], val tlanes: Int,
+      val uniformDim: Int)
       extends FloatRows {
     def dot(row: Int, q: Array[Double]): Double = {
       val b0 = offs(row)
@@ -1061,30 +1069,48 @@ object BatchedServer {
         i += 1
       }
       val L = uniformDim(offs)
-      val uniform = L > 0
       val lanes = if (useSimd) SimdSupport.lanes else 0
-      val tslab =
-        if (uniform && lanes > 0 && n >= lanes) {
-          val nBlockRows = (n / lanes) * lanes
-          val ts = new Array[Double](nBlockRows * L)
-          var r = 0
-          while (r < nBlockRows) {
-            val blockBase = (r / lanes) * lanes * L
-            val lane = r % lanes
+      if (L > 0 && L <= MaxF32Dim && lanes > 0 && n >= lanes) {
+        val nBlocks = n / lanes
+        val ts = new Array[Float](nBlocks * lanes * L)
+        val norms = new Array[Float](nBlocks)
+        var blk = 0
+        while (blk < nBlocks) {
+          var top = 0.0d
+          var lane = 0
+          while (lane < lanes) {
+            val r = blk * lanes + lane
             val src = offs(r)
+            var sq = 0.0d
             var d = 0
             while (d < L) {
-              ts(blockBase + d * lanes + lane) = embs(src + d)
+              val x = embs(src + d)
+              ts(blk * lanes * L + d * lanes + lane) = x.toFloat
+              sq += x * x
               d += 1
             }
-            r += 1
+            // a cell that is NaN or overflows f32 makes this norm NaN or
+            // at least the f32 overflow threshold, so the block norm below
+            // is +∞ and the gate rescores every lane of the block
+            top = math.max(top, math.sqrt(sq)) // NaN propagates
+            lane += 1
           }
-          ts
-        } else null
-      new FlatReplica(n, ids, users, offs, embs,
-        tslab, if (tslab == null) 0 else lanes, L)
+          val f = top.toFloat
+          norms(blk) =
+            if (!java.lang.Float.isFinite(f)) Float.PositiveInfinity
+            else if (f.toDouble < top) Math.nextUp(f) else f
+          blk += 1
+        }
+        new FlatReplica(n, ids, users, offs, embs, ts, norms, lanes, L)
+      } else new FlatReplica(n, ids, users, offs, embs, null, null, 0, L)
     }
   }
+
+  /** Largest uniform dim that gets the f32 SIMD slab: keeps d·2⁻²⁴ below
+    * 0.4% (so the γ_d terms of [[f32GateBound]] stay inside its 1.01
+    * factor) and every f32 partial sum of a certified block far below
+    * the f32 range. Wider slabs serve through the scalar f64 kernel. */
+  private[graft] val MaxF32Dim: Int = 1 << 16
 
   /** The one row length shared by every row of the CSR offsets `offs`, or
     * −1 when rows are ragged, empty or absent. */
@@ -1161,22 +1187,72 @@ object BatchedServer {
   private[graft] def gateSlack(n: Int, absSum: Double): Double =
     1e-6 + 4.0 * n * 1.1e-16 * absSum
 
+  /** Certified bound on |f32 block dot − exact f64 dot| for a row of dim
+    * `dim` in a block whose largest row norm is ≤ `blockNorm`, against a
+    * query of norm `qNorm` — the slack of [[scoreRange]]'s f32 gate
+    * (derivation there). Valid when `qNorm·blockNorm` < [[F32Cap]]. */
+  private[graft] def f32GateBound(dim: Int, qNorm: Double, blockNorm: Double): Double =
+    1.01 * (dim + 3) * F32Unit * qNorm * blockNorm +
+      (dim + 3) * F32Tiny * (1.0 + qNorm + blockNorm)
+
+  private val F32Unit = Math.scalb(1.0, -24)
+  private val F32Tiny = Math.scalb(1.0, -148)
+  /** ‖q‖·blockNorm at or above which a block is rescored whole: keeps
+    * every f32 product and partial sum far inside the f32 range. */
+  private[graft] val F32Cap = Math.scalb(1.0, 100)
+
   /** Per-slice top-k over replica rows `[lo, hi)` for every query — the
     * replica tier's unit of parallelism on the score pool (and, inline,
-    * the whole-replica kernel of the direct tier). The dot product is
-    * the same left-to-right accumulation over `min(rowLen, queryLen)`
-    * dims as [[dotRaw]] and the same 6dp HALF_UP round
-    * ([[graft.plans.Num.round6]]) — bit-for-bit the job-tier kernel, just
-    * reading the flat slab. `seedFloors` (null = none) holds, per query,
-    * the k-th best rounded score already found outside `[lo, hi)` (the
-    * shared lap's earlier pieces): a row scoring below it cannot place,
-    * so the rounding gate starts there instead of at the threshold; a row
-    * equal to it still passes (it can win an id tie in the caller's
-    * merge). */
+    * the whole-replica kernel of the direct tier). Every score that
+    * reaches the top-k is the same left-to-right accumulation over
+    * `min(rowLen, queryLen)` dims as [[dotRaw]] with the same 6dp HALF_UP
+    * round ([[graft.plans.Num.round6]]) — bit-for-bit the job-tier
+    * kernel, just reading the flat slab. `seedFloors` (null = none) holds,
+    * per query, the k-th best rounded score already found outside
+    * `[lo, hi)` (the shared lap's earlier pieces): a row scoring below it
+    * cannot place, so the rounding gate starts there instead of at the
+    * threshold; a row equal to it still passes (it can win an id tie in
+    * the caller's merge). `rescored` (null = none) counts the rows the
+    * SIMD path rescored exactly (phase 2 below).
+    *
+    * SIMD path (transposed f32 slab present, every query ≥ the row dim
+    * d), per block of `tlanes` rows and query q:
+    *   1. Phase 1: f32 dots S̃ of the block's lanes ([[graft.simd.SimdDot]]).
+    *   2. Gate: one vector compare S̃ ≥ t, t = nextDown(f32(g − B)), where
+    *      g = floor − 1e-6 is the exact kernel's rounding gate (below) at
+    *      the block's start and B = [[f32GateBound]](d, ‖q‖, blockNorm).
+    *   3. Phase 2: every set lane, in lane order, gets the exact f64 dot
+    *      s from the row-major slab (`rep.dot`, [[dotRaw]]'s order) and
+    *      goes through the unchanged rounding gate, round6, threshold and
+    *      [[TopK]].
+    * Why this is exact. With u = 2⁻²⁴, η = 2⁻¹⁵⁰ (half the least f32
+    * subnormal) and T = Σ xᵢqᵢ in real arithmetic: rounding a cell or a
+    * query component to f32 errs by ≤ u|·| + η, each f32 product by
+    * ≤ u|·| + η, the f32 sum by ≤ γ_d·Σ|pᵢ| and the f64 sum s by
+    * ≤ γ_d(f64)·Σ|xᵢqᵢ| (γ_d = du/(1 − du)). Summed, |S̃ − s| ≤
+    * ((d + 2)u + O(d²u²))·Σ|xᵢqᵢ| + O(√d·η·(‖x‖ + ‖q‖) + d·η), and
+    * Σ|xᵢqᵢ| ≤ ‖q‖‖x‖ ≤ ‖q‖·blockNorm (Cauchy–Schwarz; blockNorm is the
+    * block's largest row norm rounded up). B's 1.01·(d + 3)·u relative
+    * term covers the first part for d ≤ [[MaxF32Dim]] together with the
+    * f64 rounding of the norms and of B itself, and its
+    * (d + 3)·2⁻¹⁴⁸·(1 + ‖q‖ + blockNorm) absolute term covers the
+    * underflow part — including norms whose f64 squares underflowed,
+    * since u·‖q‖·‖x‖ ≤ η·‖q‖ once ‖x‖ < 2⁻¹²⁶. So every row with
+    * s ≥ g has S̃ ≥ g − B ≥ t: computing g − B in f64, rounding to f32
+    * and stepping one f32 down lands at or below the real g − B. The
+    * floor only rises within a block, so each row the exact kernel's
+    * gate would pass survives, is rescored in the same row order against
+    * the same floors, and the top-k is identical, bit for bit. The bound
+    * assumes finite f32 inputs and no f32 overflow, so a block whose f32
+    * cells or norm are not finite (blockNorm = +∞), a query whose f32
+    * components or norm are not finite, and any pair with
+    * ‖q‖·blockNorm ≥ 2¹⁰⁰ (or NaN) take the all-lanes mask: every row is
+    * rescored exactly. */
   private[graft] def scoreRange(
       rep: FlatReplica, lo: Int, hi: Int,
       queries: Array[Array[Double]], k: Int, th: Double,
-      seedFloors: Array[Double] = null)
+      seedFloors: Array[Double] = null,
+      rescored: java.util.concurrent.atomic.LongAdder = null)
       : Array[(Int, Long, Double, Int)] = {
     val nq = queries.length
     val tops = Array.fill(nq)(new TopK(k))
@@ -1301,12 +1377,9 @@ object BatchedServer {
       }
     }
     }
-    // SIMD dispatch: when the transposed slab exists (uniform-dim rows,
-    // kernel available) and every query covers the row dim, full blocks
-    // of `tlanes` rows score through [[graft.simd.SimdDot]] — each SIMD
-    // lane is one row's strict left-to-right accumulation (mul then add,
-    // no FMA), so every emitted dot is bit-identical to [[dotRaw]] and
-    // the rounding gate/TopK behave exactly as on the scalar path.
+    // SIMD dispatch (scaladoc above): when the transposed f32 slab exists
+    // and every query covers the row dim, full blocks of `tlanes` rows go
+    // through the f32 phase 1, the certified gate and the exact rescore.
     // Unaligned head/tail rows and any ragged-query batch fall back to
     // the scalar kernel above (parity spec-asserted both ways).
     val ts = rep.tslab
@@ -1326,35 +1399,61 @@ object BatchedServer {
         val sHi = (coveredHi / lanes) * lanes
         if (sHi > sLo) {
           scalarRange(lo, math.min(sLo, hi))
-          val outBuf = new Array[Double](4 * lanes)
+          // f32 query copies over the row dim, and their f64 norms (NaN
+          // when an f32 component is not finite: never certified)
+          val qf = new Array[Array[Float]](nq)
+          val qn = new Array[Double](nq)
+          var qc = 0
+          while (qc < nq) {
+            val q = queries(qc)
+            val f = new Array[Float](dimL)
+            var sq = 0.0d
+            var d = 0
+            while (d < dimL) {
+              f(d) = q(d).toFloat
+              sq += (if (java.lang.Float.isFinite(f(d))) q(d) * q(d) else Double.NaN)
+              d += 1
+            }
+            qf(qc) = f
+            qn(qc) = math.sqrt(sq)
+            qc += 1
+          }
+          val allLanes = -1L >>> (64 - lanes)
+          val outBuf = new Array[Float](4 * lanes)
+          var nRescored = 0L
           var blk = sLo / lanes
           val blkEnd = sHi / lanes
           while (blk < blkEnd) {
             val base = blk * lanes * dimL
             val row0 = blk * lanes
+            val bn = rep.tnorms(blk).toDouble
             var qi = 0
             while (qi < nq) {
               val taken =
                 if (nq - qi >= 4) {
-                  graft.simd.SimdDot.block4(ts, base, dimL, queries(qi),
-                    queries(qi + 1), queries(qi + 2), queries(qi + 3), outBuf)
+                  graft.simd.SimdDot.block4(ts, base, dimL, qf(qi),
+                    qf(qi + 1), qf(qi + 2), qf(qi + 3), outBuf)
                   4
                 } else if (nq - qi >= 2) {
-                  graft.simd.SimdDot.block2(ts, base, dimL, queries(qi),
-                    queries(qi + 1), outBuf)
+                  graft.simd.SimdDot.block2(ts, base, dimL, qf(qi), qf(qi + 1), outBuf)
                   2
                 } else {
-                  graft.simd.SimdDot.block1(ts, base, dimL, queries(qi), outBuf)
+                  graft.simd.SimdDot.block1(ts, base, dimL, qf(qi), outBuf)
                   1
                 }
               var j = 0
               while (j < taken) {
-                var lane = 0
-                while (lane < lanes) {
-                  val r = row0 + lane
-                  consider(qi + j, rep.ids(r), rep.users(r),
-                    outBuf(j * lanes + lane))
-                  lane += 1
+                val q = qi + j
+                var m =
+                  if (qn(q) * bn < F32Cap)
+                    graft.simd.SimdDot.atLeast(outBuf, j * lanes, Math.nextDown(
+                      ((floors(q) - 1e-6) - f32GateBound(dimL, qn(q), bn)).toFloat))
+                  else allLanes
+                while (m != 0L) {
+                  val r = row0 + java.lang.Long.numberOfTrailingZeros(m)
+                  m &= m - 1
+                  consider(q, rep.ids(r), rep.users(r), rep.dot(r, queries(q)))
+                  nRescored += 1
                 }
                 j += 1
               }
@@ -1362,6 +1461,7 @@ object BatchedServer {
             }
             blk += 1
           }
+          if (rescored != null) rescored.add(nRescored)
           scalarRange(sHi, hi)
           simdDone = true
         }
@@ -1551,6 +1651,28 @@ object BatchedServer {
     out
   }
 
+  /** The first k hits of `a ++ b` under (score desc, id asc), both
+    * already sorted that way, by one linear two-way merge: the same
+    * answer as [[topKPerQuery]] over the concatenation (its sort is
+    * stable, so on equal (score, id) `a` goes first here too). */
+  private[graft] def mergeTopK(a: Array[(Long, Double, Int)],
+      b: Array[(Long, Double, Int)], k: Int): Array[(Long, Double, Int)] = {
+    val out = new Array[(Long, Double, Int)](math.max(0, math.min(k, a.length + b.length)))
+    var i = 0
+    var j = 0
+    var o = 0
+    while (o < out.length) {
+      // Double.compare on the negated scores: topKPerQuery's sortBy key
+      val fromA = j == b.length || (i < a.length && {
+        val c = java.lang.Double.compare(-a(i)._2, -b(j)._2)
+        c < 0 || (c == 0 && a(i)._1 <= b(j)._1)
+      })
+      if (fromA) { out(o) = a(i); i += 1 } else { out(o) = b(j); j += 1 }
+      o += 1
+    }
+    out
+  }
+
   /** Split `ranges` (half-open row intervals) into ≤`slices` work chunks
     * of near-equal total row count. Each chunk is a list of
     * sub-intervals so one oversized interval (an IVF cell, or the whole
@@ -1580,11 +1702,11 @@ object BatchedServer {
     chunks.result()
   }
 
-  /** Rows per piece of a [[SharedLap]]: 2^13, a multiple of every SIMD
-    * block width (2, 4 or 8 lanes), so every piece starts on a block
-    * boundary of the transposed slab. At dim 64 a piece is 4 MiB of f64 —
-    * 1 MiB per slice on a 4-thread pool — and a 132k-row slab is 17
-    * pieces, so a new query joins within ~1/17 of a lap. */
+  /** Rows per piece of a [[SharedLap]]: 2^13, a multiple of every f32
+    * SIMD block width (4, 8 or 16 lanes), so every piece starts on a
+    * block boundary of the transposed slab. At dim 64 a piece is 2 MiB of
+    * f32 — 512 KiB per slice on a 4-thread pool — and a 132k-row slab is
+    * 17 pieces, so a new query joins within ~1/17 of a lap. */
   private[graft] val LapPieceRows: Int = 1 << 13
 
   /** Pieces in one lap over `n` rows (one empty piece when `n` = 0). */
@@ -1611,7 +1733,7 @@ object BatchedServer {
     * concurrent queries share each block read from memory instead of each
     * reading the whole slab. A query joins at the next piece boundary and
     * leaves after exactly one lap ([[lapPiece]]); its per-piece top-k
-    * merge by [[topKPerQuery]] into the same (score desc, id asc) top-k
+    * merge by [[mergeTopK]] into the same (score desc, id asc) top-k
     * as one sliced scan of the whole slab, bit for bit, and its k-th best
     * score so far seeds the next piece's gate floor (`seedFloors`), so
     * later pieces round and offer only rows that can still place. Queries of
@@ -1623,8 +1745,10 @@ object BatchedServer {
     * Counters (read by the worker's `LAP` line and the specs): `laps`
     * (pieces scored that closed a lap), `pieces` (pieces scored),
     * `admitted` (queries), `activeSum` (Σ queries per scored piece),
-    * `queueWaitNs` (Σ enqueue → admission) and `scanNs` (Σ piece scan
-    * wall time). */
+    * `queueWaitNs` (Σ enqueue → admission), `scanNs` (Σ piece scan
+    * wall time) and `rescored` (rows the f32 gate passed to the exact
+    * rescore, [[scoreRange]]; many per query means near-duplicate data
+    * is defeating the gate). */
   private[graft] final class SharedLap(
       pool: java.util.concurrent.ExecutorService, slices: Int) {
     private final class Entry(val rep: FlatReplica,
@@ -1641,6 +1765,7 @@ object BatchedServer {
     private val queue = new LinkedBlockingQueue[Entry]()
     private[graft] val laps, pieces, admitted, activeSum, queueWaitNs, scanNs =
       new java.util.concurrent.atomic.AtomicLong()
+    private[graft] val rescored = new java.util.concurrent.atomic.LongAdder()
 
     /** Exact top-k of every query over `rep`, from one lap. */
     def search(rep: FlatReplica, queries: Array[Array[Double]], k: Int,
@@ -1656,7 +1781,8 @@ object BatchedServer {
       f"LAP laps=${laps.get()} pieces=$p admitted=${admitted.get()} " +
         f"active_sum=${activeSum.get()} " +
         f"mean_active=${activeSum.get().toDouble / math.max(p, 1L)}%.2f " +
-        f"queue_wait_ms=${queueWaitNs.get() / 1e6}%.1f scan_ms=${scanNs.get() / 1e6}%.1f"
+        f"queue_wait_ms=${queueWaitNs.get() / 1e6}%.1f scan_ms=${scanNs.get() / 1e6}%.1f " +
+        f"rescored=${rescored.sum()}"
     }
 
     private def run(): Unit = {
@@ -1682,15 +1808,13 @@ object BatchedServer {
           try {
             val t0 = System.nanoTime()
             val tops = sliceTopK(qs.length, k, Array((lo, hi)), pool, slices)(
-              scoreRange(rep, _, _, qs, k, th, seeds))
+              scoreRange(rep, _, _, qs, k, th, seeds, rescored))
             scanNs.addAndGet(System.nanoTime() - t0)
             var qi = 0
             group.foreach { e =>
               var j = 0
               while (j < e.queries.length) {
-                if (tops(qi).nonEmpty)
-                  e.best(j) = topKPerQuery(1, k,
-                    (e.best(j) ++ tops(qi)).map { case (id, s, u) => (0, id, s, u) })(0)
+                if (tops(qi).nonEmpty) e.best(j) = mergeTopK(e.best(j), tops(qi), k)
                 j += 1
                 qi += 1
               }

@@ -17,8 +17,8 @@ import java.nio.file.{Paths, StandardOpenOption}
   *   - [[ShardWorker]]: a worker PROCESS (no Spark at runtime — plain
   *     JVM, exactly like an executor-resident scorer) that maps its slab
   *     into the same [[BatchedServer.FlatReplica]] layout and serves
-  *     top-k scoring over TCP with the same bit-exact kernels the
-  *     in-JVM tier uses — one kernel set in `object BatchedServer`,
+  *     top-k scoring over TCP with the same kernels (bit-exact
+  *     answers) the in-JVM tier uses — one kernel set in `object BatchedServer`,
   *     called by both hosts (table below; the int8 worker's floats are
   *     read through [[SlabIO.MappedFloats]]).
   *   - [[RemoteShardedRouter]]: the scatter-gather client; per-shard
@@ -51,14 +51,16 @@ import java.nio.file.{Paths, StandardOpenOption}
   * Kernels by host × family × filter ("postings" = the rows a user
   * filter matches; "selective" = matched ≤ the full-scan threshold, or
   * no ivf/graph sidecar; every sliced scan goes through
-  * [[BatchedServer.sliceTopK]]):
+  * [[BatchedServer.sliceTopK]]; "f32+rescore" = scoreRange's f32 SIMD
+  * phase 1, certified gate and exact f64 rescore, bit-identical to its
+  * scalar f64 path):
   * {{{
   * host      family  unfiltered                  filtered
-  * replica   exact   scoreRange                  scoreRows(postings)
+  * replica   exact   scoreRange (f32+rescore)    scoreRows(postings)
   * replica   int8    int8TwoPhase, heap floats   scoreRows(postings)
   * job tier  exact   per-partition Spark job     the same job, filtered
-  * worker    exact   scoreRange via the shared   scoreRows(postings)
-  *                   lap
+  * worker    exact   scoreRange (f32+rescore)    scoreRows(postings)
+  *                   via the shared lap
   * worker    int8    int8TwoPhase, mmap floats   scoreRows(postings), mmap floats
   * worker    ivf     scoreRange | int8TwoPhase   selective: scoreRows(postings)
   *                   over the probed cells       broad: scoreRows(matching probed

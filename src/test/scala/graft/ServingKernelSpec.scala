@@ -3,11 +3,12 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Exhaustive parity of the serving scan kernel ([[BatchedServer.scoreRange]])
-  * against a naive reference: the row-blocked kernel must produce
+  * against a naive reference: the row-blocked kernel and the f32 SIMD
+  * phase 1 with its certified gate and exact rescore must produce
   * BIT-IDENTICAL results to "exact left-to-right dot, 6dp HALF_UP round,
-  * (score desc, id asc) top-k, threshold ≥" on any input — the blocking
-  * and the rounding gate are pure execution detail. No Spark session
-  * needed: the kernel is plain JVM code.
+  * (score desc, id asc) top-k, threshold ≥" on any input — the blocking,
+  * the f32 gate and the rounding gate are pure execution detail. No Spark
+  * session needed: the kernel is plain JVM code.
   *
   * (These specs also graded the round-10 int8-gate experiment — a
   * quantized scan with certified-bound exact rescore, Qdrant's scalar
@@ -20,17 +21,18 @@ class ServingKernelSpec extends AnyFunSuite {
   private def round6(x: Double): Double = graft.plans.Num.round6(x)
 
   /** Naive reference: per query, exact sequential dots over min-length,
-    * round6, threshold, (score desc, id asc) top-k. */
+    * round6, threshold, (score desc, id asc) top-k; a NaN dot never
+    * places. */
   private def reference(rows: Array[(Long, Array[Double], Int)],
       queries: Array[Array[Double]], k: Int, th: Double)
       : Map[Int, Seq[(Long, Double, Int)]] =
     queries.zipWithIndex.map { case (q, qi) =>
-      qi -> rows.toSeq.map { case (id, emb, u) =>
+      qi -> rows.toSeq.flatMap { case (id, emb, u) =>
         val nd = math.min(emb.length, q.length)
         var s = 0.0d
         var d = 0
         while (d < nd) { s += emb(d) * q(d); d += 1 }
-        (id, round6(s), u)
+        if (s.isNaN) None else Some((id, round6(s), u))
       }.filter(_._2 >= th)
         .sortBy { case (id, s, _) => (-s, id) }
         .take(k)
@@ -70,32 +72,73 @@ class ServingKernelSpec extends AnyFunSuite {
     }
   }
 
-  test("SIMD kernel active in this JVM; transposed blocks bit-identical to scalar") {
+  test("SIMD kernel active in this JVM; every f32 lane lies within the " +
+      "certified bound of the exact dot") {
     assume(BatchedServer.SimdSupport.enabled,
       "incubator vector module absent — SIMD path not gradeable here")
     val rnd = new scala.util.Random(41L)
     val dim = 48
-    val rows = Array.tabulate(1021) { i => // prime count: unaligned tail
-      (i.toLong, Array.fill(dim)(rnd.nextGaussian()), i % 6)
+    // prime count (unaligned tail); row scales from 1e-30 to 1e20
+    val rows = Array.tabulate(1021) { i =>
+      val mag = math.pow(10.0, Seq(0, -3, 2, -30, 20, 0, 1)(i % 7))
+      (i.toLong, Array.fill(dim)(rnd.nextGaussian() * mag), i % 6)
     }
     val rep = BatchedServer.FlatReplica(rows, true)
-    assert(rep.tslab != null && rep.tlanes >= 2,
-      "uniform-dim corpus must build the transposed SIMD slab")
-    assert(rep.simdRows == (rows.length / rep.tlanes) * rep.tlanes)
-    // raw dots: SIMD lane ≡ scalar sequential, bit for bit, every row
-    val q = Array.fill(dim)(rnd.nextGaussian())
-    val out = new Array[Double](rep.tlanes)
-    (0 until rep.simdRows / rep.tlanes).foreach { blk =>
-      graft.simd.SimdDot.block1(rep.tslab, blk * rep.tlanes * dim, dim, q, out)
-      (0 until rep.tlanes).foreach { lane =>
-        val r = blk * rep.tlanes + lane
-        val seq = BatchedServer.dotRaw(
-          java.util.Arrays.copyOfRange(rep.embs, rep.offs(r), rep.offs(r + 1)), q)
-        assert(java.lang.Double.doubleToLongBits(out(lane)) ==
-          java.lang.Double.doubleToLongBits(seq),
-          s"row $r: SIMD lane dot differs from scalar sequential")
+    val lanes = rep.tlanes
+    assert(rep.tslab != null && lanes >= 4,
+      "uniform-dim corpus must build the transposed f32 slab")
+    assert(rep.simdRows == (rows.length / lanes) * lanes)
+    assert(rep.tnorms.length == rep.simdRows / lanes)
+    val exact = Array.tabulate(rep.simdRows)(r =>
+      java.util.Arrays.copyOfRange(rep.embs, rep.offs(r), rep.offs(r + 1)))
+    // block norms bound every row norm from above
+    exact.indices.foreach { r =>
+      assert(rep.tnorms(r / lanes) >= math.sqrt(exact(r).map(x => x * x).sum),
+        s"row $r: norm above its block's")
+    }
+    val queries = Seq(1.0, 1e-30, 1e15).map(m => Array.fill(dim)(rnd.nextGaussian() * m))
+    val qf = queries.map(_.map(_.toFloat)).toArray
+    val qn = queries.map(q => math.sqrt(q.map(x => x * x).sum)).toArray
+    val one, two, four = new Array[Float](4 * lanes)
+    var worst = 0.0
+    (0 until rep.simdRows / lanes).foreach { blk =>
+      val base = blk * lanes * dim
+      graft.simd.SimdDot.block4(rep.tslab, base, dim, qf(0), qf(1), qf(2), qf(0), four)
+      graft.simd.SimdDot.block2(rep.tslab, base, dim, qf(1), qf(2), two)
+      queries.indices.foreach { qi =>
+        graft.simd.SimdDot.block1(rep.tslab, base, dim, qf(qi), one)
+        val bn = rep.tnorms(blk).toDouble
+        (0 until lanes).foreach { lane =>
+          val r = blk * lanes + lane
+          // the 4- and 2-query kernels compute each query's lanes as the
+          // 1-query kernel does
+          assert(four(qi * lanes + lane) == one(lane))
+          if (qi > 0) assert(two((qi - 1) * lanes + lane) == one(lane))
+          val err = math.abs(one(lane) - BatchedServer.dotRaw(exact(r), queries(qi)))
+          if (qn(qi) * bn < BatchedServer.F32Cap) {
+            val b = BatchedServer.f32GateBound(dim, qn(qi), bn)
+            assert(err <= b, s"row $r query $qi: |f32 − exact| = $err > bound $b")
+            worst = math.max(worst, err / b)
+          }
+        }
       }
     }
+    // the bound is not vacuous: some lane uses a real share of it
+    assert(worst > 1e-3, s"largest error/bound ratio $worst")
+    // and on unit-scale clustered rows the gate passes few rows to the
+    // exact rescore
+    val unit = Array.tabulate(4096) { i =>
+      val e = Array.fill(dim)(rnd.nextGaussian())
+      val nr = math.sqrt(e.map(x => x * x).sum)
+      (i.toLong, e.map(_ / nr), 0)
+    }
+    val unitRep = BatchedServer.FlatReplica(unit, true)
+    val rescored = new java.util.concurrent.atomic.LongAdder()
+    val got = BatchedServer.scoreRange(unitRep, 0, unit.length, Array(unit(7)._2), 10, 0.0,
+      rescored = rescored)
+    assert(got.exists(h => h._2 == 7L && h._3 == 1.0))
+    assert(rescored.sum() > 0 && rescored.sum() < unit.length / 8,
+      s"rescored ${rescored.sum()} of ${unit.length} rows")
   }
 
   test("random uniform-dim corpus: kernel ≡ naive reference across k and thresholds") {
@@ -221,6 +264,146 @@ class ServingKernelSpec extends AnyFunSuite {
           s"gated job-tier pipeline diverges at qi=$qi k=$k th=$th")
       }
     }
+  }
+
+  test("certified f32 gate: scoreRange ≡ naive reference bit for bit on " +
+      "near-ties, duplicates, dims 1-130 and magnitudes 1e-40..1e39, with " +
+      "and without seed floors, over odd slice splits") {
+    import org.scalacheck.{Gen, Prop}
+    // powers of ten: mostly the mid scales where the f32 error dwarfs the
+    // 1e-6 rounding slack, else f32 subnormals, the f32 range edges and
+    // beyond
+    val exps = Seq(-40, -38, -30, -12, 0, 12, 30, 37, 39)
+    val scale = Gen.frequency(4 -> Gen.choose(-3, 8), 1 -> Gen.oneOf(exps))
+    def bits(hits: Seq[(Long, Double, Int)]) =
+      hits.map { case (id, s, u) => (id, java.lang.Double.doubleToRawLongBits(s), u) }
+    val rescored = new java.util.concurrent.atomic.LongAdder()
+    val simdRows = new java.util.concurrent.atomic.AtomicLong()
+    val prop = Prop.forAllNoShrink(
+        Gen.choose(1, 130), Gen.choose(0, 150), scale, scale,
+        Gen.choose(1, 8), Gen.oneOf(1, 1, 2, 3, 5, 8, 25), Gen.choose(0, 3),
+        Gen.choose(0L, Long.MaxValue)) {
+        (dim, n, rowExp, qExp, nq, k, thMode, seed) =>
+      val rnd = new scala.util.Random(seed)
+      val ids = rnd.shuffle((0 until 4 * n + 4).map(_.toLong)).toArray
+      val rowMag = math.pow(10.0, rowExp)
+      val centers = Array.fill(3)(Array.fill(dim)(rnd.nextGaussian()))
+      val rows = new Array[(Long, Array[Double], Int)](n)
+      (0 until n).foreach { i =>
+        val kind = rnd.nextInt(60)
+        val emb =
+          if (kind < 3) Array.fill(dim)(0.0)
+          else if (kind < 4) {
+            val e = Array.fill(dim)(rnd.nextGaussian() * rowMag)
+            e(rnd.nextInt(dim)) = Double.NaN; e
+          } else if (kind < 28 && i > 0)
+            // exact duplicate of a hot row: ids land on either side of the
+            // original's, so ties go both ways
+            rows(rnd.nextInt(math.min(i, 3)))._2.clone()
+          else if (kind < 34 && i > 0) {
+            // near-duplicate: one cell moved by a relative 1e-7 or less, so
+            // the exact scores differ by far less than the f32 error
+            val e = rows(rnd.nextInt(math.min(i, 3)))._2.clone()
+            val d = rnd.nextInt(dim)
+            e(d) = e(d) * (1.0 + (rnd.nextDouble() - 0.5) * 2e-7 * rnd.nextDouble())
+            e
+          } else if (kind < 37) {
+            // a row at another scale, f32 range edges and beyond included
+            val m = math.pow(10.0, exps(rnd.nextInt(exps.length)))
+            Array.fill(dim)(rnd.nextGaussian() * m)
+          } else {
+            // clustered rows; the first three ("hot") rows at 1.5× the
+            // norm lead their queries' top-k with their duplicate groups
+            val c = centers(rnd.nextInt(3))
+            val m = if (i < 3) 1.5 * rowMag else rowMag
+            Array.tabulate(dim)(d => (c(d) + 0.05 * rnd.nextGaussian()) * m)
+          }
+        rows(i) = (ids(i), emb, rnd.nextInt(4))
+      }
+      val qMag = math.pow(10.0, qExp)
+      val queries = Array.tabulate(nq) { _ =>
+        // mostly a perturbed hot row: each such query draws its own f32
+        // error on the hot groups' exact ties
+        val q =
+          if (n > 0 && rnd.nextInt(4) > 0)
+            rows(rnd.nextInt(math.min(n, 3)))._2.map(x =>
+              (x / rowMag + 0.02 * rnd.nextGaussian()) * qMag)
+          else Array.fill(dim)(rnd.nextGaussian() * qMag)
+        // some queries run past the row dim (still the SIMD path)
+        if (rnd.nextInt(4) == 0) q ++ Array.fill(2)(rnd.nextGaussian()) else q
+      }
+      // the threshold: none, zero, or on / within 1e-7 of one of query
+      // 0's top-k scores
+      val anchor = {
+        val top = reference(rows, queries.take(1), k, Double.NegativeInfinity)(0)
+        if (top.isEmpty) 0.0 else top(rnd.nextInt(top.size))._2
+      }
+      val th = thMode match {
+        case 0 => Double.NegativeInfinity
+        case 1 => 0.0
+        case 2 => anchor
+        case _ => anchor + (if (rnd.nextBoolean()) 1e-7 else -1e-7)
+      }
+      val want = reference(rows, queries, k, th).map { case (qi, h) => qi -> bits(h) }
+      // odd slice splits: random cut points, SIMD-block-unaligned
+      val cuts = (0 +: Seq.fill(rnd.nextInt(4))(rnd.nextInt(n + 1)) :+ n).sorted
+      val pieces = cuts.zip(cuts.tail)
+      Seq(false, true).forall { simd =>
+        val rep = BatchedServer.FlatReplica(rows, simd)
+        if (rep.tslab != null) simdRows.addAndGet(rep.simdRows.toLong * nq * 2)
+        // independent slices merged at the end (the sliced scan)
+        val sliced = BatchedServer.topKPerQuery(nq, k, pieces.toArray.flatMap {
+          case (lo, hi) => BatchedServer.scoreRange(rep, lo, hi, queries, k, th,
+            rescored = rescored) })
+        // the shared lap: pieces in turn from a random start, each seeded
+        // with the k-th best of the pieces before it
+        val start = rnd.nextInt(pieces.length)
+        val best = Array.fill(nq)(Array.empty[(Long, Double, Int)])
+        (pieces.drop(start) ++ pieces.take(start)).foreach { case (lo, hi) =>
+          val seeds = best.map(b =>
+            if (b.length >= k) b(k - 1)._2 else Double.NegativeInfinity)
+          val tops = BatchedServer.topKPerQuery(nq, k,
+            BatchedServer.scoreRange(rep, lo, hi, queries, k, th, seeds, rescored))
+          queries.indices.foreach(qi => best(qi) = BatchedServer.mergeTopK(best(qi), tops(qi), k))
+        }
+        queries.indices.forall { qi =>
+          val w = want(qi)
+          val ok = bits(sliced(qi).toSeq) == w && bits(best(qi).toSeq) == w
+          if (!ok) println(s"simd=$simd dim=$dim n=$n rowExp=$rowExp qExp=$qExp " +
+            s"k=$k th=$th qi=$qi\n sliced=${sliced(qi).toSeq}\n lap=${best(qi).toSeq}\n want=$w")
+          ok
+        }
+      }
+    }
+    val res = org.scalacheck.Test.check(
+      org.scalacheck.Test.Parameters.default.withMinSuccessfulTests(1500)
+        .withInitialSeed(org.scalacheck.rng.Seed(20261019L)), prop)
+    assert(res.passed, res.status.toString)
+    if (BatchedServer.SimdSupport.enabled) {
+      // the f32 path ran, and its gate kept fewer rows than it read
+      assert(rescored.sum() > 0 && rescored.sum() < simdRows.get(),
+        s"rescored ${rescored.sum()} of ${simdRows.get()} SIMD rows")
+    }
+  }
+
+  test("lap merge: mergeTopK ≡ topKPerQuery over the concatenation") {
+    import org.scalacheck.{Gen, Prop}
+    // few distinct scores and ids, so equal (score, id) pairs occur; the
+    // scores include ±0.0
+    val hit = Gen.zip(Gen.choose(0L, 6L), Gen.oneOf(-1.0, -0.0, 0.0, 0.5, 1.0), Gen.choose(0, 3))
+    def sorted(h: List[(Long, Double, Int)]) =
+      BatchedServer.topKPerQuery(1, h.length, h.map { case (id, s, u) => (0, id, s, u) }.toArray)(0)
+    val prop = Prop.forAll(Gen.listOf(hit), Gen.listOf(hit), Gen.choose(0, 12)) { (a, b, k) =>
+      val (sa, sb) = (sorted(a), sorted(b))
+      val want = BatchedServer.topKPerQuery(1, k,
+        (sa ++ sb).map { case (id, s, u) => (0, id, s, u) })(0)
+      BatchedServer.mergeTopK(sa, sb, k).toSeq.map { case (id, s, u) =>
+        (id, java.lang.Double.doubleToRawLongBits(s), u) } ==
+        want.toSeq.map { case (id, s, u) => (id, java.lang.Double.doubleToRawLongBits(s), u) }
+    }
+    val res = org.scalacheck.Test.check(
+      org.scalacheck.Test.Parameters.default.withMinSuccessfulTests(500), prop)
+    assert(res.passed, res.status.toString)
   }
 
   test("tie-breaks: equal scores keep ascending ids through gate and merge") {

@@ -684,6 +684,10 @@ class ShardWorkerSpec extends AnyFunSuite with TempDirs {
       def port: Int = srv.getLocalPort
       private val accepted =
         java.util.concurrent.ConcurrentHashMap.newKeySet[java.net.Socket]()
+      // set by kill() before it closes anything: a socket accept() returned
+      // but that reached `accepted` only after kill() swept it is closed
+      // here, so a dead replica serves no pooled connection
+      @volatile private var dead = false
       val requestsServed = new java.util.concurrent.atomic.AtomicInteger(0)
       private val acceptor = new Thread(new Runnable {
         def run(): Unit = try {
@@ -691,6 +695,7 @@ class ShardWorkerSpec extends AnyFunSuite with TempDirs {
             val sock = srv.accept()
             sock.setTcpNoDelay(true)
             accepted.add(sock)
+            if (dead) sock.close()
             val t = new Thread(new Runnable { def run(): Unit = {
               val in = new java.io.DataInputStream(
                 new java.io.BufferedInputStream(sock.getInputStream))
@@ -724,6 +729,7 @@ class ShardWorkerSpec extends AnyFunSuite with TempDirs {
       })
       acceptor.setDaemon(true); acceptor.start()
       def kill(): Unit = {
+        dead = true
         try srv.close() catch { case _: Throwable => () }
         accepted.forEach(s => try s.close() catch { case _: Throwable => () })
       }
