@@ -232,12 +232,13 @@ object CrossProc {
   private def mean(xs: Seq[Double]): Double = xs.sum / xs.length
 
   /** Centroid indices in probe order for `q`: round6(q·centroid) desc,
-    * index asc — the worker's [[ShardWorker.probeRanges]] rule. */
+    * index asc in [[BatchedServer.HitOrder]] — the worker's
+    * [[ShardWorker.probeRanges]] rule. */
   private def probeOrder(cents: Array[Array[Double]],
       q: Array[Double]): IndexedSeq[Int] =
     cents.indices
-      .map(j => (graft.plans.Num.round6(BatchedServer.dotRaw(cents(j), q)), j))
-      .sortBy { case (s, j) => (-s, j) }.map(_._2)
+      .map(j => (j.toLong, graft.plans.Num.round6(BatchedServer.dotRaw(cents(j), q)), j))
+      .sorted(BatchedServer.HitOrder).map(_._3)
 
   /** (embedding, user) of each id: one bounded collect. */
   private def rowsOf(points: DataFrame,
@@ -269,7 +270,7 @@ object CrossProc {
       val (e, trueU) = rows(id)
       u == trueU && (users == null || users.contains(u)) &&
         s == graft.plans.Num.round6(BatchedServer.dotRaw(e, q)) && s >= th
-    } && got.sortBy { case (id, s, _) => (-s, id) }.toSeq == got.toSeq
+    } && got.sorted(BatchedServer.HitOrder).toSeq == got.toSeq
   }
 
   /** Per-query recall@k of `got` against the truth `want` (1 where the
@@ -302,6 +303,14 @@ object CrossProc {
     // cells nearest the query — per-query work stops scaling with shard
     // size (the sub-linear phase 1 the reference gets from its index).
     val dir = java.nio.file.Files.createTempDirectory("graft_xproc").toString
+    // a JVM stopped mid-measurement still kills its workers and deletes
+    // the slabs: the hook is removed once the normal cleanup below has run
+    val workers = new java.util.concurrent.atomic.AtomicReference[Seq[Process]](Nil)
+    val dirHook = new Thread(() => {
+      workers.get.foreach(_.destroyForcibly())
+      Drive.deleteTree(dir)
+    })
+    Runtime.getRuntime.addShutdownHook(dirHook)
     // IVF prep: deterministic sample → local spherical k-means, C from
     // CellRows. graph mode needs the centroid table too: cell-ordering
     // feeds the window-candidate build and the per-cell entry rows
@@ -510,9 +519,12 @@ object CrossProc {
         val sidecars = slabs.map(p => SlabIO.readGraph(s"$p.graph"))
         def lcbAt(b: Int): Double =
           graft.operators.IndexMeta.lowerBound90(recalls(calQ)(
-            qi => reps.indices.flatMap(s =>
-              ShardWorker.graphTopK(reps(s), sidecars(s), qPool(qi), k, th, b))
-              .sortBy { case (id, sc, _) => (-sc, id) }.take(k).map(_._1),
+            qi => {
+              val top = new BatchedServer.TopK(k)
+              reps.indices.foreach(s =>
+                top.offerAll(ShardWorker.graphTopK(reps(s), sidecars(s), qPool(qi), k, th, b)))
+              top.result().map(_._1)
+            },
             exactIds))
         BeamLadder.iterator.map(b => (b, lcbAt(b)))
           .find(_._2 >= target) match {
@@ -541,6 +553,7 @@ object CrossProc {
         k.toString, th.toString, s"threads=$workerThreads") ++ options,
         new java.io.File(s"$dir/worker_$i.log"))
     }
+    workers.set(procs)
     // success flag for the cleanup path: set only when the full
     // measurement completed (worker logs are kept on failure)
     var ok: Option[Map[String, Double]] = None
@@ -569,18 +582,16 @@ object CrossProc {
             // files (SlabIO.read) and released before the next — all
             // three test queries batch through each shard so the slab
             // is read once (ADVICE r15 driver-memory fix)
-            val want = qis.map(_ =>
-              scala.collection.mutable.ArrayBuffer.empty[(Long, Double, Int)])
+            val want = qis.map(_ => new BatchedServer.TopK(k))
             slabs.foreach { slabPath =>
               val rep = BatchedServer.FlatReplica(SlabIO.read(slabPath))
               val codes = BatchedServer.quantizeSlab(rep.embs)
               BatchedServer.int8TwoPhase(rep, codes, qis.map(qPool(_)).toArray,
                 k, th, oversample, null, 1)
-                .zipWithIndex.foreach { case (hits, bi) => want(bi) ++= hits }
+                .zipWithIndex.foreach { case (hits, bi) => want(bi).offerAll(hits) }
             }
             qis.indices.forall { bi =>
-              router.search(qPool(qis(bi))).toSeq ==
-                want(bi).sortBy { case (id, s, _) => (-s, id) }.take(k).toSeq
+              router.search(qPool(qis(bi))).toSeq == want(bi).result().toSeq
             }
           }
         // approximate tiers (int8 / ivf / graph): recall@k MEASURED, not
@@ -855,7 +866,7 @@ object CrossProc {
         result
       } finally router.close()
     } finally {
-      procs.foreach(_.destroyForcibly())
+      procs.foreach(Drive.stop(_, 10.seconds))
       // the slab handoff dir is hundreds of MB at the replica-too-big
       // fixture size — reclaim the SLABS unconditionally rather than
       // leaking one copy per bench run (ADVICE r12). Worker logs are
@@ -863,8 +874,8 @@ object CrossProc {
       // they are the only diagnostic left (the bench catch keeps just
       // the one-line exception message — ADVICE r13), so on failure the
       // dir (logs only, slabs gone) is left behind and its path printed.
-      procs.foreach(p => try p.waitFor(5, java.util.concurrent.TimeUnit.SECONDS)
-        catch { case _: InterruptedException => () })
+      try Runtime.getRuntime.removeShutdownHook(dirHook)
+      catch { case _: IllegalStateException => () } // already shutting down
       val failed = ok.isEmpty
       try {
         import scala.jdk.CollectionConverters._
@@ -936,7 +947,9 @@ object CrossProcProbe {
     pb.redirectOutput(logFile)
     val p = pb.start()
     val done = p.waitFor(45, java.util.concurrent.TimeUnit.MINUTES)
-    if (!done) p.destroyForcibly()
+    // SIGTERM first: the child's shutdown hooks delete its Spark
+    // block-manager dirs and its slab dir
+    if (!done) Drive.stop(p, 2.minutes)
     val ok = done && p.exitValue() == 0
     val src = scala.io.Source.fromFile(logFile)
     val out = try mergeProbeLines(src.getLines()) finally src.close()

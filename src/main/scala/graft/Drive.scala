@@ -263,6 +263,23 @@ object Drive {
       .start()
   }
 
+  /** Stops `p` gracefully: SIGTERM (`destroy`), up to `grace` for it to
+    * exit, then SIGKILL (`destroyForcibly`). A JVM child gets the grace
+    * period to run its shutdown hooks (Spark deletes its block-manager
+    * dirs there, a shard worker prints its `LAP` line); a child that
+    * ignores SIGTERM is killed once it has passed. */
+  def stop(p: Process, grace: FiniteDuration): Unit = {
+    p.destroy()
+    val exited =
+      try p.waitFor(grace.toMillis, TimeUnit.MILLISECONDS)
+      catch { case _: InterruptedException => Thread.currentThread().interrupt(); false }
+    if (!exited) {
+      p.destroyForcibly()
+      try p.waitFor(5, TimeUnit.SECONDS)
+      catch { case _: InterruptedException => Thread.currentThread().interrupt() }
+    }
+  }
+
   /** `attempt` retried while it throws an IOException — 120 tries, 500 ms
     * apart — for a worker that is still loading its slab. */
   def whenUp[T](attempt: => T): T = {

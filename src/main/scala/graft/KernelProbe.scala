@@ -6,8 +6,8 @@ package graft
   * exact rescore ([[graft.simd.SimdDot]]) — the
   * measured basis for the serving-capacity claims in PLANS/SCALING.
   * No Spark: this times [[BatchedServer.scoreRange]] exactly as the
-  * replica tier drives it (sliced across a thread pool, per-slice
-  * top-k merged by the caller).
+  * replica tier drives it (sliced across a thread pool, each slice
+  * scoring into its own per-query heaps).
   *
   * Usage: `sbt 'runMain graft.KernelProbe [rows] [dim]'` — prints one
   * table row per (kernel, nq, nt): Gcells/s of slab scan rate
@@ -40,7 +40,8 @@ object KernelProbe {
           val lo = (rep.n.toLong * si / nt).toInt
           val hi = (rep.n.toLong * (si + 1) / nt).toInt
           tasks.add(() => {
-            BatchedServer.scoreRange(rep, lo, hi, queries, 10, 0.1); ()
+            BatchedServer.scoreRange(rep,
+              Array.fill(nq)(new BatchedServer.TopK(10)), lo, hi, queries, 0.1)
           })
         }
         import scala.jdk.CollectionConverters._

@@ -1,5 +1,7 @@
 package graft
 
+import scala.concurrent.duration._
+
 /** Serving-freshness probe (r16): three standalone measurements of the
   * slab lifecycle the reference runs implicitly inside Qdrant — live
   * updates while serving (src/core/qdrant_client.py add_vector /
@@ -269,7 +271,7 @@ object RefreshProbe {
           s"sentinel must lead post-swap, got ${post.head}")
         println("reload.sentinel_served=1")
       } finally router.close()
-    } finally proc.destroy()
+    } finally Drive.stop(proc, 10.seconds)
   }
 
   /** Scenario 3: primary worker KILLED mid-storm — failover to the
@@ -319,7 +321,7 @@ object RefreshProbe {
         require(wrong.get() == 0, s"${wrong.get()} non-exact answers")
         require(afterKill.nonEmpty, "no traffic measured after the kill")
       } finally router.close()
-    } finally { primary.destroyForcibly(); backup.destroyForcibly() }
+    } finally { Drive.stop(primary, 10.seconds); Drive.stop(backup, 10.seconds) }
   }
 
   /** Scenario 4 — the COMPOSED freshness arc (VERDICT r16 #5): every
@@ -474,7 +476,7 @@ object RefreshProbe {
         require(errs == 0, s"composed freshness arc dropped $errs requests")
       } finally router.close()
     } finally {
-      proc.destroy()
+      Drive.stop(proc, 10.seconds)
       spark.stop()
     }
   }

@@ -76,7 +76,9 @@ import org.apache.spark.storage.StorageLevel
   * [[ShardWorker]] both call it (int8 rescore and row-list scoring read
   * floats through [[BatchedServer.FloatRows]]: the heap replica here,
   * the mmapped float slab there; every sliced scan goes through
-  * [[BatchedServer.sliceTopK]]). "postings" = the rows a user filter
+  * [[BatchedServer.sliceTopK]], and every kernel offers its hits into
+  * per-query [[BatchedServer.TopK]] heaps ranked by
+  * [[BatchedServer.HitOrder]]). "postings" = the rows a user filter
   * matches; "selective" = matched ≤ the worker's full-scan threshold,
   * or no ivf/graph sidecar:
   * {{{
@@ -410,7 +412,7 @@ final class BatchedServer(
     val rep = if (g == null) null else g.rep
     if (rep != null && rep.cells <= BatchedServer.DirectMaxCells &&
         queue.isEmpty) {
-      val hits = toRows(searchGen(g, Array(qemb.toArray), inline = true)(0))
+      val hits = BatchedServer.toRows(searchGen(g, Array(qemb.toArray), inline = true)(0))
       metrics.recordRequest(System.nanoTime() - tSubmit, success = true)
       return Future.successful(hits)
     }
@@ -456,8 +458,6 @@ final class BatchedServer(
     try {
       ensureReplicaDecision()
       val g = gen
-      val kk = k
-      val th = threshold
       val q = qemb.toArray
       val hits =
         if (g != null) {
@@ -465,27 +465,13 @@ final class BatchedServer(
           val rowIdx = rep.postings.rowsFor(userIds.toArray)
           val inline = rowIdx.length.toLong * math.max(rep.uniformDim, 1) <=
             BatchedServer.DirectMaxCells
-          BatchedServer.sliceTopK(1, kk, Array((0, rowIdx.length)),
-            if (inline) null else scorePool, scoreParallelism)(
-            BatchedServer.scoreRows(rep, rowIdx, _, _, Array(q), kk, th))(0)
-        } else {
-          // job tier: the same filtered exact scan as a one-job request
-          val userSet = userIds.toSet
-          BatchedServer.topKPerQuery(1, kk, template.mapPartitions { rows =>
-            val top = new BatchedServer.TopK(kk)
-            while (rows.hasNext) {
-              val (id, emb, user) = rows.next()
-              if (userSet.contains(user)) {
-                val s = BatchedServer.dotRaw(emb, q)
-                val r = graft.plans.Num.round6(s)
-                if (r >= th) top.offer(r, id, user)
-              }
-            }
-            top.drain().map { case (s, id, u) => (0, id, s, u) }
-          }.collect())(0)
-        }
+          BatchedServer.sliceTopK(Array(new BatchedServer.TopK(k)),
+            Array((0, rowIdx.length)), if (inline) null else scorePool,
+            scoreParallelism)(
+            BatchedServer.scoreRows(rep, rowIdx, _, _, _, Array(q), threshold))(0).result()
+        } else jobTopK(Array(q), userIds.toSet)(0)
       metrics.recordRequest(System.nanoTime() - t0, success = true)
-      Future.successful(toRows(hits))
+      Future.successful(BatchedServer.toRows(hits))
     } catch {
       case e: Throwable =>
         metrics.recordRequest(System.nanoTime() - t0, success = false)
@@ -504,26 +490,65 @@ final class BatchedServer(
       BatchedServer.int8TwoPhase(rep, g.codes, queries, k, threshold,
         g.oversample, pool, scoreParallelism)
     else
-      BatchedServer.sliceTopK(queries.length, k, Array((0, rep.n)), pool,
-        scoreParallelism)(BatchedServer.scoreRange(rep, _, _, queries, k, threshold))
+      BatchedServer.sliceTopK(Array.fill(queries.length)(new BatchedServer.TopK(k)),
+        Array((0, rep.n)), pool, scoreParallelism)(
+        BatchedServer.scoreRange(rep, _, _, _, queries, threshold)).map(_.result())
   }
 
-  private def toRows(hits: Array[(Long, Double, Int)]): Array[Row] =
-    hits.map { case (id, s, u) => Row(id, s, u) }
+  /** Job tier: one single-stage map-only job over the pinned template.
+    * Each partition scores its rows into per-query heaps, which are
+    * offered into per-query heaps on the driver; `users` (null = no
+    * filter) keeps only the rows of those users. */
+  private def jobTopK(queries: Array[Array[Double]],
+      users: Set[Int]): Array[Array[BatchedServer.Hit]] = {
+    val kk = k
+    val th = threshold
+    // the query block rides in the task closure: Spark broadcasts the
+    // task binary per stage anyway, so an explicit Broadcast would only
+    // add create/unpersist latency to every flush
+    val parts = template.mapPartitions { rows =>
+      val nq = queries.length
+      val tops = Array.fill(nq)(new BatchedServer.TopK(kk))
+      val scratch = new Array[Double](2)
+      while (rows.hasNext) {
+        val (id, emb, user) = rows.next()
+        // a row outside the user filter skips every query
+        var qi = if (users == null || users.contains(user)) 0 else nq
+        while (qi < nq) {
+          // same fast-gate + rounding gate as the replica kernel (see
+          // scoreRange): provably output-identical — passers recompute
+          // the exact left-to-right dot before rounding. Slack scales
+          // with Σ|aᵢbᵢ| (gateSlack) so the proof holds for unnormalized
+          // magnitudes too; the negated comparison routes NaN/∞ to the
+          // exact recompute.
+          BatchedServer.dotFastAbs(emb, queries(qi), scratch)
+          val top = tops(qi)
+          val slack = BatchedServer.gateSlack(
+            math.min(emb.length, queries(qi).length), scratch(1))
+          if (!(scratch(0) < top.floor(th) - slack)) {
+            val s = BatchedServer.dotRaw(emb, queries(qi))
+            val r = graft.plans.Num.round6(s)
+            if (r >= th) top.offer(r, id, user)
+          }
+          qi += 1
+        }
+      }
+      Iterator.single(tops.map(_.result()))
+    }.collect()
+    val merged = Array.fill(queries.length)(new BatchedServer.TopK(kk))
+    parts.foreach(p => p.indices.foreach(qi => merged(qi).offerAll(p(qi))))
+    merged.map(_.result())
+  }
 
-  /** One flush over a drained batch. Replica tier: per-slice top-k on
-    * the local score pool, no Spark job. Job tier: one single-stage
-    * map-only job over the pinned template. Both produce per-slice
-    * top-k candidates merged identically on the driver
-    * ([[BatchedServer.topKPerQuery]]) — per-slice
-    * top-k is a superset of each query's global top-k, so the merge is
-    * exact either way. Query index is the position in THIS flush —
-    * indices never leave the flush, so concurrent flushes can't collide. */
+  /** One flush over a drained batch. Replica tier: the sliced scan on
+    * the local score pool, no Spark job. Job tier: [[jobTopK]]. Either
+    * way every row is scored once into a [[BatchedServer.TopK]], so the
+    * result is exact. Query index is the position in THIS flush —
+    * indices never leave the flush, so concurrent flushes can't
+    * collide. */
   private def flush(batch: Seq[Pending]): Unit = {
     val t0 = System.nanoTime()
     try {
-      val kk = k
-      val th = threshold
       val queries: Array[Array[Double]] = batch.map(_.emb.toArray).toArray
       ensureReplicaDecision()
       // one generation read per flush — see submit()'s coherence note
@@ -535,43 +560,8 @@ final class BatchedServer(
           // 8-way invokeAll is pure handoff overhead + wakeup jitter
           searchGen(g, queries, inline = g.rep.cells *
             math.max(queries.length, 1) <= BatchedServer.DirectMaxCells)
-        else {
-          // the query block rides in the task closure: Spark broadcasts
-          // the task binary per stage anyway, so an explicit Broadcast
-          // would only add create/unpersist latency to every flush
-          val cands = template.mapPartitions { rows =>
-            val nq = queries.length
-            val tops = Array.fill(nq)(new BatchedServer.TopK(kk))
-            val scratch = new Array[Double](2)
-            while (rows.hasNext) {
-              val (id, emb, user) = rows.next()
-              var qi = 0
-              while (qi < nq) {
-                // same fast-gate + rounding gate as the replica kernel
-                // (see scoreRange): provably output-identical — passers
-                // recompute the exact left-to-right dot before rounding.
-                // Slack scales with Σ|aᵢbᵢ| (gateSlack) so the proof
-                // holds for unnormalized magnitudes too; the negated
-                // comparison routes NaN/∞ to the exact recompute.
-                BatchedServer.dotFastAbs(emb, queries(qi), scratch)
-                val top = tops(qi)
-                val slack = BatchedServer.gateSlack(
-                  math.min(emb.length, queries(qi).length), scratch(1))
-                if (!(scratch(0) < top.floor(th) - slack)) {
-                  val s = BatchedServer.dotRaw(emb, queries(qi))
-                  val r = graft.plans.Num.round6(s)
-                  if (r >= th) top.offer(r, id, user)
-                }
-                qi += 1
-              }
-            }
-            tops.iterator.zipWithIndex.flatMap { case (t, qi) =>
-              t.drain().map { case (s, id, u) => (qi, id, s, u) }
-            }
-          }.collect()
-          BatchedServer.topKPerQuery(queries.length, kk, cands)
-        }
-      val answers = batch.indices.map(qi => toRows(perQuery(qi)))
+        else jobTopK(queries, null)
+      val answers = batch.indices.map(qi => BatchedServer.toRows(perQuery(qi)))
       // counted BEFORE any future completes: a caller that reads the
       // metrics as soon as its answer arrives finds its request and its
       // flush already counted
@@ -845,14 +835,14 @@ object ServingCalibration {
     // exact oracle: one full-slab scan for all calibration queries.
     // th = the server's own threshold, so the calibrated config is
     // graded on exactly the answers it will serve.
-    val exact = BatchedServer.scoreRange(rep, 0, rep.n, queries, k, th)
-      .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
+    val exact = Array.fill(nS)(new BatchedServer.TopK(k))
+    BatchedServer.scoreRange(rep, exact, 0, rep.n, queries, th)
     val codes = BatchedServer.quantizeSlab(rep.embs)
     def lcbAt(os: Int): Double = {
       val got = BatchedServer.int8TwoPhase(rep, codes, queries, k, th,
         os.toDouble, null, 1)
       graft.operators.IndexMeta.lowerBound90((0 until nS).map { qi =>
-        val want = exact.getOrElse(qi, Set.empty)
+        val want = exact(qi).result().map(_._1).toSet
         if (want.isEmpty) 1.0
         else (got(qi).map(_._1).toSet & want).size.toDouble / want.size
       })
@@ -889,15 +879,14 @@ object BatchedServer {
     * kernel (see [[scoreRange]]). The class load is guarded: a JVM
     * launched without `--add-modules=jdk.incubator.vector` (wired in
     * build.sbt for every forked run/test) throws at init and serving
-    * silently keeps the scalar blocked kernel. Kill switch for A/B:
-    * `-Dgraft.simd=0` or env `GRAFT_SIMD=0`. */
+    * silently keeps the scalar blocked kernel. The scalar kernel is also
+    * reachable in a SIMD-capable JVM through `FlatReplica(rows,
+    * useSimd = false)`, the seam the kernel parity specs grade both
+    * paths with. */
   private[graft] object SimdSupport {
     val lanes: Int =
-      if (sys.props.get("graft.simd").orElse(sys.env.get("GRAFT_SIMD"))
-          .contains("0")) 0
-      else
-        try graft.simd.SimdDot.LANES
-        catch { case _: Throwable => 0 }
+      try graft.simd.SimdDot.LANES
+      catch { case _: Throwable => 0 }
     def enabled: Boolean = lanes > 0
     /** INT8 widening kernel availability (needs ≥256-bit int vectors —
       * [[graft.simd.SimdDot.INT8_OK]] — on top of the module guard).
@@ -1201,19 +1190,20 @@ object BatchedServer {
     * every f32 product and partial sum far inside the f32 range. */
   private[graft] val F32Cap = Math.scalb(1.0, 100)
 
-  /** Per-slice top-k over replica rows `[lo, hi)` for every query — the
-    * replica tier's unit of parallelism on the score pool (and, inline,
-    * the whole-replica kernel of the direct tier). Every score that
-    * reaches the top-k is the same left-to-right accumulation over
+  /** Scores replica rows `[lo, hi)` against every query, offering each
+    * row that can place into its query's heap `tops(qi)` — the replica
+    * tier's unit of parallelism on the score pool (and, inline, the
+    * whole-replica kernel of the direct tier). Every score that reaches
+    * a heap is the same left-to-right accumulation over
     * `min(rowLen, queryLen)` dims as [[dotRaw]] with the same 6dp HALF_UP
     * round ([[graft.plans.Num.round6]]) — bit-for-bit the job-tier
-    * kernel, just reading the flat slab. `seedFloors` (null = none) holds,
-    * per query, the k-th best rounded score already found outside
-    * `[lo, hi)` (the shared lap's earlier pieces): a row scoring below it
-    * cannot place, so the rounding gate starts there instead of at the
-    * threshold; a row equal to it still passes (it can win an id tie in
-    * the caller's merge). `rescored` (null = none) counts the rows the
-    * SIMD path rescored exactly (phase 2 below).
+    * kernel, just reading the flat slab. The rounding gate starts at each
+    * heap's [[TopK.floor]], so a heap that already holds hits from
+    * outside `[lo, hi)` (the shared lap's earlier pieces), or was seeded
+    * with such a floor, rounds and offers only rows that can still
+    * place; a row equal to the floor still passes (it can win an id
+    * tie). `rescored` (null = none) counts the rows the SIMD path
+    * rescored exactly (phase 2 below).
     *
     * SIMD path (transposed f32 slab present, every query ≥ the row dim
     * d), per block of `tlanes` rows and query q:
@@ -1249,23 +1239,17 @@ object BatchedServer {
     * ‖q‖·blockNorm ≥ 2¹⁰⁰ (or NaN) take the all-lanes mask: every row is
     * rescored exactly. */
   private[graft] def scoreRange(
-      rep: FlatReplica, lo: Int, hi: Int,
-      queries: Array[Array[Double]], k: Int, th: Double,
-      seedFloors: Array[Double] = null,
-      rescored: java.util.concurrent.atomic.LongAdder = null)
-      : Array[(Int, Long, Double, Int)] = {
+      rep: FlatReplica, tops: Array[TopK], lo: Int, hi: Int,
+      queries: Array[Array[Double]], th: Double,
+      rescored: java.util.concurrent.atomic.LongAdder = null): Unit = {
     val nq = queries.length
-    val tops = Array.fill(nq)(new TopK(k))
-    // cached gate floors: TopK.floor costs a PriorityQueue peek through a
-    // comparator — per (row × query) that is real overhead at slab scale.
-    // The floor only moves when an offer lands (rare post-warmup), so the
-    // cache refreshes exactly then; keep/skip decisions are unchanged.
-    def floorOf(qi: Int): Double =
-      if (seedFloors == null) tops(qi).floor(th)
-      else math.max(tops(qi).floor(th), seedFloors(qi))
+    // cached gate floors: TopK.floor costs a PriorityQueue peek — per
+    // (row × query) that is real overhead at slab scale. The floor only
+    // moves when an offer lands (rare post-warmup), so the cache
+    // refreshes exactly then; keep/skip decisions are unchanged.
     val floors = new Array[Double](nq)
     var fi = 0
-    while (fi < nq) { floors(fi) = floorOf(fi); fi += 1 }
+    while (fi < nq) { floors(fi) = tops(fi).floor(th); fi += 1 }
     val embs = rep.embs
     val offs = rep.offs
     // Rounding gate shared by every path below: an EXACT left-to-right
@@ -1280,7 +1264,7 @@ object BatchedServer {
         val r = graft.plans.Num.round6(s)
         if (r >= th) {
           tops(qi).offer(r, id, user)
-          floors(qi) = floorOf(qi)
+          floors(qi) = tops(qi).floor(th)
         }
       }
     // Row-blocked scalar kernel (4 rows × 2 queries): every accumulator
@@ -1468,7 +1452,6 @@ object BatchedServer {
       }
     }
     if (!simdDone) scalarRange(lo, hi)
-    drainAll(tops)
   }
 
   /** HALF_UP round-to-int of x·127, clamped to [−127, 127] — the scalar
@@ -1497,14 +1480,14 @@ object BatchedServer {
     * and ranks each row by the raw integer dot against the quantized
     * query — exactly the engine's round6(intdot/127²) order (distinct
     * integer dots can't collide at 6dp, see the int8Replica scaladoc) —
-    * keeping the top `fetchK = max(k, ⌊k·oversample⌋)` per query under
-    * (dot desc, id asc). Phase 2 rescores only those rows with
-    * [[scoreRows]]: the exact left-to-right dot read from `rows` (heap
-    * replica or mmapped slab) + 6dp round + threshold — the same
-    * two-phase shape as [[graft.operators.Quantization.twoPhaseSearch]].
-    * Phase 1 slices across `pool` ([[sliceTopK]]; null = inline).
-    * Returns each query's final top-k (id, score, user), (score desc,
-    * id asc). */
+    * keeping the top `fetchK = max(k, ⌊k·oversample⌋)` per query in a
+    * [[TopK]] under (dot desc, id asc). Phase 2 rescores the rows of
+    * those merged heaps with [[scoreRows]]: the exact left-to-right dot
+    * read from `rows` (heap replica or mmapped slab) + 6dp round +
+    * threshold — the same two-phase shape as
+    * [[graft.operators.Quantization.twoPhaseSearch]]. Phase 1 slices
+    * across `pool` ([[sliceTopK]]; null = inline). Returns each query's
+    * final top-k (id, score, user) in [[HitOrder]]. */
   private[graft] def int8TwoPhase(
       rows: FloatRows, codes: Array[Byte],
       queries: Array[Array[Double]], k: Int, th: Double, oversample: Double,
@@ -1522,15 +1505,13 @@ object BatchedServer {
     val offs = rows.offs
     val ids = rows.ids
     val users = rows.users
-    // phase 1: per-slice bounded heaps on (intdot, id); intdot ≤ 127²·d
-    // fits a Double exactly (< 2^53), so TopK is reused as-is with the
-    // row index riding in the user slot. The byte dot dispatches to the
-    // widening SIMD kernel when available (integer math — scalar and
-    // vector paths are bit-identical, unlike the float kernels' ordering
-    // contract).
+    // phase 1: bounded heaps on (intdot, id); intdot ≤ 127²·d fits a
+    // Double exactly (< 2^53), so TopK is reused as-is with the row index
+    // riding in the user slot. The byte dot dispatches to the widening
+    // SIMD kernel when available (integer math — scalar and vector paths
+    // are bit-identical, unlike the float kernels' ordering contract).
     val useSimd = SimdSupport.int8
-    def phase1(lo: Int, hi: Int): Array[(Int, Long, Double, Int)] = {
-      val tops = Array.fill(nq)(new TopK(fetchK))
+    def phase1(tops: Array[TopK], lo: Int, hi: Int): Unit = {
       var i = lo
       while (i < hi) {
         // a row outside the filter is skipped BEFORE ranking, so every
@@ -1558,33 +1539,32 @@ object BatchedServer {
         }
         i += 1
       }
-      drainAll(tops)
     }
-    val survivors = sliceTopK(nq, fetchK,
+    val survivors = sliceTopK(Array.fill(nq)(new TopK(fetchK)),
       if (ranges != null) ranges else Array((0, rows.n)), pool, slices)(phase1)
     // phase 2: exact rescore of each query's survivors (row in slot 3)
     Array.tabulate(nq) { qi =>
-      val rowIdx = survivors(qi).map(_._3)
-      topKPerQuery(1, k,
-        scoreRows(rows, rowIdx, 0, rowIdx.length, Array(queries(qi)), k, th))(0)
+      val rowIdx = survivors(qi).result().map(_._3)
+      val top = Array(new TopK(k))
+      scoreRows(rows, rowIdx, top, 0, rowIdx.length, Array(queries(qi)), th)
+      top(0).result()
     }
   }
 
-  /** THE exact row-list kernel: top-k over the row-index list
-    * `rowIdx[from, until)` of `rows` with the same exact left-to-right
-    * dot, rounding gate, 6dp HALF_UP round and threshold as
-    * [[scoreRange]]'s scalar path. It serves every filtered request that
-    * resolves its predicate to rows (payload postings, or probed cells
-    * filtered by user) and the int8 rescore, on either host — so
+  /** THE exact row-list kernel: scores the row-index list
+    * `rowIdx[from, until)` of `rows` into the per-query heaps `tops` with
+    * the same exact left-to-right dot, rounding gate, 6dp HALF_UP round
+    * and threshold as [[scoreRange]]'s scalar path. It serves every
+    * filtered request that resolves its predicate to rows (payload
+    * postings, or probed cells filtered by user) and the int8 rescore,
+    * on either host — so
     * filtered serving ≡ `Search.knn(preFilter)` row for row by the same
     * kernel-parity argument as the unfiltered tiers, with recall 1.0
     * over the listed rows. */
   private[graft] def scoreRows(
-      rows: FloatRows, rowIdx: Array[Int], from: Int, until: Int,
-      queries: Array[Array[Double]], k: Int, th: Double)
-      : Array[(Int, Long, Double, Int)] = {
+      rows: FloatRows, rowIdx: Array[Int], tops: Array[TopK], from: Int,
+      until: Int, queries: Array[Array[Double]], th: Double): Unit = {
     val nq = queries.length
-    val tops = Array.fill(nq)(new TopK(k))
     val floors = new Array[Double](nq)
     var fi = 0
     while (fi < nq) { floors(fi) = tops(fi).floor(th); fi += 1 }
@@ -1607,70 +1587,40 @@ object BatchedServer {
       }
       p += 1
     }
-    drainAll(tops)
   }
 
-  /** THE slicer: split `ranges` (half-open intervals of whatever `scan`
-    * indexes — slab rows, or positions in a row list) into ≤ `slices`
-    * chunks of near-equal size ([[chunkRanges]]), scan every chunk on
-    * `pool` (inline on the caller when `pool` is null), and merge the
-    * per-slice top-k per query ([[topKPerQuery]]). Per-slice top-k ⊇
-    * each query's global top-k, so slice boundaries never change the
-    * merged result. */
-  private[graft] def sliceTopK(nq: Int, k: Int, ranges: Array[(Int, Int)],
+  /** THE slicer: scan `ranges` (half-open intervals of whatever `scan`
+    * indexes — slab rows, or positions in a row list) into the per-query
+    * heaps `tops`, and return them. Inline (`pool` null) every range is
+    * scanned straight into `tops`. On `pool` the ranges split into ≤
+    * `slices` chunks of near-equal size ([[chunkRanges]]); each chunk
+    * scans into its own heaps, seeded with the destination floors, and
+    * their hits are offered into `tops` on the calling thread. A scan
+    * scores each row once, so slice boundaries never change the result
+    * ([[TopK]]). */
+  private[graft] def sliceTopK(tops: Array[TopK], ranges: Array[(Int, Int)],
       pool: java.util.concurrent.ExecutorService, slices: Int)(
-      scan: (Int, Int) => Array[(Int, Long, Double, Int)])
-      : Array[Array[(Long, Double, Int)]] = {
-    def run(chunk: Array[(Int, Int)]): Array[(Int, Long, Double, Int)] =
-      chunk.flatMap { case (lo, hi) =>
-        if (lo < hi) scan(lo, hi) else Array.empty[(Int, Long, Double, Int)]
+      scan: (Array[TopK], Int, Int) => Unit): Array[TopK] = {
+    def run(chunk: Array[(Int, Int)], into: Array[TopK]): Unit =
+      chunk.foreach { case (lo, hi) => if (lo < hi) scan(into, lo, hi) }
+    if (pool == null) run(ranges, tops)
+    else {
+      import scala.jdk.CollectionConverters._
+      val seeds = tops.map(_.floor(Double.NegativeInfinity))
+      val tasks = chunkRanges(ranges, math.max(1, slices)).toSeq.map { c =>
+        (() => {
+          val local = Array.tabulate(tops.length)(qi => new TopK(tops(qi).k, seeds(qi)))
+          run(c, local)
+          local
+        }): java.util.concurrent.Callable[Array[TopK]]
       }
-    val cands =
-      if (pool == null) run(ranges)
-      else {
-        import scala.jdk.CollectionConverters._
-        val tasks = chunkRanges(ranges, math.max(1, slices)).toSeq.map { c =>
-          (() => run(c)): java.util.concurrent.Callable[Array[(Int, Long, Double, Int)]]
-        }
-        pool.invokeAll(tasks.asJava).asScala.toArray.flatMap(_.get())
+      pool.invokeAll(tasks.asJava).forEach { f =>
+        val local = f.get()
+        var qi = 0
+        while (qi < tops.length) { tops(qi).offerAll(local(qi).result()); qi += 1 }
       }
-    topKPerQuery(nq, k, cands)
-  }
-
-  /** Per-query merge of (qi, id, score, user) candidates: each query's
-    * hits sorted (score desc, id asc), the first k kept — the one merge
-    * rule of every serving tier (int8 phase 1 rides it too, with the
-    * integer dot as score and the row index as user). */
-  private[graft] def topKPerQuery(nq: Int, k: Int,
-      cands: Array[(Int, Long, Double, Int)]): Array[Array[(Long, Double, Int)]] = {
-    val out = Array.fill(nq)(Array.empty[(Long, Double, Int)])
-    cands.groupBy(_._1).foreach { case (qi, hits) =>
-      out(qi) = hits.map(h => (h._2, h._3, h._4))
-        .sortBy { case (id, s, _) => (-s, id) }.take(k)
     }
-    out
-  }
-
-  /** The first k hits of `a ++ b` under (score desc, id asc), both
-    * already sorted that way, by one linear two-way merge: the same
-    * answer as [[topKPerQuery]] over the concatenation (its sort is
-    * stable, so on equal (score, id) `a` goes first here too). */
-  private[graft] def mergeTopK(a: Array[(Long, Double, Int)],
-      b: Array[(Long, Double, Int)], k: Int): Array[(Long, Double, Int)] = {
-    val out = new Array[(Long, Double, Int)](math.max(0, math.min(k, a.length + b.length)))
-    var i = 0
-    var j = 0
-    var o = 0
-    while (o < out.length) {
-      // Double.compare on the negated scores: topKPerQuery's sortBy key
-      val fromA = j == b.length || (i < a.length && {
-        val c = java.lang.Double.compare(-a(i)._2, -b(j)._2)
-        c < 0 || (c == 0 && a(i)._1 <= b(j)._1)
-      })
-      if (fromA) { out(o) = a(i); i += 1 } else { out(o) = b(j); j += 1 }
-      o += 1
-    }
-    out
+    tops
   }
 
   /** Split `ranges` (half-open row intervals) into ≤`slices` work chunks
@@ -1732,11 +1682,11 @@ object BatchedServer {
     * once by [[scoreRange]], sliced over `pool` ([[sliceTopK]]), so
     * concurrent queries share each block read from memory instead of each
     * reading the whole slab. A query joins at the next piece boundary and
-    * leaves after exactly one lap ([[lapPiece]]); its per-piece top-k
-    * merge by [[mergeTopK]] into the same (score desc, id asc) top-k
-    * as one sliced scan of the whole slab, bit for bit, and its k-th best
-    * score so far seeds the next piece's gate floor (`seedFloors`), so
-    * later pieces round and offer only rows that can still place. Queries of
+    * leaves after exactly one lap ([[lapPiece]]), scoring every row once
+    * into its one [[TopK]] for the whole lap: the same top-k as one
+    * sliced scan of the whole slab, bit for bit. That heap's floor (the
+    * k-th best score so far) gates the next piece, so later pieces round
+    * and offer only rows that can still place. Queries of
     * different replicas (a reload mid-lap) score the same step's piece of
     * their own replica, so each finishes on the generation it was
     * admitted with. The thread blocks while no query is active, so a
@@ -1752,15 +1702,12 @@ object BatchedServer {
   private[graft] final class SharedLap(
       pool: java.util.concurrent.ExecutorService, slices: Int) {
     private final class Entry(val rep: FlatReplica,
-        val queries: Array[Array[Double]], val k: Int, val th: Double) {
+        val queries: Array[Array[Double]], k: Int, val th: Double) {
       val enqueued: Long = System.nanoTime()
       var left: Int = lapPieces(rep.n)
       /** Each query's top-k over the pieces scored so far. */
-      val best = Array.fill(queries.length)(Array.empty[(Long, Double, Int)])
-      /** Its k-th best score: the next piece's gate floor. */
-      def seed(j: Int): Double =
-        if (k > 0 && best(j).length >= k) best(j)(k - 1)._2 else Double.NegativeInfinity
-      val done = new java.util.concurrent.CompletableFuture[Array[Array[(Long, Double, Int)]]]
+      val tops = Array.fill(queries.length)(new TopK(k))
+      val done = new java.util.concurrent.CompletableFuture[Array[Array[Hit]]]
     }
     private val queue = new LinkedBlockingQueue[Entry]()
     private[graft] val laps, pieces, admitted, activeSum, queueWaitNs, scanNs =
@@ -1769,7 +1716,7 @@ object BatchedServer {
 
     /** Exact top-k of every query over `rep`, from one lap. */
     def search(rep: FlatReplica, queries: Array[Array[Double]], k: Int,
-        th: Double): Array[Array[(Long, Double, Int)]] = {
+        th: Double): Array[Array[Hit]] = {
       val e = new Entry(rep, queries, k, th)
       queue.put(e)
       try e.done.get()
@@ -1799,26 +1746,16 @@ object BatchedServer {
           active += e
         }
         arrived.clear()
-        // one piece per (replica, k, th) group: the replica is compared
-        // by reference, so every generation scores its own rows
-        active.groupBy(e => (e.rep, e.k, e.th)).foreach { case ((rep, k, th), group) =>
+        // one piece per (replica, th) group: the replica is compared by
+        // reference, so every generation scores its own rows
+        active.groupBy(e => (e.rep, e.th)).foreach { case ((rep, th), group) =>
           val qs = group.flatMap(_.queries).toArray
-          val seeds = group.flatMap(e => e.queries.indices.map(e.seed)).toArray
           val (lo, hi) = lapPiece(rep.n, step)
           try {
             val t0 = System.nanoTime()
-            val tops = sliceTopK(qs.length, k, Array((lo, hi)), pool, slices)(
-              scoreRange(rep, _, _, qs, k, th, seeds, rescored))
+            sliceTopK(group.flatMap(_.tops).toArray, Array((lo, hi)), pool, slices)(
+              scoreRange(rep, _, _, _, qs, th, rescored))
             scanNs.addAndGet(System.nanoTime() - t0)
-            var qi = 0
-            group.foreach { e =>
-              var j = 0
-              while (j < e.queries.length) {
-                if (tops(qi).nonEmpty) e.best(j) = mergeTopK(e.best(j), tops(qi), k)
-                j += 1
-                qi += 1
-              }
-            }
           } catch {
             case x: Throwable => group.foreach { e => e.done.completeExceptionally(x); e.left = 0 }
           }
@@ -1829,7 +1766,7 @@ object BatchedServer {
         step += 1
         active.filterInPlace { e =>
           e.left -= 1
-          if (e.left <= 0 && !e.done.isDone) e.done.complete(e.best)
+          if (e.left <= 0 && !e.done.isDone) e.done.complete(e.tops.map(_.result()))
           e.left > 0
         }
       }
@@ -1854,53 +1791,75 @@ object BatchedServer {
     false
   }
 
-  /** Per-query heaps → (qi, id, score, user) candidates. */
-  private def drainAll(tops: Array[TopK]): Array[(Int, Long, Double, Int)] = {
-    val out = Array.newBuilder[(Int, Long, Double, Int)]
-    var qi = 0
-    while (qi < tops.length) {
-      tops(qi).drain().foreach { case (s, id, u) => out += ((qi, id, s, u)) }
-      qi += 1
+  /** A served hit: (id, score, user). The int8 phase 1 and the graph
+    * frontier reuse the shape with a slab row index in the user slot. */
+  type Hit = (Long, Double, Int)
+
+  /** THE rank order of every serving path: score descending by raw
+    * `Double.compare`, then id ascending. Every heap, merge, frontier and
+    * probe order ranks by it; [[TopK]] ranks an offer through
+    * [[HitOrder.cmp]] without building a tuple. */
+  object HitOrder extends Ordering[Hit] {
+    /** Negative when (s1, id1) ranks before `b`. `b`'s id is read only on
+      * a score tie: the heap's hot path compares scores alone. */
+    def cmp(s1: Double, id1: Long, b: Hit): Int = {
+      val c = java.lang.Double.compare(b._2, s1)
+      if (c != 0) c else java.lang.Long.compare(id1, b._1)
     }
-    out.result()
+    def compare(a: Hit, b: Hit): Int = cmp(a._2, a._1, b)
   }
 
-  /** Bounded top-k of (score, id, user) under (score desc, id asc): a
-    * k-size min-heap whose root is the weakest kept hit. Per-partition
-    * top-k is a superset of each query's global top-k, so the driver
-    * merge is exact — the same argument TakeOrderedAndProject makes. */
-  private[graft] final class TopK(k: Int) {
-    private val pq = new java.util.PriorityQueue[(Double, Long, Int)](
-      math.max(k, 1),
-      new java.util.Comparator[(Double, Long, Int)] {
-        // root = weakest: lowest score first; on ties the HIGHER id is
-        // weaker (id asc wins the keep)
-        def compare(a: (Double, Long, Int), b: (Double, Long, Int)): Int = {
-          val c = java.lang.Double.compare(a._1, b._1)
-          if (c != 0) c else java.lang.Long.compare(b._2, a._2)
-        }
-      })
+  /** THE top-k accumulator of every serving path: a k-size heap under
+    * [[HitOrder]] whose root is the weakest kept hit. `seed` is a floor
+    * the caller already holds (the floor of the heap this one will be
+    * offered into): an offer scoring below it is dropped, and [[floor]]
+    * never reads below it. Within one candidate stream every id is
+    * unique (a scan scores each row once, shards partition the ids), so
+    * under this strict total order the heap keeps the same k hits as
+    * sort-then-take, whatever order the offers arrive in: heaps filled
+    * per slice, per piece or per shard and offered into one destination
+    * hold the global top-k. */
+  private[graft] final class TopK(val k: Int, seed: Double = Double.NegativeInfinity) {
+    private val pq = new java.util.PriorityQueue[Hit](math.max(k, 1), TopK.WeakestFirst)
     def offer(score: Double, id: Long, user: Int): Unit =
-      if (pq.size() < k) pq.add((score, id, user))
-      else {
-        val w = pq.peek()
-        if (score > w._1 || (score == w._1 && id < w._2)) {
-          pq.poll()
-          pq.add((score, id, user))
-        }
+      if (pq.size() < k) { if (score >= seed) pq.add((id, score, user)) }
+      // full: every kept hit is ≥ seed, so one that beats the weakest is too
+      else if (k > 0 && HitOrder.cmp(score, id, pq.peek()) < 0) {
+        pq.poll()
+        pq.add((id, score, user))
       }
-    /** The lowest ROUNDED score that could still change this heap: the
-      * threshold while filling, else max(threshold, weakest kept score).
-      * A candidate strictly below it is rejected by [[offer]]; one equal
-      * to it can still win an id tie — callers gating on a RAW score
-      * must allow the ±5e-7 rounding slack below this floor. */
+    def offerAll(hits: Array[Hit]): Unit = {
+      var i = 0
+      while (i < hits.length) {
+        val h = hits(i)
+        offer(h._2, h._1, h._3)
+        i += 1
+      }
+    }
+    /** The lowest ROUNDED score that could still change this heap:
+      * max(threshold, seed) while filling, else max(threshold, seed,
+      * weakest kept score). A candidate strictly below it is rejected by
+      * [[offer]]; one equal to it can still win an id tie — callers
+      * gating on a RAW score must allow the ±5e-7 rounding slack below
+      * this floor. */
     def floor(th: Double): Double =
-      if (pq.size() < k) th else math.max(th, pq.peek()._1)
-    def drain(): Iterator[(Double, Long, Int)] = {
-      import scala.jdk.CollectionConverters._
-      pq.iterator().asScala.toArray.iterator
+      if (pq.size() < k) math.max(th, seed)
+      else if (k <= 0) Double.PositiveInfinity
+      else math.max(th, math.max(seed, pq.peek()._2))
+    /** The kept hits in rank order. */
+    def result(): Array[Hit] = {
+      val out = pq.toArray(new Array[Hit](pq.size()))
+      java.util.Arrays.sort(out, HitOrder)
+      out
     }
   }
+
+  private[graft] object TopK {
+    private val WeakestFirst: Ordering[Hit] = HitOrder.reverse
+  }
+
+  private[graft] def toRows(hits: Array[Hit]): Array[Row] =
+    hits.map { case (id, s, u) => Row(id, s, u) }
 }
 
 /** Sharded replica serving — the "replica too big" tier (VERDICT r9 #1).
@@ -1954,23 +1913,18 @@ final class ShardedServer private (
   def submitFiltered(qemb: Seq[Double], userIds: Seq[Int]): Future[Array[Row]] =
     gather(_.submitFiltered(qemb, userIds))
 
-  /** The one scatter-gather: ask every shard, merge the answers under
-    * (score desc, id asc), keep k, and record the request in [[metrics]].
-    * The merge completes on the thread finishing the LAST shard future
-    * (`parasitic` — an N×k sort, too small to justify a pool handoff). */
+  /** The one scatter-gather: ask every shard, offer the answers into one
+    * [[BatchedServer.TopK]], and record the request in [[metrics]]. The
+    * merge completes on the thread finishing the LAST shard future
+    * (`parasitic` — N×k offers, too small to justify a pool handoff). */
   private def gather(ask: BatchedServer => Future[Array[Row]]): Future[Array[Row]] = {
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.parasitic
     val t0 = System.nanoTime()
     val f = Future.sequence(servers.map(ask)).map { perShard =>
-      val all = perShard.flatten.toArray
-      java.util.Arrays.sort(all, new java.util.Comparator[Row] {
-        def compare(a: Row, b: Row): Int = {
-          val c = java.lang.Double.compare(b.getDouble(1), a.getDouble(1))
-          if (c != 0) c else java.lang.Long.compare(a.getLong(0), b.getLong(0))
-        }
-      })
-      if (all.length <= k) all else java.util.Arrays.copyOf(all, k)
+      val top = new BatchedServer.TopK(k)
+      perShard.foreach(_.foreach(r => top.offer(r.getDouble(1), r.getLong(0), r.getInt(2))))
+      BatchedServer.toRows(top.result())
     }
     f.onComplete(r => metrics.recordRequest(System.nanoTime() - t0, success = r.isSuccess))
     f

@@ -51,7 +51,9 @@ import java.nio.file.{Paths, StandardOpenOption}
   * Kernels by host × family × filter ("postings" = the rows a user
   * filter matches; "selective" = matched ≤ the full-scan threshold, or
   * no ivf/graph sidecar; every sliced scan goes through
-  * [[BatchedServer.sliceTopK]]; "f32+rescore" = scoreRange's f32 SIMD
+  * [[BatchedServer.sliceTopK]] and every kernel, router and graph
+  * descent keeps its hits in [[BatchedServer.TopK]] heaps ranked by
+  * [[BatchedServer.HitOrder]]; "f32+rescore" = scoreRange's f32 SIMD
   * phase 1, certified gate and exact f64 rescore, bit-identical to its
   * scalar f64 path):
   * {{{
@@ -914,14 +916,16 @@ object ShardWorker {
     }
   }
 
-  /** Rank the sidecar's cells by round6(q·centroid) desc, cell id asc —
-    * the SAME probe order as the store-side [[graft.operators.Ann.probeCids]]
-    * / TopCentroids, so the store's calibrated nprobe transfers — and
-    * return the top `nprobe` cells' row ranges in slab order. */
+  /** Rank the sidecar's cells by round6(q·centroid) desc, cell id asc
+    * ([[BatchedServer.HitOrder]]) — the SAME probe order as the
+    * store-side [[graft.operators.Ann.probeCids]] / TopCentroids, so the
+    * store's calibrated nprobe transfers — and return the top `nprobe`
+    * cells' row ranges in slab order. */
   private[graft] def probeRanges(ivf: SlabIO.IvfSidecar,
       q: Array[Double], nprobe: Int): Array[(Int, Int)] = {
     val c = ivf.c
-    val scored = new Array[(Double, Long, Int)](c)
+    // (cell id, score, index) ranked as hits
+    val scored = new Array[BatchedServer.Hit](c)
     var j = 0
     while (j < c) {
       val ce = ivf.cents(j)
@@ -929,10 +933,10 @@ object ShardWorker {
       var s = 0.0
       var d = 0
       while (d < nd) { s += ce(d) * q(d); d += 1 }
-      scored(j) = (graft.plans.Num.round6(s), ivf.cids(j), j)
+      scored(j) = (ivf.cids(j), graft.plans.Num.round6(s), j)
       j += 1
     }
-    scored.sortBy { case (s, cid, _) => (-s, cid) }
+    scored.sorted(BatchedServer.HitOrder)
       .take(math.min(nprobe, c))
       .map { case (_, _, idx) => (ivf.offs(idx), ivf.offs(idx + 1)) }
       .sortBy(_._1) // scan in slab order: sequential memory walk
@@ -940,8 +944,8 @@ object ShardWorker {
 
   /** Exact float top-k of the worker: the shared range kernel
     * ([[BatchedServer.scoreRange]]) over `threads` chunks of `pool`,
-    * merged per query under (score desc, id asc) by the shared slicer
-    * ([[BatchedServer.sliceTopK]]) — the in-JVM flush's path. `ranges`
+    * offered into one [[BatchedServer.TopK]] per query by the shared
+    * slicer ([[BatchedServer.sliceTopK]]) — the in-JVM flush's path. `ranges`
     * (null = the whole slab) restricts the scan to the given row
     * intervals — the IVF-pruned phase 1; scoring within them is the same
     * exact kernel, so pruned output ≡ full-scan output whenever the
@@ -952,9 +956,9 @@ object ShardWorker {
       queries: Array[Array[Double]], k: Int, th: Double,
       ranges: Array[(Int, Int)] = null)
       : Array[Array[(Long, Double, Int)]] =
-    BatchedServer.sliceTopK(queries.length, k,
+    BatchedServer.sliceTopK(Array.fill(queries.length)(new BatchedServer.TopK(k)),
       if (ranges != null) ranges else Array((0, rep.n)), pool, threads)(
-      BatchedServer.scoreRange(rep, _, _, queries, k, th))
+      BatchedServer.scoreRange(rep, _, _, _, queries, th)).map(_.result())
 
   /** Unfiltered top-k of one generation: beam descent on a graph
     * generation, else per-query probed cells on an IVF generation, else
@@ -962,8 +966,8 @@ object ShardWorker {
     * generation ([[BatchedServer.SharedLap]], the [[topK]] answer bit for
     * bit) or the int8 kernel ([[BatchedServer.int8TwoPhase]], rescoring
     * from the mmapped float slab). The router is oblivious to which
-    * kernel a shard runs: every path returns the (score desc, id asc)
-    * top-k. */
+    * kernel a shard runs: every path returns its top-k in
+    * [[BatchedServer.HitOrder]]. */
   private[graft] def search(st: ServingState, queries: Array[Array[Double]],
       k: Int, th: Double, pool: java.util.concurrent.ExecutorService,
       threads: Int, lap: BatchedServer.SharedLap)
@@ -1019,19 +1023,14 @@ object ShardWorker {
       }
     // every scored row feeds two structures as it is visited: the k-heap
     // of RESULTS (threshold-gated) and the candidate PQ of UNEXPANDED
-    // rows ordered (score desc, id asc) — each hop's frontier is `beam`
-    // polls, so no hop ever re-sorts the visited set (the first cut of
-    // this kernel did, and the boxed re-sort × hops dominated the
-    // descent at ~6.7 ms/request vs ~0.1 ms of actual dot work)
+    // rows, best first in the one rank order with the row index in the
+    // user slot — each hop's frontier is `beam` polls, so no hop ever
+    // re-sorts the visited set (the first cut of this kernel did, and the
+    // boxed re-sort × hops dominated the descent at ~6.7 ms/request vs
+    // ~0.1 ms of actual dot work)
     val visited = new java.util.HashSet[Integer]()
     val top = new BatchedServer.TopK(k)
-    val cand = new java.util.PriorityQueue[(Double, Long, Int)](64,
-      new java.util.Comparator[(Double, Long, Int)] {
-        def compare(a: (Double, Long, Int), b: (Double, Long, Int)): Int = {
-          val c = java.lang.Double.compare(b._1, a._1) // best first
-          if (c != 0) c else java.lang.Long.compare(a._2, b._2)
-        }
-      })
+    val cand = new java.util.PriorityQueue[BatchedServer.Hit](64, BatchedServer.HitOrder)
     def visit(row: Int): Unit = if (visited.add(row)) {
       val r = graft.plans.Num.round6(rep.dot(row, q))
       val id = rep.ids(row)
@@ -1040,7 +1039,7 @@ object ShardWorker {
       // sub-threshold (and predicate-excluded) rows still EXPAND — the
       // path to a hit may pass through them; only the result heap is
       // threshold- and predicate-gated
-      cand.add((r, id, row))
+      cand.add((id, r, row))
     }
     g.entries.foreach(visit)
     var hop = 0
@@ -1065,8 +1064,7 @@ object ShardWorker {
       }
       hop += 1
     }
-    top.drain().map { case (s, id, u) => (id, s, u) }.toArray
-      .sortBy { case (id, s, _) => (-s, id) }.take(k)
+    top.result()
   }
 
   /** The worker-side FILTERED-search planner — the serving twin of
@@ -1103,8 +1101,9 @@ object ShardWorker {
       : Array[(Long, Double, Int)] = {
     // exact row-list scan (inline when `p` is null)
     def exactRows(rowIdx: Array[Int], p: java.util.concurrent.ExecutorService) =
-      BatchedServer.sliceTopK(1, k, Array((0, rowIdx.length)), p, threads)(
-        BatchedServer.scoreRows(st.floats, rowIdx, _, _, Array(q), k, th))(0)
+      BatchedServer.sliceTopK(Array(new BatchedServer.TopK(k)),
+        Array((0, rowIdx.length)), p, threads)(
+        BatchedServer.scoreRows(st.floats, rowIdx, _, _, _, Array(q), th))(0).result()
     if ((st.ivf == null && st.graph == null) ||
         st.postings.matched(users) <= fullScanTh)
       exactRows(st.postings.rowsFor(users), null)
@@ -1605,22 +1604,21 @@ final class RemoteShardedRouter(
       })
     }
 
-  private def mergeTopK(hits: Array[(Long, Double, Int)])
+  /** Every shard's reply offered into one [[BatchedServer.TopK]]: shards
+    * partition the ids, so this is the exact global top-k. */
+  private def gather(
+      replies: IndexedSeq[java.util.concurrent.Future[Array[(Long, Double, Int)]]])
       : Array[(Long, Double, Int)] = {
-    java.util.Arrays.sort(hits, new java.util.Comparator[(Long, Double, Int)] {
-      def compare(a: (Long, Double, Int), b: (Long, Double, Int)): Int = {
-        val c = java.lang.Double.compare(b._2, a._2)
-        if (c != 0) c else java.lang.Long.compare(a._1, b._1)
-      }
-    })
-    if (hits.length <= k) hits else java.util.Arrays.copyOf(hits, k)
+    val top = new BatchedServer.TopK(k)
+    replies.foreach(f => top.offerAll(f.get()))
+    top.result()
   }
 
   /** One request: parallel scatter to every shard, merged top-k.
     * Blocks until ALL shards answer — exact, no deadline (see class doc
     * for the straggler story). */
   def search(qemb: Array[Double]): Array[(Long, Double, Int)] =
-    mergeTopK(scatter(searchFrame(qemb)).flatMap(_.get()).toArray)
+    gather(scatter(searchFrame(qemb)))
 
   /** FILTERED scatter-gather (VERDICT r16 #1): every shard serves the
     * predicate through its worker-side filtered planner
@@ -1632,7 +1630,7 @@ final class RemoteShardedRouter(
     * api_spec.md:739-762) runs through this entry point. */
   def searchFiltered(qemb: Array[Double], users: Array[Int])
       : Array[(Long, Double, Int)] =
-    mergeTopK(scatter(filteredFrame(qemb, users)).flatMap(_.get()).toArray)
+    gather(scatter(filteredFrame(qemb, users)))
 
   /** Deadline-bounded request: shards that answer within `timeoutMs`
     * (ONE budget across the whole gather, not per shard) are merged;
@@ -1645,14 +1643,14 @@ final class RemoteShardedRouter(
     val futs = scatter(searchFrame(qemb))
     val deadline = System.nanoTime() + timeoutMs * 1000000L
     var answered = 0
-    val got = Array.newBuilder[(Long, Double, Int)]
+    val top = new BatchedServer.TopK(k)
     futs.foreach { f =>
       val leftNs = deadline - System.nanoTime()
       try {
         val hits = f.get(math.max(leftNs, 0L),
           java.util.concurrent.TimeUnit.NANOSECONDS)
         answered += 1
-        got ++= hits
+        top.offerAll(hits)
       } catch {
         case _: java.util.concurrent.TimeoutException =>
           // straggler: cancel(false) drops the task from the executor
@@ -1665,7 +1663,7 @@ final class RemoteShardedRouter(
       }
     }
     RemoteShardedRouter.PartialResult(
-      mergeTopK(got.result()), answered, answered == addrs.length)
+      top.result(), answered, answered == addrs.length)
   }
 
   // hedge-budget accounting (router-wide): hedges are allowed only while
@@ -1775,7 +1773,7 @@ final class RemoteShardedRouter(
     var hedgesSent = 0
     var hedgeWins = 0
     var hedged = false
-    val got = Array.newBuilder[(Long, Double, Int)]
+    val top = new BatchedServer.TopK(k)
     while (nAnswered < nShards && System.nanoTime() < deadline) {
       val waitUntil = if (hedged) deadline else math.min(hedgeAt, deadline)
       val r = replies.poll(math.max(waitUntil - System.nanoTime(), 0L),
@@ -1785,7 +1783,7 @@ final class RemoteShardedRouter(
         if (!answered(shard)) {
           answered(shard) = true
           nAnswered += 1
-          got ++= hits
+          top.offerAll(hits)
           if (wasHedge) hedgeWins += 1
         }
       }
@@ -1819,7 +1817,7 @@ final class RemoteShardedRouter(
     // drain and re-pool on their own
     attempts.foreach(_.cancel(false))
     RemoteShardedRouter.HedgedResult(
-      mergeTopK(got.result()), nAnswered, nAnswered == nShards,
+      top.result(), nAnswered, nAnswered == nShards,
       hedgesSent, hedgeWins)
   }
 

@@ -297,6 +297,10 @@ object SparkEntry {
   private val lmModel = trained("lm")((s, dir) =>
     TextAnalysis.lmTrain(docsTable(s, dir)))
 
+  /** Seed-centroid count of `ann_knn_join` and both graph tables: their
+    * oracles replay the same 32 cells. */
+  private val KnnCells = 32
+
   /** Navigable neighbor graph per scale dir (NSW index build lifecycle):
     * built once per JVM from the bulk k-NN join (graphK=12, nprobe=2,
     * C=32 seed centroids — the ann_knn_join configuration, which the
@@ -306,10 +310,7 @@ object SparkEntry {
   private[graft] def graphTable(s: SparkSession, dir: String): DataFrame =
     graphBuilt(dir) {
       val points = Collection.load(s, dir)
-      // cell count is oracle-pinned at 32; the env override exists for
-      // the C∝N scaling runs only (same knob/convention as ann_knn_join)
-      val cells = sys.env.getOrElse("SPARK_GRAFT_KNN_CELLS", "32").toInt
-      Ann.graphBuild(points, Ann.seedCentroids(points, cells),
+      Ann.graphBuild(points, Ann.seedCentroids(points, KnnCells),
         graphK = 12, maxDegree = 16, nprobe = 2).localCheckpoint()
     }
 
@@ -326,8 +327,7 @@ object SparkEntry {
       s: SparkSession, dir: String): DataFrame =
     refinedGraphBuilt(dir) {
       val points = Collection.load(s, dir)
-      val cells = sys.env.getOrElse("SPARK_GRAFT_KNN_CELLS", "32").toInt
-      val cents = Ann.seedCentroids(points, cells)
+      val cents = Ann.seedCentroids(points, KnnCells)
       val frag = Ann.graphBuild(points, cents,
         graphK = 12, maxDegree = 16, nprobe = 1)
       Ann.graphRefine(points, frag, rounds = 2, maxDegree = 16,
@@ -1077,13 +1077,7 @@ object SparkEntry {
     }),
     "ann_knn_join" -> ((s, dir) => {
       val points = Collection.load(s, dir)
-      val cells = sys.env.getOrElse("SPARK_GRAFT_KNN_CELLS", "32").toInt
-      val hier = sys.env.get("SPARK_GRAFT_KNN_ASSIGN").contains("hier")
-      // hier probes 2 coarse groups x nprobe cells — scale runs set
-      // nprobe=1 to hold probed-cell count (candidate volume) at parity
-      val np = sys.env.getOrElse("SPARK_GRAFT_KNN_NPROBE", "2").toInt
-      Ann.knnJoin(points, Ann.seedCentroids(points, cells), k = 3, nprobe = np,
-        hierarchical = hier)
+      Ann.knnJoin(points, Ann.seedCentroids(points, KnnCells), k = 3, nprobe = 2)
     }),
     "tpch_q6_forecast" -> ((s, dir) =>
       Relational.revenueForecast(Relational.table(s, dir, "lineitem"),

@@ -789,6 +789,56 @@ class ApiSpec extends SparkSpec {
     } finally srv.close()
   }
 
+  test("cross-shard ties: identical rows in different pmod buckets come back " +
+      "in ascending id order through ShardedServer and RemoteShardedRouter") {
+    import scala.concurrent.Await
+    import scala.concurrent.duration._
+    // 40 identical rows: pmod(id, 2) puts the even ids on one shard and
+    // the odd ids on the other, so every shard's top-k ties with the
+    // other's on every score and only the id order decides the merge
+    val v = Seq(0.6, 0.8, 0.0, 0.0)
+    val rows = (0 until 40).map(i => (i.toLong, v.toArray, i % 3))
+    val k = 7
+    val want = (0L until k.toLong).toSeq
+    val users = Seq(0, 1, 2)
+    def tiedIds(hits: Seq[(Long, Double)]): Unit = {
+      assert(hits.map(_._1) == want, s"tie order broken: $hits")
+      assert(hits.map(_._2).distinct.length == 1)
+    }
+    val srv = ShardedServer(rows.map { case (id, e, u) => (id, e.toSeq, u) }
+      .toDF("id", "embedding", "user_id"), k, 0.1, shardMaxRows = 20)
+    try {
+      assert(srv.nShards == 2)
+      for (hits <- Seq(srv.submit(v), srv.submitFiltered(v, users)))
+        tiedIds(Await.result(hits, 2.minutes).toSeq.map(r => (r.getLong(0), r.getDouble(1))))
+    } finally srv.close()
+    // the same split over two in-spec shard workers
+    val dir = tempDir("slab_ties").toString
+    val ports = (0 until 2).map { s =>
+      val slab = s"$dir/shard$s.slab"
+      SlabIO.write(slab, rows.filter(_._1 % 2 == s).toArray)
+      val port = {
+        val sock = new java.net.ServerSocket(0)
+        try sock.getLocalPort finally sock.close()
+      }
+      val t = new Thread(new Runnable {
+        def run(): Unit = ShardWorker.run(
+          Array(slab, port.toString, k.toString, "0.1", "threads=2"), _ => ())
+      })
+      t.setDaemon(true)
+      t.start()
+      port
+    }
+    val router = Drive.whenUp(new RemoteShardedRouter(
+      ports.map(p => ("127.0.0.1", p)), k, connsPerShard = 2))
+    try {
+      val q = v.toArray
+      for (hits <- Seq(router.search(q), router.searchFiltered(q, users.toArray),
+          router.searchPartial(q, 60000).hits, router.searchHedged(q, 5, 60000).hits))
+        tiedIds(hits.toSeq.map(h => (h._1, h._2)))
+    } finally router.close()
+  }
+
   test("withTimeout: fast queries pass through, runaway queries are cancelled") {
     // generous deadline: result returned untouched
     val n = Api.withTimeout(spark, timeoutSec = 60.0, tag = "fast") {

@@ -70,6 +70,54 @@ class DriveSpec extends AnyFunSuite {
     }
   }
 
+  test("stop: a child that traps TERM exits within the grace period, one " +
+      "that ignores it is killed after it; neither leaves an orphan") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_drive_stop")
+    def path(name: String) = dir.resolve(name)
+    def sh(script: String): Process =
+      new ProcessBuilder("sh", "-c", script).redirectErrorStream(true)
+        .redirectOutput(ProcessBuilder.Redirect.DISCARD).start()
+    def awaitFile(name: String): Unit = {
+      val t0 = System.nanoTime()
+      while (!java.nio.file.Files.exists(path(name))) {
+        assert(System.nanoTime() - t0 < 30e9, s"$name never written")
+        Thread.sleep(10)
+      }
+    }
+    val grace = 3.seconds
+    try {
+      // traps TERM: kills its background sleep, writes the marker, exits
+      val polite = sh(s"""trap 'kill $$pid; echo bye > ${path("marker")}; exit 0' TERM
+        |sleep 60 & pid=$$!
+        |echo $$pid > ${path("polite.ready")}
+        |wait $$pid""".stripMargin)
+      awaitFile("polite.ready")
+      val politeKids = polite.descendants().iterator().asScala.toList
+      assert(politeKids.nonEmpty, "the background sleep must be running")
+      val t0 = System.nanoTime()
+      Drive.stop(polite, grace)
+      assert((System.nanoTime() - t0).nanos < grace, "TERM handler must beat the grace period")
+      assert(!polite.isAlive && polite.exitValue() == 0)
+      assert(new String(java.nio.file.Files.readAllBytes(path("marker"))).trim == "bye")
+      // ignores TERM, and the sleep it execs inherits the ignored signal
+      val stubborn = sh(s"""trap '' TERM
+        |echo up > ${path("stubborn.ready")}
+        |exec sleep 60""".stripMargin)
+      awaitFile("stubborn.ready")
+      Thread.sleep(200) // let the exec land
+      val stubbornKids = stubborn.descendants().iterator().asScala.toList
+      val t1 = System.nanoTime()
+      Drive.stop(stubborn, grace)
+      assert((System.nanoTime() - t1).nanos >= grace, "TERM must have been ignored")
+      assert(!stubborn.isAlive)
+      // no orphan: every process either child started is gone
+      val t2 = System.nanoTime()
+      while ((politeKids ++ stubbornKids).exists(_.isAlive) && System.nanoTime() - t2 < 5e9)
+        Thread.sleep(10)
+      assert(!(politeKids ++ stubbornKids).exists(_.isAlive), "orphaned process left behind")
+    } finally Drive.deleteTree(dir.toString)
+  }
+
   test("whenUp retries an IOException and returns the first success") {
     val calls = new AtomicInteger(0)
     val got = Drive.whenUp {

@@ -42,20 +42,17 @@ class ServingKernelSpec extends AnyFunSuite {
       queries: Array[Array[Double]], k: Int, th: Double,
       useSimd: Boolean = true): Map[Int, Seq[(Long, Double, Int)]] = {
     val rep = BatchedServer.FlatReplica(rows, useSimd)
-    // exercise slice boundaries too: union of per-slice top-k must merge
-    // to the same global top-k (the superset argument). Odd slice count
-    // also leaves SIMD-block-unaligned boundaries, covering the scalar
-    // head/tail stitching of the SIMD dispatch.
+    // exercise range boundaries too: three ranges scanned in turn straight
+    // into one heap per query (the inline slicer), each starting at the
+    // floor the ranges before it left. The odd range count also leaves
+    // SIMD-block-unaligned boundaries, covering the scalar head/tail
+    // stitching of the SIMD dispatch.
     val nSlices = 3
-    val cands = (0 until nSlices).flatMap { si =>
-      val lo = rep.n * si / nSlices
-      val hi = rep.n * (si + 1) / nSlices
-      BatchedServer.scoreRange(rep, lo, hi, queries, k, th)
-    }
-    cands.groupBy(_._1).map { case (qi, cs) =>
-      qi -> cs.map { case (_, id, s, u) => (id, s, u) }
-        .sortBy { case (id, s, _) => (-s, id) }.take(k).toSeq
-    }.toMap.withDefaultValue(Seq.empty)
+    val ranges = Array.tabulate(nSlices)(si =>
+      (rep.n * si / nSlices, rep.n * (si + 1) / nSlices))
+    BatchedServer.sliceTopK(Array.fill(queries.length)(new BatchedServer.TopK(k)),
+      ranges, null, nSlices)(BatchedServer.scoreRange(rep, _, _, _, queries, th))
+      .zipWithIndex.map { case (top, qi) => qi -> top.result().toSeq }.toMap
   }
 
   private def check(rows: Array[(Long, Array[Double], Int)],
@@ -134,9 +131,10 @@ class ServingKernelSpec extends AnyFunSuite {
     }
     val unitRep = BatchedServer.FlatReplica(unit, true)
     val rescored = new java.util.concurrent.atomic.LongAdder()
-    val got = BatchedServer.scoreRange(unitRep, 0, unit.length, Array(unit(7)._2), 10, 0.0,
+    val top = Array(new BatchedServer.TopK(10))
+    BatchedServer.scoreRange(unitRep, top, 0, unit.length, Array(unit(7)._2), 0.0,
       rescored = rescored)
-    assert(got.exists(h => h._2 == 7L && h._3 == 1.0))
+    assert(top(0).result().exists(h => h._1 == 7L && h._2 == 1.0))
     assert(rescored.sum() > 0 && rescored.sum() < unit.length / 8,
       s"rescored ${rescored.sum()} of ${unit.length} rows")
   }
@@ -256,8 +254,7 @@ class ServingKernelSpec extends AnyFunSuite {
             if (r >= th) top.offer(r, id, u)
           }
         }
-        qi -> top.drain().toSeq.map { case (s, id, u) => (id, s, u) }
-          .sortBy { case (id, s, _) => (-s, id) }
+        qi -> top.result().toSeq
       }.toMap
       queries.indices.foreach { qi =>
         assert(got(qi) == expect(qi),
@@ -351,26 +348,29 @@ class ServingKernelSpec extends AnyFunSuite {
       Seq(false, true).forall { simd =>
         val rep = BatchedServer.FlatReplica(rows, simd)
         if (rep.tslab != null) simdRows.addAndGet(rep.simdRows.toLong * nq * 2)
-        // independent slices merged at the end (the sliced scan)
-        val sliced = BatchedServer.topKPerQuery(nq, k, pieces.toArray.flatMap {
-          case (lo, hi) => BatchedServer.scoreRange(rep, lo, hi, queries, k, th,
-            rescored = rescored) })
-        // the shared lap: pieces in turn from a random start, each seeded
-        // with the k-th best of the pieces before it
-        val start = rnd.nextInt(pieces.length)
-        val best = Array.fill(nq)(Array.empty[(Long, Double, Int)])
-        (pieces.drop(start) ++ pieces.take(start)).foreach { case (lo, hi) =>
-          val seeds = best.map(b =>
-            if (b.length >= k) b(k - 1)._2 else Double.NegativeInfinity)
-          val tops = BatchedServer.topKPerQuery(nq, k,
-            BatchedServer.scoreRange(rep, lo, hi, queries, k, th, seeds, rescored))
-          queries.indices.foreach(qi => best(qi) = BatchedServer.mergeTopK(best(qi), tops(qi), k))
+        // independent slices, each in its own heaps, offered into one
+        // destination at the end (the sliced scan)
+        val sliced = Array.fill(nq)(new BatchedServer.TopK(k))
+        pieces.foreach { case (lo, hi) =>
+          val part = Array.fill(nq)(new BatchedServer.TopK(k))
+          BatchedServer.scoreRange(rep, part, lo, hi, queries, th, rescored)
+          queries.indices.foreach(qi => sliced(qi).offerAll(part(qi).result()))
         }
+        // the shared lap: pieces in turn from a random start, each scored
+        // into heaps seeded with the lap heap's floor and offered into it
+        val start = rnd.nextInt(pieces.length)
+        val lap = Array.fill(nq)(new BatchedServer.TopK(k))
+        (pieces.drop(start) ++ pieces.take(start)).foreach { case (lo, hi) =>
+          val part = lap.map(t => new BatchedServer.TopK(k, t.floor(Double.NegativeInfinity)))
+          BatchedServer.scoreRange(rep, part, lo, hi, queries, th, rescored)
+          queries.indices.foreach(qi => lap(qi).offerAll(part(qi).result()))
+        }
+        val best = lap.map(_.result())
         queries.indices.forall { qi =>
           val w = want(qi)
-          val ok = bits(sliced(qi).toSeq) == w && bits(best(qi).toSeq) == w
+          val ok = bits(sliced(qi).result().toSeq) == w && bits(best(qi).toSeq) == w
           if (!ok) println(s"simd=$simd dim=$dim n=$n rowExp=$rowExp qExp=$qExp " +
-            s"k=$k th=$th qi=$qi\n sliced=${sliced(qi).toSeq}\n lap=${best(qi).toSeq}\n want=$w")
+            s"k=$k th=$th qi=$qi\n sliced=${sliced(qi).result().toSeq}\n lap=${best(qi).toSeq}\n want=$w")
           ok
         }
       }
@@ -386,20 +386,47 @@ class ServingKernelSpec extends AnyFunSuite {
     }
   }
 
-  test("lap merge: mergeTopK ≡ topKPerQuery over the concatenation") {
+  test("seeded chunk heaps offered into a destination ≡ sort of the union, take k") {
     import org.scalacheck.{Gen, Prop}
-    // few distinct scores and ids, so equal (score, id) pairs occur; the
-    // scores include ±0.0
-    val hit = Gen.zip(Gen.choose(0L, 6L), Gen.oneOf(-1.0, -0.0, 0.0, 0.5, 1.0), Gen.choose(0, 3))
-    def sorted(h: List[(Long, Double, Int)]) =
-      BatchedServer.topKPerQuery(1, h.length, h.map { case (id, s, u) => (0, id, s, u) }.toArray)(0)
-    val prop = Prop.forAll(Gen.listOf(hit), Gen.listOf(hit), Gen.choose(0, 12)) { (a, b, k) =>
-      val (sa, sb) = (sorted(a), sorted(b))
-      val want = BatchedServer.topKPerQuery(1, k,
-        (sa ++ sb).map { case (id, s, u) => (0, id, s, u) })(0)
-      BatchedServer.mergeTopK(sa, sb, k).toSeq.map { case (id, s, u) =>
-        (id, java.lang.Double.doubleToRawLongBits(s), u) } ==
-        want.toSeq.map { case (id, s, u) => (id, java.lang.Double.doubleToRawLongBits(s), u) }
+    // the reference order, written independently of HitOrder
+    def sortTake(hits: Seq[(Long, Double, Int)], k: Int) =
+      hits.sortBy { case (id, s, _) => (-s, id) }.take(k)
+    def bits(hits: Seq[(Long, Double, Int)]) =
+      hits.map { case (id, s, u) => (id, java.lang.Double.doubleToRawLongBits(s), u) }
+    // few distinct scores, so equal scores are common; ±0.0 included
+    val score = Gen.oneOf(-1.0, -0.0, 0.0, 0.25, 0.5, 0.5, 1.0)
+    val prop = Prop.forAll(Gen.listOf(score), Gen.choose(0, 12), Gen.choose(1, 5),
+        Gen.choose(0, 4), Gen.choose(0L, Long.MaxValue)) { (scores, k, nChunks, seedMode, seed) =>
+      val rnd = new scala.util.Random(seed)
+      // unique ids, in random order
+      val ids = rnd.shuffle(scores.indices.map(_.toLong * 3 + 1).toList)
+      val hits = scores.zip(ids).map { case (s, id) => (id, s, rnd.nextInt(4)) }
+      // some hits already sit in the destination (the lap so far); the
+      // rest fall into chunks scanned into heaps of their own
+      val (held, scanned) = hits.splitAt(rnd.nextInt(hits.length + 1))
+      val chunks = scanned.groupBy(_ => rnd.nextInt(nChunks)).values.toSeq
+      val dest = new BatchedServer.TopK(k)
+      held.foreach { case (id, s, u) => dest.offer(s, id, u) }
+      // the chunk seed: the destination's floor (what the slicer uses),
+      // or on, just above or just below the k-th score of the union
+      val kth = sortTake(hits, k).lastOption.map(_._2).getOrElse(0.0)
+      val seedScore = seedMode match {
+        case 0 => dest.floor(Double.NegativeInfinity)
+        case 1 => kth
+        case 2 => Math.nextUp(kth)
+        case 3 => Math.nextDown(kth)
+        case _ => Double.NegativeInfinity
+      }
+      chunks.foreach { chunk =>
+        val part = new BatchedServer.TopK(k, seedScore)
+        chunk.foreach { case (id, s, u) => part.offer(s, id, u) }
+        dest.offerAll(part.result())
+      }
+      val got = bits(dest.result().toSeq)
+      // a seeded heap drops what scores below its seed; nothing else
+      val want = bits(sortTake(held ++ scanned.filter(_._2 >= seedScore), k))
+      // and a seed at or below the k-th score drops nothing that places
+      got == want && (!(seedScore <= kth) || got == bits(sortTake(hits, k)))
     }
     val res = org.scalacheck.Test.check(
       org.scalacheck.Test.Parameters.default.withMinSuccessfulTests(500), prop)
