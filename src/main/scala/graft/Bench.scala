@@ -106,7 +106,7 @@ object Bench {
     // per partition; at fixture scale (2k rows) 16 tasks are scheduling-
     // dominated — 8 keeps per-flush fan-out and cuts per-job overhead
     val pointsPar = graft.operators.Collection.load(spark, sfDir)
-      .repartition(sys.env.getOrElse("SPARK_GRAFT_SRV_PARTS", "8").toInt).cache()
+      .repartition(8).cache()
     pointsPar.count()
     // One timed drive of a VectorServer (batched or sharded): `threads`
     // clients, `perThread` requests each; open-loop fires the whole queue

@@ -23,18 +23,20 @@ import org.apache.spark.storage.StorageLevel
   *
   * Three latency levers beyond plain batching:
   *
-  *  1. '''Plan-template reuse.''' The collection is pinned ONCE at
-  *     construction as an in-memory RDD of `(id, embedding, user_id)` —
-  *     the analyzed/optimized Catalyst plan runs exactly once to
-  *     materialize it. Every flush is then a single `mapPartitions`
-  *     stage over the pinned template with the query vectors as a tiny
-  *     broadcast: no per-flush analysis/optimization, no shuffle, no
-  *     second stage (the old shape re-planned a broadcast-join + window
-  *     job per flush). The per-partition kernel reproduces the engine's
-  *     scoring bit-for-bit: the same left-to-right dot product as the
-  *     codegen [[graft.plans.DotProductD]] and the same
-  *     `BigDecimal.valueOf(HALF_UP)` 6dp rounding as Spark's `round` —
-  *     parity is pinned by the batched≡solo ApiSpec. This is the one
+  *  1. '''Plan-template reuse.''' The collection is pinned ONCE: the
+  *     analyzed/optimized Catalyst plan runs exactly once to materialize
+  *     it. On the job tier each partition is re-pinned as one
+  *     [[BatchedServer.FlatReplica]] (the replica tier's own layout), and
+  *     every flush is a single `mapPartitions` stage over those pinned
+  *     partitions with the query vectors riding in the task closure: no
+  *     per-flush analysis/optimization, no shuffle, no second stage (the
+  *     old shape re-planned a broadcast-join + window job per flush).
+  *     Each partition scores with the same kernels as the replica
+  *     ([[BatchedServer.scoreRange]], [[BatchedServer.scoreRows]]), which
+  *     reproduce the engine's scoring bit-for-bit: the same left-to-right
+  *     dot product as the codegen [[graft.plans.DotProductD]] and the
+  *     same `BigDecimal.valueOf(HALF_UP)` 6dp rounding as Spark's `round`
+  *     — parity is pinned by the batched≡solo ApiSpec. This is the one
   *     sanctioned per-partition-imperative hot path (like mmrRerank's
   *     bounded greedy loop): per-query top-k selection over a pinned
   *     in-memory shard is genuinely imperative per-partition logic, and
@@ -71,11 +73,12 @@ import org.apache.spark.storage.StorageLevel
   *     the server degrades to the pinned-partition batched job, which is
   *     the 100 TB path (the shard then IS the executor fleet's memory).
   *
-  * ONE kernel set, two hosts: every scan kernel lives in `object
-  * BatchedServer`, and this server and the cross-process
-  * [[ShardWorker]] both call it (int8 rescore and row-list scoring read
-  * floats through [[BatchedServer.FloatRows]]: the heap replica here,
-  * the mmapped float slab there; every sliced scan goes through
+  * ONE kernel set for every host: every scan kernel lives in `object
+  * BatchedServer`, and this server (its replica and its job tier's
+  * pinned partitions) and the cross-process [[ShardWorker]] all call it
+  * (int8 rescore and row-list scoring read floats through
+  * [[BatchedServer.FloatRows]]: a heap [[BatchedServer.FlatReplica]]
+  * here, the mmapped float slab there; every sliced scan goes through
   * [[BatchedServer.sliceTopK]], and every kernel offers its hits into
   * per-query [[BatchedServer.TopK]] heaps ranked by
   * [[BatchedServer.HitOrder]]). "postings" = the rows a user filter
@@ -85,7 +88,8 @@ import org.apache.spark.storage.StorageLevel
   * host      family  unfiltered                  filtered
   * replica   exact   scoreRange                  scoreRows(postings)
   * replica   int8    int8TwoPhase, heap floats   scoreRows(postings)
-  * job tier  exact   per-partition Spark job     the same job, filtered
+  * job tier  exact   scoreRange per pinned       scoreRows(postings) per
+  *                   partition                   partition
   * worker    exact   scoreRange via the shared   scoreRows(postings)
   *                   lap
   * worker    int8    int8TwoPhase, mmap floats   scoreRows(postings), mmap floats
@@ -139,6 +143,11 @@ final class BatchedServer(
     .as[(Long, Array[Double], Int)]
     .rdd
     .persist(StorageLevel.MEMORY_AND_DISK)
+
+  /** Job tier only: the template re-pinned as one
+    * [[BatchedServer.FlatReplica]] per partition, built by the replica
+    * decision (null on the replica tier). */
+  @volatile private var jobParts: org.apache.spark.rdd.RDD[BatchedServer.FlatReplica] = null
 
   /** Test seam: (startNanos, endNanos) of recent completed flushes — the
     * pipelining spec asserts two flush intervals overlap in time. Bounded
@@ -316,10 +325,19 @@ final class BatchedServer(
           gen = g
           // the replica owns serving from here — free the pinned blocks
           template.unpersist(blocking = false)
-        } else
-          // job tier: per-flush Spark job with exact scoring
+        } else {
+          // job tier: re-pin each partition in the replica's layout, so a
+          // flush scores it with the replica's own kernels (jobTopK)
+          val parts = template
+            .mapPartitions(rows => Iterator.single(BatchedServer.FlatReplica(rows.toArray)))
+            .persist(StorageLevel.MEMORY_AND_DISK)
+          try parts.count()
+          catch { case e: Throwable => parts.unpersist(blocking = false); throw e }
+          template.unpersist(blocking = false)
+          jobParts = parts
           decisionVar = ServingDecision("exact_job", 0,
             recallTarget.getOrElse(-1.0), 1.0)
+        }
         replicaDecided = true
       }
     }
@@ -445,9 +463,10 @@ final class BatchedServer(
     * is 1.0 on both families. Matched sets over
     * [[BatchedServer.DirectMaxCells]] of work slice across the score
     * pool; smaller ones score on the caller thread. Job tier: one
-    * single-stage filtered map-only job over the pinned template (the
-    * per-request dispatch floor applies — the replica and cross-process
-    * tiers are the latency path, as for unfiltered). */
+    * single-stage map-only job in which each pinned partition scores its
+    * own postings the same way (the per-request dispatch floor applies —
+    * the replica and cross-process tiers are the latency path, as for
+    * unfiltered). */
   def submitFiltered(qemb: Seq[Double], userIds: Seq[Int]): Future[Array[Row]] = {
     require(qemb != null && qemb.nonEmpty,
       "empty embedding (min_items=1)")
@@ -469,7 +488,7 @@ final class BatchedServer(
             Array((0, rowIdx.length)), if (inline) null else scorePool,
             scoreParallelism)(
             BatchedServer.scoreRows(rep, rowIdx, _, _, _, Array(q), threshold))(0).result()
-        } else jobTopK(Array(q), userIds.toSet)(0)
+        } else jobTopK(Array(q), userIds.toArray)(0)
       metrics.recordRequest(System.nanoTime() - t0, success = true)
       Future.successful(BatchedServer.toRows(hits))
     } catch {
@@ -495,45 +514,25 @@ final class BatchedServer(
         BatchedServer.scoreRange(rep, _, _, _, queries, threshold)).map(_.result())
   }
 
-  /** Job tier: one single-stage map-only job over the pinned template.
-    * Each partition scores its rows into per-query heaps, which are
-    * offered into per-query heaps on the driver; `users` (null = no
-    * filter) keeps only the rows of those users. */
+  /** Job tier: one single-stage map-only job over the pinned partitions.
+    * Each partition scores into per-query heaps with [[BatchedServer.scoreRange]],
+    * or with [[BatchedServer.scoreRows]] over its postings of `users`
+    * (null = no filter); the heaps merge on the driver. */
   private def jobTopK(queries: Array[Array[Double]],
-      users: Set[Int]): Array[Array[BatchedServer.Hit]] = {
+      users: Array[Int]): Array[Array[BatchedServer.Hit]] = {
     val kk = k
     val th = threshold
     // the query block rides in the task closure: Spark broadcasts the
     // task binary per stage anyway, so an explicit Broadcast would only
     // add create/unpersist latency to every flush
-    val parts = template.mapPartitions { rows =>
-      val nq = queries.length
-      val tops = Array.fill(nq)(new BatchedServer.TopK(kk))
-      val scratch = new Array[Double](2)
-      while (rows.hasNext) {
-        val (id, emb, user) = rows.next()
-        // a row outside the user filter skips every query
-        var qi = if (users == null || users.contains(user)) 0 else nq
-        while (qi < nq) {
-          // same fast-gate + rounding gate as the replica kernel (see
-          // scoreRange): provably output-identical — passers recompute
-          // the exact left-to-right dot before rounding. Slack scales
-          // with Σ|aᵢbᵢ| (gateSlack) so the proof holds for unnormalized
-          // magnitudes too; the negated comparison routes NaN/∞ to the
-          // exact recompute.
-          BatchedServer.dotFastAbs(emb, queries(qi), scratch)
-          val top = tops(qi)
-          val slack = BatchedServer.gateSlack(
-            math.min(emb.length, queries(qi).length), scratch(1))
-          if (!(scratch(0) < top.floor(th) - slack)) {
-            val s = BatchedServer.dotRaw(emb, queries(qi))
-            val r = graft.plans.Num.round6(s)
-            if (r >= th) top.offer(r, id, user)
-          }
-          qi += 1
-        }
+    val parts = jobParts.map { rep =>
+      val tops = Array.fill(queries.length)(new BatchedServer.TopK(kk))
+      if (users == null) BatchedServer.scoreRange(rep, tops, 0, rep.n, queries, th)
+      else {
+        val rowIdx = rep.postings.rowsFor(users)
+        BatchedServer.scoreRows(rep, rowIdx, tops, 0, rowIdx.length, queries, th)
       }
-      Iterator.single(tops.map(_.result()))
+      tops.map(_.result())
     }.collect()
     val merged = Array.fill(queries.length)(new BatchedServer.TopK(kk))
     parts.foreach(p => p.indices.foreach(qi => merged(qi).offerAll(p(qi))))
@@ -627,6 +626,7 @@ final class BatchedServer(
       leftover = queue.poll()
     }
     template.unpersist(blocking = false)
+    if (jobParts != null) jobParts.unpersist(blocking = false)
   }
 }
 
@@ -926,13 +926,16 @@ object BatchedServer {
     * of [[scoreRange]]'s certified gate. Memory grows ×1.5 (the replica
     * is budget-capped at 2^18 rows ≈ 128 MB at dim 64, so the pair stays
     * ≤ ~192 MB); the f64 slab is kept because the exact rescore, the
-    * tail/ragged paths and the job tier read row-major. */
+    * tail/ragged paths and [[scoreRows]] read row-major.
+    *
+    * Serializable: the job tier pins one replica per partition
+    * `MEMORY_AND_DISK`, and a block that spills is serialized. */
   final class FlatReplica(
       val n: Int, val ids: Array[Long], val users: Array[Int],
       val offs: Array[Int], val embs: Array[Double],
       val tslab: Array[Float], val tnorms: Array[Float], val tlanes: Int,
       val uniformDim: Int)
-      extends FloatRows {
+      extends FloatRows with Serializable {
     def dot(row: Int, q: Array[Double]): Double = {
       val b0 = offs(row)
       val nd = math.min(offs(row + 1) - b0, q.length)
@@ -945,8 +948,9 @@ object BatchedServer {
     /** Rows covered by full SIMD blocks (0 when the kernel is off). */
     def simdRows: Int = if (tslab == null) 0 else (n / tlanes) * tlanes
     /** Payload index over `users`, built on first FILTERED request (lazy
-      * val — thread-safe once): unfiltered serving pays nothing for it. */
-    lazy val postings: UserPostings = UserPostings(users)
+      * val — thread-safe once): unfiltered serving pays nothing for it.
+      * Not serialized: a deserialized copy rebuilds it on first use. */
+    @transient lazy val postings: UserPostings = UserPostings(users)
   }
 
   /** Row postings by user_id — the serving tier's payload index (the
@@ -1117,8 +1121,8 @@ object BatchedServer {
   /** Raw serving dot product: same left-to-right accumulation as the
     * codegen [[graft.plans.DotProductD]]. The 6dp HALF_UP round
     * ([[graft.plans.Num.round6]]) is applied by the callers BEHIND the
-    * rounding gate (see [[scoreRange]]) — replica tier and job tier
-    * share accumulation order, rounding, and gate bit-for-bit. */
+    * rounding gate (see [[scoreRange]]); every serving kernel
+    * accumulates in this order. */
   private[graft] def dotRaw(emb: Array[Double], q: Array[Double]): Double = {
     val n = math.min(emb.length, q.length)
     var s = 0.0d
@@ -1126,55 +1130,6 @@ object BatchedServer {
     while (d < n) { s += emb(d) * q(d); d += 1 }
     s
   }
-
-  /** Job-tier gate pass: one scan computing BOTH the reassociated fast
-    * dot and Σ|aᵢbᵢ| (written to `out(0)`/`out(1)`), so the gate slack
-    * can scale with the data's actual magnitude instead of assuming
-    * near-unit norms. The fixed 1e-6 slack alone is only valid when
-    * Σ|aᵢbᵢ| ≲ 1 (the L2-normalized serving case); for unnormalized
-    * embeddings with products around 1e8+ the reassociation error
-    * (n−1)·ε·Σ|aᵢbᵢ| exceeds it and a near-floor row could be wrongly
-    * gated out — diverging from the exact replica kernel (ADVICE r10).
-    * [[gateSlack]] restores the proof for any magnitude. */
-  private[graft] def dotFastAbs(
-      emb: Array[Double], q: Array[Double], out: Array[Double]): Unit = {
-    val n = math.min(emb.length, q.length)
-    var s0 = 0.0d; var s1 = 0.0d; var s2 = 0.0d; var s3 = 0.0d
-    var s4 = 0.0d; var s5 = 0.0d; var s6 = 0.0d; var s7 = 0.0d
-    var a0 = 0.0d; var a1 = 0.0d; var a2 = 0.0d; var a3 = 0.0d
-    val lim8 = n - (n & 7)
-    var d = 0
-    while (d < lim8) {
-      val p0 = emb(d) * q(d);         val p1 = emb(d + 1) * q(d + 1)
-      val p2 = emb(d + 2) * q(d + 2); val p3 = emb(d + 3) * q(d + 3)
-      val p4 = emb(d + 4) * q(d + 4); val p5 = emb(d + 5) * q(d + 5)
-      val p6 = emb(d + 6) * q(d + 6); val p7 = emb(d + 7) * q(d + 7)
-      s0 += p0; s1 += p1; s2 += p2; s3 += p3
-      s4 += p4; s5 += p5; s6 += p6; s7 += p7
-      a0 += Math.abs(p0) + Math.abs(p1)
-      a1 += Math.abs(p2) + Math.abs(p3)
-      a2 += Math.abs(p4) + Math.abs(p5)
-      a3 += Math.abs(p6) + Math.abs(p7)
-      d += 8
-    }
-    while (d < n) {
-      val p = emb(d) * q(d)
-      s0 += p; a0 += Math.abs(p)
-      d += 1
-    }
-    out(0) = ((s0 + s1) + (s2 + s3)) + ((s4 + s5) + (s6 + s7))
-    out(1) = (a0 + a1) + (a2 + a3)
-  }
-
-  /** Gate slack sized to the row: the 1e-6 rounding headroom plus a
-    * reassociation bound 4·n·ε·Σ|aᵢbᵢ| — each summation order errs by
-    * ≤ (n−1)·ε·Σ|aᵢbᵢ| vs the exact sum, the factor 4 covers both
-    * orders twice over (absorbing the error in the Σ|aᵢbᵢ| estimate
-    * itself). Callers must gate with the NEGATED comparison
-    * `!(fast < floor − slack)` so a NaN/∞ slack (overflowed products)
-    * falls through to the exact recompute rather than skipping a row. */
-  private[graft] def gateSlack(n: Int, absSum: Double): Double =
-    1e-6 + 4.0 * n * 1.1e-16 * absSum
 
   /** Certified bound on |f32 block dot − exact f64 dot| for a row of dim
     * `dim` in a block whose largest row norm is ≤ `blockNorm`, against a
@@ -1196,8 +1151,8 @@ object BatchedServer {
     * whole-replica kernel of the direct tier). Every score that reaches
     * a heap is the same left-to-right accumulation over
     * `min(rowLen, queryLen)` dims as [[dotRaw]] with the same 6dp HALF_UP
-    * round ([[graft.plans.Num.round6]]) — bit-for-bit the job-tier
-    * kernel, just reading the flat slab. The rounding gate starts at each
+    * round ([[graft.plans.Num.round6]]) as the engine's codegen
+    * scoring. The rounding gate starts at each
     * heap's [[TopK.floor]], so a heap that already holds hits from
     * outside `[lo, hi)` (the shared lap's earlier pieces), or was seeded
     * with such a floor, rounds and offers only rows that can still
@@ -1889,7 +1844,7 @@ object BatchedServer {
   * wave-batching flusher and scores on its own pool, so a request costs
   * max-over-shards(one replica flush) + an N×k driver merge — the
   * dispatch floor of the Spark-job tier never appears. Each sub-request
-  * is answered from heap-resident slabs with the fast-gated kernel.
+  * is answered from heap-resident slabs with the exact range kernel.
   */
 final class ShardedServer private (
     private[graft] val servers: IndexedSeq[BatchedServer],

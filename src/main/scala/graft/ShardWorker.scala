@@ -60,7 +60,8 @@ import java.nio.file.{Paths, StandardOpenOption}
   * host      family  unfiltered                  filtered
   * replica   exact   scoreRange (f32+rescore)    scoreRows(postings)
   * replica   int8    int8TwoPhase, heap floats   scoreRows(postings)
-  * job tier  exact   per-partition Spark job     the same job, filtered
+  * job tier  exact   scoreRange (f32+rescore)    scoreRows(postings) per
+  *                   per pinned partition        partition
   * worker    exact   scoreRange (f32+rescore)    scoreRows(postings)
   *                   via the shared lap
   * worker    int8    int8TwoPhase, mmap floats   scoreRows(postings), mmap floats

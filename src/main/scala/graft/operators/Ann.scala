@@ -44,6 +44,12 @@ object Ann {
     (org.apache.spark.sql.SparkSession, String),
     org.apache.spark.sql.SparkSession]()
 
+  /** [[graphRefine]]'s clone of each parent session, with constraint
+    * propagation off: created once, never mutated afterwards (the
+    * [[loopSessions]] discipline). */
+  private val refineSessions = new java.util.concurrent.ConcurrentHashMap[
+    org.apache.spark.sql.SparkSession, org.apache.spark.sql.SparkSession]()
+
   /** Assign each point to its nearest centroid (max 6dp-rounded cosine,
     * smallest cid as tiebreak). Returns points + `cid`.
     *
@@ -250,13 +256,6 @@ object Ann {
     val pts = points.select(col("id"), col("embedding"))
       .repartition(spark.sparkContext.defaultParallelism)
       .localCheckpoint()
-    val dbg = sys.env.contains("GRAFT_KMPP_DEBUG")
-    var t0 = System.nanoTime()
-    def mark(tag: String): Unit = if (dbg) {
-      val t = System.nanoTime()
-      println(f"kmpp/$tag: ${(t - t0) / 1e9}%.2f s")
-      t0 = t
-    }
     def assignCol(cents: IndexedSeq[Array[Double]]): Column =
       graft.plans.VectorExpressions.nearestCentroid(
         col("embedding"), cents.indices.map(_.toLong), cents.map(_.toSeq))
@@ -293,7 +292,6 @@ object Ann {
             .localCheckpoint()
         }
       }
-      mark(s"seed_round_$r(c=${cand.length})")
     }
     // the reduction below picks min(k, |cand|) seeds; a pool smaller than
     // k would silently return fewer centroids than the documented
@@ -306,7 +304,6 @@ object Ann {
     // 2. weight candidates by the points they own
     val weights = pts.withColumn("_c", assignCol(cand))
       .groupBy("_c").count().as[(Long, Long)].collect().toMap
-    mark(s"weights(c=${cand.length})")
     val w = cand.indices.map(i => weights.getOrElse(i.toLong, 0L).toDouble)
     // 3. greedy weighted D² farthest-point reduction to k seeds
     def d2(a: Array[Double], b: Array[Double]): Double = {
@@ -353,7 +350,6 @@ object Ann {
     }
     var centers: IndexedSeq[Array[Double]] =
       chosen.map(cand(_)).toIndexedSeq
-    mark("reduce")
     // 4. deterministic distributed Lloyd refinement (exact decimal sums)
     def l2norm(v: Array[Double]): Array[Double] = {
       var s = 0.0; var i = 0
@@ -448,7 +444,6 @@ object Ann {
         }
       }
     }
-    mark("lloyd_total")
     centers.indices.map(i => (i.toLong, centers(i).toSeq))
       .toDF("cid", "ce")
   }
@@ -1303,27 +1298,30 @@ object Ann {
       rounds: Int = 2, maxDegree: Int = 12,
       bridges: Option[DataFrame] = None): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // Constraint propagation is OFF for the duration of the build (an
-    // optimizer-only inference; results are unaffected): every round
-    // self-joins and self-unions checkpointed frames, and a
-    // localCheckpoint PRESERVES its plan's constraints in the LogicalRDD
-    // — after the analyzer deduplicates the self-join's attribute ids
-    // those pinned constraints reference ids the rewrite map no longer
-    // contains and Union/Join constraint rewriting throws key-not-found.
-    // Every frame the caller receives is built (and checkpointed) while
-    // the flag is off, so no stale constraint escapes the scope.
+    import org.apache.spark.sql.GraftBridge
+    // The rounds run on a clone of the caller's session with constraint
+    // propagation OFF (an optimizer-only inference; results are
+    // unaffected): every round self-joins and self-unions checkpointed
+    // frames, and a localCheckpoint PRESERVES its plan's constraints in
+    // the LogicalRDD — after the analyzer deduplicates the self-join's
+    // attribute ids those pinned constraints reference ids the rewrite
+    // map no longer contains and Union/Join constraint rewriting throws
+    // key-not-found. Every frame is built (and checkpointed) on the
+    // clone, so no stale constraint escapes it; the caller's session
+    // conf is never touched (a concurrent query on it plans as before).
     val sess = points.sparkSession
-    val ckey = "spark.sql.constraintPropagation.enabled"
-    val prev = sess.conf.getOption(ckey)
-    sess.conf.set(ckey, "false")
-    try {
-    val store = points.select(col("id"), col("embedding"))
+    val rs = refineSessions.computeIfAbsent(sess, _ => {
+      val c = GraftBridge.cloneSession(sess)
+      c.conf.set("spark.sql.constraintPropagation.enabled", "false")
+      c
+    })
+    val store = GraftBridge.onSession(rs, points.select(col("id"), col("embedding")))
     val w = Window.partitionBy("src").orderBy(desc("score"), asc("dst"))
-    val br = bridges.map(b =>
+    val br = bridges.map(GraftBridge.onSession(rs, _)).map(b =>
       b.select(col("src"), col("dst"))
         .unionByName(b.select(col("dst").as("src"), col("src").as("dst")))
         .distinct().localCheckpoint())
-    var g = graph.select(col("src"), col("dst"), col("score"))
+    var g = GraftBridge.onSession(rs, graph.select(col("src"), col("dst"), col("score")))
     for (_ <- 1 to rounds) {
       // checkpointed: the frame self-joins (2-hop) and self-unions
       // (symmetrize) below, and Union/Join constraint rewriting over
@@ -1363,13 +1361,7 @@ object Ann {
         .select(col("src"), col("dst"), col("score"))
         .localCheckpoint()
     }
-    g
-    } finally {
-      prev match {
-        case Some(v) => sess.conf.set(ckey, v)
-        case None    => sess.conf.unset(ckey)
-      }
-    }
+    GraftBridge.onSession(sess, g)
   }
 
   /** Cross-cell candidate bridges for [[graphRefine]]: each point paired

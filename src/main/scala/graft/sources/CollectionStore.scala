@@ -418,10 +418,10 @@ object CollectionStore {
     *    exact), and the rev sidecar is patched from the exact changed
     *    edge set (old-bucket rows minus removed plus added).
     *
-    * A store without the rev sidecar (or a call without seeds) takes the
-    * legacy whole-table path — same output, spec-asserted. Entry seeds
-    * must not be deleted (they are the descent's upper tier — rebuild to
-    * retire seeds).
+    * The store must carry the rev sidecar (a store without it fails with
+    * a `require`), and a batch with adds needs entry seeds (the
+    * descent's `require`). Entry seeds must not be deleted (they are the
+    * descent's upper tier — rebuild to retire seeds).
     *
     * `maxDegree` MUST be ≥ the cap the sidecar was built with (normally
     * equal): the untouched-buckets-stay-byte-identical invariant rests
@@ -450,6 +450,9 @@ object CollectionStore {
     require(fs.exists(new Path(graphPath)),
       s"mergeGraphIndexed: no graph sidecar at $graphPath — write it via " +
         "saveGraphSidecar before incremental merges")
+    require(fs.exists(new Path(revPath)),
+      s"mergeGraphIndexed: no reverse graph sidecar at $revPath — rewrite " +
+        "the graph via saveGraphSidecar before incremental merges")
     val adds = adds0.select("id", "embedding", "user_id").localCheckpoint(true)
     val doomed = deletes.map(_.select("id")).fold(adds.select("id"))(d =>
       adds.select("id").unionByName(d)).distinct().localCheckpoint(true)
@@ -463,7 +466,6 @@ object CollectionStore {
     def bucketsOf(ids: Iterable[Long]): Seq[Int] =
       ids.map(i => java.lang.Math.floorMod(i, nBuckets.toLong).toInt)
         .toSeq.distinct.sorted
-    def inBuckets(bs: Seq[Int]) = col("bucket").isin(bs.map(Int.box): _*)
     def inIds(c: org.apache.spark.sql.Column, ids: Seq[Long]) =
       c.isin(ids.map(Long.box): _*)
     // Overwrite `bs` bucket dirs of a partitioned table from `rows`
@@ -483,197 +485,117 @@ object CollectionStore {
       }
     }
 
-    if (fs.exists(new Path(revPath)) && entryCids.nonEmpty) {
-      // ---- PRUNED PATH: O(affected buckets), never O(|graph|) ----
-      // Read ONLY the named bucket dirs (basePath keeps the partition
-      // column): a plain read of the whole table root lists every
-      // bucket dir per call, which at hundreds of buckets × one read
-      // per descent hop dominates the batch — listing is part of the
-      // O(affected) contract, not just bytes. One root listStatus per
-      // table caches which buckets exist.
-      def existingBuckets(tablePath: String): Set[Int] =
-        fs.listStatus(new Path(tablePath)).map(_.getPath.getName)
-          .filter(_.startsWith("bucket="))
-          .map(_.stripPrefix("bucket=").toInt).toSet
-      val bucketCache =
-        scala.collection.mutable.Map.empty[String, Set[Int]]
-      def readBuckets(tablePath: String, bs: Seq[Int]): DataFrame = {
-        val existing = bucketCache.getOrElseUpdate(
-          tablePath, existingBuckets(tablePath))
-        val dirs = bs.filter(existing).map(b => s"$tablePath/bucket=$b")
-        if (dirs.isEmpty)
-          spark.read.parquet(tablePath).filter(lit(false))
-        else spark.read.option("basePath", tablePath).parquet(dirs: _*)
-      }
-      // phase timings for the gmerge scaling probe (env-gated, no-op
-      // otherwise)
-      var _t = System.nanoTime()
-      def mark(tag: String): Unit = {
-        if (sys.env.contains("GRAFT_GMERGE_DEBUG"))
-          println(f"GMERGE $tag: ${(System.nanoTime() - _t) / 1e9}%.2f s")
-        _t = System.nanoTime()
-      }
-      val incidentSrcs =
-        if (doomedIds.isEmpty) Array.empty[Long]
-        else readBuckets(revPath, bucketsOf(doomedIds))
-          .filter(inIds(col("dst"), doomedIds))
-          .select("src").distinct().collect().map(_.getLong(0))
-      // per-hop pruned suppliers for the insert descent: collect the
-      // hop's ids (CDC-batch bounded), read only their buckets with the
-      // IN list pushed to the scan; doomed rows/edges are filtered so
-      // the descent sees exactly (store \ doomed, graph \ doomed-edges)
-      def notDoomedEdges(df: DataFrame): DataFrame =
-        if (doomedIds.isEmpty) df
-        else df.filter(!inIds(col("src"), doomedIds) &&
-          !inIds(col("dst"), doomedIds))
-      def storeFor(ids: DataFrame): DataFrame = {
-        val need = ids.select("id").distinct()
-          .collect().map(_.getLong(0)).toSeq.filterNot(doomedIds.toSet)
-        readBuckets(path, bucketsOf(need))
-          .filter(inIds(col("id"), need))
-          .drop("bucket")
-      }
-      def graphFor(frontier: DataFrame): DataFrame = {
-        val ids = frontier.select("id").distinct()
-          .collect().map(_.getLong(0)).toSeq
-        notDoomedEdges(readBuckets(graphPath, bucketsOf(ids))
-          .filter(inIds(col("src"), ids))
-          .drop("bucket"))
-      }
-      // PRE-CAP neighbor selection (ADVICE r10): the affected srcs on
-      // insert are the new ids plus every chosen candidate, derived
-      // before the per-src degree re-cap
-      mark("incident")
-      val nn = if (!hasAdds) null
-        else Ann.graphInsertNnVia(storeFor, graphFor, adds, graphK, beam,
-          hops, entryCids, entryCents).localCheckpoint(true)
-      mark("descent")
-      val nbrSrcs =
-        if (!hasAdds) Array.empty[Long]
-        else nn.select("id").distinct().collect().map(_.getLong(0))
-      val affectedSrcs = (incidentSrcs ++ doomedIds ++ addIds ++ nbrSrcs).distinct
-      val srcBuckets = bucketsOf(affectedSrcs)
-      if (srcBuckets.nonEmpty) {
-        // the affected src-buckets, materialized before their overwrite
-        // (read-then-overwrite rule); srcs merely SHARING a bucket with
-        // an affected src get recapped too — unchanged by the invariant
-        // checked below, so rewriting them is exact
-        val gAff = readBuckets(graphPath, srcBuckets)
-          .drop("bucket").localCheckpoint(true)
-        val builtRow = gAff.groupBy("src")
-          .agg(count(lit(1)).as("d")).agg(max(col("d"))).head()
-        val builtDegree = if (builtRow.isNullAt(0)) 0L else builtRow.getLong(0)
-        require(maxDegree >= builtDegree,
-          s"mergeGraphIndexed: maxDegree ($maxDegree) is tighter than the " +
-            s"sidecar's observed max out-degree ($builtDegree) — pass the " +
-            "build-time cap (or rebuild the graph to re-cap globally)")
-        mark("gaff_read")
-        val g1Aff = Ann.graphDelete(gAff, doomed)
-        val g2Aff = (if (!hasAdds) g1Aff
-          else Ann.graphMergeNn(g1Aff, nn, maxDegree)).localCheckpoint(true)
-        mark("recap")
-        overwriteBuckets(graphPath,
-          g2Aff.withColumn("bucket",
-            pmod(col("src"), lit(nBuckets.toLong)).cast("int")),
-          srcBuckets, Seq("src", "dst"))
-        // rev sidecar: patch exactly the changed edges — old rows of the
-        // touched dst-buckets minus removed plus added. removed/added
-        // come from the before/after of the recapped region, which holds
-        // every changed edge (all changes have srcs in affected buckets)
-        mark("src_write")
-        val removed = gAff.except(g2Aff).localCheckpoint(true)
-        val added = g2Aff.except(gAff).localCheckpoint(true)
-        val dstBuckets = removed.select("dst").unionByName(added.select("dst"))
-          .select(pmod(col("dst"), lit(nBuckets.toLong)).cast("int").as("b"))
-          .distinct().collect().map(_.getInt(0)).toSeq.sorted
-        mark("except")
-        if (dstBuckets.nonEmpty) {
-          val revAff = readBuckets(revPath, dstBuckets)
-            .drop("bucket").localCheckpoint(true)
-          val revNew = revAff
-            .join(removed.select("src", "dst"), Seq("src", "dst"), "left_anti")
-            .unionByName(added)
-            .withColumn("bucket",
-              pmod(col("dst"), lit(nBuckets.toLong)).cast("int"))
-            .localCheckpoint(true)
-          overwriteBuckets(revPath, revNew, dstBuckets, Seq("dst", "src"))
-        }
-      }
-      mark("rev_patch")
-      // store side: LWW + tombstones against only the batch's buckets,
-      // read pruned (legacy materializes the whole store first)
-      val storeBuckets = bucketsOf(doomedIds ++ addIds)
-      if (storeBuckets.nonEmpty) {
-        val sAff = readBuckets(path, storeBuckets)
-          .drop("bucket").localCheckpoint(true)
-        val bucketed = sAff
-          .join(doomed, Seq("id"), "left_anti")
-          .unionByName(adds)
-          .withColumn("bucket",
-            pmod(col("id"), lit(nBuckets.toLong)).cast("int"))
-          .localCheckpoint(true)
-        overwriteBuckets(path, bucketed, storeBuckets, Seq("id"))
-      }
-      return
+    // O(affected buckets), never O(|graph|). Read ONLY the named bucket
+    // dirs (basePath keeps the partition column): a plain read of the
+    // whole table root lists every bucket dir per call, which at
+    // hundreds of buckets × one read per descent hop dominates the batch
+    // — listing is part of the O(affected) contract, not just bytes. One
+    // root listStatus per table caches which buckets exist.
+    def existingBuckets(tablePath: String): Set[Int] =
+      fs.listStatus(new Path(tablePath)).map(_.getPath.getName)
+        .filter(_.startsWith("bucket="))
+        .map(_.stripPrefix("bucket=").toInt).toSet
+    val bucketCache =
+      scala.collection.mutable.Map.empty[String, Set[Int]]
+    def readBuckets(tablePath: String, bs: Seq[Int]): DataFrame = {
+      val existing = bucketCache.getOrElseUpdate(
+        tablePath, existingBuckets(tablePath))
+      val dirs = bs.filter(existing).map(b => s"$tablePath/bucket=$b")
+      if (dirs.isEmpty)
+        spark.read.parquet(tablePath).filter(lit(false))
+      else spark.read.option("basePath", tablePath).parquet(dirs: _*)
     }
-
-    // ---- LEGACY PATH (no rev sidecar, or no entry seeds): whole-table
-    // read, bucket-pruned WRITE only — kept for stores written before
-    // the reverse sidecar existed; output identical (spec-asserted) ----
-    // localCheckpoint(true) cuts every lineage back to the paths being
-    // overwritten below
-    val store = spark.read.parquet(path).drop("bucket").localCheckpoint(true)
-    val graph = spark.read.parquet(graphPath).drop("bucket")
-      .localCheckpoint(true)
-    // srcs whose edge lists shrink on delete: the doomed ids themselves
-    // plus every src holding an edge INTO a doomed id
     val incidentSrcs =
       if (doomedIds.isEmpty) Array.empty[Long]
-      else graph.filter(col("src").isin(doomedIds.map(Long.box): _*) ||
-          col("dst").isin(doomedIds.map(Long.box): _*))
+      else readBuckets(revPath, bucketsOf(doomedIds))
+        .filter(inIds(col("dst"), doomedIds))
         .select("src").distinct().collect().map(_.getLong(0))
-    // the untouched-bucket invariant (scaladoc): a cap tighter than the
-    // sidecar's build cap would trim every over-cap src globally while
-    // only affected buckets rewrite — corrupting unpersisted lists
-    val builtDegree = graph.groupBy("src")
-      .agg(count(lit(1)).as("d")).agg(max(col("d"))).head().getLong(0)
-    require(maxDegree >= builtDegree,
-      s"mergeGraphIndexed: maxDegree ($maxDegree) is tighter than the " +
-        s"sidecar's observed max out-degree ($builtDegree) — pass the " +
-        "build-time cap (or rebuild the graph to re-cap globally)")
-    val g1 = Ann.graphDelete(graph, doomed)
-    val storeSurv = store.join(doomed, Seq("id"), "left_anti")
-    // neighbor selection runs ONCE (checkpointed) and feeds both the
-    // merged graph and the affected-src set: the srcs that can change on
-    // insert are the new ids plus every PRE-CAP chosen neighbor — a
-    // reverse edge can survive its neighbor's cap even when the forward
-    // twin is capped out of the new id's list, so deriving neighbors
-    // from the post-cap graph under-reports touched srcs (ADVICE r10)
+    // per-hop pruned suppliers for the insert descent: collect the
+    // hop's ids (CDC-batch bounded), read only their buckets with the
+    // IN list pushed to the scan; doomed rows/edges are filtered so
+    // the descent sees exactly (store \ doomed, graph \ doomed-edges)
+    def notDoomedEdges(df: DataFrame): DataFrame =
+      if (doomedIds.isEmpty) df
+      else df.filter(!inIds(col("src"), doomedIds) &&
+        !inIds(col("dst"), doomedIds))
+    def storeFor(ids: DataFrame): DataFrame = {
+      val need = ids.select("id").distinct()
+        .collect().map(_.getLong(0)).toSeq.filterNot(doomedIds.toSet)
+      readBuckets(path, bucketsOf(need))
+        .filter(inIds(col("id"), need))
+        .drop("bucket")
+    }
+    def graphFor(frontier: DataFrame): DataFrame = {
+      val ids = frontier.select("id").distinct()
+        .collect().map(_.getLong(0)).toSeq
+      notDoomedEdges(readBuckets(graphPath, bucketsOf(ids))
+        .filter(inIds(col("src"), ids))
+        .drop("bucket"))
+    }
+    // PRE-CAP neighbor selection (ADVICE r10): the affected srcs on
+    // insert are the new ids plus every chosen candidate, derived
+    // before the per-src degree re-cap
     val nn = if (!hasAdds) null
-      else Ann.graphInsertNn(storeSurv, g1, adds, graphK, beam, hops,
-        entryCids, entryCents).localCheckpoint(true)
-    val g2 = (if (!hasAdds) g1
-      else Ann.graphMergeNn(g1, nn, maxDegree)).localCheckpoint(true)
+      else Ann.graphInsertNnVia(storeFor, graphFor, adds, graphK, beam,
+        hops, entryCids, entryCents).localCheckpoint(true)
     val nbrSrcs =
       if (!hasAdds) Array.empty[Long]
       else nn.select("id").distinct().collect().map(_.getLong(0))
-    val changedBuckets = bucketsOf(incidentSrcs ++ doomedIds ++ addIds ++ nbrSrcs)
-    if (changedBuckets.nonEmpty) {
-      val gOut = g2
-        .withColumn("bucket", pmod(col("src"), lit(nBuckets.toLong)).cast("int"))
-        .filter(col("bucket").isin(changedBuckets.map(Int.box): _*))
-        .localCheckpoint(true)
-      overwriteBuckets(graphPath, gOut, changedBuckets, Seq("src", "dst"))
+    val affectedSrcs = (incidentSrcs ++ doomedIds ++ addIds ++ nbrSrcs).distinct
+    val srcBuckets = bucketsOf(affectedSrcs)
+    if (srcBuckets.nonEmpty) {
+      // the affected src-buckets, materialized before their overwrite
+      // (read-then-overwrite rule); srcs merely SHARING a bucket with
+      // an affected src get recapped too — unchanged by the invariant
+      // checked below, so rewriting them is exact
+      val gAff = readBuckets(graphPath, srcBuckets)
+        .drop("bucket").localCheckpoint(true)
+      val builtRow = gAff.groupBy("src")
+        .agg(count(lit(1)).as("d")).agg(max(col("d"))).head()
+      val builtDegree = if (builtRow.isNullAt(0)) 0L else builtRow.getLong(0)
+      require(maxDegree >= builtDegree,
+        s"mergeGraphIndexed: maxDegree ($maxDegree) is tighter than the " +
+          s"sidecar's observed max out-degree ($builtDegree) — pass the " +
+          "build-time cap (or rebuild the graph to re-cap globally)")
+      val g1Aff = Ann.graphDelete(gAff, doomed)
+      val g2Aff = (if (!hasAdds) g1Aff
+        else Ann.graphMergeNn(g1Aff, nn, maxDegree)).localCheckpoint(true)
+      overwriteBuckets(graphPath,
+        g2Aff.withColumn("bucket",
+          pmod(col("src"), lit(nBuckets.toLong)).cast("int")),
+        srcBuckets, Seq("src", "dst"))
+      // rev sidecar: patch exactly the changed edges — old rows of the
+      // touched dst-buckets minus removed plus added. removed/added
+      // come from the before/after of the recapped region, which holds
+      // every changed edge (all changes have srcs in affected buckets)
+      val removed = gAff.except(g2Aff).localCheckpoint(true)
+      val added = g2Aff.except(gAff).localCheckpoint(true)
+      val dstBuckets = removed.select("dst").unionByName(added.select("dst"))
+        .select(pmod(col("dst"), lit(nBuckets.toLong)).cast("int").as("b"))
+        .distinct().collect().map(_.getInt(0)).toSeq.sorted
+      if (dstBuckets.nonEmpty) {
+        val revAff = readBuckets(revPath, dstBuckets)
+          .drop("bucket").localCheckpoint(true)
+        val revNew = revAff
+          .join(removed.select("src", "dst"), Seq("src", "dst"), "left_anti")
+          .unionByName(added)
+          .withColumn("bucket",
+            pmod(col("dst"), lit(nBuckets.toLong)).cast("int"))
+          .localCheckpoint(true)
+        overwriteBuckets(revPath, revNew, dstBuckets, Seq("dst", "src"))
+      }
     }
-    // store side: LWW + tombstones against only the batch's buckets
+    // store side: LWW + tombstones against only the batch's buckets,
+    // read pruned
     val storeBuckets = bucketsOf(doomedIds ++ addIds)
     if (storeBuckets.nonEmpty) {
-      val bucketed = store
-        .withColumn("bucket", pmod(col("id"), lit(nBuckets.toLong)).cast("int"))
-        .filter(col("bucket").isin(storeBuckets.map(Int.box): _*))
+      val sAff = readBuckets(path, storeBuckets)
+        .drop("bucket").localCheckpoint(true)
+      val bucketed = sAff
         .join(doomed, Seq("id"), "left_anti")
-        .unionByName(adds.withColumn("bucket",
-          pmod(col("id"), lit(nBuckets.toLong)).cast("int")))
+        .unionByName(adds)
+        .withColumn("bucket",
+          pmod(col("id"), lit(nBuckets.toLong)).cast("int"))
         .localCheckpoint(true)
       overwriteBuckets(path, bucketed, storeBuckets, Seq("id"))
     }

@@ -719,6 +719,30 @@ class AnnSpec extends SparkSpec {
     assert(cs > 0.0, "bridge-seeded refinement must create cross-cell edges")
   }
 
+  test("graphRefine never sets a conf on the caller's session while it runs") {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    val cents = Ann.seedCentroids(points, 16)
+    val frag = Ann.graphBuild(points, cents,
+      graphK = 8, maxDegree = 12, nprobe = 1).localCheckpoint()
+    val ckey = "spark.sql.constraintPropagation.enabled"
+    val before = spark.conf.getOption(ckey)
+    val run = Future(Ann.graphRefine(points, frag, rounds = 2, maxDegree = 12)
+      .count())(ExecutionContext.global)
+    // poll the caller's conf for as long as the refine runs
+    var reads = 0
+    var sawFalse = false
+    while (!run.isCompleted) {
+      if (spark.conf.get(ckey, "true") == "false") sawFalse = true
+      reads += 1
+      Thread.sleep(1)
+    }
+    assert(Await.result(run, 10.minutes) > 0)
+    assert(reads > 0)
+    assert(!sawFalse, s"$ckey read false on the caller's session during graphRefine")
+    assert(spark.conf.getOption(ckey) == before)
+  }
+
   private lazy val entrySeeds: (Seq[Long], Seq[Seq[Double]]) = {
     val rows = Ann.seedCentroids(points, 16).orderBy("cid").collect()
     (rows.map(_.getLong(0)).toSeq, rows.map(_.getSeq[Double](1).toSeq).toSeq)

@@ -719,12 +719,11 @@ class ApiSpec extends SparkSpec {
   }
 
   test("batchedServer job tier ≡ replica tier at extreme magnitudes (gate slack scales)") {
-    // ADVICE r10: the job tier's fast gate carried a fixed 1e-6 slack
-    // valid only near unit norm; with |aᵢbᵢ| products ~1e8+ the
-    // reassociation error exceeds it and a near-floor row could be
-    // wrongly gated out of the job tier while the exact replica kernel
-    // keeps it. The magnitude-scaled gateSlack must make both tiers
-    // row-identical on unnormalized data too.
+    // unnormalized rows with |aᵢbᵢ| products ~1e8+: the job tier's pinned
+    // partitions score with the replica's own kernel and its gates (the
+    // rounding gate and the certified f32 gate, whose bound scales with
+    // the row and query norms), so both tiers must stay row-identical
+    // far from unit norm too.
     val rnd = new scala.util.Random(31L)
     val dim = 64
     val big = (0 until 60).map { i =>
@@ -750,6 +749,31 @@ class ApiSpec extends SparkSpec {
         assert(a.get(1) == b.get(1), "score parity at extreme magnitudes")
       }
     }
+  }
+
+  test("batchedServer job tier ≡ replica tier with a NaN row in the template") {
+    // a NaN dot never places: both tiers skip the row and serve the rest
+    import scala.concurrent.Await
+    import scala.concurrent.duration._
+    val rnd = new scala.util.Random(41L)
+    val dim = 16
+    val rows = (0 until 40).map { i =>
+      val e = Seq.fill(dim)(rnd.nextGaussian())
+      (i.toLong, if (i == 13) e.updated(3, Double.NaN) else e, i % 3)
+    }.toDF("id", "embedding", "user_id")
+    val embs = (0 until 5).map(_ => Seq.fill(dim)(rnd.nextGaussian()))
+    def serveAll(replicaRows: Long) = {
+      val srv = new BatchedServer(rows, k = 9, threshold = -1e18,
+        maxBatch = 3, localReplicaMaxRows = replicaRows)
+      try embs.flatMap(e => Seq(Await.result(srv.submit(e), 2.minutes),
+          Await.result(srv.submitFiltered(e, Seq(1, 2)), 2.minutes)))
+        .map(_.map(r => (r.getLong(0), r.getDouble(1), r.getInt(2))).toSeq)
+      finally srv.close()
+    }
+    val viaReplica = serveAll(BatchedServer.DefaultReplicaMaxRows)
+    val viaJob = serveAll(0L)
+    assert(viaReplica.forall(_.size == 9) && !viaReplica.flatten.exists(_._1 == 13L))
+    assert(viaJob == viaReplica, "job tier diverged from the replica tier")
   }
 
   test("shardedServer: router over replica-sized shards ≡ solo search, row for row") {

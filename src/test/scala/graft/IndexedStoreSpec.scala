@@ -401,9 +401,7 @@ class IndexedStoreSpec extends SparkSpec {
       "untouched REV bucket dirs changed")
   }
 
-  test("mergeGraphIndexed: pruned path ≡ legacy whole-table path, edge for edge") {
-    val dirP = tempDir("graph_idx_p").toString
-    val dirL = tempDir("graph_idx_l").toString
+  test("mergeGraphIndexed: pruned merge ≡ graphDelete + graphInsert replay") {
     val nBuckets = 16
     val pts = points.select($"id", $"embedding", $"user_id")
     val cents = Ann.seedCentroids(pts, 16)
@@ -412,32 +410,49 @@ class IndexedStoreSpec extends SparkSpec {
     val ces = crows.map(_.getSeq[Double](1).toSeq).toSeq
     val graph0 = Ann.graphBuild(pts, cents, graphK = 12, maxDegree = 16)
       .localCheckpoint(true)
-    // pruned store: full sidecar pair; legacy store: src sidecar only
-    val pathP = s"$dirP/store"; val pathL = s"$dirL/store"
-    CollectionStore.saveBucketed(pts, pathP, nBuckets)
-    CollectionStore.saveGraphSidecar(graph0, pathP, nBuckets)
-    CollectionStore.saveBucketed(pts, pathL, nBuckets)
-    Ann.saveGraphBucketed(graph0, pathL + "_graph", nBuckets)
-    assert(!new java.io.File(pathL + "_graph_rev").exists)
+    val path = s"${tempDir("graph_idx_p")}/store"
+    CollectionStore.saveBucketed(pts, path, nBuckets)
+    CollectionStore.saveGraphSidecar(graph0, path, nBuckets)
+    // batch: upsert id 60 and insert id 300000 with the SAME vector,
+    // tombstone 70/71
     val emb9 = pts.filter($"id" === 9)
       .select("embedding").as[Seq[Double]].head()
     val adds = Seq((60L, emb9, 911), (300000L, emb9, 912))
       .toDF("id", "embedding", "user_id")
     val dels = Seq(70L, 71L).toDF("id")
-    Seq(pathP, pathL).foreach { p =>
+    def merge(p: String): Unit =
       CollectionStore.mergeGraphIndexed(spark, p, adds, Some(dels),
         cids, ces, nBuckets, graphK = 12, maxDegree = 16,
         beam = 24, hops = 8)
-    }
-    def edges(p: String) = spark.read.parquet(p + "_graph").drop("bucket")
-      .select("src", "dst", "score").orderBy("src", "dst")
-      .as[(Long, Long, Double)].collect().toSeq
-    assert(edges(pathP) == edges(pathL),
-      "pruned merge diverged from the legacy whole-table merge")
-    def rows(p: String) = CollectionStore.loadBucketed(spark, p)
+    merge(path)
+    // graph == replay of the composed semantics on the pre-state: delete
+    // edges of tombstoned AND upserted ids, insert vs survivors
+    val g1 = Ann.graphDelete(graph0, Seq(60L, 300000L, 70L, 71L).toDF("id"))
+    val surv = pts.join(Seq(60L, 70L, 71L).toDF("id"), Seq("id"), "left_anti")
+    val expected = Ann.graphInsert(surv, g1, adds, graphK = 12,
+        maxDegree = 16, beam = 24, hops = 8,
+        entryCids = cids, entryCents = ces)
+      .select("src", "dst", "score").orderBy("src", "dst").collect().toSeq
+    val got = spark.read.parquet(path + "_graph").drop("bucket")
+      .select("src", "dst", "score").orderBy("src", "dst").collect().toSeq
+    assert(got == expected, s"pruned merge != replay " +
+      s"(${got.size} vs ${expected.size} edges)")
+    // store: LWW upsert + insert + tombstones
+    val rows = CollectionStore.loadBucketed(spark, path)
       .select($"id", $"user_id".cast("int")).orderBy("id")
       .as[(Long, Int)].collect().toSeq
-    assert(rows(pathP) == rows(pathL), "store contents diverged")
+    val wantRows = (pts.select($"id", $"user_id".cast("int"))
+      .as[(Long, Int)].collect().toSeq
+      .filterNot { case (id, _) => Set(60L, 70L, 71L)(id) } ++
+      Seq((60L, 911), (300000L, 912))).sortBy(_._1)
+    assert(rows == wantRows, "store contents diverged from the replay")
+    // a store without the reverse sidecar is refused, naming its writer
+    val pathNoRev = s"${tempDir("graph_idx_norev")}/store"
+    CollectionStore.saveBucketed(pts, pathNoRev, nBuckets)
+    Ann.saveGraphBucketed(graph0, pathNoRev + "_graph", nBuckets)
+    val ex = intercept[IllegalArgumentException](merge(pathNoRev))
+    assert(ex.getMessage.contains("_graph_rev") &&
+      ex.getMessage.contains("saveGraphSidecar"), ex.getMessage)
   }
 
   test("splitOversizedCells: in-place cell split, O(oversized) footprint") {

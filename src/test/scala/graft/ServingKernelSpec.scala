@@ -203,63 +203,44 @@ class ServingKernelSpec extends AnyFunSuite {
       reference(clean, queries, 10, -1e9))
   }
 
-  test("job-tier fast gate: magnitude-scaled slack certifies the bound far from unit norm") {
-    // The job tier gates on the reassociated dotFastAbs before the exact
-    // recompute. For near-unit rows a fixed 1e-6 slack covers the
-    // reassociation error; at |aᵢbᵢ| ~ 1e8+ it does NOT (ADVICE r10) —
-    // gateSlack must scale with the measured Σ|aᵢbᵢ|. Two claims:
-    // (1) the certified bound |fast − seq| ≤ gateSlack − 1e-6 holds on
-    // adversarial heavy-cancellation rows; (2) the simulated job-tier
-    // gate pipeline is row-identical to the ungated reference.
-    val rnd = new scala.util.Random(29L)
-    val scratch = new Array[Double](2)
-    val dims = Seq(16, 64, 333)
-    for (dim <- dims; trial <- 0 until 200) {
-      val mag = math.pow(10.0, trial % 12) // 1 .. 1e11
-      val emb = Array.tabulate(dim) { d =>
-        // alternating-sign near-cancelling terms: worst reassociation case
-        (if ((d + trial) % 2 == 0) 1 else -1) *
-          (mag * (1.0 + rnd.nextDouble() * 1e-3))
-      }
-      val q = Array.fill(dim)(1.0 + rnd.nextGaussian() * 1e-3)
-      BatchedServer.dotFastAbs(emb, q, scratch)
-      var seq = 0.0d; var d = 0
-      while (d < dim) { seq += emb(d) * q(d); d += 1 }
-      val reassocErr = math.abs(scratch(0) - seq)
-      val bound = BatchedServer.gateSlack(dim, scratch(1)) - 1e-6
-      assert(reassocErr <= bound,
-        s"dim=$dim mag=$mag: |fast-seq|=$reassocErr > certified $bound")
+  test("FlatReplica survives Java serialization: the copy scores bit for bit") {
+    // the job tier pins one replica per partition MEMORY_AND_DISK, and a
+    // spilled block is serialized: the copy must score exactly like the
+    // original, on both layouts, and must not ship its postings
+    val rnd = new scala.util.Random(37L)
+    val dim = 24
+    val rows = Array.tabulate(203)(i =>
+      (i.toLong * 3, Array.fill(dim)(rnd.nextGaussian()), i % 5))
+    val queries = Array.fill(5)(Array.fill(dim)(rnd.nextGaussian()))
+    val users = Array(1, 3, 3)
+    def serialize(rep: BatchedServer.FlatReplica): Array[Byte] = {
+      val bos = new java.io.ByteArrayOutputStream
+      val oos = new java.io.ObjectOutputStream(bos)
+      oos.writeObject(rep)
+      oos.close()
+      bos.toByteArray
     }
-    // full gate-pipeline parity at products ~1e8+: simulate the job-tier
-    // inner loop (gate → exact recompute → round6 → threshold → top-k)
-    // and require row-identity with the ungated reference
-    val dim = 64
-    val rows = Array.tabulate(400) { i =>
-      (i.toLong, Array.fill(dim)(rnd.nextGaussian() * 1e4), i % 3)
+    def bits(tops: Array[BatchedServer.TopK]) = tops.toSeq.map(_.result().toSeq.map {
+      case (id, s, u) => (id, java.lang.Double.doubleToRawLongBits(s), u) })
+    def scores(rep: BatchedServer.FlatReplica) = {
+      val all = Array.fill(queries.length)(new BatchedServer.TopK(7))
+      BatchedServer.scoreRange(rep, all, 0, rep.n, queries, -1e9)
+      val rowIdx = rep.postings.rowsFor(users)
+      val filtered = Array.fill(queries.length)(new BatchedServer.TopK(7))
+      BatchedServer.scoreRows(rep, rowIdx, filtered, 0, rowIdx.length, queries, -1e9)
+      (bits(all), bits(filtered))
     }
-    val queries = Array.fill(5)(Array.fill(dim)(rnd.nextGaussian() * 1e4))
-    for (k <- Seq(3, 25); th <- Seq(-1e18, 0.0)) {
-      val expect = reference(rows, queries, k, th)
-      val got = queries.zipWithIndex.map { case (q, qi) =>
-        val top = new BatchedServer.TopK(k)
-        rows.foreach { case (id, emb, u) =>
-          BatchedServer.dotFastAbs(emb, q, scratch)
-          val slack = BatchedServer.gateSlack(
-            math.min(emb.length, q.length), scratch(1))
-          if (!(scratch(0) < top.floor(th) - slack)) {
-            var s = 0.0d; var d = 0
-            val nd = math.min(emb.length, q.length)
-            while (d < nd) { s += emb(d) * q(d); d += 1 }
-            val r = round6(s)
-            if (r >= th) top.offer(r, id, u)
-          }
-        }
-        qi -> top.result().toSeq
-      }.toMap
-      queries.indices.foreach { qi =>
-        assert(got(qi) == expect(qi),
-          s"gated job-tier pipeline diverges at qi=$qi k=$k th=$th")
-      }
+    for (useSimd <- Seq(true, false)) {
+      val rep = BatchedServer.FlatReplica(rows, useSimd)
+      val bare = serialize(rep)
+      rep.postings
+      val bytes = serialize(rep)
+      assert(bytes.length == bare.length, "postings must not be serialized")
+      val copy = new java.io.ObjectInputStream(new java.io.ByteArrayInputStream(bytes))
+        .readObject().asInstanceOf[BatchedServer.FlatReplica]
+      if (useSimd && BatchedServer.SimdSupport.enabled)
+        assert(rep.tslab != null && copy.tslab != null, "SIMD layout expected")
+      assert(scores(copy) == scores(rep), s"useSimd=$useSimd: the copy scores differently")
     }
   }
 
