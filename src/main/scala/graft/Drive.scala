@@ -176,31 +176,25 @@ object Drive {
     }
   }
 
-  /** The dispatch floor: `clients` threads each run `perClient` of the
-    * cheapest job there is — a count over a pinned `parts`-partition RDD —
-    * after 50 warm jobs. `closureKiB > 0` captures a blob of that size in
-    * every job's closure: a real plan's task binary is hundreds of KB,
-    * serialized and broadcast per job in the single-threaded
-    * DAGScheduler loop. Returns (wall seconds, ascending job latencies). */
-  def pinnedJobs(spark: SparkSession, clients: Int, perClient: Int,
-      parts: Int = 1, closureKiB: Int = 0): (Double, Array[Double]) = {
-    val bare = spark.sparkContext.parallelize(1 to 100, parts).cache()
+  /** The dispatch ceiling in jobs/s, 1 dp: `clients` threads each run 50
+    * of the cheapest job there is — a count over a pinned 1-partition RDD
+    * — after 50 warm jobs; the JVM-wide bound on any one-job-per-request
+    * tier. `closureKiB > 0` captures a blob of that size in every job's
+    * closure: a real plan's task binary is hundreds of KB, serialized and
+    * broadcast per job in the single-threaded DAGScheduler loop. */
+  def jobCeiling(spark: SparkSession, clients: Int, closureKiB: Int = 0): Double = {
+    val bare = spark.sparkContext.parallelize(1 to 100, 1).cache()
     val blob: Array[Byte] =
       Array.tabulate(closureKiB * 1024)(i => (i % 251).toByte)
     def onceJob(): Unit =
       if (closureKiB == 0) bare.count()
       else { val b = blob; bare.mapPartitions { it =>
         if (b.length > 1 && b(1) == 127) Iterator.empty else it }.count() }
-    try {
-      (0 until 50).foreach(_ => onceJob())
-      closed(clients, perClient)((_, _) => onceJob())
-    } finally bare.unpersist()
-  }
-
-  /** Jobs/s of [[pinnedJobs]] on one partition, 50 jobs per client, 1 dp:
-    * the JVM-wide bound on any one-job-per-request tier. */
-  def jobCeiling(spark: SparkSession, clients: Int, closureKiB: Int = 0): Double = {
-    val (secs, _) = pinnedJobs(spark, clients, 50, closureKiB = closureKiB)
+    val (secs, _) =
+      try {
+        (0 until 50).foreach(_ => onceJob())
+        closed(clients, 50)((_, _) => onceJob())
+      } finally bare.unpersist()
     math.rint(clients * 50 / secs * 10) / 10
   }
 

@@ -122,7 +122,6 @@ final class BatchedServer(
     localReplicaMaxRows: Long = BatchedServer.DefaultReplicaMaxRows,
     scoreThreads: Int = 0,
     int8Replica: Boolean = false,
-    int8Oversample: Double = 3.0,
     recallTarget: Option[Double] = None)
   extends VectorServer {
 
@@ -170,41 +169,36 @@ final class BatchedServer(
     * / `metrics.prometheusText`. */
   val metrics = new ServingMetrics
 
-  /** Counter snapshot with the live queue-depth gauge sampled now, plus
-    * the served-plan decision columns once the replica decision ran
+  /** The served-plan decision gauges once the replica decision ran
     * (family/oversample/target/sample-recall — the serving analogue of
-    * the calibrated batch operators' hash-verified decision columns). */
-  def metricsSnapshot: Map[String, Double] = {
-    val base = metrics.snapshot(queue.size())
+    * the calibrated batch operators' hash-verified decision columns);
+    * none before. [[metricsSnapshot]] carries each as `serving_<name>`,
+    * the `/metrics` exposition as `graft_serving_<name>`. */
+  private def decisionGauges: Seq[(String, Double)] = {
     val d = decisionVar
-    if (d == null) base
-    else base ++ Map(
-      "serving_family_int8" -> (if (d.family == "int8") 1.0 else 0.0),
-      "serving_oversample" -> d.oversample.toDouble,
-      "serving_recall_target" -> d.targetRecall,
-      "serving_sample_recall" -> d.sampleRecall)
+    if (d == null) Nil
+    else Seq(
+      "family_int8" -> (if (d.family == "int8") 1.0 else 0.0),
+      "oversample" -> d.oversample.toDouble,
+      "recall_target" -> d.targetRecall,
+      "sample_recall" -> d.sampleRecall)
   }
+
+  /** Counter snapshot with the live queue-depth gauge sampled now, plus
+    * the decision gauges. */
+  def metricsSnapshot: Map[String, Double] =
+    metrics.snapshot(queue.size()) ++
+      decisionGauges.map { case (name, v) => s"serving_$name" -> v }
 
   /** Mount this server's live metrics on an HTTP /metrics endpoint
     * (VERDICT r15 #5 — the reference's performance collector is scraped
     * over the app, src/utils/performance.py:46-137). The exposition is
-    * the ServingMetrics text plus the served-plan decision gauges, so a
-    * scrape shows WHAT plan is serving next to how fast it is. Caller
-    * closes the returned server. */
+    * the ServingMetrics text plus the decision gauges, so a scrape shows
+    * WHAT plan is serving next to how fast it is. Caller closes the
+    * returned server. */
   def serveMetricsHttp(port: Int = 0): MetricsHttpServer =
-    new MetricsHttpServer(() => {
-      val sb = new StringBuilder(
-        metrics.prometheusText(queueDepth = queue.size()))
-      val d = decisionVar
-      if (d != null) {
-        sb.append("# TYPE graft_serving_family_int8 gauge\n")
-        sb.append("graft_serving_family_int8 ")
-          .append(if (d.family == "int8") 1 else 0).append('\n')
-        sb.append("# TYPE graft_serving_oversample gauge\n")
-        sb.append("graft_serving_oversample ").append(d.oversample).append('\n')
-      }
-      sb.result()
-    }, port)
+    new MetricsHttpServer(() => metrics.prometheusText(
+      queueDepth = queue.size(), gauges = decisionGauges), port)
 
   private final case class Pending(emb: Seq[Double], p: Promise[Array[Row]],
       t0: Long)
@@ -271,10 +265,10 @@ final class BatchedServer(
   /** The served configuration, decided with the replica (VERDICT r15
     * #2/#3): with `recallTarget` set, [[ServingCalibration.decide]]
     * picks the family AND the int8 oversample from the stated target
-    * (replacing the fixed `int8Replica`/`int8Oversample` knobs); the
-    * legacy knobs keep their exact old meaning when no target is given
-    * (decision recorded with targetRecall = -1: a fixed knob, not a
-    * calibrated one). Read via [[servingDecision]]; the fields also
+    * (replacing the fixed `int8Replica` plan at
+    * [[BatchedServer.FixedInt8Oversample]]); the legacy knob keeps its
+    * exact old meaning when no target is given (decision recorded
+    * with targetRecall = -1: a fixed knob, not a calibrated one). Read via [[servingDecision]]; the fields also
     * ride every [[metricsSnapshot]] so the served plan is observable. */
   @volatile private var decisionVar: ServingDecision = null
   @volatile private var replicaDecided = false
@@ -286,21 +280,18 @@ final class BatchedServer(
     * generation that drifted toward harder geometry can change family/
     * oversample rather than silently missing its target). */
   private def decideGen(rep: BatchedServer.FlatReplica)
-      : (ServingDecision, Gen) = recallTarget match {
-    case Some(t) =>
+      : (ServingDecision, Gen) = {
+    val d = recallTarget match {
       // calibrated family/oversample from the stated target (VERDICT
       // r15 #2/#3); exact fallback when no ladder rung clears it —
       // same degrade shape as IndexMeta.nprobeFor
-      val d = ServingCalibration.decide(rep, k, threshold, t)
-      if (d.family == "int8")
-        (d, Gen(rep, BatchedServer.quantizeSlab(rep.embs), d.oversample.toDouble))
-      else (d, Gen(rep, null, int8Oversample))
-    case None =>
-      if (int8Replica)
-        (ServingDecision("int8", math.max(1, int8Oversample.toInt), -1.0, -1.0),
-          Gen(rep, BatchedServer.quantizeSlab(rep.embs), int8Oversample))
-      else
-        (ServingDecision("exact", 0, -1.0, 1.0), Gen(rep, null, int8Oversample))
+      case Some(t) => ServingCalibration.decide(rep, k, threshold, t)
+      case None if int8Replica =>
+        ServingDecision("int8", BatchedServer.FixedInt8Oversample, -1.0, -1.0)
+      case None => ServingDecision("exact", 0, -1.0, 1.0)
+    }
+    val codes = if (d.family == "int8") BatchedServer.quantizeSlab(rep.embs) else null
+    (d, Gen(rep, codes, d.oversample.toDouble))
   }
   // default pool width 8: beyond that a SINGLE small replica's slices
   // are handoff-dominated. A sharded router overrides it so the shard
@@ -702,9 +693,10 @@ final class ServingMetrics {
   }
 
   /** Prometheus text exposition (text/plain; version 0.0.4) of the
-    * snapshot — what the reference's /metrics endpoint serves. */
+    * snapshot, then each of `gauges` as a `<prefix>_<name>` gauge — what
+    * the reference's /metrics endpoint serves. */
   def prometheusText(prefix: String = "graft_serving",
-      queueDepth: => Int = 0): String = {
+      queueDepth: => Int = 0, gauges: Seq[(String, Double)] = Nil): String = {
     val snap = snapshot(queueDepth)
     val sb = new StringBuilder
     def line(k: String, v: Double): Unit =
@@ -729,6 +721,10 @@ final class ServingMetrics {
       .append(snap("request_latency_ms_bucket_le_inf").toLong).append('\n')
     line("request_latency_ms_sum", snap("request_latency_ms_sum"))
     line("request_latency_ms_count", snap("request_latency_ms_count"))
+    gauges.foreach { case (name, v) =>
+      sb.append(s"# TYPE ${prefix}_$name gauge\n")
+      line(name, v)
+    }
     sb.result()
   }
 }
@@ -863,6 +859,11 @@ object BatchedServer {
     * dim 64) replicates into serving memory, mirroring the reference's
     * in-process index. Larger shards serve via the batched job path. */
   val DefaultReplicaMaxRows: Long = 1L << 18
+
+  /** Phase-1 oversample of the fixed `int8Replica` plan: k·3 int8
+    * survivors rescored exactly, the reference's oversample
+    * (src/core/qdrant_client.py:342-348). */
+  val FixedInt8Oversample: Int = 3
 
   /** Flush jobs a [[BatchedServer]] keeps in flight at once. */
   val PipelineDepth: Int = 2

@@ -650,28 +650,6 @@ object SlabIO {
     ids
   }
 
-  /** Row-range read of a slab: rows [lo, hi) only — the incremental
-    * patch's survivor fetch, so reading a dirty CELL costs that cell's
-    * bytes, not a full-slab parse (at 1% dirty cells a full [[read]]
-    * would swamp the splice's entire saving). */
-  def readRows(path: String, lo: Int, hi: Int)
-      : Array[(Long, Array[Double], Int)] = {
-    val s = mapSlab(path, FloatSlab, WholeFile)
-    val (buf, lay) = (s.buf, s.lay)
-    require(lo >= 0 && hi <= lay.n && lo <= hi, s"range [$lo,$hi) of ${lay.n} rows")
-    Array.tabulate(hi - lo) { r =>
-      val i = lo + r
-      val e0 = s.off(i)
-      val e = new Array[Double](s.off(i + 1) - e0)
-      var j = 0
-      while (j < e.length) {
-        e(j) = buf.getDouble((lay.cells + 8L * (e0 + j)).toInt); j += 1
-      }
-      (buf.getLong((lay.ids + 8L * i).toInt), e,
-        buf.getInt((lay.users + 4L * i).toInt))
-    }
-  }
-
   /** Read a slab file back into the row array [[BatchedServer.FlatReplica]]
     * builds from (layout decisions — SIMD transpose included — are the
     * replica code's, not the file's). */
@@ -1686,14 +1664,16 @@ final class RemoteShardedRouter(
   private val hedgesIssued = new java.util.concurrent.atomic.AtomicLong
 
   /** Atomically reserve one hedge token: succeeds iff, at the moment of
-    * the CAS, total hedges would stay ≤ fraction·requests + 1 (the +1 is
-    * the one-token burst so a fresh router can hedge its first
-    * straggler). A failed CAS retries against the fresh count — two
-    * concurrent reservations can never both win the same token. */
-  private[graft] def tryReserveHedge(budgetFraction: Double): Boolean = {
+    * the CAS, total hedges would stay ≤ fraction·requests + 1, fraction
+    * = [[RemoteShardedRouter.HedgeBudgetFraction]] (the +1 is the
+    * one-token burst so a fresh router can hedge its first straggler).
+    * A failed CAS retries against the fresh count — two concurrent
+    * reservations can never both win the same token. */
+  private[graft] def tryReserveHedge(): Boolean = {
     while (true) {
       val cur = hedgesIssued.get()
-      if (cur + 1 > budgetFraction * hedgedRequests.get() + 1.0) return false
+      if (cur + 1 > RemoteShardedRouter.HedgeBudgetFraction * hedgedRequests.get() + 1.0)
+        return false
       if (hedgesIssued.compareAndSet(cur, cur + 1)) return true
     }
     false // unreachable
@@ -1702,9 +1682,9 @@ final class RemoteShardedRouter(
   /** HEDGED request (Dean & Barroso "The Tail at Scale", CACM 2013 —
     * the send-to-two-after-a-delay hedge): scatter to every shard; when
     * `hedgeAfterMs` passes with shards still silent, ONE duplicate is
-    * sent (`maxHedges` per request, default 1 — the canonical
-    * "send-to-two") to a silent shard that has a FREE pooled connection,
-    * subject to a router-wide budget (total hedges ≤ ~5% of requests).
+    * sent (the canonical "send-to-two") to a silent shard that has a
+    * FREE pooled connection, subject to a router-wide budget (total
+    * hedges ≤ ~5% of requests).
     * The first reply per shard wins. Unlike [[searchPartial]] nothing is
     * dropped — the answer is complete whenever every shard answers
     * EITHER attempt within `timeoutMs` — so the tail is cut without the
@@ -1736,9 +1716,7 @@ final class RemoteShardedRouter(
     * reported exactly like searchPartial's straggler (answered < all,
     * `complete = false`), and losing attempts drain and re-pool their
     * sockets on their own (never a poisoned connection). */
-  def searchHedged(qemb: Array[Double], hedgeAfterMs: Long, timeoutMs: Long,
-      maxHedges: Int = 1,
-      budgetFraction: Double = RemoteShardedRouter.HedgeBudgetFraction)
+  def searchHedged(qemb: Array[Double], hedgeAfterMs: Long, timeoutMs: Long)
       : RemoteShardedRouter.HedgedResult = {
     val nShards = addrs.length
     hedgedRequests.incrementAndGet() // denominator counts in-flight work
@@ -1791,16 +1769,16 @@ final class RemoteShardedRouter(
       if (!hedged && System.nanoTime() >= hedgeAt) {
         hedged = true
         // budget + socket reservation + per-request cap (see scaladoc):
-        // pick at most `maxHedges` silent shards. Order of reservations
+        // pick at most one silent shard. Order of reservations
         // matters: take the socket FIRST (cheap to return), then the
         // budget token (never returned once issued — the hedge WILL be
         // sent), then submit with the socket in hand.
         var s = 0
-        while (s < nShards && hedgesSent < maxHedges) {
+        while (s < nShards && hedgesSent == 0) {
           if (!answered(s)) {
             val conn = pools(s).poll() // reserve, never block
             if (conn != null) {
-              if (tryReserveHedge(budgetFraction)) {
+              if (tryReserveHedge()) {
                 hedgeAttempt(s, conn)
                 hedgesSent += 1
               } else {

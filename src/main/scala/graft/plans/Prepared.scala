@@ -15,7 +15,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * The per-request direct form ([[graft.operators.Search.knnDirect]])
   * re-runs analyze → optimize → plan → codegen-lookup on an IDENTICAL
   * plan shape for every request — measured as ~45% of its per-query
-  * cost (PerRequestProbe; the rest is the DAGScheduler dispatch floor).
+  * cost (PerRequestProbe, reproducible at commit `9dae910`; the rest is
+  * the DAGScheduler dispatch floor).
   * A prepared statement removes that entirely: the physical plan is
   * built ONCE around a [[QueryVectorSlot]] — a mutable driver-side
   * holder the expression reads at execution — and each request is

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 
@@ -22,33 +22,46 @@ object StreamingOps {
     * (file source, synchronous drain, complete mode into a memory sink) and
     * return the final result — row-identical to Events.hourlyWindow. */
   def hourlyWindowStream(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val batchSchema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    // the streaming file source requires a directory: stream the sf dir
-    // with a glob pinned to the events file
-    val stream = spark.readStream
-      .schema(batchSchema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(sfDir)
+    val agg = fileStream(spark, sfDir, "events.parquet")
       .transform(Events.normalizeTs)
-    val agg = stream
       .withWatermark("ts", "2 hours")
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
       .agg(count("*").cast("long").as("n_events"),
         sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
       .select(col("w.start").as("window_start"), col("event_type"),
         col("n_events"), col("sum_value"))
-    val name = s"graft_stream_${System.nanoTime()}"
-    val q = withStatePartitions(spark, 8) {
-      agg.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
+    drainToMemory(spark, agg, "complete", "graft_stream")
+      .orderBy("window_start", "event_type")
+  }
+
+  /** A file stream over one fixture file: its batch schema, the sf dir
+    * as the source (the streaming file source requires a directory) and
+    * a glob pinned to the file. The events file's nanosecond timestamps
+    * are read as longs (`Events.normalizeTs` converts them). */
+  private def fileStream(spark: SparkSession, sfDir: String,
+      file: String): DataFrame = {
+    if (file == "events.parquet")
+      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val batchSchema = spark.read.parquet(s"$sfDir/$file").schema
+    spark.readStream
+      .schema(batchSchema)
+      .option("pathGlobFilter", file)
+      .parquet(sfDir)
+  }
+
+  /** Runs `ds` to the end of its input (AvailableNow) into a fresh
+    * memory sink under `statePartitions` state-store partitions, and
+    * returns the sink's table. */
+  private def drainToMemory(spark: SparkSession, ds: Dataset[_],
+      outputMode: String, prefix: String, statePartitions: Int = 8): DataFrame = {
+    val name = s"${prefix}_${System.nanoTime()}"
+    val q = withStatePartitions(spark, statePartitions) {
+      ds.writeStream
+        .outputMode(outputMode).format("memory").queryName(name)
+        .trigger(Trigger.AvailableNow()).start()
     }
     q.awaitTermination()
-    spark.table(name).orderBy("window_start", "event_type")
+    spark.table(name)
   }
 
   /** Stateful streaming pins one state-store instance per shuffle
@@ -74,25 +87,12 @@ object StreamingOps {
     * Which PHYSICAL row reaches the sink first is race-dependent, so only
     * the key columns are emitted — the key SET is deterministic. */
   def distinctUsersStream(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val batchSchema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    val stream = spark.readStream
-      .schema(batchSchema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(sfDir)
+    val deduped = fileStream(spark, sfDir, "events.parquet")
       .transform(Events.normalizeTs)
-    val deduped = stream
       .withWatermark("ts", "24 hours")
       .dropDuplicates("event_type", "user_id")
       .select(col("event_type"), col("user_id"))
-    val name = s"graft_dedup_${System.nanoTime()}"
-    val q = withStatePartitions(spark, 8) {
-      deduped.writeStream
-        .outputMode("append").format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow()).start()
-    }
-    q.awaitTermination()
-    spark.table(name)
+    drainToMemory(spark, deduped, "append", "graft_dedup")
       .groupBy("event_type")
       .agg(count("*").cast("long").as("n_users"))
       .orderBy("event_type")
@@ -114,12 +114,7 @@ object StreamingOps {
       nBuckets: Int = 16): Long = {
     import graft.operators.Collection
     import graft.sources.CollectionStore
-    val batchSchema = spark.read.parquet(s"$sfDir/embeddings.parquet").schema
-    val stream = spark.readStream
-      .schema(batchSchema)
-      .option("pathGlobFilter", "embeddings.parquet")
-      .parquet(sfDir)
-    val q = stream.writeStream
+    val q = fileStream(spark, sfDir, "embeddings.parquet").writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val adds = Collection.withNormalized(batch)
           .select(col("vec_id").as("id"), col("nemb").as("embedding"),
@@ -148,12 +143,7 @@ object StreamingOps {
       nBuckets: Int = 16): Long = {
     import graft.operators.Collection
     import graft.sources.CollectionStore
-    val batchSchema = spark.read.parquet(s"$sfDir/embeddings.parquet").schema
-    val stream = spark.readStream
-      .schema(batchSchema)
-      .option("pathGlobFilter", "embeddings.parquet")
-      .parquet(sfDir)
-    val q = stream.writeStream
+    val q = fileStream(spark, sfDir, "embeddings.parquet").writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val adds = Collection.withNormalized(batch)
           .select(col("vec_id").as("id"), col("nemb").as("embedding"),
@@ -213,12 +203,7 @@ object StreamingOps {
     * problem). At 100 TB the dim table stays broadcast-sized or becomes a
     * bucketed storage-side join; the stream side never buffers. */
   def enrichJoinStream(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val batchSchema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    val stream = spark.readStream
-      .schema(batchSchema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(sfDir)
+    val stream = fileStream(spark, sfDir, "events.parquet")
     val dims = spark.read.parquet(s"$sfDir/customer.parquet")
       .select(col("c_custkey"), col("c_nationkey"))
     val agg = stream
@@ -226,17 +211,7 @@ object StreamingOps {
       .groupBy(col("c_nationkey").cast("int").as("nationkey"))
       .agg(count("*").cast("long").as("n_events"),
         sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
-    val name = s"graft_enrich_${System.nanoTime()}"
-    val q = withStatePartitions(spark, 8) {
-      agg.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    }
-    q.awaitTermination()
-    spark.table(name).orderBy("nationkey")
+    drainToMemory(spark, agg, "complete", "graft_enrich").orderBy("nationkey")
   }
 
   /** Watermarked stream-stream inner join — the funnel-attribution shape
@@ -250,16 +225,11 @@ object StreamingOps {
     * the batch DuckDB oracle checks the complete set. */
   def clickErrorJoinStream(spark: SparkSession, sfDir: String,
       windowMin: Int = 60): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val batchSchema = spark.read.parquet(s"$sfDir/events.parquet").schema
     // ONE source, two filtered branches (stream self-join): a second
     // readStream would scan the file source twice per micro-batch.
     // Measured at sf0.1/local[32]: two-source 2.1-2.8 s → self-join
     // 1.9-2.0 s, identical output (PLANS_r8 floor experiment).
-    val base = spark.readStream
-      .schema(batchSchema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(sfDir)
+    val base = fileStream(spark, sfDir, "events.parquet")
       .transform(Events.normalizeTs)
     def side(tpe: String, idAs: String, userAs: String, tsAs: String) =
       base
@@ -274,7 +244,6 @@ object StreamingOps {
          |error_ts >= click_ts AND
          |error_ts <= click_ts + interval $windowMin minutes""".stripMargin))
       .select(col("click_id"), col("error_id"), col("user_id"))
-    val name = s"graft_join_${System.nanoTime()}"
     // State partitions measured at sf0.1/local[32]: 16 → 4.8 s, 8 → 3.6 s,
     // 4 → 2.5–3.1 s, 2 → 2.8–2.9 s. 4 is the harness sweet spot; below it
     // the time stops moving — the residual ~2 s is the micro-batch FLOOR
@@ -285,13 +254,8 @@ object StreamingOps {
     // large state). Floor analysis closed in PLANS_r8; on a real cluster
     // size partitions to state volume instead (the count is captured into
     // the checkpoint at start).
-    val q = withStatePartitions(spark, 4) {
-      joined.writeStream
-        .outputMode("append").format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow()).start()
-    }
-    q.awaitTermination()
-    spark.table(name).orderBy("click_id", "error_id")
+    drainToMemory(spark, joined, "append", "graft_join", statePartitions = 4)
+      .orderBy("click_id", "error_id")
   }
 
   case class Ev(event_id: Long, ts: java.sql.Timestamp, user_id: Long,
@@ -310,12 +274,7 @@ object StreamingOps {
   def sessionizeStream(spark: SparkSession, sfDir: String,
       gapSec: Long = 1800): DataFrame = {
     import spark.implicits._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val batchSchema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    val stream = spark.readStream
-      .schema(batchSchema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(sfDir)
+    val stream = fileStream(spark, sfDir, "events.parquet")
       .transform(Events.normalizeTs)
       .select("event_id", "ts", "user_id", "value").as[Ev]
 
@@ -347,14 +306,8 @@ object StreamingOps {
 
     val sessions = stream.groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(fold)
-    val name = s"graft_sessions_${System.nanoTime()}"
-    val q = withStatePartitions(spark, 8) {
-      sessions.writeStream
-        .outputMode("append").format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow()).start()
-    }
-    q.awaitTermination()
-    spark.table(name).orderBy("user_id", "session_id")
+    drainToMemory(spark, sessions, "append", "graft_sessions")
+      .orderBy("user_id", "session_id")
   }
 
   /** Streaming INCREMENTAL curation — the per-micro-batch form of the

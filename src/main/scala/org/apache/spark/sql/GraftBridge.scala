@@ -7,7 +7,7 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * Spark 4 decoupled the public Column API from Catalyst; libraries that
   * define native expressions use a shim in org.apache.spark.sql to reach
   * the classic converter (the same access pattern Spark's own connectors
-  * use). Kept to exactly these two calls. */
+  * use). */
 object GraftBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
@@ -28,6 +28,12 @@ object GraftBridge {
   def cloneSession(spark: SparkSession): SparkSession =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .cloneSession()
+
+  /** Blocks until every event already posted to the listener bus has
+    * reached its listeners (at most 10 s), so counters read after an
+    * action see all of that action's events. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 
   /** Re-root a frame's logical plan onto another session of the same
     * SparkContext — zero data movement, the plan is simply re-analyzed

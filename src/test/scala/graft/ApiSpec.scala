@@ -634,9 +634,14 @@ class ApiSpec extends SparkSpec {
       assert(lines.contains("graft_serving_requests_total 6"),
         s"request counter must be live in the scrape")
       val snap = srv.metricsSnapshot
-      val fam = if (snap("serving_family_int8") == 1.0) 1 else 0
-      assert(lines.contains(s"graft_serving_family_int8 $fam"),
-        "served-plan decision gauge must ride the exposition")
+      Seq("family_int8", "oversample", "recall_target", "sample_recall")
+        .foreach { g =>
+          val scraped = lines.collect {
+            case l if l.startsWith(s"graft_serving_$g ") => l.split(' ')(1).toDouble
+          }
+          assert(scraped == Seq(snap(s"serving_$g")),
+            s"served-plan decision gauge $g must ride the exposition: $scraped")
+        }
       assert(get("/other")._1 == 404)
     } finally {
       http.close()

@@ -365,7 +365,7 @@ class ShardWorkerSpec extends AnyFunSuite with TempDirs {
         (0 until 32).foreach { _ =>
           burst.submit(new Runnable { def run(): Unit = {
             startGate.await()
-            if (router.tryReserveHedge(0.05)) granted.incrementAndGet()
+            if (router.tryReserveHedge()) granted.incrementAndGet()
             done.countDown()
           }})
         }
