@@ -24,8 +24,9 @@ import graft.Drive.timed
   *   sbt "runMain graft.ScaleProbe <sfDir> [nQueries]"
   *
   * `nQueries` (default 100) must lie in 1..n, n the fixture's row count.
-  * `SPARK_GRAFT_KNN_CELLS` (default 32) sets the graph build's centroid
-  * count, `SPARK_GRAFT_CPUS` (default 32) the local core count.
+  * The graph build and the entry seeds both use the registered queries'
+  * [[SparkEntry.KnnCells]] seed cells; `SPARK_GRAFT_CPUS` (default 32)
+  * sets the local core count.
   */
 object ScaleProbe {
   private val Usage =
@@ -46,13 +47,13 @@ object ScaleProbe {
         .select(col("id"), col("embedding"), col("user_id")).cache()
       val n = points.count()
       require(1 <= nQueries && nQueries <= n, s"$Usage (got $nQueries, rows=$n)")
-      val cells = sys.env.getOrElse("SPARK_GRAFT_KNN_CELLS", "32").toInt
+      val cells = SparkEntry.KnnCells
       val cents = Ann.seedCentroids(points, cells)
       val (graph, buildSecs) = timed {
         Ann.graphBuild(points, cents, graphK = 12, maxDegree = 16)
           .localCheckpoint()
       }
-      val seeds = Ann.seedCentroids(points, 32).orderBy("cid").collect()
+      val seeds = Ann.seedCentroids(points, cells).orderBy("cid").collect()
       val ecids = seeds.map(_.getLong(0)).toSeq
       val ecents = seeds.map(_.getSeq[Double](1).toSeq).toSeq
       def search(q: DataFrame): Long =

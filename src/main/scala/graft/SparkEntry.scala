@@ -297,9 +297,10 @@ object SparkEntry {
   private val lmModel = trained("lm")((s, dir) =>
     TextAnalysis.lmTrain(docsTable(s, dir)))
 
-  /** Seed-centroid count of `ann_knn_join` and both graph tables: their
-    * oracles replay the same 32 cells. */
-  private val KnnCells = 32
+  /** Seed-centroid count of `ann_knn_join`, both graph tables and the
+    * graph entry seeds: their oracles replay the same 32 cells, rendering
+    * the bound from this value (single-constant rule). */
+  private[graft] val KnnCells = 32
 
   /** Navigable neighbor graph per scale dir (NSW index build lifecycle):
     * built once per JVM from the bulk k-NN join (graphK=12, nprobe=2,
@@ -342,7 +343,7 @@ object SparkEntry {
   private[graft] def graphEntrySeeds(
       s: SparkSession, dir: String): (Seq[Long], Seq[Seq[Double]]) =
     graphSeedsBuilt(dir) {
-      val rows = Ann.seedCentroids(Collection.load(s, dir), 32)
+      val rows = Ann.seedCentroids(Collection.load(s, dir), KnnCells)
         .orderBy("cid").collect()
       (rows.map(_.getLong(0)).toSeq,
         rows.map(_.getSeq[Double](1).toSeq).toSeq)
@@ -530,6 +531,22 @@ object SparkEntry {
     graft.sources.CollectionStore.optimizePartitions(
       s, path, minRows = minR, maxRows = maxR, nBuckets = 8)
   }
+
+  /** IVF search of query id 0 (nprobe 4, top 10) over an indexed store,
+    * probing the store's own centroid table. */
+  private def storeIvfSearch(store: SideTable[(DataFrame, DataFrame)])
+      : (SparkSession, String) => DataFrame = (s, dir) => {
+    val (st, cents) = store(s, dir)
+    val q = st.filter(col("id") === 0).select(col("embedding").as("qemb"))
+    Ann.ivfSearch(st, cents, q, nprobe = 4, k = 10)
+  }
+
+  /** Rows per cell of an indexed store, counted on its partition column. */
+  private def storeCellRows(store: SideTable[(DataFrame, DataFrame)])
+      : (SparkSession, String) => DataFrame = (s, dir) =>
+    store(s, dir)._1.groupBy(col("cid").cast("long").as("cid"))
+      .agg(count(lit(1)).as("cell_rows"))
+      .orderBy("cid")
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Q1: flagship exact top-k cosine search (self-query vec_id=0).
@@ -1695,11 +1712,7 @@ object SparkEntry {
     // --- persisted-index read paths (CollectionStore.saveIndexed):
     // cid is a partition DIRECTORY (probes prune it), sig/pq are stored
     // columns (phase-1 scans never read the float embedding).
-    "indexed_ivf_search" -> ((s, dir) => {
-      val (store, cents) = indexedStore(s, dir)
-      val q = store.filter(col("id") === 0).select(col("embedding").as("qemb"))
-      Ann.ivfSearch(store, cents, q, nprobe = 4, k = 10)
-    }),
+    "indexed_ivf_search" -> storeIvfSearch(indexedStore),
     // Filtered search ON the persisted index: payload predicate composes
     // with cell pruning (the reference's filtered-HNSW analogue) — the
     // filter rides the partition-pruned probe scan.
@@ -1734,85 +1747,45 @@ object SparkEntry {
     // through the incremental deleteIndexed path (affected cid dirs only,
     // no compact), then the same partition-pruned probe search — deleted
     // neighbors must vanish from the top-k.
-    "indexed_delete" -> ((s, dir) => {
-      val (store, cents) = indexedStoreAfterDelete(s, dir)
-      val q = store.filter(col("id") === 0).select(col("embedding").as("qemb"))
-      Ann.ivfSearch(store, cents, q, nprobe = 4, k = 10)
-    }),
+    "indexed_delete" -> storeIvfSearch(indexedStoreAfterDelete),
     // Search over the SPLIT store (segment-split maintenance,
     // CollectionStore.splitOversizedCells): oversized cells were split
     // in place, so the same nprobe now prunes to smaller dirs. The
     // oracle replays probes + search from the persisted post-split
     // centroid table and the engine's own id→cid sidecar — store/
     // sidecar/centroid-table agreement is part of the hash.
-    "ivf_split_search" -> ((s, dir) => {
-      val (store, cents) = splitStore(s, dir)
-      val q = store.filter(col("id") === 0).select(col("embedding").as("qemb"))
-      Ann.ivfSearch(store, cents, q, nprobe = 4, k = 10)
-    }),
+    "ivf_split_search" -> storeIvfSearch(splitStore),
     // Post-split cell-size report (the maintenance decision surface):
     // Spark counts the STORE's partition column, the oracle counts the
     // SIDECAR — they hash-match only if the two artifacts agree row-set
     // for row-set, cell for cell.
-    "ivf_split_stats" -> ((s, dir) => {
-      val (store, _) = splitStore(s, dir)
-      store.groupBy(col("cid").cast("long").as("cid"))
-        .agg(count(lit(1)).as("cell_rows"))
-        .orderBy("cid")
-    }),
+    "ivf_split_stats" -> storeCellRows(splitStore),
     // Search over the MERGED store (segment-merge maintenance,
     // CollectionStore.mergeSmallCells): the smallest quartile of cells
     // folded into their nearest survivors; same oracle shape as the
     // split — probes + search replayed from the engine's own persisted
     // post-merge centroid table and sidecar.
-    "ivf_merge_search" -> ((s, dir) => {
-      val (store, cents) = mergeStore(s, dir)
-      val q = store.filter(col("id") === 0).select(col("embedding").as("qemb"))
-      Ann.ivfSearch(store, cents, q, nprobe = 4, k = 10)
-    }),
+    "ivf_merge_search" -> storeIvfSearch(mergeStore),
     // Post-merge cell-size report: store partition column (Spark) vs
     // sidecar (oracle) — artifact agreement in the hash.
-    "ivf_merge_stats" -> ((s, dir) => {
-      val (store, _) = mergeStore(s, dir)
-      store.groupBy(col("cid").cast("long").as("cid"))
-        .agg(count(lit(1)).as("cell_rows"))
-        .orderBy("cid")
-    }),
+    "ivf_merge_stats" -> storeCellRows(mergeStore),
     // Search + size report over the fully OPTIMIZED store (split+merge
     // alternating to the [N/48, N/20] band): the composed maintenance
     // pipeline's end state, replayed by the oracle from the persisted
     // sidecar/centroid artifacts like the split and merge rows.
-    "ivf_optimize_search" -> ((s, dir) => {
-      val (store, cents) = optStore(s, dir)
-      val q = store.filter(col("id") === 0).select(col("embedding").as("qemb"))
-      Ann.ivfSearch(store, cents, q, nprobe = 4, k = 10)
-    }),
+    "ivf_optimize_search" -> storeIvfSearch(optStore),
     // The C∝N deployment-regime counterpart of indexed_ivf_search
     // (VERDICT r12 #4): same nprobe-pruned search, but over the
     // optimizer-maintained cnBand store, so the GRADED config is the one
     // whose probe bytes stay flat as N grows (constant ~1250-row cells
     // at scale). Oracle replays probe selection + search from the
     // engine's own persisted sidecar/centroids.
-    "indexed_ivf_search_cn" -> ((s, dir) => {
-      val (store, cents) = cnStore(s, dir)
-      val q = store.filter(col("id") === 0).select(col("embedding").as("qemb"))
-      Ann.ivfSearch(store, cents, q, nprobe = 4, k = 10)
-    }),
+    "indexed_ivf_search_cn" -> storeIvfSearch(cnStore),
     // cell-size report over the cn store: pins the C∝N layout itself
     // (band membership is spec-pinned; the oracle pins store/sidecar
     // agreement on the exact cell populations).
-    "indexed_ivf_cn_stats" -> ((s, dir) => {
-      val (store, _) = cnStore(s, dir)
-      store.groupBy(col("cid").cast("long").as("cid"))
-        .agg(count(lit(1)).as("cell_rows"))
-        .orderBy("cid")
-    }),
-    "ivf_optimize_stats" -> ((s, dir) => {
-      val (store, _) = optStore(s, dir)
-      store.groupBy(col("cid").cast("long").as("cid"))
-        .agg(count(lit(1)).as("cell_rows"))
-        .orderBy("cid")
-    }),
+    "indexed_ivf_cn_stats" -> storeCellRows(cnStore),
+    "ivf_optimize_stats" -> storeCellRows(optStore),
     // SLAB-REFRESH PLANNER (r16): per-cell dirty manifest of a CDC batch
     // against the persisted index — the plan the serving tier's
     // incremental slab patch (SlabIO.patchCellOrdered) executes. Batch is
@@ -2185,9 +2158,6 @@ object SparkEntry {
     TextAnalysis.packSequences(s6, budgetTokens = 500, nShards = 8)
   }
 
-  /** Deterministic PII-bearing profile string derived from fixture fields
-    * (side-channel-free stand-in for the reference's free-form payload
-    * JSON, which is where real PII lands — src/api/schemas.py:19,38). */
   /** Deterministically dirtied documents for the Unicode-hygiene queries:
     * the fixture text is pure ASCII (no natural NFC/mojibake cases), so —
     * same pattern as [[piiProfile]] — inject the defect classes from
@@ -2204,6 +2174,9 @@ object SparkEntry {
           concat(lit("\ufffd\u0007"), col("text")))   // U+FFFD + BEL control
         .otherwise(col("text")))
 
+  /** Deterministic PII-bearing profile string derived from fixture fields
+    * (side-channel-free stand-in for the reference's free-form payload
+    * JSON, which is where real PII lands — src/api/schemas.py:19,38). */
   private def piiProfile(events: DataFrame): DataFrame =
     events.withColumn("profile", concat(
       lit("user"), col("user_id").cast("string"),
@@ -2219,8 +2192,8 @@ object SparkEntry {
     s"('0x' || substring(md5($x), 1, 15))::BIGINT"
   /** DuckDB word-split CTE over documents. */
   private val W = "t AS (SELECT doc_id, text, source, string_split(text, ' ') AS w FROM documents)"
-  /** DuckDB distinct 3-gram shingle CTE (follows t). */
-  /** Sorted distinct 60-bit shingle-hash sets (mirrors TextOps.shingleHashSet). */
+  /** DuckDB distinct 3-gram shingle CTE (follows t): sorted distinct
+    * 60-bit shingle-hash sets (mirrors TextOps.shingleHashSet). */
   private val SH =
     """sh AS (SELECT doc_id, source, list_sort(list_distinct(list_transform(
       |  list_distinct(list_transform(range(greatest(len(w)-2, 0)),
@@ -2245,6 +2218,404 @@ object SparkEntry {
   /** DuckDB glob over the parquet files of a side table (its path from
     * [[SideTable.path]] on the oracle's scale dir). */
   private def glob(path: String): String = s"'$path/*.parquet'"
+
+  /** Exact k-NN of query id 0 (score ≥ 0.1, top 10): the one oracle of
+    * every search that must answer it — `knn_search`, its literal-inline
+    * form `knn_search_direct`, and the exact tiers the adaptive and policy
+    * searches pick at fixture scale. */
+  private val KnnExactSql =
+    s"""WITH $C, q AS (SELECT ne AS qe FROM c WHERE id = 0),
+       |s AS (SELECT c.id, round(list_dot_product(c.ne, q.qe), 6) AS score, c.user_id FROM c, q)
+       |SELECT id, score, user_id FROM s WHERE score >= 0.1
+       |ORDER BY score DESC, id ASC LIMIT 10""".stripMargin
+
+  /** 1:N verification of user 5 against query id 0 (best score ≥ 0.65). */
+  private val VerifySql =
+    s"""WITH $C, q AS (SELECT ne AS qe FROM c WHERE id = 0),
+       |s AS (SELECT c.user_id, round(list_dot_product(c.ne, q.qe), 6) AS score
+       |      FROM c, q WHERE c.user_id = 5)
+       |SELECT user_id, max(score) AS best_score,
+       |       (max(score) >= 0.65)::INT AS verified
+       |FROM s GROUP BY user_id""".stripMargin
+
+  /** Int8 two-phase search: 30 survivors of the scalar-quantized dot
+    * product, rescored exactly (on the fly and over the indexed store). */
+  private val TwoPhaseInt8Sql =
+    s"""WITH $C, q0 AS (SELECT ne AS qe FROM c WHERE id = 0),
+       |qq AS (SELECT qe, list_transform(qe, x -> greatest(-127, least(127, round(x*127)::INT))) AS qv FROM q0),
+       |pq AS (SELECT c.id, c.user_id, c.ne,
+       |  list_transform(c.ne, x -> greatest(-127, least(127, round(x*127)::INT))) AS pv FROM c),
+       |phase1 AS (SELECT pq.id, pq.user_id, pq.ne, qq.qe,
+       |  round(list_dot_product(pq.pv::DOUBLE[], qq.qv::DOUBLE[]) / 16129.0, 6) AS cheap
+       |  FROM pq, qq ORDER BY cheap DESC, id ASC LIMIT 30)
+       |SELECT id, round(list_dot_product(ne, qe), 6) AS score, user_id FROM phase1
+       |ORDER BY score DESC, id ASC LIMIT 10""".stripMargin
+
+  /** Binary-quantized two-phase search (on the fly and over the indexed
+    * store). Tie-inclusive phase 1: every row scoring >= the 320th cheap
+    * score (k 10 × oversample 32) survives (mirrors Quantization.twoPhase
+    * tieInclusive). */
+  private val BinaryQuantSql =
+    s"""WITH $C,
+       |sg AS (SELECT id, user_id, ne, ${bsig("ne")} AS sig FROM c),
+       |q AS (SELECT ne AS qe, sig AS qsig FROM sg WHERE id = 0),
+       |p0 AS (SELECT sg.id, sg.user_id, sg.ne, q.qe,
+       |  (64 - bit_count(xor(sg.sig, q.qsig)))::INT AS cheap_score FROM sg, q),
+       |cut AS (SELECT min(cheap_score) AS cs FROM
+       |  (SELECT cheap_score FROM p0 ORDER BY cheap_score DESC, id ASC LIMIT 320)),
+       |p1 AS (SELECT p0.* FROM p0, cut WHERE p0.cheap_score >= cut.cs)
+       |SELECT id, round(list_dot_product(ne, qe), 6) AS score, cheap_score, user_id
+       |FROM p1 ORDER BY score DESC, id ASC LIMIT 10""".stripMargin
+
+  /** A migrated collection's rows (npy and faiss imports alike). */
+  private val MigrateSql =
+    """SELECT vec_id AS id, 'migrated_user_' || vec_id AS user_id,
+      |  len(embedding)::INT AS dim,
+      |  round(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]), 6) AS sq_norm
+      |FROM embeddings ORDER BY id""".stripMargin
+
+  /** Hourly tumbling-window counts per event type (batch and streaming). */
+  private val HourlyWindowSql =
+    """SELECT date_trunc('hour', ts) AS window_start, event_type,
+      |  count(*)::BIGINT AS n_events,
+      |  sum(value::DECIMAL(18,2))::DOUBLE AS sum_value
+      |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
+
+  /** Per-user sessions split at gaps over 30 minutes (batch and
+    * streaming). */
+  private val SessionizeSql =
+    """WITH e AS (SELECT *, lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts FROM events),
+      |f AS (SELECT *, CASE WHEN prev_ts IS NULL OR date_diff('second', prev_ts, ts) > 1800
+      |                     THEN 1 ELSE 0 END AS new_session FROM e),
+      |g AS (SELECT *, sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS session_id FROM f)
+      |SELECT user_id, session_id::BIGINT AS session_id, min(ts) AS session_start,
+      |  max(ts) AS session_end, count(*)::BIGINT AS n_events,
+      |  sum(value::DECIMAL(18,2))::DOUBLE AS total_value
+      |FROM g GROUP BY user_id, session_id ORDER BY user_id, session_id""".stripMargin
+
+  /** IVF centroid CTE `cent(cid, ce)` over a persisted centroid table. */
+  private def centFrom(path: String): String =
+    s"cent AS (SELECT cid, ce FROM read_parquet(${glob(path)}))"
+
+  /** IVF cell assignment replay (Ann.ivfAssign): each point of `c` ranks
+    * the `cent` rows by round(x·c, 6), lowest cid on ties; rn = 1 is its
+    * cell. `cols` are the point columns `asgn` carries. */
+  private def ivfAsgnCte(cols: String): String =
+    s"""asgn AS (SELECT $cols, cent.cid,
+       |  row_number() OVER (PARTITION BY c.id
+       |    ORDER BY round(list_dot_product(c.ne, cent.ce), 6) DESC, cent.cid ASC) AS rn
+       |  FROM c, cent)""".stripMargin
+
+  /** The assigned points with their search columns,
+    * `pts(id, user_id, ne, cid)`. */
+  private val IvfPts =
+    s"""${ivfAsgnCte("c.id, c.user_id, c.ne")},
+       |pts AS (SELECT id, user_id, ne, cid FROM asgn WHERE rn = 1)""".stripMargin
+
+  /** IVF probe replay: the `n` centroids nearest the query `q`, lowest cid
+    * on ties. */
+  private def ivfProbesCte(n: Int): String =
+    s"""probes AS (SELECT cent.cid FROM cent, q
+       |  ORDER BY round(list_dot_product(cent.ce, q.qe), 6) DESC, cent.cid ASC LIMIT $n)""".stripMargin
+
+  /** IVF cell replay of query id 0: the centroid CTE `cent`, the assigned
+    * `pts`, the query `q` and its `nprobe` nearest cells `probes`. */
+  private def ivfCellCtes(cent: String, nprobe: Int): String =
+    s"""$cent,
+       |$IvfPts,
+       |q AS (SELECT ne AS qe FROM c WHERE id = 0),
+       |${ivfProbesCte(nprobe)}""".stripMargin
+
+  /** IVF search of query id 0 (Ann.ivfSearch, nprobe 4, top 10) over the
+    * cells of centroid CTE `cent`. `filter` holds conjuncts, each ending
+    * in `AND `, that a probed point must also pass (empty for none). */
+  private def ivfSearchOracle(cent: String, filter: String): String =
+    s"""WITH $C,
+       |${ivfCellCtes(cent, 4)},
+       |s AS (SELECT p.id, round(list_dot_product(p.ne, q.qe), 6) AS score, p.user_id
+       |  FROM pts p, q WHERE ${filter}p.cid IN (SELECT cid FROM probes))
+       |SELECT id, score, user_id FROM s ORDER BY score DESC, id ASC LIMIT 10""".stripMargin
+
+  /** IVF search of query id 0 over a [[maintainedStore]] at `path`: probes
+    * over the store's own `_centroids` table, cells from its flat id→cid
+    * sidecar `_idsflat` (the persisted assignment, not a replay). */
+  private def storeSearchOracle(path: String): String =
+    s"""WITH $C,
+       |${centFrom(path + "_centroids")},
+       |asgn AS (SELECT id, cid FROM read_parquet(${glob(path + "_idsflat")})),
+       |q AS (SELECT ne AS qe FROM c WHERE id = 0),
+       |${ivfProbesCte(4)},
+       |s AS (SELECT c.id, round(list_dot_product(c.ne, q.qe), 6) AS score, c.user_id
+       |  FROM c JOIN asgn USING (id), q
+       |  WHERE asgn.cid IN (SELECT cid FROM probes))
+       |SELECT id, score, user_id FROM s ORDER BY score DESC, id ASC LIMIT 10""".stripMargin
+
+  /** Rows per cell of a [[maintainedStore]]'s sidecar at `path`. */
+  private def storeCellRowsOracle(path: String): String =
+    s"""SELECT cid, count(*)::BIGINT AS cell_rows
+       |FROM read_parquet(${glob(path + "_idsflat")})
+       |GROUP BY cid ORDER BY cid""".stripMargin
+
+  /** Filter-cardinality planner replay (Ann.filteredSearchPlanned): both
+    * branches are computed for the `user_id` predicate `pred`, and its
+    * match count against `maxExact` gates which one emits rows — the
+    * strategy column pins the decision. */
+  private def plannerOracle(dir: String, pred: String, maxExact: Int): String =
+    s"""WITH $C,
+       |m AS (SELECT count(*) AS mc FROM c WHERE $pred),
+       |q AS (SELECT ne AS qe FROM c WHERE id = 0),
+       |ex AS (SELECT p.id, round(list_dot_product(p.ne, q.qe), 6) AS score,
+       |         p.user_id, 'exact_filtered' AS strategy
+       |       FROM c p, q WHERE p.$pred
+       |       ORDER BY score DESC, p.id ASC LIMIT 10),
+       |${centFrom(trainedCentroids.path(dir))},
+       |$IvfPts,
+       |${ivfProbesCte(4)},
+       |iv AS (SELECT p.id, round(list_dot_product(p.ne, q.qe), 6) AS score,
+       |         p.user_id, 'ivf_postfilter' AS strategy
+       |       FROM pts p, q WHERE p.$pred AND p.cid IN (SELECT cid FROM probes)
+       |       ORDER BY score DESC, p.id ASC LIMIT 10)
+       |SELECT * FROM ex WHERE (SELECT mc FROM m) <= $maxExact
+       |UNION ALL
+       |SELECT * FROM iv WHERE (SELECT mc FROM m) > $maxExact""".stripMargin
+
+  /** Slab-refresh planner replay over [[refreshBatch]]: old cells by the
+    * argmax the store was built with, new cells of the negated upserts,
+    * and per cell the rows before, the adds and the drops (`bef`, `ad`,
+    * `dr`). */
+  private def slabRefreshCtes(dir: String): String =
+    s"""WITH $C,
+       |${centFrom(trainedCentroids.path(dir))},
+       |${ivfAsgnCte("c.id")},
+       |pts AS (SELECT id, cid FROM asgn WHERE rn = 1),
+       |up AS (SELECT id, list_transform(ne, x -> -x) AS ne2 FROM c WHERE id % 17 = 3),
+       |del AS (SELECT id FROM c WHERE id % 23 = 5),
+       |newa AS (SELECT up.id, cent.cid,
+       |  row_number() OVER (PARTITION BY up.id
+       |    ORDER BY round(list_dot_product(up.ne2, cent.ce), 6) DESC, cent.cid ASC) AS rn
+       |  FROM up, cent),
+       |newc AS (SELECT id, cid FROM newa
+       |  WHERE rn = 1 AND id NOT IN (SELECT id FROM del)),
+       |touched AS (SELECT id FROM up UNION SELECT id FROM del),
+       |dr AS (SELECT p.cid, count(*)::BIGINT AS drops
+       |  FROM pts p JOIN touched t USING (id) GROUP BY p.cid),
+       |ad AS (SELECT cid, count(*)::BIGINT AS adds FROM newc GROUP BY cid),
+       |bef AS (SELECT cid, count(*)::BIGINT AS rows_before FROM pts GROUP BY cid)""".stripMargin
+
+  /** LSH bucket replay: each point's bucket is the string of its signs
+    * ('1' for round(x·h, 6) ≥ 0) against the hyperplanes of the `hp` CTE,
+    * in hid order. `keys` groups the signatures: `c.id` for one table,
+    * `c.id, hp.ti` for one per table. */
+  private def lshSigCtes(hp: String, keys: String): String =
+    s"""$hp,
+       |sig AS (SELECT $keys, string_agg(
+       |    CASE WHEN round(list_dot_product(c.ne, hp.he), 6) >= 0 THEN '1' ELSE '0' END,
+       |    '' ORDER BY hp.hid) AS bucket
+       |  FROM c, hp GROUP BY $keys)""".stripMargin
+
+  /** One LSH table over the 12 hyperplanes of points 100-111: the
+    * bucketed points `pts`, query id 0 `q` and its bucket `qb`. */
+  private val LshOneTable =
+    s"""${lshSigCtes("hp AS (SELECT id AS hid, ne AS he FROM c WHERE id >= 100 AND id < 112)", "c.id")},
+       |pts AS (SELECT c.id, c.user_id, c.ne, sig.bucket FROM c JOIN sig ON c.id = sig.id),
+       |q AS (SELECT ne AS qe FROM c WHERE id = 0),
+       |qb AS (SELECT bucket FROM pts WHERE id = 0)""".stripMargin
+
+  /** Twelve LSH tables `ti` of 4 hyperplanes each, points 100-147. */
+  private val LshTables = lshSigCtes(
+    """hp AS (SELECT id AS hid, ((id - 100) // 4)::INT AS ti, ne AS he
+      |       FROM c WHERE id >= 100 AND id < 148)""".stripMargin, "c.id, hp.ti")
+
+  /** k-NN-join replay (Ann.knnJoin over Ann.seedCentroids): the first
+    * [[KnnCells]] points are the seed cells; each point's data side is
+    * its nearest cell and its query side its `nprobe` nearest (round(x·c,
+    * 6), lowest cid on ties); the candidates of a query are the other
+    * points of its query-side cells, ranked in `${pre}r`. Every CTE but
+    * `cent` carries the name prefix `pre`. */
+  private def knnJoinCtes(pre: String, nprobe: Int): String =
+    s"""cent AS (SELECT id AS cid, ne AS ce FROM c WHERE id < $KnnCells),
+       |${pre}scored AS (SELECT p.id, ct.cid,
+       |  row_number() OVER (PARTITION BY p.id
+       |    ORDER BY round(list_dot_product(p.ne, ct.ce), 6) DESC, ct.cid ASC) AS rn
+       |  FROM c p, cent ct),
+       |${pre}dside AS (SELECT id, cid FROM ${pre}scored WHERE rn = 1),
+       |${pre}qside AS (SELECT id AS qid, cid FROM ${pre}scored WHERE rn <= $nprobe),
+       |${pre}cand AS (SELECT q.qid, d.id,
+       |    round(list_dot_product(qc.ne, dc.ne), 6) AS score
+       |  FROM ${pre}qside q
+       |  JOIN ${pre}dside d ON q.cid = d.cid AND q.qid <> d.id
+       |  JOIN c qc ON qc.id = q.qid
+       |  JOIN c dc ON dc.id = d.id),
+       |${pre}r AS (SELECT qid, id, score,
+       |    row_number() OVER (PARTITION BY qid ORDER BY score DESC, id ASC) AS rank
+       |  FROM ${pre}cand)""".stripMargin
+
+  /** Graph-build replay (Ann.graphBuild): the k-NN join over `nprobe`
+    * cells keeps `graphK` neighbors per point, the edges are made
+    * undirected (max score per pair), and each source keeps its best
+    * `maxDegree`: the graph CTE `g` with columns `cols`. */
+  private def graphBuildCtes(nprobe: Int, graphK: Int, maxDegree: Int,
+      g: String, cols: String): String =
+    s"""${knnJoinCtes("g", nprobe)},
+       |kn AS MATERIALIZED (SELECT qid, id, score FROM gr WHERE rank <= $graphK),
+       |und AS (SELECT src, dst, max(score) AS score FROM (
+       |    SELECT qid AS src, id AS dst, score FROM kn
+       |    UNION ALL SELECT id AS src, qid AS dst, score FROM kn)
+       |  GROUP BY src, dst),
+       |$g AS MATERIALIZED (SELECT $cols FROM (SELECT $cols,
+       |    row_number() OVER (PARTITION BY src ORDER BY score DESC, dst ASC) AS rn
+       |  FROM und) WHERE rn <= $maxDegree)""".stripMargin
+
+  /** Solo beam-descent replay (Ann.graphBeamSearch) of query id 0 over
+    * the points of table `t(id, ne, user_id)`, graph `g` and entry cells
+    * `cent`: enter at the nearest seed, then `hops` stages (neighbor hop
+    * minus visited, score, union, frontier = top-`beam` of visited minus
+    * expanded); `v$hops` is the visited set. */
+  private def beamCtes(t: String, hops: Int, beam: Int): String = {
+    val b = Seq.newBuilder[String]
+    b += s"""q AS MATERIALIZED (SELECT ne AS qe FROM $t WHERE id = 0),
+       |ent AS (SELECT cid AS id FROM cent, q
+       |  ORDER BY round(list_dot_product(ce, q.qe), 6) DESC, cid ASC LIMIT 1),
+       |v0 AS MATERIALIZED (SELECT $t.id, round(list_dot_product($t.ne, q.qe), 6) AS score, $t.user_id
+       |  FROM $t JOIN ent ON $t.id = ent.id, q),
+       |f0 AS MATERIALIZED (SELECT id FROM v0),
+       |e0 AS MATERIALIZED (SELECT id FROM v0 WHERE FALSE)""".stripMargin
+    // every per-hop state CTE is MATERIALIZED: DuckDB inlines CTEs by
+    // default, and the hop recurrence references each prior frame 2-3
+    // times — inlining re-expands the whole chain (and the graph build
+    // under it) exponentially in `hops`; materialization makes the oracle
+    // replay the same bounded per-hop work the Spark plan does
+    for (r <- 1 to hops) {
+      val p = r - 1
+      b += s"""n$r AS MATERIALIZED (SELECT DISTINCT g.dst AS id FROM g JOIN f$p ON g.src = f$p.id
+         |  WHERE g.dst NOT IN (SELECT id FROM v$p)),
+         |s$r AS MATERIALIZED (SELECT $t.id, round(list_dot_product($t.ne, q.qe), 6) AS score, $t.user_id
+         |  FROM $t JOIN n$r USING (id), q),
+         |v$r AS MATERIALIZED (SELECT * FROM v$p UNION ALL SELECT * FROM s$r),
+         |e$r AS MATERIALIZED (SELECT id FROM e$p UNION SELECT id FROM f$p),
+         |f$r AS MATERIALIZED (SELECT id FROM v$r WHERE id NOT IN (SELECT id FROM e$r)
+         |  ORDER BY score DESC, id ASC LIMIT $beam)""".stripMargin
+    }
+    b.result().mkString(",\n")
+  }
+
+  /** Batched entry: each query of `qs(qid, qe)` enters at its nearest
+    * seed of `cent`, the first frontier of its own descent. */
+  private val BeamBatchEntry =
+    """ent AS (SELECT qid, cid AS id FROM (SELECT q.qid, cent.cid,
+      |    row_number() OVER (PARTITION BY q.qid
+      |      ORDER BY round(list_dot_product(cent.ce, q.qe), 6) DESC, cent.cid ASC) AS rn
+      |  FROM cent, qs q) WHERE rn = 1),
+      |v0 AS MATERIALIZED (SELECT e.qid, c.id,
+      |    round(list_dot_product(c.ne, q.qe), 6) AS score, c.user_id
+      |  FROM ent e JOIN c ON c.id = e.id JOIN qs q ON q.qid = e.qid),
+      |f0 AS MATERIALIZED (SELECT qid, id FROM v0),
+      |e0 AS MATERIALIZED (SELECT qid, id FROM v0 WHERE FALSE)""".stripMargin
+
+  /** Batched hop chain after [[BeamBatchEntry]]: the solo recurrence of
+    * [[beamCtes]] with a qid column on every state and every window
+    * partitioned by it; anti-joins replace NOT IN (per-qid membership).
+    * Hop CTE names carry the suffix `sfx`, so several beams can descend
+    * from the one shared entry. */
+  private def beamBatchHops(hops: Int, beam: Int, sfx: String): String =
+    (1 to hops).map { r =>
+      val p = if (r == 1) "0" else s"${r - 1}$sfx"
+      val h = s"$r$sfx"
+      s"""n$h AS MATERIALIZED (SELECT DISTINCT f.qid, g.dst AS id
+         |  FROM g JOIN f$p f ON g.src = f.id
+         |  LEFT JOIN v$p v ON v.qid = f.qid AND v.id = g.dst
+         |  WHERE v.qid IS NULL),
+         |s$h AS MATERIALIZED (SELECT n.qid, c.id,
+         |    round(list_dot_product(c.ne, q.qe), 6) AS score, c.user_id
+         |  FROM n$h n JOIN c USING (id) JOIN qs q ON q.qid = n.qid),
+         |v$h AS MATERIALIZED (SELECT * FROM v$p UNION ALL SELECT * FROM s$h),
+         |e$h AS MATERIALIZED (SELECT qid, id FROM e$p UNION SELECT qid, id FROM f$p),
+         |f$h AS MATERIALIZED (SELECT qid, id FROM (SELECT v.qid, v.id,
+         |    row_number() OVER (PARTITION BY v.qid
+         |      ORDER BY v.score DESC, v.id ASC) AS rn
+         |  FROM v$h v LEFT JOIN e$h e ON e.qid = v.qid AND e.id = v.id
+         |  WHERE e.qid IS NULL) WHERE rn <= $beam)""".stripMargin
+    }.mkString(",\n")
+
+  /** PQ codebook CTE `name(sub, code, cent, caug)` over a persisted
+    * codebook table: `caug` = cent ++ [−|cent|²/2], so a sub-vector's
+    * L2-nearest code is the argmax of [x, 1]·caug. */
+  private def pqCodebookCte(name: String, path: String): String =
+    s"""$name AS (SELECT sub, code, cent,
+       |  cent || [-list_dot_product(cent, cent) / 2.0] AS caug
+       |  FROM read_parquet(${glob(path)}))""".stripMargin
+
+  /** Flat PQ replay (Quantization.pqEncode + pqAdcSearch, 8 subspaces of
+    * 8 dims) over the rows of `t(id, ne)` with codebook `cb`: each
+    * sub-vector's code (6dp argmax, lowest code on ties), query `q`'s LUT,
+    * and each row's 6dp ADC score `adc(id, adc)`. */
+  private def pqFlatAdcCtes(t: String): String =
+    s"""sv AS (SELECT $t.id, s.range::INT AS sub,
+       |  list_slice($t.ne, s.range*8 + 1, s.range*8 + 8) AS xs FROM $t, range(8) s),
+       |dist AS (SELECT sv.id, sv.sub, cb.code,
+       |  row_number() OVER (PARTITION BY sv.id, sv.sub
+       |    ORDER BY round(list_dot_product(sv.xs || [1.0], cb.caug), 6) DESC, cb.code ASC) AS rn
+       |  FROM sv JOIN cb USING (sub)),
+       |codes AS (SELECT id, sub, code FROM dist WHERE rn = 1),
+       |luts AS (SELECT codes.id, codes.sub,
+       |  list_dot_product(list_slice(q.qe, codes.sub*8 + 1, codes.sub*8 + 8), cb.cent) AS l
+       |  FROM codes JOIN cb USING (sub, code), q),
+       |adc AS (SELECT id,
+       |  round(list_reduce([0.0::DOUBLE] || list(l ORDER BY sub), (a, b) -> a + b), 6) AS adc
+       |  FROM luts GROUP BY id)""".stripMargin
+
+  /** Residual PQ replay (Quantization.ivfPqResidualSearch) over the probed
+    * rows `pp(id, ne, ce)` with codebook `${pre}cb`: codes of the residual
+    * sub-vectors x − c(cell), query `q`'s LUT, and each row's 6dp residual
+    * ADC sum `${pre}radc(id, adc6)`. CTE names carry the prefix `pre`. */
+  private def pqResidualAdcCtes(pre: String): String =
+    s"""${pre}sv AS (SELECT pp.id, s.range::INT AS sub,
+       |  list_slice(pp.ne, s.range*8 + 1, s.range*8 + 8) AS xs,
+       |  list_slice(pp.ce, s.range*8 + 1, s.range*8 + 8) AS cs
+       |  FROM pp, range(8) s),
+       |${pre}rv AS (SELECT id, sub,
+       |  [xs[1]-cs[1], xs[2]-cs[2], xs[3]-cs[3], xs[4]-cs[4],
+       |   xs[5]-cs[5], xs[6]-cs[6], xs[7]-cs[7], xs[8]-cs[8]] AS rs
+       |  FROM ${pre}sv),
+       |${pre}dist AS (SELECT ${pre}rv.id, ${pre}rv.sub, ${pre}cb.code,
+       |  row_number() OVER (PARTITION BY ${pre}rv.id, ${pre}rv.sub
+       |    ORDER BY round(list_dot_product(${pre}rv.rs || [1.0], ${pre}cb.caug), 6) DESC, ${pre}cb.code ASC) AS rn
+       |  FROM ${pre}rv JOIN ${pre}cb USING (sub)),
+       |${pre}codes AS (SELECT id, sub, code FROM ${pre}dist WHERE rn = 1),
+       |${pre}luts AS (SELECT ${pre}codes.id, ${pre}codes.sub,
+       |  list_dot_product(list_slice(q.qe, ${pre}codes.sub*8 + 1, ${pre}codes.sub*8 + 8), ${pre}cb.cent) AS l
+       |  FROM ${pre}codes JOIN ${pre}cb USING (sub, code), q),
+       |${pre}radc AS (SELECT id,
+       |  round(list_reduce([0.0::DOUBLE] || list(l ORDER BY sub), (a, b) -> a + b), 6) AS adc6
+       |  FROM ${pre}luts GROUP BY id)""".stripMargin
+
+  /** Exact rescore `f(id, score, user_id)` of the phase-1 survivors `p1`
+    * among the rows of `t`. */
+  private def pqRescoreCte(t: String): String =
+    s"""f AS (SELECT $t.id, round(list_dot_product($t.ne, q.qe), 6) AS score, $t.user_id
+       |  FROM $t JOIN p1 USING (id), q)""".stripMargin
+
+  /** Adaptive-budget residual IVF-PQ replay of query id 0: the residual
+    * search over `nprobe` trained cells, phase 1 keeping the top `fk` by
+    * ADC — `fk` an SQL expression over the probed rows `pp`, exactly
+    * Spark's one partition-pruned count. Ends at the rescore `f`; the
+    * caller appends the final SELECT. */
+  private def pqResidualAdaptiveCtes(dir: String, nprobe: Int,
+      fk: String): String =
+    s"""WITH $C,
+       |${ivfCellCtes(centFrom(trainedCentroids.path(dir)), nprobe)},
+       |pp AS MATERIALIZED (SELECT pts.*, cent.ce FROM pts JOIN cent USING (cid)
+       |  WHERE cid IN (SELECT cid FROM probes)),
+       |cut AS (SELECT $fk::BIGINT AS fk FROM pp),
+       |${pqCodebookCte("cb", pqResCodebookDf.path(dir))},
+       |${pqResidualAdcCtes("")},
+       |adc AS (SELECT pp.id,
+       |  round(list_dot_product(pp.ce, q.qe) + radc.adc6, 6) AS adc
+       |  FROM pp JOIN radc USING (id), q),
+       |p1 AS (SELECT id FROM (SELECT id,
+       |    row_number() OVER (ORDER BY adc DESC, id ASC) AS rn FROM adc), cut
+       |  WHERE rn <= cut.fk),
+       |${pqRescoreCte("pp")}""".stripMargin
 
   /** Variance-report replay from the persisted PCA model side table —
     * shared by `pca_variance` (batch-trained Spark side) and
@@ -2272,41 +2643,13 @@ object SparkEntry {
     * variants encode identically, so one SQL serves both). */
   private def pqAdcOracle(dir: String): String =
     s"""WITH $C,
-       |cb AS (SELECT sub, code, cent,
-       |  cent || [-list_dot_product(cent, cent) / 2.0] AS caug
-       |  FROM read_parquet(${glob(pqCodebookDf.path(dir))})),
+       |${pqCodebookCte("cb", pqCodebookDf.path(dir))},
        |q AS (SELECT ne AS qe FROM c WHERE id = 0),
-       |sv AS (SELECT c.id, s.range::INT AS sub,
-       |  list_slice(c.ne, s.range*8 + 1, s.range*8 + 8) AS xs FROM c, range(8) s),
-       |dist AS (SELECT sv.id, sv.sub, cb.code,
-       |  row_number() OVER (PARTITION BY sv.id, sv.sub
-       |    ORDER BY round(list_dot_product(sv.xs || [1.0], cb.caug), 6) DESC, cb.code ASC) AS rn
-       |  FROM sv JOIN cb USING (sub)),
-       |codes AS (SELECT id, sub, code FROM dist WHERE rn = 1),
-       |luts AS (SELECT codes.id, codes.sub,
-       |  list_dot_product(list_slice(q.qe, codes.sub*8 + 1, codes.sub*8 + 8), cb.cent) AS l
-       |  FROM codes JOIN cb USING (sub, code), q),
-       |adc AS (SELECT id,
-       |  round(list_reduce([0.0::DOUBLE] || list(l ORDER BY sub), (a, b) -> a + b), 6) AS adc
-       |  FROM luts GROUP BY id),
+       |${pqFlatAdcCtes("c")},
        |p1 AS (SELECT id FROM adc ORDER BY adc DESC, id ASC LIMIT 320),
-       |f AS (SELECT c.id, round(list_dot_product(c.ne, q.qe), 6) AS score, c.user_id
-       |  FROM c JOIN p1 USING (id), q)
+       |${pqRescoreCte("c")}
        |SELECT id, score, user_id FROM f ORDER BY score DESC, id ASC LIMIT 10""".stripMargin
 
-  /** Calibrated-PQ oracle: replays [[Quantization.pqCalibrateBudget]] +
-    * the final [[Quantization.pqAdcSearch]] end to end. Per ladder tier:
-    * encode every point (per-subspace argmin via the caug trick, same
-    * 6dp/lowest-code tiebreak as pqEncode), ADC-rank per sample query,
-    * keep 32·k, rescore exactly, rank ≤ k — then the tier's recall is
-    * the integer match count against the exact per-query top-k. The
-    * CASE picks the first tier clearing the shared target, and the
-    * output is that tier's qid=0 block with the chosen budget as
-    * columns. All constants render from the SAME Scala values the engine
-    * calibrates with (single-constant rule). Per-tier CTEs are
-    * MATERIALIZED: the choice CASE references every tier's recall, and
-    * inlining would re-expand each tier's whole encode chain per
-    * reference. */
   /** Shared CTE builders for the ladder-walk oracles (pq_calibrated and
     * ann_family_calibrated): per tier, the budget-INDEPENDENT encode/ADC
     * block, and a budget-specific rescore/recall block (fetchK + a name
@@ -2321,9 +2664,7 @@ object SparkEntry {
   }
   private def pqLadderTierCtes(dir: String, t: Int, m: Int): String = {
     val dsub = 64 / m
-    s"""cb$t AS (SELECT sub, code, cent,
-       |  cent || [-list_dot_product(cent, cent) / 2.0] AS caug
-       |  FROM read_parquet(${glob(pqCalCodebookDf(t).path(dir))})),
+    s"""${pqCodebookCte(s"cb$t", pqCalCodebookDf(t).path(dir))},
        |codes$t AS MATERIALIZED (SELECT id, sub, code FROM (
        |  SELECT sv.id, sv.sub, cb.code,
        |    row_number() OVER (PARTITION BY sv.id, sv.sub
@@ -2354,6 +2695,19 @@ object SparkEntry {
        |  (SELECT count(*) FROM exact) AS r
        |  FROM res$t$sfx h JOIN exact e ON h.qid = e.qid AND h.id = e.id)""".stripMargin
 
+  /** Calibrated-PQ oracle: replays [[Quantization.pqCalibrateBudget]] +
+    * the final [[Quantization.pqAdcSearch]] end to end. Per ladder tier:
+    * encode every point (per-subspace argmin via the caug trick, same
+    * 6dp/lowest-code tiebreak as pqEncode), ADC-rank per sample query,
+    * keep 32·k, rescore exactly, rank ≤ k — then the tier's recall is
+    * the integer match count against the exact per-query top-k. The
+    * CASE picks the first tier clearing the shared target, and the
+    * output is that tier's qid=0 block with the chosen budget as
+    * columns. All constants render from the SAME Scala values the engine
+    * calibrates with (single-constant rule). Per-tier CTEs are
+    * MATERIALIZED: the choice CASE references every tier's recall, and
+    * inlining would re-expand each tier's whole encode chain per
+    * reference. */
   private def pqCalibratedOracle(dir: String): String = {
     val k = 10
     val fetchK = (k * 32.0).toInt
@@ -2432,15 +2786,11 @@ object SparkEntry {
        |wrec AS (SELECT (CASE w.tier $recCase END)::DOUBLE AS r FROM wch w)""".stripMargin
     // residual IVF-PQ machinery (the ivf_pq_residual_search replay) at
     // the LCB-curve-inverted nprobe; two rescore budgets share phase 1
-    b += s"""cent AS (SELECT cid, ce FROM read_parquet(${glob(trainedCentroids.path(dir))})),
+    b += s"""${centFrom(trainedCentroids.path(dir))},
        |crv AS (SELECT p, lcb FROM read_parquet(${glob(nprobeCurveDf.path(dir))})),
        |npsel AS (SELECT coalesce((SELECT min(p) FROM crv WHERE lcb >= $target),
        |  (SELECT count(*) FROM cent))::INT AS np),
-       |asgn AS (SELECT c.id, c.user_id, c.ne, cent.cid,
-       |  row_number() OVER (PARTITION BY c.id
-       |    ORDER BY round(list_dot_product(c.ne, cent.ce), 6) DESC, cent.cid ASC) AS rn
-       |  FROM c, cent),
-       |pts AS (SELECT id, user_id, ne, cid FROM asgn WHERE rn = 1),
+       |$IvfPts,
        |q AS (SELECT ne AS qe FROM c WHERE id = 0),
        |prord AS (SELECT cent.cid, row_number() OVER (
        |    ORDER BY round(list_dot_product(cent.ce, q.qe), 6) DESC, cent.cid ASC) AS rn
@@ -2448,28 +2798,8 @@ object SparkEntry {
        |probes AS (SELECT cid FROM prord, npsel WHERE rn <= npsel.np),
        |pp AS MATERIALIZED (SELECT pts.*, cent.ce FROM pts JOIN cent USING (cid)
        |  WHERE cid IN (SELECT cid FROM probes)),
-       |rcb AS (SELECT sub, code, cent,
-       |  cent || [-list_dot_product(cent, cent) / 2.0] AS caug
-       |  FROM read_parquet(${glob(pqResCodebookDf.path(dir))})),
-       |rsv AS (SELECT pp.id, s.range::INT AS sub,
-       |  list_slice(pp.ne, s.range*8 + 1, s.range*8 + 8) AS xs,
-       |  list_slice(pp.ce, s.range*8 + 1, s.range*8 + 8) AS cs
-       |  FROM pp, range(8) s),
-       |rrv AS (SELECT id, sub,
-       |  [xs[1]-cs[1], xs[2]-cs[2], xs[3]-cs[3], xs[4]-cs[4],
-       |   xs[5]-cs[5], xs[6]-cs[6], xs[7]-cs[7], xs[8]-cs[8]] AS rs
-       |  FROM rsv),
-       |rdist AS (SELECT rrv.id, rrv.sub, rcb.code,
-       |  row_number() OVER (PARTITION BY rrv.id, rrv.sub
-       |    ORDER BY round(list_dot_product(rrv.rs || [1.0], rcb.caug), 6) DESC, rcb.code ASC) AS rn
-       |  FROM rrv JOIN rcb USING (sub)),
-       |rcodes AS (SELECT id, sub, code FROM rdist WHERE rn = 1),
-       |rluts AS (SELECT rcodes.id, rcodes.sub,
-       |  list_dot_product(list_slice(q.qe, rcodes.sub*8 + 1, rcodes.sub*8 + 8), rcb.cent) AS l
-       |  FROM rcodes JOIN rcb USING (sub, code), q),
-       |rradc AS (SELECT id,
-       |  round(list_reduce([0.0::DOUBLE] || list(l ORDER BY sub), (a, b) -> a + b), 6) AS adc6
-       |  FROM rluts GROUP BY id),
+       |${pqCodebookCte("rcb", pqResCodebookDf.path(dir))},
+       |${pqResidualAdcCtes("r")},
        |radc AS MATERIALIZED (SELECT pp.id,
        |  round(list_dot_product(pp.ce, q.qe) + rradc.adc6, 6) AS adc
        |  FROM pp JOIN rradc USING (id), q),
@@ -2513,65 +2843,17 @@ object SparkEntry {
   }
 
   /** Unrolled graph-ANN oracle (mirrors graphTable + Ann.graphBeamSearch):
-    * knnJoin replay (C=32 seed cells, rn<=2 probes, k=8 neighbors) →
-    * undirected degree-12 cap → `hops` beam stages (neighbor hop minus
+    * knnJoin replay (C=32 seed cells, rn<=2 probes, k=12 neighbors) →
+    * undirected degree-16 cap → `hops` beam stages (neighbor hop minus
     * visited, score, union, frontier = top-`beam` of visited minus
     * expanded) → final top-k of visited. */
   private def graphBeamOracle(hops: Int, beam: Int, k: Int,
       graphK: Int = 12, maxDegree: Int = 16,
-      finalWhere: String = ""): String = {
-    val b = Seq.newBuilder[String]
-    b += s"""cent AS (SELECT id AS cid, ne AS ce FROM c WHERE id < 32),
-       |gscored AS (SELECT p.id, ct.cid,
-       |  row_number() OVER (PARTITION BY p.id
-       |    ORDER BY round(list_dot_product(p.ne, ct.ce), 6) DESC, ct.cid ASC) AS rn
-       |  FROM c p, cent ct),
-       |gdside AS (SELECT id, cid FROM gscored WHERE rn = 1),
-       |gqside AS (SELECT id AS qid, cid FROM gscored WHERE rn <= 2),
-       |gcand AS (SELECT q.qid, d.id,
-       |    round(list_dot_product(qc.ne, dc.ne), 6) AS score
-       |  FROM gqside q
-       |  JOIN gdside d ON q.cid = d.cid AND q.qid <> d.id
-       |  JOIN c qc ON qc.id = q.qid
-       |  JOIN c dc ON dc.id = d.id),
-       |gr AS (SELECT qid, id, score,
-       |    row_number() OVER (PARTITION BY qid ORDER BY score DESC, id ASC) AS rank
-       |  FROM gcand),
-       |kn AS MATERIALIZED (SELECT qid, id, score FROM gr WHERE rank <= $graphK),
-       |und AS (SELECT src, dst, max(score) AS score FROM (
-       |    SELECT qid AS src, id AS dst, score FROM kn
-       |    UNION ALL SELECT id AS src, qid AS dst, score FROM kn)
-       |  GROUP BY src, dst),
-       |g AS MATERIALIZED (SELECT src, dst FROM (SELECT src, dst,
-       |    row_number() OVER (PARTITION BY src ORDER BY score DESC, dst ASC) AS rn
-       |  FROM und) WHERE rn <= $maxDegree),
-       |q AS MATERIALIZED (SELECT ne AS qe FROM c WHERE id = 0),
-       |ent AS (SELECT cid AS id FROM cent, q
-       |  ORDER BY round(list_dot_product(ce, q.qe), 6) DESC, cid ASC LIMIT 1),
-       |v0 AS MATERIALIZED (SELECT c.id, round(list_dot_product(c.ne, q.qe), 6) AS score, c.user_id
-       |  FROM c JOIN ent ON c.id = ent.id, q),
-       |f0 AS MATERIALIZED (SELECT id FROM v0),
-       |e0 AS MATERIALIZED (SELECT id FROM v0 WHERE FALSE)""".stripMargin
-    // every per-hop state CTE is MATERIALIZED: DuckDB inlines CTEs by
-    // default, and the hop recurrence references each prior frame 2-3
-    // times — inlining re-expands the whole chain (and the graph build
-    // under it) exponentially in `hops`; materialization makes the oracle
-    // replay the same bounded per-hop work the Spark plan does
-    for (r <- 1 to hops) {
-      val p = r - 1
-      b += s"""n$r AS MATERIALIZED (SELECT DISTINCT g.dst AS id FROM g JOIN f$p ON g.src = f$p.id
-         |  WHERE g.dst NOT IN (SELECT id FROM v$p)),
-         |s$r AS MATERIALIZED (SELECT c.id, round(list_dot_product(c.ne, q.qe), 6) AS score, c.user_id
-         |  FROM c JOIN n$r USING (id), q),
-         |v$r AS MATERIALIZED (SELECT * FROM v$p UNION ALL SELECT * FROM s$r),
-         |e$r AS MATERIALIZED (SELECT id FROM e$p UNION SELECT id FROM f$p),
-         |f$r AS MATERIALIZED (SELECT id FROM v$r WHERE id NOT IN (SELECT id FROM e$r)
-         |  ORDER BY score DESC, id ASC LIMIT $beam)""".stripMargin
-    }
-    s"WITH $C,\n" + b.result().mkString(",\n") +
+      finalWhere: String = ""): String =
+    s"WITH $C,\n" + graphBuildCtes(2, graphK, maxDegree, "g", "src, dst") +
+      ",\n" + beamCtes("c", hops, beam) +
       s"\nSELECT id, score, user_id FROM v$hops $finalWhere" +
       s" ORDER BY score DESC, id ASC LIMIT $k"
-  }
 
   /** Oracle for `ann_graph_refined`: replays the FRAGMENTED nprobe=1
     * build (candidates strictly within one cell), the bridge pair set
@@ -2584,30 +2866,7 @@ object SparkEntry {
       graphK: Int = 12, maxDegree: Int = 16,
       rounds: Int = 2, nbridge: Int = 2): String = {
     val b = Seq.newBuilder[String]
-    b += s"""cent AS (SELECT id AS cid, ne AS ce FROM c WHERE id < 32),
-       |gscored AS (SELECT p.id, ct.cid,
-       |  row_number() OVER (PARTITION BY p.id
-       |    ORDER BY round(list_dot_product(p.ne, ct.ce), 6) DESC, ct.cid ASC) AS rn
-       |  FROM c p, cent ct),
-       |gdside AS (SELECT id, cid FROM gscored WHERE rn = 1),
-       |gqside AS (SELECT id AS qid, cid FROM gscored WHERE rn <= 1),
-       |gcand AS (SELECT q.qid, d.id,
-       |    round(list_dot_product(qc.ne, dc.ne), 6) AS score
-       |  FROM gqside q
-       |  JOIN gdside d ON q.cid = d.cid AND q.qid <> d.id
-       |  JOIN c qc ON qc.id = q.qid
-       |  JOIN c dc ON dc.id = d.id),
-       |gr AS (SELECT qid, id, score,
-       |    row_number() OVER (PARTITION BY qid ORDER BY score DESC, id ASC) AS rank
-       |  FROM gcand),
-       |kn AS MATERIALIZED (SELECT qid, id, score FROM gr WHERE rank <= $graphK),
-       |und AS (SELECT src, dst, max(score) AS score FROM (
-       |    SELECT qid AS src, id AS dst, score FROM kn
-       |    UNION ALL SELECT id AS src, qid AS dst, score FROM kn)
-       |  GROUP BY src, dst),
-       |g0 AS MATERIALIZED (SELECT src, dst, score FROM (SELECT src, dst, score,
-       |    row_number() OVER (PARTITION BY src ORDER BY score DESC, dst ASC) AS rn
-       |  FROM und) WHERE rn <= $maxDegree),
+    b += s"""${graphBuildCtes(1, graphK, maxDegree, "g0", "src, dst, score")},
        |brs AS MATERIALIZED (SELECT src, dst FROM (
        |    SELECT id AS src, cid AS dst FROM gscored
        |      WHERE rn BETWEEN 2 AND ${nbridge + 1} AND id <> cid
@@ -2636,25 +2895,8 @@ object SparkEntry {
          |      UNION ALL SELECT src, dst, score FROM sc$r) GROUP BY src, dst))
          |  WHERE rn <= $maxDegree)""".stripMargin
     }
-    b += s"""g AS MATERIALIZED (SELECT src, dst FROM g$rounds),
-       |q AS MATERIALIZED (SELECT ne AS qe FROM c WHERE id = 0),
-       |ent AS (SELECT cid AS id FROM cent, q
-       |  ORDER BY round(list_dot_product(ce, q.qe), 6) DESC, cid ASC LIMIT 1),
-       |v0 AS MATERIALIZED (SELECT c.id, round(list_dot_product(c.ne, q.qe), 6) AS score, c.user_id
-       |  FROM c JOIN ent ON c.id = ent.id, q),
-       |f0 AS MATERIALIZED (SELECT id FROM v0),
-       |e0 AS MATERIALIZED (SELECT id FROM v0 WHERE FALSE)""".stripMargin
-    for (r <- 1 to hops) {
-      val p = r - 1
-      b += s"""n$r AS MATERIALIZED (SELECT DISTINCT g.dst AS id FROM g JOIN f$p ON g.src = f$p.id
-         |  WHERE g.dst NOT IN (SELECT id FROM v$p)),
-         |s$r AS MATERIALIZED (SELECT c.id, round(list_dot_product(c.ne, q.qe), 6) AS score, c.user_id
-         |  FROM c JOIN n$r USING (id), q),
-         |v$r AS MATERIALIZED (SELECT * FROM v$p UNION ALL SELECT * FROM s$r),
-         |e$r AS MATERIALIZED (SELECT id FROM e$p UNION SELECT id FROM f$p),
-         |f$r AS MATERIALIZED (SELECT id FROM v$r WHERE id NOT IN (SELECT id FROM e$r)
-         |  ORDER BY score DESC, id ASC LIMIT $beam)""".stripMargin
-    }
+    b += s"g AS MATERIALIZED (SELECT src, dst FROM g$rounds)"
+    b += beamCtes("c", hops, beam)
     s"WITH $C,\n" + b.result().mkString(",\n") +
       s"\nSELECT id, score, user_id FROM v$hops" +
       s" ORDER BY score DESC, id ASC LIMIT $k"
@@ -2667,59 +2909,12 @@ object SparkEntry {
   private def graphBeamBatchOracle(nQ: Int, hops: Int, beam: Int, k: Int,
       graphK: Int = 12, maxDegree: Int = 16): String = {
     val b = Seq.newBuilder[String]
-    b += s"""cent AS (SELECT id AS cid, ne AS ce FROM c WHERE id < 32),
-       |gscored AS (SELECT p.id, ct.cid,
-       |  row_number() OVER (PARTITION BY p.id
-       |    ORDER BY round(list_dot_product(p.ne, ct.ce), 6) DESC, ct.cid ASC) AS rn
-       |  FROM c p, cent ct),
-       |gdside AS (SELECT id, cid FROM gscored WHERE rn = 1),
-       |gqside AS (SELECT id AS qid, cid FROM gscored WHERE rn <= 2),
-       |gcand AS (SELECT q.qid, d.id,
-       |    round(list_dot_product(qc.ne, dc.ne), 6) AS score
-       |  FROM gqside q
-       |  JOIN gdside d ON q.cid = d.cid AND q.qid <> d.id
-       |  JOIN c qc ON qc.id = q.qid
-       |  JOIN c dc ON dc.id = d.id),
-       |gr AS (SELECT qid, id, score,
-       |    row_number() OVER (PARTITION BY qid ORDER BY score DESC, id ASC) AS rank
-       |  FROM gcand),
-       |kn AS MATERIALIZED (SELECT qid, id, score FROM gr WHERE rank <= $graphK),
-       |und AS (SELECT src, dst, max(score) AS score FROM (
-       |    SELECT qid AS src, id AS dst, score FROM kn
-       |    UNION ALL SELECT id AS src, qid AS dst, score FROM kn)
-       |  GROUP BY src, dst),
-       |g AS MATERIALIZED (SELECT src, dst FROM (SELECT src, dst,
-       |    row_number() OVER (PARTITION BY src ORDER BY score DESC, dst ASC) AS rn
-       |  FROM und) WHERE rn <= $maxDegree),
-       |qs AS MATERIALIZED (SELECT c.id AS qid, c.ne AS qe FROM c
+    b += graphBuildCtes(2, graphK, maxDegree, "g", "src, dst")
+    b += s"""qs AS MATERIALIZED (SELECT c.id AS qid, c.ne AS qe FROM c
        |  WHERE c.id IN (SELECT (r.range * ((SELECT count(*) FROM c) // $nQ))::BIGINT
-       |                 FROM range($nQ) r)),
-       |ent AS (SELECT qid, cid AS id FROM (SELECT q.qid, cent.cid,
-       |    row_number() OVER (PARTITION BY q.qid
-       |      ORDER BY round(list_dot_product(cent.ce, q.qe), 6) DESC, cent.cid ASC) AS rn
-       |  FROM cent, qs q) WHERE rn = 1),
-       |v0 AS MATERIALIZED (SELECT e.qid, c.id,
-       |    round(list_dot_product(c.ne, q.qe), 6) AS score, c.user_id
-       |  FROM ent e JOIN c ON c.id = e.id JOIN qs q ON q.qid = e.qid),
-       |f0 AS MATERIALIZED (SELECT qid, id FROM v0),
-       |e0 AS MATERIALIZED (SELECT qid, id FROM v0 WHERE FALSE)""".stripMargin
-    for (r <- 1 to hops) {
-      val p = r - 1
-      b += s"""n$r AS MATERIALIZED (SELECT DISTINCT f.qid, g.dst AS id
-         |  FROM g JOIN f$p f ON g.src = f.id
-         |  LEFT JOIN v$p v ON v.qid = f.qid AND v.id = g.dst
-         |  WHERE v.qid IS NULL),
-         |s$r AS MATERIALIZED (SELECT n.qid, c.id,
-         |    round(list_dot_product(c.ne, q.qe), 6) AS score, c.user_id
-         |  FROM n$r n JOIN c USING (id) JOIN qs q ON q.qid = n.qid),
-         |v$r AS MATERIALIZED (SELECT * FROM v$p UNION ALL SELECT * FROM s$r),
-         |e$r AS MATERIALIZED (SELECT qid, id FROM e$p UNION SELECT qid, id FROM f$p),
-         |f$r AS MATERIALIZED (SELECT qid, id FROM (SELECT v.qid, v.id,
-         |    row_number() OVER (PARTITION BY v.qid
-         |      ORDER BY v.score DESC, v.id ASC) AS rn
-         |  FROM v$r v LEFT JOIN e$r e ON e.qid = v.qid AND e.id = v.id
-         |  WHERE e.qid IS NULL) WHERE rn <= $beam)""".stripMargin
-    }
+       |                 FROM range($nQ) r))""".stripMargin
+    b += BeamBatchEntry
+    b += beamBatchHops(hops, beam, "")
     s"WITH $C,\n" + b.result().mkString(",\n") +
       s"""\nSELECT qid, id, score, user_id, rank::BIGINT AS rank
          |FROM (SELECT qid, id, score, user_id,
@@ -2739,64 +2934,15 @@ object SparkEntry {
       graphK: Int = 12, maxDegree: Int = 16): String = {
     val ids = sample.mkString(", ")
     val b = Seq.newBuilder[String]
-    b += s"""cent AS (SELECT id AS cid, ne AS ce FROM c WHERE id < 32),
-       |gscored AS (SELECT p.id, ct.cid,
-       |  row_number() OVER (PARTITION BY p.id
-       |    ORDER BY round(list_dot_product(p.ne, ct.ce), 6) DESC, ct.cid ASC) AS rn
-       |  FROM c p, cent ct),
-       |gdside AS (SELECT id, cid FROM gscored WHERE rn = 1),
-       |gqside AS (SELECT id AS qid, cid FROM gscored WHERE rn <= 2),
-       |gcand AS (SELECT q.qid, d.id,
-       |    round(list_dot_product(qc.ne, dc.ne), 6) AS score
-       |  FROM gqside q
-       |  JOIN gdside d ON q.cid = d.cid AND q.qid <> d.id
-       |  JOIN c qc ON qc.id = q.qid
-       |  JOIN c dc ON dc.id = d.id),
-       |gr AS (SELECT qid, id, score,
-       |    row_number() OVER (PARTITION BY qid ORDER BY score DESC, id ASC) AS rank
-       |  FROM gcand),
-       |kn AS MATERIALIZED (SELECT qid, id, score FROM gr WHERE rank <= $graphK),
-       |und AS (SELECT src, dst, max(score) AS score FROM (
-       |    SELECT qid AS src, id AS dst, score FROM kn
-       |    UNION ALL SELECT id AS src, qid AS dst, score FROM kn)
-       |  GROUP BY src, dst),
-       |g AS MATERIALIZED (SELECT src, dst FROM (SELECT src, dst,
-       |    row_number() OVER (PARTITION BY src ORDER BY score DESC, dst ASC) AS rn
-       |  FROM und) WHERE rn <= $maxDegree),
-       |qs AS MATERIALIZED (SELECT c.id AS qid, c.ne AS qe FROM c WHERE c.id IN ($ids)),
+    b += graphBuildCtes(2, graphK, maxDegree, "g", "src, dst")
+    b += s"""qs AS MATERIALIZED (SELECT c.id AS qid, c.ne AS qe FROM c WHERE c.id IN ($ids)),
        |tr AS MATERIALIZED (SELECT qid, id FROM (SELECT q.qid, c.id,
        |    row_number() OVER (PARTITION BY q.qid
        |      ORDER BY round(list_dot_product(c.ne, q.qe), 6) DESC, c.id ASC) AS rk
        |  FROM c, qs q) WHERE rk <= $k),
-       |tt AS (SELECT count(*)::BIGINT AS total FROM tr),
-       |ent AS (SELECT qid, cid AS id FROM (SELECT q.qid, cent.cid,
-       |    row_number() OVER (PARTITION BY q.qid
-       |      ORDER BY round(list_dot_product(cent.ce, q.qe), 6) DESC, cent.cid ASC) AS rn
-       |  FROM cent, qs q) WHERE rn = 1),
-       |v0 AS MATERIALIZED (SELECT e.qid, c.id,
-       |    round(list_dot_product(c.ne, q.qe), 6) AS score, c.user_id
-       |  FROM ent e JOIN c ON c.id = e.id JOIN qs q ON q.qid = e.qid),
-       |f0 AS MATERIALIZED (SELECT qid, id FROM v0),
-       |e0 AS MATERIALIZED (SELECT qid, id FROM v0 WHERE FALSE)""".stripMargin
-    for (bm <- beams; r <- 1 to hops) {
-      val (vp, fp, ep) =
-        if (r == 1) ("v0", "f0", "e0")
-        else (s"v${r - 1}x$bm", s"f${r - 1}x$bm", s"e${r - 1}x$bm")
-      b += s"""n${r}x$bm AS MATERIALIZED (SELECT DISTINCT f.qid, g.dst AS id
-         |  FROM g JOIN $fp f ON g.src = f.id
-         |  LEFT JOIN $vp v ON v.qid = f.qid AND v.id = g.dst
-         |  WHERE v.qid IS NULL),
-         |s${r}x$bm AS MATERIALIZED (SELECT n.qid, c.id,
-         |    round(list_dot_product(c.ne, q.qe), 6) AS score, c.user_id
-         |  FROM n${r}x$bm n JOIN c USING (id) JOIN qs q ON q.qid = n.qid),
-         |v${r}x$bm AS MATERIALIZED (SELECT * FROM $vp UNION ALL SELECT * FROM s${r}x$bm),
-         |e${r}x$bm AS MATERIALIZED (SELECT qid, id FROM $ep UNION SELECT qid, id FROM $fp),
-         |f${r}x$bm AS MATERIALIZED (SELECT qid, id FROM (SELECT v.qid, v.id,
-         |    row_number() OVER (PARTITION BY v.qid
-         |      ORDER BY v.score DESC, v.id ASC) AS rn
-         |  FROM v${r}x$bm v LEFT JOIN e${r}x$bm e ON e.qid = v.qid AND e.id = v.id
-         |  WHERE e.qid IS NULL) WHERE rn <= $bm)""".stripMargin
-    }
+       |tt AS (SELECT count(*)::BIGINT AS total FROM tr)""".stripMargin
+    b += BeamBatchEntry
+    for (bm <- beams) b += beamBatchHops(hops, bm, s"x$bm")
     for (bm <- beams) {
       b += s"""res$bm AS MATERIALIZED (SELECT qid, id, score, user_id
          |  FROM (SELECT *, row_number() OVER (PARTITION BY qid
@@ -2818,6 +2964,22 @@ object SparkEntry {
          |ORDER BY score DESC, id ASC""".stripMargin
   }
 
+  /** Start of both BPE-training chains: the word-frequency table `v0`
+    * and each word's character symbols `s0`. */
+  private val BpeStart =
+    "v0 AS (SELECT word, count(*)::BIGINT AS n FROM " +
+      "(SELECT unnest(string_split(text, ' ')) AS word FROM documents) " +
+      "WHERE word <> '' GROUP BY word),\n" +
+      "s0 AS (SELECT word, n, list_transform(range(length(word)), " +
+      "i -> substring(word, i+1, 1)) AS sym FROM v0)"
+
+  /** Round `r`'s adjacent-pair counts `p$r` over the symbols of the
+    * previous round (self-pairs excluded, weighted by word count). */
+  private def bpePairsCte(r: Int): String =
+    s"p$r AS (SELECT sym[i+1] AS lhs, sym[i+2] AS rhs, sum(n)::BIGINT AS c " +
+      s"FROM (SELECT n, sym, unnest(range(greatest(len(sym)-1, 0))) AS i FROM s${r - 1}) " +
+      "WHERE sym[i+1] <> sym[i+2] GROUP BY 1, 2)"
+
   /** Unrolled BPE-training CTE chain (mirrors Bpe.learn, k merge rounds):
     * v0 = word-frequency table, s0 = char symbols, then per round r:
     * p_r adjacent-pair counts (self-pairs excluded, weighted by word
@@ -2827,16 +2989,10 @@ object SparkEntry {
     * short-circuit), exactly like the Spark rewrite. */
   private def bpeCtes(k: Int): String = {
     val b = Seq.newBuilder[String]
-    b += ("v0 AS (SELECT word, count(*)::BIGINT AS n FROM " +
-      "(SELECT unnest(string_split(text, ' ')) AS word FROM documents) " +
-      "WHERE word <> '' GROUP BY word)")
-    b += ("s0 AS (SELECT word, n, list_transform(range(length(word)), " +
-      "i -> substring(word, i+1, 1)) AS sym FROM v0)")
+    b += BpeStart
     for (r <- 1 to k) {
       val p = r - 1
-      b += (s"p$r AS (SELECT sym[i+1] AS lhs, sym[i+2] AS rhs, sum(n)::BIGINT AS c " +
-        s"FROM (SELECT n, sym, unnest(range(greatest(len(sym)-1, 0))) AS i FROM s$p) " +
-        "WHERE sym[i+1] <> sym[i+2] GROUP BY 1, 2)")
+      b += bpePairsCte(r)
       b += s"m$r AS (SELECT lhs, rhs, c FROM p$r ORDER BY c DESC, lhs ASC, rhs ASC LIMIT 1)"
       // mm carries the round's merge OR an unmatchable sentinel ('','')
       // when training exhausted mergeable pairs before round k: a bare
@@ -2865,16 +3021,10 @@ object SparkEntry {
   private def bpeBatchCtes(rounds: Int, batch: Int): String = {
     val candCap = graft.operators.Bpe.batchedCandCap(batch)
     val b = Seq.newBuilder[String]
-    b += ("v0 AS (SELECT word, count(*)::BIGINT AS n FROM " +
-      "(SELECT unnest(string_split(text, ' ')) AS word FROM documents) " +
-      "WHERE word <> '' GROUP BY word)")
-    b += ("s0 AS (SELECT word, n, list_transform(range(length(word)), " +
-      "i -> substring(word, i+1, 1)) AS sym FROM v0)")
+    b += BpeStart
     for (r <- 1 to rounds) {
       val p = r - 1
-      b += (s"p$r AS (SELECT sym[i+1] AS lhs, sym[i+2] AS rhs, sum(n)::BIGINT AS c " +
-        s"FROM (SELECT n, sym, unnest(range(greatest(len(sym)-1, 0))) AS i FROM s$p) " +
-        "WHERE sym[i+1] <> sym[i+2] GROUP BY 1, 2)")
+      b += bpePairsCte(r)
       b += (s"cand$r AS MATERIALIZED (SELECT * FROM (SELECT lhs, rhs, c, " +
         s"row_number() OVER (ORDER BY c DESC, lhs ASC, rhs ASC) AS rn FROM p$r) " +
         s"WHERE rn <= $candCap)")
@@ -2918,21 +3068,80 @@ object SparkEntry {
     s"round(len(list_filter(w, x -> list_contains(${dict(l)}, x)))::DOUBLE / len(w), 6)"
 
 
+  /** Connected-components replay (Dedup.connectedComponents) of the
+    * undirected pairs `pr(a, b)`: min-label propagation by recursive CTE
+    * (the query needs WITH RECURSIVE) into `comp(node, cluster_id)`. */
+  private def ccCtes(a: String, b: String): String =
+    s"""e AS (SELECT $a AS src, $b AS dst FROM pr
+       |      UNION SELECT $b, $a FROM pr),
+       |reach(node, lab) AS (
+       |  SELECT src, src FROM e
+       |  UNION
+       |  SELECT e.dst, reach.lab FROM e, reach WHERE e.src = reach.node),
+       |comp AS (SELECT node, min(lab) AS cluster_id FROM reach GROUP BY node)""".stripMargin
+
+  /** Simhash near-duplicate components of all documents (follows W and
+    * SIM): every pair within Hamming distance 3 (Dedup.simHashPairs),
+    * then [[ccCtes]]. */
+  private val SimComp =
+    s"""pr AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
+       |  FROM sh2 a, sh2 b WHERE a.doc_id < b.doc_id
+       |    AND bit_count(xor(a.simhash, b.simhash)) <= 3),
+       |${ccCtes("doc_a", "doc_b")}""".stripMargin
+
+  /** Exact shingle-Jaccard pairs (Dedup's exact all-pairs form): every
+    * `sh a, sh b` pair passing `pairs` whose 6dp Jaccard is ≥ `min`. */
+  private def jaccardOracle(pairs: String, min: Double): String =
+    s"""WITH $W, $SH,
+       |p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+       |  round(len(list_intersect(a.s, b.s))::DOUBLE
+       |    / greatest(len(a.s) + len(b.s) - len(list_intersect(a.s, b.s)), 1), 6) AS jaccard
+       |  FROM sh a, sh b WHERE $pairs)
+       |SELECT doc_a, doc_b, jaccard FROM p WHERE jaccard >= $min ORDER BY doc_a, doc_b""".stripMargin
+
+  /** Hashed 8-word spans `sp(doc_id, span_h)` of every document (follows
+    * W; mirrors TextAnalysis's span hashing). */
+  private val SP =
+    """sp AS (SELECT doc_id,
+      |  ('0x' || substring(md5(array_to_string(list_slice(w, i + 1, i + 8), ' ')), 1, 15))::BIGINT AS span_h
+      |  FROM (SELECT doc_id, w, unnest(range(0, greatest(len(w) - 7, 0))) AS i FROM t))""".stripMargin
+
+  /** Shared binning of the click vs purchase value drift monitors (PSI
+    * and KS, 200 equal-width bins): per-bin counts `bins(bin, ca_, cb_)`
+    * and their totals `tot(na, nb)`. */
+  private val DriftBins =
+    """e AS (SELECT event_type, value::DOUBLE AS v FROM events
+      |  WHERE event_type IN ('click', 'purchase')),
+      |bd AS (SELECT min(v) AS lo, greatest((max(v) - min(v)) / 200.0, 1e-12) AS width FROM e),
+      |bins AS (SELECT least(199, floor((e.v - bd.lo) / bd.width))::BIGINT AS bin,
+      |  sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)::BIGINT AS ca_,
+      |  sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)::BIGINT AS cb_
+      |  FROM e, bd GROUP BY 1),
+      |tot AS (SELECT sum(ca_)::DOUBLE AS na, sum(cb_)::DOUBLE AS nb FROM bins)""".stripMargin
+
+  /** BM25 replay (TextAnalysis.bm25Search, k1 1.2, b 0.75) of the query
+    * terms spark/join/shuffle/window (follows W): per-document, per-term
+    * contributions in `contrib(doc_id, contrib)`, exact DECIMAL. */
+  private def bm25Ctes(contrib: String): String =
+    s"""stats AS (SELECT count(*)::DOUBLE AS n_docs,
+       |  sum(len(w))::DOUBLE / count(*) AS avgdl FROM t),
+       |terms AS (SELECT doc_id, len(w) AS doc_len, unnest(w) AS term FROM t),
+       |tf AS (SELECT doc_id, doc_len, term, count(*)::DOUBLE AS tf FROM terms
+       |       WHERE term IN ('spark', 'join', 'shuffle', 'window') GROUP BY 1, 2, 3),
+       |df AS (SELECT term, count(*)::DOUBLE AS df FROM tf GROUP BY term),
+       |$contrib AS (SELECT tf.doc_id,
+       |  (ln((stats.n_docs - df.df + 0.5::DOUBLE) / (df.df + 0.5::DOUBLE) + 1.0::DOUBLE)
+       |   * tf.tf * 2.2::DOUBLE
+       |   / (tf.tf + 1.2::DOUBLE * (0.25::DOUBLE + 0.75::DOUBLE * tf.doc_len / stats.avgdl))
+       |  )::DECIMAL(28,12) AS contrib
+       |  FROM tf, df, stats WHERE tf.term = df.term)""".stripMargin
+
   /** Oracle for BOTH dedup_clusters and dedup_clusters_sigdedup: the
     * signature-dedup form is component-identical to the all-pairs form
     * by construction, so one recursive-CTE oracle grades both. */
   private lazy val dedupClustersOracle: String =
     s"""WITH RECURSIVE $W, $SIM,
-       |pr AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM sh2 a, sh2 b WHERE a.doc_id < b.doc_id
-       |    AND bit_count(xor(a.simhash, b.simhash)) <= 3),
-       |e AS (SELECT doc_a AS src, doc_b AS dst FROM pr
-       |      UNION SELECT doc_b, doc_a FROM pr),
-       |reach(node, lab) AS (
-       |  SELECT src, src FROM e
-       |  UNION
-       |  SELECT e.dst, reach.lab FROM e, reach WHERE e.src = reach.node),
-       |comp AS (SELECT node, min(lab) AS cluster_id FROM reach GROUP BY node)
+       |$SimComp
        |SELECT cluster_id, count(*)::BIGINT AS n_docs, min(node) AS min_doc,
        |  max(node) AS max_doc
        |FROM comp GROUP BY cluster_id ORDER BY cluster_id""".stripMargin
@@ -2953,13 +3162,7 @@ object SparkEntry {
          |    AND a.doc_id IN (SELECT doc_id FROM s1)
          |    AND b.doc_id IN (SELECT doc_id FROM s1)
          |    AND bit_count(xor(a.simhash, b.simhash)) <= 3),
-         |e AS (SELECT doc_a AS src, doc_b AS dst FROM pr
-         |      UNION SELECT doc_b, doc_a FROM pr),
-         |reach(node, lab) AS (
-         |  SELECT src, src FROM e
-         |  UNION
-         |  SELECT e.dst, reach.lab FROM e, reach WHERE e.src = reach.node),
-         |comp AS (SELECT node, min(lab) AS cluster_id FROM reach GROUP BY node),
+         |${ccCtes("doc_a", "doc_b")},
          |winners AS (SELECT node, row_number() OVER (PARTITION BY cluster_id
          |    ORDER BY q.qs DESC, node ASC) AS rn
          |  FROM comp JOIN q ON q.doc_id = comp.node),
@@ -3156,27 +3359,12 @@ object SparkEntry {
          |  count(DISTINCT eval_doc_id)::BIGINT AS n_eval_docs
          |FROM j GROUP BY doc_id ORDER BY doc_id""".stripMargin,
     "dedup_ngram_jaccard" ->
-      s"""WITH $W, $SH,
-         |p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |  round(len(list_intersect(a.s, b.s))::DOUBLE
-         |    / greatest(len(a.s) + len(b.s) - len(list_intersect(a.s, b.s)), 1), 6) AS jaccard
-         |  FROM sh a, sh b WHERE a.source = b.source AND a.doc_id < b.doc_id)
-         |SELECT doc_a, doc_b, jaccard FROM p WHERE jaccard >= 0.5 ORDER BY doc_a, doc_b""".stripMargin,
+      jaccardOracle("a.source = b.source AND a.doc_id < b.doc_id", 0.5),
     // minhash-LSH oracle = exact all-pairs (miss prob < 1e-10 at j>=0.85 with 32x4 bands)
     "dedup_minhash_lsh" ->
-      s"""WITH $W, $SH,
-         |p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |  round(len(list_intersect(a.s, b.s))::DOUBLE
-         |    / greatest(len(a.s) + len(b.s) - len(list_intersect(a.s, b.s)), 1), 6) AS jaccard
-         |  FROM sh a, sh b WHERE a.doc_id < b.doc_id)
-         |SELECT doc_a, doc_b, jaccard FROM p WHERE jaccard >= 0.7 ORDER BY doc_a, doc_b""".stripMargin,
+      jaccardOracle("a.doc_id < b.doc_id", 0.7),
     "dedup_cross_minhash" ->
-      s"""WITH $W, $SH,
-         |p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |  round(len(list_intersect(a.s, b.s))::DOUBLE
-         |    / greatest(len(a.s) + len(b.s) - len(list_intersect(a.s, b.s)), 1), 6) AS jaccard
-         |  FROM sh a, sh b WHERE a.doc_id >= 250 AND b.doc_id < 250)
-         |SELECT doc_a, doc_b, jaccard FROM p WHERE jaccard >= 0.7 ORDER BY doc_a, doc_b""".stripMargin,
+      jaccardOracle("a.doc_id >= 250 AND b.doc_id < 250", 0.7),
     // simhash chunk-banding has EXACT recall at hamming<=3, so the oracle is all-pairs
     "dedup_simhash" ->
       s"""WITH $W, $SIM
@@ -3216,32 +3404,12 @@ object SparkEntry {
       """SELECT lang, source, count(*)::BIGINT AS n, sum(n_chars)::BIGINT AS chars
         |FROM documents GROUP BY CUBE (lang, source)
         |ORDER BY lang ASC NULLS FIRST, source ASC NULLS FIRST""".stripMargin,
-    "events_hourly_window" ->
-      """SELECT date_trunc('hour', ts) AS window_start, event_type,
-        |  count(*)::BIGINT AS n_events,
-        |  sum(value::DECIMAL(18,2))::DOUBLE AS sum_value
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "events_sessionize" ->
-      """WITH e AS (SELECT *, lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts FROM events),
-        |f AS (SELECT *, CASE WHEN prev_ts IS NULL OR date_diff('second', prev_ts, ts) > 1800
-        |                     THEN 1 ELSE 0 END AS new_session FROM e),
-        |g AS (SELECT *, sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS session_id FROM f)
-        |SELECT user_id, session_id::BIGINT AS session_id, min(ts) AS session_start,
-        |  max(ts) AS session_end, count(*)::BIGINT AS n_events,
-        |  sum(value::DECIMAL(18,2))::DOUBLE AS total_value
-        |FROM g GROUP BY user_id, session_id ORDER BY user_id, session_id""".stripMargin,
+    "events_hourly_window" -> HourlyWindowSql,
+    "events_sessionize" -> SessionizeSql,
 "streaming_dedup_distinct" ->
       """SELECT event_type, count(DISTINCT user_id)::BIGINT AS n_users
         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-"streaming_sessionize" ->
-      """WITH e AS (SELECT *, lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts FROM events),
-        |f AS (SELECT *, CASE WHEN prev_ts IS NULL OR date_diff('second', prev_ts, ts) > 1800
-        |                     THEN 1 ELSE 0 END AS new_session FROM e),
-        |g AS (SELECT *, sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS session_id FROM f)
-        |SELECT user_id, session_id::BIGINT AS session_id, min(ts) AS session_start,
-        |  max(ts) AS session_end, count(*)::BIGINT AS n_events,
-        |  sum(value::DECIMAL(18,2))::DOUBLE AS total_value
-        |FROM g GROUP BY user_id, session_id ORDER BY user_id, session_id""".stripMargin,
+    "streaming_sessionize" -> SessionizeSql,
     "events_range_agg" ->
       """SELECT event_type, count(*)::BIGINT AS n_events,
         |  sum(value::DECIMAL(18,2))::DOUBLE / count(*) AS avg_value,
@@ -3292,16 +3460,7 @@ object SparkEntry {
         |GROUP BY p_brand ORDER BY revenue DESC, p_brand ASC LIMIT 10""".stripMargin,
     "dedup_apply" ->
       s"""WITH RECURSIVE $W, $SIM,
-         |pr AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |  FROM sh2 a, sh2 b WHERE a.doc_id < b.doc_id
-         |    AND bit_count(xor(a.simhash, b.simhash)) <= 3),
-         |e AS (SELECT doc_a AS src, doc_b AS dst FROM pr
-         |      UNION SELECT doc_b, doc_a FROM pr),
-         |reach(node, lab) AS (
-         |  SELECT src, src FROM e
-         |  UNION
-         |  SELECT e.dst, reach.lab FROM e, reach WHERE e.src = reach.node),
-         |comp AS (SELECT node, min(lab) AS cluster_id FROM reach GROUP BY node),
+         |$SimComp,
          |drops AS (SELECT node FROM comp WHERE node <> cluster_id)
          |SELECT d.doc_id, d.source FROM documents d
          |WHERE d.doc_id NOT IN (SELECT node FROM drops)
@@ -3315,16 +3474,7 @@ object SparkEntry {
         |SELECT doc_id, source FROM r WHERE rn <= 15 ORDER BY doc_id""".stripMargin,
     "dedup_apply_quality" ->
       s"""WITH RECURSIVE $W, $SIM,
-         |pr AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |  FROM sh2 a, sh2 b WHERE a.doc_id < b.doc_id
-         |    AND bit_count(xor(a.simhash, b.simhash)) <= 3),
-         |e AS (SELECT doc_a AS src, doc_b AS dst FROM pr
-         |      UNION SELECT doc_b, doc_a FROM pr),
-         |reach(node, lab) AS (
-         |  SELECT src, src FROM e
-         |  UNION
-         |  SELECT e.dst, reach.lab FROM e, reach WHERE e.src = reach.node),
-         |comp AS (SELECT node, min(lab) AS cluster_id FROM reach GROUP BY node),
+         |$SimComp,
          |qpre AS (SELECT doc_id, len(w)::BIGINT AS word_count,
          |  round(len(list_distinct(w))::DOUBLE / len(w), 6) AS distinct_ratio,
          |  ${swRatio("en")} AS stopword_ratio FROM t),
@@ -3350,13 +3500,7 @@ object SparkEntry {
          |pr AS (SELECT DISTINCT least(q.qid, d.id) AS id_a, greatest(q.qid, d.id) AS id_b
          |  FROM qside q JOIN dside d ON q.cid = d.cid AND q.qid <> d.id
          |  WHERE round(list_dot_product(q.qne, d.ne), 6) >= 0.45),
-         |e AS (SELECT id_a AS src, id_b AS dst FROM pr
-         |      UNION SELECT id_b, id_a FROM pr),
-         |reach(node, lab) AS (
-         |  SELECT src, src FROM e
-         |  UNION
-         |  SELECT e.dst, reach.lab FROM e, reach WHERE e.src = reach.node),
-         |comp AS (SELECT node, min(lab) AS cluster_id FROM reach GROUP BY node)
+         |${ccCtes("id_a", "id_b")}
          |SELECT cluster_id, count(*)::BIGINT AS n_points, min(node) AS min_id,
          |  max(node) AS max_id
          |FROM comp GROUP BY cluster_id HAVING count(*) > 1
@@ -3380,124 +3524,39 @@ object SparkEntry {
     // rounding as the graphBeamOracle family.
     "indexed_graph_search" -> {
       val hops = 8; val beam = 24; val k = 10
-      val b = Seq.newBuilder[String]
-      b += s"""cs AS MATERIALIZED (SELECT id, embedding AS ne, user_id
+      s"""WITH cs AS MATERIALIZED (SELECT id, embedding AS ne, user_id
          |  FROM read_parquet(${glob(gidxState.path(dir) + "_ostore")})),
          |g AS MATERIALIZED (SELECT src, dst FROM read_parquet(${glob(gidxState.path(dir) + "_ograph")})),
-         |cent AS (SELECT id AS cid, ne AS ce FROM cs WHERE id < 32),
-         |q AS MATERIALIZED (SELECT ne AS qe FROM cs WHERE id = 0),
-         |ent AS (SELECT cid AS id FROM cent, q
-         |  ORDER BY round(list_dot_product(ce, q.qe), 6) DESC, cid ASC LIMIT 1),
-         |v0 AS MATERIALIZED (SELECT cs.id, round(list_dot_product(cs.ne, q.qe), 6) AS score, cs.user_id
-         |  FROM cs JOIN ent ON cs.id = ent.id, q),
-         |f0 AS MATERIALIZED (SELECT id FROM v0),
-         |e0 AS MATERIALIZED (SELECT id FROM v0 WHERE FALSE)""".stripMargin
-      for (r <- 1 to hops) {
-        val p = r - 1
-        b += s"""n$r AS MATERIALIZED (SELECT DISTINCT g.dst AS id FROM g JOIN f$p ON g.src = f$p.id
-           |  WHERE g.dst NOT IN (SELECT id FROM v$p)),
-           |s$r AS MATERIALIZED (SELECT cs.id, round(list_dot_product(cs.ne, q.qe), 6) AS score, cs.user_id
-           |  FROM cs JOIN n$r USING (id), q),
-           |v$r AS MATERIALIZED (SELECT * FROM v$p UNION ALL SELECT * FROM s$r),
-           |e$r AS MATERIALIZED (SELECT id FROM e$p UNION SELECT id FROM f$p),
-           |f$r AS MATERIALIZED (SELECT id FROM v$r WHERE id NOT IN (SELECT id FROM e$r)
-           |  ORDER BY score DESC, id ASC LIMIT $beam)""".stripMargin
-      }
-      s"WITH " + b.result().mkString(",\n") +
-        s"\nSELECT id, score, user_id FROM v$hops ORDER BY score DESC, id ASC LIMIT $k"
+         |cent AS (SELECT id AS cid, ne AS ce FROM cs WHERE id < $KnnCells),
+         |${beamCtes("cs", hops, beam)}
+         |SELECT id, score, user_id FROM v$hops ORDER BY score DESC, id ASC LIMIT $k""".stripMargin
     },
     "ann_graph_calibrated" -> graphCalibratedOracle(
       sample = Seq(0L, 99L, 250L, 433L), beams = Seq(4, 8, 16, 24),
       hops = 8, k = 10, target = 0.9),
     "ann_knn_join" ->
       s"""WITH $C,
-         |cent AS (SELECT id AS cid, ne AS ce FROM c WHERE id < 32),
-         |scored AS (SELECT p.id, ct.cid,
-         |  row_number() OVER (PARTITION BY p.id
-         |    ORDER BY round(list_dot_product(p.ne, ct.ce), 6) DESC, ct.cid ASC) AS rn
-         |  FROM c p, cent ct),
-         |dside AS (SELECT id, cid FROM scored WHERE rn = 1),
-         |qside AS (SELECT id AS qid, cid FROM scored WHERE rn <= 2),
-         |cand AS (SELECT q.qid, d.id,
-         |    round(list_dot_product(qc.ne, dc.ne), 6) AS score
-         |  FROM qside q
-         |  JOIN dside d ON q.cid = d.cid AND q.qid <> d.id
-         |  JOIN c qc ON qc.id = q.qid
-         |  JOIN c dc ON dc.id = d.id),
-         |r AS (SELECT qid, id, score,
-         |    row_number() OVER (PARTITION BY qid ORDER BY score DESC, id ASC) AS rank
-         |  FROM cand)
+         |${knnJoinCtes("", 2)}
          |SELECT qid, id, score, rank::BIGINT AS rank FROM r WHERE rank <= 3
          |ORDER BY qid, rank""".stripMargin,
-    "ann_ivf_search" ->
-      s"""WITH $C,
-         |cent AS (SELECT id AS cid, ne AS ce FROM c WHERE id < 16),
-         |asgn AS (SELECT c.id, c.user_id, c.ne, cent.cid,
-         |  row_number() OVER (PARTITION BY c.id
-         |    ORDER BY round(list_dot_product(c.ne, cent.ce), 6) DESC, cent.cid ASC) AS rn
-         |  FROM c, cent),
-         |pts AS (SELECT id, user_id, ne, cid FROM asgn WHERE rn = 1),
-         |q AS (SELECT ne AS qe FROM c WHERE id = 0),
-         |probes AS (SELECT cent.cid FROM cent, q
-         |  ORDER BY round(list_dot_product(cent.ce, q.qe), 6) DESC, cent.cid ASC LIMIT 4),
-         |s AS (SELECT p.id, round(list_dot_product(p.ne, q.qe), 6) AS score, p.user_id
-         |  FROM pts p, q WHERE p.cid IN (SELECT cid FROM probes))
-         |SELECT id, score, user_id FROM s ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
+    "ann_ivf_search" -> ivfSearchOracle(
+      "cent AS (SELECT id AS cid, ne AS ce FROM c WHERE id < 16)", ""),
     // Centroids come from the side table the Spark query persisted (the
     // KMeans training itself is the only non-SQL step; its OUTPUT is shared
     // so assignment/probe/top-k stay hash-checked end to end).
     "ann_ivf_kmeans" ->
-      s"""WITH $C,
-         |cent AS (SELECT cid, ce FROM read_parquet(${glob(trainedCentroids.path(dir))})),
-         |asgn AS (SELECT c.id, c.user_id, c.ne, cent.cid,
-         |  row_number() OVER (PARTITION BY c.id
-         |    ORDER BY round(list_dot_product(c.ne, cent.ce), 6) DESC, cent.cid ASC) AS rn
-         |  FROM c, cent),
-         |pts AS (SELECT id, user_id, ne, cid FROM asgn WHERE rn = 1),
-         |q AS (SELECT ne AS qe FROM c WHERE id = 0),
-         |probes AS (SELECT cent.cid FROM cent, q
-         |  ORDER BY round(list_dot_product(cent.ce, q.qe), 6) DESC, cent.cid ASC LIMIT 4),
-         |s AS (SELECT p.id, round(list_dot_product(p.ne, q.qe), 6) AS score, p.user_id
-         |  FROM pts p, q WHERE p.cid IN (SELECT cid FROM probes))
-         |SELECT id, score, user_id FROM s ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
+      ivfSearchOracle(centFrom(trainedCentroids.path(dir)), ""),
     // identical replay over the k-means||-trained table
-    "ann_ivf_kmpp" ->
-      s"""WITH $C,
-         |cent AS (SELECT cid, ce FROM read_parquet(${glob(kmppCentroids.path(dir))})),
-         |asgn AS (SELECT c.id, c.user_id, c.ne, cent.cid,
-         |  row_number() OVER (PARTITION BY c.id
-         |    ORDER BY round(list_dot_product(c.ne, cent.ce), 6) DESC, cent.cid ASC) AS rn
-         |  FROM c, cent),
-         |pts AS (SELECT id, user_id, ne, cid FROM asgn WHERE rn = 1),
-         |q AS (SELECT ne AS qe FROM c WHERE id = 0),
-         |probes AS (SELECT cent.cid FROM cent, q
-         |  ORDER BY round(list_dot_product(cent.ce, q.qe), 6) DESC, cent.cid ASC LIMIT 4),
-         |s AS (SELECT p.id, round(list_dot_product(p.ne, q.qe), 6) AS score, p.user_id
-         |  FROM pts p, q WHERE p.cid IN (SELECT cid FROM probes))
-         |SELECT id, score, user_id FROM s ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
+    "ann_ivf_kmpp" -> ivfSearchOracle(centFrom(kmppCentroids.path(dir)), ""),
     "ann_lsh_search" ->
       s"""WITH $C,
-         |hp AS (SELECT id AS hid, ne AS he FROM c WHERE id >= 100 AND id < 112),
-         |sig AS (SELECT c.id, string_agg(
-         |    CASE WHEN round(list_dot_product(c.ne, hp.he), 6) >= 0 THEN '1' ELSE '0' END,
-         |    '' ORDER BY hp.hid) AS bucket
-         |  FROM c, hp GROUP BY c.id),
-         |pts AS (SELECT c.id, c.user_id, c.ne, sig.bucket FROM c JOIN sig ON c.id = sig.id),
-         |q AS (SELECT ne AS qe FROM c WHERE id = 0),
-         |qb AS (SELECT bucket FROM pts WHERE id = 0),
+         |$LshOneTable,
          |s AS (SELECT p.id, round(list_dot_product(p.ne, q.qe), 6) AS score, p.user_id
          |  FROM pts p, q, qb WHERE p.bucket = qb.bucket)
          |SELECT id, score, user_id FROM s ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
     "ann_lsh_multiprobe" ->
       s"""WITH $C,
-         |hp AS (SELECT id AS hid, ne AS he FROM c WHERE id >= 100 AND id < 112),
-         |sig AS (SELECT c.id, string_agg(
-         |    CASE WHEN round(list_dot_product(c.ne, hp.he), 6) >= 0 THEN '1' ELSE '0' END,
-         |    '' ORDER BY hp.hid) AS bucket
-         |  FROM c, hp GROUP BY c.id),
-         |pts AS (SELECT c.id, c.user_id, c.ne, sig.bucket FROM c JOIN sig ON c.id = sig.id),
-         |q AS (SELECT ne AS qe FROM c WHERE id = 0),
-         |qb AS (SELECT bucket FROM pts WHERE id = 0),
+         |$LshOneTable,
          |probes AS (
          |  SELECT bucket AS bk FROM qb
          |  UNION
@@ -3510,12 +3569,7 @@ object SparkEntry {
          |SELECT id, score, user_id FROM s ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
     "ann_lsh_multitable" ->
       s"""WITH $C,
-         |hp AS (SELECT id AS hid, ((id - 100) // 4)::INT AS ti, ne AS he
-         |       FROM c WHERE id >= 100 AND id < 148),
-         |sig AS (SELECT c.id, hp.ti, string_agg(
-         |    CASE WHEN round(list_dot_product(c.ne, hp.he), 6) >= 0 THEN '1' ELSE '0' END,
-         |    '' ORDER BY hp.hid) AS bucket
-         |  FROM c, hp GROUP BY c.id, hp.ti),
+         |$LshTables,
          |qb AS (SELECT ti, bucket FROM sig WHERE id = 0),
          |cand AS (SELECT DISTINCT sig.id
          |         FROM sig JOIN qb ON sig.ti = qb.ti AND sig.bucket = qb.bucket),
@@ -3530,12 +3584,7 @@ object SparkEntry {
     // search restricted to the first L tables.
     "ann_lsh_calibrated" ->
       s"""WITH $C,
-         |hp AS (SELECT id AS hid, ((id - 100) // 4)::INT AS ti, ne AS he
-         |       FROM c WHERE id >= 100 AND id < 148),
-         |sig AS (SELECT c.id, hp.ti, string_agg(
-         |    CASE WHEN round(list_dot_product(c.ne, hp.he), 6) >= 0 THEN '1' ELSE '0' END,
-         |    '' ORDER BY hp.hid) AS bucket
-         |  FROM c, hp GROUP BY c.id, hp.ti),
+         |$LshTables,
          |qs AS (SELECT id AS qid, ne AS qe FROM c WHERE id < 5),
          |truth AS (SELECT qid, nid FROM (
          |    SELECT qs.qid, c.id AS nid, row_number() OVER (PARTITION BY qs.qid
@@ -3563,11 +3612,7 @@ object SparkEntry {
          |SELECT id, score, user_id, (SELECT lstar FROM chosen) AS l_used
          |FROM s ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
     // 500 points at sf0.01 < full_scan_threshold -> adaptive picks exact knn
-    "ann_adaptive" ->
-      s"""WITH $C, q AS (SELECT ne AS qe FROM c WHERE id = 0),
-         |s AS (SELECT c.id, round(list_dot_product(c.ne, q.qe), 6) AS score, c.user_id FROM c, q)
-         |SELECT id, score, user_id FROM s WHERE score >= 0.1
-         |ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
+    "ann_adaptive" -> KnnExactSql,
     "tpch_q6_forecast" ->
       """SELECT sum(l_extendedprice::DECIMAL(18,2) * l_discount::DECIMAL(18,2))::DOUBLE AS revenue,
         |  count(*)::BIGINT AS n_items
@@ -3616,16 +3661,7 @@ object SparkEntry {
          |  FROM pv, hq, q0 ORDER BY cheap DESC, id ASC LIMIT 30)
          |SELECT id, round(list_dot_product(ne, qe), 6) AS score, user_id FROM phase1
          |ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
-    "quantized_two_phase" ->
-      s"""WITH $C, q0 AS (SELECT ne AS qe FROM c WHERE id = 0),
-         |qq AS (SELECT qe, list_transform(qe, x -> greatest(-127, least(127, round(x*127)::INT))) AS qv FROM q0),
-         |pq AS (SELECT c.id, c.user_id, c.ne,
-         |  list_transform(c.ne, x -> greatest(-127, least(127, round(x*127)::INT))) AS pv FROM c),
-         |phase1 AS (SELECT pq.id, pq.user_id, pq.ne, qq.qe,
-         |  round(list_dot_product(pq.pv::DOUBLE[], qq.qv::DOUBLE[]) / 16129.0, 6) AS cheap
-         |  FROM pq, qq ORDER BY cheap DESC, id ASC LIMIT 30)
-         |SELECT id, round(list_dot_product(ne, qe), 6) AS score, user_id FROM phase1
-         |ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
+    "quantized_two_phase" -> TwoPhaseInt8Sql,
     "value_hour_corr" ->
       """WITH e AS (SELECT event_type, value, extract(hour FROM ts)::INT AS hod FROM events),
         |a AS (SELECT event_type, count(*)::BIGINT AS n,
@@ -3650,11 +3686,7 @@ object SparkEntry {
         |SELECT bin::BIGINT AS bin, count(*)::BIGINT AS n,
         |  min(n_chars)::BIGINT AS lo, max(n_chars)::BIGINT AS hi
         |FROM k GROUP BY bin ORDER BY bin""".stripMargin,
-    "streaming_hourly_window" ->
-      """SELECT date_trunc('hour', ts) AS window_start, event_type,
-        |  count(*)::BIGINT AS n_events,
-        |  sum(value::DECIMAL(18,2))::DOUBLE AS sum_value
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
+    "streaming_hourly_window" -> HourlyWindowSql,
     "distinct_users_by_type" ->
       """SELECT event_type, count(DISTINCT user_id)::BIGINT AS distinct_users,
         |  count(*)::BIGINT AS n_events
@@ -3761,18 +3793,10 @@ object SparkEntry {
         |  FROM orders WHERE o_custkey < 50)
         |SELECT o_custkey, o_orderkey, o_totalprice, rank FROM r WHERE rank <= 3
         |ORDER BY o_custkey, rank""".stripMargin,
-    "knn_search" ->
-      s"""WITH $C, q AS (SELECT ne AS qe FROM c WHERE id = 0),
-         |s AS (SELECT c.id, round(list_dot_product(c.ne, q.qe), 6) AS score, c.user_id FROM c, q)
-         |SELECT id, score, user_id FROM s WHERE score >= 0.1
-         |ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
+    "knn_search" -> KnnExactSql,
     // same oracle as knn_search: the literal-inline execution form must
     // produce byte-identical results to the broadcast form
-    "knn_search_direct" ->
-      s"""WITH $C, q AS (SELECT ne AS qe FROM c WHERE id = 0),
-         |s AS (SELECT c.id, round(list_dot_product(c.ne, q.qe), 6) AS score, c.user_id FROM c, q)
-         |SELECT id, score, user_id FROM s WHERE score >= 0.1
-         |ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
+    "knn_search_direct" -> KnnExactSql,
     "knn_search_filtered" ->
       s"""WITH $C, q AS (SELECT ne AS qe FROM c WHERE id = 0),
          |s AS (SELECT c.id, round(list_dot_product(c.ne, q.qe), 6) AS score, c.user_id
@@ -3950,17 +3974,13 @@ object SparkEntry {
          |FROM sc ORDER BY gumbel_key DESC, doc_id ASC LIMIT 30""".stripMargin,
     "duplicate_spans" ->
       s"""WITH $W,
-         |sp AS (SELECT doc_id,
-         |  ('0x' || substring(md5(array_to_string(list_slice(w, i + 1, i + 8), ' ')), 1, 15))::BIGINT AS span_h
-         |  FROM (SELECT doc_id, w, unnest(range(0, greatest(len(w) - 7, 0))) AS i FROM t))
+         |$SP
          |SELECT span_h, count(DISTINCT doc_id)::BIGINT AS n_docs, count(*)::BIGINT AS n_hits
          |FROM sp GROUP BY span_h HAVING count(DISTINCT doc_id) >= 2
          |ORDER BY n_docs DESC, n_hits DESC, span_h ASC LIMIT 20""".stripMargin,
     "span_dup_exposure" ->
       s"""WITH $W,
-         |sp AS (SELECT doc_id,
-         |  ('0x' || substring(md5(array_to_string(list_slice(w, i + 1, i + 8), ' ')), 1, 15))::BIGINT AS span_h
-         |  FROM (SELECT doc_id, w, unnest(range(0, greatest(len(w) - 7, 0))) AS i FROM t)),
+         |$SP,
          |dup AS (SELECT span_h FROM sp GROUP BY span_h HAVING count(DISTINCT doc_id) >= 2)
          |SELECT doc_id, count(*)::BIGINT AS n_dup_spans,
          |  count(DISTINCT sp.span_h)::BIGINT AS n_dup_keys
@@ -3968,9 +3988,7 @@ object SparkEntry {
          |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
     "span_dedup_apply" ->
       s"""WITH $W,
-         |sp AS (SELECT doc_id,
-         |  ('0x' || substring(md5(array_to_string(list_slice(w, i + 1, i + 8), ' ')), 1, 15))::BIGINT AS span_h
-         |  FROM (SELECT doc_id, w, unnest(range(0, greatest(len(w) - 7, 0))) AS i FROM t)),
+         |$SP,
          |tot AS (SELECT doc_id, count(*) AS n_spans FROM sp GROUP BY doc_id),
          |own AS (SELECT span_h, min(doc_id) AS owner FROM sp
          |        GROUP BY span_h HAVING count(DISTINCT doc_id) >= 2),
@@ -4029,11 +4047,7 @@ object SparkEntry {
          |SELECT id, score, user_id, confidence_score, face_quality, enrollment_group
          |FROM s WHERE score >= 0.15
          |ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
-    "migrate_npy" ->
-      """SELECT vec_id AS id, 'migrated_user_' || vec_id AS user_id,
-        |  len(embedding)::INT AS dim,
-        |  round(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]), 6) AS sq_norm
-        |FROM embeddings ORDER BY id""".stripMargin,
+    "migrate_npy" -> MigrateSql,
     "collection_payload_map" ->
       """WITH cx AS (SELECT vec_id AS id, label AS user_id,
         |  round((('0x' || substring(md5('conf_' || vec_id), 1, 15))::BIGINT % 1000000)::DOUBLE / 1e6, 6) AS confidence_score,
@@ -4044,11 +4058,7 @@ object SparkEntry {
         |  face_quality::BIGINT AS meta_quality, confidence_score AS meta_conf
         |FROM cx WHERE enrollment_group = 'grp_2' AND face_quality >= 50
         |ORDER BY id""".stripMargin,
-    "migrate_faiss" ->
-      """SELECT vec_id AS id, 'migrated_user_' || vec_id AS user_id,
-        |  len(embedding)::INT AS dim,
-        |  round(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]), 6) AS sq_norm
-        |FROM embeddings ORDER BY id""".stripMargin,
+    "migrate_faiss" -> MigrateSql,
     "knn_batch" ->
       s"""WITH $C, q AS (SELECT id AS query_id, ne AS qe FROM c WHERE id < 8),
          |s AS (SELECT q.query_id, c.id, round(list_dot_product(c.ne, q.qe), 6) AS score, c.user_id FROM c, q),
@@ -4090,20 +4100,8 @@ object SparkEntry {
          |SELECT id, score, user_id FROM s WHERE score >= 0.0
          |ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
     // served verify ≡ batch verify: same oracle as face_verify
-    "serving_verify" ->
-      s"""WITH $C, q AS (SELECT ne AS qe FROM c WHERE id = 0),
-         |s AS (SELECT c.user_id, round(list_dot_product(c.ne, q.qe), 6) AS score
-         |      FROM c, q WHERE c.user_id = 5)
-         |SELECT user_id, max(score) AS best_score,
-         |       (max(score) >= 0.65)::INT AS verified
-         |FROM s GROUP BY user_id""".stripMargin,
-    "face_verify" ->
-      s"""WITH $C, q AS (SELECT ne AS qe FROM c WHERE id = 0),
-         |s AS (SELECT c.user_id, round(list_dot_product(c.ne, q.qe), 6) AS score
-         |      FROM c, q WHERE c.user_id = 5)
-         |SELECT user_id, max(score) AS best_score,
-         |       (max(score) >= 0.65)::INT AS verified
-         |FROM s GROUP BY user_id""".stripMargin,
+    "serving_verify" -> VerifySql,
+    "face_verify" -> VerifySql,
     "face_detect" ->
       s"""WITH $C, q AS (SELECT ne AS qe FROM c WHERE id = 0),
          |s AS (SELECT c.user_id, round(list_dot_product(c.ne, q.qe), 6) AS score FROM c, q)
@@ -4136,18 +4134,7 @@ object SparkEntry {
          |FROM m GROUP BY user_id ORDER BY user_id""".stripMargin,
     "bm25_search" ->
       s"""WITH $W,
-         |stats AS (SELECT count(*)::DOUBLE AS n_docs,
-         |  sum(len(w))::DOUBLE / count(*) AS avgdl FROM t),
-         |terms AS (SELECT doc_id, len(w) AS doc_len, unnest(w) AS term FROM t),
-         |tf AS (SELECT doc_id, doc_len, term, count(*)::DOUBLE AS tf FROM terms
-         |       WHERE term IN ('spark', 'join', 'shuffle', 'window') GROUP BY 1, 2, 3),
-         |df AS (SELECT term, count(*)::DOUBLE AS df FROM tf GROUP BY term),
-         |c AS (SELECT tf.doc_id,
-         |  (ln((stats.n_docs - df.df + 0.5::DOUBLE) / (df.df + 0.5::DOUBLE) + 1.0::DOUBLE)
-         |   * tf.tf * 2.2::DOUBLE
-         |   / (tf.tf + 1.2::DOUBLE * (0.25::DOUBLE + 0.75::DOUBLE * tf.doc_len / stats.avgdl))
-         |  )::DECIMAL(28,12) AS contrib
-         |  FROM tf, df, stats WHERE tf.term = df.term)
+         |${bm25Ctes("c")}
          |SELECT doc_id, round(sum(contrib)::DOUBLE, 6) AS bm25,
          |  count(*)::BIGINT AS n_matched_terms
          |FROM c GROUP BY doc_id
@@ -4265,11 +4252,8 @@ object SparkEntry {
          |ORDER BY pos.qid""".stripMargin,
     "ivf_cell_stats" ->
       s"""WITH $C,
-         |cent AS (SELECT cid, ce FROM read_parquet(${glob(trainedCentroids.path(dir))})),
-         |asgn AS (SELECT c.id, cent.cid,
-         |  row_number() OVER (PARTITION BY c.id
-         |    ORDER BY round(list_dot_product(c.ne, cent.ce), 6) DESC, cent.cid ASC) AS rn
-         |  FROM c, cent),
+         |${centFrom(trainedCentroids.path(dir))},
+         |${ivfAsgnCte("c.id")},
          |pts AS (SELECT id, cid FROM asgn WHERE rn = 1),
          |tot AS (SELECT count(*)::DOUBLE AS total FROM pts)
          |SELECT cid, count(*)::BIGINT AS n_points,
@@ -4277,11 +4261,8 @@ object SparkEntry {
          |FROM pts GROUP BY cid ORDER BY cid""".stripMargin,
     "cluster_topics" ->
       s"""WITH $C,
-         |cent AS (SELECT cid, ce FROM read_parquet(${glob(trainedCentroids.path(dir))})),
-         |asgn AS (SELECT c.id, cent.cid,
-         |  row_number() OVER (PARTITION BY c.id
-         |    ORDER BY round(list_dot_product(c.ne, cent.ce), 6) DESC, cent.cid ASC) AS rn
-         |  FROM c, cent),
+         |${centFrom(trainedCentroids.path(dir))},
+         |${ivfAsgnCte("c.id")},
          |pts AS (SELECT id AS doc_id, cid FROM asgn WHERE rn = 1),
          |w AS (SELECT p.cid, unnest(list_distinct(string_split(d.text, ' '))) AS term
          |  FROM documents d JOIN pts p USING (doc_id)),
@@ -4322,18 +4303,7 @@ object SparkEntry {
          |vs AS (SELECT c.id, round(list_dot_product(c.ne, q.qe), 6) AS score FROM c, q
          |  ORDER BY score DESC, id ASC LIMIT 20),
          |vr AS (SELECT id, row_number() OVER (ORDER BY score DESC, id ASC)::BIGINT AS rank FROM vs),
-         |stats AS (SELECT count(*)::DOUBLE AS n_docs,
-         |  sum(len(w))::DOUBLE / count(*) AS avgdl FROM t),
-         |terms AS (SELECT doc_id, len(w) AS doc_len, unnest(w) AS term FROM t),
-         |tf AS (SELECT doc_id, doc_len, term, count(*)::DOUBLE AS tf FROM terms
-         |       WHERE term IN ('spark', 'join', 'shuffle', 'window') GROUP BY 1, 2, 3),
-         |df AS (SELECT term, count(*)::DOUBLE AS df FROM tf GROUP BY term),
-         |bc AS (SELECT tf.doc_id,
-         |  (ln((stats.n_docs - df.df + 0.5::DOUBLE) / (df.df + 0.5::DOUBLE) + 1.0::DOUBLE)
-         |   * tf.tf * 2.2::DOUBLE
-         |   / (tf.tf + 1.2::DOUBLE * (0.25::DOUBLE + 0.75::DOUBLE * tf.doc_len / stats.avgdl))
-         |  )::DECIMAL(28,12) AS contrib
-         |  FROM tf, df, stats WHERE tf.term = df.term),
+         |${bm25Ctes("bc")},
          |bs AS (SELECT doc_id, round(sum(contrib)::DOUBLE, 6) AS bm25 FROM bc
          |  GROUP BY doc_id ORDER BY bm25 DESC, doc_id ASC LIMIT 20),
          |tr AS (SELECT doc_id AS id, row_number() OVER (ORDER BY bm25 DESC, doc_id ASC)::BIGINT AS rank FROM bs),
@@ -4489,14 +4459,7 @@ object SparkEntry {
       """SELECT count(*)::BIGINT AS n, sum(value::DECIMAL(18,2))::DOUBLE AS sum_value
         |FROM events WHERE user_id BETWEEN 10 AND 20 AND value >= 500.0""".stripMargin,
     "psi_drift" ->
-      """WITH e AS (SELECT event_type, value::DOUBLE AS v FROM events
-        |  WHERE event_type IN ('click', 'purchase')),
-        |bd AS (SELECT min(v) AS lo, greatest((max(v) - min(v)) / 200.0, 1e-12) AS width FROM e),
-        |bins AS (SELECT least(199, floor((e.v - bd.lo) / bd.width))::BIGINT AS bin,
-        |  sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)::BIGINT AS ca_,
-        |  sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)::BIGINT AS cb_
-        |  FROM e, bd GROUP BY 1),
-        |tot AS (SELECT sum(ca_)::DOUBLE AS na, sum(cb_)::DOUBLE AS nb FROM bins),
+      s"""WITH $DriftBins,
         |terms AS (SELECT bin,
         |  (ca_::DOUBLE / tot.na + 1e-6) AS pa, (cb_::DOUBLE / tot.nb + 1e-6) AS pb
         |  FROM bins, tot)
@@ -4505,14 +4468,7 @@ object SparkEntry {
         |  (SELECT na FROM tot)::BIGINT AS n_a, (SELECT nb FROM tot)::BIGINT AS n_b
         |FROM terms""".stripMargin,
     "ks_drift" ->
-      """WITH e AS (SELECT event_type, value::DOUBLE AS v FROM events
-        |  WHERE event_type IN ('click', 'purchase')),
-        |bd AS (SELECT min(v) AS lo, greatest((max(v) - min(v)) / 200.0, 1e-12) AS width FROM e),
-        |bins AS (SELECT least(199, floor((e.v - bd.lo) / bd.width))::BIGINT AS bin,
-        |  sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)::BIGINT AS ca_,
-        |  sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)::BIGINT AS cb_
-        |  FROM e, bd GROUP BY 1),
-        |tot AS (SELECT sum(ca_)::DOUBLE AS na, sum(cb_)::DOUBLE AS nb FROM bins),
+      s"""WITH $DriftBins,
         |cum AS (SELECT bin,
         |  sum(ca_) OVER (ORDER BY bin ROWS UNBOUNDED PRECEDING)::DOUBLE AS ca,
         |  sum(cb_) OVER (ORDER BY bin ROWS UNBOUNDED PRECEDING)::DOUBLE AS cb
@@ -4524,11 +4480,8 @@ object SparkEntry {
         |FROM d ORDER BY d DESC, bin ASC LIMIT 1""".stripMargin,
     "ivf_batch_search" ->
       s"""WITH $C,
-         |cent AS (SELECT cid, ce FROM read_parquet(${glob(trainedCentroids.path(dir))})),
-         |asgn AS (SELECT c.id, c.user_id, c.ne, cent.cid,
-         |  row_number() OVER (PARTITION BY c.id
-         |    ORDER BY round(list_dot_product(c.ne, cent.ce), 6) DESC, cent.cid ASC) AS rn
-         |  FROM c, cent),
+         |${centFrom(trainedCentroids.path(dir))},
+         |${ivfAsgnCte("c.id, c.user_id, c.ne")},
          |pts AS (SELECT id, ne, cid FROM asgn WHERE rn = 1),
          |qs AS (SELECT id AS query_id, ne AS qe FROM c WHERE id < 3),
          |pr AS (SELECT qs.query_id, cent.cid,
@@ -4549,35 +4502,12 @@ object SparkEntry {
     // persisted trained-centroid table, codebook from the PQ side table.
     "ivf_pq_search" ->
       s"""WITH $C,
-         |cent AS (SELECT cid, ce FROM read_parquet(${glob(trainedCentroids.path(dir))})),
-         |asgn AS (SELECT c.id, c.user_id, c.ne, cent.cid,
-         |  row_number() OVER (PARTITION BY c.id
-         |    ORDER BY round(list_dot_product(c.ne, cent.ce), 6) DESC, cent.cid ASC) AS rn
-         |  FROM c, cent),
-         |pts AS (SELECT id, user_id, ne, cid FROM asgn WHERE rn = 1),
-         |q AS (SELECT ne AS qe FROM c WHERE id = 0),
-         |probes AS (SELECT cent.cid FROM cent, q
-         |  ORDER BY round(list_dot_product(cent.ce, q.qe), 6) DESC, cent.cid ASC LIMIT 4),
+         |${ivfCellCtes(centFrom(trainedCentroids.path(dir)), 4)},
          |pp AS (SELECT * FROM pts WHERE cid IN (SELECT cid FROM probes)),
-         |cb AS (SELECT sub, code, cent,
-         |  cent || [-list_dot_product(cent, cent) / 2.0] AS caug
-         |  FROM read_parquet(${glob(pqCodebookDf.path(dir))})),
-         |sv AS (SELECT pp.id, s.range::INT AS sub,
-         |  list_slice(pp.ne, s.range*8 + 1, s.range*8 + 8) AS xs FROM pp, range(8) s),
-         |dist AS (SELECT sv.id, sv.sub, cb.code,
-         |  row_number() OVER (PARTITION BY sv.id, sv.sub
-         |    ORDER BY round(list_dot_product(sv.xs || [1.0], cb.caug), 6) DESC, cb.code ASC) AS rn
-         |  FROM sv JOIN cb USING (sub)),
-         |codes AS (SELECT id, sub, code FROM dist WHERE rn = 1),
-         |luts AS (SELECT codes.id, codes.sub,
-         |  list_dot_product(list_slice(q.qe, codes.sub*8 + 1, codes.sub*8 + 8), cb.cent) AS l
-         |  FROM codes JOIN cb USING (sub, code), q),
-         |adc AS (SELECT id,
-         |  round(list_reduce([0.0::DOUBLE] || list(l ORDER BY sub), (a, b) -> a + b), 6) AS adc
-         |  FROM luts GROUP BY id),
+         |${pqCodebookCte("cb", pqCodebookDf.path(dir))},
+         |${pqFlatAdcCtes("pp")},
          |p1 AS (SELECT id FROM adc ORDER BY adc DESC, id ASC LIMIT 320),
-         |f AS (SELECT pp.id, round(list_dot_product(pp.ne, q.qe), 6) AS score, pp.user_id
-         |  FROM pp JOIN p1 USING (id), q)
+         |${pqRescoreCte("pp")}
          |SELECT id, score, user_id FROM f ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
     // residual IVF-PQ: same assignment/probe replay as ivf_pq_search, but
     // codes are the L2-argmin of the RESIDUAL sub-vectors (x − c(cell))
@@ -4586,156 +4516,32 @@ object SparkEntry {
     // kernel's, the outer the operator's (both mirrored from Spark).
     "ivf_pq_residual_search" ->
       s"""WITH $C,
-         |cent AS (SELECT cid, ce FROM read_parquet(${glob(trainedCentroids.path(dir))})),
-         |asgn AS (SELECT c.id, c.user_id, c.ne, cent.cid,
-         |  row_number() OVER (PARTITION BY c.id
-         |    ORDER BY round(list_dot_product(c.ne, cent.ce), 6) DESC, cent.cid ASC) AS rn
-         |  FROM c, cent),
-         |pts AS (SELECT id, user_id, ne, cid FROM asgn WHERE rn = 1),
-         |q AS (SELECT ne AS qe FROM c WHERE id = 0),
-         |probes AS (SELECT cent.cid FROM cent, q
-         |  ORDER BY round(list_dot_product(cent.ce, q.qe), 6) DESC, cent.cid ASC LIMIT 4),
+         |${ivfCellCtes(centFrom(trainedCentroids.path(dir)), 4)},
          |pp AS (SELECT pts.*, cent.ce FROM pts JOIN cent USING (cid)
          |  WHERE cid IN (SELECT cid FROM probes)),
-         |cb AS (SELECT sub, code, cent,
-         |  cent || [-list_dot_product(cent, cent) / 2.0] AS caug
-         |  FROM read_parquet(${glob(pqResCodebookDf.path(dir))})),
-         |sv AS (SELECT pp.id, s.range::INT AS sub,
-         |  list_slice(pp.ne, s.range*8 + 1, s.range*8 + 8) AS xs,
-         |  list_slice(pp.ce, s.range*8 + 1, s.range*8 + 8) AS cs
-         |  FROM pp, range(8) s),
-         |rv AS (SELECT id, sub,
-         |  [xs[1]-cs[1], xs[2]-cs[2], xs[3]-cs[3], xs[4]-cs[4],
-         |   xs[5]-cs[5], xs[6]-cs[6], xs[7]-cs[7], xs[8]-cs[8]] AS rs
-         |  FROM sv),
-         |dist AS (SELECT rv.id, rv.sub, cb.code,
-         |  row_number() OVER (PARTITION BY rv.id, rv.sub
-         |    ORDER BY round(list_dot_product(rv.rs || [1.0], cb.caug), 6) DESC, cb.code ASC) AS rn
-         |  FROM rv JOIN cb USING (sub)),
-         |codes AS (SELECT id, sub, code FROM dist WHERE rn = 1),
-         |luts AS (SELECT codes.id, codes.sub,
-         |  list_dot_product(list_slice(q.qe, codes.sub*8 + 1, codes.sub*8 + 8), cb.cent) AS l
-         |  FROM codes JOIN cb USING (sub, code), q),
-         |radc AS (SELECT id,
-         |  round(list_reduce([0.0::DOUBLE] || list(l ORDER BY sub), (a, b) -> a + b), 6) AS adc6
-         |  FROM luts GROUP BY id),
+         |${pqCodebookCte("cb", pqResCodebookDf.path(dir))},
+         |${pqResidualAdcCtes("")},
          |adc AS (SELECT pp.id,
          |  round(list_dot_product(pp.ce, q.qe) + radc.adc6, 6) AS adc
          |  FROM pp JOIN radc USING (id), q),
          |p1 AS (SELECT id FROM adc ORDER BY adc DESC, id ASC LIMIT 320),
-         |f AS (SELECT pp.id, round(list_dot_product(pp.ne, q.qe), 6) AS score, pp.user_id
-         |  FROM pp JOIN p1 USING (id), q)
+         |${pqRescoreCte("pp")}
          |SELECT id, score, user_id FROM f ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
     // adaptive rescore budget: same replay at nprobe=8 with
     // fetchK = greatest(k*32, candidates // 16) — candidates = the probed
     // row count, exactly Spark's one partition-pruned count
-    "ivf_pq_residual_adaptive" ->
-      s"""WITH $C,
-         |cent AS (SELECT cid, ce FROM read_parquet(${glob(trainedCentroids.path(dir))})),
-         |asgn AS (SELECT c.id, c.user_id, c.ne, cent.cid,
-         |  row_number() OVER (PARTITION BY c.id
-         |    ORDER BY round(list_dot_product(c.ne, cent.ce), 6) DESC, cent.cid ASC) AS rn
-         |  FROM c, cent),
-         |pts AS (SELECT id, user_id, ne, cid FROM asgn WHERE rn = 1),
-         |q AS (SELECT ne AS qe FROM c WHERE id = 0),
-         |probes AS (SELECT cent.cid FROM cent, q
-         |  ORDER BY round(list_dot_product(cent.ce, q.qe), 6) DESC, cent.cid ASC LIMIT 8),
-         |pp AS MATERIALIZED (SELECT pts.*, cent.ce FROM pts JOIN cent USING (cid)
-         |  WHERE cid IN (SELECT cid FROM probes)),
-         |cut AS (SELECT greatest(320, count(*) // 16)::BIGINT AS fk FROM pp),
-         |cb AS (SELECT sub, code, cent,
-         |  cent || [-list_dot_product(cent, cent) / 2.0] AS caug
-         |  FROM read_parquet(${glob(pqResCodebookDf.path(dir))})),
-         |sv AS (SELECT pp.id, s.range::INT AS sub,
-         |  list_slice(pp.ne, s.range*8 + 1, s.range*8 + 8) AS xs,
-         |  list_slice(pp.ce, s.range*8 + 1, s.range*8 + 8) AS cs
-         |  FROM pp, range(8) s),
-         |rv AS (SELECT id, sub,
-         |  [xs[1]-cs[1], xs[2]-cs[2], xs[3]-cs[3], xs[4]-cs[4],
-         |   xs[5]-cs[5], xs[6]-cs[6], xs[7]-cs[7], xs[8]-cs[8]] AS rs
-         |  FROM sv),
-         |dist AS (SELECT rv.id, rv.sub, cb.code,
-         |  row_number() OVER (PARTITION BY rv.id, rv.sub
-         |    ORDER BY round(list_dot_product(rv.rs || [1.0], cb.caug), 6) DESC, cb.code ASC) AS rn
-         |  FROM rv JOIN cb USING (sub)),
-         |codes AS (SELECT id, sub, code FROM dist WHERE rn = 1),
-         |luts AS (SELECT codes.id, codes.sub,
-         |  list_dot_product(list_slice(q.qe, codes.sub*8 + 1, codes.sub*8 + 8), cb.cent) AS l
-         |  FROM codes JOIN cb USING (sub, code), q),
-         |radc AS (SELECT id,
-         |  round(list_reduce([0.0::DOUBLE] || list(l ORDER BY sub), (a, b) -> a + b), 6) AS adc6
-         |  FROM luts GROUP BY id),
-         |adc AS (SELECT pp.id,
-         |  round(list_dot_product(pp.ce, q.qe) + radc.adc6, 6) AS adc
-         |  FROM pp JOIN radc USING (id), q),
-         |p1 AS (SELECT id FROM (SELECT id,
-         |    row_number() OVER (ORDER BY adc DESC, id ASC) AS rn FROM adc), cut
-         |  WHERE rn <= cut.fk),
-         |f AS (SELECT pp.id, round(list_dot_product(pp.ne, q.qe), 6) AS score, pp.user_id
-         |  FROM pp JOIN p1 USING (id), q)
-         |SELECT id, score, user_id FROM f ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
+    "ivf_pq_residual_adaptive" -> (
+      pqResidualAdaptiveCtes(dir, 8, "greatest(320, count(*) // 16)") +
+        "\nSELECT id, score, user_id FROM f ORDER BY score DESC, id ASC LIMIT 10"),
     // the NON-floor branch of the adaptive budget (ADVICE r15): nprobe=16,
     // fetchK = greatest(10*2, candidates // 4) — the candidate term wins at
     // fixture scale, and the chosen budget ships as a hash-verified column
-    "ivf_pq_residual_adaptive_frac" ->
-      s"""WITH $C,
-         |cent AS (SELECT cid, ce FROM read_parquet(${glob(trainedCentroids.path(dir))})),
-         |asgn AS (SELECT c.id, c.user_id, c.ne, cent.cid,
-         |  row_number() OVER (PARTITION BY c.id
-         |    ORDER BY round(list_dot_product(c.ne, cent.ce), 6) DESC, cent.cid ASC) AS rn
-         |  FROM c, cent),
-         |pts AS (SELECT id, user_id, ne, cid FROM asgn WHERE rn = 1),
-         |q AS (SELECT ne AS qe FROM c WHERE id = 0),
-         |probes AS (SELECT cent.cid FROM cent, q
-         |  ORDER BY round(list_dot_product(cent.ce, q.qe), 6) DESC, cent.cid ASC LIMIT 16),
-         |pp AS MATERIALIZED (SELECT pts.*, cent.ce FROM pts JOIN cent USING (cid)
-         |  WHERE cid IN (SELECT cid FROM probes)),
-         |cut AS (SELECT greatest(20, count(*) // 4)::BIGINT AS fk FROM pp),
-         |cb AS (SELECT sub, code, cent,
-         |  cent || [-list_dot_product(cent, cent) / 2.0] AS caug
-         |  FROM read_parquet(${glob(pqResCodebookDf.path(dir))})),
-         |sv AS (SELECT pp.id, s.range::INT AS sub,
-         |  list_slice(pp.ne, s.range*8 + 1, s.range*8 + 8) AS xs,
-         |  list_slice(pp.ce, s.range*8 + 1, s.range*8 + 8) AS cs
-         |  FROM pp, range(8) s),
-         |rv AS (SELECT id, sub,
-         |  [xs[1]-cs[1], xs[2]-cs[2], xs[3]-cs[3], xs[4]-cs[4],
-         |   xs[5]-cs[5], xs[6]-cs[6], xs[7]-cs[7], xs[8]-cs[8]] AS rs
-         |  FROM sv),
-         |dist AS (SELECT rv.id, rv.sub, cb.code,
-         |  row_number() OVER (PARTITION BY rv.id, rv.sub
-         |    ORDER BY round(list_dot_product(rv.rs || [1.0], cb.caug), 6) DESC, cb.code ASC) AS rn
-         |  FROM rv JOIN cb USING (sub)),
-         |codes AS (SELECT id, sub, code FROM dist WHERE rn = 1),
-         |luts AS (SELECT codes.id, codes.sub,
-         |  list_dot_product(list_slice(q.qe, codes.sub*8 + 1, codes.sub*8 + 8), cb.cent) AS l
-         |  FROM codes JOIN cb USING (sub, code), q),
-         |radc AS (SELECT id,
-         |  round(list_reduce([0.0::DOUBLE] || list(l ORDER BY sub), (a, b) -> a + b), 6) AS adc6
-         |  FROM luts GROUP BY id),
-         |adc AS (SELECT pp.id,
-         |  round(list_dot_product(pp.ce, q.qe) + radc.adc6, 6) AS adc
-         |  FROM pp JOIN radc USING (id), q),
-         |p1 AS (SELECT id FROM (SELECT id,
-         |    row_number() OVER (ORDER BY adc DESC, id ASC) AS rn FROM adc), cut
-         |  WHERE rn <= cut.fk),
-         |f AS (SELECT pp.id, round(list_dot_product(pp.ne, q.qe), 6) AS score, pp.user_id
-         |  FROM pp JOIN p1 USING (id), q)
-         |SELECT f.id, f.score, f.user_id, cut.fk AS fetch_k
-         |FROM f, cut ORDER BY f.score DESC, f.id ASC LIMIT 10""".stripMargin,
-    // tie-inclusive phase 1: every row scoring >= the 40th cheap score
-    // survives (mirrors Quantization.twoPhase tieInclusive)
-    "binary_quant_search" ->
-      s"""WITH $C,
-         |sg AS (SELECT id, user_id, ne, ${bsig("ne")} AS sig FROM c),
-         |q AS (SELECT ne AS qe, sig AS qsig FROM sg WHERE id = 0),
-         |p0 AS (SELECT sg.id, sg.user_id, sg.ne, q.qe,
-         |  (64 - bit_count(xor(sg.sig, q.qsig)))::INT AS cheap_score FROM sg, q),
-         |cut AS (SELECT min(cheap_score) AS cs FROM
-         |  (SELECT cheap_score FROM p0 ORDER BY cheap_score DESC, id ASC LIMIT 320)),
-         |p1 AS (SELECT p0.* FROM p0, cut WHERE p0.cheap_score >= cut.cs)
-         |SELECT id, round(list_dot_product(ne, qe), 6) AS score, cheap_score, user_id
-         |FROM p1 ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
+    "ivf_pq_residual_adaptive_frac" -> (
+      pqResidualAdaptiveCtes(dir, 16, "greatest(20, count(*) // 4)") +
+        """
+          |SELECT f.id, f.score, f.user_id, cut.fk AS fetch_k
+          |FROM f, cut ORDER BY f.score DESC, f.id ASC LIMIT 10""".stripMargin),
+    "binary_quant_search" -> BinaryQuantSql,
     "stratified_sample" ->
       """WITH b AS (SELECT doc_id, lang,
         |    ('0x' || substring(md5('s1_' || doc_id), 1, 15))::BIGINT % 1000000 AS bk
@@ -4807,260 +4613,77 @@ object SparkEntry {
     // centroid table and the engine's own persisted id→cid sidecar (the
     // stored assignment is historical — sub-k-means output, not a global
     // argmax — so the sidecar, not re-assignment, is the ground truth).
-    "ivf_split_search" ->
-      s"""WITH $C,
-         |cent AS (SELECT cid, ce FROM read_parquet(${glob(splitStore.path(dir) + "_centroids")})),
-         |asgn AS (SELECT id, cid FROM read_parquet(${glob(splitStore.path(dir) + "_idsflat")})),
-         |q AS (SELECT ne AS qe FROM c WHERE id = 0),
-         |probes AS (SELECT cent.cid FROM cent, q
-         |  ORDER BY round(list_dot_product(cent.ce, q.qe), 6) DESC, cent.cid ASC LIMIT 4),
-         |s AS (SELECT c.id, round(list_dot_product(c.ne, q.qe), 6) AS score, c.user_id
-         |  FROM c JOIN asgn USING (id), q
-         |  WHERE asgn.cid IN (SELECT cid FROM probes))
-         |SELECT id, score, user_id FROM s ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
-    "ivf_split_stats" ->
-      s"""SELECT cid, count(*)::BIGINT AS cell_rows
-         |FROM read_parquet(${glob(splitStore.path(dir) + "_idsflat")})
-         |GROUP BY cid ORDER BY cid""".stripMargin,
-    "ivf_merge_search" ->
-      s"""WITH $C,
-         |cent AS (SELECT cid, ce FROM read_parquet(${glob(mergeStore.path(dir) + "_centroids")})),
-         |asgn AS (SELECT id, cid FROM read_parquet(${glob(mergeStore.path(dir) + "_idsflat")})),
-         |q AS (SELECT ne AS qe FROM c WHERE id = 0),
-         |probes AS (SELECT cent.cid FROM cent, q
-         |  ORDER BY round(list_dot_product(cent.ce, q.qe), 6) DESC, cent.cid ASC LIMIT 4),
-         |s AS (SELECT c.id, round(list_dot_product(c.ne, q.qe), 6) AS score, c.user_id
-         |  FROM c JOIN asgn USING (id), q
-         |  WHERE asgn.cid IN (SELECT cid FROM probes))
-         |SELECT id, score, user_id FROM s ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
-    "ivf_merge_stats" ->
-      s"""SELECT cid, count(*)::BIGINT AS cell_rows
-         |FROM read_parquet(${glob(mergeStore.path(dir) + "_idsflat")})
-         |GROUP BY cid ORDER BY cid""".stripMargin,
-    "ivf_optimize_search" ->
-      s"""WITH $C,
-         |cent AS (SELECT cid, ce FROM read_parquet(${glob(optStore.path(dir) + "_centroids")})),
-         |asgn AS (SELECT id, cid FROM read_parquet(${glob(optStore.path(dir) + "_idsflat")})),
-         |q AS (SELECT ne AS qe FROM c WHERE id = 0),
-         |probes AS (SELECT cent.cid FROM cent, q
-         |  ORDER BY round(list_dot_product(cent.ce, q.qe), 6) DESC, cent.cid ASC LIMIT 4),
-         |s AS (SELECT c.id, round(list_dot_product(c.ne, q.qe), 6) AS score, c.user_id
-         |  FROM c JOIN asgn USING (id), q
-         |  WHERE asgn.cid IN (SELECT cid FROM probes))
-         |SELECT id, score, user_id FROM s ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
-    "ivf_optimize_stats" ->
-      s"""SELECT cid, count(*)::BIGINT AS cell_rows
-         |FROM read_parquet(${glob(optStore.path(dir) + "_idsflat")})
-         |GROUP BY cid ORDER BY cid""".stripMargin,
-    "indexed_ivf_search_cn" ->
-      s"""WITH $C,
-         |cent AS (SELECT cid, ce FROM read_parquet(${glob(cnStore.path(dir) + "_centroids")})),
-         |asgn AS (SELECT id, cid FROM read_parquet(${glob(cnStore.path(dir) + "_idsflat")})),
-         |q AS (SELECT ne AS qe FROM c WHERE id = 0),
-         |probes AS (SELECT cent.cid FROM cent, q
-         |  ORDER BY round(list_dot_product(cent.ce, q.qe), 6) DESC, cent.cid ASC LIMIT 4),
-         |s AS (SELECT c.id, round(list_dot_product(c.ne, q.qe), 6) AS score, c.user_id
-         |  FROM c JOIN asgn USING (id), q
-         |  WHERE asgn.cid IN (SELECT cid FROM probes))
-         |SELECT id, score, user_id FROM s ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
-    "indexed_ivf_cn_stats" ->
-      s"""SELECT cid, count(*)::BIGINT AS cell_rows
-         |FROM read_parquet(${glob(cnStore.path(dir) + "_idsflat")})
-         |GROUP BY cid ORDER BY cid""".stripMargin,
+    "ivf_split_search" -> storeSearchOracle(splitStore.path(dir)),
+    "ivf_split_stats" -> storeCellRowsOracle(splitStore.path(dir)),
+    "ivf_merge_search" -> storeSearchOracle(mergeStore.path(dir)),
+    "ivf_merge_stats" -> storeCellRowsOracle(mergeStore.path(dir)),
+    "ivf_optimize_search" -> storeSearchOracle(optStore.path(dir)),
+    "ivf_optimize_stats" -> storeCellRowsOracle(optStore.path(dir)),
+    "indexed_ivf_search_cn" -> storeSearchOracle(cnStore.path(dir)),
+    "indexed_ivf_cn_stats" -> storeCellRowsOracle(cnStore.path(dir)),
     "indexed_ivf_search" ->
-      s"""WITH $C,
-         |cent AS (SELECT cid, ce FROM read_parquet(${glob(trainedCentroids.path(dir))})),
-         |asgn AS (SELECT c.id, c.user_id, c.ne, cent.cid,
-         |  row_number() OVER (PARTITION BY c.id
-         |    ORDER BY round(list_dot_product(c.ne, cent.ce), 6) DESC, cent.cid ASC) AS rn
-         |  FROM c, cent),
-         |pts AS (SELECT id, user_id, ne, cid FROM asgn WHERE rn = 1),
-         |q AS (SELECT ne AS qe FROM c WHERE id = 0),
-         |probes AS (SELECT cent.cid FROM cent, q
-         |  ORDER BY round(list_dot_product(cent.ce, q.qe), 6) DESC, cent.cid ASC LIMIT 4),
-         |s AS (SELECT p.id, round(list_dot_product(p.ne, q.qe), 6) AS score, p.user_id
-         |  FROM pts p, q WHERE p.cid IN (SELECT cid FROM probes))
-         |SELECT id, score, user_id FROM s ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
+      ivfSearchOracle(centFrom(trainedCentroids.path(dir)), ""),
     // Slab-refresh planner: old cells replayed by the same argmax the
     // store was built with; new cells over the negated upsert embeddings;
     // the manifest is the full outer accounting per centroid-table cell.
-    "slab_refresh_manifest" ->
-      s"""WITH $C,
-         |cent AS (SELECT cid, ce FROM read_parquet(${glob(trainedCentroids.path(dir))})),
-         |asgn AS (SELECT c.id, cent.cid,
-         |  row_number() OVER (PARTITION BY c.id
-         |    ORDER BY round(list_dot_product(c.ne, cent.ce), 6) DESC, cent.cid ASC) AS rn
-         |  FROM c, cent),
-         |pts AS (SELECT id, cid FROM asgn WHERE rn = 1),
-         |up AS (SELECT id, list_transform(ne, x -> -x) AS ne2 FROM c WHERE id % 17 = 3),
-         |del AS (SELECT id FROM c WHERE id % 23 = 5),
-         |newa AS (SELECT up.id, cent.cid,
-         |  row_number() OVER (PARTITION BY up.id
-         |    ORDER BY round(list_dot_product(up.ne2, cent.ce), 6) DESC, cent.cid ASC) AS rn
-         |  FROM up, cent),
-         |newc AS (SELECT id, cid FROM newa
-         |  WHERE rn = 1 AND id NOT IN (SELECT id FROM del)),
-         |touched AS (SELECT id FROM up UNION SELECT id FROM del),
-         |dr AS (SELECT p.cid, count(*)::BIGINT AS drops
-         |  FROM pts p JOIN touched t USING (id) GROUP BY p.cid),
-         |ad AS (SELECT cid, count(*)::BIGINT AS adds FROM newc GROUP BY cid),
-         |bef AS (SELECT cid, count(*)::BIGINT AS rows_before FROM pts GROUP BY cid)
-         |SELECT cent.cid,
-         |  coalesce(bef.rows_before, 0)::BIGINT AS rows_before,
-         |  coalesce(ad.adds, 0)::BIGINT AS adds,
-         |  coalesce(dr.drops, 0)::BIGINT AS drops,
-         |  (coalesce(bef.rows_before, 0) + coalesce(ad.adds, 0)
-         |    - coalesce(dr.drops, 0))::BIGINT AS rows_after,
-         |  (CASE WHEN coalesce(ad.adds, 0) + coalesce(dr.drops, 0) > 0
-         |    THEN 1 ELSE 0 END)::INT AS dirty
-         |FROM cent LEFT JOIN bef USING (cid) LEFT JOIN ad USING (cid)
-         |  LEFT JOIN dr USING (cid)
-         |ORDER BY cent.cid""".stripMargin,
-    "slab_refresh_stats" ->
-      s"""WITH $C,
-         |cent AS (SELECT cid, ce FROM read_parquet(${glob(trainedCentroids.path(dir))})),
-         |asgn AS (SELECT c.id, cent.cid,
-         |  row_number() OVER (PARTITION BY c.id
-         |    ORDER BY round(list_dot_product(c.ne, cent.ce), 6) DESC, cent.cid ASC) AS rn
-         |  FROM c, cent),
-         |pts AS (SELECT id, cid FROM asgn WHERE rn = 1),
-         |up AS (SELECT id, list_transform(ne, x -> -x) AS ne2 FROM c WHERE id % 17 = 3),
-         |del AS (SELECT id FROM c WHERE id % 23 = 5),
-         |newa AS (SELECT up.id, cent.cid,
-         |  row_number() OVER (PARTITION BY up.id
-         |    ORDER BY round(list_dot_product(up.ne2, cent.ce), 6) DESC, cent.cid ASC) AS rn
-         |  FROM up, cent),
-         |newc AS (SELECT id, cid FROM newa
-         |  WHERE rn = 1 AND id NOT IN (SELECT id FROM del)),
-         |touched AS (SELECT id FROM up UNION SELECT id FROM del),
-         |dr AS (SELECT p.cid, count(*)::BIGINT AS drops
-         |  FROM pts p JOIN touched t USING (id) GROUP BY p.cid),
-         |ad AS (SELECT cid, count(*)::BIGINT AS adds FROM newc GROUP BY cid),
-         |bef AS (SELECT cid, count(*)::BIGINT AS rows_before FROM pts GROUP BY cid),
-         |m AS (SELECT cent.cid,
-         |  coalesce(bef.rows_before, 0)::BIGINT AS rows_before,
-         |  coalesce(ad.adds, 0)::BIGINT AS adds,
-         |  coalesce(dr.drops, 0)::BIGINT AS drops,
-         |  (coalesce(bef.rows_before, 0) + coalesce(ad.adds, 0)
-         |    - coalesce(dr.drops, 0))::BIGINT AS rows_after,
-         |  CASE WHEN coalesce(ad.adds, 0) + coalesce(dr.drops, 0) > 0
-         |    THEN 1 ELSE 0 END AS dirty
-         |  FROM cent LEFT JOIN bef USING (cid) LEFT JOIN ad USING (cid)
-         |    LEFT JOIN dr USING (cid))
-         |SELECT count(*)::BIGINT AS cells_total,
-         |  sum(dirty)::BIGINT AS cells_dirty,
-         |  sum(rows_after)::BIGINT AS rows_total,
-         |  sum(CASE WHEN dirty = 1 THEN rows_after ELSE 0 END)::BIGINT AS rows_rewritten,
-         |  sum(adds)::BIGINT AS rows_added,
-         |  sum(drops)::BIGINT AS rows_dropped,
-         |  round(sum(CASE WHEN dirty = 1 THEN rows_after ELSE 0 END)::DOUBLE
-         |    / greatest(sum(rows_after)::DOUBLE, 1.0), 6) AS rewrite_frac
-         |FROM m""".stripMargin,
-    "indexed_ivf_filtered" ->
-      s"""WITH $C,
-         |cent AS (SELECT cid, ce FROM read_parquet(${glob(trainedCentroids.path(dir))})),
-         |asgn AS (SELECT c.id, c.user_id, c.ne, cent.cid,
-         |  row_number() OVER (PARTITION BY c.id
-         |    ORDER BY round(list_dot_product(c.ne, cent.ce), 6) DESC, cent.cid ASC) AS rn
-         |  FROM c, cent),
-         |pts AS (SELECT id, user_id, ne, cid FROM asgn WHERE rn = 1),
-         |q AS (SELECT ne AS qe FROM c WHERE id = 0),
-         |probes AS (SELECT cent.cid FROM cent, q
-         |  ORDER BY round(list_dot_product(cent.ce, q.qe), 6) DESC, cent.cid ASC LIMIT 4),
-         |s AS (SELECT p.id, round(list_dot_product(p.ne, q.qe), 6) AS score, p.user_id
-         |  FROM pts p, q WHERE p.user_id < 5 AND p.cid IN (SELECT cid FROM probes))
-         |SELECT id, score, user_id FROM s ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
+    "slab_refresh_manifest" -> (
+      slabRefreshCtes(dir) +
+      """
+        |SELECT cent.cid,
+        |  coalesce(bef.rows_before, 0)::BIGINT AS rows_before,
+        |  coalesce(ad.adds, 0)::BIGINT AS adds,
+        |  coalesce(dr.drops, 0)::BIGINT AS drops,
+        |  (coalesce(bef.rows_before, 0) + coalesce(ad.adds, 0)
+        |    - coalesce(dr.drops, 0))::BIGINT AS rows_after,
+        |  (CASE WHEN coalesce(ad.adds, 0) + coalesce(dr.drops, 0) > 0
+        |    THEN 1 ELSE 0 END)::INT AS dirty
+        |FROM cent LEFT JOIN bef USING (cid) LEFT JOIN ad USING (cid)
+        |  LEFT JOIN dr USING (cid)
+        |ORDER BY cent.cid""".stripMargin),
+    "slab_refresh_stats" -> (
+      slabRefreshCtes(dir) +
+      """,
+        |m AS (SELECT cent.cid,
+        |  coalesce(bef.rows_before, 0)::BIGINT AS rows_before,
+        |  coalesce(ad.adds, 0)::BIGINT AS adds,
+        |  coalesce(dr.drops, 0)::BIGINT AS drops,
+        |  (coalesce(bef.rows_before, 0) + coalesce(ad.adds, 0)
+        |    - coalesce(dr.drops, 0))::BIGINT AS rows_after,
+        |  CASE WHEN coalesce(ad.adds, 0) + coalesce(dr.drops, 0) > 0
+        |    THEN 1 ELSE 0 END AS dirty
+        |  FROM cent LEFT JOIN bef USING (cid) LEFT JOIN ad USING (cid)
+        |    LEFT JOIN dr USING (cid))
+        |SELECT count(*)::BIGINT AS cells_total,
+        |  sum(dirty)::BIGINT AS cells_dirty,
+        |  sum(rows_after)::BIGINT AS rows_total,
+        |  sum(CASE WHEN dirty = 1 THEN rows_after ELSE 0 END)::BIGINT AS rows_rewritten,
+        |  sum(adds)::BIGINT AS rows_added,
+        |  sum(drops)::BIGINT AS rows_dropped,
+        |  round(sum(CASE WHEN dirty = 1 THEN rows_after ELSE 0 END)::DOUBLE
+        |    / greatest(sum(rows_after)::DOUBLE, 1.0), 6) AS rewrite_frac
+        |FROM m""".stripMargin),
+    "indexed_ivf_filtered" -> ivfSearchOracle(
+      centFrom(trainedCentroids.path(dir)), "p.user_id < 5 AND "),
     // Planner oracles replay count + branch: both branches are computed,
     // the cardinality comparison gates which one emits rows — the
     // strategy column asserts the engine made the same decision.
-    "filtered_planner_exact" ->
-      s"""WITH $C,
-         |m AS (SELECT count(*) AS mc FROM c WHERE user_id = 3),
-         |q AS (SELECT ne AS qe FROM c WHERE id = 0),
-         |ex AS (SELECT p.id, round(list_dot_product(p.ne, q.qe), 6) AS score,
-         |         p.user_id, 'exact_filtered' AS strategy
-         |       FROM c p, q WHERE p.user_id = 3
-         |       ORDER BY score DESC, p.id ASC LIMIT 10),
-         |cent AS (SELECT cid, ce FROM read_parquet(${glob(trainedCentroids.path(dir))})),
-         |asgn AS (SELECT c.id, c.user_id, c.ne, cent.cid,
-         |  row_number() OVER (PARTITION BY c.id
-         |    ORDER BY round(list_dot_product(c.ne, cent.ce), 6) DESC, cent.cid ASC) AS rn
-         |  FROM c, cent),
-         |pts AS (SELECT id, user_id, ne, cid FROM asgn WHERE rn = 1),
-         |probes AS (SELECT cent.cid FROM cent, q
-         |  ORDER BY round(list_dot_product(cent.ce, q.qe), 6) DESC, cent.cid ASC LIMIT 4),
-         |iv AS (SELECT p.id, round(list_dot_product(p.ne, q.qe), 6) AS score,
-         |         p.user_id, 'ivf_postfilter' AS strategy
-         |       FROM pts p, q WHERE p.user_id = 3 AND p.cid IN (SELECT cid FROM probes)
-         |       ORDER BY score DESC, p.id ASC LIMIT 10)
-         |SELECT * FROM ex WHERE (SELECT mc FROM m) <= 20000
-         |UNION ALL
-         |SELECT * FROM iv WHERE (SELECT mc FROM m) > 20000""".stripMargin,
-    "filtered_planner_ivf" ->
-      s"""WITH $C,
-         |m AS (SELECT count(*) AS mc FROM c WHERE user_id >= 2),
-         |q AS (SELECT ne AS qe FROM c WHERE id = 0),
-         |ex AS (SELECT p.id, round(list_dot_product(p.ne, q.qe), 6) AS score,
-         |         p.user_id, 'exact_filtered' AS strategy
-         |       FROM c p, q WHERE p.user_id >= 2
-         |       ORDER BY score DESC, p.id ASC LIMIT 10),
-         |cent AS (SELECT cid, ce FROM read_parquet(${glob(trainedCentroids.path(dir))})),
-         |asgn AS (SELECT c.id, c.user_id, c.ne, cent.cid,
-         |  row_number() OVER (PARTITION BY c.id
-         |    ORDER BY round(list_dot_product(c.ne, cent.ce), 6) DESC, cent.cid ASC) AS rn
-         |  FROM c, cent),
-         |pts AS (SELECT id, user_id, ne, cid FROM asgn WHERE rn = 1),
-         |probes AS (SELECT cent.cid FROM cent, q
-         |  ORDER BY round(list_dot_product(cent.ce, q.qe), 6) DESC, cent.cid ASC LIMIT 4),
-         |iv AS (SELECT p.id, round(list_dot_product(p.ne, q.qe), 6) AS score,
-         |         p.user_id, 'ivf_postfilter' AS strategy
-         |       FROM pts p, q WHERE p.user_id >= 2 AND p.cid IN (SELECT cid FROM probes)
-         |       ORDER BY score DESC, p.id ASC LIMIT 10)
-         |SELECT * FROM ex WHERE (SELECT mc FROM m) <= 100
-         |UNION ALL
-         |SELECT * FROM iv WHERE (SELECT mc FROM m) > 100""".stripMargin,
+    "filtered_planner_exact" -> plannerOracle(dir, "user_id = 3", 20000),
+    "filtered_planner_ivf" -> plannerOracle(dir, "user_id >= 2", 100),
     "indexed_delete" ->
       s"""WITH $C,
-         |cent AS (SELECT cid, ce FROM read_parquet(${glob(trainedCentroids.path(dir))})),
-         |asgn AS (SELECT c.id, c.user_id, c.ne, cent.cid,
-         |  row_number() OVER (PARTITION BY c.id
-         |    ORDER BY round(list_dot_product(c.ne, cent.ce), 6) DESC, cent.cid ASC) AS rn
-         |  FROM c, cent),
+         |${centFrom(trainedCentroids.path(dir))},
+         |${ivfAsgnCte("c.id, c.user_id, c.ne")},
          |pts AS (SELECT id, user_id, ne, cid FROM asgn
          |        WHERE rn = 1 AND id NOT IN (1, 2, 3, 4)),
          |q AS (SELECT ne AS qe FROM c WHERE id = 0),
-         |probes AS (SELECT cent.cid FROM cent, q
-         |  ORDER BY round(list_dot_product(cent.ce, q.qe), 6) DESC, cent.cid ASC LIMIT 4),
+         |${ivfProbesCte(4)},
          |s AS (SELECT p.id, round(list_dot_product(p.ne, q.qe), 6) AS score, p.user_id
          |  FROM pts p, q WHERE p.cid IN (SELECT cid FROM probes))
          |SELECT id, score, user_id FROM s ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
-    "indexed_two_phase" ->
-      s"""WITH $C, q0 AS (SELECT ne AS qe FROM c WHERE id = 0),
-         |qq AS (SELECT qe, list_transform(qe, x -> greatest(-127, least(127, round(x*127)::INT))) AS qv FROM q0),
-         |pq AS (SELECT c.id, c.user_id, c.ne,
-         |  list_transform(c.ne, x -> greatest(-127, least(127, round(x*127)::INT))) AS pv FROM c),
-         |phase1 AS (SELECT pq.id, pq.user_id, pq.ne, qq.qe,
-         |  round(list_dot_product(pq.pv::DOUBLE[], qq.qv::DOUBLE[]) / 16129.0, 6) AS cheap
-         |  FROM pq, qq ORDER BY cheap DESC, id ASC LIMIT 30)
-         |SELECT id, round(list_dot_product(ne, qe), 6) AS score, user_id FROM phase1
-         |ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
-    "indexed_binary_quant" ->
-      s"""WITH $C,
-         |sg AS (SELECT id, user_id, ne, ${bsig("ne")} AS sig FROM c),
-         |q AS (SELECT ne AS qe, sig AS qsig FROM sg WHERE id = 0),
-         |p0 AS (SELECT sg.id, sg.user_id, sg.ne, q.qe,
-         |  (64 - bit_count(xor(sg.sig, q.qsig)))::INT AS cheap_score FROM sg, q),
-         |cut AS (SELECT min(cheap_score) AS cs FROM
-         |  (SELECT cheap_score FROM p0 ORDER BY cheap_score DESC, id ASC LIMIT 320)),
-         |p1 AS (SELECT p0.* FROM p0, cut WHERE p0.cheap_score >= cut.cs)
-         |SELECT id, round(list_dot_product(ne, qe), 6) AS score, cheap_score, user_id
-         |FROM p1 ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
+    "indexed_two_phase" -> TwoPhaseInt8Sql,
+    "indexed_binary_quant" -> BinaryQuantSql,
     // sf0.01 collection (2000 points) < 10k -> the policy's exact tier.
-    "ann_policy_search" ->
-      s"""WITH $C, q AS (SELECT ne AS qe FROM c WHERE id = 0),
-         |s AS (SELECT c.id, round(list_dot_product(c.ne, q.qe), 6) AS score, c.user_id FROM c, q)
-         |SELECT id, score, user_id FROM s WHERE score >= 0.1
-         |ORDER BY score DESC, id ASC LIMIT 10""".stripMargin,
+    "ann_policy_search" -> KnnExactSql,
     "pii_scan" ->
       s"""WITH $PP
          |SELECT event_type, count(*)::BIGINT AS n_rows,
@@ -5143,8 +4766,6 @@ object SparkEntry {
         |ORDER BY click_id, error_id""".stripMargin,
   )
 
-  /** DuckDB CTE synthesizing the PII profile string (mirrors
-    * [[piiProfile]] exactly — same concatenation, same modular fields). */
   /** The dirtied-documents CTE — branch-for-branch mirror of [[dirtyDocs]]
     * (chr(769)=U+0301 combining acute, chr(195)/chr(169)/chr(194)="Ã©Â",
     * chr(65533)=U+FFFD, chr(7)=BEL). */
@@ -5155,6 +4776,8 @@ object SparkEntry {
       |  WHEN doc_id % 13 = 0 THEN chr(65533) || chr(7) || text
       |  ELSE text END AS text FROM documents)""".stripMargin
 
+  /** DuckDB CTE synthesizing the PII profile string (mirrors
+    * [[piiProfile]] exactly — same concatenation, same modular fields). */
   private val PP =
     """p AS (SELECT event_id, event_type,
       |  'user' || CAST(user_id AS VARCHAR) || '@example.com ip 10.0.' ||

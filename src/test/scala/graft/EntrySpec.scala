@@ -2,8 +2,9 @@ package graft
 
 /** Contract checks on the driver surface: entry() returns rows; every query
   * runs at sf0.001 and returns a deterministic non-degenerate result; every
-  * oracle key refers to an existing query, and the oracle reads the side
-  * tables of the dir it is rendered for. */
+  * oracle key refers to an existing query, the oracle reads the side
+  * tables of the dir it is rendered for, and every oracle's text matches
+  * its checked-in digest. */
 class EntrySpec extends SparkSpec {
 
   test("entry() returns rows (driver smoke contract)") {
@@ -38,5 +39,23 @@ class EntrySpec extends SparkSpec {
     // still depends on the dir argument alone
     assert(a.map { case (k, v) => k -> v.replace(sanA, sanB) } ==
       SparkEntry.oracleSql(dirB))
+  }
+
+  test("every oracleSql string matches its digest in oracle_sql.sha256") {
+    val in = getClass.getResourceAsStream("/oracle_sql.sha256")
+    assert(in != null, "oracle_sql.sha256 missing from test resources")
+    val want = try OracleDigest.parse(
+      new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8))
+    finally in.close()
+    val got = OracleDigest.digests()
+    val bad = (want.keySet ++ got.keySet).toSeq.sorted.flatMap { k =>
+      (want.get(k), got.get(k)) match {
+        case (Some(w), Some(g)) if w == g => None
+        case (Some(_), Some(_)) => Some(s"$k: text differs")
+        case (Some(_), None) => Some(s"$k: missing from oracleSql")
+        case _ => Some(s"$k: not in oracle_sql.sha256")
+      }
+    }
+    assert(bad.isEmpty, bad.mkString("\n"))
   }
 }
