@@ -142,41 +142,49 @@ object CrossProc {
   private[graft] def clusteredPoints(spark: SparkSession, rows: Long, d: Int,
       cGen: Int = 256, noise: Double = 0.25, seed: Long = 2024L): DataFrame = {
     import spark.implicits._
+    val bc = spark.sparkContext.broadcast(clusterCenters(d, cGen, seed))
+    val nz = noise
+    val sd = seed
+    spark.range(rows).as[Long].mapPartitions { it =>
+      it.map(id => (id, clusteredRow(bc.value, id, nz, sd).toSeq, (id % 1000).toInt))
+    }.toDF("id", "embedding", "user_id")
+  }
+
+  /** The `cGen` unit centers of [[clusteredPoints]]. */
+  private[graft] def clusterCenters(d: Int, cGen: Int = 256,
+      seed: Long = 2024L): Array[Array[Double]] = {
     val rnd = new scala.util.Random(seed)
-    def unit(r: scala.util.Random): Array[Double] = {
-      val v = Array.fill(d)(r.nextGaussian())
+    Array.fill(cGen) {
+      val v = Array.fill(d)(rnd.nextGaussian())
       val nn = math.sqrt(v.map(x => x * x).sum)
       v.map(_ / nn)
     }
-    val cents = Array.fill(cGen)(unit(rnd))
-    val bc = spark.sparkContext.broadcast(cents)
-    val nz = noise
-    val cg = cGen
-    val dd = d
-    val sd = seed
-    spark.range(rows).as[Long].mapPartitions { it =>
-      it.map { id =>
-        val r = new scala.util.Random(sd ^ (id * 0x9E3779B97F4A7C15L))
-        val nv = new Array[Double](dd)
-        var i = 0
-        var nn = 0.0
-        while (i < dd) { nv(i) = r.nextGaussian(); nn += nv(i) * nv(i); i += 1 }
-        nn = math.sqrt(nn)
-        val ce = bc.value((id % cg).toInt)
-        val e = new Array[Double](dd)
-        i = 0
-        var en = 0.0
-        while (i < dd) {
-          e(i) = ce(i) + nz * nv(i) / nn
-          en += e(i) * e(i)
-          i += 1
-        }
-        en = math.sqrt(en)
-        i = 0
-        while (i < dd) { e(i) /= en; i += 1 }
-        (id, e.toSeq, (id % 1000).toInt)
-      }
-    }.toDF("id", "embedding", "user_id")
+  }
+
+  /** Row `id` of [[clusteredPoints]]: its center `id mod cGen` plus a
+    * seeded noise vector of norm `noise`, normalized to unit length. */
+  private[graft] def clusteredRow(cents: Array[Array[Double]], id: Long,
+      noise: Double = 0.25, seed: Long = 2024L): Array[Double] = {
+    val dd = cents(0).length
+    val r = new scala.util.Random(seed ^ (id * 0x9E3779B97F4A7C15L))
+    val nv = new Array[Double](dd)
+    var i = 0
+    var nn = 0.0
+    while (i < dd) { nv(i) = r.nextGaussian(); nn += nv(i) * nv(i); i += 1 }
+    nn = math.sqrt(nn)
+    val ce = cents((id % cents.length).toInt)
+    val e = new Array[Double](dd)
+    i = 0
+    var en = 0.0
+    while (i < dd) {
+      e(i) = ce(i) + noise * nv(i) / nn
+      en += e(i) * e(i)
+      i += 1
+    }
+    en = math.sqrt(en)
+    i = 0
+    while (i < dd) { e(i) /= en; i += 1 }
+    e
   }
 
   /** One cross-process serving tier, named as in `GRAFT_XPROC_MODES`:
@@ -444,8 +452,10 @@ object CrossProc {
     // end-to-end recall row sits right next to the flag.
     val calDecision: Option[ServingDecision] =
       if (!mode.int8) None
-      else Some(ServingCalibration.decide(
-        BatchedServer.FlatReplica(SlabIO.read(slabs(0))), k, th, target))
+      else {
+        val rep0 = BatchedServer.FlatReplica(SlabIO.read(slabs(0)))
+        Some(ServingCalibration.decide(rep0, BatchedServer.CodeSlab(rep0), k, th, target))
+      }
     val oversample = calDecision.fold(0.0)(d =>
       if (d.family == "int8") d.oversample.toDouble
       else ServingCalibration.OversampleLadder.max.toDouble)
@@ -585,8 +595,7 @@ object CrossProc {
             val want = qis.map(_ => new BatchedServer.TopK(k))
             slabs.foreach { slabPath =>
               val rep = BatchedServer.FlatReplica(SlabIO.read(slabPath))
-              val codes = BatchedServer.quantizeSlab(rep.embs)
-              BatchedServer.int8TwoPhase(rep, codes, qis.map(qPool(_)).toArray,
+              BatchedServer.int8TwoPhase(rep, BatchedServer.CodeSlab(rep), qis.map(qPool(_)).toArray,
                 k, th, oversample, null, 1)
                 .zipWithIndex.foreach { case (hits, bi) => want(bi).offerAll(hits) }
             }

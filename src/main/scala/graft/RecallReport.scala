@@ -211,7 +211,8 @@ object RecallReport {
           .collect().map(r =>
             (r.getLong(0), r.getSeq[Double](1).toArray, r.getInt(2)))
         val rep = BatchedServer.FlatReplica(rows)
-        val d = ServingCalibration.decide(rep, k, -1.0,
+        val codes = BatchedServer.CodeSlab(rep)
+        val d = ServingCalibration.decide(rep, codes, k, -1.0,
           IndexMeta.DefaultRecallTarget)
         // the exact row-index formula ServingCalibration.decide samples
         // with, so the held-out filter excludes precisely the
@@ -227,7 +228,6 @@ object RecallReport {
           "int8_serving_cal_lcb" -> d.sampleRecall)
         if (d.family != "int8") base + ("int8_serving" -> 1.0)
         else {
-          val codes = BatchedServer.quantizeSlab(rep.embs)
           val held = qids.filterNot(q => calIds.contains(q.toLong))
           val per = held.map { qid =>
             val q = points.filter(col("id") === qid)

@@ -101,6 +101,16 @@ import org.apache.spark.storage.StorageLevel
   *                                               broad: graphTopK(user filter)
   * }}}
   *
+  * `int8TwoPhase` = the blocked int8 phase 1 over the generation's
+  * [[BatchedServer.CodeSlab]] (rows × up to four queries per block load,
+  * an exact integer gate against each query's heap floor), then
+  * `scoreRows` over the k·oversample survivors. Measured per query on one
+  * thread, 131,072 × 64 clustered unit rows, k 10 ([[KernelProbe]]'s
+  * per-query table, AVX-512, six runs): `scoreRange` 1.6–2.2 ms at
+  * nq 1, 1.0–1.7 ms at nq 3, 0.47–0.61 ms at nq 32; `int8TwoPhase` at
+  * oversample 3 0.8–1.1, 0.59–0.80 and 0.48–0.75 ms (1.8–3.0 ms at every
+  * nq with the one-dot-per-row phase 1 it replaced).
+  *
   * At scale the pinned template is "the shard this server routes to":
   * one executor-resident partition set serving point queries, exactly
   * how a real vector store pins its index in RAM. The reference hits
@@ -231,7 +241,7 @@ final class BatchedServer(
     * request can never pair a new replica with an old generation's
     * codes. `codes == null` = exact float family. */
   private final case class Gen(rep: BatchedServer.FlatReplica,
-      codes: Array[Byte], oversample: Double)
+      codes: BatchedServer.CodeSlab, oversample: Double)
   @volatile private var gen: Gen = null
   private def replica: BatchedServer.FlatReplica = {
     val g = gen
@@ -240,10 +250,17 @@ final class BatchedServer(
   /** QUANTIZED serving replica (VERDICT r13 #3 — the reference's
     * "always-RAM INT8" disposition, src/core/qdrant_client.py:129-138,
     * settings.py:48-51): when `int8Replica` is on, phase 1 of every
-    * unfiltered request scans THIS byte slab (code = clamp(HALF_UP(x·127))
-    * — the same fixed-range code as [[graft.operators.Quantization.quantize]])
-    * instead of the float slab: 8× less memory bandwidth per scan, the
-    * exact trade the reference configures. The float slab is retained
+    * unfiltered request scans THIS byte slab ([[BatchedServer.CodeSlab]];
+    * code = clamp(HALF_UP(x·127)) — the same fixed-range code as
+    * [[graft.operators.Quantization.quantize]]) instead of the float
+    * slab, the trade the reference configures. At 131,072 × 64 clustered
+    * unit rows (k 10, oversample 3, one thread; [[graft.KernelProbe]]'s
+    * per-query table) phase 1 plus rescore costs 0.8–1.1 ms per query
+    * at nq 1 and 0.59–0.80 ms at nq 3, against 1.6–2.2 and 1.0–1.7 ms
+    * for the certified exact scan; at nq 32 the two are about even
+    * (0.48–0.75 against 0.47–0.61 ms). The slab is 1 B per cell against
+    * the exact scan's 4 B f32 transpose, but at this size both scans are
+    * bound by compute, not bandwidth. The float slab is retained
     * for the k·oversample survivors' exact rescore (and for filtered
     * requests, which [[submitFiltered]] scores exactly) —
     * at cluster scale that column stays on disk/mmap and only the int8
@@ -281,17 +298,19 @@ final class BatchedServer(
     * oversample rather than silently missing its target). */
   private def decideGen(rep: BatchedServer.FlatReplica)
       : (ServingDecision, Gen) = {
+    // the generation's one code slab: the calibration grades the codes
+    // the generation then serves (never quantized twice)
+    lazy val codes = BatchedServer.CodeSlab(rep)
     val d = recallTarget match {
       // calibrated family/oversample from the stated target (VERDICT
       // r15 #2/#3); exact fallback when no ladder rung clears it —
       // same degrade shape as IndexMeta.nprobeFor
-      case Some(t) => ServingCalibration.decide(rep, k, threshold, t)
+      case Some(t) => ServingCalibration.decide(rep, codes, k, threshold, t)
       case None if int8Replica =>
         ServingDecision("int8", BatchedServer.FixedInt8Oversample, -1.0, -1.0)
       case None => ServingDecision("exact", 0, -1.0, 1.0)
     }
-    val codes = if (d.family == "int8") BatchedServer.quantizeSlab(rep.embs) else null
-    (d, Gen(rep, codes, d.oversample.toDouble))
+    (d, Gen(rep, if (d.family == "int8") codes else null, d.oversample.toDouble))
   }
   // default pool width 8: beyond that a SINGLE small replica's slices
   // are handoff-dominated. A sharded router overrides it so the shard
@@ -352,7 +371,7 @@ final class BatchedServer(
     else (8L * g.rep.embs.length +
         (if (g.rep.tslab == null) 0L
          else 4L * (g.rep.tslab.length + g.rep.tnorms.length)),
-      if (g.codes == null) 0L else g.codes.length.toLong)
+      if (g.codes == null) 0L else g.codes.bytes.length.toLong)
   }
 
   /** REFRESH the served replica in place — the in-JVM analogue of the
@@ -814,13 +833,21 @@ final case class ServingDecision(
 object ServingCalibration {
 
   /** The int8 phase-1 budgets the calibration considers. 8 is the cap:
-    * past it the rescore traffic erodes the bandwidth win the int8 slab
-    * exists for (16× fewer phase-1 bytes at oversample ≤ 8 still nets
-    * ~2× end-to-end on the 2M-row slab, SCALING r15). */
+    * the rescore reads k·oversample rows per query from the float slab,
+    * one exact f64 dot each, and past 8 that grows toward the phase-1
+    * scan itself. Measured per query at 131,072 × 64 clustered unit rows
+    * (k 10, one thread; [[graft.KernelProbe]]'s per-query table): the
+    * blocked int8 phase 1 plus the rescore at oversample 3 costs
+    * 0.8–1.1 ms at nq 1 and 0.59–0.80 ms at nq 3, the certified exact
+    * scan 1.6–2.2 and 1.0–1.7 ms. Cost is not weighed here: the ladder
+    * picks the smallest oversample that clears the target. */
   val OversampleLadder: Seq[Int] = Seq(1, 2, 3, 4, 8)
 
-  def decide(rep: BatchedServer.FlatReplica, k: Int, th: Double,
-      target: Double, nSample: Int = 32): ServingDecision = {
+  /** `codes` is the replica's int8 code slab ([[BatchedServer.CodeSlab]]
+    * of `rep`): the caller builds it once and serves the same codes when
+    * the decision is int8. */
+  def decide(rep: BatchedServer.FlatReplica, codes: BatchedServer.CodeSlab,
+      k: Int, th: Double, target: Double, nSample: Int = 32): ServingDecision = {
     require(target > 0.0 && target <= 1.0, s"target in (0,1], got $target")
     if (rep.n == 0) return ServingDecision("exact", 0, target, 1.0)
     val nS = math.min(nSample, rep.n)
@@ -833,7 +860,6 @@ object ServingCalibration {
     // graded on exactly the answers it will serve.
     val exact = Array.fill(nS)(new BatchedServer.TopK(k))
     BatchedServer.scoreRange(rep, exact, 0, rep.n, queries, th)
-    val codes = BatchedServer.quantizeSlab(rep.embs)
     def lcbAt(os: Int): Double = {
       val got = BatchedServer.int8TwoPhase(rep, codes, queries, k, th,
         os.toDouble, null, 1)
@@ -889,13 +915,16 @@ object BatchedServer {
       try graft.simd.SimdDot.LANES
       catch { case _: Throwable => 0 }
     def enabled: Boolean = lanes > 0
-    /** INT8 widening kernel availability (needs ≥256-bit int vectors —
+    /** INT8 block kernel availability (needs ≥256-bit int vectors —
       * [[graft.simd.SimdDot.INT8_OK]] — on top of the module guard).
       * Integer math is exact, so scalar and SIMD paths are
       * bit-identical by construction (spec-asserted anyway). */
     val int8: Boolean =
       enabled && (try graft.simd.SimdDot.INT8_OK
       catch { case _: Throwable => false })
+    /** Rows per block of the transposed [[CodeSlab]] (0 when [[int8]]
+      * is off). */
+    val intLanes: Int = if (int8) graft.simd.SimdDot.INT_LANES else 0
   }
 
   /** The float rows the exact row-list kernel ([[scoreRows]]) and the
@@ -1420,91 +1449,221 @@ object BatchedServer {
     (if (r > 127.0) 127 else if (r < -127.0) -127 else r.toInt).toByte
   }
 
-  /** Quantize a whole float slab into the int8 serving slab (8× smaller;
-    * built once at replica initialization). */
-  private[graft] def quantizeSlab(embs: Array[Double]): Array[Byte] = {
-    val out = new Array[Byte](embs.length)
-    var i = 0
-    while (i < embs.length) { out(i) = quantizeCode(embs(i)); i += 1 }
-    out
+  /** THE int8 code slab that [[int8TwoPhase]]'s phase 1 reads: one byte
+    * per cell (code = [[quantizeCode]] of the float), built once per
+    * served generation — from the floats by [[CodeSlab.apply]] on the
+    * in-JVM replica, from the `.i8` file by [[SlabIO.readInt8]] on the
+    * worker. When every row has one dim L ≤ [[MaxInt8Dim]] and the int8
+    * SIMD kernel is available ([[SimdSupport.int8]]), the rows are held
+    * like the f32 `tslab`: blocks of `lanes` rows, dim-major within a
+    * block (code (r, d) at (r − r mod lanes)·L + d·lanes + r mod lanes),
+    * so one byte load reads the d-th code of `lanes` rows; the rows past
+    * the last full block stay row-major at `offs`. Otherwise (`lanes` =
+    * 0: ragged rows, a scalar platform, or the `useSimd = false` seam)
+    * every row is row-major at `offs`, as in the file. Either way the
+    * slab holds exactly one byte per cell. */
+  final class CodeSlab(val bytes: Array[Byte], val offs: Array[Int],
+      val lanes: Int) {
+    def n: Int = offs.length - 1
+    /** The uniform row dim of a blocked slab (0 when row-major). */
+    val dim: Int = if (lanes == 0) 0 else offs(1) - offs(0)
+    /** Rows held in transposed blocks: `[0, blockedRows)`. */
+    val blockedRows: Int = if (lanes == 0) 0 else (n / lanes) * lanes
+    def code(row: Int, d: Int): Byte =
+      if (row < blockedRows) bytes((row - row % lanes) * dim + d * lanes + row % lanes)
+      else bytes(offs(row) + d)
   }
 
+  object CodeSlab {
+    /** The code slab of a float replica's rows. */
+    def apply(rep: FlatReplica): CodeSlab = apply(rep.embs, rep.offs, SimdSupport.int8)
+
+    /** `useSimd = false` builds the row-major layout — the test seam
+      * that grades the scalar phase 1 in a SIMD JVM. */
+    def apply(embs: Array[Double], offs: Array[Int], useSimd: Boolean): CodeSlab =
+      fill(offs, useSimd) { (row, into, at) =>
+        var c = offs(row)
+        var p = at
+        while (c < offs(row + 1)) { into(p) = quantizeCode(embs(c)); c += 1; p += 1 }
+      }
+
+    /** Lay out the codes of the CSR rows `offs`: `row(r, into, at)` writes
+      * row r's codes, in dim order, to `into(at ..)`. */
+    def fill(offs: Array[Int], useSimd: Boolean = SimdSupport.int8)(
+        row: (Int, Array[Byte], Int) => Unit): CodeSlab = {
+      val n = offs.length - 1
+      val L = uniformDim(offs)
+      val lanes =
+        if (useSimd && SimdSupport.int8 && L > 0 && L <= MaxInt8Dim &&
+            n >= SimdSupport.intLanes) SimdSupport.intLanes
+        else 0
+      val bytes = new Array[Byte](offs(n))
+      val blocked = if (lanes == 0) 0 else (n / lanes) * lanes
+      val one = new Array[Byte](math.max(L, 0))
+      var r = 0
+      while (r < blocked) {
+        row(r, one, 0)
+        val base = (r - r % lanes) * L + r % lanes
+        var d = 0
+        while (d < L) { bytes(base + d * lanes) = one(d); d += 1 }
+        r += 1
+      }
+      while (r < n) { row(r, bytes, offs(r)); r += 1 }
+      new CodeSlab(bytes, offs, lanes)
+    }
+  }
+
+  /** Largest uniform dim that gets the blocked [[CodeSlab]]: every int
+    * lane of a block dot stays below 127²·2¹⁶ < 2³¹. Wider rows stay
+    * row-major and phase 1 sums them in a long. */
+  private[graft] val MaxInt8Dim: Int = 1 << 16
+
   /** THE int8 two-phase kernel, shared by the in-JVM replica and the
-    * shard worker. Phase 1 scans the BYTE slab `codes` (laid out by
-    * `rows.offs`) over the row intervals `ranges` (null = every row),
-    * skips rows whose user is not in `userFilter` (null = no filter),
-    * and ranks each row by the raw integer dot against the quantized
-    * query — exactly the engine's round6(intdot/127²) order (distinct
-    * integer dots can't collide at 6dp, see the int8Replica scaladoc) —
-    * keeping the top `fetchK = max(k, ⌊k·oversample⌋)` per query in a
-    * [[TopK]] under (dot desc, id asc). Phase 2 rescores the rows of
-    * those merged heaps with [[scoreRows]]: the exact left-to-right dot
-    * read from `rows` (heap replica or mmapped slab) + 6dp round +
-    * threshold — the same two-phase shape as
-    * [[graft.operators.Quantization.twoPhaseSearch]]. Phase 1 slices
-    * across `pool` ([[sliceTopK]]; null = inline). Returns each query's
-    * final top-k (id, score, user) in [[HitOrder]]. */
+    * shard worker. Phase 1 scans the code slab `codes` over the row
+    * intervals `ranges` (null = every row), skips rows whose user is not
+    * in `userFilter` (null = no filter), and ranks each row by its exact
+    * integer dot against the quantized query — exactly the engine's
+    * round6(intdot/127²) order (distinct integer dots can't collide at
+    * 6dp, see the int8Replica scaladoc) — keeping the top
+    * `fetchK = max(k, ⌊k·oversample⌋)` per query in a [[TopK]] under
+    * (dot desc, id asc). Phase 2 rescores the rows of those merged heaps
+    * with [[scoreRows]]: the exact left-to-right dot read from `rows`
+    * (heap replica or mmapped slab) + 6dp round + threshold — the same
+    * two-phase shape as [[graft.operators.Quantization.twoPhaseSearch]].
+    * Phase 1 ([[int8Survivors]]) slices across `pool` ([[sliceTopK]];
+    * null = inline). Returns each query's final top-k (id, score, user)
+    * in [[HitOrder]]. */
   private[graft] def int8TwoPhase(
-      rows: FloatRows, codes: Array[Byte],
+      rows: FloatRows, codes: CodeSlab,
       queries: Array[Array[Double]], k: Int, th: Double, oversample: Double,
       pool: java.util.concurrent.ExecutorService, slices: Int,
       ranges: Array[(Int, Int)] = null, userFilter: Array[Int] = null)
       : Array[Array[(Long, Double, Int)]] = {
-    val nq = queries.length
-    val fetchK = math.max(k, (k * oversample).toInt)
-    val q8: Array[Array[Byte]] = queries.map { q =>
-      val a = new Array[Byte](q.length)
-      var i = 0
-      while (i < q.length) { a(i) = quantizeCode(q(i)); i += 1 }
-      a
-    }
-    val offs = rows.offs
-    val ids = rows.ids
-    val users = rows.users
-    // phase 1: bounded heaps on (intdot, id); intdot ≤ 127²·d fits a
-    // Double exactly (< 2^53), so TopK is reused as-is with the row index
-    // riding in the user slot. The byte dot dispatches to the widening
-    // SIMD kernel when available (integer math — scalar and vector paths
-    // are bit-identical, unlike the float kernels' ordering contract).
-    val useSimd = SimdSupport.int8
-    def phase1(tops: Array[TopK], lo: Int, hi: Int): Unit = {
-      var i = lo
-      while (i < hi) {
-        // a row outside the filter is skipped BEFORE ranking, so every
-        // survivor already satisfies the predicate — no fetch widening
-        // needed for predicate losses
-        if (userFilter == null || userMatch(userFilter, users(i))) {
-          val b0 = offs(i)
-          val len = offs(i + 1) - b0
-          val id = ids(i)
-          var qi = 0
-          while (qi < nq) {
-            val q = q8(qi)
-            val nd = math.min(len, q.length)
-            val s: Long =
-              if (useSimd) graft.simd.SimdDot.dotBytes(codes, b0, nd, q)
-              else {
-                var t = 0L
-                var d = 0
-                while (d < nd) { t += codes(b0 + d) * q(d); d += 1 }
-                t
-              }
-            tops(qi).offer(s.toDouble, id, i)
-            qi += 1
-          }
-        }
-        i += 1
-      }
-    }
-    val survivors = sliceTopK(Array.fill(nq)(new TopK(fetchK)),
-      if (ranges != null) ranges else Array((0, rows.n)), pool, slices)(phase1)
+    val survivors = int8Survivors(rows, codes, queries,
+      math.max(k, (k * oversample).toInt), pool, slices, ranges, userFilter)
     // phase 2: exact rescore of each query's survivors (row in slot 3)
-    Array.tabulate(nq) { qi =>
-      val rowIdx = survivors(qi).result().map(_._3)
+    Array.tabulate(queries.length) { qi =>
+      val rowIdx = survivors(qi).map(_._3)
       val top = Array(new TopK(k))
       scoreRows(rows, rowIdx, top, 0, rowIdx.length, Array(queries(qi)), th)
       top(0).result()
     }
+  }
+
+  /** Phase 1 of [[int8TwoPhase]]: each query's top `fetchK` rows of
+    * `ranges` (null = every row) whose user is in `userFilter` (null = no
+    * filter), by exact integer dot then id, as (id, dot, row) in
+    * [[HitOrder]].
+    *
+    * Blocked rows of `codes`, per block of `lanes` rows and group of up
+    * to four queries: one [[graft.simd.SimdDot]] call widens each byte
+    * load once and accumulates every lane's exact integer dot for the
+    * whole group; then one vector compare per (block, query) keeps the
+    * lanes whose dot is ≥ the query's heap floor (its fetchK-th best dot
+    * so far) and lies in the scanned range. Only those lanes are offered,
+    * in lane order. The floor only rises, so a lane below it could never
+    * enter the heap; ≥, not >, keeps a dot equal to the floor, which
+    * can still win the id tie. Integer dots are exact, so the heap keeps
+    * the same fetchK survivors as offering every row. A query shorter
+    * than the dim is zero-padded for the block kernel, which adds
+    * nothing to an integer dot. Row-major rows (the rows past the last
+    * full block, or every row of an unblocked slab) take an exact scalar
+    * loop over min(row, query) dims behind the same gate. */
+  private[graft] def int8Survivors(
+      rows: FloatRows, codes: CodeSlab, queries: Array[Array[Double]],
+      fetchK: Int, pool: java.util.concurrent.ExecutorService, slices: Int,
+      ranges: Array[(Int, Int)], userFilter: Array[Int]): Array[Array[Hit]] = {
+    val nq = queries.length
+    val lanes = codes.lanes
+    val dim = codes.dim
+    val q8: Array[Array[Int]] = queries.map { q =>
+      val a = new Array[Int](math.max(q.length, dim))
+      var i = 0
+      while (i < q.length) { a(i) = quantizeCode(q(i)); i += 1 }
+      a
+    }
+    val offs = codes.offs
+    val bytes = codes.bytes
+    val ids = rows.ids
+    val users = rows.users
+    // phase 1: bounded heaps on (intdot, id); intdot ≤ 127²·d fits a
+    // Double exactly (< 2^53), so TopK is reused as-is with the row index
+    // riding in the user slot
+    def phase1(tops: Array[TopK], lo: Int, hi: Int): Unit = {
+      // each heap's floor: −∞ (or its seed) while filling, then its
+      // weakest kept dot
+      val floors = Array.tabulate(nq)(tops(_).floor(Double.NegativeInfinity))
+      // a row outside the filter is skipped BEFORE ranking, so every
+      // survivor already satisfies the predicate — no fetch widening
+      // needed for predicate losses
+      def offer(qi: Int, r: Int, s: Double): Unit =
+        if (userFilter == null || userMatch(userFilter, users(r))) {
+          tops(qi).offer(s, ids(r), r)
+          floors(qi) = tops(qi).floor(Double.NegativeInfinity)
+        }
+      val bHi = math.min(hi, codes.blockedRows)
+      if (lo < bHi) {
+        val out = new Array[Int](4 * lanes)
+        val full = -1L >>> (64 - lanes)
+        var row0 = (lo / lanes) * lanes
+        while (row0 < bHi) {
+          // the block's lanes inside [lo, bHi)
+          val inRange = full & (full << math.max(lo - row0, 0)) &
+            (full >>> math.max(row0 + lanes - bHi, 0))
+          val base = row0 * dim
+          var qi = 0
+          while (qi < nq) {
+            val taken =
+              if (nq - qi >= 4) {
+                graft.simd.SimdDot.codeBlock4(bytes, base, dim, q8(qi),
+                  q8(qi + 1), q8(qi + 2), q8(qi + 3), out)
+                4
+              } else if (nq - qi >= 2) {
+                graft.simd.SimdDot.codeBlock2(bytes, base, dim, q8(qi), q8(qi + 1), out)
+                2
+              } else {
+                graft.simd.SimdDot.codeBlock1(bytes, base, dim, q8(qi), out)
+                1
+              }
+            var j = 0
+            while (j < taken) {
+              val q = qi + j
+              // dots are ints here, so ⌈floor⌉ gates exactly (toInt
+              // saturates ±∞ to the int range)
+              val gate = math.ceil(floors(q)).toInt
+              var m = graft.simd.SimdDot.atLeast(out, j * lanes, gate) & inRange
+              while (m != 0L) {
+                val lane = java.lang.Long.numberOfTrailingZeros(m)
+                m &= m - 1
+                offer(q, row0 + lane, out(j * lanes + lane).toDouble)
+              }
+              j += 1
+            }
+            qi += taken
+          }
+          row0 += lanes
+        }
+      }
+      var i = math.max(lo, codes.blockedRows)
+      while (i < hi) {
+        val b0 = offs(i)
+        val len = offs(i + 1) - b0
+        var qi = 0
+        while (qi < nq) {
+          val q = q8(qi)
+          val nd = math.min(len, q.length)
+          var t = 0L
+          var d = 0
+          while (d < nd) { t += bytes(b0 + d) * q(d); d += 1 }
+          if (t.toDouble >= floors(qi)) offer(qi, i, t.toDouble)
+          qi += 1
+        }
+        i += 1
+      }
+    }
+    sliceTopK(Array.fill(nq)(new TopK(fetchK)),
+      if (ranges != null) ranges else Array((0, rows.n)), pool, slices)(phase1)
+      .map(_.result())
   }
 
   /** THE exact row-list kernel: scores the row-index list

@@ -73,6 +73,16 @@ import java.nio.file.{Paths, StandardOpenOption}
   *                                               broad: graphTopK(user filter)
   * }}}
   *
+  * `int8TwoPhase` = the blocked int8 phase 1 over the generation's
+  * [[BatchedServer.CodeSlab]] (rows × up to four queries per block load,
+  * an exact integer gate against each query's heap floor), then
+  * `scoreRows` over the k·oversample survivors. Measured per query on one
+  * thread, 131,072 × 64 clustered unit rows, k 10 ([[KernelProbe]]'s
+  * per-query table, AVX-512, six runs): `scoreRange` 1.6–2.2 ms at
+  * nq 1, 1.0–1.7 ms at nq 3, 0.47–0.61 ms at nq 32; `int8TwoPhase` at
+  * oversample 3 0.8–1.1, 0.59–0.80 and 0.48–0.75 ms (1.8–3.0 ms at every
+  * nq with the one-dot-per-row phase 1 it replaced).
+  *
   * Reference anchor: Qdrant's distributed deployment shards collections
   * across nodes and scatter-gathers searches (the reference's
   * qdrant_client would shard past one process the same way —
@@ -332,22 +342,28 @@ object SlabIO {
       floatSlabPath: String): Unit =
     writeSlab(path, Int8Twin, Some(stampOf(floatSlabPath)), Array(rows), null, null)
 
-  /** Parsed int8 code slab: parallel id/user arrays, row offsets into the
-    * contiguous code slab — the RAM-pinned phase-1 state of an int8
-    * shard worker (8× smaller than the float slab it fingerprints). */
+  /** Parsed int8 code slab: parallel id/user arrays, row offsets, and the
+    * codes in the phase-1 kernel's layout ([[BatchedServer.CodeSlab]]) —
+    * the RAM-pinned phase-1 state of an int8 shard worker (8× smaller
+    * than the float slab it fingerprints). */
   final case class Int8Slab(ids: Array[Long], users: Array[Int],
-      offs: Array[Int], codes: Array[Byte], floatSlabBytes: Long,
+      offs: Array[Int], codes: BatchedServer.CodeSlab, floatSlabBytes: Long,
       floatChecksum: Long) {
     def n: Int = ids.length
     def requirePairedWith(floatSlabPath: String): Unit =
       requirePaired("int8 slab", floatSlabBytes, floatChecksum, floatSlabPath)
   }
 
+  /** Read an int8 code slab straight into the phase-1 layout: each row's
+    * codes are copied from the mapping to their place in the one heap
+    * slab, blocked or row-major as [[BatchedServer.CodeSlab]] decides. */
   def readInt8(path: String): Int8Slab = {
     val s = mapSlab(path, Int8Twin, WholeFile)
     val (ids, users, offs) = s.columns()
-    val codes = new Array[Byte](offs(s.lay.n))
-    s.buf.get(codes)
+    val cells = s.lay.cells.toInt
+    val codes = BatchedServer.CodeSlab.fill(offs) { (r, into, at) =>
+      s.buf.get(cells + offs(r), into, at, offs(r + 1) - offs(r))
+    }
     Int8Slab(ids, users, offs, codes, s.buf.getLong(8), s.buf.getLong(16))
   }
 
@@ -1255,7 +1271,7 @@ object ShardWorker {
          else s" graphEdges=${st0.graph.nbrs.length} beam=${st0.beam}")
     if (st0.int8)
       println(s"READY ${cfg.port} n=${st0.n} int8=1 " +
-        s"codeBytes=${st0.i8.slab.codes.length}$ivfNote")
+        s"codeBytes=${st0.i8.slab.codes.bytes.length}$ivfNote")
     else
       println(s"READY ${cfg.port} n=${st0.n} simdRows=${st0.rep.simdRows}$ivfNote")
     while (true) {

@@ -109,6 +109,10 @@ class ShardWorkerSpec extends AnyFunSuite with TempDirs {
       val s = new java.net.ServerSocket(0)
       try s.getLocalPort finally s.close()
     }
+    // the slow shard's socket is bound BEFORE the fast worker's port is
+    // picked, so the OS cannot hand the freed port to both shards
+    val slowSrv = new java.net.ServerSocket(0)
+    val slowPort = slowSrv.getLocalPort
     val fastPort = freePort()
     val slabPath = java.nio.file.Files.createTempFile("slab_fast", ".bin").toString
     SlabIO.write(slabPath, fastRows)
@@ -120,8 +124,6 @@ class ShardWorkerSpec extends AnyFunSuite with TempDirs {
     workerThread.start()
     // slow shard: protocol-correct responder with a settable reply delay
     // (same frame format and merge rule as the worker, via topK)
-    val slowSrv = new java.net.ServerSocket(0)
-    val slowPort = slowSrv.getLocalPort
     val delayMs = new java.util.concurrent.atomic.AtomicLong(0L)
     // one-shot stall for the hedged phase: exactly ONE request (the
     // hedge's primary) sleeps `delayMs`; the duplicate passes untouched —
@@ -270,7 +272,7 @@ class ShardWorkerSpec extends AnyFunSuite with TempDirs {
     rows.zipWithIndex.foreach { case ((id, e, u), i) =>
       assert(slab.ids(i) == id && slab.users(i) == u)
       e.zipWithIndex.foreach { case (x, d) =>
-        assert(slab.codes(slab.offs(i) + d) == BatchedServer.quantizeCode(x))
+        assert(slab.codes.code(i, d) == BatchedServer.quantizeCode(x))
       }
     }
     // kernel parity: the one int8 kernel, rescoring from the mmapped
@@ -281,7 +283,7 @@ class ShardWorkerSpec extends AnyFunSuite with TempDirs {
     val (fbuf, ds) = SlabIO.mapFloatForRescore(floatPath)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
     val rep = BatchedServer.FlatReplica(rows)
-    val codes = BatchedServer.quantizeSlab(rep.embs)
+    val codes = BatchedServer.CodeSlab(rep)
     val rnd = new scala.util.Random(23)
     val queries = Array.fill(5) {
       val q = Array.fill(32)(rnd.nextDouble() * 2 - 1)
@@ -309,7 +311,7 @@ class ShardWorkerSpec extends AnyFunSuite with TempDirs {
       val mapped = new SlabIO.MappedFloats(slab, fbuf, ds)
       val got = BatchedServer.int8TwoPhase(mapped, slab.codes, queries, k,
         0.0, 3.0, pool, 4)
-      val sources = Seq[(String, BatchedServer.FloatRows, Array[Byte])](
+      val sources = Seq[(String, BatchedServer.FloatRows, BatchedServer.CodeSlab)](
         ("mmap", mapped, slab.codes), ("heap", rep, codes))
       for ((src, floats, cs) <- sources; th <- Seq(0.0, 0.1)) {
         val res = BatchedServer.int8TwoPhase(floats, cs, queries, k, th, 3.0,
@@ -410,20 +412,131 @@ class ShardWorkerSpec extends AnyFunSuite with TempDirs {
     }
   }
 
-  test("int8 SIMD dot == scalar dot on every length/offset (exact integer math)") {
-    // integer arithmetic is order-independent, so the widening SIMD
-    // kernel must be BIT-identical to the scalar loop — including tails
-    // shorter than a vector and unaligned slab offsets
-    val rnd = new scala.util.Random(41)
-    val codes = Array.fill(1024)((rnd.nextInt(255) - 127).toByte)
-    for (len <- Seq(0, 1, 7, 8, 15, 16, 63, 64, 100); off <- Seq(0, 3, 64, 129)) {
-      val q = Array.fill(len)((rnd.nextInt(255) - 127).toByte)
-      var want = 0L
+  /** Scalar row-major reference of the int8 two-phase kernel: quantize
+    * every cell, exact integer dot over min(row, query) dims of each row
+    * in `ranges` whose user is in `filter`, keep `fetchK` by (dot desc,
+    * id asc) as (id, dot, row); then the exact rescore, 6dp round,
+    * threshold and (score desc, id asc) top-k. */
+  private def int8Reference(rows: Array[(Long, Array[Double], Int)],
+      q: Array[Double], k: Int, fetchK: Int, th: Double,
+      ranges: Seq[(Int, Int)], filter: Array[Int])
+      : (Seq[(Long, Double, Int)], Seq[(Long, Double, Int)]) = {
+    val q8 = q.map(BatchedServer.quantizeCode)
+    val survivors = ranges.flatMap { case (lo, hi) => lo until hi }
+      .filter(r => filter == null || filter.contains(rows(r)._3))
+      .map { r =>
+        val e = rows(r)._2
+        var dot = 0L
+        var d = 0
+        while (d < math.min(e.length, q8.length)) {
+          dot += BatchedServer.quantizeCode(e(d)) * q8(d); d += 1
+        }
+        (rows(r)._1, dot.toDouble, r)
+      }.sortBy { case (id, dot, _) => (-dot, id) }.take(fetchK)
+    val top = survivors.map { case (id, _, r) =>
+      val e = rows(r)._2
+      var s = 0.0
       var d = 0
-      while (d < len) { want += codes(off + d) * q(d); d += 1 }
-      val got = graft.simd.SimdDot.dotBytes(codes, off, len, q)
-      assert(got == want, s"len=$len off=$off")
+      while (d < math.min(e.length, q.length)) { s += e(d) * q(d); d += 1 }
+      (id, graft.plans.Num.round6(s), rows(r)._3)
+    }.filter(_._2 >= th).sortBy { case (id, s, _) => (-s, id) }.take(k)
+    (survivors, top)
+  }
+
+  test("blocked int8 phase 1 ≡ scalar row-major integer reference: " +
+      "survivors and top-k over unaligned ranges, user filters, floor " +
+      "ties, ragged rows and short queries, blocked and row-major") {
+    import org.scalacheck.{Gen, Prop}
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
+    val blockedRuns = new java.util.concurrent.atomic.AtomicLong()
+    def run(rows: Array[(Long, Array[Double], Int)],
+        queries: Array[Array[Double]], k: Int, oversample: Double, th: Double,
+        ranges: Array[(Int, Int)], filter: Array[Int], slices: Int,
+        what: String): Boolean = {
+      val rep = BatchedServer.FlatReplica(rows)
+      val fetchK = math.max(k, (k * oversample).toInt)
+      val all = if (ranges == null) Array((0, rows.length)) else ranges
+      val want = queries.map(q =>
+        int8Reference(rows, q, k, fetchK, th, all.toSeq, filter))
+      Seq(true, false).forall { simd =>
+        val codes = BatchedServer.CodeSlab(rep.embs, rep.offs, simd)
+        if (codes.lanes > 0) blockedRuns.incrementAndGet()
+        val p = if (slices > 1) pool else null
+        val surv = BatchedServer.int8Survivors(rep, codes, queries, fetchK,
+          p, slices, ranges, filter)
+        val top = BatchedServer.int8TwoPhase(rep, codes, queries, k, th,
+          oversample, p, slices, ranges, filter)
+        queries.indices.forall { qi =>
+          val ok = surv(qi).toSeq == want(qi)._1 && top(qi).toSeq == want(qi)._2
+          if (!ok) println(s"$what simd=$simd lanes=${codes.lanes} qi=$qi " +
+            s"k=$k fetchK=$fetchK th=$th slices=$slices\n survivors=" +
+            s"${surv(qi).toSeq}\n want=${want(qi)._1}\n top=${top(qi).toSeq}" +
+            s"\n want=${want(qi)._2}")
+          ok
+        }
+      }
     }
+    try {
+      // floor ties by construction: every row is one vector, and ids FALL
+      // with the row index, so each later row ties the heap floor with a
+      // smaller id and must displace the floor row — a strict (>) gate
+      // keeps the first fetchK rows instead of the last. 128 rows fill
+      // whole blocks; 131 leave a row-major tail.
+      val same = Array.fill(32)(0.25)
+      val tied = Array.tabulate(131)(i => ((1000 - i).toLong, same, i % 3))
+      assert(run(tied.take(128), Array(same, same.take(20)), 2, 1.5, -1.0, null,
+        null, 1, "floor tie"), "equal dots at the heap floor must reach the id tie")
+      assert(run(tied, Array(same), 2, 1.5, -1.0, null, null, 1, "floor tie, tail"))
+      assert(run(tied, Array(same), 3, 1.0, -1.0, Array((5, 70), (90, 131)),
+        Array(0, 2), 3, "floor tie, ranges + filter"))
+      val prop = Prop.forAllNoShrink(
+          Gen.choose(1, 80), Gen.choose(0, 200), Gen.choose(1, 6),
+          Gen.oneOf(1, 1, 2, 5, 10), Gen.oneOf(1.0, 1.0, 3.0, 8.0),
+          Gen.choose(0, 5), Gen.choose(0L, Long.MaxValue)) {
+          (dim, n, nq, k, oversample, mode, seed) =>
+        val rnd = new scala.util.Random(seed)
+        val ragged = mode == 0
+        val ids = rnd.shuffle((0 until 3 * n + 3).map(_.toLong)).toArray
+        // a few base vectors, many exact duplicates (equal integer dots
+        // at the floor, ids on either side) and clamped cells (|x| > 1)
+        val bases = Array.fill(3)(Array.fill(dim)(rnd.nextGaussian() * 0.6))
+        val rows = Array.tabulate(n) { i =>
+          val b = bases(rnd.nextInt(bases.length))
+          val e =
+            if (rnd.nextInt(3) == 0) b.clone()
+            else b.map(x => x + rnd.nextGaussian() * 0.05)
+          val len = if (ragged) 1 + rnd.nextInt(dim) else dim
+          (ids(i), e.take(len), rnd.nextInt(5))
+        }
+        val queries = Array.fill(nq) {
+          val b = bases(rnd.nextInt(bases.length))
+          val q = b.map(x => x + rnd.nextGaussian() * 0.1)
+          rnd.nextInt(4) match {
+            case 0 => q.take(1 + rnd.nextInt(dim)) // short query
+            case 1 => q ++ Array.fill(3)(rnd.nextGaussian()) // long query
+            case _ => q
+          }
+        }
+        // IVF-style ranges: random cut points, a random subset of the
+        // pieces (gaps between them), none aligned to a block
+        val ranges =
+          if (mode <= 1) null
+          else {
+            val cuts = (0 +: Seq.fill(rnd.nextInt(6))(rnd.nextInt(n + 1)) :+ n).sorted
+            cuts.zip(cuts.tail).filter(_ => rnd.nextInt(4) > 0).toArray
+          }
+        val filter = if (mode % 2 == 1) Array(rnd.nextInt(5), rnd.nextInt(5)) else null
+        val th = if (rnd.nextBoolean()) -1.0 else 0.5
+        run(rows, queries, k, oversample, th, ranges, filter,
+          1 + rnd.nextInt(3), s"dim=$dim n=$n mode=$mode")
+      }
+      val res = org.scalacheck.Test.check(
+        org.scalacheck.Test.Parameters.default.withMinSuccessfulTests(400)
+          .withInitialSeed(org.scalacheck.rng.Seed(20261020L)), prop)
+      assert(res.passed, res.status.toString)
+      if (BatchedServer.SimdSupport.int8)
+        assert(blockedRuns.get() > 0, "the blocked layout never ran")
+    } finally pool.shutdown()
   }
 
   test("worker topK over slices == brute-force top-k with the global tie order") {
