@@ -1,9 +1,11 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Collection
+import graft.operators.Quantization.PqCodebook
 
 /** Collection persistence + bulk migration (reference S6/S7:
   * scripts/migrate_from_faiss.py — .npy/FAISS bulk load, batched upserts,
@@ -52,8 +54,7 @@ object CollectionStore {
       idSidecarBuckets: Option[Int] = None,
       pqResidualCodebook: Option[graft.operators.Quantization.PqCodebook] = None)
       : Unit = {
-    centroids.coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(path + "_centroids")
+    writeCentroids(centroids, path)
     val rows = centroids.select(col("cid"), col("ce")).orderBy("cid").collect()
     // product-quantization codes (m bytes/point) when a codebook is given:
     // the ADC phase-1 scan then reads (id, pqc) only, like sig/pq
@@ -65,18 +66,8 @@ object CollectionStore {
     // only — cell pruning × code compression, the FAISS IVFPQ storage
     // layout ([[graft.operators.Ann.ivfPqResidualSearch]] uses the
     // column when present, recomputes when absent)
-    // the codebook fingerprint rides as column metadata (survives the
-    // parquet round-trip in the Spark schema property) so a search given
-    // a MISMATCHED codebook fails loud instead of silently mis-ranking
-    // on foreign codes (ADVICE r13; Quantization.assertCodebookMatches)
-    val assigned = pqResidualCodebook match {
-      case Some(cbRes) => assigned0
-        .join(broadcast(centroids.select(col("cid"), col("ce"))), Seq("cid"))
-        .withColumn("pqrc", graft.operators.Quantization.pqrcColumn(
-          col("embedding"), col("ce"), cbRes))
-        .drop("ce")
-      case None => assigned0
-    }
+    val assigned = withResidualCodes(assigned0,
+      centroids.select(col("cid"), col("ce")), pqResidualCodebook)
     assigned
       .repartition(numFiles, col("cid"))
       .sortWithinPartitions("cid", "user_id", "id")
@@ -98,10 +89,132 @@ object CollectionStore {
       .withColumn("pq", graft.operators.Quantization.quantize(col("embedding")))
     pqCodebook.fold(base)(cb => base.withColumn("pqc",
       graft.operators.Quantization.pqEncode(col("embedding"), cb)
-        // same fingerprint guard as pqrc (see saveIndexed)
+        // same fingerprint guard as pqrc (see withResidualCodes)
         .as("pqc", new org.apache.spark.sql.types.MetadataBuilder()
           .putString(graft.operators.Quantization.FingerprintKey,
             graft.operators.Quantization.fingerprint(cb)).build())))
+  }
+
+  /** Residual codes (`pqrc`) of `rows`: x − c(cid), c from the (cid, ce)
+    * frame `cents`, PQ-encoded — a function of (x, c(cid), codebook) only,
+    * so save, merge, split and merge-cells all write the same codes. The
+    * codebook fingerprint rides as column metadata (survives the parquet
+    * round-trip in the Spark schema property) so a search given a
+    * MISMATCHED codebook fails loud instead of silently mis-ranking on
+    * foreign codes (ADVICE r13; Quantization.assertCodebookMatches). */
+  private def withResidualCodes(rows: DataFrame, cents: DataFrame,
+      codebook: Option[PqCodebook]): DataFrame =
+    codebook.fold(rows)(cb => rows.drop("pqrc")
+      .join(broadcast(cents), Seq("cid"))
+      .withColumn("pqrc", graft.operators.Quantization.pqrcColumn(
+        col("embedding"), col("ce"), cb))
+      .drop("ce"))
+
+  /** A centroid table's cid-ordered rows on the driver (≤ C rows). */
+  private def centroidRows(cents: DataFrame): Array[(Long, Array[Double])] =
+    cents.select(col("cid").cast("long"), col("ce")).orderBy("cid").collect()
+      .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray)
+
+  /** A (cid, ce) frame of driver-held centroids. */
+  private def centroidFrame(spark: SparkSession,
+      cents: Seq[(Long, Seq[Double])]): DataFrame = {
+    import spark.implicits._
+    cents.toDF("cid", "ce")
+  }
+
+  /** Write the centroid side-table `<path>_centroids` as one file. */
+  private def writeCentroids(cents: DataFrame, path: String): Unit =
+    cents.coalesce(1).write.mode(SaveMode.Overwrite)
+      .parquet(path + "_centroids")
+
+  /** The filesystem that owns `path`: a store on a non-default filesystem
+    * (s3a:// with a local default FS) must resolve ITS scheme (ADVICE r14). */
+  private def fsOf(spark: SparkSession, path: String): FileSystem =
+    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** `id mod nBuckets` as a bucketed table's int partition value. */
+  private def bucketCol(id: Column, nBuckets: Int): Column =
+    pmod(id, lit(nBuckets.toLong)).cast("int")
+
+  /** The sorted distinct buckets the `idCol` values of `ids` hash to: one
+    * small collect (≤ nBuckets ints). */
+  private def bucketsOf(ids: DataFrame, nBuckets: Int,
+      idCol: String = "id"): Seq[Int] =
+    ids.select(bucketCol(col(idCol), nBuckets).as("bucket"))
+      .distinct().collect().map(_.getInt(0)).toSeq.sorted
+
+  /** The `bucket=b` partition dirs a bucketed table holds (one listStatus). */
+  private def bucketDirs(fs: FileSystem, table: String): Seq[Int] =
+    fs.listStatus(new Path(table)).toSeq.map(_.getPath.getName)
+      .filter(_.startsWith("bucket=")).map(_.stripPrefix("bucket=").toInt)
+
+  /** The precondition of every id-sidecar reader: the store carries the
+    * `<path>_ids` sidecar, and no `bucket=b` dir has b ≥ `nBuckets`. A
+    * count below the one the sidecar was written with resolves ids into
+    * the wrong dirs — a delete misses the row, a move leaves its old copy
+    * stored — so the call fails here, one listStatus and no Spark job,
+    * before anything is read or written. A LARGER count passes: absent
+    * dirs look like drained buckets. */
+  private def requireSidecar(fs: FileSystem, path: String, nBuckets: Int,
+      op: String): Unit = {
+    require(fs.exists(new Path(path + "_ids")),
+      s"$op: no id sidecar at ${path}_ids — the store must be written via " +
+        "saveIndexed(..., idSidecarBuckets = Some(n))")
+    val dirs = bucketDirs(fs, path + "_ids")
+    require(dirs.forall(_ < nBuckets),
+      s"$op: nBuckets=$nBuckets is below the layout of ${path}_ids, which " +
+        s"holds bucket=${dirs.max}: it was saved with at least " +
+        s"${dirs.max + 1} buckets — pass the bucket count the store was " +
+        "saved with")
+  }
+
+  /** The affected-partition rewrite of every incremental mutation:
+    * checkpoint `rows` (cuts lineage back to `table`, so affected dirs are
+    * not read while being rewritten), repartition by `partCol`, sort by
+    * (partCol, sortKeys), dynamic overwrite — untouched dirs keep their
+    * files byte for byte. Dynamic overwrite cannot rewrite a dir it has
+    * no rows for, so emptied dirs are deleted explicitly: `emptied` ones
+    * the caller knows of, and those of `touched` that one small collect
+    * finds drained. Returns the checkpointed rows. */
+  private def rewritePartitions(fs: FileSystem, table: String,
+      rows: DataFrame, partCol: String, sortKeys: Seq[String],
+      touched: Seq[Any] = Nil, emptied: Seq[Any] = Nil): DataFrame = {
+    val fresh = rows.localCheckpoint()
+    fresh
+      .repartition(col(partCol))
+      .sortWithinPartitions(partCol, sortKeys: _*)
+      .write.mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partCol).parquet(table)
+    val drained = if (touched.isEmpty) Nil else {
+      val surviving = fresh.select(partCol).distinct()
+        .collect().map(_.get(0).toString).toSet
+      touched.map(_.toString).filterNot(surviving)
+    }
+    (drained ++ emptied.map(_.toString)).foreach { v =>
+      fs.delete(new Path(s"$table/$partCol=$v"), true)
+    }
+    fresh
+  }
+
+  /** The id→cid sidecar update every cell-changing mutation shares: in
+    * the `buckets` dirs of `<path>_ids` (read as `sidecar`), drop the
+    * rows of `removed` ids and add the (id, cid) rows of `added`. Only
+    * tombstones can drain a bucket, so only `mayEmpty` callers pay the
+    * emptied-dir check. */
+  private def updateSidecar(fs: FileSystem, path: String,
+      sidecar: DataFrame, nBuckets: Int, buckets: Seq[Int],
+      removed: DataFrame, added: Option[DataFrame], mayEmpty: Boolean)
+      : Unit = {
+    val kept = sidecar
+      .filter(col("bucket").isin(buckets: _*))
+      .join(removed, Seq("id"), "left_anti")
+      .select("id", "cid", "bucket")
+    rewritePartitions(fs, path + "_ids",
+      added.fold(kept)(a => kept.unionByName(a
+        .select(col("id"), col("cid").cast("long").as("cid"))
+        .withColumn("bucket", bucketCol(col("id"), nBuckets)))),
+      "bucket", Seq("id"), touched = if (mayEmpty) buckets else Nil)
   }
 
   /** Write the id→cid SIDECAR of an indexed store: `<path>_ids`, bucketed
@@ -112,7 +225,7 @@ object CollectionStore {
     * id→point mapping plays for its segment updates). */
   def saveIdSidecar(assigned: DataFrame, path: String, nBuckets: Int): Unit =
     assigned.select(col("id"), col("cid").cast("long").as("cid"))
-      .withColumn("bucket", pmod(col("id"), lit(nBuckets.toLong)).cast("int"))
+      .withColumn("bucket", bucketCol(col("id"), nBuckets))
       .repartition(col("bucket"))
       .sortWithinPartitions("bucket", "id")
       .write.mode(SaveMode.Overwrite).partitionBy("bucket")
@@ -145,27 +258,19 @@ object CollectionStore {
       deletes: Option[DataFrame] = None,
       pqResidualCodebook: Option[graft.operators.Quantization.PqCodebook] = None)
       : Unit = {
-    import org.apache.hadoop.fs.Path
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration) // path-scoped FS (ADVICE r14)
+    val fs = fsOf(spark, path)
+    val exists = fs.exists(new Path(path))
+    // the store must carry the id→cid sidecar this incremental path is
+    // built on, bucketed the way the caller resolves ids
+    if (exists) requireSidecar(fs, path, nBuckets, "mergeIndexed")
     // residual codes for the batch: assigned cell's centroid from the
-    // caller's literal set (same codes saveIndexed would write — codes
-    // are a function of (x, c(cid), codebook) only)
-    val assignedAdds0 = withIndexCols(adds, cids, cents, pqCodebook)
-    val assignedAdds = (pqResidualCodebook match {
-      case Some(cbRes) =>
-        val sparkA = adds.sparkSession
-        import sparkA.implicits._
-        val centsDf = cids.zip(cents).toDF("cid", "ce")
-        assignedAdds0
-          .join(broadcast(centsDf), Seq("cid"))
-          .withColumn("pqrc", graft.operators.Quantization.pqrcColumn(
-            col("embedding"), col("ce"), cbRes))
-          .drop("ce")
-      case None => assignedAdds0
-    }).localCheckpoint() // one assignment pass; reused by steps 2/3/5
+    // caller's literal set
+    val assignedAdds = withResidualCodes(
+      withIndexCols(adds, cids, cents, pqCodebook),
+      centroidFrame(spark, cids.zip(cents)), pqResidualCodebook)
+      .localCheckpoint() // one assignment pass; reused by steps 2/3/5
     // first batch against an empty location: plain indexed write
-    if (!fs.exists(new Path(path))) {
+    if (!exists) {
       assignedAdds
         .repartition(col("cid"))
         .sortWithinPartitions("cid", "user_id", "id")
@@ -173,12 +278,11 @@ object CollectionStore {
       saveIdSidecar(assignedAdds, path, nBuckets)
       return
     }
-    // Fail fast on the two silent schema couplings that otherwise surface
-    // as opaque runtime errors deep inside the merge: (a) the persisted
-    // store and this batch must agree on PQ codes (upsert's unionByName
-    // cannot reconcile a store saved with `pqc` against a batch assigned
-    // without a codebook, or vice versa); (b) the store must carry the
-    // id→cid sidecar this incremental path is built on.
+    // Fail fast on the silent schema coupling that otherwise surfaces as
+    // opaque runtime errors deep inside the merge: the persisted store
+    // and this batch must agree on PQ codes (upsert's unionByName cannot
+    // reconcile a store saved with `pqc` against a batch assigned without
+    // a codebook, or vice versa).
     val storeFields = spark.read.parquet(path).schema.fieldNames
     val storeHasPq = storeFields.contains("pqc")
     require(storeHasPq == pqCodebook.isDefined,
@@ -199,10 +303,6 @@ object CollectionStore {
       else
         s"mergeIndexed: store at $path has no residual codes — drop the " +
           "pqResidualCodebook argument or rebuild the store with it")
-    require(fs.exists(new Path(path + "_ids")),
-      s"mergeIndexed: no id sidecar at ${path}_ids — the store must be " +
-        "written via saveIndexed(..., idSidecarBuckets = Some(n)) before " +
-        "incremental merges can locate the old cells of updated ids")
     // stale-centroid guard: after a maintenance op rewrote the cell
     // layout (splitOversizedCells / mergeSmallCells / optimizePartitions),
     // a caller still holding the OLD centroid set would assign adds into
@@ -218,79 +318,56 @@ object CollectionStore {
           s"(${cids.size} passed vs ${persistedCids.size} persisted) — " +
           "re-read the centroid table after any cell-maintenance op")
     }
+    applyIndexed(spark, fs, path, nBuckets, Some(assignedAdds), deletes)
+  }
+
+  /** The incremental core of [[mergeIndexed]] and [[deleteIndexed]]:
+    * assigned `adds` (possibly none) and tombstone ids `deletes` resolve
+    * their affected cells and id-buckets, then rewrite only those
+    * (steps 2-5 of [[mergeIndexed]]). A batch that touches no stored cell
+    * (a delete of ids never stored) returns without writing. */
+  private def applyIndexed(spark: SparkSession, fs: FileSystem,
+      path: String, nBuckets: Int, adds: Option[DataFrame],
+      deletes: Option[DataFrame]): Unit = {
     // tombstones ride the same incremental machinery: delete ids join the
     // bucket/cell resolution (their OLD cells must be rewritten), and the
     // merge anti-joins them out. An id in both adds and deletes is
     // deleted — tombstones win, matching deleteWhere-then-upsert order.
     val deleteIds = deletes.map(_.select("id").localCheckpoint())
-    val batchIds = deleteIds.fold(assignedAdds.select("id"))(d =>
-      assignedAdds.select("id").union(d).distinct())
-    val buckets = batchIds
-      .select(pmod(col("id"), lit(nBuckets.toLong)).cast("int").as("bucket"))
-      .distinct().collect().map(_.getInt(0)).toSeq
+    val batchIds = (adds.map(_.select("id")) ++ deleteIds)
+      .reduce(_.union(_).distinct())
+    val buckets = bucketsOf(batchIds, nBuckets)
     // 2. old cells of updated ids — bucket-pruned sidecar lookup
     val sidecar = spark.read.parquet(path + "_ids")
     val oldCells = sidecar
       .filter(col("bucket").isin(buckets: _*))
       .join(broadcast(batchIds), Seq("id"), "left_semi")
       .select("cid").distinct().collect().map(_.getLong(0)).toSet
-    val newCells = assignedAdds.select("cid").distinct()
-      .collect().map(_.getLong(0)).toSet
+    val newCells = adds.fold(Set.empty[Long])(_.select("cid").distinct()
+      .collect().map(_.getLong(0)).toSet)
     val affected = (oldCells ++ newCells).toSeq.sorted
+    if (affected.isEmpty) return // nothing stored under these ids
     // 3. LWW against only the affected cell partitions (partition column
     // reads back as its inferred narrow type — normalize to long)
     val current = spark.read.parquet(path)
       .filter(col("cid").isin(affected: _*))
       .withColumn("cid", col("cid").cast("long"))
-    val upserted = graft.operators.Collection.upsert(current, assignedAdds)
-    val merged = deleteIds.fold(upserted)(d =>
-        upserted.join(broadcast(d), Seq("id"), "left_anti"))
-      .localCheckpoint() // cut lineage back to `path` before the overwrite
-    merged
-      .repartition(col("cid"))
-      .sortWithinPartitions("cid", "user_id", "id")
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("cid").parquet(path)
-    // 4. a cell whose every row moved away has no rows in `merged` —
-    // dynamic overwrite leaves its stale dir; drop it explicitly
-    val surviving = merged.select("cid").distinct()
-      .collect().map(_.getLong(0)).toSet
-    (affected.toSet -- surviving).foreach { cid =>
-      fs.delete(new Path(s"$path/cid=$cid"), true)
-    }
+    val upserted = adds.fold(current)(Collection.upsert(current, _))
+    // 4. a cell whose every row moved away is dropped by the rewrite
+    rewritePartitions(fs, path, deleteIds.fold(upserted)(d =>
+        upserted.join(broadcast(d), Seq("id"), "left_anti")),
+      "cid", Seq("user_id", "id"), touched = affected)
     // 5. sidecar: same incremental shape on the id-bucket dirs
     // tombstones apply to the add side too: a same-batch add+delete id
     // must not re-enter through the union (the store-side anti-join
     // already drops it — the sidecar must agree or the next merge would
-    // resolve cells for a row that no longer exists)
-    val sidecarAdds0 = assignedAdds
-      .select(col("id"), col("cid").cast("long").as("cid"))
-      .withColumn("bucket", pmod(col("id"), lit(nBuckets.toLong)).cast("int"))
-    val sidecarAdds = deleteIds.fold(sidecarAdds0)(d =>
-      sidecarAdds0.join(broadcast(d), Seq("id"), "left_anti"))
-    val sidecarMerged = sidecar
-      .filter(col("bucket").isin(buckets: _*))
-      .join(broadcast(batchIds), Seq("id"), "left_anti")
-      .select("id", "cid", "bucket")
-      .unionByName(sidecarAdds)
-      .localCheckpoint()
-    sidecarMerged
-      .repartition(col("bucket"))
-      .sortWithinPartitions("bucket", "id")
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("bucket").parquet(path + "_ids")
-    // an id-bucket emptied by tombstones (every id deleted, no adds) has
-    // no rows in sidecarMerged — dynamic overwrite leaves its stale dir;
-    // drop it like step 4 drops emptied cells
-    if (deleteIds.isDefined) {
-      val survivingBuckets = sidecarMerged.select("bucket").distinct()
-        .collect().map(_.getInt(0)).toSet
-      (buckets.toSet -- survivingBuckets).foreach { b =>
-        fs.delete(new Path(s"${path}_ids/bucket=$b"), true)
-      }
-    }
+    // resolve cells for a row that no longer exists); an id-bucket
+    // emptied by tombstones (every id deleted, no adds) is dropped like
+    // step 4 drops emptied cells
+    updateSidecar(fs, path, sidecar, nBuckets, buckets, broadcast(batchIds),
+      adds.map(a => deleteIds.fold(a)(d =>
+        a.join(broadcast(d), Seq("id"), "left_anti"))),
+      mayEmpty = deleteIds.isDefined)
   }
 
   /** Tombstone-only incremental maintenance: delete a (small) id set from
@@ -298,10 +375,11 @@ object CollectionStore {
     * id-buckets) — no centroids, no re-assignment, no full compact
     * (VERDICT r7 #3: a single-id delete should touch one cid dir). The
     * reference deletes points in place (src/core/qdrant_client.py:407-469);
-    * this is that operation against the partitioned layout:
+    * this is that operation against the partitioned layout, the
+    * tombstone-only case of [[mergeIndexed]]'s core ([[applyIndexed]]):
     *
     *  1. resolve the cells the doomed ids live in via the bucket-pruned
-    *     id→cid sidecar;
+    *     id→cid sidecar (none: return without writing);
     *  2. anti-join ONLY those cell partitions, written back with dynamic
     *     partition overwrite (untouched cell dirs byte-identical —
     *     spec-asserted);
@@ -309,54 +387,9 @@ object CollectionStore {
   def deleteIndexed(
       spark: SparkSession, path: String, deleteIds: DataFrame,
       nBuckets: Int): Unit = {
-    import org.apache.hadoop.fs.Path
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration) // path-scoped FS (ADVICE r14)
-    require(fs.exists(new Path(path + "_ids")),
-      s"deleteIndexed: no id sidecar at ${path}_ids — the store must be " +
-        "written via saveIndexed(..., idSidecarBuckets = Some(n))")
-    val doomed = deleteIds.select("id").localCheckpoint()
-    val buckets = doomed
-      .select(pmod(col("id"), lit(nBuckets.toLong)).cast("int").as("bucket"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    val sidecar = spark.read.parquet(path + "_ids")
-    val affected = sidecar
-      .filter(col("bucket").isin(buckets: _*))
-      .join(broadcast(doomed), Seq("id"), "left_semi")
-      .select("cid").distinct().collect().map(_.getLong(0)).toSeq.sorted
-    if (affected.isEmpty) return // nothing stored under these ids
-    val kept = spark.read.parquet(path)
-      .filter(col("cid").isin(affected: _*))
-      .withColumn("cid", col("cid").cast("long"))
-      .join(broadcast(doomed), Seq("id"), "left_anti")
-      .localCheckpoint()
-    kept
-      .repartition(col("cid"))
-      .sortWithinPartitions("cid", "user_id", "id")
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("cid").parquet(path)
-    val survivingCells = kept.select("cid").distinct()
-      .collect().map(_.getLong(0)).toSet
-    (affected.toSet -- survivingCells).foreach { cid =>
-      fs.delete(new Path(s"$path/cid=$cid"), true)
-    }
-    val sidecarKept = sidecar
-      .filter(col("bucket").isin(buckets: _*))
-      .join(broadcast(doomed), Seq("id"), "left_anti")
-      .select("id", "cid", "bucket")
-      .localCheckpoint()
-    sidecarKept
-      .repartition(col("bucket"))
-      .sortWithinPartitions("bucket", "id")
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("bucket").parquet(path + "_ids")
-    val survivingBuckets = sidecarKept.select("bucket").distinct()
-      .collect().map(_.getInt(0)).toSet
-    (buckets.toSet -- survivingBuckets).foreach { b =>
-      fs.delete(new Path(s"${path}_ids/bucket=$b"), true)
-    }
+    val fs = fsOf(spark, path)
+    requireSidecar(fs, path, nBuckets, "deleteIndexed")
+    applyIndexed(spark, fs, path, nBuckets, None, Some(deleteIds))
   }
 
   /** Write a navigable-graph SIDECAR next to a bucketed points store —
@@ -377,7 +410,7 @@ object CollectionStore {
       nBuckets: Int = 16): Unit = {
     graft.operators.Ann.saveGraphBucketed(graph, path + "_graph", nBuckets)
     graph
-      .withColumn("bucket", pmod(col("dst"), lit(nBuckets.toLong)).cast("int"))
+      .withColumn("bucket", bucketCol(col("dst"), nBuckets))
       .repartition(col("bucket"))
       .sortWithinPartitions("bucket", "dst", "src")
       .write.partitionBy("bucket").mode(SaveMode.Overwrite)
@@ -437,14 +470,12 @@ object CollectionStore {
       entryCids: Seq[Long], entryCents: Seq[Seq[Double]],
       nBuckets: Int = 16, graphK: Int = 12, maxDegree: Int = 16,
       beam: Int = 24, hops: Int = 8): Unit = {
-    import org.apache.hadoop.fs.Path
     import graft.operators.Ann
     require(graphK <= maxDegree,
       s"mergeGraphIndexed: graphK ($graphK) must be <= maxDegree " +
         s"($maxDegree) — a new id would link more neighbors than its own " +
         "degree cap keeps")
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration) // path-scoped FS (ADVICE r14)
+    val fs = fsOf(spark, path)
     val graphPath = path + "_graph"
     val revPath = path + "_graph_rev"
     require(fs.exists(new Path(graphPath)),
@@ -463,27 +494,11 @@ object CollectionStore {
         "descent's entry tier; rebuild the graph to retire them")
     val addIds = adds.select("id").collect().map(_.getLong(0)).toSeq
     val hasAdds = addIds.nonEmpty
-    def bucketsOf(ids: Iterable[Long]): Seq[Int] =
+    def idBuckets(ids: Iterable[Long]): Seq[Int] =
       ids.map(i => java.lang.Math.floorMod(i, nBuckets.toLong).toInt)
         .toSeq.distinct.sorted
     def inIds(c: org.apache.spark.sql.Column, ids: Seq[Long]) =
       c.isin(ids.map(Long.box): _*)
-    // Overwrite `bs` bucket dirs of a partitioned table from `rows`
-    // (which must carry only buckets in `bs`), deleting dirs the new
-    // content leaves empty (dynamic overwrite won't touch them).
-    def overwriteBuckets(tablePath: String, rows: DataFrame,
-        bs: Seq[Int], sortCols: Seq[String]): Unit = {
-      rows.repartition(col("bucket"))
-        .sortWithinPartitions("bucket", sortCols: _*)
-        .write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket").parquet(tablePath)
-      val surviving = rows.select("bucket").distinct()
-        .collect().map(_.getInt(0)).toSet
-      (bs.toSet -- surviving).foreach { b =>
-        fs.delete(new Path(s"$tablePath/bucket=$b"), true)
-      }
-    }
 
     // O(affected buckets), never O(|graph|). Read ONLY the named bucket
     // dirs (basePath keeps the partition column): a plain read of the
@@ -491,15 +506,11 @@ object CollectionStore {
     // hundreds of buckets × one read per descent hop dominates the batch
     // — listing is part of the O(affected) contract, not just bytes. One
     // root listStatus per table caches which buckets exist.
-    def existingBuckets(tablePath: String): Set[Int] =
-      fs.listStatus(new Path(tablePath)).map(_.getPath.getName)
-        .filter(_.startsWith("bucket="))
-        .map(_.stripPrefix("bucket=").toInt).toSet
     val bucketCache =
       scala.collection.mutable.Map.empty[String, Set[Int]]
     def readBuckets(tablePath: String, bs: Seq[Int]): DataFrame = {
       val existing = bucketCache.getOrElseUpdate(
-        tablePath, existingBuckets(tablePath))
+        tablePath, bucketDirs(fs, tablePath).toSet)
       val dirs = bs.filter(existing).map(b => s"$tablePath/bucket=$b")
       if (dirs.isEmpty)
         spark.read.parquet(tablePath).filter(lit(false))
@@ -507,7 +518,7 @@ object CollectionStore {
     }
     val incidentSrcs =
       if (doomedIds.isEmpty) Array.empty[Long]
-      else readBuckets(revPath, bucketsOf(doomedIds))
+      else readBuckets(revPath, idBuckets(doomedIds))
         .filter(inIds(col("dst"), doomedIds))
         .select("src").distinct().collect().map(_.getLong(0))
     // per-hop pruned suppliers for the insert descent: collect the
@@ -521,14 +532,14 @@ object CollectionStore {
     def storeFor(ids: DataFrame): DataFrame = {
       val need = ids.select("id").distinct()
         .collect().map(_.getLong(0)).toSeq.filterNot(doomedIds.toSet)
-      readBuckets(path, bucketsOf(need))
+      readBuckets(path, idBuckets(need))
         .filter(inIds(col("id"), need))
         .drop("bucket")
     }
     def graphFor(frontier: DataFrame): DataFrame = {
       val ids = frontier.select("id").distinct()
         .collect().map(_.getLong(0)).toSeq
-      notDoomedEdges(readBuckets(graphPath, bucketsOf(ids))
+      notDoomedEdges(readBuckets(graphPath, idBuckets(ids))
         .filter(inIds(col("src"), ids))
         .drop("bucket"))
     }
@@ -542,7 +553,7 @@ object CollectionStore {
       if (!hasAdds) Array.empty[Long]
       else nn.select("id").distinct().collect().map(_.getLong(0))
     val affectedSrcs = (incidentSrcs ++ doomedIds ++ addIds ++ nbrSrcs).distinct
-    val srcBuckets = bucketsOf(affectedSrcs)
+    val srcBuckets = idBuckets(affectedSrcs)
     if (srcBuckets.nonEmpty) {
       // the affected src-buckets, materialized before their overwrite
       // (read-then-overwrite rule); srcs merely SHARING a bucket with
@@ -558,46 +569,39 @@ object CollectionStore {
           s"sidecar's observed max out-degree ($builtDegree) — pass the " +
           "build-time cap (or rebuild the graph to re-cap globally)")
       val g1Aff = Ann.graphDelete(gAff, doomed)
-      val g2Aff = (if (!hasAdds) g1Aff
-        else Ann.graphMergeNn(g1Aff, nn, maxDegree)).localCheckpoint(true)
-      overwriteBuckets(graphPath,
-        g2Aff.withColumn("bucket",
-          pmod(col("src"), lit(nBuckets.toLong)).cast("int")),
-        srcBuckets, Seq("src", "dst"))
+      val g2Aff = rewritePartitions(fs, graphPath,
+        (if (!hasAdds) g1Aff else Ann.graphMergeNn(g1Aff, nn, maxDegree))
+          .withColumn("bucket", bucketCol(col("src"), nBuckets)),
+        "bucket", Seq("src", "dst"), touched = srcBuckets).drop("bucket")
       // rev sidecar: patch exactly the changed edges — old rows of the
       // touched dst-buckets minus removed plus added. removed/added
       // come from the before/after of the recapped region, which holds
       // every changed edge (all changes have srcs in affected buckets)
       val removed = gAff.except(g2Aff).localCheckpoint(true)
       val added = g2Aff.except(gAff).localCheckpoint(true)
-      val dstBuckets = removed.select("dst").unionByName(added.select("dst"))
-        .select(pmod(col("dst"), lit(nBuckets.toLong)).cast("int").as("b"))
-        .distinct().collect().map(_.getInt(0)).toSeq.sorted
+      val dstBuckets = bucketsOf(
+        removed.select("dst").unionByName(added.select("dst")), nBuckets, "dst")
       if (dstBuckets.nonEmpty) {
         val revAff = readBuckets(revPath, dstBuckets)
           .drop("bucket").localCheckpoint(true)
-        val revNew = revAff
+        rewritePartitions(fs, revPath, revAff
           .join(removed.select("src", "dst"), Seq("src", "dst"), "left_anti")
           .unionByName(added)
-          .withColumn("bucket",
-            pmod(col("dst"), lit(nBuckets.toLong)).cast("int"))
-          .localCheckpoint(true)
-        overwriteBuckets(revPath, revNew, dstBuckets, Seq("dst", "src"))
+          .withColumn("bucket", bucketCol(col("dst"), nBuckets)),
+          "bucket", Seq("dst", "src"), touched = dstBuckets)
       }
     }
     // store side: LWW + tombstones against only the batch's buckets,
     // read pruned
-    val storeBuckets = bucketsOf(doomedIds ++ addIds)
+    val storeBuckets = idBuckets(doomedIds ++ addIds)
     if (storeBuckets.nonEmpty) {
       val sAff = readBuckets(path, storeBuckets)
         .drop("bucket").localCheckpoint(true)
-      val bucketed = sAff
+      rewritePartitions(fs, path, sAff
         .join(doomed, Seq("id"), "left_anti")
         .unionByName(adds)
-        .withColumn("bucket",
-          pmod(col("id"), lit(nBuckets.toLong)).cast("int"))
-        .localCheckpoint(true)
-      overwriteBuckets(path, bucketed, storeBuckets, Seq("id"))
+        .withColumn("bucket", bucketCol(col("id"), nBuckets)),
+        "bucket", Seq("id"), touched = storeBuckets)
     }
   }
 
@@ -648,12 +652,8 @@ object CollectionStore {
       : DataFrame = {
     require(maxRows >= 1, s"maxRows must be >= 1, got $maxRows")
     require(maxSubK >= 2, s"maxSubK must be >= 2, got $maxSubK")
-    import org.apache.hadoop.fs.Path
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration) // path-scoped FS (ADVICE r14)
-    require(fs.exists(new Path(path + "_ids")),
-      s"splitOversizedCells: no id sidecar at ${path}_ids — the store must " +
-        "be written via saveIndexed(..., idSidecarBuckets = Some(n))")
+    val fs = fsOf(spark, path)
+    requireSidecar(fs, path, nBuckets, "splitOversizedCells")
     val (store0, cents0) = loadIndexed(spark, path)
     val store = store0.withColumn("cid", col("cid").cast("long"))
     // residual codes quantize x − c(cell): a row moving to a NEW sub-cell
@@ -669,9 +669,7 @@ object CollectionStore {
     val sizes = cellSizes(spark, path)
     val parents = sizes.filter(_._2 > maxRows).keys.toSeq.sorted
     if (parents.isEmpty) return cents0
-    val centRows = cents0.select(col("cid").cast("long"), col("ce"))
-      .orderBy("cid").collect()
-      .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray)
+    val centRows = centroidRows(cents0)
     val maxCid = centRows.map(_._1).max
     val subKOf: Map[Long, Int] = parents.map { p =>
       p -> math.min(maxSubK.toLong,
@@ -751,58 +749,24 @@ object CollectionStore {
     val reassigned0 = subFrame
       .withColumn("cid",
         element_at(cidMap, col("cid") * maxSubK + assignCol()))
+    val newCents = orderedKeys.map(k => (cidOf(k), subCents(k).toSeq))
     // re-encode residual codes against the NEW sub-centroids (see the
-    // pqrc require above) — same pqrcColumn builder as saveIndexed, so
-    // fingerprint and codes stay coupled
-    val reassigned = (pqResidualCodebook match {
-      case Some(cbRes) if store.columns.contains("pqrc") =>
-        val sparkR = spark
-        import sparkR.implicits._
-        val newCentsDf = orderedKeys
-          .map(kk => (cidOf(kk), subCents(kk).toSeq)).toDF("cid", "ce")
-        reassigned0.drop("pqrc")
-          .join(broadcast(newCentsDf), Seq("cid"))
-          .withColumn("pqrc", graft.operators.Quantization.pqrcColumn(
-            col("embedding"), col("ce"), cbRes))
-          .drop("ce")
-      case _ => reassigned0
-    }).localCheckpoint() // cut lineage back to `path` before the overwrite
-    // new cell dirs via dynamic overwrite; parents dropped explicitly
-    reassigned
-      .repartition(col("cid"))
-      .sortWithinPartitions("cid", "user_id", "id")
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("cid").parquet(path)
-    parents.foreach(p => fs.delete(new Path(s"$path/cid=$p"), true))
+    // pqrc require above) — the same encoder as saveIndexed, so
+    // fingerprint and codes stay coupled; new cell dirs via the shared
+    // rewrite, parents dropped explicitly
+    val reassigned = rewritePartitions(fs, path,
+      withResidualCodes(reassigned0, centroidFrame(spark, newCents),
+        pqResidualCodebook.filter(_ => store.columns.contains("pqrc"))),
+      "cid", Seq("user_id", "id"), emptied = parents)
     // sidecar: rewrite only the split ids' buckets
-    val splitIds = reassigned.select(col("id"), col("cid"))
-    val buckets = reassigned
-      .select(pmod(col("id"), lit(nBuckets.toLong)).cast("int").as("bucket"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    val sidecarMerged = spark.read.parquet(path + "_ids")
-      .filter(col("bucket").isin(buckets.map(Int.box): _*))
-      .join(splitIds.select("id"), Seq("id"), "left_anti")
-      .select("id", "cid", "bucket")
-      .unionByName(splitIds
-        .withColumn("bucket",
-          pmod(col("id"), lit(nBuckets.toLong)).cast("int")))
-      .localCheckpoint()
-    sidecarMerged
-      .repartition(col("bucket"))
-      .sortWithinPartitions("bucket", "id")
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("bucket").parquet(path + "_ids")
+    updateSidecar(fs, path, spark.read.parquet(path + "_ids"), nBuckets,
+      bucketsOf(reassigned, nBuckets), reassigned.select("id"),
+      Some(reassigned), mayEmpty = false)
     // centroid table: parents out, sub-centroids in
-    val spark2 = spark
-    import spark2.implicits._
     val keptCents = centRows.filterNot(c => parents.contains(c._1))
       .map { case (c, e) => (c, e.toSeq) }.toSeq
-    val newCents = orderedKeys.map(k => (cidOf(k), subCents(k).toSeq))
-    (keptCents ++ newCents).toDF("cid", "ce")
-      .orderBy("cid").coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(path + "_centroids")
+    writeCentroids(centroidFrame(spark, keptCents ++ newCents).orderBy("cid"),
+      path)
     spark.read.parquet(path + "_centroids")
   }
 
@@ -833,12 +797,8 @@ object CollectionStore {
       pqResidualCodebook: Option[graft.operators.Quantization.PqCodebook] = None)
       : DataFrame = {
     require(minRows >= 1, s"minRows must be >= 1, got $minRows")
-    import org.apache.hadoop.fs.Path
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration) // path-scoped FS (ADVICE r14)
-    require(fs.exists(new Path(path + "_ids")),
-      s"mergeSmallCells: no id sidecar at ${path}_ids — the store must " +
-        "be written via saveIndexed(..., idSidecarBuckets = Some(n))")
+    val fs = fsOf(spark, path)
+    requireSidecar(fs, path, nBuckets, "mergeSmallCells")
     val (store0, cents0) = loadIndexed(spark, path)
     val store = store0.withColumn("cid", col("cid").cast("long"))
     // same residual-code coupling as splitOversizedCells: rows adopted by
@@ -851,9 +811,7 @@ object CollectionStore {
     val sizes = cellSizes(spark, path)
     val doomed = sizes.filter(_._2 < minRows).keys.toSeq.sorted
     if (doomed.isEmpty) return cents0
-    val centRows = cents0.select(col("cid").cast("long"), col("ce"))
-      .orderBy("cid").collect()
-      .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray)
+    val centRows = centroidRows(cents0)
     val surviving = centRows.filterNot(c => doomed.contains(c._1))
     require(surviving.nonEmpty,
       s"mergeSmallCells: minRows=$minRows dooms every cell — nothing to merge into")
@@ -862,78 +820,30 @@ object CollectionStore {
       .filter(col("cid").isin(doomed.map(Long.box): _*))
       .withColumn("cid", graft.plans.VectorExpressions.nearestCentroid(
         col("embedding"), surviving.map(_._1), surviving.map(_._2.toSeq)))
+    val survCents = centroidFrame(spark,
+      surviving.map { case (c, e) => (c, e.toSeq) }.toSeq)
     // adopted rows re-encode their residual codes vs the adopting cell's
     // centroid (rows already IN the target cells keep their valid codes)
-    val moved = (pqResidualCodebook match {
-      case Some(cbRes) if store.columns.contains("pqrc") =>
-        val sparkM = spark
-        import sparkM.implicits._
-        val survCentsDf = surviving
-          .map { case (c, e) => (c, e.toSeq) }.toSeq.toDF("cid", "ce")
-        moved0.drop("pqrc")
-          .join(broadcast(survCentsDf), Seq("cid"))
-          .withColumn("pqrc", graft.operators.Quantization.pqrcColumn(
-            col("embedding"), col("ce"), cbRes))
-          .drop("ce")
-      case _ => moved0
-    }).localCheckpoint()
+    val moved = withResidualCodes(moved0, survCents,
+      pqResidualCodebook.filter(_ => store.columns.contains("pqrc")))
+      .localCheckpoint()
     val targets = moved.select("cid").distinct()
       .collect().map(_.getLong(0)).toSeq.sorted
     // target dirs absorb their adopted rows (full-dir rewrite — dynamic
-    // overwrite replaces whole partitions); every other dir untouched
-    val rewritten = store
+    // overwrite replaces whole partitions); every other dir untouched,
+    // doomed dirs dropped explicitly
+    rewritePartitions(fs, path, store
       .filter(col("cid").isin(targets.map(Long.box): _*))
-      .unionByName(moved)
-      .localCheckpoint() // cut lineage back to `path` before the overwrite
-    rewritten
-      .repartition(col("cid"))
-      .sortWithinPartitions("cid", "user_id", "id")
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("cid").parquet(path)
-    doomed.foreach(c => fs.delete(new Path(s"$path/cid=$c"), true))
+      .unionByName(moved), "cid", Seq("user_id", "id"), emptied = doomed)
     // sidecar: rewrite only the moved ids' buckets
-    val movedIds = moved.select(col("id"), col("cid"))
-    val buckets = moved
-      .select(pmod(col("id"), lit(nBuckets.toLong)).cast("int").as("bucket"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    val sidecarMerged = spark.read.parquet(path + "_ids")
-      .filter(col("bucket").isin(buckets.map(Int.box): _*))
-      .join(movedIds.select("id"), Seq("id"), "left_anti")
-      .select("id", "cid", "bucket")
-      .unionByName(movedIds
-        .withColumn("bucket",
-          pmod(col("id"), lit(nBuckets.toLong)).cast("int")))
-      .localCheckpoint()
-    sidecarMerged
-      .repartition(col("bucket"))
-      .sortWithinPartitions("bucket", "id")
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("bucket").parquet(path + "_ids")
+    updateSidecar(fs, path, spark.read.parquet(path + "_ids"), nBuckets,
+      bucketsOf(moved, nBuckets), moved.select("id"), Some(moved),
+      mayEmpty = false)
     // centroid table: doomed rows out
-    val sparkS = spark
-    import sparkS.implicits._
-    surviving.map { case (c, e) => (c, e.toSeq) }.toSeq.toDF("cid", "ce")
-      .orderBy("cid").coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(path + "_centroids")
+    writeCentroids(survCents.orderBy("cid"), path)
     spark.read.parquet(path + "_centroids")
   }
 
-  /** The composed segment optimizer: alternate [[splitOversizedCells]]
-    * and [[mergeSmallCells]] until every cell sits in [minRows, maxRows]
-    * or a pass changes nothing (fixed point), capped at `maxPasses`.
-    * `minRows·2 ≤ maxRows` is required so the two halves cannot
-    * oscillate: a split of a >maxRows cell lands pieces ≥ ~maxRows/2 ≥
-    * minRows (merge won't re-doom them), and a merge target can exceed
-    * maxRows only to be split into still-in-band pieces next pass.
-    * Each pass costs O(out-of-band cells), so a store whose layout is
-    * already in band pays exactly two footer-count scans. A pathological
-    * layout can churn (a split piece below minRows re-merges, its target
-    * re-splits): progress is monotone in practice but not guaranteed, so
-    * the cap — not a convergence proof — bounds the work; callers
-    * re-invoke on the next maintenance tick. Returns the final centroid
-    * table. */
   /** The C∝N maintenance band (VERDICT r12 #4): at deployment scale the
     * optimizer holds cell SIZE near-constant in [625, 2500] rows — so
     * cell COUNT grows with the collection (C ≈ N/1250, the regime the
@@ -959,12 +869,9 @@ object CollectionStore {
     * ARE the metadata). */
   def cellSizes(spark: SparkSession, path: String): Map[Long, Long] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    // path-scoped resolver (ADVICE r14): a store on a non-default
-    // filesystem (s3a:// with a local default FS) must list ITS scheme's
-    // tree, as HadoopInputFile.fromPath already does for the footers
-    val base = new org.apache.hadoop.fs.Path(path)
-    val fs = base.getFileSystem(conf)
-    val cellDirs = fs.listStatus(base)
+    // path-scoped resolver, as HadoopInputFile.fromPath is for the footers
+    val fs = fsOf(spark, path)
+    val cellDirs = fs.listStatus(new Path(path))
       .filter(st => st.isDirectory && st.getPath.getName.startsWith("cid="))
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.min(16, math.max(1, cellDirs.length)))
@@ -990,6 +897,20 @@ object CollectionStore {
     } finally pool.shutdown()
   }
 
+  /** The composed segment optimizer: alternate [[splitOversizedCells]]
+    * and [[mergeSmallCells]] until every cell sits in [minRows, maxRows]
+    * or a pass changes nothing (fixed point), capped at `maxPasses`.
+    * `minRows·2 ≤ maxRows` is required so the two halves cannot
+    * oscillate: a split of a >maxRows cell lands pieces ≥ ~maxRows/2 ≥
+    * minRows (merge won't re-doom them), and a merge target can exceed
+    * maxRows only to be split into still-in-band pieces next pass.
+    * Each pass costs O(out-of-band cells), so a store whose layout is
+    * already in band pays exactly two footer-count scans. A pathological
+    * layout can churn (a split piece below minRows re-merges, its target
+    * re-splits): progress is monotone in practice but not guaranteed, so
+    * the cap — not a convergence proof — bounds the work; callers
+    * re-invoke on the next maintenance tick. Returns the final centroid
+    * table. */
   def optimizePartitions(
       spark: SparkSession, path: String, minRows: Long, maxRows: Long,
       nBuckets: Int, maxPasses: Int = 8,
@@ -1047,12 +968,9 @@ object CollectionStore {
     // centroid set from the persisted table — the maintenance tick owns
     // the index artifacts end to end (mergeIndexed's stale-centroid
     // guard would reject anything else after a prior rebalance)
-    val centRows = spark.read.parquet(path + "_centroids")
-      .select(col("cid").cast("long").as("cid"), col("ce"))
-      .orderBy("cid").collect()
-    mergeIndexed(spark, path, adds,
-      centRows.map(_.getLong(0)).toSeq,
-      centRows.map(_.getSeq[Double](1).toSeq).toSeq,
+    val (cids, cents) =
+      centroidRows(spark.read.parquet(path + "_centroids")).unzip
+    mergeIndexed(spark, path, adds, cids.toSeq, cents.map(_.toSeq).toSeq,
       nBuckets, pqCodebook, deletes, pqResidualCodebook)
     optimizePartitions(spark, path, minRows, maxRows, nBuckets,
       pqResidualCodebook = pqResidualCodebook)
@@ -1113,7 +1031,8 @@ object CollectionStore {
     *     ([[cellSizes]] — kilobytes of footers, no data pages);
     *   - the touched ids' OLD cells come from the bucket-pruned id→cid
     *     sidecar ([[saveIdSidecar]] — only the batch's `pmod(id, n)`
-    *     buckets are read, the [[deleteIndexed]] resolution pattern);
+    *     buckets ([[bucketsOf]]) are read, the resolution
+    *     [[applyIndexed]] runs for merges and deletes);
     *   - adds are assigned map-side against the persisted centroid
     *     table, tombstones-win like the scan-based planner.
     *
@@ -1124,27 +1043,21 @@ object CollectionStore {
     * have been written with `idSidecarBuckets = Some(nBuckets)`. */
   def refreshManifestIndexed(spark: SparkSession, path: String,
       upserts: DataFrame, deleteIds: DataFrame, nBuckets: Int): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(new Path(path + "_ids")),
-      s"refreshManifestIndexed: no id sidecar at ${path}_ids — the store " +
-        "must be written via saveIndexed(..., idSidecarBuckets = Some(n))")
+    val fs = fsOf(spark, path)
+    requireSidecar(fs, path, nBuckets, "refreshManifestIndexed")
     // the caller's bucket count must MATCH the one the sidecar was
     // written with: a mismatch (say 16 vs the written 8) would bucketize
     // a batch id into a directory that does not exist, silently skip its
-    // sidecar row, and under-count drops — validated against the actual
-    // bucket=N layout (max dir == n-1, or every dir present, to survive
-    // deleteIndexed having drained interior buckets). Fail loud beats a
-    // manifest that quietly skips cells.
-    val bucketDirs = fs.listStatus(new Path(path + "_ids")).toSeq
-      .map(_.getPath.getName).filter(_.startsWith("bucket="))
-      .map(_.stripPrefix("bucket=").toInt)
-    require(bucketDirs.nonEmpty, s"empty id sidecar at ${path}_ids")
-    require(bucketDirs.forall(b => b >= 0 && b < nBuckets) &&
-      (bucketDirs.max == nBuckets - 1 || bucketDirs.size == nBuckets),
+    // sidecar row, and under-count drops. [[requireSidecar]] rejects a
+    // count below the layout; a larger one is caught here against the
+    // actual bucket=N layout (max dir == n-1, or every dir present, to
+    // survive deleteIndexed having drained interior buckets). Fail loud
+    // beats a manifest that quietly skips cells.
+    val dirs = bucketDirs(fs, path + "_ids")
+    require(dirs.nonEmpty, s"empty id sidecar at ${path}_ids")
+    require(dirs.max == nBuckets - 1 || dirs.size == nBuckets,
       s"nBuckets=$nBuckets does not match the sidecar's layout " +
-        s"(bucket dirs ${bucketDirs.sorted.mkString(",")}) — pass the " +
+        s"(bucket dirs ${dirs.sorted.mkString(",")}) — pass the " +
         "bucket count the store was saved with")
     val cents = spark.read.parquet(path + "_centroids")
       .select(col("cid").cast("long").as("cid"), col("ce"))
@@ -1155,9 +1068,7 @@ object CollectionStore {
     // old cells of the touched ids: bucket-pruned sidecar read
     val touched = upserts.select(col("id"))
       .union(deleteIds.select(col("id"))).distinct().localCheckpoint()
-    val buckets = touched
-      .select(pmod(col("id"), lit(nBuckets.toLong)).cast("int").as("bucket"))
-      .distinct().collect().map(_.getInt(0)).toSeq
+    val buckets = bucketsOf(touched, nBuckets)
     val drops = spark.read.parquet(path + "_ids")
       .filter(col("bucket").isin(buckets: _*))
       .join(broadcast(touched), Seq("id"), "left_semi")
@@ -1230,11 +1141,7 @@ object CollectionStore {
       : (Int, Int) = {
     val (store0, cents) = loadIndexed(spark, storePath)
     val store = shardFilter.fold(store0)(store0.filter)
-    val centRows = cents
-      .select(col("cid").cast("long").as("cid"), col("ce"))
-      .orderBy("cid").collect()
-    val cids = centRows.map(_.getLong(0))
-    val centArrays = centRows.map(_.getSeq[Double](1).toArray)
+    val (cids, centArrays) = centroidRows(cents).unzip
     val cellIdx = cids.zipWithIndex.toMap
     val rows = store
       .select(col("cid").cast("long").as("cid"), col("id"),
@@ -1327,7 +1234,7 @@ object CollectionStore {
     * (e.g. ~1 bucket per few GB) keeping per-merge rewrite volume flat. */
   def saveBucketed(points: DataFrame, path: String, nBuckets: Int): Unit =
     points
-      .withColumn("bucket", pmod(col("id"), lit(nBuckets.toLong)).cast("int"))
+      .withColumn("bucket", bucketCol(col("id"), nBuckets))
       .repartition(col("bucket"))
       .sortWithinPartitions("bucket", "id")
       .write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(path)
@@ -1345,31 +1252,21 @@ object CollectionStore {
     * streaming write path uses per micro-batch. */
   def mergeBucketed(spark: SparkSession, path: String, adds: DataFrame,
       nBuckets: Int): Unit = {
-    val withBucket = adds
-      .withColumn("bucket", pmod(col("id"), lit(nBuckets.toLong)).cast("int"))
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration) // path-scoped FS (ADVICE r14)
-    val exists = fs.exists(new org.apache.hadoop.fs.Path(path))
+    val withBucket = adds.withColumn("bucket", bucketCol(col("id"), nBuckets))
+    val fs = fsOf(spark, path)
     val merged =
-      if (!exists) withBucket
+      if (!fs.exists(new Path(path))) withBucket
       else {
         val store = spark.read.parquet(path)
         require(store.columns.contains("bucket"),
           s"store at $path is not id-bucketed (no 'bucket' partition column) — " +
             "rewrite it with saveBucketed before incremental merging")
-        val affected = withBucket.select("bucket").distinct()
-          .collect().map(_.getInt(0)).toSeq
-        val existing = store.filter(col("bucket").isin(affected: _*))
+        val existing =
+          store.filter(col("bucket").isin(bucketsOf(adds, nBuckets): _*))
         Collection.upsert(existing, withBucket)
       }
-    // materialize BEFORE the overwrite: cuts the lineage back to `path`
-    // so affected buckets aren't read while being rewritten
-    merged.localCheckpoint()
-      .repartition(col("bucket"))
-      .sortWithinPartitions("bucket", "id")
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("bucket").parquet(path)
+    // adds never empty a bucket: no emptied-dir check
+    rewritePartitions(fs, path, merged, "bucket", Seq("id"))
   }
 
   /** Bulk migration (reference migrate_from_faiss.run_migration:153-255):
@@ -1435,11 +1332,10 @@ object CollectionStore {
     val kept = current.filter(not(coalesce(deletePred, lit(false))))
     val tmp = path + "_compacting"
     save(kept, tmp, numFiles)
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration) // path-scoped FS (ADVICE r14)
-    val dst = new org.apache.hadoop.fs.Path(path)
+    val fs = fsOf(spark, path)
+    val dst = new Path(path)
     fs.delete(dst, true)
-    fs.rename(new org.apache.hadoop.fs.Path(tmp), dst)
+    fs.rename(new Path(tmp), dst)
     load(spark, path).count()
   }
 

@@ -965,4 +965,222 @@ class IndexedStoreSpec extends SparkSpec {
           catch { case _: java.io.IOException => () })
     }
   }
+
+  test("a bucket count below the id sidecar's layout fails every sidecar " +
+      "reader before it reads or writes the store") {
+    val path = s"${tempDir("nbuckets")}/store"
+    val cents = Ann.seedCentroids(points, 8)
+    val crows = cents.select($"cid", $"ce").orderBy("cid").collect()
+    val cids = crows.map(_.getLong(0)).toSeq
+    val ces = crows.map(_.getSeq[Double](1).toSeq).toSeq
+    CollectionStore.saveIndexed(points, path, cents, idSidecarBuckets = Some(8))
+    def fileMap(): Map[String, Long] = {
+      def walk(f: java.io.File): Seq[java.io.File] =
+        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+      Seq("", "_ids", "_centroids")
+        .flatMap(sfx => walk(new java.io.File(path + sfx)))
+        .map(f => f.getPath -> f.lastModified()).toMap
+    }
+    val before = fileMap()
+    val sizes = CollectionStore.cellSizes(spark, path).values
+    // id 13 hashes to bucket 5 of 8 but bucket 1 of 4: a 4-bucket reader
+    // would miss its sidecar row
+    val adds = Seq((13L, ces(0), 1, 1e9)).toDF("id", "embedding", "user_id", "ts")
+    val doomed = Seq(13L).toDF("id")
+    Seq[(String, () => Any)](
+      "mergeIndexed" -> (() =>
+        CollectionStore.mergeIndexed(spark, path, adds, cids, ces, 4)),
+      "deleteIndexed" -> (() =>
+        CollectionStore.deleteIndexed(spark, path, doomed, 4)),
+      "splitOversizedCells" -> (() =>
+        CollectionStore.splitOversizedCells(spark, path, sizes.max - 1, 4)),
+      "mergeSmallCells" -> (() =>
+        CollectionStore.mergeSmallCells(spark, path, sizes.min + 1, 4)),
+      "refreshManifestIndexed" -> (() =>
+        CollectionStore.refreshManifestIndexed(spark, path, adds, doomed, 4))
+    ).foreach { case (op, call) =>
+      val msg = intercept[IllegalArgumentException](call()).getMessage
+      assert(msg.contains("nBuckets=4") && msg.contains("8 buckets"),
+        s"$op must name both bucket counts: $msg")
+      assert(fileMap() == before, s"$op changed the store before failing")
+    }
+  }
+
+  test("golden store mutations: every table each op writes keeps its " +
+      "dirs, files per dir and rows in file order, and no op starts more " +
+      "Spark jobs than recorded") {
+    val root = tempDir("store_golden").toString
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    // canonical text of a parquet value: binary as hex, nested values
+    // element-wise (Row.toString prints byte arrays by identity)
+    def render(v: Any): String = v match {
+      case null => "null"
+      case b: Array[Byte] => b.map(x => f"${x & 0xff}%02x").mkString
+      case s: scala.collection.Seq[_] => s.map(render).mkString("[", ",", "]")
+      case r: org.apache.spark.sql.Row =>
+        r.toSeq.map(render).mkString("(", ",", ")")
+      case x => x.toString
+    }
+    def sha(lines: Seq[String]): String = {
+      val md = java.security.MessageDigest.getInstance("SHA-256")
+      lines.foreach(l => md.update((l + "\n").getBytes("UTF-8")))
+      md.digest().map(b => f"${b & 0xff}%02x").mkString
+    }
+    // one line per partition dir of `table`: dir name, parquet files in
+    // it, SHA-256 of its rows in file order (file names sorted; a file's
+    // rows in the order the reader returns them, which pins sort keys)
+    def digest(op: String, table: String): Seq[String] = {
+      val base = new java.io.File(root, table)
+      val parts = base.listFiles()
+        .filter(f => f.isDirectory && f.getName.contains("=")).sortBy(_.getName)
+      val dirs = if (parts.isEmpty) Array(base) else parts
+      val df = spark.read.parquet(base.getPath)
+      val byFile = df.withColumn("_file", input_file_name()).collect()
+        .groupBy(r => new java.io.File(new java.net.URI(
+          r.getString(r.length - 1)).getPath).getCanonicalFile)
+      dirs.map { d =>
+        val files = d.listFiles().filter(_.getName.endsWith(".parquet"))
+          .sortBy(_.getName)
+        val rows = files.toSeq.flatMap(f => byFile
+          .getOrElse(f.getCanonicalFile, Array.empty)
+          .map(r => r.toSeq.dropRight(1).map(render).mkString("|")))
+        val name = if (d == base) "." else d.getName
+        s"$op $table $name files=${files.length} ${sha(rows)}"
+      }
+    }
+    val lines = Seq.newBuilder[String]
+    def pin(op: String, tables: String*)(body: => Unit): Unit = {
+      org.apache.spark.sql.GraftBridge.drainListenerBus(sc)
+      jobs.set(0)
+      body
+      org.apache.spark.sql.GraftBridge.drainListenerBus(sc)
+      lines += s"$op jobs ${jobs.get}"
+      tables.foreach(t => lines ++= digest(op, t))
+    }
+    def embOf(id: Long): Seq[Double] =
+      points.filter($"id" === id).select($"embedding").as[Seq[Double]].head()
+    sc.addSparkListener(listener)
+    try {
+      // cell store: every sidecar-reading mutation, chained
+      val ivf = s"$root/ivf"
+      val nBuckets = 8
+      val cents = Ann.seedCentroids(points, 8)
+      val crows = cents.select($"cid", $"ce").orderBy("cid").collect()
+      val cids = crows.map(_.getLong(0)).toSeq
+      val ces = crows.map(_.getSeq[Double](1).toSeq).toSeq
+      pin("saveIndexed", "ivf", "ivf_ids", "ivf_centroids") {
+        CollectionStore.saveIndexed(points, ivf, cents,
+          idSidecarBuckets = Some(nBuckets))
+      }
+      // id 5 moves to cell 0's centroid, id 6 stays with a new user,
+      // id 100000 is new; 11 and 12 are tombstones, 12 also upserted
+      val adds = Seq((5L, ces(0), 901, 1e9),
+        (6L, embOf(6L), 902, 1e9), (12L, embOf(12L), 903, 1e9),
+        (100000L, embOf(7L), 904, 1e9))
+        .toDF("id", "embedding", "user_id", "ts")
+      pin("mergeIndexed", "ivf", "ivf_ids") {
+        CollectionStore.mergeIndexed(spark, ivf, adds, cids, ces, nBuckets,
+          deletes = Some(Seq(11L, 12L).toDF("id")))
+      }
+      pin("deleteIndexed", "ivf", "ivf_ids") {
+        CollectionStore.deleteIndexed(spark, ivf, Seq(3L, 13L, 987654L)
+          .toDF("id"), nBuckets)
+      }
+      pin("deleteIndexed-noop") {
+        CollectionStore.deleteIndexed(spark, ivf, Seq(987654L).toDF("id"),
+          nBuckets)
+      }
+      val sizes = CollectionStore.cellSizes(spark, ivf)
+      pin("splitOversizedCells", "ivf", "ivf_ids", "ivf_centroids") {
+        CollectionStore.splitOversizedCells(spark, ivf, sizes.values.max - 1,
+          nBuckets)
+      }
+      val sizes1 = CollectionStore.cellSizes(spark, ivf)
+      pin("mergeSmallCells", "ivf", "ivf_ids", "ivf_centroids") {
+        CollectionStore.mergeSmallCells(spark, ivf, sizes1.values.min + 1,
+          nBuckets)
+      }
+      val n = points.count()
+      pin("optimizePartitions", "ivf", "ivf_ids", "ivf_centroids") {
+        CollectionStore.optimizePartitions(spark, ivf, n / 48, n / 20,
+          nBuckets, maxPasses = 1)
+      }
+      // residual-code store: one maintenance tick re-encodes moved rows
+      val res = s"$root/res"
+      val cbRes = Quantization.pqCodebookOf(Quantization.pqTrainResiduals(
+        Ann.ivfAssign(points, cents), cents, 64, 8, 16, 2))
+      pin("saveIndexed-pqrc", "res", "res_ids", "res_centroids") {
+        CollectionStore.saveIndexed(points, res, cents,
+          idSidecarBuckets = Some(nBuckets), pqResidualCodebook = Some(cbRes))
+      }
+      val cdc = points.filter($"id".between(400, 402))
+        .select(($"id" - 390L).as("id"), $"embedding", $"user_id",
+          lit(1e9).as("ts"))
+        .unionByName(Seq((5000L, embOf(1L), 7, 1e9))
+          .toDF("id", "embedding", "user_id", "ts"))
+      // the largest cell splits in two, and a half that lands below the
+      // band folds back: both re-encode residual codes
+      val maxRows = CollectionStore.cellSizes(spark, res).values.max - 1
+      pin("maintainIndexed", "res", "res_ids", "res_centroids") {
+        CollectionStore.maintainIndexed(spark, res, cdc,
+          Some(Seq(20L, 21L).toDF("id")), nBuckets,
+          minRows = maxRows / 2, maxRows = maxRows,
+          pqResidualCodebook = Some(cbRes))
+      }
+      // bucketed store + graph sidecar
+      val bkt = s"$root/bkt"
+      val pts = points.select($"id", $"embedding", $"user_id")
+      val gcents = Ann.seedCentroids(pts, 16)
+      val grows = gcents.select($"cid", $"ce").orderBy("cid").collect()
+      CollectionStore.saveBucketed(pts, bkt, 16)
+      CollectionStore.saveGraphSidecar(
+        Ann.graphBuild(pts, gcents, graphK = 12, maxDegree = 16), bkt, 16)
+      val gadds = Seq((50L, embOf(450L), 907), (200000L, embOf(7L), 908))
+        .toDF("id", "embedding", "user_id")
+      pin("mergeGraphIndexed", "bkt", "bkt_graph", "bkt_graph_rev") {
+        CollectionStore.mergeGraphIndexed(spark, bkt, gadds,
+          Some(Seq(40L, 41L).toDF("id")), grows.map(_.getLong(0)).toSeq,
+          grows.map(_.getSeq[Double](1).toSeq).toSeq, 16, beam = 12, hops = 3)
+      }
+      val ups = s"$root/ups"
+      CollectionStore.saveBucketed(points, ups, nBuckets)
+      pin("mergeBucketed", "ups") {
+        CollectionStore.mergeBucketed(spark, ups,
+          Seq((51L, embOf(451L), 909, 1e9), (300000L, embOf(8L), 910, 1e9))
+            .toDF("id", "embedding", "user_id", "ts"), nBuckets)
+      }
+    } finally sc.removeSparkListener(listener)
+    val got = lines.result()
+    val in = getClass.getResourceAsStream("/store_mutation.golden")
+    assert(in != null, "store_mutation.golden missing from test resources")
+    val want = try scala.io.Source.fromInputStream(in, "UTF-8")
+      .getLines().filter(_.nonEmpty).toSeq finally in.close()
+    def isJobs(l: String) = l.split(' ')(1) == "jobs"
+    val (gotJobs, gotDirs) = got.partition(isJobs)
+    val (wantJobs, wantDirs) = want.partition(isJobs)
+    val missing = wantDirs.diff(gotDirs)
+    val extra = gotDirs.diff(wantDirs)
+    val budget = wantJobs.map { l => val w = l.split(' '); w(0) -> w(2).toInt }.toMap
+    val over = gotJobs.map(_.split(' ')).filter(w =>
+      !budget.get(w(0)).exists(w(2).toInt <= _)).map(_.mkString(" "))
+    val dirsOk = missing.isEmpty && extra.isEmpty
+    val jobsOk = budget.size == gotJobs.size && over.isEmpty
+    // a failing run leaves what it saw next to the build, for a diff
+    // against the recorded file
+    val seen = if (dirsOk && jobsOk) "" else {
+      val f = java.nio.file.Paths.get("target", "store_mutation.golden.actual")
+      java.nio.file.Files.write(f, got.mkString("", "\n", "\n").getBytes("UTF-8"))
+      s"(this run's lines: $f)"
+    }
+    assert(dirsOk, s"table dirs differ from the recorded store: missing " +
+      s"${missing.mkString("; ")} / unexpected ${extra.mkString("; ")} $seen")
+    assert(jobsOk, s"ops start more Spark jobs than recorded: " +
+      s"${over.mkString("; ")} (recorded ${wantJobs.mkString("; ")}) $seen")
+  }
 }
